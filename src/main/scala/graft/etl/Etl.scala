@@ -3,6 +3,7 @@ package graft.etl
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ListMap
 
 /** Relational / ETL operators re-expressing the reference's transformation
   * surface (JakBiel/Building_permissions_ETL, dags/aggregates_python_helpers
@@ -47,47 +48,37 @@ object PivotAggregates {
     * discovers pivot columns from the data (helpers.py:429-481, pandas
     * pivot_table); at 100 TB an implicit `.pivot(col)` runs a distinct-scan
     * on the driver first, so graft makes the value list part of the API.
-    * Missing combinations come back 0 (not null), matching SUM(CASE).
+    * ONE aggregate with a conditional count per value (one exchange,
+    * map-side partial aggregation); values are cast to the pivot column's
+    * type and matched null-safe, as `.pivot` matches explicit values.
+    * Missing combinations come back 0 (non-null bigint), like SUM(CASE).
     */
   def countPivot(df: DataFrame, groupCol: String, pivotCol: String,
-      pivotValues: Seq[String]): DataFrame = {
-    val pivoted = df.groupBy(col(groupCol)).pivot(pivotCol, pivotValues).count()
-    pivotValues.foldLeft(pivoted)((acc, v) =>
-      acc.withColumn(v, coalesce(col(s"`$v`"), lit(0L))))
-  }
+      pivotValues: Seq[String]): DataFrame =
+    countCells(df, groupCol, pivotValues.map(v =>
+      (col(pivotCol) <=> lit(v).cast(df.schema(pivotCol).dataType)) -> v))
 
   /** Two-level pivot with the reference's de-Romanized column-rename pass
     * (helpers.py:431 pivots on ['rodzaj_zam_budowlanego','kategoria']
     * jointly, then :485-533 shortens names and converts the Roman category
-    * to its integer). The pivot key is the (value1, romanValue2) compound;
-    * output columns are renamed `cnt_<value1>_<int(value2)>`. Still ONE
-    * shuffle — the compound pivot is a single groupBy.pivot over explicit
-    * values (no driver-side distinct discovery).
+    * to its integer). One output column `cnt_<value1>_<int(value2)>` per
+    * (value1, romanValue2) pair, in `values1 × values2Roman` order, each a
+    * conditional count in the same single aggregate as [[countPivot]]:
+    * one exchange however many cells, no compound pivot key.
     */
   def countPivot2(df: DataFrame, groupCol: String, col1: String,
       values1: Seq[String], col2Roman: String,
       values2Roman: Seq[String]): DataFrame = {
     import graft.functions.RomanCodec
-    // The compound key joins on the ASCII unit separator, not '_': values1
-    // entries legitimately contain underscores (the reference's
-    // rodzaj_zam_budowlanego values do), and an ambiguous separator would
-    // mis-split the key and feed garbage to fromRomanStr, or let distinct
-    // (value1, value2) combos collide into one pivot column.
-    val Sep = "\u001F"
-    require(values1.forall(v => !v.contains(Sep)) &&
-      values2Roman.forall(v => !v.contains(Sep)),
-      s"pivot values must not contain the reserved separator U+001F")
-    val combos = for (a <- values1; r <- values2Roman) yield (a, r)
-    val keys = combos.map { case (a, r) => s"$a$Sep$r" }
-    val pivoted = df
-      .withColumn("_pk", concat_ws(Sep, col(col1), col(col2Roman)))
-      .groupBy(col(groupCol)).pivot("_pk", keys).count()
-    combos.foldLeft(pivoted) { case (acc, (a, r)) =>
-      val c = s"$a$Sep$r"
-      acc.withColumn(s"cnt_${a}_${RomanCodec.fromRomanStr(r)}",
-          coalesce(col(s"`$c`"), lit(0L)))
-        .drop(c)
-    }
+    countCells(df, groupCol, for (a <- values1; r <- values2Roman) yield
+      (col(col1) === a && col(col2Roman) === r) ->
+        s"cnt_${a}_${RomanCodec.fromRomanStr(r)}")
+  }
+
+  private def countCells(df: DataFrame, groupCol: String,
+      cells: Seq[(Column, String)]): DataFrame = {
+    val counts = cells.map { case (cond, name) => count(when(cond, 1)).as(name) }
+    df.groupBy(col(groupCol)).agg(counts.head, counts.tail: _*)
   }
 }
 
@@ -139,14 +130,14 @@ object DimAlign {
     * (post-groupBy, at most |dim| rows), and Spark cannot build the
     * preserved (left) side of a left-outer join, so hinting the dim side
     * would be silently discarded and fall back to a shuffle join.
+    * The fill is ONE projection (each of `zeroCols` coalesced to 0 in
+    * place), so analysis cost does not grow with the column count.
     */
   def zeroFill(dim: DataFrame, agg: DataFrame, dimKey: String, aggKey: String,
-      zeroCols: Seq[String]): DataFrame = {
-    val joined = dim.join(broadcast(agg), dim(dimKey) === agg(aggKey), "left")
-    zeroCols
-      .foldLeft(joined)((acc, c) => acc.withColumn(c, coalesce(col(c), lit(0L))))
+      zeroCols: Seq[String]): DataFrame =
+    dim.join(broadcast(agg), dim(dimKey) === agg(aggKey), "left")
+      .withColumns(ListMap(zeroCols.map(c => c -> coalesce(col(c), lit(0L))): _*))
       .drop(aggKey)
-  }
 }
 
 object CodeCorrection {
@@ -272,8 +263,9 @@ object AsOfJoin {
     val w = Window.partitionBy(col(key))
       .orderBy(col("_ts"), col("_isdim").desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val carried = attrs.foldLeft(u)((acc, a) =>
-      acc.withColumn(a, last(col(a), ignoreNulls = true).over(w)))
+    // one projection holding every carry, so ONE Window node sorts once
+    val carried = u.withColumns(ListMap(attrs.map(a =>
+      a -> last(col(a), ignoreNulls = true).over(w)): _*))
     carried.where(col("_isdim") === 0).drop("_ts", "_isdim")
   }
 }
@@ -402,13 +394,11 @@ object SchemaAlign {
     val u = a.unionByName(b, allowMissingColumns = true)
     val missing =
       (a.columns.toSet -- b.columns.toSet) ++ (b.columns.toSet -- a.columns.toSet)
-    missing.foldLeft(u) { (acc, c) =>
-      u.schema(c).dataType match {
-        case dt: org.apache.spark.sql.types.NumericType =>
-          acc.withColumn(c, coalesce(col(c), lit(0).cast(dt)))
-        case _ => acc
-      }
-    }
+    u.withColumns(ListMap(u.schema.fields.toSeq.collect {
+      case f if missing(f.name) &&
+          f.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType] =>
+        f.name -> coalesce(col(f.name), lit(0).cast(f.dataType))
+    }: _*))
   }
 }
 
@@ -640,9 +630,9 @@ object PartitionedSink {
     val aligned = existing match {
       case None => df
       case Some(schema) =>
-        schema.fields.filterNot(f => df.columns.contains(f.name))
-          .foldLeft(df)((acc, f) =>
-            acc.withColumn(f.name, lit(0).cast(f.dataType)))
+        df.withColumns(ListMap(schema.fields.toSeq
+          .filterNot(f => df.columns.contains(f.name))
+          .map(f => f.name -> lit(0).cast(f.dataType)): _*))
     }
     aligned.write.mode("append").option("mergeSchema", "true").parquet(path)
   }
@@ -653,10 +643,9 @@ object PartitionedSink {
   def readAligned(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame = {
     val df = spark.read.option("mergeSchema", "true").parquet(path)
-    df.schema.fields
+    df.withColumns(ListMap(df.schema.fields.toSeq
       .filter(f => f.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType])
-      .foldLeft(df)((acc, f) =>
-        acc.withColumn(f.name, coalesce(col(f.name), lit(0).cast(f.dataType))))
+      .map(f => f.name -> coalesce(col(f.name), lit(0).cast(f.dataType))): _*))
   }
 
   /** Small-file compaction: rewrite a (possibly partitioned) parquet dir

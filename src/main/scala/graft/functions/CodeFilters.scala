@@ -32,7 +32,7 @@ object CodeFilters {
   val MinAlnumFracX1e6 = 250000L
   val LongLineChars = 120L
 
-  private[functions] val AutogenMarkers =
+  private[graft] val AutogenMarkers =
     Seq("auto-generated", "do not edit", "generated by")
 
   /** Per-document battery: doc_id, n_lines, max_line_len,

@@ -289,7 +289,7 @@ object TextCleanKernels {
       }
       if (!autogen) {
         val f = if (b >= 'A' && b <= 'Z') (b | 0x20).toByte else b
-        if (f == 'a' || f == 'd' || f == 'g') {
+        if (AutogenFirstByte(f & 0xFF)) {
           var m = 0
           while (!autogen && m < AutogenMarkerBytes.length) {
             val mk = AutogenMarkerBytes(m)
@@ -320,6 +320,12 @@ object TextCleanKernels {
 
   private val AutogenMarkerBytes: Array[Array[Byte]] =
     CodeFilters.AutogenMarkers.map(_.getBytes("UTF-8")).toArray
+  // the scan's gate: true at the first byte of some marker
+  private val AutogenFirstByte: Array[Boolean] = {
+    val t = new Array[Boolean](256)
+    AutogenMarkerBytes.foreach(mk => t(mk(0) & 0xFF) = true)
+    t
+  }
 }
 
 object Diversity {

@@ -1,8 +1,9 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameReader, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.collection.immutable.ListMap
 
 /** Delimiter-CSV ingest — the engine analog of the reference's entry point
   * (/root/reference/dags/aggregates_python_helpers.py:183-197:
@@ -35,20 +36,9 @@ object GraftCsv {
     */
   def read(spark: SparkSession, path: String, schema: StructType,
       delimiter: String = "#", timestampCols: Seq[String] = Nil,
-      header: Boolean = false, cacheForAudit: Boolean = false): DataFrame = {
-    val withCorrupt =
-      StructType(schema.fields :+ StructField(CorruptCol, StringType, nullable = true))
-    val raw = spark.read
-      .option("delimiter", delimiter)
-      .option("header", header.toString)
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", CorruptCol)
-      .schema(withCorrupt)
-      .csv(path)
-    val parsed = timestampCols.foldLeft(raw)((acc, c) =>
-      acc.withColumn(c, coerceTimestamp(col(c))))
-    if (cacheForAudit) parsed.cache() else parsed
-  }
+      header: Boolean = false, cacheForAudit: Boolean = false): DataFrame =
+    parse(spark.read.option("header", header.toString), _.csv(path), schema,
+      delimiter, timestampCols, cacheForAudit)
 
   /** ZIP-archived delimiter-CSV ingest — the full analog of the reference's
     * entry point (aggregates_python_helpers.py:22-31: download ZIP →
@@ -88,25 +78,27 @@ object GraftCsv {
         def next(): String = { val l = line; line = advance(); l }
       }
     }.toDS()
-    parse(spark, spark.read, lines, schema, delimiter, timestampCols,
+    parse(spark.read, _.csv(lines), schema, delimiter, timestampCols,
       cacheForAudit)
   }
 
-  private def parse(spark: SparkSession,
-      reader: org.apache.spark.sql.DataFrameReader,
-      lines: org.apache.spark.sql.Dataset[String], schema: StructType,
+  /** The shared [[read]] / [[readZip]] parse: explicit schema plus the
+    * corrupt-record column, then every timestamp column coerced in place
+    * in one projection.
+    */
+  private def parse(reader: DataFrameReader,
+      load: DataFrameReader => DataFrame, schema: StructType,
       delimiter: String, timestampCols: Seq[String],
       cacheForAudit: Boolean): DataFrame = {
     val withCorrupt =
       StructType(schema.fields :+ StructField(CorruptCol, StringType, nullable = true))
-    val raw = reader
+    val raw = load(reader
       .option("delimiter", delimiter)
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", CorruptCol)
-      .schema(withCorrupt)
-      .csv(lines)
-    val parsed = timestampCols.foldLeft(raw)((acc, c) =>
-      acc.withColumn(c, coerceTimestamp(col(c))))
+      .schema(withCorrupt))
+    val parsed = raw.withColumns(ListMap(
+      timestampCols.map(c => c -> coerceTimestamp(col(c))): _*))
     if (cacheForAudit) parsed.cache() else parsed
   }
 

@@ -37,6 +37,16 @@ class CodeFiltersSpec extends SparkSpec {
     assert(m(4L).getAs[Boolean]("is_autogen"))
   }
 
+  test("every autogen marker trips the gate in either case") {
+    // the byte scan gates on each marker's first byte; a marker the gate
+    // did not cover would silently never match
+    val texts = CodeFilters.AutogenMarkers.flatMap(mk =>
+      Seq(mk.toLowerCase, mk.toUpperCase)).map(mk => s"val x = 1 // $mk\n")
+    val m = run(texts.zipWithIndex.map { case (t, i) => i.toLong -> t }: _*)
+    texts.indices.foreach(i =>
+      assert(m(i.toLong).getAs[Boolean]("is_autogen"), texts(i)))
+  }
+
   test("empty text is total: 1 empty line, zero fractions, kept") {
     val r = run(7L -> "")(7L)
     assert(r.getAs[Long]("n_lines") == 1L)

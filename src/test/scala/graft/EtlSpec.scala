@@ -1,9 +1,11 @@
 package graft
 
 import graft.etl._
-import graft.functions.F
+import graft.functions.{F, RomanCodec}
 import java.sql.{Date, Timestamp}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType}
 
 /** Unit tests for the relational/ETL operators on hand-computable fixtures. */
 class EtlSpec extends SparkSpec {
@@ -122,9 +124,9 @@ class EtlSpec extends SparkSpec {
   }
 
   test("two-level pivot keys survive values containing underscores") {
-    // the reference's rodzaj_zam_budowlanego values contain '_'; a '_'-joined
-    // compound key would mis-split and collide (budowa_I + nowy vs budowa +
-    // I_nowy) — the U+001F separator keeps the parts unambiguous
+    // the reference's rodzaj_zam_budowlanego values contain '_', so the
+    // output names alone are ambiguous (budowa_I + nowy vs budowa +
+    // I_nowy); each cell must still count only its own (value1, value2)
     val rows = Seq(("g1", "budowa_nowego", "I"), ("g1", "budowa_nowego", "I"),
       ("g1", "przebudowa", "II")).toDF("g", "t", "cat")
     val out = PivotAggregates.countPivot2(rows, "g", "t",
@@ -134,6 +136,70 @@ class EtlSpec extends SparkSpec {
     val r = out.collect().head
     assert(r.getAs[Long]("cnt_budowa_nowego_1") == 2L)
     assert(r.getAs[Long]("cnt_przebudowa_2") == 1L)
+  }
+
+  test("pivots match a SUM(CASE) reference: nulls, unlisted and absent values") {
+    val rows = Seq[(String, String, String, Integer)](
+      ("g1", "A", "I", 1), ("g1", "A", "I", 1), ("g1", "B", "II", 2),
+      ("g1", null, "I", null), ("g1", "A", null, 3), // nulls in either column
+      ("g2", "B", "III", 2), ("g2", "Z", "I", 7),    // unlisted value1
+      ("g2", "A", "V", 1), (null, "A", "I", 2)       // unlisted roman; null group
+    ).toDF("g", "t", "cat", "p")
+    rows.createOrReplaceTempView("pivot_src")
+    def reference(cells: Seq[(String, String)]): Seq[Row] =
+      spark.sql(cells.map { case (cond, name) =>
+        s"SUM(CASE WHEN $cond THEN 1 ELSE 0 END) AS `$name`"
+      }.mkString("SELECT g, ", ", ", " FROM pivot_src GROUP BY g ORDER BY g"))
+        .collect().toSeq
+    def check(out: DataFrame, cells: Seq[(String, String)]) = {
+      assert(out.columns.toSeq == "g" +: cells.map(_._2))
+      out.schema.fields.tail.foreach { f =>
+        assert(f.dataType == LongType && !f.nullable, f.toString)
+      }
+      assert(out.orderBy("g").collect().toSeq == reference(cells))
+    }
+
+    // "C" and "IV" occur nowhere in the data: their cells are all 0
+    val values1 = Seq("A", "B", "C")
+    val romans = Seq("I", "II", "III", "IV")
+    check(PivotAggregates.countPivot2(rows, "g", "t", values1, "cat", romans),
+      for (a <- values1; (r, i) <- romans.zipWithIndex)
+        yield (s"t = '$a' AND cat = '$r'", s"cnt_${a}_${i + 1}"))
+    // an int pivot column: the string values are cast to its type
+    assert(rows.schema("p").dataType == IntegerType)
+    check(PivotAggregates.countPivot(rows, "g", "p", Seq("1", "2", "9")),
+      Seq("1", "2", "9").map(v => (s"p = $v", v)))
+  }
+
+  test("pivots and zeroFill are one plan step whatever their width") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
+    def nodes(df: DataFrame, name: String) =
+      df.queryExecution.analyzed.collect { case p if p.nodeName == name => p }.size
+    val rows = Seq(("g1", "A", "I"), ("g2", "B", "II")).toDF("g", "t", "cat")
+    def pivot(nRoman: Int) = PivotAggregates.countPivot2(rows, "g", "t",
+      Seq("A", "B", "C"), "cat", (1 to nRoman).map(RomanCodec.toRomanStr))
+    val (narrow, wide) = (pivot(3), pivot(30))
+    assert(nodes(narrow, "Project") == nodes(wide, "Project"))
+    assert(nodes(narrow, "Aggregate") == 1 && nodes(wide, "Aggregate") == 1)
+    val plan = wide.queryExecution.executedPlan.toString
+    assert("Exchange hashpartitioning".r.findAllIn(plan).size == 1, plan)
+    assert(wide.columns.length == 1 + 3 * 30)
+
+    // the projections zeroFill stacks on its join, however many columns
+    val zeroCols = (1 to 270).map(i => s"c$i")
+    val agg = Seq(1L).toDF("ak")
+      .select(col("ak") +: zeroCols.map(c => lit(1L).as(c)): _*)
+    val dim = Seq((1L, "one"), (2L, "two")).toDF("dk", "name")
+    val zf = DimAlign.zeroFill(dim, agg, "dk", "ak", zeroCols)
+    def projectsAboveJoin(p: LogicalPlan): Int = p match {
+      case _: Join => 0
+      case q => (if (q.nodeName == "Project") 1 else 0) +
+        projectsAboveJoin(q.children.head)
+    }
+    assert(projectsAboveJoin(zf.queryExecution.analyzed) <= 2)
+    assert(zf.columns.toSeq == Seq("dk", "name") ++ zeroCols)
+    val got = zf.orderBy("dk").collect()
+    assert(got.map(_.getLong(2)).toSeq == Seq(1L, 0L))
   }
 
   test("ranking top-k breaks ties deterministically") {
