@@ -36,11 +36,20 @@ def main(sf_dir, out_dir):
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     oracles = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
+    # Verify's per-query outcome; a query that threw has no directory, so
+    # without this file its failure would drop out of every count
+    status_path = os.path.join(out_dir, "verify_status.json")
+    status = json.load(open(status_path)) if os.path.exists(status_path) else {}
+    names = {os.path.basename(d) for d in glob.glob(os.path.join(out_dir, "q*"))}
     n_pass = n_fail = n_noor = 0
-    for qdir in sorted(glob.glob(os.path.join(out_dir, "q*"))):
-        name = os.path.basename(qdir)
+    for name in sorted(names | set(status)):
+        qdir = os.path.join(out_dir, name)
         if name not in oracles:
             n_noor += 1
+            continue
+        if status.get(name, "ok") != "ok":
+            print(f"FAIL {name}: verify failed: {status[name]}")
+            n_fail += 1
             continue
         spark_tbl = con.execute(
             f"SELECT * FROM read_parquet('{qdir}/*.parquet')").arrow()

@@ -26,4 +26,10 @@ object GraftSession {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** Core count of the command-line mains: `SPARK_GRAFT_CPUS`, default 32. */
+  def envCores: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+
+  /** The session every command-line main runs in. */
+  def fromEnv(): SparkSession = local(envCores)
 }

@@ -72,15 +72,7 @@ object ScaleGen {
     val Array(baseDir, factorS, outDir) = args.take(3)
     val factor = factorS.toInt
     val maxClique = if (args.length > 3) args(3).toInt else 0
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv()
     generate(spark, baseDir, factor, outDir, maxClique)
     println(s"wrote ${factor}x of $baseDir to $outDir")
     spark.stop()

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Skew-evidence probe (SURVEY §4 / VERDICT r7 task 7): demonstrates that
@@ -31,18 +30,11 @@ object SkewProbe {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
+    val spark = GraftSession.builder(GraftSession.envCores)
       .appName("graft-skew-probe")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
       // model the at-scale regime: dim exceeds the broadcast budget, so
       // the engine must shuffle-join and the hot key lands on one reducer
       .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       // thresholds scaled to probe size (defaults are 256 MB / 64 MB —
       // the same RATIO at warehouse scale)

@@ -1,24 +1,14 @@
 package graft
 
-import graft.ann.{BruteForce, IvfAnn, LshAnn}
-import graft.dedup._
-import graft.etl._
-import graft.functions.{Bm25, Bpe, F, HtmlText, Repetition, RobotsTxt,
-  RomanCodec, TermScores, TextStats, UrlNorm}
-import graft.multimodal.BinaryPipeline
-import graft.sources.{ContentRoute, GraftCsv, GraftWarc, WarcCodec,
-  WarcTranscode}
-import graft.validation._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
-import org.apache.spark.storage.StorageLevel
+import graft.registry._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §2: one `queries` entry per
-  * inventory line, plus a DuckDB oracle for every SQL-expressible one.
-  * Column names are aliased identically on both sides (the driver's compare
-  * sorts columns by name before hashing). Float aggregates go through
-  * decimal(18,2) so sums are order-independent and engine-portable.
+/** The query inventory (SURVEY.md §2): one registry entry per inventory
+  * line, each a [[registry.QueryDef]] holding its builder beside its DuckDB
+  * oracle (per-domain files under `graft.registry`). Column names are
+  * aliased identically on both sides (the oracle compare sorts columns by
+  * name before hashing). Float aggregates go through decimal(18,2) so
+  * sums are order-independent and engine-portable.
   */
 object SparkEntry {
 
@@ -26,9582 +16,13 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q3_star_join")(spark, "/root/testdata/sf0.001")
 
-  // ---- shared fragments ----------------------------------------------------
-
-  private def dec2(c: Column) = c.cast(DecimalType(18, 2))
-
-  /** Exact (order-independent) 2-dp sum surfaced as double. */
-  private def xsum(c: Column) = F.exactSum2(c)
-
-  private val validCodePrefixes: Seq[String] = (0 until 40).map(i => f"$i%02d")
-
-  private def eventsWithCodes(t: Tables): DataFrame =
-    t.events
-      .withColumn("base", regexp_extract(col("props"), "[0-9]+", 0))
-      .withColumn("raw0",
-        when(col("base").cast("int") % 7 === 0, lit(null).cast("string"))
-          .otherwise(concat(lpad(col("base"), 2, "0"),
-            lpad((col("user_id") % 100000).cast("string"), 5, "0"))))
-      .withColumn("rawc",
-        when(col("raw0").isNull, lit(null).cast("string"))
-          .when(col("event_type") === "click", substring(col("raw0"), 2, 6))
-          .otherwise(col("raw0")))
-      .withColumn("fb",
-        concat(lpad((col("event_id") % 100).cast("string"), 2, "0"), lit("00000")))
-
-  private val eventExpectations: Seq[Expectation] = Seq(
-    MatchRegex("props_format", col("props"), "^\\{\"k\": [0-9]+\\}$", 100),
-    InSet("event_type_in_set", col("event_type"),
-      Seq("click", "view", "purchase", "signup", "error"), 100),
-    Between("value_range", col("value"), 0.0, 500.0, 100),
-    NotNull("ts_not_null", col("ts"), 100),
-    Between("user_id_low", col("user_id"), 0L, 99L, 50),
-    Unique("event_id_unique", col("event_id"), 100))
-
-  // ---- per-session memoization --------------------------------------------
-  // q17/q19 share one persisted signature + candidate frame (VERDICT r1: q19
-  // re-running candidate generation doubled the most expensive computation);
-  // the q15/q28 fixture writes are guarded so concurrent or repeated query
-  // invocations never rewrite a sink mid-read. Keys include the session
-  // identity so a restarted SparkSession never serves stale frames.
-
-  private val memo = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]
-  /** Per-(session, key) memo. NOT computeIfAbsent: memoized builds nest
-    * (q101's prep memo builds the charset-fixture memo, entries memoize
-    * row counts inside fixture memos), and ConcurrentHashMap's
-    * computeIfAbsent throws IllegalStateException("Recursive update")
-    * whenever an inner insert lands in the SAME bin as the outer key —
-    * an intermittent, hash-layout-dependent crash (caught by the r11
-    * repeated-Verify loop: 1 failure in 6 full runs). get → build
-    * outside the map → putIfAbsent instead; two racing builders both
-    * build, the first put wins — builds are idempotent (fixtures write
-    * to fresh temp dirs, frames are lazy), duplicate work is the
-    * accepted cost of not holding a lock around a Spark job.
-    */
-  /** q137/q137b shared best-match shape (the library verdict surface —
-    * also what the streaming probe twin emits).
-    */
-  private def bestProbeMatch(inc: DataFrame, cand: DataFrame): DataFrame =
-    MinHashDedup.bestMatch(inc, cand)
-
-  private def memoized[T <: AnyRef](s: SparkSession, key: String)(build: => T): T = {
-    val k = s"${System.identityHashCode(s)}|$key"
-    val hit = memo.get(k)
-    if (hit != null) return hit.asInstanceOf[T]
-    val built = build
-    val prev = memo.putIfAbsent(k, built)
-    (if (prev != null) prev else built).asInstanceOf[T]
-  }
-
-  /** Row count of a base table computed from the UNSPREAD parquet scan
-    * (no columns requested, no round-robin exchange — only the one-row
-    * per-partition partial-count merge), memoized per (session, sf).
-    * Sizing parameters (q20's plane count, q84's k) derive from n; the
-    * r10 verdict flagged counting the `spread()` frame, whose plan is
-    * scan → full-data round-robin exchange → count: invisible at sf0.1,
-    * a 100 TB shuffle at scale. PlanSpec gates the no-round-robin shape.
-    */
-  private[graft] def sizingCountFrame(s: SparkSession, dir: String,
-      name: String): DataFrame =
-    Tables(s, dir).table(name).groupBy().count()
-
-  private def tableRowCount(s: SparkSession, dir: String, name: String): Long =
-    memoized(s, s"rowcount|$name|$dir") {
-      java.lang.Long.valueOf(sizingCountFrame(s, dir, name).head().getLong(0))
-    }.longValue()
-
-  /** The q175/q176/q178 shared ExactSubstr substrate (VERDICT r18 task
-    * 4 — the three queries previously each re-ran the full
-    * prefix-doubling build): ONE level-3 rank build (length-8 windows)
-    * + per-doc lengths + the length-12 duplicated-window starts,
-    * persisted DISK_ONLY and memoized per (session, sf) — the q137b
-    * persisted-index posture; Bench's warm-up pass materializes it so
-    * the one-time build cost isn't billed to a single query.
-    */
-  private def exsubShared(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame) =
-    memoized(s, s"exsub|$dir") {
-      val docs = Tables(s, dir).documents
-      val (r3, lens) =
-        graft.dedup.ExactSubstr.rankAndLens(docs, "doc_id", "text", 3)
-      val starts = graft.dedup.ExactSubstr
-        .dupWindowStartsFrom(r3, 3, lens, 12L)
-        .localCheckpoint(true,
-          org.apache.spark.storage.StorageLevel.DISK_ONLY)
-      (r3, lens, starts)
-    }
-
-  /** The crawl-layer plants shared by q104/q105/q107 (hoisted so the
-    * three entries and their oracles cannot drift apart — r11 review):
-    * five URL spellings per canonical target keyed by doc_id%5, four
-    * path variants keyed by doc_id%4, and the two per-host robots
-    * policies (even hosts carry the Allow override and the $-anchored
-    * wildcard rule, odd hosts neither).
-    */
-  private def plantedCrawlUrl(id: Column): Column = {
-    val gid = id % 50
-    val h = (gid % 10).cast("string")
-    val tgt = gid.cast("string")
-    when(id % 5 === 0, concat(
-        lit("http://site"), h, lit(".example/a/"), tgt))
-      .when(id % 5 === 1, concat(
-        lit("HTTP://SITE"), h, lit(".EXAMPLE:80/a/"), tgt))
-      .when(id % 5 === 2, concat(
-        lit("http://site"), h, lit(".example/x/../a/./"), tgt))
-      .when(id % 5 === 3, concat(
-        lit("http://site"), h, lit(".example/%61/"), tgt, lit("#frag")))
-      .otherwise(concat(
-        lit("http://u:pw@site"), h, lit(".example/a/"), tgt, lit("?")))
-  }
-
-  private def plantedCrawlPath(id: Column): Column = {
-    val gid = id % 50
-    val vid = id % 4
-    when(vid === 0, concat(lit("/a/"), gid.cast("string")))
-      .when(vid === 1, concat(lit("/private/"), gid.cast("string")))
-      .when(vid === 2, concat(lit("/private/ok/"), gid.cast("string")))
-      .otherwise(concat(lit("/files/"), gid.cast("string"), lit(".tmp")))
-  }
-
-  /** q119's URL fixture: ten variants keyed by doc_id%10, each
-    * exercising one dimension of the UrlFilter battery — clean, a lone
-    * soft word (scores 40, below the 60 threshold: weighted scoring is
-    * not substring banning), two soft words (70 ≥ 60 → filtered), a
-    * strict word embedded INSIDE a longer token (substring mode catches
-    * what word matching can't), a digit-heavy host whose verdict flips
-    * on gid's digit count, a blocklisted host, a 5-dot-deep host, a
-    * SUBDOMAIN of a blocklisted host (parent-suffix matching bans it
-    * without list pre-expansion), an 8-LABEL subdomain of a blocklisted
-    * host (fails r_depth, yet blocked_parent must still agree with the
-    * oracle's identically-bounded suffix window — the exposed column
-    * can't lean on r_depth masking it), and a schemeless URL (rejected
-    * by the explicit r_has_host rule, not mislabeled digit-heavy). The
-    * oracle rebuilds these URLs by the same arithmetic and re-derives
-    * every counter with DuckDB string/list functions — a genuine
-    * replay, not a decision table.
-    */
-  // the fixed BPE merge table shared by q47b (encode oracle) and q122
-  // (fertility audit): six ranked rules whose outputs never feed an
-  // earlier rank, so the SQL replay's rank-order rewriting is exact
-  private val fixedBpeMerges = Seq("a" -> "g", "s" -> "c", "a" -> "n",
-    "l" -> "e", "b" -> "le", "r" -> "o")
-
-  // the fixed unigram-LM piece table shared by q172 (Viterbi encode
-  // oracle), q173 (one hard-EM step) and q174 (fertility audit): full
-  // single-character coverage (SentencePiece's invariant — the DP is
-  // total over [a-z]+ words) plus multi-char pieces planted to hit the
-  // corpus vocabulary with COMPETING segmentations (e.g. "window" is
-  // w|ind|ow, beating wi|nd|ow — the DP genuinely optimizes, it is not
-  // greedy longest-match). Scores are distinct integer milli-log
-  // weights; a length-L piece always beats its own decomposition, so
-  // every planted piece is reachable.
-  private val unigramMultiPieces: Seq[String] = Seq(
-    "jo", "in", "ha", "sh", "ba", "tc", "sc", "an", "me", "rg", "or",
-    "de", "ta", "bl", "re", "st", "am", "wi", "nd", "ow", "co", "lu",
-    "va", "ue", "li", "ne", "da", "qu", "er", "fa", "gr", "ou", "so",
-    "rt", "sp", "ar", "ro", "up", "he", "om", "us", "il", "te", "ke",
-    "ey", "sm", "al", "lo", "ag", "ig",
-    "tch", "rge", "der", "ble", "ind", "the", "oup", "ark", "que",
-    "ter", "eam", "olu", "umn", "ery", "dow", "ast", "ort", "can",
-    "ine", "ata",
-    "atch", "ecto", "trea", "usto", "mall",
-    // length 5–8 (VERDICT r18 task 6 — real SentencePiece vocabularies
-    // carry pieces well past 4 chars; MaxPieceLen is now 16): full-word
-    // and sliding fragments of the corpus vocabulary, so the DP faces
-    // genuine multi-length competition and the 8-char "customer" WINS
-    // its word (a length-L piece always outscores its decompositions)
-    "windo", "indow", "strea", "tream", "custo", "ustom", "stome",
-    "tomer", "filte", "ilter",
-    "window", "stream", "column", "vector", "filter", "custom",
-    "ustome", "stomer",
-    "custome", "ustomer",
-    "customer")
-  private val fixedUnigramPieces: Seq[(String, Long)] =
-    ('a' to 'z').map(c => c.toString -> (-3500L - (c - 'a') * 7L)) ++
-      unigramMultiPieces.zipWithIndex.map { case (p, i) =>
-        p -> (p.length match {
-          case 2 => -5200L - i * 10L
-          case 3 => -6600L - i * 10L
-          case 4 => -8000L - i * 10L
-          // longer pieces: −600 per extra char keeps every planted
-          // piece strictly cheaper than any decomposition of itself
-          case n => -8000L - (n - 4) * 600L - i * 10L
-        })
-      }
-
-  /** The q172/q173/q174 oracle's shared Viterbi replay: a recursive CTE
-    * whose state carries the last [[graft.functions.Unigram.MaxPieceLen]]
-    * dp values and backtrack strings as fixed-width columns — one
-    * iteration per character position, LEFT JOINs against the piece
-    * VALUES for each candidate length, longest-first CASE on ties
-    * (exactly the kernel's strictly-greater descending-L scan). The
-    * VALUES list is GENERATED from the same Scala Seq the Spark kernel
-    * ships, so there is one source of truth.
-    */
-  private def unigramDpCte: String = {
-    // the whole CTE is GENERATED from Unigram.MaxPieceLen (now 16 —
-    // VERDICT r18 task 6): M carried dp values d0..d{M-1}, M carried
-    // backtrack strings g0..g{M-1}, M candidate LEFT JOINs, and the
-    // longest-first CASE — widening the kernel's bound widens the
-    // replay automatically
-    val m = graft.functions.Unigram.MaxPieceLen
-    val vals = fixedUnigramPieces
-      .map { case (p, s) => s"('$p', CAST($s AS BIGINT))" }.mkString(", ")
-    val neg = "-1000000000000"
-    def cand(l: Int) = s"coalesce(d${l - 1} + p$l.sc, $neg)"
-    val best = s"greatest(${(m to 1 by -1).map(cand).mkString(", ")})"
-    def app(g: String, p: String) =
-      s"CASE WHEN $g = '' THEN $p ELSE $g || '|' || $p END"
-    val initD = "CAST(0 AS BIGINT) AS d0" +: (1 until m).map(k =>
-      s"CAST(NULL AS BIGINT) AS d$k")
-    val initG = "'' AS g0" +: (1 until m).map(k =>
-      s"CAST(NULL AS VARCHAR) AS g$k")
-    // longest-first tie scan: branches L = M .. 2, ELSE = the 1-char
-    // piece (exactly the kernel's strictly-greater descending-L loop)
-    val caseG = (m to 2 by -1).map(l =>
-      s"WHEN ${cand(l)} = $best THEN ${app(s"g${l - 1}", s"p$l.piece")}")
-      .mkString("CASE ", "\n         ", s"\n         ELSE ${app("g0", "p1.piece")} END")
-    val joins = (1 to m).map { l =>
-      val guard = if (l == 1) "" else s"i >= ${l - 1} AND "
-      s"LEFT JOIN pieces p$l ON ${guard}p$l.piece = substr(word, i + ${2 - l}, $l)"
-    }.mkString("\n       |  ")
-    val shiftD = (0 until m - 1).map(k => s"d$k").mkString(", ")
-    val shiftG = (0 until m - 1).map(k => s"g$k").mkString(", ")
-    s"""pieces(piece, sc) AS (VALUES $vals),
-       |uw AS (
-       |  SELECT DISTINCT
-       |    unnest(string_split_regex(trim(lower(text)), '\\s+')) AS word
-       |  FROM documents
-       |),
-       |ww AS (
-       |  SELECT word, length(word) AS len FROM uw
-       |  WHERE regexp_full_match(word, '[a-z]{1,16}')
-       |),
-       |dp AS (
-       |  SELECT word, len, 0 AS i,
-       |    ${initD.mkString(", ")},
-       |    ${initG.mkString(", ")}
-       |  FROM ww
-       |  UNION ALL
-       |  SELECT word, len, i + 1,
-       |    $best, $shiftD,
-       |    $caseG,
-       |    $shiftG
-       |  FROM dp
-       |  $joins
-       |  WHERE i < len
-       |),
-       |ufin AS (
-       |  SELECT word, d0 AS score_x1e3, g0 AS seg,
-       |    CAST(length(g0) - length(replace(g0, '|', '')) + 1 AS BIGINT)
-       |      AS n_pieces
-       |  FROM dp WHERE i = len
-       |)""".stripMargin
-  }
-
-  /** q177's near-dup truth threshold, cosine ×10⁹ (both the panel truth
-    * and the candidate verification use it, both engines).
-    */
-  private val AbTau9 = 500000000L
-
-  /** q175/q176 oracle blocks: duplicated fixed-length windows by
-    * LITERAL substring grams (the exact semantics the rank construction
-    * computes hash-free) + the gaps-and-islands union. One block per
-    * probe length, names suffixed by L.
-    */
-  private def dupWindowBlock(l: Int): String =
-    s"""g$l AS (
-       |  SELECT doc_id, i, substr(text, CAST(i AS BIGINT), $l) AS gram
-       |  FROM (SELECT doc_id, text,
-       |    unnest(generate_series(1, length(text) - ${l - 1})) AS i
-       |    FROM t)
-       |),
-       |d$l AS (
-       |  SELECT doc_id, i, gram FROM (
-       |    SELECT doc_id, i, gram,
-       |      COUNT(*) OVER (PARTITION BY gram) AS occ FROM g$l)
-       |  WHERE occ >= 2
-       |),
-       |i$l AS (
-       |  SELECT doc_id, i, SUM(newi) OVER (PARTITION BY doc_id ORDER BY i
-       |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS isl
-       |  FROM (SELECT doc_id, i, CASE WHEN i > coalesce(lag(i) OVER
-       |    (PARTITION BY doc_id ORDER BY i), -1000000000) + $l
-       |    THEN 1 ELSE 0 END AS newi FROM d$l)
-       |),
-       |sp$l AS (
-       |  SELECT doc_id, CAST(MIN(i) AS BIGINT) AS span_start,
-       |    CAST(MAX(i) + $l AS BIGINT) AS span_end
-       |  FROM i$l GROUP BY doc_id, isl
-       |)""".stripMargin
-
-  private lazy val q175OracleSql: String =
-    s"""WITH t AS (
-       |  SELECT doc_id, text FROM documents WHERE text IS NOT NULL
-       |),
-       |${dupWindowBlock(12)}
-       |SELECT doc_id, span_start, span_end,
-       |  span_end - span_start AS span_len
-       |FROM sp12""".stripMargin
-
-  private lazy val q176OracleSql: String = {
-    val probes = Seq(8, 16, 32, 64)
-    val stats = probes.map { l =>
-      s"""c$l AS (
-         |  SELECT CAST(COALESCE(SUM(span_end - span_start), 0) AS BIGINT)
-         |    AS covered_chars
-         |  FROM sp$l
-         |),
-         |s$l AS (
-         |  SELECT CAST(COUNT(*) AS BIGINT) AS n_dup_starts,
-         |    CAST(COUNT(DISTINCT gram) AS BIGINT) AS n_dup_substrings
-         |  FROM d$l
-         |)""".stripMargin
-    }
-    val rows = probes.map { l =>
-      s"""SELECT CAST($l AS BIGINT) AS probe_len, s$l.n_dup_starts,
-         |  s$l.n_dup_substrings, c$l.covered_chars, tot.total_chars,
-         |  CAST((1000000 * c$l.covered_chars) // tot.total_chars
-         |    AS BIGINT) AS covered_x1e6
-         |FROM s$l, c$l, tot""".stripMargin
-    }
-    s"""WITH t AS (
-       |  SELECT doc_id, text FROM documents WHERE text IS NOT NULL
-       |),
-       |tot AS (
-       |  SELECT CAST(SUM(length(text)) AS BIGINT) AS total_chars FROM t
-       |),
-       |${probes.map(dupWindowBlock).mkString(",\n")},
-       |${stats.mkString(",\n")}
-       |${rows.mkString("\nUNION ALL\n")}""".stripMargin
-  }
-
-  /** q178 oracle: keep-first ExactSubstr span removal replayed with
-    * literal 12-char grams — rank every duplicated gram's occurrences
-    * by (doc_id, i), merge the NON-first extents into islands, and
-    * rebuild each text by string_agg over the complement segments
-    * (before-each-span + tail) — byte-identical reconstruction of the
-    * engine's kept-segment fold.
-    */
-  private lazy val q178OracleSql: String =
-    s"""WITH t AS (
-       |  SELECT doc_id, text, length(text) AS len FROM documents
-       |  WHERE text IS NOT NULL
-       |),
-       |g12 AS (
-       |  SELECT doc_id, i, substr(text, CAST(i AS BIGINT), 12) AS gram
-       |  FROM (SELECT doc_id, text,
-       |    unnest(generate_series(1, length(text) - 11)) AS i
-       |    FROM t)
-       |),
-       |d12 AS (
-       |  SELECT doc_id, i, gram FROM (
-       |    SELECT doc_id, i, gram,
-       |      COUNT(*) OVER (PARTITION BY gram) AS occ FROM g12)
-       |  WHERE occ >= 2
-       |),
-       |mk AS (
-       |  SELECT doc_id, i FROM (
-       |    SELECT doc_id, i,
-       |      row_number() OVER (PARTITION BY gram ORDER BY doc_id, i) AS rn
-       |    FROM d12)
-       |  WHERE rn > 1
-       |),
-       |isl AS (
-       |  SELECT doc_id, i, SUM(newi) OVER (PARTITION BY doc_id ORDER BY i
-       |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS g
-       |  FROM (SELECT doc_id, i, CASE WHEN i > coalesce(lag(i) OVER
-       |    (PARTITION BY doc_id ORDER BY i), -1000000000) + 12
-       |    THEN 1 ELSE 0 END AS newi FROM mk)
-       |),
-       |sp AS (
-       |  SELECT doc_id, CAST(MIN(i) AS BIGINT) AS span_start,
-       |    CAST(MAX(i) + 12 AS BIGINT) AS span_end
-       |  FROM isl GROUP BY doc_id, g
-       |),
-       |segs AS (
-       |  SELECT doc_id,
-       |    coalesce(lag(span_end) OVER (PARTITION BY doc_id
-       |      ORDER BY span_start), CAST(1 AS BIGINT)) AS s,
-       |    span_start AS e
-       |  FROM sp
-       |  UNION ALL
-       |  SELECT sp.doc_id, MAX(span_end) AS s,
-       |    CAST(MAX(t.len) + 1 AS BIGINT) AS e
-       |  FROM sp JOIN t USING (doc_id) GROUP BY sp.doc_id
-       |),
-       |clean AS (
-       |  SELECT doc_id, string_agg(substr(t.text, CAST(s AS BIGINT),
-       |    CAST(e - s AS BIGINT)), '' ORDER BY s) AS text_clean
-       |  FROM segs JOIN t USING (doc_id) GROUP BY doc_id
-       |),
-       |st AS (
-       |  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_cut,
-       |    CAST(SUM(span_end - span_start) AS BIGINT) AS chars_cut
-       |  FROM sp GROUP BY doc_id
-       |)
-       |SELECT t.doc_id, COALESCE(c.text_clean, t.text) AS text_clean,
-       |  CAST(COALESCE(st.n_cut, 0) AS BIGINT) AS n_cut,
-       |  CAST(COALESCE(st.chars_cut, 0) AS BIGINT) AS chars_cut
-       |FROM t LEFT JOIN clean c ON c.doc_id = t.doc_id
-       |LEFT JOIN st ON st.doc_id = t.doc_id""".stripMargin
-
-  private def plantedFilterUrl(id: Column): Column = {
-    val gid = id % 50
-    val h = (gid % 10).cast("string")
-    val tgt = gid.cast("string")
-    when(id % 10 === 0, concat(
-        lit("http://site"), h, lit(".example/news/"), tgt))
-      .when(id % 10 === 1, concat(
-        lit("http://site"), h, lit(".example/casino/"), tgt))
-      .when(id % 10 === 2, concat(
-        lit("http://site"), h, lit(".example/casino/poker/"), tgt))
-      .when(id % 10 === 3, concat(
-        lit("http://site"), h, lit(".example/a/p"), tgt, lit("xxx4")))
-      .when(id % 10 === 4, concat(
-        lit("http://h"), tgt, lit("x"), tgt, lit(".biz/news/"), tgt))
-      .when(id % 10 === 5, concat(
-        lit("http://blocked"), h, lit(".example/news/"), tgt))
-      .when(id % 10 === 6, concat(
-        lit("http://a.b.c.d.site"), h, lit(".example/news/"), tgt))
-      .when(id % 10 === 7, concat(
-        lit("http://cdn.blocked"), h, lit(".example/news/"), tgt))
-      .when(id % 10 === 8, concat(
-        lit("http://a.b.c.d.e.f.blocked"), h, lit(".example/news/"), tgt))
-      .otherwise(concat(
-        lit("www.site"), h, lit(".example/news/"), tgt))
-  }
-
-  private def blocklistDim(s: SparkSession): DataFrame =
-    s.range(10).select(
-      concat(lit("blocked"), col("id").cast("string"), lit(".example"))
-        .as("host"))
-
-  // Crawl-delay lines ride the existing groups (graftbot's on even
-  // hosts, the * group's on odd) — the q105 gate ignores them, q113
-  // reads them; sitemap discovery lines are appended host-specific in
-  // robotsPolicyDim below
-  private val RobotsFullPolicy: String =
-    "User-agent: graftbot\nDisallow: /private/\n" +
-      "Allow: /private/ok/\nDisallow: /*.tmp$\nCrawl-delay: 2.5\n\n" +
-      "User-agent: *\nDisallow: /\n"
-  private val RobotsNoOverride: String =
-    "User-agent: graftbot\nDisallow: /private/\n\n" +
-      "User-agent: *\nDisallow: /\nCrawl-delay: 10\n"
-
-  /** Even hosts additionally advertise two `Sitemap:` lines (one in a
-    * non-canonical spelling) APPENDED after the groups — the record is
-    * group-independent (RFC 9309 / sitemaps.org), so q105's decision
-    * table is untouched while q112 gets a discovery surface; odd hosts
-    * advertise none (the empty-array path).
-    */
-  private def robotsPolicyDim(s: SparkSession): DataFrame =
-    s.range(10).select(col("id").as("host_id"),
-      when(col("id") % 2 === 0, concat(lit(RobotsFullPolicy),
-          lit("Sitemap: http://site"), col("id").cast("string"),
-          lit(".example/sm/index.xml.gz\nSitemap: HTTP://SITE"),
-          col("id").cast("string"), lit(".EXAMPLE:80/sm/extra.xml\n")))
-        .otherwise(lit(RobotsNoOverride)).as("robots"))
-
-  /** Archive count for the WARC fixtures: one task streams one archive,
-    * so parallelism IS the archive count — Common Crawl ships tens of
-    * thousands of archives per snapshot, and a fixture that pinned 4
-    * archives at every scale left 28 of 32 cores idle from 10× up (the
-    * r11 100× probe measured q100 at 37× per decade purely from this).
-    * ~2000 records per archive, clamped to [4, 64]; a pure function of
-    * the table's row count (footer-count, no shuffle), so the record
-    * SET stays deterministic per sf across core counts, and the oracle
-    * scales (sf0.001-0.1) keep their historical 4-archive layout.
-    */
-  private def warcArchiveCount(s: SparkSession, dir: String): Int =
-    math.max(4L, math.min(64L,
-      (tableRowCount(s, dir, "documents") + 1999L) / 2000L)).toInt
-
-  /** A temp directory deleted (recursively) at JVM exit, so per-(session,
-    * sf) scratch artifacts like the q78 BM25 index never accumulate on
-    * the bench host across runs.
-    */
-  private def tempDirCleanedAtExit(prefix: String): String = {
-    val p = java.nio.file.Files.createTempDirectory(prefix)
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      import java.nio.file.{Files, Path}
-      import java.util.Comparator
-      if (Files.exists(p))
-        Files.walk(p).sorted(Comparator.reverseOrder[Path]())
-          .forEach(f => Files.deleteIfExists(f))
-    }))
-    p.toString
-  }
-
-  /** Minhash LSH config shared by q17/q19. Bands = 64 → 2 perms per band:
-    * the miss probability at the q19 verify threshold J = 0.5 is
-    * (1 - 0.5²)^64 ≈ 1e-8 (vs 12.7% with the r1/r2 4-perm bands — the
-    * ADVICE r2 mid-J gap), so LSH candidate restriction is invisible to
-    * the exact all-pairs oracle across the whole J ≥ 0.5 population, not
-    * just J ≥ 0.9. Narrower bands cost one extra (band, bucket, id) row
-    * per doc per band — still a narrow shuffle.
-    */
-  private val ShingleK = 2
-  private val NumPerms = 128
-  private val Bands = 64
-
-  private def minhashCandidates(s: SparkSession, dir: String): DataFrame =
-    memoized(s, s"cands|$dir") {
-      val sigs = MinHashDedup
-        .signatures(Tables(s, dir).documents, "doc_id", "text", ShingleK,
-          NumPerms, Bands)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      MinHashDedup.candidatePairsFromSigs(sigs, NumPerms, minJaccardPct = 5)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    }
-
-  private def sinkFixture(s: SparkSession, dir: String): String =
-    memoized(s, s"sink|$dir") {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_sink_orders_" +
-        Integer.toHexString(dir.hashCode)
-      PartitionedSink.writeMonthly(Tables(s, dir).orders, "o_orderdate",
-        "o_custkey", path)
-      path
-    }
-
-  /** '#'-delimited CSV fixture derived deterministically from `orders`:
-    * every 97th orderkey gets a malformed date so the errors→null coercion
-    * path is actually exercised (and oracle-checkable from the parquet).
-    */
-  private def csvFixture(s: SparkSession, dir: String): String =
-    memoized(s, s"csv|$dir") {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_csv_orders_" +
-        Integer.toHexString(dir.hashCode)
-      Tables(s, dir).orders
-        .select(col("o_orderkey"), col("o_orderstatus"),
-          when(col("o_orderkey") % 97 === 0, lit("not-a-date"))
-            .otherwise(date_format(col("o_orderdate"), "yyyy-MM-dd HH:mm:ss"))
-            .as("o_orderdate"),
-          col("o_totalprice"))
-        .write.mode("overwrite").option("delimiter", "#").csv(path)
-      path
-    }
-
-  private val csvOrdersSchema = StructType(Seq(
-    StructField("o_orderkey", LongType),
-    StructField("o_orderstatus", StringType),
-    StructField("o_orderdate", StringType), // coerced to timestamp post-scan
-    StructField("o_totalprice", DoubleType)))
-
-  /** ZIP archive over the q28 CSV fixture — the reference's actual wire
-    * format (a downloaded ZIP containing the delimiter-CSV). Same rows as
-    * q28, so q59 shares its oracle.
-    */
-  private def zipFixture(s: SparkSession, dir: String): String =
-    memoized(s, s"zip|$dir") {
-      val csvDir = new java.io.File(csvFixture(s, dir))
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_zip_orders_" +
-        Integer.toHexString(dir.hashCode)
-      val outDir = new java.io.File(path)
-      outDir.mkdirs()
-      val zip = new java.util.zip.ZipOutputStream(
-        new java.io.FileOutputStream(new java.io.File(outDir, "orders.zip")))
-      csvDir.listFiles().filter(_.getName.endsWith(".csv")).sortBy(_.getName)
-        .foreach { f =>
-          zip.putNextEntry(new java.util.zip.ZipEntry(f.getName))
-          java.nio.file.Files.copy(f.toPath, zip)
-          zip.closeEntry()
-        }
-      zip.close()
-      path
-    }
-
-  /** q97 fixture: the documents table assembled into 4 real WARC archives
-    * (one per task — the format's file-count parallelism contract), each
-    * record's bytes fully determined by doc_id arithmetic so the oracle
-    * replays the parse in SQL:
-    *  - every doc → a 'response' record at http://corpus.example/doc/<id>,
-    *    WARC-Date = 2024-01-01T00:00:00Z + (id mod 86400) s, payload an
-    *    HTTP/1.1 200 text/plain response around the text (45 header
-    *    bytes — WarcCodec.httpResponse);
-    *  - id mod 7 = 3 → an extra 'metadata' record (exercises the type
-    *    filter);
-    *  - id mod 11 = 5 → the response payload is a torn capture
-    *    ("BROKEN\r\n\r\n" + text, 10 prefix bytes): WARC framing intact,
-    *    HTTP parse fails → status/body NULL;
-    *  - partition 0's archive is per-record-gzip'd (concatenated members,
-    *    the in-the-wild layout) — the decode path shares the oracle.
-    * Partitioning is hash(doc_id) so the record SET is identical across
-    * core counts (file assignment varies; the query never exposes it).
-    */
-  private def warcFixture(s: SparkSession, dir: String): String =
-    memoized(s, s"warc|$dir") {
-      // fresh per-session dir (ADVICE r10: a fixed tmpdir path keyed on
-      // dir.hashCode could serve stale or mid-rewrite part files to the
-      // *.warc* glob across JVMs/sessions); cleaned at JVM exit
-      val path = tempDirCleanedAtExit("graft_warc_docs_")
-      Tables(s, dir).documents.select(col("doc_id"), col("text"))
-        .repartition(warcArchiveCount(s, dir), col("doc_id"))
-        .sortWithinPartitions("doc_id")
-        .foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-          val pid = org.apache.spark.TaskContext.getPartitionId()
-          val gz = pid == 0
-          val f = new java.io.File(path,
-            if (gz) s"part-$pid.warc.gz" else s"part-$pid.warc")
-          val fos = new java.io.FileOutputStream(f)
-          def writeRec(b: Array[Byte]): Unit =
-            if (gz) { // one gzip member per record, concatenated
-              val g = new java.util.zip.GZIPOutputStream(fos) {
-                // flush the member WITHOUT closing fos; release the
-                // Deflater's native buffer (ADVICE r10 leak)
-                override def close(): Unit = { finish(); `def`.end(); fos.flush() }
-              }
-              g.write(b); g.close()
-            } else fos.write(b)
-          rows.foreach { r =>
-            val id = r.getAs[Long]("doc_id")
-            val text = r.getAs[String]("text").getBytes("UTF-8")
-            val uri = s"http://corpus.example/doc/$id"
-            val date = java.time.Instant.parse("2024-01-01T00:00:00Z")
-              .plusSeconds(id % 86400).toString
-            if (id % 7 == 3)
-              writeRec(WarcCodec.buildRecord("metadata",
-                s"<urn:graft:meta:$id>", uri, date, "k: v\r\n".getBytes("US-ASCII")))
-            val payload =
-              if (id % 11 == 5) "BROKEN\r\n\r\n".getBytes("US-ASCII") ++ text
-              else WarcCodec.httpResponse(text)
-            writeRec(WarcCodec.buildRecord("response",
-              s"<urn:graft:$id>", uri, date, payload))
-          }
-          fos.close()
-        }
-      path
-    }
-
-  /** q100 fixture: the documents table as WARC archives whose response
-    * bodies arrive in the charsets a real web crawl serves, keyed by
-    * doc_id mod 5 (each body is the doc text plus a deterministic
-    * non-ASCII suffix, encoded in the declared charset — the oracle knows
-    * the decoded STRING; Spark must recover it by genuinely transcoding
-    * the planted bytes):
-    *  - 0: UTF-8 body, NO charset parameter (the modern-web default path);
-    *  - 1: ISO-8859-1 (`charset=iso-8859-1`);
-    *  - 2: Windows-1250 (`charset=windows-1250` — the reference corpus's
-    *    Polish locale);
-    *  - 3: UTF-16 with BOM (`charset=utf-16`);
-    *  - 4: UTF-8 bytes labeled `charset=x-graft-unknown` — must yield
-    *    NULL text + `unsupported_charset`, never a guessed decode.
-    * Additionally doc_id % 7 = 6 docs carry a stray BEL (U+0007, valid in
-    * every planted charset) before the suffix: q100's transcode passes it
-    * THROUGH (transcoding fixes labeling, not content), and q101's
-    * encoding gate (q99's control-char signal) then drops those docs —
-    * the two-layer contract. documents.text is printable-ASCII by
-    * construction (TESTDATA), so every legacy-charset encode is lossless.
-    * Partition 0's archive is per-record-gzip'd like the q97 fixture.
-    */
-  private def warcCharsetFixture(s: SparkSession, dir: String): String =
-    memoized(s, s"warc_cs|$dir") {
-      val path = tempDirCleanedAtExit("graft_warc_cs_")
-      Tables(s, dir).documents.select(col("doc_id"), col("text"))
-        .repartition(warcArchiveCount(s, dir), col("doc_id"))
-        .sortWithinPartitions("doc_id")
-        .foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-          val pid = org.apache.spark.TaskContext.getPartitionId()
-          val gz = pid == 0
-          val f = new java.io.File(path,
-            if (gz) s"part-$pid.warc.gz" else s"part-$pid.warc")
-          val fos = new java.io.FileOutputStream(f)
-          def writeRec(b: Array[Byte]): Unit =
-            if (gz) {
-              val g = new java.util.zip.GZIPOutputStream(fos) {
-                override def close(): Unit = { finish(); `def`.end(); fos.flush() }
-              }
-              g.write(b); g.close()
-            } else fos.write(b)
-          rows.foreach { r =>
-            val id = r.getAs[Long]("doc_id")
-            val text = r.getAs[String]("text") +
-              (if (id % 7 == 6) "\u0007" else "")
-            val date = java.time.Instant.parse("2024-01-01T00:00:00Z")
-              .plusSeconds(id % 86400).toString
-            val (ctype, body) = ((id % 5).toInt: @annotation.switch) match {
-              case 0 => ("text/plain", (text + " δ✓").getBytes("UTF-8"))
-              case 1 => ("text/plain; charset=iso-8859-1",
-                (text + " café æøå").getBytes("ISO-8859-1"))
-              case 2 => ("text/plain; charset=windows-1250",
-                (text + " śćżź").getBytes("windows-1250"))
-              case 3 => ("text/plain; charset=utf-16",
-                (text + " Ω16").getBytes("UTF-16"))
-              case _ => ("text/plain; charset=x-graft-unknown",
-                text.getBytes("UTF-8"))
-            }
-            writeRec(WarcCodec.buildRecord("response", s"<urn:graft:cs:$id>",
-              s"http://corpus.example/doc/$id", date,
-              WarcCodec.httpResponse(body, ctype)))
-          }
-          fos.close()
-        }
-      path
-    }
-
-  /** q111 fixture: a MIXED-TYPE crawl — the payload classes a real
-    * archive interleaves, keyed by doc_id mod 5 so the oracle composes
-    * every expected output from arithmetic while Spark must genuinely
-    * dispatch on the declared Content-Type and run the per-type kernel:
-    *  - 0: `text/html; charset=utf-8` — a page wrapping the doc text
-    *    (head elision + block structure exercise the q103 extractor
-    *    INSIDE the route);
-    *  - 1: `text/plain; charset=iso-8859-1` — legacy-charset prose with
-    *    a non-ASCII suffix (transcode inside the route);
-    *  - 2: `image/bmp` — a real BMP header whose dims are id arithmetic
-    *    (the q83 kernel reads metadata; bytes never touch a text path);
-    *  - 3: `application/pdf` — routed to the PdfText extractor; the
-    *    payload is a bare `%PDF-` marker with no objects, so the route
-    *    answers with an attributable `no_text`, never mangled prose
-    *    (q123 oracles the REAL extraction over full planted PDFs);
-    *  - 4: NO Content-Type header at all — unknown, counted skip.
-    * Partition 0's archive is per-record-gzip'd like the q97 fixture.
-    */
-  private def warcMixedFixture(s: SparkSession, dir: String): String =
-    memoized(s, s"warc_mixed|$dir") {
-      val path = tempDirCleanedAtExit("graft_warc_mixed_")
-      Tables(s, dir).documents.select(col("doc_id"), col("text"))
-        .repartition(warcArchiveCount(s, dir), col("doc_id"))
-        .sortWithinPartitions("doc_id")
-        .foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-          val pid = org.apache.spark.TaskContext.getPartitionId()
-          val gz = pid == 0
-          val f = new java.io.File(path,
-            if (gz) s"part-$pid.warc.gz" else s"part-$pid.warc")
-          val fos = new java.io.FileOutputStream(f)
-          def writeRec(b: Array[Byte]): Unit =
-            if (gz) {
-              val g = new java.util.zip.GZIPOutputStream(fos) {
-                override def close(): Unit = { finish(); `def`.end(); fos.flush() }
-              }
-              g.write(b); g.close()
-            } else fos.write(b)
-          def le32(v: Int): Array[Byte] = Array[Byte](
-            (v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-            ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
-          def bmp(w: Int, h: Int): Array[Byte] =
-            // "BM" file header (size/reserved/offset) + BITMAPINFOHEADER
-            // prefix through bitcount — the q83 fixture's layout
-            Array[Byte]('B', 'M') ++ le32(0) ++ le32(0) ++ le32(0x36) ++
-              le32(40) ++ le32(w) ++ le32(h) ++
-              Array[Byte](1, 0, 24, 0)
-          rows.foreach { r =>
-            val id = r.getAs[Long]("doc_id")
-            val text = r.getAs[String]("text")
-            val date = java.time.Instant.parse("2024-01-01T00:00:00Z")
-              .plusSeconds(id % 86400).toString
-            val payload = ((id % 6).toInt: @annotation.switch) match {
-              case 0 => WarcCodec.httpResponse(
-                (s"<html><head><title>skip</title></head><body><h1>Doc " +
-                  s"$id</h1><p>$text</p></body></html>").getBytes("UTF-8"),
-                "text/html; charset=utf-8")
-              case 1 => WarcCodec.httpResponse(
-                (text + " café").getBytes("ISO-8859-1"),
-                "text/plain; charset=iso-8859-1")
-              case 2 => WarcCodec.httpResponse(
-                bmp(1 + (id % 1024).toInt, 1 + (id % 768).toInt),
-                "image/bmp")
-              case 3 => WarcCodec.httpResponse(
-                (s"%PDF-1.4 graft $id").getBytes("US-ASCII"),
-                "application/pdf")
-              case 5 => WarcCodec.httpResponse(
-                (s"""<?xml version="1.0"?><rss version="2.0"><channel>""" +
-                  s"<title>F $id</title>" +
-                  (0L to id % 3).map(i =>
-                    s"<item><title>i$i</title><link>http://corpus" +
-                      s".example/p/$id/$i</link></item>").mkString +
-                  "</channel></rss>").getBytes("UTF-8"),
-                "application/rss+xml")
-              case _ => // untyped: no Content-Type header anywhere
-                ("HTTP/1.1 200 OK\r\nX-Graft: untyped\r\n\r\n")
-                  .getBytes("US-ASCII") ++ text.getBytes("UTF-8")
-            }
-            writeRec(WarcCodec.buildRecord("response", s"<urn:graft:mx:$id>",
-              s"http://corpus.example/doc/$id", date, payload))
-          }
-          fos.close()
-        }
-      path
-    }
-
-  /** q142 fixture: redirect chains planted by doc_id arithmetic — chain
-    * length L = id%4 (L=0 ids plant only their 200 page), hop j at
-    * /r/{id}/{j} answering 301/302 alternating with Location to the next
-    * hop, the last hop landing on /page/{id} — except id%9=8 chains,
-    * whose last hop points BACK to hop 0 (the loop misconfiguration the
-    * resolver must bound). id%7=3 chains additionally capture hop 0 a
-    * SECOND time, one hour EARLIER, redirecting straight to the page —
-    * the duplicate-source shape a real frontier produces; the resolver
-    * must pick the newest capture (the full chain), or final_url/hops
-    * replay wrong and row counts multiply through the doubling joins.
-    */
-  private def warcRedirectFixture(s: SparkSession, dir: String): String =
-    memoized(s, s"warc_redir|$dir") {
-      val path = tempDirCleanedAtExit("graft_warc_redir_")
-      Tables(s, dir).documents.select(col("doc_id"))
-        .repartition(warcArchiveCount(s, dir), col("doc_id"))
-        .sortWithinPartitions("doc_id")
-        .foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-          val pid = org.apache.spark.TaskContext.getPartitionId()
-          val f = new java.io.File(path, s"part-$pid.warc")
-          val fos = new java.io.FileOutputStream(f)
-          rows.foreach { r =>
-            val id = r.getAs[Long]("doc_id")
-            val h = (id % 50) % 10
-            val chainLen = (id % 4).toInt
-            val loop = id % 9 == 8 && chainLen > 0
-            val date = java.time.Instant.parse("2024-01-01T00:00:00Z")
-              .plusSeconds(id % 86400).toString
-            def u(j: Int) = s"http://site$h.example/r/$id/$j"
-            val page = s"http://site$h.example/page/$id"
-            for (j <- 0 until chainLen) {
-              val st = if (j % 2 == 0) 301 else 302
-              val dst =
-                if (j < chainLen - 1) u(j + 1)
-                else if (loop) u(0) else page
-              fos.write(WarcCodec.buildRecord("response",
-                s"<urn:graft:rd:$id:$j>", u(j), date,
-                WarcCodec.httpRedirect(st, dst)))
-            }
-            // duplicate capture of hop 0: an hour older, shortcutting
-            // straight to the page — the stale edge the newest-capture
-            // winner must discard
-            if (chainLen > 0 && id % 7 == 3) {
-              val older = java.time.Instant
-                .parse("2024-01-01T00:00:00Z")
-                .plusSeconds(id % 86400 - 3600).toString
-              fos.write(WarcCodec.buildRecord("response",
-                s"<urn:graft:rd:$id:0d>", u(0), older,
-                WarcCodec.httpRedirect(301, page)))
-            }
-            fos.write(WarcCodec.buildRecord("response",
-              s"<urn:graft:rd:$id:p>", page, date,
-              WarcCodec.httpResponse(s"Doc $id".getBytes("UTF-8"),
-                "text/html")))
-          }
-          fos.close()
-        }
-      path
-    }
-
-  /** q29 fixture: customers classified into code-cleanse cases by
-    * c_custkey mod 10 — raw code present (valid / bad prefix / one digit
-    * short), fallback-column fill, name-containment lookup against the
-    * nation dim, and unmatchable. Mirrors the reference's terc cases.
-    */
-  private def lookupFixture(t: Tables): DataFrame =
-    t.customer
-      .join(broadcast(t.nation.select(col("n_nationkey"), col("n_name"))),
-        col("c_nationkey") === col("n_nationkey"))
-      .select(
-        col("c_custkey"), col("n_name"),
-        when(col("c_custkey") % 5 === 0,
-          concat(lit("area of "), col("n_name"), lit(" province")))
-          .otherwise(lit("nowhere")).as("place"),
-        when(col("c_custkey") % 5 === 0 || col("c_custkey") % 5 === 1,
-          lit(null).cast("string"))
-          .when(col("c_custkey") % 5 === 3,
-            concat(lit("77"),
-              lpad((col("c_custkey") % 1000).cast("string"), 5, "0")))
-          .when(col("c_custkey") % 5 === 4,
-            concat(lpad((col("c_custkey") % 40).cast("string"), 2, "0"),
-              lit("1234")))
-          .otherwise(concat(lpad((col("c_custkey") % 40).cast("string"), 2, "0"),
-            lit("12345"))).as("rawcode"),
-        when(col("c_custkey") % 10 === 1, lit("0555555")).as("fb"))
-
-  // q78's fixed retrieval workload: three queries over the synthetic vocab
-  // (identical VALUES literals in the oracle)
-  private val Bm25Queries: Seq[(Long, Seq[String])] = Seq(
-    0L -> Seq("spark", "window", "customer"),
-    1L -> Seq("vector", "merge", "stream"),
-    2L -> Seq("slow", "filter"))
-
-  /** q83 fixtures: deterministic PNG / JPEG byte streams assembled with
-    * hex arithmetic on doc_id — width/height are pure functions of doc_id,
-    * so the DuckDB oracle recomputes the expected dims WITHOUT parsing,
-    * while the Spark side must genuinely invert the encoding by walking
-    * the container headers (MediaHeader). doc_id % 3: 0 → PNG (RFC 2083
-    * signature + IHDR), 1 → JPEG (SOI + APP0/JFIF + variable-length COM
-    * segment + odd-row fill byte before SOF0, so the marker walk is
-    * exercised at varying offsets, never a fixed one), 2 → truncated
-    * garbage (every parse column NULL).
-    */
-  private def imageBlobFixture(docs: DataFrame): DataFrame = {
-    val id = col("doc_id")
-    def hex4(c: Column) = lpad(hex(c), 4, "0")
-    def hex8(c: Column) = lpad(hex(c), 8, "0")
-    // little-endian byte orders for the GIF/BMP fields
-    def leByte(c: Column, i: Int) =
-      lpad(hex(shiftright(c.cast("long"), 8 * i) % 256), 2, "0")
-    def hexLe16(c: Column) = concat(leByte(c, 0), leByte(c, 1))
-    def hexLe32(c: Column) =
-      concat(leByte(c, 0), leByte(c, 1), leByte(c, 2), leByte(c, 3))
-    val pngHex = concat(
-      lit("89504E470D0A1A0A" + "0000000D" + "49484452"),
-      hex8(lit(1) + id % 640), hex8(lit(1) + id % 480),
-      lit("0806000000" + "DEADBEEF"))
-    val comLen = lit(4) + id % 8 // COM length varies the SOF offset
-    val jpegHex = concat(
-      lit("FFD8" + "FFE00010" + "4A46494600" + "0102" + "00" +
-        "00010001" + "0000"),
-      lit("FFFE"), hex4(comLen), repeat(lit("00"), (comLen - 2).cast("int")),
-      when(id % 2 === 1, lit("FF")).otherwise(lit("")), // legal fill byte
-      lit("FFC00011" + "08"),
-      hex4(lit(1) + id % 800), hex4(lit(1) + id % 1000),
-      lit("03" + "011100" + "021101" + "031101"))
-    // GIF89a signature + Logical Screen Descriptor (LE dims, packed
-    // fields/bg/aspect trailer)
-    val gifHex = concat(lit("474946383961"),
-      hexLe16(lit(1) + id % 320), hexLe16(lit(1) + id % 200),
-      lit("F70000"))
-    // BMP: "BM" file header (size/reserved/offset unparsed), then a
-    // 40-byte BITMAPINFOHEADER with i32-LE dims; odd ids negate the
-    // height — the legal top-down form whose magnitude is the answer
-    val bmpH = (lit(1) + id % 768).cast("long")
-    val bmpHex = concat(lit("424D" + "00000000" + "00000000" + "36000000"),
-      lit("28000000"), hexLe32(lit(1) + id % 1024),
-      hexLe32(when(id % 2 === 1, lit(4294967296L) - bmpH).otherwise(bmpH)),
-      lit("0100" + "1800"))
-    val blobHex = when(id % 5 === 0, pngHex)
-      .when(id % 5 === 1, jpegHex)
-      .when(id % 5 === 3, gifHex)
-      .when(id % 5 === 4, bmpHex)
-      .otherwise(lit("89504E470D0A1A0A0000")) // truncated: no IHDR
-    docs.select(id, unhex(blobHex).as("blob"))
-  }
-
-  /** q86 fixture: a deterministic link graph over customers — every node
-    * links up a binary tree (c → max(c div 2, 1), concentrating authority
-    * at low ids) and across a multiplicative shuffle
-    * (c → (7c mod N) + 1), so ranks are non-uniform but pure integer
-    * arithmetic both engines reproduce.
-    */
-  private def linkFixture(t: Tables): DataFrame = {
-    val nmax = t.customer.agg(max(col("c_custkey")).cast("long").as("nmax"))
-    t.customer.crossJoin(broadcast(nmax))
-      .select(col("c_custkey").cast("long").as("src"),
-        explode(array(
-          greatest(expr("c_custkey div 2"), lit(1L)).cast("long"),
-          (col("c_custkey").cast("long") * 7 % col("nmax") + 1)
-            .cast("long"))).as("dst"))
-  }
-
-  /** q60 fixtures: an 8-vertex star polygon per nation (integer vertices —
-    * fixed compass directions, per-(nation, k) radius, so some rings are
-    * non-convex) and customer points scattered in a box around their
-    * nation's center. Everything is integer arithmetic on table columns,
-    * so a pure-SQL DuckDB oracle reproduces the ray cast bit-for-bit.
-    */
-  private val polyDirs = Seq((1, 0), (1, 1), (0, 1), (-1, 1), (-1, 0),
-    (-1, -1), (0, -1), (1, -1))
-
-  private def polygonFixture(t: Tables): DataFrame = {
-    val nk = col("n_nationkey").cast("long")
-    val verts = array(polyDirs.zipWithIndex.map { case ((dx, dy), k) =>
-      val r = lit(50L) + (nk * 7 + k * 13) % 30
-      struct((nk * 1000 + r * dx).as("x"), (nk * 500 + r * dy).as("y"))
-    }: _*)
-    t.nation.select(nk.as("poly_id"), verts.as("vertices"))
-  }
-
-  private def pointFixture(t: Tables): DataFrame =
-    t.customer.select(col("c_custkey").as("pt_id"),
-      (col("c_nationkey").cast("long") * 1000 +
-        col("c_custkey") * 37 % 200 - 100).as("px"),
-      (col("c_nationkey").cast("long") * 500 +
-        col("c_custkey") * 53 % 200 - 100).as("py"))
-
-  // ---- the inventory -------------------------------------------------------
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // 1. grouped aggregation (TPC-H Q1 shape). sum_disc_price multiplies in
-    // DECIMAL on both sides — a double product cast to decimal rounds
-    // differently across engines (VERDICT r1's one red row).
-    "q1_agg" -> ((s, dir) => {
-      val li = Tables(s, dir).lineitem
-      li.groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          xsum(col("l_quantity")).as("sum_qty"),
-          xsum(col("l_extendedprice")).as("sum_base_price"),
-          sum(dec2(col("l_extendedprice")) * (lit(1) - dec2(col("l_discount"))))
-            .cast("double").as("sum_disc_price"),
-          (sum(dec2(col("l_quantity"))).cast("double") / count(lit(1)))
-            .as("avg_qty"),
-          count(lit(1)).as("count_order"))
-    }),
-
-    // 2. incremental date-window filter (previous-month window mode,
-    // half-open [start, exec))
-    "q2_date_window" -> ((s, dir) => {
-      val o = Tables(s, dir).orders
-      IncrementalLoad
-        .dateWindow(o, col("o_orderdate"), lit("1995-04-01").cast("date"),
-          firstRun = false)
-        .select("o_orderkey", "o_custkey", "o_orderdate", "o_totalprice")
-    }),
-
-    // 3. star-schema enrich with broadcast dims
-    "q3_star_join" -> ((s, dir) => {
-      val t = Tables(s, dir)
-      StarJoin
-        .enrich(t.orders, Seq(
-          t.customer.select("c_custkey", "c_nationkey") -> (col("o_custkey") === col("c_custkey")),
-          t.nation.select("n_nationkey", "n_regionkey") -> (col("c_nationkey") === col("n_nationkey")),
-          t.region -> (col("n_regionkey") === col("r_regionkey"))))
-        .groupBy(col("r_name"))
-        .agg(count(lit(1)).as("n_orders"), xsum(col("o_totalprice")).as("revenue"))
-    }),
-
-    // 4. pivot counts with explicit pivot values
-    "q4_pivot" -> ((s, dir) =>
-      PivotAggregates.countPivot(Tables(s, dir).orders, "o_orderpriority",
-        "o_orderstatus", Seq("O", "F", "P"))),
-
-    // 5. 3m/2m/1m window counts in one pass
-    "q5_multiwindow" -> ((s, dir) => {
-      val t = Tables(s, dir)
-      val oc = t.orders
-        .join(broadcast(t.customer.select("c_custkey", "c_nationkey")),
-          col("o_custkey") === col("c_custkey"))
-        .join(broadcast(t.nation.select("n_nationkey", "n_name")),
-          col("c_nationkey") === col("n_nationkey"))
-      WindowedCounts.monthWindowCounts(oc, col("o_orderdate"),
-        lit("1995-04-01").cast("date"), Seq(3, 2, 1), Seq("n_name"))
-    }),
-
-    // 6. anti-join: parts never shipped in bulk (no lineitem with qty >= 45)
-    // — a key with REAL non-matches (r1's customers-without-orders variant
-    // returned 0 rows on both sides, proving nothing)
-    "q6_anti_join" -> ((s, dir) => {
-      val t = Tables(s, dir)
-      DimAlign
-        .removeUnmatched(t.part,
-          t.lineitem.where(col("l_quantity") >= 45).select("l_partkey"),
-          "p_partkey", "l_partkey")
-        .select("p_partkey", "p_name")
-    }),
-
-    // 7. zero-fill outer join: per-nation order counts incl. empty nations
-    "q7_zero_fill" -> ((s, dir) => {
-      val t = Tables(s, dir)
-      val agg = t.orders
-        .join(t.customer.select("c_custkey", "c_nationkey"),
-          col("o_custkey") === col("c_custkey"))
-        .groupBy(col("c_nationkey"))
-        .agg(count(lit(1)).as("n_orders"))
-      DimAlign
-        .zeroFill(t.nation.select("n_nationkey", "n_name"), agg,
-          "n_nationkey", "c_nationkey", Seq("n_orders"))
-        .select("n_name", "n_orders")
-    }),
-
-    // 8. code-correction cleanse (terc-style) with status classification
-    "q8_code_correction" -> ((s, dir) => {
-      val e = eventsWithCodes(Tables(s, dir))
-      CodeCorrection
-        .classify(e, col("rawc"), col("fb"), width = 7, prefixLen = 2,
-          validPrefixes = validCodePrefixes)
-        .groupBy(col("status"))
-        .agg(count(lit(1)).as("n"), countDistinct(col("code")).as("n_codes"))
-    }),
-
-    // 9. deterministic top-k per group
-    "q9_topk_per_group" -> ((s, dir) => {
-      val t = Tables(s, dir)
-      val oc = t.orders.join(
-        broadcast(t.customer.select("c_custkey", "c_mktsegment")),
-        col("o_custkey") === col("c_custkey"))
-      Ranking
-        .topKPerGroup(oc, "c_mktsegment", col("o_totalprice").desc,
-          col("o_orderkey").asc, 5)
-        .select("c_mktsegment", "rnk", "o_orderkey", "o_totalprice")
-    }),
-
-    // 10. single-pass validation suite (great_expectations analog)
-    "q10_validation" -> ((s, dir) =>
-      Validator.validate(Tables(s, dir).events, eventExpectations)),
-
-    // 11. roman numeral codec round-trip
-    "q11_deromanize" -> ((s, dir) =>
-      Tables(s, dir).part
-        .select(col("p_size"))
-        .where(col("p_size").between(1, 30))
-        .distinct()
-        .select(col("p_size"), F.toRoman(col("p_size")).as("roman"))
-        .withColumn("back", F.fromRoman(col("roman")))),
-
-    // 12. schema-evolution union with zero fill
-    "q12_schema_align" -> ((s, dir) => {
-      val o = Tables(s, dir).orders
-      val a = o.where(year(col("o_orderdate")) === 1995)
-        .select(col("o_orderkey"), col("o_totalprice"), lit("y1995").as("src"))
-      val b = o.where(year(col("o_orderdate")) === 1996)
-        .select(col("o_orderkey"), lit("y1996").as("src"))
-      SchemaAlign.unionZeroFill(a, b)
-        .groupBy(col("src"))
-        .agg(count(lit(1)).as("n"), xsum(col("o_totalprice")).as("total"))
-    }),
-
-    // 13. gap-based sessionization via window functions
-    "q13_sessionize" -> ((s, dir) =>
-      Sessionize.userSessionStats(Tables(s, dir).events, "user_id", "ts",
-        "event_id", gapMs = 1800000L)),
-
-    // 14. tumbling time buckets (batch twin of the streaming agg)
-    "q14_time_buckets" -> ((s, dir) =>
-      TimeBuckets.hourly(Tables(s, dir).events, "ts",
-        Seq(count(lit(1)).as("n"), xsum(col("value")).as("total_value")),
-        extraKeys = Seq("event_type"))),
-
-    // 15. monthly-partitioned + clustered sink, manifest read-back (the
-    // write is guarded/idempotent per session+dir — see sinkFixture)
-    "q15_partition_manifest" -> ((s, dir) =>
-      s.read.parquet(sinkFixture(s, dir))
-        .groupBy(col("p_month").cast("string").as("p_month"))
-        .agg(count(lit(1)).as("n"), min(col("o_orderkey")).as("min_key"),
-          max(col("o_orderkey")).as("max_key"))),
-
-    // 16. exact dedup groups (shuffles a 16-byte hash key, not the text)
-    "q16_dedup_exact" -> ((s, dir) =>
-      ExactDedup.groups(Tables(s, dir).documents, "doc_id", "text")
-        .select("keep_id", "n_dups")),
-
-    // 17. minhash-LSH candidate pairs, demonstrated on a bounded 32-doc
-    // slice so the WHOLE construction is oracle-exact (VERDICT r7 task 3b:
-    // the 128-perm CTE replay is a cost wall at full corpus width — the
-    // slice keeps the oracle cheap while DuckDB replays every stage:
-    // shingle FNV hashes, 128 per-perm unsigned minima, 64 band folds,
-    // bucket grouping, pair formation, and the signature-agreement
-    // estimate). The FULL-width candidate path stays exercised and
-    // oracle-covered end-to-end through q19's exact all-pairs Jaccard
-    // oracle (plus q37/q56/q69, which consume the same memoized pairs).
-    "q17_minhash_pairs" -> ((s, dir) =>
-      MinHashDedup.candidatePairs(
-        Tables(s, dir).documents.where(col("doc_id") < 32),
-        "doc_id", "text", ShingleK, NumPerms, Bands, minJaccardPct = 5)),
-
-    // 18. simhash per doc [rows-only; unit-gated in HashingSpec]
-    "q18_simhash" -> ((s, dir) =>
-      SimHashDedup.hashes(Tables(s, dir).documents, "doc_id", "text")),
-
-    // 19. exact n-gram jaccard over the SHARED q17 candidates. With r=2
-    // bands (see the Bands doc above) the candidate miss probability at
-    // the J=0.5 verify threshold is ~1e-8 — the restriction is invisible
-    // to the all-pairs DuckDB oracle across the ENTIRE output population
-    // (ADVICE r2's mid-J regime included, DedupSpec-planted). The fully
-    // exact prefix-filtered join (NgramJaccard.exactPairs) stays the
-    // offline option: recall exactly 1 at any J, but its posting-list
-    // join scales with shingle document frequency, not near-dup density —
-    // 160x slower on this corpus (34 s vs 0.2 s at sf0.1).
-    "q19_ngram_jaccard" -> ((s, dir) =>
-      NgramJaccard.verify(Tables(s, dir).documents,
-        minhashCandidates(s, dir), "doc_id", "text", ShingleK,
-        minJaccardPct = 50)),
-
-    // 20. embedding cosine near-dup pairs via BANDED hyperplane LSH
-    // (32 tables × 4 planes: recall at cos 0.5 is 1-(1-0.2)^32 ≈ 0.9993
-    // vs ~0.2 for r1's single AND-only code), exact-cosine verified,
-    // DuckDB all-pairs oracle. `planes` grows with corpus size per the
-    // operator's documented calibration (EmbeddingDedup.pairs scaladoc:
-    // 2^planes buckets must keep occupancy under the cap — the r8 100×
-    // probe measured the alternative: at 2·10^5 vectors every 4-bit
-    // bucket blows past maxBucket and the occupancy gate drops ALL of
-    // them, recall 0). The 1.25 exponent makes the calibration
-    // occupancy-SHRINKING (r10): with planes = ceil(log2(n/512)) exactly,
-    // occupancy n/2^planes is bounded but CONSTANT, so total candidate
-    // work n·occupancy·tables is linear in n — the r10 100× probe
-    // measured the pair family's only superlinear decade (≈12× adjusted
-    // for load). Growing planes at 1.25·log2 shrinks occupancy ∝ n^-1/4,
-    // making candidate volume ∝ n^3/4 — sublinear by construction.
-    // Oracle SFs have ≤ 2·10^3 vectors → planes stays 4 there (both
-    // formulas agree below the n/512 boundary), so the oracle contract
-    // is untouched; at probe scale wider codes keep within-clique recall
-    // ≈ 1 (miss < 1e-27 at planes 11, cos .999) while low-τ (≈ 0.5)
-    // completeness degrades as documented — hyperplane LSH is a high-τ
-    // scheme; IvfAnn is the weak-similarity path.
-    "q20_embed_neardup" -> ((s, dir) => {
-      val e = Tables(s, dir).embeddings
-      // sizing count from the unspread scan (tableRowCount) — same n,
-      // no full-data exchange before the operator starts (VERDICT r10)
-      EmbeddingDedup.pairs(e, "vec_id", "embedding",
-        planes = EmbeddingDedup.planesForSublinear(
-          tableRowCount(s, dir, "embeddings")),
-        tables = 32, minCosine = 0.5)
-    }),
-
-    // 20j. EXACT substring dup spans by distributed prefix-doubling
-    // (VERDICT r17 next-task 6 — the suffix-array-rank construction
-    // that closes q93's documented deviation from Lee et al. 2022's
-    // ExactSubstr): character-level, hash-free. Rank tables by
-    // ⌈log₂L⌉ rounds of pair-and-re-rank through the etl.Prefix
-    // distributed rank (24-byte rows, never text, no SinglePartition);
-    // length-12 windows keyed by the sparse-table rank pair; duplicated
-    // window extents unioned into maximal per-doc spans with EXACT
-    // boundaries. FULL oracle: DuckDB enumerates the literal 12-char
-    // grams (exact strings — the semantics, not the algorithm),
-    // counts occurrences corpus-wide, and merges islands identically.
-    "q175_exact_dup_spans" -> ((s, dir) => {
-      val (_, _, starts) = exsubShared(s, dir)
-      graft.dedup.ExactSubstr.dupSpansFromStarts(starts, 12L)
-    }),
-
-    // 20k. corpus repetition profile at power-of-two probe lengths
-    // (the Lee et al. "how much text is duplicated" table): per probe —
-    // duplicated window starts, DISTINCT duplicated substrings, and the
-    // exact character coverage of the duplicated regions. One rank
-    // build to 2^6 feeds all probes (a length-2^j window is duplicated
-    // iff its round-j rank repeats — zero extra work per probe beyond
-    // the groupBy). FULL oracle: literal substr grams per probe.
-    "q176_repetition_profile" -> ((s, dir) => {
-      val (r3, lens, _) = exsubShared(s, dir)
-      graft.dedup.ExactSubstr.repetitionProfileFrom(s, r3, 3, lens,
-        Seq(8L, 16L, 32L, 64L), releaseBase = false)
-    }),
-
-    // 20l. ExactSubstr span REMOVAL — the Lee et al. 2022 deployment
-    // step (VERDICT r18 task 5): the corpus re-emitted with duplicated
-    // spans CUT, keep-first-occurrence (per duplicated window content
-    // the smallest (doc_id, off) keeps; every position covered by a
-    // non-keeper duplicated window is removed; each doc's removed
-    // ranges union into disjoint islands and the kept segments
-    // re-concatenate in one codegen fold). FULL oracle: DuckDB ranks
-    // the literal 12-gram occurrences by (doc_id, i), merges the
-    // non-first extents into islands, and rebuilds each text with
-    // string_agg over the complement segments — byte-identical
-    // reconstruction.
-    "q178_remove_dup_spans" -> ((s, dir) => {
-      val (_, _, starts) = exsubShared(s, dir)
-      graft.dedup.ExactSubstr.removeDupSpansFromStarts(
-        Tables(s, dir).documents, "doc_id", "text", starts, 12L)
-    }),
-
-    // 20e. SemDeDup semantic dedup: deterministic k-means clustering +
-    // within-cluster smaller-id cosine drop — full kept/dropped
-    // disposition [rows-only; Round6Spec gates planted-dup recovery and
-    // byte-identical results across partitionings]
-    "q84_semdedup" -> ((s, dir) => {
-      val e = Tables(s, dir).embeddings
-      // k tracks corpus size (≈1.5·√n) so the within-cell pair stage
-      // (Σ|cell|² ≈ n²/k) stays sub-quadratic — the SemDeDup
-      // k-grows-with-N rule. Assignment picks its plan by regime: the
-      // FLAT broadcast pass is n·k cosines — the right plan while k is
-      // small (its one shuffle beats the probe plumbing) but n·k =
-      // n^1.5 under this k rule, so it grows 1000× across two decades;
-      // past k≈256 the TWO-LEVEL quantizer (n·√k·(1+probe) cosines,
-      // same single shuffle as of r7) is strictly cheaper and becomes
-      // the plan — the 100× scale probe runs through it. Round7Spec
-      // gates probed ≡ flat at full probe and partial-probe recovery.
-      // n from the unspread scan — see tableRowCount (VERDICT r10)
-      val k = math.max(32, (1.5 * math.sqrt(
-        tableRowCount(s, dir, "embeddings").toDouble)).toInt)
-      SemDedup.dedup(e, k = k, iters = 2, eps = 0.9,
-        probe = if (k > 256) 2 else 0)
-    }),
-
-    // 20e-b. the SemDeDup DROP POLICY in isolation, oracle-backed:
-    // caller-supplied centroids (a deterministic id-mod slice of the
-    // corpus — both engines select the identical set), flat argmax
-    // assignment, within-cell smaller-id cosine drop. The DuckDB oracle
-    // replays the double-precision cosines with list_reduce lambdas —
-    // sequential left-to-right accumulation, the same IEEE op order as
-    // the JVM loop, so every double (and thus every >= eps decision and
-    // (cos, cid) tie-break) is bit-identical; outputs stay
-    // integer/boolean. Centroid TRAINING remains spec-gated (q84).
-    "q84b_semdedup_fixed" -> ((s, dir) => {
-      val e = Tables(s, dir).embeddings
-      val cents = e.where(col("vec_id") % 37 === 0)
-        .select(col("vec_id").as("cid"), col("embedding").as("c_vec"))
-      SemDedup.dedupWith(e, cents, eps = 0.9)
-    }),
-
-    // 20e-c. SemDeDup TRAINING oracled — one Lloyd iteration from the
-    // fixed q84b init, end-to-end: assign to the init, recompute each
-    // live cell's centroid as the exact DECIMAL(27,9) per-dimension
-    // mean cast to float (the engine's reproducibility contract), then
-    // run the full drop disposition against the TRAINED centroids. The
-    // oracle composes the q84b cosine/tie-break replay with the q65
-    // exact-decimal mean replay (scale-10 half-up), so the refinement
-    // arithmetic itself is oracle-checked — only the hash-sampled init
-    // + multi-iteration composition stays spec-gated (q84).
-    "q84c_semdedup_train1" -> ((s, dir) => {
-      val e = Tables(s, dir).embeddings
-      // k follows q84's own k ∝ √n regime (VERDICT r18 task 3): the
-      // r18 fixed 256-cap made assignment linear but broke the SemDeDup
-      // contract (k must track N so mean cell size stays constant,
-      // else the pair stage silently grows n²/k). K = ⌈1.5·√n⌉
-      // computes IDENTICALLY in both engines (count, IEEE sqrt/mul/
-      // ceil are all correctly rounded doubles), the init stays the
-      // pure id-arithmetic slice vec_id%37==0 ∧ vec_id<37K, and past
-      // K = 256 BOTH the Lloyd step's assignment and the final
-      // disposition route through the two-level coarse quantizer —
-      // the q84 regime switch, now applied to refine() as well
-      // (Round7Spec gates probed ≡ flat at full probe). At the oracle
-      // SFs K < 256, so the oracle replays the flat argmax path
-      // bit-for-bit.
-      val n = tableRowCount(s, dir, "embeddings")
-      val bigK = math.ceil(1.5 * math.sqrt(n.toDouble)).toLong
-      val probe = if (bigK > 256) 2 else 0
-      val cents0 = e.where(col("vec_id") % 37 === 0 &&
-          col("vec_id") < lit(37L * bigK))
-        .select(col("vec_id").as("cid"), col("embedding").as("c_vec"))
-      SemDedup.dedupWith(e,
-        SemDedup.refine(e, cents0, iters = 1, probe = probe),
-        eps = 0.9, probe = probe)
-    }),
-
-    // 21. brute-force cosine top-k (rank-only output)
-    "q21_ann_bruteforce" -> ((s, dir) => {
-      val e = Tables(s, dir).embeddings
-      BruteForce.topK(e, e.where(col("vec_id") < 10), k = 5)
-    }),
-
-    // 22. banded-LSH ANN measured against the exact top-k: per-query
-    // recall@5 [rows-only; floor asserted in AnnSpec]
-    "q22_ann_lsh" -> ((s, dir) => {
-      val e = Tables(s, dir).embeddings
-      val queries = e.where(col("vec_id") < 50)
-      LshAnn.recallAtK(
-        LshAnn.topK(e, queries, k = 5, planes = 4, tables = 16),
-        BruteForce.topK(e, queries, k = 5), k = 5)
-    }),
-
-    // 22j. JL random-sign projection ANN — the third classical scale
-    // lever beside IVF (q32: prune cells) and SQ8 (q147: shrink rows):
-    // project to 32 exact-integer components via a hash-DEFINED ±1
-    // matrix (nothing trained or stored), shortlist on the integer
-    // projected dot, exact-cosine re-rank of the shortlist only.
-    // Reported as per-query recall@5 vs the exact ranking (the q22
-    // mold). The synthetic embeddings are near-uniform on the sphere —
-    // the JL WORST case (no cluster structure to preserve) — so 32/64
-    // dims + a 100-row shortlist lands ~80% recall here; real text
-    // embeddings sit far below the JL bound. FULL oracle: milli
-    // quantization, every projection sign (hash parity), the shortlist
-    // ranking, and the re-rank replay in SQL.
-    "q162_ann_jl" -> ((s, dir) => {
-      val e = Tables(s, dir).embeddings
-      val queries = e.where(col("vec_id") < 50)
-      LshAnn.recallAtK(
-        graft.ann.JlAnn.topK(e, queries, k = 5, dims = 32,
-          shortlist = 100),
-        BruteForce.topK(e, queries, k = 5), k = 5)
-    }),
-
-    // 22k. distributed PCA (first principal component, power
-    // iteration) — the embedding-prep step before SemDedup/ANN
-    // sharpening ("all-but-the-top"): milli-quantize, center by cross
-    // multiplication (no mean rounding) + one exact floor back to
-    // milli units, one vid-co-partitioned Gram aggregation whose d²
-    // blowup is map-local (map-side combine caps the shuffle at
-    // d²·partitions rows), rescale the Gram to ~1e9 cells, then two
-    // exact power steps renormalized by the ⌊max|w|/1e6⌋+1 floor
-    // divisor. R17 REDESIGN (verdict task 1): EVERY intermediate is a
-    // 63-bit signed BIGINT on both engines — the q127 r14 remedy — so
-    // the oracle never touches HUGEINT `%`/`//` or DECIMAL(38,0).
-    // Sign fixed by the all-ones init; the Rayleigh gauge (λ in
-    // Gram-scale units) rides along. FULL oracle: the Gram and both
-    // iterations unrolled in SQL (the q65 two-Lloyd-step precedent).
-    "q164_pca_power" -> ((s, dir) =>
-      graft.ann.Pca.topComponent(Tables(s, dir).embeddings, "vec_id",
-        "embedding", iters = 2)),
-
-    // 22k-b. the "all-but-the-top" TRANSFORM (verdict r16 next-task 6 —
-    // what q164's component is FOR): sharpen every embedding by
-    // projecting pc1 out, x ← x − ⌊⟨m,v⟩·v_j/⟨v,v⟩⌋ in exact milli
-    // integers. The ≤d loadings collect to the driver (SemDedup-
-    // codebook posture) and re-enter as literals, so the transform is
-    // ONE map-side pass of codegen array lambdas — zero added
-    // shuffles. Output is the per-vector audit: dot_before/dot_after
-    // (the dominant direction provably vanishes — after is the floor
-    // residual) and the milli norms before/after (the variance pc1
-    // carried). FULL oracle: the q164 replay composed with the
-    // transform and both audits.
-    "q165_remove_top" -> ((s, dir) => {
-      val e = Tables(s, dir).embeddings
-      graft.ann.Pca.removeTopAudit(e, "vec_id", "embedding",
-        graft.ann.Pca.topComponent(e, "vec_id", "embedding", iters = 2))
-    }),
-
-    // 22k-c. the sharpened-corpus CONSUMER, end-to-end: pc1 →
-    // removeTop → 64-bit sign-random-projection signature of the
-    // SHARPENED milli vectors (hash-parity signs, nothing stored —
-    // the q162 JL machinery) → the capped pigeonhole Hamming blocking
-    // (q148 machinery) → per-vector near-dup counts. This is the
-    // SemDedup-prep shape the all-but-the-top literature motivates:
-    // dedup signatures sharpen once the hub direction is gone. FULL
-    // oracle: q164 + removeTop + every projection sign + the
-    // engine-faithful capped blocking + the count fold.
-    "q166_sharpened_srp" -> ((s, dir) => {
-      val e = Tables(s, dir).embeddings
-      val sh = graft.ann.Pca.removeTop(e, "vec_id", "embedding",
-        graft.ann.Pca.topComponent(e, "vec_id", "embedding", iters = 2))
-      val pow2 = array((0 until 64).map(i => lit(1L << i)): _*)
-      // the signature frame feeds BOTH the pair blocking and the final
-      // join — checkpoint it (id + 8-byte sig per vector) or the whole
-      // sharpen+project pipeline executes twice per consumer
-      val sig = sh.select(col("vec_id"),
-        aggregate(zip_with(F.jlProject(col("sharp"), 64), pow2,
-          (p, b) => when(p > lit(0L), b).otherwise(lit(0L))),
-          lit(0L), (a, x) => a + x).as("srp_sig"))
-        .localCheckpoint(true)
-      val pairs = SimHashDedup.hammingPairs(sig, "vec_id", "srp_sig",
-        maxHamming = 3, maxBucket = 1024)
-      val sided = pairs.select(col("id_a").as("vec_id"),
-          col("id_b").as("partner"))
-        .union(pairs.select(col("id_b"), col("id_a")))
-      sig.join(sided.groupBy("vec_id")
-          .agg(count(lit(1)).as("n_dups"), min("partner").as("min_partner")),
-        Seq("vec_id"), "left")
-        .select(col("vec_id"), col("srp_sig"),
-          coalesce(col("n_dups"), lit(0L)).as("n_dups"), col("min_partner"))
-    }),
-
-    // 22k-e. the MEASURED all-but-the-top A/B (VERDICT r17 next-task
-    // 7 — q166 consumes sharpened vectors; this query proves the
-    // sharpening earns its pass). The corpus embeddings are
-    // near-isotropic, so the hub regime is PLANTED by fixture
-    // arithmetic (the q95/q111 doctrine — the oracle rebuilds every
-    // bit): each vector gains a dominant common-direction component
-    // with per-vector magnitude 3+id%7 (a VARIANCE hub — survives the
-    // PCA centering, unlike a constant shift), and every odd id is its
-    // even neighbor's near-duplicate (same base embedding, ±0.001-line
-    // perturbation). The SAME 64-bit SRP + capped-Hamming blocking then
-    // runs over the raw milli vectors and the sharpened ones: raw
-    // signatures collapse onto the hub's sign pattern (an all-pairs
-    // candidate flood at small corpora, a total occupancy-cap wipeout
-    // past bucket scale — both measured); sharpened signatures recover
-    // exactly the planted pairs. Truth is the planted (2k, 2k+1) set —
-    // id arithmetic, zero cosine work, constant per row at any scale.
-    // FULL oracle: fixture + q164 + removeTop + both arms' projections
-    // + blocking + the planted-truth fold.
-    "q177_srp_ab" -> ((s, dir) => {
-      val e = Tables(s, dir).embeddings
-      val fixture = e.select(col("vec_id"),
-          (col("vec_id") - pmod(col("vec_id"), lit(2))).as("src_id"))
-        .join(e.select(col("vec_id").as("src_id"),
-          col("embedding").as("src_emb")), Seq("src_id"))
-        .select(col("vec_id"), expr(
-          "transform(sequence(1, 64), j -> " +
-            "cast(element_at(src_emb, j) as double) " +
-            "+ (3.0 + cast(vec_id % 7 as double)) " +
-            "+ 0.001 * cast((vec_id + j) % 5 - 2 as double))").as("emb"))
-        .localCheckpoint(true)
-      val comp = graft.ann.Pca.topComponent(fixture, "vec_id", "emb",
-        iters = 2)
-      val rawm = graft.ann.Pca.milliVectors(fixture, "vec_id", "emb")
-      val shm = graft.ann.Pca.removeTop(fixture, "vec_id", "emb", comp)
-        .select(col("vec_id"), col("sharp").as("m"))
-      val truth = fixture.where(pmod(col("vec_id"), lit(2)) === 0)
-        .select(col("vec_id").as("id_a"),
-          (col("vec_id") + 1).as("id_b"))
-        .join(fixture.select(col("vec_id").as("id_b")),
-          Seq("id_b"), "left_semi")
-        .localCheckpoint(true)
-      def armRow(name: String, vecs: DataFrame): DataFrame = {
-        val pow2 = array((0 until 64).map(i => lit(1L << i)): _*)
-        // sig has ONE consumer (hammingPairs) — its r18 eager
-        // checkpoint bought nothing and cost a blocking job per arm
-        // (r19, guide §5: persist only what is reused)
-        val sig = vecs.select(col("vec_id"),
-          aggregate(zip_with(F.jlProject(col("m"), 64), pow2,
-            (p, b) => when(p > lit(0L), b).otherwise(lit(0L))),
-            lit(0L), (a, x) => a + x).as("srp_sig"))
-        // ONE aggregate reads off both counts (r20, guide §5): pairs is
-        // unique on (id_a, id_b) — hammingPairs ends in a groupBy on
-        // exactly that key — and truth is unique by construction, so a
-        // broadcast left join + count(_t) ≡ the truth∩pairs semi-join
-        // count, and the pairs pipeline now has ONE consumer: its r19
-        // eager checkpoint (a blocking job per arm) is gone
-        val pairs = SimHashDedup.hammingPairs(sig, "vec_id", "srp_sig",
-          maxHamming = 3, maxBucket = 1024)
-        val nc = pairs.join(broadcast(truth.withColumn("_t", lit(1))),
-            Seq("id_a", "id_b"), "left")
-          .agg(count(lit(1)).as("n_candidates"),
-            count(col("_t")).as("n_hits"))
-        val nt = truth.agg(count(lit(1)).as("n_planted"))
-        nc.crossJoin(broadcast(nt))
-          .select(lit(name).as("arm"), col("n_candidates"),
-            col("n_planted"), col("n_hits"),
-            expr("(1000000 * n_hits) div greatest(n_candidates, 1)")
-              .as("precision_x1e6"),
-            expr("(1000000 * n_hits) div greatest(n_planted, 1)")
-              .as("recall_x1e6"))
-      }
-      armRow("raw", rawm).unionByName(armRow("sharp", shm))
-    }),
-
-    // 22k-d. multi-component PCA by Hotelling deflation (verdict r16
-    // missing-item 3): after pc1, subtract λ·vvᵀ/⟨v,v⟩ from the Gram
-    // in the staged-BIGINT discipline and power-iterate again — the
-    // constant /64 restage keeps every product < 2⁶³ at any component
-    // count and makes the per-component gauges comparable (×64^(c−1)
-    // back to first-round units). The deflation loop is driver-side
-    // over nComponents; each round touches only the d²-row Gram. FULL
-    // oracle: both components, the projector, the deflated Gram, and
-    // both gauges unrolled.
-    "q167_pca_deflate" -> ((s, dir) =>
-      graft.ann.Pca.topComponents(Tables(s, dir).embeddings, "vec_id",
-        "embedding", nComponents = 2, iters = 2)),
-
-    // 23. token counting (whitespace + BPE-ish estimate)
-    "q23_token_count" -> ((s, dir) =>
-      Tables(s, dir).documents.select(
-        col("doc_id"),
-        TextStats.tokenCount(col("text")).as("n_tokens"),
-        TextStats.bpeTokenEstimate(col("text")).as("n_bpe_est"))),
-
-    // 24. language-id heuristic, confusion counts vs labels
-    "q24_lang_id" -> ((s, dir) =>
-      Tables(s, dir).documents
-        .select(col("lang"), TextStats.langId(col("text")).as("predicted"))
-        .groupBy(col("lang"), col("predicted"))
-        .agg(count(lit(1)).as("n"))),
-
-    // 25. quality scoring (punctuation / stopword density)
-    "q25_quality" -> ((s, dir) =>
-      Tables(s, dir).documents.select(
-        col("doc_id"),
-        TextStats.punctCount(col("text")).as("n_punct"),
-        TextStats.stopwordHits(col("text")).as("n_stop"),
-        TextStats.qualityScore(col("text")).as("quality"))),
-
-    // 26. rolling-hash document fingerprint [rows-only; unit-gated]
-    "q26_fingerprint" -> ((s, dir) =>
-      Tables(s, dir).documents.select(
-        col("doc_id"),
-        F.fingerprint(F.tokensLower(col("text"))).as("fp"))),
-
-    // 27. multimodal binary plumbing with stubbed decode
-    "q27_multimodal_meta" -> ((s, dir) => {
-      val blobs = BinaryPipeline.withBlob(Tables(s, dir).documents, "doc_id", "text")
-      BinaryPipeline.extractMeta(s, blobs).toDF()
-        .select("doc_id", "n_bytes", "fake_width")
-    }),
-
-    // 28. '#'-delimited CSV ingest with explicit schema + errors→null date
-    // coercion (the reference's entry point, helpers.py:183-197)
-    "q28_csv_ingest" -> ((s, dir) => {
-      val df = GraftCsv.read(s, csvFixture(s, dir), csvOrdersSchema,
-        delimiter = "#", timestampCols = Seq("o_orderdate"))
-      GraftCsv.goodRecords(df)
-        .groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("o_orderdate").isNull, 1L).otherwise(0L))
-            .as("n_bad_date"),
-          xsum(col("o_totalprice")).as("total"))
-    }),
-
-    // 29c. ZIP-archived CSV ingest — the reference's real entry format
-    // (download ZIP → extract → read_csv, helpers.py:22-31) as a streaming
-    // ZipInputStream → same PERMISSIVE parse; identical rows to q28, so the
-    // aggregation and oracle match q28's exactly
-    "q59_zip_ingest" -> ((s, dir) => {
-      val df = GraftCsv.readZip(s, zipFixture(s, dir), csvOrdersSchema,
-        delimiter = "#", timestampCols = Seq("o_orderdate"))
-      GraftCsv.goodRecords(df)
-        .groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("o_orderdate").isNull, 1L).otherwise(0L))
-            .as("n_bad_date"),
-          xsum(col("o_totalprice")).as("total"))
-    }),
-
-    // 38. point-in-polygon spatial join (the reference's shapefile dim as a
-    // polygon layer): grid-cell blocking + integer-exact ray casting, all
-    // reproduced by a pure-SQL DuckDB oracle over the same fixtures
-    "q60_spatial_join" -> ((s, dir) => {
-      val t = Tables(s, dir)
-      SpatialJoin.pointInPolygon(pointFixture(t), "pt_id", col("px"),
-        col("py"), polygonFixture(t), "poly_id", col("vertices"),
-        cellSize = 64L)
-        .groupBy(col("poly_id"))
-        .agg(count(lit(1)).as("n_inside"), min(col("pt_id")).as("min_pt"),
-          max(col("pt_id")).as("max_pt"))
-    }),
-
-    // 29. code cleanse with the name-containment dimension fallback lookup
-    // (helpers.py:273) — all five statuses populated
-    "q29_name_lookup" -> ((s, dir) => {
-      val t = Tables(s, dir)
-      CodeCorrection
-        .classifyWithLookup(lookupFixture(t), "c_custkey", col("rawcode"),
-          col("fb"), col("place"),
-          t.nation.select(col("n_name"),
-            concat(lpad(col("n_nationkey").cast("string"), 2, "0"),
-              lit("00000")).as("n_code")),
-          "n_name", "n_code", width = 7, prefixLen = 2,
-          validPrefixes = validCodePrefixes)
-        .groupBy(col("status"))
-        .agg(count(lit(1)).as("n"), countDistinct(col("code")).as("n_codes"))
-    }),
-
-    // 30. two-level pivot with the de-Romanized column-rename pass
-    // (SURVEY §2.11's promised rename; reference helpers.py:431,485-533)
-    "q30_pivot2" -> ((s, dir) => {
-      val li = Tables(s, dir).lineitem
-        .withColumn("roman_cat", F.toRoman(col("l_linenumber").cast("int")))
-      PivotAggregates.countPivot2(li, "l_returnflag", "l_linestatus",
-        Seq("O", "F"), "roman_cat", (1 to 7).map(RomanCodec.toRomanStr))
-    }),
-
-    // 31. simhash near-dup pairs (Hamming-ball, pigeonhole-blocked)
-    // [rows-only; invariants in DedupSpec]
-    "q31_simhash_pairs" -> ((s, dir) =>
-      SimHashDedup.pairs(Tables(s, dir).documents, "doc_id", "text",
-        maxHamming = 3)),
-
-    // 32. IVF ANN (deterministic hash-sampled centroids, nProbe search),
-    // reported as per-query recall@5 vs the exact top-k [rows-only;
-    // AnnSpec asserts the floor]
-    "q32_ann_ivf" -> ((s, dir) => {
-      val e = Tables(s, dir).embeddings
-      val queries = e.where(col("vec_id") < 50)
-      LshAnn.recallAtK(
-        IvfAnn.topK(e, queries, k = 5, nCentroids = 16, nProbe = 8),
-        BruteForce.topK(e, queries, k = 5), k = 5)
-    }),
-
-    // 22c. product-quantization ANN: 32x-compressed codes + ADC table
-    // lookups, reported as per-query recall@5 vs the exact top-k
-    // [rows-only; AnnSpec gates the floor and the zero-quantization-error
-    // exactness property]
-    "q65_pq_ann" -> ((s, dir) => {
-      val e = Tables(s, dir).embeddings
-      val queries = e.where(col("vec_id") < 50)
-      // the index trains ONCE per (session, sf) — the Bpe.train/IvfAnn.
-      // buildIndex protocol: training is one-time setup, search is the
-      // recurring per-query-batch cost the bench measures
-      val (cb, codes) = memoized(s, s"pq|$dir") {
-        graft.ann.PqAnn.train(e, m = 8, ksub = 16, dim = 64, lloydIters = 2)
-      }
-      LshAnn.recallAtK(
-        graft.ann.PqAnn.search(cb, codes, e, queries, k = 5, m = 8,
-          dim = 64, rerank = 50),
-        BruteForce.topK(e, queries, k = 5), k = 5)
-    }),
-
-    // 33. single-pass column profiler (counts / distinct / min / max per
-    // column in ONE scan)
-    "q33_profile" -> ((s, dir) =>
-      Profiler.profile(Tables(s, dir).orders,
-        Seq("o_orderkey", "o_custkey", "o_orderstatus"))),
-
-    // 34. salted skew join (dim replicated ×buckets, fact salted) — result
-    // must equal the plain join, which is exactly what the oracle checks
-    "q34_salted_join" -> ((s, dir) => {
-      val t = Tables(s, dir)
-      SkewJoin
-        .salted(t.orders, t.customer.select("c_custkey", "c_mktsegment"),
-          "o_custkey", "c_custkey", col("o_orderkey"), buckets = 8)
-        .groupBy(col("c_mktsegment"))
-        .agg(count(lit(1)).as("n"), xsum(col("o_totalprice")).as("total"))
-    }),
-
-    // 35. REAL frame sampling — the last multimodal stub retired: the
-    // engine genuinely walks the APNG animation it assembled (acTL /
-    // fcTL / fdAT chunk walk, per-chunk CRC-32, one zlib stream per
-    // frame, unfilter) and keeps every 2nd frame up to 4, emitting
-    // decoded RGB bytes. The oracle replays the frame-count arithmetic
-    // (2–4 frames per clip, 9×8×3 bytes each); corrupt clips yield 0
-    // frames, observably. mapPartitions batch shape, bounded explosion.
-    "q35_frame_sample" -> ((s, dir) => {
-      val docs = Tables(s, dir).documents
-      val blobs = docs.select(col("doc_id"),
-        F.clipFixture(col("doc_id")).as("blob"))
-      val f = BinaryPipeline.extractFrames(s, blobs, every = 2, maxFrames = 4)
-        .toDF()
-        .groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_frames"),
-          sum(length(col("frame_bytes"))).as("total_frame_bytes"))
-      docs.select("doc_id").join(f, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("n_frames"), lit(0L)).as("n_frames"),
-          coalesce(col("total_frame_bytes"), lit(0L))
-            .as("total_frame_bytes"))
-    }),
-
-    // 27c. REAL image-container header decode (PNG IHDR / JPEG SOF marker
-    // walk — MediaHeader via StaticInvoke, whole-stage codegen, no UDF):
-    // the first non-stub slice of the multimodal decode path; corrupt /
-    // truncated blobs produce NULLs, never a throw
-    "q83_image_headers" -> ((s, dir) => {
-      val blobs = imageBlobFixture(Tables(s, dir).documents)
-      blobs.select(col("doc_id"),
-        F.imageFormat(col("blob")).as("format"),
-        F.imageWidth(col("blob")).cast("long").as("width"),
-        F.imageHeight(col("blob")).cast("long").as("height"))
-    }),
-
-    // 27 (completed). REAL pixel decode — BMP stride/orientation handling
-    // plus the full PNG path (chunk walk, per-chunk CRC-32, multi-IDAT
-    // zlib inflate, all five scanline filters) — over fixture images whose
-    // pixel values are pure doc_id arithmetic: the oracle recomputes every
-    // statistic WITHOUT decoding, while Spark must genuinely invert the
-    // container encoding it assembled (PixelCodec). This retires the last
-    // stub in the multimodal path.
-    "q95_pixel_stats" -> ((s, dir) => {
-      val blobs = Tables(s, dir).documents
-        .select(col("doc_id"), F.pixelFixture(col("doc_id")).as("blob"))
-      val px = F.pixelStats(col("blob"))
-      blobs.select(col("doc_id"),
-        F.imageFormat(col("blob")).as("format"),
-        element_at(px, 1).as("n_pixels"),
-        element_at(px, 2).as("sum_r"),
-        element_at(px, 3).as("sum_g"),
-        element_at(px, 4).as("sum_b"),
-        element_at(px, 5).as("n_nonzero"))
-    }),
-
-    // 36g. sorted-neighborhood ER blocking: one block-keyed sort, w−1
-    // stacked lead() windows, linear candidate count, Levenshtein verify
-    // in the projection — the classic alternative to q48's q-gram blocks
-    "q91_sorted_neighborhood" -> ((s, dir) =>
-      SortedNeighborhood.pairs(Tables(s, dir).customer,
-        idCol = col("c_custkey"), blockCol = col("c_mktsegment"),
-        keyCol = col("c_name"), nameCol = col("c_name"),
-        w = 3, maxDist = 2)),
-
-    // 48. end-to-end corpus-prep funnel (clean → gate → image gate →
-    // exact dedup → near-dup keeper → decontaminate → pack), stages
-    // counted in one lazy frame. FULL oracle as of r10: the stage counts
-    // are replayed in DuckDB by composing the per-stage oracles (see the
-    // q90 oracleSql comment); PipelineSpec additionally gates the
-    // composition laws. The multimodal branch rides the q83 blob fixture:
-    // docs with corrupt/truncated blobs (doc_id % 5 = 2) drop at
-    // 1b_image_gate, survivors carry (img_format, img_w, img_h) onto
-    // the packed output.
-    "q90_corpus_prep" -> ((s, dir) => {
-      // the prep (its eagerly-materialized CC loop + persisted stage
-      // frames) is memoized per (session, sf) — the q78 BM25-index
-      // precedent: the warm-up run pays the one-time funnel build,
-      // timed runs re-execute the six stage counts over the persisted
-      // stage frames. Exactly ONE prep lives per (session, sf), so
-      // repeated invocations never accumulate cache blocks (library
-      // callers get the same guarantee via CorpusPrep.release).
-      val prep = memoized(s, s"q90_prep|$dir") {
-        val d = Tables(s, dir).documents
-        Pipeline.prepareCorpus(d, "doc_id", "text",
-          bench = d.where(col("doc_id") < 40)
-            .select(col("doc_id"), substring(col("text"), 1, 150).as("text")),
-          benchId = "doc_id", benchText = "text",
-          images = Some(imageBlobFixture(d)))
-      }
-      prep.funnel
-    }),
-
-    // 47b. per-group min-max feature scaling to integer basis points —
-    // one shuffle, NO sort (unbounded-frame window min/max)
-    "q88_minmax_scale" -> ((s, dir) =>
-      FeatureScale.minMaxBp(Tables(s, dir).customer,
-        groupCol = col("c_mktsegment"),
-        // double → DECIMAL(18,2) → cents: exact on both engines (the
-        // float rule — a raw double*100 cast truncates vs rounds
-        // differently across engines)
-        valueCol = (col("c_acctbal").cast(DecimalType(18, 2)) * 100)
-          .cast("long"),
-        idCol = col("c_custkey"))),
-
-    // 47c. per-group equal-frequency binning (quantile discretization)
-    // via ntile over the deterministic (value, id) order
-    "q89_equal_freq_bins" -> ((s, dir) =>
-      FeatureScale.equalFreqBins(Tables(s, dir).customer,
-        groupCol = col("c_mktsegment"),
-        valueCol = (col("c_acctbal").cast(DecimalType(18, 2)) * 100)
-          .cast("long"),
-        idCol = col("c_custkey"), bins = 4)),
-
-    // 46b. point-in-time-correct feature join: per purchase label, the
-    // user's trailing click/view counts over 1h/24h look-backs, strictly
-    // before the label instant — one shuffle, one sort, all four features
-    "q87_pit_features" -> ((s, dir) => {
-      val e = Tables(s, dir).events
-      PitFeatures.trailingCounts(
-        labels = e.where(col("event_type") === "purchase"),
-        labelId = col("event_id"), labelUser = col("user_id"),
-        labelTs = col("ts"),
-        activity = e.where(col("event_type").isin("click", "view")),
-        actUser = col("user_id"), actTs = col("ts"),
-        actClass = col("event_type"),
-        classes = Seq("click", "view"),
-        windows = Seq("1h" -> 3600L, "24h" -> 86400L))
-    }),
-
-    // 45. deterministic integer PageRank over the customer link fixture
-    // (3 damped iterations in micro-units; the corpus-curation authority
-    // signal) — bit-identical to the oracle's unrolled CTE iterations
-    "q86_pagerank" -> ((s, dir) =>
-      graft.graph.PageRank.ranks(linkFixture(Tables(s, dir)),
-        "src", "dst", iters = 3)),
-
-    // 45b. PageRank with CANONICAL dangling-mass redistribution (VERDICT
-    // r10 task 4; default stays off, q86's oracle untouched): the q86
-    // link graph extended with five absorbing sink nodes (c%3=0 →
-    // nmax+1+(c%5), no out-edges) so the redistribution is load-bearing;
-    // each iteration's damped dangling mass spreads ⌊D/n⌋ to every node
-    // with the remainder going +1 to the lowest ids — integer-exact, and
-    // the oracle replays all three iterations in unrolled CTEs, with the
-    // engine's ROW_NUMBER id index replayed verbatim (custkeys start at
-    // 0, so idx ≠ id — the remainder boundary proved it on first verify).
-    "q102_pagerank_dangling" -> ((s, dir) => {
-      val t = Tables(s, dir)
-      val nmax = t.customer.agg(max(col("c_custkey")).cast("long").as("nmax"))
-      val sinks = t.customer.crossJoin(broadcast(nmax))
-        .where(col("c_custkey") % 3 === 0)
-        .select(col("c_custkey").cast("long").as("src"),
-          (col("nmax") + 1 + col("c_custkey") % 5).cast("long").as("dst"))
-      graft.graph.PageRank.ranks(linkFixture(t).unionAll(sinks),
-        "src", "dst", iters = 3, redistributeDangling = true)
-    }),
-
-    // 38b. geometry-typed warehouse dim (reference helpers.py:743
-    // shapefile→WKT→GEOGRAPHY analog): WKT text + bbox pruning columns,
-    // built from the q60 polygon fixtures with pure column expressions —
-    // the oracle rebuilds the WKT byte-for-byte in SQL
-    "q85_geometry_dim" -> ((s, dir) =>
-      GeometryDim.asGeometryColumns(polygonFixture(Tables(s, dir)),
-        "poly_id", col("vertices"))),
-
-    // 38c. ESRI .shp container parse (reference helpers.py:743 reads
-    // powiaty.shp via geopandas — the one ingest step q85 took as WKT
-    // fixtures): assemble a real single-record shapefile per nation from
-    // the q85 vertex arithmetic, then genuinely invert the binary layout
-    // (BE framing, LE shape body, word-unit lengths, ring de-closing,
-    // bbox cross-check) via the ShpCodec kernel into the same
-    // GeometryDim WKT+bbox dim — the q85 oracle extended one step left.
-    // n_records/n_vertices come from the PARSE, not the fixture.
-    "q96_shapefile" -> ((s, dir) => {
-      val nk = col("n_nationkey").cast("long")
-      val parsed = Tables(s, dir).nation
-        .select(nk.as("poly_id"), F.shpRecords(F.shpFixture(nk)).as("recs"))
-        .select(col("poly_id"), explode(col("recs")).as("r"))
-        .select(col("poly_id"), col("r.recno").cast("long").as("recno"),
-          transform(col("r.ring"), p => struct(
-            element_at(p, 1).cast("long").as("x"),
-            element_at(p, 2).cast("long").as("y"))).as("vertices"))
-      val xs = transform(col("vertices"), v => v.getField("x"))
-      val ys = transform(col("vertices"), v => v.getField("y"))
-      parsed.select(col("poly_id"), col("recno"),
-        size(col("vertices")).cast("long").as("n_vertices"),
-        GeometryDim.toWkt(col("vertices")).as("wkt"),
-        array_min(xs).as("xmin"), array_min(ys).as("ymin"),
-        array_max(xs).as("xmax"), array_max(ys).as("ymax"))
-    }),
-
-    // 29c. WARC (ISO 28500) web-archive ingest — the Common Crawl
-    // container, the wire format of the LLM-corpus side of this engine
-    // (the ZIP/SHP treatment applied to web captures): 4 real archives
-    // assembled from doc_id arithmetic (one gzip'd with concatenated
-    // per-record members), stream-parsed back by WarcCodec, HTTP
-    // payloads split, torn captures surfacing as NULLs. The oracle
-    // replays every emitted field from the documents table. Scale:
-    // parallelism = archive count (one task streams one archive,
-    // constant memory) — the readZip contract.
-    "q97_warc_ingest" -> ((s, dir) => {
-      val warcDir = warcFixture(s, dir)
-      GraftWarc.read(s, s"$warcDir/*.warc*")
-        .where(col("warc_type") === "response")
-        .select(
-          regexp_extract(col("target_uri"), "/doc/([0-9]+)$", 1)
-            .cast("long").as("doc_id"),
-          col("http_status"),
-          col("content_length"),
-          col("warc_date").as("warc_ts"),
-          length(col("body")).cast("long").as("n_body_bytes"))
-    }),
-
-    // 29d. outlink host extraction — the WARC → host-authority-graph
-    // bridge (TextStats.outlinkHosts feeds PageRank's edge shape): hrefs
-    // extracted map-side from a deterministic dirty-HTML fixture (one
-    // absolute anchor per doc, a second for doc_id%3=0 — colliding hosts
-    // when 6·doc_id ≡ 0 mod 20 exercise the count — and a RELATIVE link
-    // for doc_id%5=1 that must drop), one narrow (doc_id, host) shuffle.
-    // Oracle replays the same regexp extraction in DuckDB — parse vs
-    // parse, not fixture arithmetic.
-    "q98_outlink_hosts" -> ((s, dir) => {
-      val id = col("doc_id")
-      val html = concat(col("text"),
-        lit(" <a href=\"http://host"), (id % 20).cast("string"),
-        lit(".example/p/"), id.cast("string"), lit("\">x</a>"),
-        when(id % 3 === 0,
-          concat(lit(" <a href=\"http://host"), ((id * 7) % 20).cast("string"),
-            lit(".example/q/"), id.cast("string"), lit("\">y</a>")))
-          .otherwise(lit("")),
-        when(id % 5 === 1, lit(" <a href=\"/rel/p\">z</a>"))
-          .otherwise(lit("")))
-      TextStats.outlinkHosts(
-        Tables(s, dir).documents.select(id, html.as("html")),
-        "doc_id", "html")
-    }),
-
-    // 26m. encoding-garbage quality signal (the CCNet-style filter a
-    // WARC-fed corpus needs before any text op): U+FFFD tracers,
-    // double-encoded mojibake prefixes, stray C0 controls — planted
-    // deterministically (doc_id%13=4 → 2 replacement chars, %17=2 →
-    // 'Ã©Ã¨' = 2 mojibake prefixes, %19=3 → one BEL) and counted back by
-    // the same replace/regexp arithmetic in both engines. Map-side only:
-    // zero shuffles, scans prune to (doc_id, text).
-    "q99_encoding_quality" -> ((s, dir) => {
-      val id = col("doc_id")
-      val dirty = concat(col("text"),
-        when(id % 13 === 4, lit("��")).otherwise(lit("")),
-        when(id % 17 === 2, lit("Ã©Ã¨")).otherwise(lit("")),
-        when(id % 19 === 3, lit("\u0007")).otherwise(lit("")))
-      Tables(s, dir).documents.select(id,
-        TextStats.replacementCount(dirty).as("n_replacement"),
-        TextStats.mojibakeCount(dirty).as("n_mojibake"),
-        TextStats.controlCharCount(dirty).as("n_control"))
-        .withColumn("is_clean",
-          col("n_replacement") + col("n_mojibake") + col("n_control") === 0)
-    }),
-
-    // 29e. WARC body charset transcoding — the step between q97's raw
-    // bytes and every text operator (VERDICT r10 gap #1): charset from
-    // the HTTP Content-Type parameter, STRICT decode to UTF-8 (mislabeled
-    // bytes → NULL + reason, never half-mojibake), unknown labels →
-    // NULL + 'unsupported_charset'. Bodies planted in ISO-8859-1 /
-    // Windows-1250 / UTF-16 / unlabeled-UTF-8 by doc_id arithmetic; the
-    // oracle knows the decoded STRINGS, Spark must genuinely transcode
-    // the bytes. Map-side kernels — zero shuffles.
-    "q100_warc_transcode" -> ((s, dir) => {
-      val cs = WarcTranscode.charsetOf(col("content_type"))
-      // decode ONCE, derive the reason from the materialized text —
-      // failReason(body, cs) inline would run the strict decode twice
-      // per record (measured at the r11 100× probe)
-      GraftWarc.read(s, s"${warcCharsetFixture(s, dir)}/*.warc*")
-        .where(col("warc_type") === "response")
-        .select(
-          regexp_extract(col("target_uri"), "/doc/([0-9]+)$", 1)
-            .cast("long").as("doc_id"),
-          cs.as("charset"),
-          WarcTranscode.utf8Text(col("body"), cs).as("text_utf8"))
-        .withColumn("reason",
-          WarcTranscode.failReasonFromText(col("text_utf8"), col("charset")))
-    }),
-
-    // 48b. WEB-FED corpus-prep funnel — the r10 WARC pieces composed
-    // end-to-end as ONE lazy program (VERDICT r10 task 3): archive bytes
-    // (q97 parse) → HTTP bodies → strict charset transcode (q100) →
-    // encoding-garbage gate (q99 signals) → the q90 funnel (clean →
-    // lang/quality → exact dedup → near-dup keeper → decontaminate →
-    // pack). Full stage-count oracle: the ingest/encoding stages are
-    // doc_id arithmetic over the charset fixture; the inner stages are
-    // the q90 composed replay over the transcoded text (the suffixed
-    // strings BOTH engines can reconstruct).
-    "q101_warc_funnel" -> ((s, dir) => {
-      // memoized like q90: the CC loop materializes eagerly; one prep
-      // per (session, sf) so repeated invocations don't stack cache
-      val prep = memoized(s, s"q101_prep|$dir") {
-        val d = Tables(s, dir).documents
-        Pipeline.prepareWebCorpus(
-          GraftWarc.read(s, s"${warcCharsetFixture(s, dir)}/*.warc*"),
-          docId = regexp_extract(col("target_uri"), "/doc/([0-9]+)$", 1),
-          bench = d.where(col("doc_id") < 40)
-            .select(col("doc_id"), substring(col("text"), 1, 150).as("text")),
-          benchId = "doc_id", benchText = "text")
-      }
-      prep.funnel
-    }),
-
-    // 26n. HTML → visible-text extraction — the real extractor between a
-    // transcoded capture (q100) and the text operators (q98's href kernel
-    // reads the markup's LINKS; this reads its TEXT). The fixture wraps
-    // each doc in a full page exercising every documented rule: head
-    // (title/style/script) elision with raw-text scanning (the script
-    // contains `1<2` and a quoted `</div>`), a chrome comment, a
-    // quote-aware `>` inside an attribute, block-vs-inline line breaks,
-    // and the three entity classes (named/decimal/hex) — including
-    // `&lt;b&gt;` decoding to a literal `<b>` that must NOT be re-parsed
-    // (entity decode runs after tag removal). Oracle composes the
-    // expected text from documents.text; Spark must genuinely parse.
-    // Map-side kernel — zero shuffles.
-    "q103_html_extract" -> ((s, dir) => {
-      val id = col("doc_id")
-      val html = concat(
-        lit("<!DOCTYPE html><html><head><title>skip</title>" +
-          "<style>body{color:#000;}</style>" +
-          "<script>if(1<2){var s=\"</div>\";}</script></head><body>" +
-          "<!-- chrome: <p>never shown</p> -->" +
-          "<nav><a href=\"/home\">Home</a> | " +
-          "<a href=\"/about\" title=\"a>b\">About</a></nav><h1>Doc "),
-        id.cast("string"), lit("</h1><p>"), col("text"), lit("</p>"),
-        when(id % 3 === 0,
-          lit("<p>Extra &amp; entity &#233; &#x41; test</p>"))
-          .otherwise(lit("")),
-        when(id % 7 === 5,
-          lit("<p>&lt;b&gt;not a tag&lt;/b&gt;</p>")).otherwise(lit("")),
-        lit("<footer>Copyright &copy; 2024</footer></body></html>"))
-      Tables(s, dir).documents
-        .select(id, HtmlText.extract(html).as("page_text"))
-        .withColumn("n_lines",
-          size(split(col("page_text"), "\n")).cast("long"))
-    }),
-
-    // 26o. URL canonicalization + crawl dedup — the identity key a web
-    // corpus needs BEFORE content dedup (refetches of one page under
-    // many spellings collapse for free). Five planted spellings per
-    // canonical target (case/default-port, dot segments, %-encoding +
-    // fragment, userinfo + empty query) all canonicalize to the same
-    // string; doc_id%50 keys the target so ~10 captures share each.
-    // Kernel map-side; the dedup is ONE narrow shuffle on the canonical
-    // string (both window functions share the partition key).
-    "q104_url_canon" -> ((s, dir) => {
-      val id = col("doc_id")
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("url_canon"))
-      Tables(s, dir).documents
-        .select(id,
-          UrlNorm.canonicalize(plantedCrawlUrl(id)).as("url_canon"))
-        .withColumn("n_captures", count(lit(1)).over(w))
-        .withColumn("is_keeper", id === min(id).over(w))
-    }),
-
-    // 29f. robots.txt gate (RFC 9309) — the crawl-politeness audit over
-    // the canonical-URL frontier: a per-host robots dim (10 hosts, two
-    // policies — even hosts carry an Allow override and a $-anchored
-    // wildcard rule, odd hosts neither) BROADCAST-joins the captures,
-    // and the kernel evaluates longest-match per path map-side. Plan:
-    // one broadcast hash join, zero wide shuffles. The oracle replays
-    // the decision table the planted policies imply.
-    "q105_robots_gate" -> ((s, dir) => {
-      val id = col("doc_id")
-      Tables(s, dir).documents
-        .select(id, (id % 50 % 10).as("host_id"),
-          plantedCrawlPath(id).as("path"))
-        .join(broadcast(robotsPolicyDim(s)), "host_id")
-        .select(id, col("path"),
-          RobotsTxt.allowed(col("robots"), lit("graftbot"), col("path"))
-            .as("allowed_bot"),
-          RobotsTxt.allowed(col("robots"), lit("otherbot"), col("path"))
-            .as("allowed_other"))
-    }),
-
-    // 29g. anchor-text extraction — the other half of the q98 link
-    // bridge (hosts feed PageRank; anchor TEXT is the classic relevance
-    // signal a link-graph feature store wants). Two same-pattern group
-    // extractions zip positionally into (href, anchor) pairs, then each
-    // href canonicalizes in flight (q104's kernel: port strip + dot
-    // segments; relative links → NULL canon). Map-side throughout.
-    "q106_anchor_text" -> ((s, dir) => {
-      val id = col("doc_id")
-      val html = concat(col("text"),
-        lit(" <a href=\"http://site"), (id % 20).cast("string"),
-        lit(".example:80/p/../a/"), id.cast("string"), lit("\">go "),
-        (id % 9).cast("string"), lit("</a>"),
-        when(id % 5 === 1, lit(" <a href=\"/rel/p\">rel</a>"))
-          .otherwise(lit("")))
-      val pat = "<a href=\"([^\"]+)\"[^>]*>([^<]*)</a>"
-      Tables(s, dir).documents.select(id, html.as("html"))
-        .select(id, explode(arrays_zip(
-          regexp_extract_all(col("html"), lit(pat), lit(1)).as("href"),
-          regexp_extract_all(col("html"), lit(pat), lit(2)).as("anchor")))
-          .as("p"))
-        .select(id, col("p.href").as("href"),
-          UrlNorm.canonicalize(col("p.href")).as("url_canon"),
-          col("p.anchor").as("anchor"))
-    }),
-
-    // 29h. per-host crawl-health report — the corpus-ops rollup that
-    // composes the web-layer kernels end-to-end: canonical-URL identity
-    // (q104), the robots gate (q105's broadcast dim), and the encoding
-    // garbage signals (q99's plant), reduced host-wise. Deliberately the
-    // scalable two-stage shape: (host, page) partial aggregate first
-    // (so the distinct-page count is a row count, never an EXPAND), then
-    // the host rollup — two narrow shuffles over integer-and-hash rows.
-    "q107_host_report" -> ((s, dir) => {
-      val id = col("doc_id")
-      val dirtyText = concat(col("text"),
-        when(id % 13 === 4, lit("\ufffd\ufffd")).otherwise(lit("")),
-        when(id % 17 === 2, lit("\u00c3\u00a9\u00c3\u00a8")).otherwise(lit("")),
-        when(id % 19 === 3, lit("\u0007")).otherwise(lit("")))
-      Tables(s, dir).documents
-        .select(id, (id % 50 % 10).as("host_id"),
-          UrlNorm.canonicalize(plantedCrawlUrl(id)).as("url_canon"),
-          plantedCrawlPath(id).as("path"),
-          when(TextStats.replacementCount(dirtyText) +
-            TextStats.mojibakeCount(dirtyText) +
-            TextStats.controlCharCount(dirtyText) > 0, 1L).otherwise(0L)
-            .as("dirty"))
-        .join(broadcast(robotsPolicyDim(s)), "host_id")
-        .select(col("doc_id"), col("host_id"), col("url_canon"), col("dirty"),
-          when(!RobotsTxt.allowed(col("robots"), lit("graftbot"), col("path")),
-            1L).otherwise(0L).as("blocked"))
-        .groupBy(col("host_id"), col("url_canon"))
-        .agg(count(lit(1)).as("cnt"), sum(col("blocked")).as("nb"),
-          sum(col("dirty")).as("nd"))
-        .groupBy(col("host_id"))
-        .agg(sum(col("cnt")).as("n_captures"),
-          count(lit(1)).as("n_pages"),
-          sum(col("nb")).as("n_blocked"), sum(col("nd")).as("n_dirty"))
-        .select(concat(lit("site"), col("host_id").cast("string"),
-          lit(".example")).as("host"),
-          col("n_captures"), col("n_pages"), col("n_blocked"), col("n_dirty"))
-    }),
-
-    // 29i. unlabeled-body charset recovery — the other half of q100's
-    // transcode story: captures with NO charset label recover via the
-    // WHATWG sniff (BOM first, BOM never reaches the text; else strict
-    // UTF-8 validation; else the documented windows-1252 fallback,
-    // whose total byte map degrades garbage to countable C1 controls
-    // instead of dropping the capture). Bodies planted as real bytes
-    // (encode + BOM prefixes); the oracle knows the decoded strings.
-    // Map-side kernels — zero shuffles.
-    "q108_charset_sniff" -> ((s, dir) => {
-      val id = col("doc_id")
-      val bomU8 = lit(Array[Byte](0xEF.toByte, 0xBB.toByte, 0xBF.toByte))
-      val bomLE = lit(Array[Byte](0xFF.toByte, 0xFE.toByte))
-      val body = when(id % 4 === 0,
-          encode(concat(col("text"), lit(" plain")), "UTF-8"))
-        .when(id % 4 === 1,
-          encode(concat(col("text"), lit(" café")), "ISO-8859-1"))
-        .when(id % 4 === 2,
-          concat(bomLE, encode(concat(col("text"), lit(" Ω")), "UTF-16LE")))
-        .otherwise(
-          concat(bomU8, encode(concat(col("text"), lit(" bom")), "UTF-8")))
-      Tables(s, dir).documents.select(id,
-        WarcTranscode.sniffedCharset(body).as("detected"),
-        WarcTranscode.sniffedText(body).as("text_utf8"))
-    }),
-
-    // 26p. boilerplate removal — the main-content step between raw
-    // extraction (q103) and quality filtering: the public line-wise
-    // heuristic (jusText / CCNet / RefinedWeb family) rides q103's tag
-    // scan with anchor-depth tracking — link-dominated lines (nav,
-    // footer link bars) and short fragments (bare headings) drop,
-    // prose survives; thresholds apply before entity decode (decode
-    // stays last). The fixture's nav and footer lines are
-    // link-dominated by construction, the h1 is always under-length,
-    // the prose lines always pass. Map-side kernel, zero shuffles.
-    "q109_boilerplate" -> ((s, dir) => {
-      val id = col("doc_id")
-      val html = concat(
-        lit("<html><head><title>skip</title></head><body>" +
-          "<nav><a href=\"/home\">Home</a> | " +
-          "<a href=\"/about\">About</a></nav><h1>Doc "),
-        id.cast("string"), lit("</h1><p>"), col("text"), lit("</p>"),
-        when(id % 3 === 0,
-          lit("<p>Extra &amp; entity &#233; &#x41; test</p>"))
-          .otherwise(lit("")),
-        when(id % 7 === 5,
-          lit("<p>&lt;b&gt;not a tag&lt;/b&gt;</p>")).otherwise(lit("")),
-        lit("<footer><a href=\"/tos\">Terms</a> · " +
-          "<a href=\"/privacy\">Privacy</a></footer></body></html>"))
-      Tables(s, dir).documents.select(id,
-        HtmlText.mainContent(html).as("main_text"),
-        HtmlText.keptLineCount(html).as("n_kept"))
-    }),
-
-    // 29k. sitemap ingest — the third crawl-side surface (robots says
-    // what MAY be fetched, sitemaps say what SHOULD be): url-block
-    // extraction with dialect-neutral regexps (parse vs parse, the q98
-    // posture), per-entry loc/lastmod/changefreq fields (absent →
-    // NULL), and each loc canonicalized in flight (q104 — the second
-    // entry is planted in a non-canonical spelling). Map-side
-    // extraction + one explode, zero shuffles.
-    "q110_sitemap" -> ((s, dir) => {
-      val id = col("doc_id")
-      val h = ((id % 50) % 10).cast("string")
-      val mm = lpad((lit(1) + id % 12).cast("string"), 2, "0")
-      val dd = lpad((lit(1) + id % 28).cast("string"), 2, "0")
-      val urlset = concat(
-        lit("<?xml version=\"1.0\"?><urlset><url><loc>http://site"), h,
-        lit(".example/a/"), id.cast("string"),
-        lit("</loc><lastmod>2024-"), mm, lit("-"), dd, lit("</lastmod>"),
-        when(id % 2 === 0, lit("<changefreq>daily</changefreq>"))
-          .otherwise(lit("")),
-        lit("</url>"),
-        when(id % 3 === 0, concat(
-          lit("<url><loc>HTTP://SITE"), h, lit(".EXAMPLE:80/b/"),
-          id.cast("string"), lit("</loc></url>"))).otherwise(lit("")),
-        lit("</urlset>"))
-      // the recursion contract (r11 VERDICT task 4): doc_id%7=1 bodies
-      // are <sitemapindex> files — their <sitemap> children are CHILD
-      // SITEMAP URLs (kind='sitemap', feeding the next ingest round),
-      // one with lastmod and one spelled non-canonically
-      val index = concat(
-        lit("<?xml version=\"1.0\"?><sitemapindex><sitemap>" +
-          "<loc>http://site"), h, lit(".example/sm/"), id.cast("string"),
-        lit("/a.xml.gz</loc><lastmod>2024-"), mm, lit("-"), dd,
-        lit("</lastmod></sitemap><sitemap><loc>HTTP://SITE"), h,
-        lit(".EXAMPLE:80/sm/"), id.cast("string"),
-        lit("/b.xml.gz</loc></sitemap></sitemapindex>"))
-      val xml = when(id % 7 === 1, index).otherwise(urlset)
-      // the dominant wire form is gzip: doc_id%4=2 bodies arrive
-      // compressed and Sitemap.bodyText must sniff + inflate them
-      val body = when(id % 4 === 2, graft.sources.Sitemap.gzipUtf8(xml))
-        .otherwise(xml.cast("binary"))
-      Tables(s, dir).documents
-        .select(id, graft.sources.Sitemap.bodyText(body).as("xml"))
-        .select(id, explode(concat(
-          transform(regexp_extract_all(col("xml"),
-            lit("<url>([\\s\\S]*?)</url>"), lit(1)),
-            b => struct(lit("url").as("kind"), b.as("b"))),
-          transform(regexp_extract_all(col("xml"),
-            lit("<sitemap>([\\s\\S]*?)</sitemap>"), lit(1)),
-            b => struct(lit("sitemap").as("kind"), b.as("b"))))).as("e"))
-        .select(id, col("e.kind").as("kind"),
-          UrlNorm.canonicalize(
-            regexp_extract(col("e.b"), "<loc>([^<]*)</loc>", 1))
-            .as("url_canon"),
-          nullif(regexp_extract(col("e.b"), "<lastmod>([^<]*)</lastmod>", 1),
-            lit("")).cast("date").as("lastmod"),
-          nullif(regexp_extract(col("e.b"),
-            "<changefreq>([^<]*)</changefreq>", 1), lit(""))
-            .as("changefreq"))
-    }),
-
-    // 26q. Content-Type payload routing (VERDICT r11 task 3) — the
-    // dispatch step a mixed-type crawl needs between transcode and
-    // extraction: html → strict transcode + q103 visible-text kernel,
-    // text/* → transcode passthrough, image/* → q83 header metadata
-    // (bytes never touch a text path), application/* → counted binary
-    // skip, absent Content-Type → counted unknown skip. The fixture
-    // interleaves all five classes by doc_id arithmetic; the oracle
-    // composes every expected output (extracted page text, transcoded
-    // prose, BMP dims) from the same arithmetic while Spark genuinely
-    // parses the HTTP header, dispatches, and runs the per-type kernel.
-    // Map-side end-to-end: zero shuffles.
-    "q111_content_route" -> ((s, dir) => {
-      GraftWarc.read(s, s"${warcMixedFixture(s, dir)}/*.warc*")
-        .where(col("warc_type") === "response")
-        .transform(df => ContentRoute.routed(df))
-        .select(
-          regexp_extract(col("target_uri"), "/doc/([0-9]+)$", 1)
-            .cast("long").as("doc_id"),
-          col("media_type"), col("route"),
-          col("text").as("page_text"), col("pdf_reason"),
-          col("img_format"),
-          col("img_w").cast("long").as("img_w"),
-          col("img_h").cast("long").as("img_h"),
-          col("feed_item_count"))
-    }),
-
-    // 29l. robots → sitemap discovery — the composition the sitemap trio
-    // implies: each host's advertised Sitemap: lines (group-independent,
-    // RobotsTxt.sitemaps) surface per host and canonicalize in flight
-    // (q104's kernel — the second planted line is spelled
-    // non-canonically); hosts advertising none keep a NULL row
-    // (explode_outer), so the frontier join can distinguish
-    // "no sitemap" from "host missing". Map-side over the broadcast-size
-    // policy dim — zero shuffles.
-    "q112_sitemap_discovery" -> ((s, dir) =>
-      robotsPolicyDim(s)
-        .select(col("host_id"),
-          explode_outer(RobotsTxt.sitemaps(col("robots"))).as("sm"))
-        .select(col("host_id"),
-          UrlNorm.canonicalize(col("sm")).as("sitemap_canon"))),
-
-    // 29m. Crawl-delay politeness (the de-facto convention alongside the
-    // RFC 9309 gate): per-host delay for the product token and for an
-    // unnamed agent — group-scoped with exact-agent precedence, so the
-    // planted policies resolve differently per (host parity, agent):
-    // graftbot reads its own group's delay on even hosts and NULL on
-    // odd (its group exists but advertises none — no * fallback);
-    // an unnamed agent reads the * group's delay on odd hosts only.
-    "q113_crawl_delay" -> ((s, dir) =>
-      robotsPolicyDim(s).select(col("host_id"),
-        RobotsTxt.crawlDelay(col("robots"), lit("graftbot"))
-          .as("delay_bot"),
-        RobotsTxt.crawlDelay(col("robots"), lit("OtherBot"))
-          .as("delay_other"))),
-
-    // 29n. per-host fetch schedule — the composition a crawler actually
-    // consumes (VERDICT r12 #6): the q104 canonical frontier reduced to
-    // its keeper URLs, gated by the q105 robots decision, paced by the
-    // q113 crawl-delay, and annotated with the q112 sitemap surface —
-    // all against ONE broadcast policy dim. Allowed URLs get a
-    // deterministic per-host fetch sequence and a millisecond schedule
-    // offset ((seq−1)·delay — exact integer ms); blocked URLs stay
-    // visible with NULL sequence, so politeness remains auditable.
-    // Plan: keeper groupBy (one hash-reduced shuffle), broadcast join,
-    // then a per-host window — partition-by-host is the SEMANTICS of a
-    // politeness schedule (each host is fetched serially), and a real
-    // frontier shards by host anyway, so the window sort is the q107
-    // per-host rollup's scale shape, not a global sort.
-    "q124_fetch_schedule" -> ((s, dir) => {
-      val id = col("doc_id")
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("host_id"), col("allowed_bot"))
-        .orderBy(col("url_canon"))
-      Tables(s, dir).documents
-        .select(id, (id % 50 % 10).as("host_id"),
-          plantedCrawlPath(id).as("path"))
-        .withColumn("url_canon", UrlNorm.canonicalize(
-          concat(lit("http://site"), col("host_id").cast("string"),
-            lit(".example"), col("path"))))
-        .groupBy(col("host_id"), col("url_canon"), col("path"))
-        .agg(min(id).as("keeper_doc"))
-        .join(broadcast(robotsPolicyDim(s)), "host_id")
-        .select(col("host_id"), col("url_canon"), col("keeper_doc"),
-          RobotsTxt.allowed(col("robots"), lit("graftbot"), col("path"))
-            .as("allowed_bot"),
-          floor(RobotsTxt.crawlDelay(col("robots"), lit("graftbot"))
-            * 1000).cast("long").as("delay_x1000"),
-          size(RobotsTxt.sitemaps(col("robots"))).cast("long")
-            .as("n_sitemaps"))
-        .withColumn("fetch_seq",
-          when(col("allowed_bot"), row_number().over(w)).cast("long"))
-        .withColumn("sched_offset_ms",
-          (col("fetch_seq") - 1L) * col("delay_x1000"))
-        .select(concat(lit("site"), col("host_id").cast("string"),
-            lit(".example")).as("host"),
-          col("url_canon"), col("keeper_doc"), col("allowed_bot"),
-          col("delay_x1000"), col("n_sitemaps"), col("fetch_seq"),
-          col("sched_offset_ms"))
-    }),
-
-    // 29o. robots-meta page directives + rel=nofollow link gating — the
-    // page-level leg of the politeness stack (q105 gates the FETCH, this
-    // gates what the fetched page may be USED for: corpus inclusion and
-    // frontier expansion). Planted meta variants cover attribute-order
-    // reversal, case folding, the none alias, an explicit allow, a
-    // missing tag, and a non-robots decoy name; anchors alternate a
-    // rel=nofollow marker against a rel=noopener distractor. Spark
-    // genuinely parses the tags (RobotsMeta's order/case-robust scan);
-    // the oracle replays the plant arithmetic. Map-side, zero shuffles.
-    "q125_robots_meta" -> ((s, dir) => {
-      import graft.functions.RobotsMeta
-      val id = col("doc_id")
-      val meta =
-        when(id % 7 === 0,
-          lit("<meta content=\"noindex, nofollow\" name=\"robots\">"))
-        .when(id % 7 === 1, lit("<META NAME=\"ROBOTS\" CONTENT=\"NOINDEX\">"))
-        .when(id % 7 === 2, lit("<meta name=\"robots\" content=\"nofollow\">"))
-        .when(id % 7 === 3, lit("<meta name=\"robots\" content=\"none\">"))
-        .when(id % 7 === 4,
-          lit("<meta name=\"robots\" content=\"index, follow\">"))
-        .when(id % 7 === 5, lit(""))
-        .otherwise(lit("<meta name=\"googlebot\" content=\"noindex\">"))
-      val links = concat(
-        lit("<a href=\"http://l"), (id % 11).cast("string"),
-        lit(".example/a\">one</a>"),
-        when(id % 3 === 1,
-          lit(" <a rel=\"nofollow\" href=\"/x\">two</a>"))
-          .otherwise(lit(" <a href=\"/y\" rel=\"noopener\">two</a>")))
-      val html = concat(
-        lit("<html><head><meta name=\"viewport\" content=\"width=1\">"),
-        meta, lit("</head><body><p>"), col("text"), lit("</p>"), links,
-        lit("</body></html>"))
-      Tables(s, dir).documents.select(id,
-        RobotsMeta.noindex(html).as("noindex"),
-        RobotsMeta.nofollow(html).as("nofollow"),
-        size(RobotsMeta.anchorTags(html)).cast("long").as("n_links"),
-        RobotsMeta.followableLinks(html).as("n_follow_links"))
-    }),
-
-    // 26ab. DSIR importance-resampling data selection (Xie et al. 2023):
-    // hashed unigram+bigram bucket LMs fit on the q120 reference split
-    // (target = the hash-deterministic curated-English half) vs the
-    // disjoint crawl half, every document scored by the quantized
-    // importance log-ratio, top-quarter selected by length-normalized
-    // score with a deterministic (score, doc_id) rank — no global row
-    // sort (the q64 offsets shape over the bounded score domain), the
-    // ≤1024-row model always broadcast, kernel-side wraparound hashing.
-    "q126_dsir_select" -> ((s, dir) => {
-      val docs = Tables(s, dir).documents
-      val b = Sampling.bucket(col("doc_id"))
-      graft.functions.Dsir.select(
-        docs.where(col("lang") === "en" && b < 5000),
-        docs.where(b >= 5000),
-        docs, "doc_id", "text")
-    }),
-
-    // 26ac. KMV/theta corpus-overlap sketch (Bar-Yossef 2002 / the
-    // theta-sketch set algebra): distinct 3-gram estimates for two
-    // corpus halves plus their union/overlap, sketch vs exact side by
-    // side — the audit for the operator a 100 TB deployment runs
-    // sketch-only (estimating cross-corpus contamination without q45's
-    // full co-shuffle). Grams hash by per-token fold so the oracle
-    // replays them with integer arithmetic; one distinct-hash shuffle,
-    // TakeOrdered k-min cut, all sketch algebra on ≤2k-row frames.
-    "q127_kmv_overlap" -> ((s, dir) => {
-      val docs = Tables(s, dir).documents
-      val b = Sampling.bucket(col("doc_id"))
-      def grams(df: org.apache.spark.sql.DataFrame) = df.select(
-        explode(F.kgramHashes(F.tokensLower(col("text")), 3)).as("h"))
-      graft.functions.Kmv.overlapReport(
-        grams(docs.where(b < 5000)), grams(docs.where(b >= 5000)), "h")
-    }),
-
-    // 26ad-b. HyperLogLog per-language vocabulary census — the sketch
-    // you run at 100 TB where q33's exact distinct cannot: 64 MAX-merged
-    // registers per group, trailing-zero ρ capped at 32, the estimate
-    // as one exact integer floor division (no IEEE ln/pow — see
-    // functions.Hll). `exact_distinct`/`n_tokens` are the oracle-SF
-    // audit columns a production run drops. One (lang, reg) shuffle
-    // where the map-side combiner collapses everything to ≤64 rows per
-    // group; the audit aggregate is the only distinct pass.
-    "q159_hll_distinct" -> ((s, dir) => {
-      val docs = Tables(s, dir).documents
-      val toks = docs.select(col("lang"),
-        explode(F.tokensLower(col("text"))).as("tok"))
-      val sk = graft.functions.Hll.sketch(
-        toks.select(col("lang"), F.hash64(col("tok")).as("h")),
-        Seq("lang"), "h")
-      val audit = toks.groupBy(col("lang")).agg(
-        count(lit(1)).as("n_tokens"),
-        countDistinct(col("tok")).as("exact_distinct"))
-      sk.join(audit, Seq("lang"))
-        .select(col("lang"), col("n_tokens"), col("exact_distinct"),
-          col("v_zero"), col("s_harmonic"), col("est_hll"),
-          col("estimate"))
-    }),
-
-    // 26ac-c. the same census at CENSUS precision (VERDICT r16
-    // next-task 7): p = 12 → 4096 registers, ~1.6% σ — the precision a
-    // real 100 TB vocabulary census wants; rho caps at C(12) = 26 so
-    // every estimator term stays a 63-bit BIGINT, and the 4096-entry
-    // linear-counting table is still a driver-bounded literal in both
-    // plans. Same one (group, reg) map-side-combined shuffle as q159.
-    "q168_hll_p12" -> ((s, dir) => {
-      val docs = Tables(s, dir).documents
-      val toks = docs.select(col("lang"),
-        explode(F.tokensLower(col("text"))).as("tok"))
-      val sk = graft.functions.Hll.sketch(
-        toks.select(col("lang"), F.hash64(col("tok")).as("h")),
-        Seq("lang"), "h", p = 12)
-      val audit = toks.groupBy(col("lang")).agg(
-        count(lit(1)).as("n_tokens"),
-        countDistinct(col("tok")).as("exact_distinct"))
-      sk.join(audit, Seq("lang"))
-        .select(col("lang"), col("n_tokens"), col("exact_distinct"),
-          col("v_zero"), col("s_harmonic"), col("est_hll"),
-          col("estimate"))
-    }),
-
-    // 26am. corpus-concentration Lorenz report: per-source token mass
-    // sorted ascending (the Lorenz axis), folded into 10 exact ntile
-    // bins — group count, mass, mass share, cumulative share at the
-    // bin edge. The global rank + cumulative prefix build via
-    // etl.Prefix (range-partition + broadcast offsets — the PageRank/
-    // Eval mold, NO single-partition window); shares by the staged
-    // ⌊W/1e6⌋+1 divisor so nothing outgrows the token total. The
-    // mixing gauge read before domain caps (q136) / temperature (q117).
-    "q170_lorenz_sources" -> ((s, dir) =>
-      graft.etl.CorpusStats.lorenzReport(
-        Tables(s, dir).documents.select(col("source"),
-          TextStats.tokenCount(col("text")).as("w")),
-        "source", "w", bins = 10)),
-
-    // 14b. exact corpus-wide quantiles WITHOUT a global sort (the
-    // sizing gauge for chunking budgets and length filters): type-1
-    // quantile values at p50/p90/p99 of the per-doc token count, read
-    // off the etl.Prefix distributed rank (range-partition + broadcast
-    // offsets — no single-partition window, no second pass; the
-    // quantile SELECT is a broadcast semi-filter on idx). Complements
-    // q74 (per-GROUP median via partitioned windows) with the
-    // whole-corpus report that window cannot scale to.
-    "q171_token_quantiles" -> ((s, dir) =>
-      GroupStats.globalQuantiles(
-        Tables(s, dir).documents.select(col("doc_id"),
-          TextStats.tokenCount(col("text")).as("w")),
-        col("w"), col("doc_id"))),
-
-    // 23c. unigram-LM (SentencePiece-style) Viterbi ENCODE under the
-    // fixed piece table (VERDICT r17 next-task 5 — the tokenizer rung
-    // above BPE that public multilingual pipelines default to): exact
-    // max-score segmentation by per-word DP, TYPE-level (the distinct
-    // [a-z]{1,16} words — a vocabulary-bounded frame at any corpus
-    // scale; per-token work never exists). Kernel is one codegen
-    // StaticInvoke with the table as a spec literal; ties prefer the
-    // longest final piece. FULL oracle: the recursive-CTE DP replay
-    // (fixed-width dp + backtrack state, one iteration per character).
-    "q172_unigram_encode" -> ((s, dir) => {
-      val seg = graft.functions.Unigram
-        .segment(col("word"), fixedUnigramPieces)
-      Tables(s, dir).documents
-        .select(explode(split(trim(lower(col("text"))), "\\s+"))
-          .as("word"))
-        .where(col("word").rlike("^[a-z]{1,16}$"))
-        .distinct()
-        .select(col("word"), seg.as("seg"),
-          graft.functions.Unigram
-            .scoreMilli(col("word"), fixedUnigramPieces).as("score_x1e3"))
-        .withColumn("n_pieces",
-          (length(col("seg")) -
-            length(regexp_replace(col("seg"), "\\|", "")) + 1)
-            .cast("long"))
-        .select(col("word"), col("n_pieces"), col("score_x1e3"),
-          col("seg"))
-    }),
-
-    // 23d. ONE oracled hard-EM step of the unigram trainer (the q84c
-    // isolate-one-step precedent — the full Viterbi-EM loop is
-    // spec-gated in UnigramSpec like BPE's q47): segment the word
-    // TYPES under the fixed table, weight pieces by corpus frequency,
-    // re-estimate p(piece) as the exact integer floor. The piece-count
-    // frame is vocabulary-bounded (the SemDedup codebook posture).
-    "q173_unigram_em" -> ((s, dir) => {
-      val words = Tables(s, dir).documents
-        .select(explode(split(trim(lower(col("text"))), "\\s+"))
-          .as("word"))
-        .where(col("word").rlike("^[a-z]{1,16}$"))
-        .groupBy(col("word")).agg(count(lit(1)).as("f"))
-      graft.functions.Unigram.emStep(words, fixedUnigramPieces)
-    }),
-
-    // 23e. unigram fertility equity audit — q122's Rust et al. 2021
-    // gauge for the unigram tokenizer (VERDICT r17 task 5's third leg):
-    // tokens-per-word and chars-per-piece per language under the q172
-    // fixed table. Segment the distinct types once, broadcast-join the
-    // per-type piece count back onto (lang, word) frequencies, one
-    // bounded-dim groupBy.
-    "q174_unigram_fertility" -> ((s, dir) => {
-      val wl = Tables(s, dir).documents
-        .select(col("lang"),
-          explode(split(trim(lower(col("text"))), "\\s+")).as("word"))
-        .where(col("word").rlike("^[a-z]{1,16}$"))
-        .groupBy(col("lang"), col("word")).agg(count(lit(1)).as("f"))
-      val seg = graft.functions.Unigram
-        .segment(col("word"), fixedUnigramPieces)
-      val types = wl.select(col("word")).distinct()
-        .select(col("word"),
-          (length(seg) - length(regexp_replace(seg, "\\|", "")) + 1)
-            .cast("long").as("np"))
-      wl.join(broadcast(types), Seq("word"))
-        .groupBy(col("lang"))
-        .agg(sum(col("f")).as("n_words"),
-          sum(col("f") * col("np")).as("n_pieces"),
-          sum(col("f") * length(col("word")).cast("long")).as("n_chars"))
-        .select(col("lang"), col("n_words"), col("n_pieces"),
-          col("n_chars"),
-          expr("(1000000 * n_pieces) div n_words").as("fertility_x1e6"),
-          expr("(1000000 * n_chars) div n_pieces")
-            .as("chars_per_piece_x1e6"))
-    }),
-
-    // 29p. adaptive recrawl scheduling (Cho & Garcia-Molina 2003): the
-    // planted fetch history gives each of 20 URLs a volatility class —
-    // never-changing, every-fetch, every-2nd, every-12th — and the
-    // bias-corrected Poisson estimator λ̂ = −ln((n−X+½)/(n+½)) buckets
-    // them back apart (all four buckets exercised at sf0.01). One
-    // per-URL lag window + one groupBy; the DECIMAL(18,9)-quantized ln
-    // replays exactly.
-    "q128_recrawl_rate" -> ((s, dir) => {
-      val id = col("doc_id")
-      val seqc = floor(id / 20).cast("long")
-      val v = (id % 20) % 4
-      val hist = Tables(s, dir).documents.select(
-        (id % 20).as("url_id"), seqc.as("seq"),
-        when(v === 0, lit(0L)).when(v === 1, seqc)
-          .when(v === 2, floor(seqc / 2).cast("long"))
-          .otherwise(floor(seqc / 12).cast("long")).as("ch"))
-      Recrawl.changeRate(hist, "url_id", "seq", "ch")
-    }),
-
-    // 26ad. schema.org JSON-LD metadata extraction: the structured
-    // channel a page carries beside its prose — typed entity, headline,
-    // publish date — planted with attribute-order/case variants, a
-    // malformed-JSON page (block countable, fields NULL), a no-block
-    // page, and a decoy plain <script> carrying fake @type that must
-    // never be read. Spark genuinely scans the tag and evaluates JSON
-    // paths (get_json_object — codegen); the oracle replays the plant
-    // arithmetic. Map-side, zero shuffles.
-    "q130_jsonld" -> ((s, dir) => {
-      import graft.functions.StructuredData
-      val id = col("doc_id")
-      val day = lpad((lit(1) + id % 28).cast("string"), 2, "0")
-      val typ = when(id % 3 === 0, lit("Article"))
-        .when(id % 3 === 1, lit("Product")).otherwise(lit("NewsArticle"))
-      val ld = concat(
-        lit("{\"@context\":\"https://schema.org\",\"@type\":\""), typ,
-        lit("\",\"headline\":\"Item "), id.cast("string"),
-        lit("\",\"datePublished\":\"2024-01-"), day, lit("\"}"))
-      val open = when(id % 2 === 0,
-        lit("<script type=\"application/ld+json\" data-x=\"1\">"))
-        .otherwise(lit("<script async TYPE=\"APPLICATION/LD+JSON\">"))
-      val block = when(id % 6 === 5, lit(""))
-        .when(id % 6 === 4,
-          concat(open, lit("{\"@type\":\"Article\",\"headline\":"),
-            lit("</script>")))
-        .otherwise(concat(open, ld, lit("</script>")))
-      val html = concat(
-        lit("<html><head><script>var a = {\"@type\":\"Fake\"};</script>"),
-        block, lit("</head><body><p>"), col("text"),
-        lit("</p></body></html>"))
-      Tables(s, dir).documents.select(id,
-        StructuredData.jsonLd(html).isNotNull.as("has_jsonld"),
-        StructuredData.ldField(html, "@type").as("schema_type"),
-        StructuredData.ldField(html, "headline").as("headline"),
-        to_date(StructuredData.ldField(html, "datePublished"))
-          .as("date_published"))
-    }),
-
-    // 26ae. Unicode script-mix audit — the homoglyph/script-confusion
-    // spam signal (mixed-script text is the classic phishing shape, and
-    // a corpus doc whose script disagrees with its claimed language is
-    // mislabeled): per-script letter counts over literal codepoint-range
-    // classes (identical pattern BYTES on both engines — no \\u escape
-    // dialect to disagree on), deterministic dominant-script argmax in
-    // fixed class order, and an integer cross-multiplied minority
-    // threshold (a second script ≥5% of letters flags mixed — planted
-    // one-word homoglyph tails stay under it). Map-side regexp_count
-    // passes, zero shuffles.
-    "q131_script_mix" -> ((s, dir) => {
-      val id = col("doc_id")
-      val txt = concat(col("text"),
-        when(id % 9 === 2, lit(" Пример текста для проверки"))
-          .when(id % 9 === 3, lit(" 這是一個測試樣本文字"))
-          .when(id % 9 === 4, lit(" δείγμα κειμένου εδώ"))
-          .when(id % 9 === 5, lit(" عينة نص للاختبار"))
-          .when(id % 9 === 6, lit(" Пx")) // tiny homoglyph tail: < 5%
-          .otherwise(lit("")))
-      def cnt(cls: String) =
-        regexp_count(txt, lit(s"[$cls]")).cast("long")
-      val latin = cnt("A-Za-zÀ-ÖØ-öø-ɏ")
-      val cyr = cnt("Ѐ-ӿ")
-      val cjk = cnt("一-鿿ぁ-ヿ")
-      val greek = cnt("Ͱ-Ͽ")
-      val arabic = cnt("؀-ۿ")
-      val letters = regexp_count(txt, lit("\\p{L}")).cast("long")
-      val other = letters - latin - cyr - cjk - greek - arabic
-      val mx = greatest(latin, cyr, cjk, greek, arabic, other)
-      val dominant = when(letters === 0, lit("none"))
-        .when(latin === mx, lit("latin")).when(cyr === mx, lit("cyrillic"))
-        .when(cjk === mx, lit("cjk")).when(greek === mx, lit("greek"))
-        .when(arabic === mx, lit("arabic")).otherwise(lit("other"))
-      Tables(s, dir).documents
-        .select(id, latin.as("n_latin"), cyr.as("n_cyrillic"),
-          cjk.as("n_cjk"), greek.as("n_greek"), arabic.as("n_arabic"),
-          other.as("n_other"), dominant.as("dominant_script"),
-          // a NON-dominant script holding >= 5% of letters
-          (letters > 0 && (
-            (dominant =!= "latin" && latin * 20 >= letters && latin > 0) ||
-            (dominant =!= "cyrillic" && cyr * 20 >= letters && cyr > 0) ||
-            (dominant =!= "cjk" && cjk * 20 >= letters && cjk > 0) ||
-            (dominant =!= "greek" && greek * 20 >= letters && greek > 0) ||
-            (dominant =!= "arabic" && arabic * 20 >= letters && arabic > 0) ||
-            (dominant =!= "other" && other * 20 >= letters && other > 0)))
-            .as("mixed_script"))
-    }),
-
-    // 26af. NFC normalization audit (UAX #15): canonically-equivalent
-    // but byte-different text (precomposed é vs e + combining acute)
-    // defeats every exact-dedup/fingerprint hash unless the corpus is
-    // normalized first — this measures how much of the corpus is
-    // denormalized, the decision input for the normalization pass.
-    // Planted combining-mark tails (and a precomposed control that must
-    // NOT flag) ride the JDK's UAX#15 kernel; DuckDB's nfc_normalize
-    // implements the same tables, making the audit full-oracle.
-    // Map-side, zero shuffles.
-    "q132_nfc_audit" -> ((s, dir) => {
-      val id = col("doc_id")
-      val txt = concat(col("text"),
-        when(id % 5 === 1, lit(" cafe\u0301")) // e + combining acute
-          .when(id % 5 === 2, lit(" A\u030Angstro\u0308m")) // combining ring + diaeresis
-          .when(id % 5 === 3, lit(" caf\u00E9")) // precomposed: already NFC
-          .otherwise(lit("")))
-      val nfc = F.nfc(txt)
-      Tables(s, dir).documents.select(id,
-        (txt === nfc).as("nfc_equal"),
-        length(txt).cast("long").as("len_raw"),
-        length(nfc).cast("long").as("len_nfc"))
-    }),
-
-    // 26ag. HTML table extraction — tables are the densest structured
-    // text a page carries (the table-to-text corpus slice): per-row
-    // cell recovery from the bounded non-nested subset, th/td
-    // uniformly, inline markup stripped, padding trimmed. The fixture
-    // builds variable-geometry tables (2-4 rows × 2-3 cols, header row
-    // for even ids, bolded cells on an arithmetic stripe, a no-table
-    // page emitting zero rows) entirely in plan expressions; Spark must
-    // genuinely re-parse what it assembled while the oracle generates
-    // the expectation from arithmetic. Map-side scan + posexplode.
-    "q133_table_extract" -> ((s, dir) => {
-      val id = col("doc_id")
-      val nrows = (lit(2) + id % 3).cast("int")
-      val ncols = (lit(2) + id % 2).cast("int")
-      val rowsHtml = array_join(transform(sequence(lit(0), nrows - 1), r => {
-        val cells = array_join(transform(sequence(lit(0), ncols - 1), c => {
-          val body = concat(lit("r"), r.cast("string"), lit("c"),
-            c.cast("string"), lit("-"), id.cast("string"))
-          val deco = when((r + c + id) % 3 === 0,
-            concat(lit("<b>"), body, lit("</b>"))).otherwise(body)
-          when(id % 2 === 0 && r === 0,
-            concat(lit("<th class=\"h\"> "), deco, lit(" </th>")))
-            .otherwise(concat(lit("<td> "), deco, lit(" </td>")))
-        }), "")
-        concat(lit("<tr>"), cells, lit("</tr>"))
-      }), "")
-      val html = when(id % 7 === 6,
-        concat(lit("<html><body><p>"), col("text"),
-          lit("</p></body></html>")))
-        .otherwise(concat(lit("<html><body><p>"), col("text"),
-          lit("</p><table class=\"t\">"), rowsHtml,
-          lit("</table></body></html>")))
-      Tables(s, dir).documents
-        .select(id,
-          posexplode(HtmlText.tableRows(html)).as(Seq("row_idx", "row")))
-        .select(id, col("row_idx").cast("long").as("row_idx"),
-          size(HtmlText.rowCells(col("row"))).cast("long").as("n_cells"),
-          array_join(HtmlText.rowCells(col("row")), " | ").as("row_text"))
-    }),
-
-    // 26ah. Open Graph / head-metadata extraction (ogp.me + WHATWG
-    // standard metadata names + feed autodiscovery): the page-metadata
-    // channel social/search pipelines read — og:title, description,
-    // rel=canonical (the dedup hint that beats URL heuristics), and the
-    // advertised RSS/Atom feed that seeds q135's feed ingest. Fixture
-    // plants attribute-order and case variants, a malformed og tag with
-    // NO content attribute (present but NULL — the soft contract), a
-    // generator decoy whose CONTENT mentions og:title (the tag-list
-    // scan must never read a key out of another tag's value), and both
-    // feed media types. Spark genuinely scans tags; the oracle replays
-    // the plant arithmetic. Map-side tag-list pass, zero shuffles.
-    "q134_meta_tags" -> ((s, dir) => {
-      import graft.functions.StructuredData
-      val id = col("doc_id")
-      val site = concat(lit("http://site"),
-        ((id % 50) % 10).cast("string"), lit(".example"))
-      val og = when(id % 5 === 4, lit(""))
-        .when(id % 10 === 3, lit("<meta property=\"og:title\">"))
-        .when(id % 2 === 0,
-          concat(lit("<meta property=\"og:title\" content=\"Page "),
-            id.cast("string"), lit("\">")))
-        .otherwise(concat(lit("<META CONTENT=\"Page "), id.cast("string"),
-          lit("\" PROPERTY=\"OG:TITLE\">")))
-      val desc = when(id % 3 =!= 0,
-        concat(lit("<meta name=\"description\" content=\"Desc "),
-          id.cast("string"), lit("\">"))).otherwise(lit(""))
-      val canon = when(id % 4 === 3, lit(""))
-        .when(id % 8 === 1, concat(lit("<LINK REL=\"canonical\" HREF=\""),
-          site, lit("/p/"), id.cast("string"), lit("\">")))
-        .otherwise(concat(lit("<link rel=\"canonical\" href=\""), site,
-          lit("/p/"), id.cast("string"), lit("\">")))
-      val feed = when(id % 4 === 0, concat(
-          lit("<link rel=\"alternate\" type=\"application/rss+xml\"" +
-            " href=\""), site, lit("/feed.xml\">")))
-        .when(id % 4 === 1, concat(
-          lit("<link type=\"application/atom+xml\" href=\""), site,
-          lit("/atom.xml\" rel=\"alternate\">")))
-        .otherwise(lit(""))
-      val html = concat(lit("<html><head><meta charset=\"utf-8\">"),
-        og, desc, canon, feed,
-        lit("<meta name=\"generator\" content=\"og:title decoy\">"),
-        lit("</head><body><p>"), col("text"), lit("</p></body></html>"))
-      val fl = StructuredData.feedLink(html)
-      Tables(s, dir).documents.select(id,
-        StructuredData.metaContent(html, "og:title").as("og_title"),
-        StructuredData.metaContent(html, "description")
-          .as("meta_description"),
-        StructuredData.linkHref(html, "canonical").as("canonical_url"),
-        fl.getField("url").as("feed_url"),
-        fl.getField("fmt").as("feed_type"))
-    }),
-
-    // 29q. RSS/Atom feed parsing (RSS 2.0 / RFC 4287) — the change-feed
-    // side of the discovery loop: where sitemaps enumerate a site
-    // (q110), the feed q134 discovered carries the NEWEST items with
-    // timestamps, the cheapest recrawl signal a crawler gets (feeds
-    // compose with q128's change-rate estimator). Fixture assembles
-    // RSS for even ids / Atom for odd, 2-4 items each, with pubDate in
-    // ALL the conventional RFC-822 wire shapes: the day-of-week-
-    // prefixed `EEE, dd MMM yyyy HH:mm:ss GMT` virtually every real
-    // feed emits (id%6=0), the prefix-free legacy shape, a numeric
-    // `+0200` zone whose offset must be HONORED (pub_hour proves the
-    // UTC conversion, not a mere strip), a missing-pubDate variant,
-    // an attribute-reordered Atom link, a torn body yielding ZERO
-    // rows, and the gzip wire form riding the q110 sniff+inflate
-    // kernel. Day names are the TRUE weekday of the planted date. The
-    // oracle regenerates items by arithmetic. Map-side parse +
-    // posexplode, zero shuffles.
-    "q135_feed_parse" -> ((s, dir) => {
-      val id = col("doc_id")
-      val site = concat(lit("http://site"),
-        ((id % 50) % 10).cast("string"), lit(".example"))
-      val n = (lit(2) + id % 3).cast("int")
-      def dd(i: Column) =
-        lpad((lit(1) + (id + i) % 28).cast("string"), 2, "0")
-      def dow(i: Column) = date_format(
-        make_date(lit(2024), lit(1), (lit(1) + (id + i) % 28).cast("int")),
-        "EEE")
-      val rssItems = array_join(transform(sequence(lit(0), n - 1), i =>
-        concat(lit("<item><title>Post "), id.cast("string"), lit("-"),
-          i.cast("string"), lit("</title><link>"), site, lit("/post/"),
-          id.cast("string"), lit("/"), i.cast("string"), lit("</link>"),
-          when(id % 6 === 4, lit(""))
-            .when(id % 6 === 0, concat(lit("<pubDate>"), dow(i),
-              lit(", "), dd(i), lit(" Jan 2024 08:00:00 GMT</pubDate>")))
-            .otherwise(when((id + i) % 2 === 0,
-              concat(lit("<pubDate>"), dd(i),
-                lit(" Jan 2024 08:00:00 GMT</pubDate>")))
-              .otherwise(concat(lit("<pubDate>"), dow(i), lit(", "),
-                dd(i), lit(" Jan 2024 07:00:00 +0200</pubDate>")))),
-          lit("</item>"))), "")
-      val atomEntries = array_join(transform(sequence(lit(0), n - 1), i =>
-        concat(lit("<entry><title>Post "), id.cast("string"), lit("-"),
-          i.cast("string"), lit("</title>"),
-          when(id % 6 === 5,
-            concat(lit("<link rel=\"alternate\" href=\""), site,
-              lit("/post/"), id.cast("string"), lit("/"),
-              i.cast("string"), lit("\"/>")))
-            .otherwise(concat(lit("<link href=\""), site, lit("/post/"),
-              id.cast("string"), lit("/"), i.cast("string"),
-              lit("\"/>"))),
-          lit("<updated>2024-01-"), dd(i),
-          lit("T08:00:00Z</updated></entry>"))), "")
-      val xml = when(id % 9 === 8,
-        lit("<?xml version=\"1.0\"?><rss><channel><item><title>torn"))
-        .when(id % 2 === 0, concat(
-          lit("<?xml version=\"1.0\"?><rss version=\"2.0\"><channel>" +
-            "<title>Feed "), id.cast("string"), lit("</title>"),
-          rssItems, lit("</channel></rss>")))
-        .otherwise(concat(
-          lit("<?xml version=\"1.0\"?>" +
-            "<feed xmlns=\"http://www.w3.org/2005/Atom\"><title>Feed "),
-          id.cast("string"), lit("</title>"), atomEntries, lit("</feed>")))
-      val body = when(id % 4 === 2, graft.sources.Sitemap.gzipUtf8(xml))
-        .otherwise(xml.cast("binary"))
-      graft.sources.Feeds.items(
-        Tables(s, dir).documents
-          .select(id, graft.sources.Sitemap.bodyText(body).as("xml")),
-        "doc_id", "xml")
-        .select(id, col("feed_format"), col("item_idx"), col("title"),
-          col("url"), col("pub_ts").cast("date").as("pub_date"),
-          hour(col("pub_ts")).as("pub_hour"))
-    }),
-
-    // 26ai. per-domain contribution capping (C4/FineWeb-class head-
-    // domain limits): the fixture plants a Zipf-shaped host skew —
-    // host 0 holds ~50% of docs, host 1 ~25%, 30 tail hosts split the
-    // rest — and the 10% cap must cut both head hosts back while every
-    // tail host keeps all its docs. The keep-set is deterministic hash
-    // order on BOTH engines (murmur64 == DuckDB hash(BIGINT)); the cap
-    // test is integer cross-multiplied. One shuffle by host, per-host
-    // window only — no global sort (see etl/DomainCap.scala).
-    "q136_domain_cap" -> ((s, dir) => {
-      val id = col("doc_id")
-      val host = concat(lit("site"),
-        when(id % 2 === 0, lit("0")).when(id % 4 === 1, lit("1"))
-          .otherwise((id % 32).cast("string")), lit(".example"))
-      val base = Tables(s, dir).documents.select(id, host.as("host"),
-        TextStats.tokenCount(col("text")).as("n_tokens"))
-      DomainCap.cap(base, "doc_id", "host", "n_tokens", 1000)
-    }),
-
-    // 26ai-b. QUALITY-weighted per-domain capping: the q136 shape, but
-    // an over-cap head domain discards its WORST pages — within-domain
-    // order is (quality DESC, hash, id), quality being the q25 integer
-    // stopword-density score both engines replay exactly. Same single
-    // host-keyed shuffle; the ordering swap is free once rows are
-    // co-located, which is the point: upgrading hash-random survival to
-    // keep-the-best costs nothing at 100 TB.
-    "q143_domain_cap_quality" -> ((s, dir) => {
-      val id = col("doc_id")
-      val host = concat(lit("site"),
-        when(id % 2 === 0, lit("0")).when(id % 4 === 1, lit("1"))
-          .otherwise((id % 32).cast("string")), lit(".example"))
-      val base = Tables(s, dir).documents.select(id, host.as("host"),
-        TextStats.tokenCount(col("text")).as("n_tokens"),
-        TextStats.qualityScore(col("text")).as("quality"))
-      DomainCap.capByQuality(base, "doc_id", "host", "n_tokens",
-        "quality", 1000)
-    }),
-
-    // 22d. SQ8 vector-storage prep: int8 scalar quantization of the
-    // embedding corpus (the 4×-smaller layout production ANN serves
-    // from) with the precomputed L2 norm that turns cosine into a dot
-    // product, plus the reconstruction-error audit that decides SQ8 is
-    // safe. Components quantize to milli-units FIRST (floor(v·1000) —
-    // float→double widening exact, IEEE multiply/floor portable) so
-    // scale, codes, dequant, and the MAE audit are all exact BIGINT
-    // with the subtract-mod floor-division discipline; the norm is
-    // floor(sqrt) of an exact integer (IEEE sqrt is correctly
-    // rounded). One map-side pass, zero shuffles.
-    "q145_vector_sq8" -> ((s, dir) =>
-      graft.ann.VectorPrep.sq8Report(
-        Tables(s, dir).embeddings, "vec_id", "embedding")),
-
-    // 26w2. stupid-backoff trigram LM scoring (Brants 2007 — the
-    // published web-scale rung above q114's bigram filter): relative
-    // frequencies with α=0.4 backoff through tri→bi→uni, add-one at the
-    // unigram floor only (documented totality deviation). Trained on
-    // the same deterministic q41 split as q114; scores rank, they are
-    // not probabilities. Per-level hit counters are emitted so the
-    // filter's backoff mix is auditable without a re-scan. Three
-    // gram-keyed counting shuffles + gram-keyed score joins (AQE skew
-    // split), one-row totals broadcast; per-position ln quantized to
-    // DECIMAL(18,9) before the sum and the per-token average by exact
-    // BIGINT floor division.
-    "q146_stupid_backoff" -> ((s, dir) => {
-      val docs = Tables(s, dir).documents
-      graft.functions.Perplexity.stupidBackoffScore(
-        Sampling.sample(docs, "doc_id", 9000), docs, "doc_id", "text")
-    }),
-
-    // 22e. SQ8 asymmetric search — the serve leg of q145's prep
-    // (prep without serve is half the story): the corpus side is the
-    // int8 code rows alone — the integer dot product of the exact
-    // milli-unit query against the codes ranks candidates (score =
-    // floor(dot·scale·10⁴/norm), all BIGINT, engine-portable), the
-    // top-50 shortlist re-ranks with true-vector cosine, and the
-    // output is per-query recall@5 vs the exact top-k (the q22/q32/
-    // q65 mold). FULL oracle: DuckDB replays the quantization, the
-    // integer ADC sums, the shortlist, and the IEEE re-rank cosines
-    // bit-for-bit. Broadcast queries, one distributed pass over the
-    // 4×-smaller code rows, bounded per-query windows.
-    "q147_sq8_ann" -> ((s, dir) => {
-      val e = Tables(s, dir).embeddings
-      val queries = e.where(col("vec_id") < 50)
-      LshAnn.recallAtK(
-        graft.ann.VectorPrep.sq8TopK(e, queries, k = 5, rerank = 50),
-        BruteForce.topK(e, queries, k = 5), k = 5)
-    }),
-
-    // 27g. image perceptual-hash near-dup — the image leg of dedup (a
-    // multimodal corpus dedups images before anything else): dHash +
-    // aHash over REALLY-decoded pixels (PHash via StaticInvoke riding
-    // the q95 BMP/PNG decoder), near-dup pairs via the SAME 16-bit
-    // pigeonhole Hamming blocking as q31, folded into per-doc rows
-    // (hashes, dup count, best partner). Fixture: 4-doc motif groups —
-    // a base, a +3-brightness twin (hash-identical BY CONSTRUCTION,
-    // the invariance perceptual hashing exists for), a one-pixel flip
-    // (Hamming ≤ 2), an independently-salted far image — with corrupt
-    // bytes at doc%8=1 (NULL hashes, observable as missing twins in
-    // the counts). Pattern bits are murmur64 parity == DuckDB hash()
-    // parity, so the FULL oracle regenerates every hash bit, the
-    // Hamming pairs, and the counts while Spark genuinely decodes the
-    // containers it assembled. One map-side decode+hash pass, the
-    // narrow (chunk, id, hash) blocking shuffle, bounded buckets.
-    "q148_image_phash" -> ((s, dir) => {
-      val hp = F.perceptualHashes(F.patternImageFixture(col("doc_id")))
-      // decode+hash ONCE: the pair blocking and the final report both
-      // read this frame, and at 100 TB of images the decode is the
-      // dominant cost while the hash rows are 24 bytes/doc — so the
-      // narrow frame materializes (localCheckpoint) instead of running
-      // the decode twice
-      val hashed = Tables(s, dir).documents
-        .select(col("doc_id"), hp.as("_hp"))
-        .select(col("doc_id"),
-          element_at(col("_hp"), 1).as("dhash"),
-          element_at(col("_hp"), 2).as("ahash"))
-        .localCheckpoint(true)
-      val pairs = SimHashDedup.hammingPairs(hashed, "doc_id", "dhash",
-        maxHamming = 3)
-      val sided = pairs.select(explode(array(
-          struct(col("id_a").as("doc_id"), col("id_b").as("partner")),
-          struct(col("id_b").as("doc_id"), col("id_a").as("partner"))))
-          .as("s"))
-        .select(col("s.doc_id"), col("s.partner"))
-      val agg = sided.groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_dups"), min(col("partner")).as("min_partner"))
-      hashed.join(agg, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("dhash"), col("ahash"),
-          coalesce(col("n_dups"), lit(0L)).as("n_dups"),
-          col("min_partner"))
-    }),
-
-    // 22f. IVF + SQ8 composed persisted index — the two classical scale
-    // levers stacked (the "IVF-SQ" layout of public ANN libraries): a
-    // search touches only nProbe cell DIRECTORIES (partition pruning)
-    // and reads 4×-smaller int8 rows inside them; integer ADC scores,
-    // exact re-rank of the top-50, recall@5 vs exact. Build is one
-    // assignment + encode pass, memoized per (session, sf) — the
-    // IvfAnn.buildIndex / Bpe.train protocol. FULL oracle: the IVF
-    // probe replay (q32) composed with the SQ8 code replay (q147).
-    "q151_ivf_sq8" -> ((s, dir) => {
-      val e = Tables(s, dir).embeddings
-      val queries = e.where(col("vec_id") < 50)
-      val path = memoized(s, s"ivfsq|$dir") {
-        val p = java.nio.file.Files
-          .createTempDirectory("graft_ivfsq").toString
-        graft.ann.IvfSqAnn.buildIndex(e, p, nCentroids = 16)
-        p
-      }
-      LshAnn.recallAtK(
-        graft.ann.IvfSqAnn.searchIndex(s, path, e, queries, k = 5,
-          nProbe = 8, rerank = 50),
-        BruteForce.topK(e, queries, k = 5), k = 5)
-    }),
-
-    // 22g. IVF index DRIFT audit — the rebuild-when gauge closing the
-    // ANN lifecycle (q149's manifest posture applied to vectors): the
-    // fixture drifts a fifth of the corpus (vec_id%5=0 vectors reverse
-    // sign — cosine to every build-time centroid negates exactly) and
-    // the audit assigns the CURRENT corpus to the FROZEN centroids,
-    // reporting per-cell population and mean member→centroid cosine
-    // with the stale verdict. Per-vector cosines DECIMAL(18,9)-
-    // quantized before the exact-BIGINT mean. FULL oracle: centroid
-    // sample + assignment + quantized means replayed bit-for-bit.
-    "q152_ivf_drift" -> ((s, dir) => {
-      val e = Tables(s, dir).embeddings
-      val path = memoized(s, s"ivfsq|$dir") {
-        val p = java.nio.file.Files
-          .createTempDirectory("graft_ivfsq").toString
-        graft.ann.IvfSqAnn.buildIndex(e, p, nCentroids = 16)
-        p
-      }
-      val drifted = e.select(col("vec_id"),
-        when(col("vec_id") % 5 === 0,
-          transform(col("embedding"), x => -x))
-          .otherwise(col("embedding")).as("embedding"))
-      IvfAnn.driftAudit(s, path, drifted, "vec_id", "embedding")
-    }),
-
-    // 22h. ANN index MAINTENANCE — q152's audit wired to its ACTION
-    // (the q149 lifecycle posture applied to vectors): build the
-    // composed IVF+SQ8 index over the base three-quarters of the
-    // corpus, ABSORB the day's quarter into the frozen-centroid cell
-    // partitions (append — untouched cells never rewrite, the index
-    // never exchanges), then let the drift audit TRIP the
-    // retrain-and-rebuild on the sign-reversed fifth. Output: the
-    // audit at all three lifecycle points — "absorbed" audits the
-    // index's OWN membership (a lost or doubled absorb row shifts
-    // n_members), "drifted" shows the frozen centroids failing,
-    // "rebuilt" shows retrained centroids healthy again. FULL oracle:
-    // the base-subset and full-drifted centroid samples plus all
-    // three DECIMAL-quantized-mean audits replayed bit-for-bit.
-    "q153_ann_lifecycle" -> ((s, dir) => {
-      val e = Tables(s, dir).embeddings
-      val drifted = e.select(col("vec_id"),
-        when(col("vec_id") % 5 === 0,
-          transform(col("embedding"), x => -x))
-          .otherwise(col("embedding")).as("embedding"))
-      val (p1, p2) = memoized(s, s"annlc|$dir") {
-        val a = java.nio.file.Files
-          .createTempDirectory("graft_annlc").toString
-        graft.ann.IvfSqAnn.buildIndex(
-          e.where(col("vec_id") % 4 =!= 3), a, nCentroids = 16)
-        graft.ann.IvfSqAnn.absorbVectors(s, a,
-          e.where(col("vec_id") % 4 === 3))
-        val b = java.nio.file.Files
-          .createTempDirectory("graft_annlc_reb").toString
-        // the audit → rebuild trigger (the q149 gauge→compact mold);
-        // rebuilt out of place so the query can audit BOTH states —
-        // maintainIndex is the in-place production wrapper (AnnSpec)
-        if (!IvfAnn.driftAudit(s, a, drifted)
-            .where(col("is_stale")).isEmpty)
-          graft.ann.IvfSqAnn.buildIndex(drifted, b, nCentroids = 16)
-        (a, b)
-      }
-      val members = e.join(
-        s.read.parquet(s"$p1/index").select(col("nid").as("vec_id")),
-        Seq("vec_id"), "left_semi")
-      IvfAnn.driftAudit(s, p1, members)
-        .withColumn("stage", lit("absorbed"))
-        .unionByName(IvfAnn.driftAudit(s, p1, drifted)
-          .withColumn("stage", lit("drifted")))
-        .unionByName(IvfAnn.driftAudit(s, p2, drifted)
-          .withColumn("stage", lit("rebuilt")))
-        .select("stage", "cell", "n_members", "mean_cos_x1e9", "is_stale")
-    }),
-
-    // 22i. margin-based bitext mining (Artetxe & Schwenk 2019, the
-    // CCMatrix/LASER criterion, public): raw cosine over-selects HUB
-    // vectors, so the best match per source scores by cosine relative
-    // to BOTH sides' top-k neighborhoods — margin = cos·2k/(Σx+Σy) as
-    // an exact BIGINT over DECIMAL-quantized cosines. Even ids < 1000
-    // are the mining batch (broadcast), odd ids the other-language
-    // corpus (one distributed pass); backward neighborhoods re-score
-    // only the ≤ batch·k candidates. FULL oracle: quantized cosines,
-    // both windows, the exact floor-division margin and the accept
-    // verdicts replay bit-for-bit.
-    "q157_bitext_margin" -> ((s, dir) => {
-      val e = Tables(s, dir).embeddings
-      graft.ann.BitextMining.minePairs(
-        e.where(col("vec_id") % 2 === 0 && col("vec_id") < 1000),
-        e.where(col("vec_id") % 2 === 1), k = 4)
-    }),
-
-    // 22i-b. GLOBAL margin mining (verdict r16 missing-item 4): the
-    // paper's full reverse-index semantics — backward neighborhoods are
-    // per-target top-k over the WHOLE source corpus (a second symmetric
-    // ranking over the same cosine pass, not the batch-bounded
-    // re-score), candidates the fwd ∪ bwd union (the "max" strategy).
-    // One cosine frame, two windows, checkpointed to (n+m)·k candidate
-    // rows before the exact integer margins. FULL oracle: both
-    // rankings, both neighborhood sums, the union, and the best-margin
-    // verdict replayed.
-    "q169_bitext_global" -> ((s, dir) => {
-      val e = Tables(s, dir).embeddings
-      graft.ann.BitextMining.mineGlobalPairs(
-        e.where(col("vec_id") % 2 === 0 && col("vec_id") < 1000),
-        e.where(col("vec_id") % 2 === 1), k = 4)
-    }),
-
-    // 27i. audio CONTENT near-dup — the q148 economics for sound:
-    // decode the PCM data chunk the engine assembled, hash the energy
-    // contour (65 boxes, bit = exact cross-multiplied mean comparison —
-    // gain-invariant BY CONSTRUCTION), pair via the SAME pigeonhole
-    // Hamming blocking as text SimHash and image pHash. Fixture: 4-doc
-    // motif groups — a base contour, a ×2 uniform-GAIN twin
-    // (fingerprint-identical), a one-box +17 bump (Hamming ≤ 2), an
-    // independently salted far contour — with corrupt bytes at doc%8=1
-    // (NULL, observable as missing twins). Levels are murmur64 & 63 ==
-    // DuckDB hash() parity, so the FULL oracle regenerates every
-    // fingerprint bit, the Hamming pairs, and the counts while Spark
-    // genuinely walks the RIFF containers and decodes 16-bit frames.
-    // One map-side decode+hash pass, the narrow blocking shuffle.
-    "q154_audio_fingerprint" -> ((s, dir) => {
-      val hashed = Tables(s, dir).documents
-        .select(col("doc_id"),
-          F.audioFingerprint(F.fpWavFixture(col("doc_id"))).as("afp"))
-        .localCheckpoint(true)
-      val pairs = SimHashDedup.hammingPairs(hashed, "doc_id", "afp",
-        maxHamming = 3)
-      val sided = pairs.select(explode(array(
-          struct(col("id_a").as("doc_id"), col("id_b").as("partner")),
-          struct(col("id_b").as("doc_id"), col("id_a").as("partner"))))
-          .as("s"))
-        .select(col("s.doc_id"), col("s.partner"))
-      val agg = sided.groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_dups"),
-          min(col("partner")).as("min_partner"))
-      hashed.join(agg, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("afp"),
-          coalesce(col("n_dups"), lit(0L)).as("n_dups"),
-          col("min_partner"))
-    }),
-
-    // 27i-b. audio near-dup CLUSTERS — the keep-one-per-cluster key
-    // over q154's pairs (the q37/q150 policy applied to sound): energy-
-    // contour Hamming edges feed the shared hash-min label propagation;
-    // corrupt clips are honest singletons. FULL oracle: the q154
-    // fingerprint replay + the engine-faithful blocking + recursive
-    // reachability (the q150 mold).
-    "q156_audio_clusters" -> ((s, dir) => {
-      val docs = Tables(s, dir).documents
-      val hashed = docs.select(col("doc_id"),
-        F.audioFingerprint(F.fpWavFixture(col("doc_id"))).as("afp"))
-      val pairs = SimHashDedup.hammingPairs(hashed, "doc_id", "afp",
-        maxHamming = 3)
-      DedupClusters.connectedComponents(docs.select("doc_id"), "doc_id",
-        pairs)
-    }),
-
-    // 27i-c. audio activity segmentation (the VAD primitive: silence
-    // trimming, speech-segment chunking, duration accounting) — decode
-    // the PCM frames the engine assembled, box the time axis with the
-    // fingerprint's 65-box rule, call a box ACTIVE when Σamp ≥
-    // 600·frames (exact cross-multiplication, no mean rounding), and
-    // fold the run structure: active-box count, segment count, longest
-    // silence run, first active box. ABSOLUTE-threshold semantics — a
-    // gain twin legitimately changes verdicts (the spec pins this
-    // distinction vs the gain-invariant q154 fingerprint). FULL
-    // oracle: box amplitudes replay as channels·gain·(37·lvl+5) from
-    // the q154 level plant, runs via lag + gaps-and-islands. Corrupt
-    // clips are honest NULL rows. One map-side decode pass, zero
-    // shuffles beyond the scan.
-    "q163_audio_vad" -> ((s, dir) => {
-      val docs = Tables(s, dir).documents
-      docs.select(col("doc_id"),
-          F.vadStats(F.fpWavFixture(col("doc_id")), 600L).as("v"))
-        .select(col("doc_id"),
-          element_at(col("v"), 1).as("n_frames"),
-          element_at(col("v"), 2).as("n_active"),
-          element_at(col("v"), 3).as("n_segments"),
-          element_at(col("v"), 4).as("longest_silence"),
-          nullif(element_at(col("v"), 5), lit(-1L)).as("first_active"))
-    }),
-
-    // 27j. clip near-dup — frames → q148 hashes → near-dup CLIP
-    // detection: decode every APNG frame (real walk), dHash each with
-    // the still-image construction, block candidate clips on the
-    // frame-0 hash (the shared pigeonhole machinery — complete, since
-    // a clip pair needs EVERY frame within the ball), then verify
-    // equal frame counts and max aligned-frame Hamming ≤ 3. Output per
-    // doc: frame count, the xor-fold clip signature (pins every frame
-    // hash), dup count, best partner; corrupt clips are honest NULLs.
-    // FULL oracle: every frame hash bit replays from doc_id arithmetic
-    // (murmur64 parity == DuckDB hash()) while Spark genuinely decodes
-    // the animation containers it assembled. Scale shape: one decode
-    // pass into a ~40-byte/doc hash frame (localCheckpoint), the
-    // narrow blocking shuffle, frame-aligned verify joins on candidate
-    // pairs only.
-    "q155_clip_neardup" -> ((s, dir) => {
-      val docs = Tables(s, dir).documents
-      val fh = docs.select(col("doc_id"),
-          F.clipFrameHashes(F.clipFixture(col("doc_id"))).as("fhs"))
-        .localCheckpoint(true)
-      val flat = fh.where(col("fhs").isNotNull)
-        .select(col("doc_id"), size(col("fhs")).cast("long").as("nf"),
-          posexplode(col("fhs")).as(Seq("frame_no", "dhash")))
-      val f0 = flat.where(col("frame_no") === 0)
-        .select(col("doc_id"), col("dhash"))
-      val cand = SimHashDedup.hammingPairs(f0, "doc_id", "dhash",
-        maxHamming = 3)
-      val fa = flat.select(col("doc_id").as("id_a"), col("nf").as("nf_a"),
-        col("frame_no"), col("dhash").as("h_a"))
-      val fb = flat.select(col("doc_id").as("id_b"), col("nf").as("nf_b"),
-        col("frame_no"), col("dhash").as("h_b"))
-      val pairs = cand.join(fa, Seq("id_a")).join(fb, Seq("id_b", "frame_no"))
-        .where(col("nf_a") === col("nf_b"))
-        .groupBy(col("id_a"), col("id_b"), col("nf_a"))
-        .agg(max(expr("bit_count(h_a ^ h_b)")).as("max_ham"),
-          count(lit(1)).as("n_aligned"))
-        .where(col("max_ham") <= 3 && col("n_aligned") === col("nf_a"))
-        .select("id_a", "id_b")
-      val sided = pairs.select(explode(array(
-          struct(col("id_a").as("doc_id"), col("id_b").as("partner")),
-          struct(col("id_b").as("doc_id"), col("id_a").as("partner"))))
-          .as("s"))
-        .select(col("s.doc_id"), col("s.partner"))
-      val agg = sided.groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_dups"),
-          min(col("partner")).as("min_partner"))
-      fh.select(col("doc_id"),
-          when(col("fhs").isNotNull, size(col("fhs")).cast("long"))
-            .as("n_frames"),
-          when(col("fhs").isNotNull,
-            aggregate(col("fhs"), lit(0L), (a, x) => a.bitwiseXOR(x)))
-            .as("clip_sig"))
-        .join(agg, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("n_frames"), col("clip_sig"),
-          coalesce(col("n_dups"), lit(0L)).as("n_dups"),
-          col("min_partner"))
-    }),
-
-    // 27k. scene-cut detection — per-clip temporal segmentation, the
-    // standard first pass of any video pipeline (keyframe selection,
-    // shot-level dedup, caption alignment all hang off it): decode
-    // every APNG frame (the q155 walk), dHash each, and call a CUT
-    // wherever adjacent-frame Hamming exceeds 8 (within-shot jitter is
-    // ≤ 4 by the fixture's construction; cut transitions land on
-    // independent patterns). Output per doc: frame count, cut count,
-    // shot count, longest shot, first cut position; corrupt clips are
-    // honest NULL rows. FULL oracle: every frame hash bit replays from
-    // doc_id arithmetic (murmur64 parity/masks == DuckDB hash()
-    // unsigned mods) and DuckDB applies the same lag/threshold rule.
-    // Scale shape: one decode pass into a bounded hash frame, ONE
-    // doc_id shuffle shared by the lag window and the aggregate —
-    // per-doc state is frames-bounded, never corpus-bounded.
-    "q158_scene_cuts" -> ((s, dir) => {
-      val docs = Tables(s, dir).documents
-      val fh = docs.select(col("doc_id"),
-        F.clipFrameHashes(F.sceneClipFixture(col("doc_id"))).as("fhs"))
-      val flat = fh.where(col("fhs").isNotNull)
-        .select(col("doc_id"), size(col("fhs")).cast("long").as("nf"),
-          posexplode(col("fhs")).as(Seq("frame_no", "dhash")))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("doc_id").orderBy("frame_no")
-      val marked = flat
-        .withColumn("prev", lag(col("dhash"), 1).over(w))
-        .withColumn("is_cut",
-          when(col("prev").isNotNull &&
-            expr("bit_count(dhash ^ prev)") > 8, 1L).otherwise(0L))
-        .withColumn("shot", sum(col("is_cut")).over(
-          w.rowsBetween(org.apache.spark.sql.expressions.Window
-            .unboundedPreceding, 0)))
-      val shots = marked.groupBy(col("doc_id"), col("shot"))
-        .agg(count(lit(1)).as("shot_len"))
-      val agg = marked.groupBy(col("doc_id"))
-        .agg(max(col("nf")).as("n_frames"),
-          sum(col("is_cut")).as("n_cuts"),
-          min(when(col("is_cut") === 1L, col("frame_no").cast("long")))
-            .as("first_cut"))
-        .join(shots.groupBy(col("doc_id"))
-          .agg(max(col("shot_len")).as("longest_shot")), Seq("doc_id"))
-      docs.select(col("doc_id")).join(agg, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("n_frames"), col("n_cuts"),
-          (col("n_cuts") + 1L).as("n_shots"), col("longest_shot"),
-          col("first_cut"))
-    }),
-
-    // 27h. image near-dup CLUSTERS — the keep-one-per-cluster key over
-    // q148's pairs (the q37 policy applied to images): dHash Hamming
-    // edges feed the shared hash-min label propagation; undecodable
-    // images are honest singletons. The full oracle replays the hash
-    // bits and folds reachability in a recursive CTE (the q37 mold).
-    // Same pigeonhole shuffle as q148 + the per-round narrow CC joins.
-    "q150_image_clusters" -> ((s, dir) => {
-      val docs = Tables(s, dir).documents
-      val hashed = docs.select(col("doc_id"),
-        element_at(F.perceptualHashes(
-          F.patternImageFixture(col("doc_id"))), 1).as("dhash"))
-      val pairs = SimHashDedup.hammingPairs(hashed, "doc_id", "dhash",
-        maxHamming = 3)
-      DedupClusters.connectedComponents(docs.select("doc_id"), "doc_id",
-        pairs)
-    }),
-
-    // 29s. feed → recrawl composition: the q128 estimator's cold start
-    // solved with the channel q134 discovers and q135 parses — URLs
-    // whose fetch history is thinner than 3 observations take their
-    // revisit bucket from the newest feed-item age instead (≤2d hot,
-    // ≤7d warm, ≤30d cool, else cold); thick history always wins, and
-    // a thin URL with no feed keeps its history verdict. The fixture
-    // thins the q128 plant on a known URL subset and plants per-URL
-    // feeds (some gzipped) whose newest item ages url_id·3 days —
-    // RSS with the conventional day-of-week-prefixed RFC-822 pubDate
-    // (GMT for url%4=0, numeric +0000 for url%4=2) on even urls, Atom
-    // ISO on odd; Spark genuinely decodes + parses via the SHARED
-    // Feeds.items/Sitemap kernels while the oracle replays the plant
-    // arithmetic. Two url-keyed aggs + one co-partitioned join.
-    "q144_feed_recrawl" -> ((s, dir) => {
-      val id = col("doc_id")
-      val docs = Tables(s, dir).documents
-      val seqc = floor(id / 20).cast("long")
-      val v = (id % 20) % 4
-      val thin = col("url_id") % 5 === 4 || col("url_id") <= 1 ||
-        col("url_id") === 16
-      val hist = docs.select(
-        (id % 20).as("url_id"), seqc.as("seq"),
-        when(v === 0, lit(0L)).when(v === 1, seqc)
-          .when(v === 2, floor(seqc / 2).cast("long"))
-          .otherwise(floor(seqc / 12).cast("long")).as("ch"))
-        .where(!thin || col("seq") === 0L)
-      val u = col("url_id")
-      val nit = (lit(2) + u % 2).cast("int")
-      val newest = date_sub(lit("2024-02-15").cast("date"),
-        (u * 3).cast("int"))
-      val entries = array_join(transform(sequence(lit(0), nit - 1), i =>
-        concat(lit("<entry><title>I</title>" +
-            "<link href=\"http://f.example/"),
-          u.cast("string"), lit("/"), i.cast("string"),
-          lit("\"/><updated>"),
-          date_format(date_sub(newest, i * 40), "yyyy-MM-dd"),
-          lit("T08:00:00Z</updated></entry>"))), "")
-      val rssItems = array_join(transform(sequence(lit(0), nit - 1), i =>
-        concat(lit("<item><title>I</title><link>http://f.example/"),
-          u.cast("string"), lit("/"), i.cast("string"),
-          lit("</link><pubDate>"),
-          date_format(date_sub(newest, i * 40), "EEE, dd MMM yyyy"),
-          when(u % 4 === 0, lit(" 08:00:00 GMT"))
-            .otherwise(lit(" 08:00:00 +0000")),
-          lit("</pubDate></item>"))), "")
-      val xml = when(u % 2 === 0, concat(
-          lit("<?xml version=\"1.0\"?><rss version=\"2.0\"><channel>" +
-            "<title>F</title>"),
-          rssItems, lit("</channel></rss>")))
-        .otherwise(concat(
-          lit("<?xml version=\"1.0\"?>" +
-            "<feed xmlns=\"http://www.w3.org/2005/Atom\"><title>F</title>"),
-          entries, lit("</feed>")))
-      val body = when(u % 4 === 2, graft.sources.Sitemap.gzipUtf8(xml))
-        .otherwise(xml.cast("binary"))
-      val feedDocs = docs.select((id % 20).as("url_id")).distinct()
-        .where(u % 3 =!= 2)
-        .select(u, graft.sources.Sitemap.bodyText(body).as("xml"))
-      val items = graft.sources.Feeds.items(feedDocs, "url_id", "xml")
-      Recrawl.scheduleWithFeedPrior(hist, "url_id", "seq", "ch",
-        items, "url_id", "pub_ts", "2024-02-15", minFetches = 3)
-    }),
-
-    // 20i. incremental dedup probe — new-crawl docs against an EXISTING
-    // corpus signature index, the production shape at 100 TB (the
-    // corpus index is built ONCE and persisted; each day's crawl
-    // computes only ITS signatures and probes the band buckets — no
-    // index×index pairs ever form again). Fixture: even ids < 32 are
-    // "the corpus", odd ids "the crawl"; output per incoming doc is the
-    // best index match (max estimate, min id on ties) or a novelty
-    // verdict. Same banded machinery as q17; the oracle replays the
-    // full minhash in recursive SQL restricted to the probe direction.
-    "q137_dedup_probe" -> ((s, dir) => {
-      val docs = Tables(s, dir).documents.where(col("doc_id") < 32)
-      def sigs(parity: Int) = MinHashDedup.signatures(
-        docs.where(col("doc_id") % 2 === parity), "doc_id", "text",
-        ShingleK, NumPerms, Bands)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val idx = sigs(0); val inc = sigs(1)
-      val cand = MinHashDedup.probePairs(idx, inc, NumPerms,
-        minJaccardPct = 5)
-      bestProbeMatch(inc, cand)
-    }),
-
-    // 20i-b. the same probe against a PERSISTED index — the actual
-    // daily-pipeline shape: the corpus signature index is written ONCE
-    // as bucketed parquet (exploded (id, band, bucket) rows bucketBy
-    // (band, bucket) + an id-bucketed signature payload), and each
-    // day's crawl probes it with ZERO index-side exchange — only the
-    // small crawl side shuffles, into the index's fixed layout
-    // (DedupSpec pins the exchange-free plan). Identical semantics to
-    // q137 — the oracle is shared verbatim, so the persisted path must
-    // reproduce the in-session path row for row.
-    "q137b_dedup_probe_persisted" -> ((s, dir) => {
-      val docs = Tables(s, dir).documents.where(col("doc_id") < 32)
-      def sigs(parity: Int) = MinHashDedup.signatures(
-        docs.where(col("doc_id") % 2 === parity), "doc_id", "text",
-        ShingleK, NumPerms, Bands)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val tableBase = memoized(s, s"minhash_idx|$dir") {
-        MinHashDedup.writeIndex(sigs(0), "graft_q137b_idx",
-          numBuckets = 8)
-        "graft_q137b_idx"
-      }
-      val inc = sigs(1)
-      val cand = MinHashDedup.probePersisted(s, tableBase, inc,
-        NumPerms, minJaccardPct = 5)
-      bestProbeMatch(inc, cand)
-    }),
-
-    // 20i-c. index LIFECYCLE: build → absorb a day → absorb another →
-    // accretion audit → compact → probe. Every absorb appends one file
-    // generation per bucket; the manifest gauge reads the accretion and
-    // trips the compaction, whose rebuild collapses the index back to
-    // one generation with IDENTICAL probe semantics — the monthly
-    // maintenance loop a daily 100 TB pipeline lives by. Fixture:
-    // docs < 32 reach the index in three installments (evens≡0 mod 4
-    // at build, evens≡2 mod 4 then odds absorbed); docs [32, 48) are
-    // the post-compaction crawl. The oracle replays the probe against
-    // ALL of < 32 — any row the lifecycle lost or duplicated shifts a
-    // verdict. File-count gauges stay spec-gated (DedupSpec): they
-    // depend on write parallelism, verdicts don't.
-    "q149_index_lifecycle" -> ((s, dir) => {
-      val docs = Tables(s, dir).documents.where(col("doc_id") < 48)
-      def sigsOf(pred: Column) = MinHashDedup.signatures(
-        docs.where(pred), "doc_id", "text", ShingleK, NumPerms, Bands)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val id = col("doc_id")
-      val tableBase = memoized(s, s"minhash_idx_lifecycle|$dir") {
-        val base = "graft_q149_idx"
-        MinHashDedup.writeIndex(sigsOf(id < 32 && id % 4 === 0), base,
-          numBuckets = 8)
-        MinHashDedup.absorbIndex(sigsOf(id < 32 && id % 4 === 2), base,
-          numBuckets = 8)
-        MinHashDedup.absorbIndex(sigsOf(id < 32 && id % 2 === 1), base,
-          numBuckets = 8)
-        // the audit → compact trigger: two absorbs accreted the layout
-        val gauge = MinHashDedup.indexManifest(s, base, compactAfter = 2)
-        if (!gauge.where(col("needs_compaction")).isEmpty)
-          MinHashDedup.compactIndex(s, base, numBuckets = 8)
-        base
-      }
-      val inc = sigsOf(id >= 32)
-      val cand = MinHashDedup.probePersisted(s, tableBase, inc,
-        NumPerms, minJaccardPct = 5)
-      bestProbeMatch(inc, cand)
-    }),
-
-    // 26aj. HTML → Markdown conversion — structure-preserving corpus
-    // text (the markdown-corpus convention of recent public pipeline
-    // work): headings, emphasis, links and lists carry signal flat
-    // extraction (q103) throws away. Bounded non-nested subset;
-    // fixture pages are PURE arithmetic (headings h1-h3, b/strong and
-    // i/em variants, an entity, a planted link, 2-3 bullets, a
-    // plain-paragraph page, and a TORN unclosed heading that must
-    // degrade to stripped plain text) so the oracle rebuilds the exact
-    // expected markdown string. Map-side kernel, zero shuffles.
-    "q138_markdown" -> ((s, dir) => {
-      val id = col("doc_id")
-      val site = concat(lit("http://site"),
-        ((id % 50) % 10).cast("string"), lit(".example"))
-      val lvl = (lit(1) + id % 3).cast("string")
-      val head = concat(lit("<h"), lvl, lit(">Head "), id.cast("string"),
-        lit("</h"), lvl, lit(">"))
-      val boldTag = when(id % 2 === 0, lit("b")).otherwise(lit("strong"))
-      val emTag = when(id % 4 < 2, lit("i")).otherwise(lit("em"))
-      val para = concat(lit("<p>Intro <"), boldTag, lit(">bold"),
-        id.cast("string"), lit("</"), boldTag, lit("> and <a href=\""),
-        site, lit("/a/"), id.cast("string"), lit("\">link "),
-        id.cast("string"), lit("</a> &amp; <"), emTag, lit(">it"),
-        id.cast("string"), lit("</"), emTag, lit("> tail.</p>"))
-      val items = array_join(transform(
-        sequence(lit(0), (lit(1) + id % 2).cast("int")), i =>
-          concat(lit("<li>item "), id.cast("string"), lit("-"),
-            i.cast("string"), lit("</li>"))), "")
-      // table page (id%5=0): th header + 1..3 data rows, 2-3 columns —
-      // the q133 geometry rendered as GFM pipes
-      val nc3 = id % 2 === 1 // third column present
-      val nr = (lit(1) + id % 3).cast("int")
-      val hdr = concat(lit("<tr><th>H0</th><th>H1</th>"),
-        when(nc3, lit("<th>H2</th>")).otherwise(lit("")), lit("</tr>"))
-      val dataRows = array_join(transform(sequence(lit(0), nr - 1), r =>
-        concat(lit("<tr><td>c"), id.cast("string"), lit("-"),
-          r.cast("string"), lit("-0</td><td>c"), id.cast("string"),
-          lit("-"), r.cast("string"), lit("-1</td>"),
-          when(nc3, concat(lit("<td>c"), id.cast("string"), lit("-"),
-            r.cast("string"), lit("-2</td>"))).otherwise(lit("")),
-          lit("</tr>"))), "")
-      val tablePage = concat(lit("<html><body><p>Pre "),
-        id.cast("string"), lit(".</p><table>"), hdr, dataRows,
-        lit("</table></body></html>"))
-      // nested-list page (id%5=1): outer item 0 carries a 1-2 item
-      // inner list — one-level nesting, the documented subset
-      val ni = (lit(1) + id % 2).cast("int")
-      val inner = array_join(transform(sequence(lit(0), ni - 1), i =>
-        concat(lit("<li>n "), id.cast("string"), lit("-"),
-          i.cast("string"), lit("</li>"))), "")
-      val nestedPage = concat(lit("<html><body><ul><li>o "),
-        id.cast("string"), lit("-0<ul>"), inner,
-        lit("</ul></li><li>o "), id.cast("string"),
-        lit("-1</li></ul></body></html>"))
-      val html = when(id % 9 === 8,
-        concat(lit("<html><body><h1>Torn "), id.cast("string"),
-          lit("</body></html>")))
-        .when(id % 7 === 6,
-          concat(lit("<html><body><p>plain "), id.cast("string"),
-            lit("</p></body></html>")))
-        .when(id % 5 === 0, tablePage)
-        .when(id % 5 === 1, nestedPage)
-        .otherwise(concat(lit("<html><body>"), head, para,
-          lit("<ul>"), items, lit("</ul></body></html>")))
-      Tables(s, dir).documents
-        .select(id, HtmlText.toMarkdown(html).as("markdown"))
-    }),
-
-    // 26ak. declared-vs-detected language audit — `<html lang>` (the
-    // WHATWG attribute) against the content-based n-gram language id
-    // (q24): a page whose declaration disagrees with its content is
-    // mislabeled (wrong-language boilerplate, copy-paste templates) and
-    // corpus language routing must trust the CONTENT. Attr extraction
-    // is anchored to the OPENING <html> tag so a decoy inside body text
-    // can never match; a missing attr is an honest NULL (agree=false).
-    // Map-side, zero shuffles.
-    "q139_lang_attr" -> ((s, dir) => {
-      val id = col("doc_id")
-      val attr = when(id % 5 === 2, lit(""))
-        .when(id % 4 === 1,
-          concat(lit(" LANG=\""), upper(col("lang")), lit("\"")))
-        .otherwise(concat(lit(" lang=\""), col("lang"), lit("\"")))
-      val html = concat(lit("<html"), attr,
-        lit("><head></head><body><p>"), col("text"),
-        lit("</p></body></html>"))
-      val openTag = regexp_extract(html, "(?i)^<html\\b[^>]*>", 0)
-      val declared = lower(nullif(regexp_extract(openTag,
-        "(?i)\\blang\\s*=\\s*\"([^\"]*)\"", 1), lit("")))
-      val predicted = TextStats.langId(col("text"))
-      Tables(s, dir).documents.select(id,
-        declared.as("declared_lang"), predicted.as("predicted_lang"),
-        coalesce(declared === predicted, lit(false)).as("agree"))
-    }),
-
-    // 29r. redirect-chain resolution — the frontier step between
-    // fetching and canonical URL identity: 3xx captures yield the
-    // functional (source, Location) edge set; path DOUBLING resolves
-    // every source to its final target in log₂(maxHops) joins (8 hops =
-    // 3 joins), loops and over-limit chains report unresolved with a
-    // NULL hop count. The fixture plants 1-3 hop chains by arithmetic
-    // plus loop chains (id%9=8) whose last hop points back to hop 0;
-    // Spark genuinely parses statuses + Location headers and resolves,
-    // while the oracle replays the plant (a loop source's position
-    // after 2³ doubled steps is (j+8) mod L — exact arithmetic).
-    "q142_redirects" -> ((s, dir) => {
-      val warc = GraftWarc.read(s, s"${warcRedirectFixture(s, dir)}/*.warc*")
-      val edges = warc.where(col("warc_type") === "response" &&
-        col("http_status").between(300, 399) &&
-        col("http_location").isNotNull)
-        .select(col("target_uri").as("src"),
-          col("http_location").as("dst"), col("warc_date"))
-      Redirects.resolve(edges, "src", "dst", maxHops = 8,
-          preferCol = Some("warc_date"))
-        .select(
-          regexp_extract(col("src"), "/r/([0-9]+)/", 1).cast("long")
-            .as("doc_id"),
-          regexp_extract(col("src"), "/r/[0-9]+/([0-9]+)$", 1).cast("long")
-            .as("hop_idx"),
-          col("final_url"), col("hops"), col("resolved"))
-    }),
-
-    // 27f. PDF Info-dictionary metadata (ISO 32000-1 §14.3.3 subset) —
-    // the provenance fields a corpus keeps beside q123's extracted
-    // text: title (as a document header), author, creation date (the
-    // recency-keeper input, q69). The planted title exercises the
-    // §7.3.4.2 escape decoder (\( \) round-trip); no-Info and not-a-PDF
-    // variants answer NULLs. Map-side kernel, zero shuffles.
-    "q141_pdf_meta" -> ((s, dir) => {
-      val id = col("doc_id")
-      val m = F.pdfInfo(F.pdfInfoFixture(id))
-      Tables(s, dir).documents.select(id,
-        element_at(m, 1).as("pdf_title"),
-        element_at(m, 2).as("pdf_author"),
-        to_date(substring(element_at(m, 3), 3, 8), "yyyyMMdd")
-          .as("created_date"),
-        element_at(m, 1).isNotNull.as("has_info"))
-    }),
-
-    // 26al. vocabulary-growth (Heaps-law) audit — the sizing input for
-    // vocab budgets and Heaps-bounded broadcast decisions (see
-    // QualityClassifier): cumulative tokens + cumulative distinct terms
-    // (by first occurrence) at ten doc-id-prefix checkpoints, plus the
-    // log-log least-squares slope as an integer micro-β both engines
-    // compute bit-equal (milli-quantized lns, BIGINT cross-multiplied
-    // regression, pmod-floor division). ONE wide shuffle — min doc id
-    // per term; everything after runs on the 10-row checkpoint dim.
-    // (the synthetic corpus has a CLOSED wordlist — vocab saturates in
-    // bucket 1 and β degenerates to 0 — so the fixture appends one
-    // doc-unique token per doc, the id/timestamp-like open-class tail
-    // every real corpus has; β then lands mid-curve and the regression
-    // arithmetic is genuinely discriminated)
-    "q140_heaps_audit" -> ((s, dir) =>
-      CorpusStats.heapsGrowth(
-        Tables(s, dir).documents.select(col("doc_id"),
-          concat(col("text"), lit(" u"), col("doc_id").cast("string"))
-            .as("text")),
-        "doc_id", "text")),
-
-    // 27e. WAV/RIFF audio header decode — the audio leg of the
-    // multimodal metadata path: a genuine chunk walk (fmt fields, data
-    // size, odd-chunk pad alignment) over containers the fixture
-    // assembles from doc_id arithmetic; torn / non-RIFF / non-WAVE
-    // variants answer NULL, never a throw. Map-side kernel, zero
-    // shuffles (the q83/q95 pattern, audio instead of pixels).
-    "q129_wav_headers" -> ((s, dir) => {
-      val id = col("doc_id")
-      val m = F.wavMeta(F.wavFixture(id))
-      Tables(s, dir).documents.select(id,
-        element_at(m, 1).as("audio_format"),
-        element_at(m, 2).as("channels"),
-        element_at(m, 3).as("sample_rate"),
-        element_at(m, 4).as("bits_per_sample"),
-        element_at(m, 5).as("n_frames"),
-        element_at(m, 6).as("duration_ms"))
-    }),
-
-    // 26r. CCNet-style trained-LM perplexity: fit an add-one bigram LM on
-    // the deterministic q41 train split, score the WHOLE corpus against
-    // it — model and corpus decoupled (q58's self-LM can't say "looks
-    // like the reference domain"; this is the signal CCNet buckets into
-    // head/middle/tail). DECIMAL(18,9) per-bigram quantization keeps the
-    // score engine-exact; the LM join shuffles on the bigram key (the
-    // bigram table is O(train tokens), not Heaps-sublinear — see
-    // Perplexity.bigramScore's scaladoc for why broadcast is opt-in).
-    "q114_bigram_lm" -> ((s, dir) => {
-      val docs = Tables(s, dir).documents
-      graft.functions.Perplexity.bigramScore(
-        Sampling.sample(docs, "doc_id", 9000), docs, "doc_id", "text")
-    }),
-
-    // 26s. Gopher quality-rule battery (Rae et al. 2021 table A1 — the
-    // public heuristic set MassiveText/RefinedWeb/Dolma filter with):
-    // word-count and mean-word-length bounds, symbol-to-word ratio,
-    // bullet/ellipsis line fractions, alphabetic-word fraction, stop-word
-    // hits. Every rule decided in integer cross-multiplied arithmetic —
-    // no float thresholds for engines to disagree on. One map-side
-    // codegen pass, zero shuffles.
-    "q115_gopher_rules" -> ((s, dir) =>
-      graft.functions.GopherRules.evaluate(Tables(s, dir).documents,
-        "doc_id", "text")),
-
-    // 26t. C4 cleaning rules (Raffel et al. 2020 §2.2): line-level keep
-    // predicate (terminal punctuation + >=5 words + no javascript) and
-    // page-level gates (>=3 sentences, no curly brace, no lorem ipsum) —
-    // the line-granular sibling of q115's document-level battery. One
-    // map-side pass of list lambdas, zero shuffles.
-    "q116_c4_filters" -> ((s, dir) =>
-      graft.functions.C4Filters.evaluate(Tables(s, dir).documents,
-        "doc_id", "text")),
-
-    // 26t-b. code-quality battery (the BigCode/StarCoder recipe) —
-    // line-geometry gates, alphanumeric density, long-line share,
-    // autogen-marker scan; the q115/q116 shape applied to code
-    // corpora. One map-side pass of list lambdas, zero shuffles; all
-    // fractions are ×1e6 integer floors the oracle replays exactly.
-    "q161_code_filters" -> ((s, dir) =>
-      graft.functions.CodeFilters.evaluate(Tables(s, dir).documents,
-        "doc_id", "text")),
-
-    // 26u. Temperature-based multilingual mixing (the p^alpha sampling
-    // convention of XLM-R/mBERT/Gopher, alpha = 0.7): up-weights tail
-    // languages relative to their raw share without drowning the head —
-    // the standard fix for "English is 90% of the crawl". The smoothed
-    // mass quantizes to DECIMAL(18,9) BEFORE normalization (absorbing
-    // pow() ulp differences, the q58/q114 discipline), and the final
-    // per-million weight is integer arithmetic over the quantized masses
-    // — engine-exact. Two one-row broadcast totals; the only shuffle is
-    // the per-language count's partial-agg merge.
-    // 26v. Duplicated-content page signal (RefinedWeb §3.3): fraction of
-    // a page's characters living in paragraphs shared by >=2 distinct
-    // docs, with a 30% keep threshold — the page-level SCORING use of the
-    // q79 evidence (q79 rewrites text; this gates pages). Census shuffles
-    // (xxhash64, length), never text; one doc-keyed agg ends it.
-    "q118_dup_paragraphs" -> ((s, dir) =>
-      LineDedup.dupParagraphStats(Tables(s, dir).documents,
-        "doc_id", "text")),
-
-    // 26w. URL quality filter (RefinedWeb §3.1.2): judge pages by URL
-    // alone — blocklist dim (broadcast hash joins: exact host + the
-    // bounded parent-suffix chain, so `example.com` bans its subdomains
-    // without list pre-expansion), severity-weighted soft/strict
-    // bad-word score (soft = whole-token map lookup, strict = substring
-    // containment), an explicit has-host rule, digit-host and
-    // subdomain-depth bounds in integer cross-multiplication. One
-    // map-side codegen pass + broadcast joins, zero wide shuffles; the
-    // oracle re-derives every counter from the reconstructed URL with
-    // DuckDB string/list functions.
-    "q119_url_filter" -> ((s, dir) =>
-      graft.functions.UrlFilter.evaluate(
-        Tables(s, dir).documents
-          .select(col("doc_id"), plantedFilterUrl(col("doc_id")).as("url")),
-        "doc_id", "url", blocklistDim(s))),
-
-    // 26x. Trained quality classifier (GPT-3/LLaMA/CCNet reference-vs-
-    // crawl gate): fit multinomial NB on a curated reference class (the
-    // hash-deterministic half of the English docs) vs a disjoint random-
-    // crawl class (the other hash half, all languages), then score the
-    // WHOLE corpus. Training is one counting shuffle; the Heaps-bounded
-    // (term, cpos, cneg) model broadcasts so the corpus stream joins
-    // map-side. DECIMAL(18,9) per-token quantization keeps scores
-    // engine-exact; the oracle refits the same counts and replays the
-    // decision function.
-    "q120_nb_quality" -> ((s, dir) => {
-      val docs = Tables(s, dir).documents
-      val b = Sampling.bucket(col("doc_id"))
-      graft.functions.QualityClassifier.nbScore(
-        docs.where(col("lang") === "en" && b < 5000),
-        docs.where(b >= 5000),
-        docs, "doc_id", "text")
-    }),
-
-    // 26x-b. classifier EVALUATION — the audit loop q120 was missing
-    // (a filter model you can't score is a filter you can't trust):
-    // label = "is the doc English" (the signal the NB model was weakly
-    // trained toward), metric = ROC AUC via the rank statistic plus a
-    // 10-bin calibration table. AUC is computed in the distributed
-    // shape — collapse to DISTINCT logit values first (groupBy with
-    // map-side combine), then one bounded window over the score frame;
-    // ties contribute the standard half-credit via the 2×-scaled
-    // integer numerator. Deciles come from the same cumulative counts
-    // plus a per-score row_number (ntile's exact closed form — no
-    // global row sort; the q64 offsets shape). Every output is an
-    // exact integer: DECIMAL(38,0) cross-multiplication, floor by
-    // subtract-mod. FULL oracle: the q120 score replay + the same rank
-    // algebra in SQL.
-    "q160_classifier_eval" -> ((s, dir) => {
-      val docs = Tables(s, dir).documents
-      val b = Sampling.bucket(col("doc_id"))
-      val scored = graft.functions.QualityClassifier.nbScore(
-        docs.where(col("lang") === "en" && b < 5000),
-        docs.where(b >= 5000),
-        docs, "doc_id", "text")
-      val lbl = scored.select(col("doc_id"), col("logit_x1000"))
-        .join(docs.select(col("doc_id"),
-          when(col("lang") === "en", 1L).otherwise(0L).as("y")),
-          Seq("doc_id"))
-      graft.functions.Eval.rocAudit(lbl, "doc_id", "logit_x1000", "y")
-    }),
-
-    // 26y. UniMax budget allocation (Chung et al. 2023): distribute 90%
-    // of the corpus token budget as uniformly as possible across
-    // languages, capped at 1 epoch per language — tail languages run
-    // whole, the head splits the remainder evenly. Closed-form waterfill
-    // in cross-multiplied integer arithmetic over the bounded language
-    // dim; the corpus is touched once (map-side token count + one
-    // groupBy). Allocations sum to the budget exactly.
-    "q121_unimax" -> ((s, dir) =>
-      UniMax.allocate(Tables(s, dir).documents, "lang", "text",
-        budgetBp = 9000, epochCap = 1)),
-
-    "q117_temperature_mix" -> ((s, dir) => {
-      val per = Tables(s, dir).documents
-        .groupBy(col("lang")).agg(count(lit(1)).as("n_docs"))
-      val tot = per.agg(sum(col("n_docs")).as("n_total"))
-      val q = per.crossJoin(broadcast(tot))
-        .withColumn("q_x1e9",
-          floor(pow(col("n_docs").cast("double") /
-              col("n_total").cast("double"), lit(0.7))
-            .cast(DecimalType(18, 9)) * 1000000000L).cast("long"))
-      val qt = q.agg(sum(col("q_x1e9")).as("q_total"))
-      q.crossJoin(broadcast(qt))
-        .select(col("lang"), col("n_docs"), col("q_x1e9"),
-          floor(col("q_x1e9") * 1000000L /
-            (col("q_total").cast("double"))).cast("long").as("w_ppm"))
-    }),
-
-    // 36. top-k distinguishing terms per doc (tf/df rational scoring, so
-    // the ranking is engine-exact — see TermScores.topTerms)
-    "q36_top_terms" -> ((s, dir) =>
-      TermScores.topTerms(Tables(s, dir).documents, "doc_id", "text", 3)),
-
-    // 37. near-dup clustering: connected components over the q19-verified
-    // pair list (hash-min propagation; oracle is a DuckDB recursive CTE)
-    "q37_dedup_clusters" -> ((s, dir) => {
-      val docs = Tables(s, dir).documents
-      val pairs = memoized(s, s"vpairs|$dir") {
-        NgramJaccard.verify(docs, minhashCandidates(s, dir),
-          "doc_id", "text", ShingleK, minJaccardPct = 50)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-      }
-      DedupClusters.connectedComponents(docs, "doc_id", pairs)
-    }),
-
-    // 38. winnowing fingerprint sketch (MOSS) — full oracle as of r7
-    // (DuckDB replays the gram fold + per-window unsigned min; the
-    // shared-run guarantee itself stays HashingSpec-tested)
-    "q38_winnow" -> ((s, dir) =>
-      Tables(s, dir).documents.select(
-        col("doc_id"),
-        size(F.winnow(F.tokensLower(col("text")), 4, 6)).as("n_fingerprints"))),
-
-    // 39. as-of join (latest dim version at or before the fact timestamp)
-    // — oracled against DuckDB's native ASOF JOIN
-    "q39_asof_join" -> ((s, dir) => {
-      val t = Tables(s, dir)
-      AsOfJoin
-        .latest(t.orders, scdFixture(t), "o_custkey",
-          col("o_orderdate").cast("timestamp"), col("eff_date"),
-          Seq("tier"))
-        .groupBy(col("tier"))
-        .agg(count(lit(1)).as("n"), xsum(col("o_totalprice")).as("total"))
-    }),
-
-    // 56. the full dedup funnel in one result: raw → exact-dedup
-    // survivors → near-dup-cluster survivors
-    "q56_dedup_funnel" -> ((s, dir) => {
-      val docs = Tables(s, dir).documents
-      val pairs = memoized(s, s"vpairs|$dir") {
-        NgramJaccard.verify(docs, minhashCandidates(s, dir),
-          "doc_id", "text", ShingleK, minJaccardPct = 50)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-      }
-      val raw = docs.agg(count(lit(1)).as("n_docs"))
-        .withColumn("stage", lit("raw"))
-      val exact = ExactDedup.groups(docs, "doc_id", "text")
-        .agg(count(lit(1)).as("n_docs"))
-        .withColumn("stage", lit("exact_dedup"))
-      val near = DedupClusters.connectedComponents(docs, "doc_id", pairs)
-        .agg(countDistinct(col("component")).as("n_docs"))
-        .withColumn("stage", lit("near_dedup"))
-      raw.unionByName(exact).unionByName(near).select("stage", "n_docs")
-    }),
-
-    // 20e. quality-aware dedup keeper selection: per near-dup cluster,
-    // keep the HIGHEST-quality member (not min-id) — the production
-    // "which duplicate survives" policy; reuses the shared verified pairs
-    "q69_best_keeper" -> ((s, dir) => {
-      val docs = Tables(s, dir).documents
-      val pairs = memoized(s, s"vpairs|$dir") {
-        NgramJaccard.verify(docs, minhashCandidates(s, dir),
-          "doc_id", "text", ShingleK, minJaccardPct = 50)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-      }
-      val comps = DedupClusters.connectedComponents(docs, "doc_id", pairs)
-      val q = docs.select(col("doc_id"),
-        TextStats.qualityScore(col("text")).as("quality"))
-      comps.join(q, col("id") === col("doc_id"))
-        .groupBy(col("component"))
-        .agg(count(lit(1)).as("n_members"),
-          // max quality, then min id: one exact integer composite
-          max_by(col("id"), col("quality") * lit(1000000000000L) - col("id"))
-            .as("keeper_id"),
-          max(col("quality")).as("keeper_quality"))
-    }),
-
-    // 37c. source-mixing weights: per-source doc share and the per-doc
-    // sampling weight that rebalances to a uniform source mixture — the
-    // data-mixture step of corpus assembly, integer-exact
-    "q70_mix_weights" -> ((s, dir) => {
-      val per = Tables(s, dir).documents
-        .groupBy(col("source")).agg(count(lit(1)).as("n_docs"))
-      val tot = per.agg(sum(col("n_docs")).as("n_total"),
-        count(lit(1)).as("n_sources"))
-      per.crossJoin(broadcast(tot))
-        .select(col("source"), col("n_docs"),
-          (col("n_docs") * 10000 / col("n_total")).cast("long").as("share_bp"),
-          (lit(10000L) * col("n_total") / (col("n_sources") * col("n_docs")))
-            .cast("long").as("weight_x10000"))
-    }),
-
-    // 25b. per-language perplexity terciles (CCNet-style head/middle/tail
-    // quality buckets): ntile over the deterministic decimal NLL
-    "q71_ppl_buckets" -> ((s, dir) => {
-      val docs = Tables(s, dir).documents
-      val ppl = graft.functions.Perplexity.score(docs, "doc_id", "text")
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("lang"))
-        .orderBy(col("avg_nll_x1000"), col("doc_id"))
-      ppl.join(docs.select("doc_id", "lang"), "doc_id")
-        .withColumn("bucket", ntile(3).over(w).cast("long"))
-        .groupBy(col("lang"), col("bucket"))
-        .agg(count(lit(1)).as("n"),
-          min(col("avg_nll_x1000")).as("min_nll"),
-          max(col("avg_nll_x1000")).as("max_nll"))
-    }),
-
-    // 39c. snapshot diff: classify keys across two table versions as
-    // added/removed/changed/same by map-side payload hash — the diff of
-    // the q61 CDC merge against its input snapshot, so every status is
-    // populated by construction
-    "q75_snapshot_diff" -> ((s, dir) => {
-      val t = Tables(s, dir)
-      val snap = t.customer.select(col("c_custkey"), col("c_mktsegment"))
-      val merged = CdcMerge(snap, cdcFixture(t), "c_custkey", "seq", "op",
-        Seq("c_mktsegment"))
-      SnapshotDiff.diff(snap, merged, "c_custkey", Seq("c_mktsegment"))
-        .groupBy(col("status"))
-        .agg(count(lit(1)).as("n"), min(col("c_custkey")).as("min_key"),
-          max(col("c_custkey")).as("max_key"))
-    }),
-
-    // 26l. k-anonymity audit over quasi-identifier columns — the
-    // re-identification-risk counterpart of the q63 PII scrub
-    "q76_k_anonymity" -> ((s, dir) =>
-      KAnonymity.audit(Tables(s, dir).customer,
-        Seq("c_nationkey", "c_mktsegment"), k = 10L)),
-
-    // 14c. time-in-state weighting over SCD2 intervals: total days each
-    // tier was in effect inside a horizon (open versions clipped) — the
-    // temporal-weighting consumer of q55's interval construction
-    "q73_time_weighted" -> ((s, dir) =>
-      Scd2.timeInState(scdFixture(Tables(s, dir)), "o_custkey",
-        col("eff_date"), "tier",
-        lit("1994-01-01"), lit("1996-06-01"))),
-
-    // 9b. exact lower median per group via rank arithmetic — a MEMBER of
-    // the group, bit-identical across engines where interpolated
-    // percentiles drift in the last ulp
-    "q74_group_median" -> ((s, dir) =>
-      GroupStats.medianBy(Tables(s, dir).orders, col("o_orderstatus"),
-        dec2(col("o_totalprice")).cast("double"), col("o_orderkey"))),
-
-    // 4b. unpivot/melt — the inverse of the q4 pivot: the wide aggregate
-    // back to (group, variable, value) long form via a map-side Expand
-    // (zero shuffle beyond the pivot's own)
-    "q77_unpivot" -> ((s, dir) => {
-      val wide = PivotAggregates.countPivot(Tables(s, dir).orders,
-        "o_orderpriority", "o_orderstatus", Seq("O", "F", "P"))
-      Unpivot.melt(wide, Seq("o_orderpriority"), Seq("O", "F", "P"),
-        "status", "cnt")
-    }),
-
-    // 49b. CUBE: all four grains of (status, priority) in ONE shuffle,
-    // with the GROUPING bitmask disambiguating rolled-up vs null dims
-    "q80_cube" -> ((s, dir) =>
-      CubeAgg.cubeCounts(Tables(s, dir).orders, col("o_orderstatus"),
-        col("o_orderpriority"), col("o_totalprice"))
-        .select(
-          coalesce(col("o_orderstatus"), lit("ALL")).as("status"),
-          coalesce(col("o_orderpriority"), lit("ALL")).as("priority"),
-          col("grain_id"), col("n"), col("total"))),
-
-    // 14b. trailing 7-day RANGE-frame moving aggregates: gaps in the
-    // series shrink the window (a ROWS frame would silently reach back)
-    "q72_moving_avg" -> ((s, dir) =>
-      MovingAgg.trailingDaily(
-        Tables(s, dir).orders.where(col("o_orderdate") < lit("1995-07-01")),
-        col("o_orderpriority"), col("o_orderdate"), col("o_totalprice"),
-        days = 7)),
-
-    // 54. temporal gap fill: dense hourly series per event type with
-    // zero-filled empty buckets (generated spine, no driver loop)
-    "q54_time_fill" -> ((s, dir) =>
-      TimeFill.denseHourly(
-        Tables(s, dir).events.where(col("event_type").isin("purchase", "signup")),
-        "ts", "event_type", count(lit(1)))),
-
-    // 55. SCD type-2 interval construction (the producer side of the
-    // as-of join): change log → validity ranges via lead()
-    "q55_scd2_intervals" -> ((s, dir) => {
-      val t = Tables(s, dir)
-      Scd2.intervals(scdFixture(t), "o_custkey", col("eff_date"), Seq("tier"))
-        .groupBy(col("tier"))
-        .agg(count(lit(1)).as("n_versions"),
-          sum(when(col("valid_to").isNull, 1L).otherwise(0L)).as("n_open"))
-    }),
-
-    // 53. heavy-hitter frequency estimates from a count-min sketch built
-    // by the custom typed Aggregator (constant state per partition, one
-    // bounded sketch row to the driver) — full oracle as of r7 (DuckDB
-    // rebuilds the counters as per-(row, bucket) SUMs and replays the
-    // min-over-rows estimate; CountMinSpec keeps gating the
-    // overestimate guarantee and distributed-merge parity)
-    "q53_heavy_hitters" -> ((s, dir) => {
-      import s.implicits._
-      val toks = Tables(s, dir).documents
-        .select(explode(F.tokensLower(col("text"))).as("term"))
-      val r = toks.agg(graft.functions.CountMin.sketch(col("term")).as("sk"))
-        .select("sk.*").as[(Int, Int, Array[Long])].head()
-      val sk = graft.functions.Cms(r._1, r._2, r._3)
-      Seq("the", "a", "and", "of", "to")
-        .map(t => (t, sk.estimate(t))).toDF("term", "est_count")
-    }),
-
-    // 49. multi-grain aggregation: ROLLUP produces (status, priority),
-    // (status), and grand-total grains in one shuffle
-    "q49_rollup" -> ((s, dir) =>
-      Tables(s, dir).orders
-        .rollup(col("o_orderstatus"), col("o_orderpriority"))
-        .agg(count(lit(1)).as("n"), xsum(col("o_totalprice")).as("total"))
-        .select(
-          coalesce(col("o_orderstatus"), lit("ALL")).as("status"),
-          coalesce(col("o_orderpriority"), lit("ALL")).as("priority"),
-          col("n"), col("total"))),
-
-    // 50. argmax/argmin per group without a self-join (max_by/min_by);
-    // the ordering key is an exact-decimal composite (price, orderkey) so
-    // ties resolve identically in every engine
-    "q50_argmax" -> ((s, dir) => {
-      val rank = dec2(col("o_totalprice")) * lit(10000000000L) + col("o_orderkey")
-      Tables(s, dir).orders
-        .groupBy(col("o_orderstatus"))
-        .agg(
-          max_by(col("o_orderkey"), rank).as("biggest_order"),
-          min_by(col("o_orderkey"), rank).as("smallest_order"),
-          max(dec2(col("o_totalprice"))).cast("double").as("max_price"))
-    }),
-
-    // 51. running totals per key (cumulative window aggregation)
-    "q51_running_total" -> ((s, dir) =>
-      Tables(s, dir).orders
-        .where(col("o_custkey") < 20)
-        .select(col("o_custkey"), col("o_orderkey"),
-          sum(dec2(col("o_totalprice")))
-            .over(org.apache.spark.sql.expressions.Window
-              .partitionBy(col("o_custkey"))
-              .orderBy(col("o_orderdate"), col("o_orderkey"))
-              .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0))
-            .cast("double").as("running_total"))),
-
-    // 52. histogram binning of a measure (explicit bin arithmetic —
-    // engine-portable where width_bucket isn't)
-    "q52_histogram" -> ((s, dir) =>
-      Tables(s, dir).orders
-        .groupBy(
-          when(col("o_totalprice") < 0, 0L)
-            .when(col("o_totalprice") >= 600000.0, 13L)
-            .otherwise(floor(col("o_totalprice") / 50000.0) + 1)
-            .cast("long").as("bucket"))
-        .agg(count(lit(1)).as("n"))),
-
-    // 48. fuzzy (edit-distance) join via q-gram blocking + exact
-    // Levenshtein — right side is a deterministically corrupted copy of
-    // the nation names (3rd char dropped)
-    "q48_fuzzy_join" -> ((s, dir) => {
-      val n = Tables(s, dir).nation
-      val corrupted = n.select(col("n_nationkey").as("c_key"),
-        concat(substring(col("n_name"), 1, 2), substring(col("n_name"), 4, 1000))
-          .as("c_name"))
-      FuzzyJoin
-        .byEditDistance(n, "n_nationkey", col("n_name"),
-          corrupted, "c_key", col("c_name"), maxDist = 1)
-        .groupBy(col("r_id"))
-        .agg(count(lit(1)).as("n_matches"), min(col("l_id")).as("best_l_id"),
-          min(col("dist")).as("best_dist"))
-    }),
-
-    // 47. trained BPE token counts: merges train on a deterministic 10%
-    // hash-sample (driver-side, bounded), encode runs distributed through
-    // a codegen'd kernel [rows-only; trainer+encoder gated in BpeSpec]
-    "q47_bpe_tokens" -> ((s, dir) => {
-      val docs = Tables(s, dir).documents
-      val merges = memoized(s, s"bpe|$dir") {
-        Bpe.train(docs, "doc_id", "text", nMerges = 200,
-          sampleBasisPoints = 1000)
-      }
-      docs.select(col("doc_id"),
-        Bpe.tokenCount(col("text"), merges).as("n_bpe_tokens"))
-    }),
-
-    // 23b. BPE ENCODE under a FIXED merge table (VERDICT r11 task 5):
-    // training is inherently sequential (spec-gated, q47), but encoding
-    // under a fixed table is deterministic and fully distributable — the
-    // q84b isolate-the-distributable-step precedent. The planted merges
-    // hit the corpus vocabulary (scan/agg/table/row...), including one
-    // second-order rule (b+le) consuming an earlier rule's output, and
-    // no rule's output ever feeds an EARLIER rank — which is what makes
-    // the oracle's rank-order separator-string rewrite equivalent to
-    // the kernel's greedy lowest-rank-first loop.
-    "q47b_bpe_encode_fixed" -> ((s, dir) =>
-      Tables(s, dir).documents.select(col("doc_id"),
-        Bpe.tokenCount(col("text"), fixedBpeMerges).as("n_bpe_tokens"))),
-
-    // 26z. Tokenizer fertility equity audit (Rust et al. 2021): BPE
-    // tokens-per-word and bytes-per-token under the q47b fixed merge
-    // table, per language — the multilingual-vocabulary fairness signal.
-    // One map-side kernel pass, one bounded-dim groupBy; ratios are
-    // integer floor-scaled over group totals, divided once at the end.
-    "q122_bpe_fertility" -> ((s, dir) =>
-      Bpe.fertilityByGroup(Tables(s, dir).documents, "lang", "text",
-        fixedBpeMerges)),
-
-    // 26aa. REAL bounded-subset PDF text extraction (ISO 32000-1:
-    // object/stream walk honoring direct /Length, FlateDecode via JDK
-    // zlib, BT/ET + Tj/TJ/quote operators, the full literal-string
-    // escape set) over planted per-doc PDFs whose expected extraction is
-    // pure doc_id arithmetic — the q95/q111 fixture doctrine: the oracle
-    // composes the expected text while Spark genuinely walks the
-    // container it assembled, inflates, and replays string escapes.
-    // Out-of-subset payloads (encrypted, torn, textless) answer with an
-    // attributable reason, never a throw. Map-side kernel end-to-end:
-    // zero shuffles.
-    "q123_pdf_text" -> ((s, dir) => {
-      val d = Tables(s, dir).documents
-        .select(col("doc_id"),
-          F.pdfFixture(col("doc_id"), col("text")).as("blob"))
-      val ex = F.pdfExtract(col("blob"))
-      d.select(col("doc_id"),
-        element_at(ex, 1).as("pdf_text"),
-        element_at(ex, 2).as("pdf_reason"))
-    }),
-
-    // 45. benchmark decontamination: per held-out doc, the fraction of its
-    // 5-gram shingles found anywhere in the corpus (bench fixture = 40
-    // truncated docs, so overlap is partial and nontrivial)
-    "q45_contamination" -> ((s, dir) => {
-      val docs = Tables(s, dir).documents
-      val bench = docs.where(col("doc_id") < 40)
-        .select(col("doc_id"), substring(col("text"), 1, 150).as("text"))
-      Contamination.overlap(docs, "text", bench, "doc_id", "text",
-        shingleK = 5)
-    }),
-
-    // 46. deterministic greedy sequence packing — bin assignment is the
-    // DuckDB-replicable top-63-bit hash, so the oracle replays the
-    // first-fit scan as a recursive CTE and matches bit-for-bit
-    // (DedupSpec keeps the budget/coverage/determinism invariants)
-    "q46_packing" -> ((s, dir) => {
-      val withTokens = Tables(s, dir).documents
-        .select(col("doc_id"), TextStats.tokenCount(col("text")).as("n_tok"))
-      Packing.firstFit(withTokens, "doc_id", col("n_tok"),
-        maxTokens = 512, partitions = 8)
-        .groupBy(col("seq_id"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("seq_tokens"))
-    }),
-
-    // 44. semi-structured extraction: JSON payload parsed with an
-    // EXPLICIT schema (schema inference is another full pass at 100 TB),
-    // malformed payloads → null, aggregated per type
-    "q44_json_extract" -> ((s, dir) =>
-      Tables(s, dir).events
-        .select(col("event_type"),
-          from_json(col("props"), StructType(Seq(StructField("k", LongType))))
-            .getField("k").as("k"))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"), sum(col("k")).as("sum_k"),
-          min(col("k")).as("min_k"), max(col("k")).as("max_k"))),
-
-    // 42. text cleaning chain (tag strip → NFC → email redaction →
-    // whitespace collapse), surfaced as before/after lengths
-    "q42_text_clean" -> ((s, dir) => {
-      val d = Tables(s, dir).documents
-        .withColumn("dirty",
-          concat(lit("<p>Contact: bob"), (col("doc_id") % 100).cast("string"),
-            lit("@mail.example.com</p> "), col("text")))
-      d.select(col("doc_id"),
-        length(col("dirty")).cast("long").as("len_dirty"),
-        length(graft.functions.TextClean.cleanChain(col("dirty")))
-          .cast("long").as("len_clean"))
-    }),
-
-    // 43. lexical diversity / dominance quality metrics (Gopher-style
-    // repetition filters)
-    "q43_diversity" -> ((s, dir) =>
-      graft.functions.Diversity.metrics(Tables(s, dir).documents,
-        "doc_id", "text")),
-
-    // 58. unigram-LM perplexity quality scores (the corpus is its own LM);
-    // oracle-backed since r3 — the DECIMAL(18,9) NLL quantization absorbs
-    // engine ln() ulp differences (plus invariants in EtlSpec)
-    "q58_perplexity" -> ((s, dir) =>
-      graft.functions.Perplexity.score(Tables(s, dir).documents,
-        "doc_id", "text")),
-
-    // 57. stratified sampling: per-language rates rebalance the corpus,
-    // same engine-portable hash membership as q41
-    "q57_stratified" -> ((s, dir) =>
-      Sampling.stratified(Tables(s, dir).documents, "doc_id", col("lang"),
-        Map("en" -> 2500, "de" -> 5000, "fr" -> 5000), defaultBp = 10000)
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n"), min(col("doc_id")).as("min_id"))),
-
-    // 41. deterministic hash sampling + train/val/test split — bucket
-    // function is bit-identical to DuckDB's hash(BIGINT), so the oracle
-    // recomputes the exact same membership
-    "q41_sample_split" -> ((s, dir) =>
-      Sampling.split(Tables(s, dir).documents, "doc_id", Seq(9000, 500, 500))
-        .groupBy(col("split_id"))
-        .agg(count(lit(1)).as("n"), min(col("doc_id")).as("min_id"),
-          max(col("doc_id")).as("max_id"))),
-
-    // 37c. weighted deterministic sampling: P(keep) proportional to
-    // n_chars (clamped at 1) — pure filter, pushes to the scan
-    "q81_weighted_sample" -> ((s, dir) =>
-      Sampling.weighted(
-        Tables(s, dir).documents.select(col("doc_id"),
-          col("n_chars").cast("long").as("n_chars")),
-        "doc_id", col("n_chars") * 25)),
-
-    // 37d. per-group fixed-n sampling: exactly min(k, |group|) rows per
-    // priority by deterministic hash order (WindowGroupLimit — map-side
-    // partial top-k before the exchange)
-    "q82_group_sample" -> ((s, dir) =>
-      Sampling.perGroup(Tables(s, dir).orders
-          .select(col("o_orderpriority"), col("o_orderkey")),
-        "o_orderkey", col("o_orderpriority"), k = 20)
-        .select("o_orderpriority", "sample_rank", "o_orderkey")),
-
-    // 39b. CDC changelog apply (MERGE INTO analog): ordered I/U/D stream
-    // merged into a snapshot in ONE key shuffle (max_by, no window sort)
-    "q61_cdc_merge" -> ((s, dir) => {
-      val t = Tables(s, dir)
-      val snap = t.customer.select(col("c_custkey"), col("c_mktsegment"))
-      CdcMerge(snap, cdcFixture(t), "c_custkey", "seq", "op",
-        Seq("c_mktsegment"))
-        .groupBy(col("c_mktsegment"))
-        .agg(count(lit(1)).as("n"), min(col("c_custkey")).as("min_key"),
-          max(col("c_custkey")).as("max_key"))
-    }),
-
-    // 23b. context-window chunking: fixed-size overlapping token windows
-    // (LM pretraining example prep) — pure map-side arithmetic, no shuffle
-    "q62_chunking" -> ((s, dir) =>
-      Chunking.tokenWindows(Tables(s, dir).documents, "doc_id", "text",
-        window = 32, stride = 24)),
-
-    // 37b. exact percentile-band trim (drop length outliers) WITHOUT a
-    // global sort: per-value counts + running offsets + in-value ranks
-    "q64_length_trim" -> ((s, dir) =>
-      RankTrim.middleBand(
-        Tables(s, dir).documents.select(col("doc_id"),
-          col("n_chars").cast("long").as("n_chars")),
-        "doc_id", "n_chars", trimBp = 500)),
-
-    // 26f. inverted index: doc_id-ordered posting lists with df — the
-    // retrieval-side layout of the q36 term statistics
-    "q66_inverted_index" -> ((s, dir) =>
-      TermScores.invertedIndex(Tables(s, dir).documents, "doc_id", "text")),
-
-    // 26h. BM25 batch retrieval: broadcast query set, posting-list-pruned
-    // scoring, per-query top-k — exact integer arithmetic (rational idf,
-    // milli-quantized), so the ranking is engine-exact. The index builds
-    // ONCE per (session, sf) — the Bpe.train/IvfAnn.buildIndex protocol:
-    // the corpus tokenizes at build time, each query batch scans only the
-    // bucket partitions its terms hash into (searchIndex ≡ topK,
-    // Round6Spec-gated; the oracle scores the same corpus in SQL)
-    "q78_bm25" -> ((s, dir) => {
-      val idx = memoized(s, s"bm25|$dir") {
-        val p = tempDirCleanedAtExit("graft_bm25_idx")
-        Bm25.buildIndex(Tables(s, dir).documents, "doc_id", "text", p)
-        p
-      }
-      Bm25.searchIndex(s, idx, Bm25Queries, k = 10)
-    }),
-
-    // 16b. corpus-level LINE dedup (boilerplate strip): lines injected
-    // deterministically — a universal footer, a doc_id%5 social line, and a
-    // per-doc unique id line — then every line in >= 3 distinct docs is
-    // removed corpus-wide and the docs reassembled
-    "q79_line_dedup" -> ((s, dir) => {
-      val dirty = Tables(s, dir).documents.select(col("doc_id"),
-        concat(col("text"), lit("\nSubscribe to our newsletter"),
-          when(col("doc_id") % 5 === 0, lit("\nFollow us on example social"))
-            .otherwise(lit("")),
-          lit("\nid: "), col("doc_id").cast("string")).as("dirty"))
-      LineDedup.stripBoilerplate(dirty, "doc_id", "dirty", minDocs = 3L)
-    }),
-
-    // 26g. PII scrub: URL / IPv4 / phone / email redaction with per-kind
-    // match counts, over a deterministic injection fixture (doc_id mod 4
-    // picks the PII kind) — all dialect-neutral regex, DuckDB-oracled
-    "q63_pii_redact" -> ((s, dir) => {
-      import graft.functions.TextClean
-      val m = col("doc_id") % 4
-      val d = Tables(s, dir).documents.withColumn("dirty",
-        concat(col("text"),
-          when(m === 0, concat(lit(" visit https://example.org/p/"),
-            col("doc_id").cast("string"), lit(" now")))
-            .when(m === 1, concat(lit(" call +48 123-456-"),
-              lpad((col("doc_id") % 1000).cast("string"), 3, "0"), lit(" now")))
-            .when(m === 2, concat(lit(" from 10."),
-              (col("doc_id") % 256).cast("string"), lit(".0.1 node")))
-            .otherwise(lit(""))))
-      d.select(col("doc_id"),
-        regexp_count(col("dirty"), lit(TextClean.UrlPattern)).cast("long")
-          .as("n_urls"),
-        regexp_count(col("dirty"), lit(TextClean.Ipv4Pattern)).cast("long")
-          .as("n_ips"),
-        regexp_count(col("dirty"), lit(TextClean.PhonePattern)).cast("long")
-          .as("n_phones"),
-        length(col("dirty")).cast("long").as("len_dirty"),
-        length(TextClean.redactPii(col("dirty"))).cast("long").as("len_clean"))
-    }),
-
-    // 16b. duplicated-n-gram fraction (RefinedWeb-style quality filter):
-    // per doc, the share of 5-gram occurrences appearing in >= 2 docs
-    "q68_dup_ngrams" -> ((s, dir) =>
-      DupNgramStats.fraction(Tables(s, dir).documents, "doc_id", "text",
-        k = 5)),
-
-    // 16c. WITHIN-doc repetition metrics (Gopher repetition-filter
-    // family): share of a doc's 3-gram occurrences that repeat a gram
-    // the doc already used + the top gram's share — intra-document
-    // (looping/templated text), where q68 is cross-corpus; integer
-    // counts and floored percentages, engine-exact
-    "q92_repetition" -> ((s, dir) =>
-      Repetition.metrics(Tables(s, dir).documents, "doc_id", "text",
-        k = 3)),
-
-    // 16c-b. compression-ratio quality signal (CCNet/RefinedWeb
-    // family): deflated/raw length in basis points — looping/templated
-    // text compresses anomalously WELL (low ratio), near-random noise
-    // barely compresses (ratio ≈ 10000+); natural prose sits between.
-    // The kernel is a StaticInvoke inside whole-stage codegen
-    // [rows-only: DuckDB has no DEFLATE — Round7Spec gates the
-    // discrimination ordering and determinism]
-    "q94_compress_ratio" -> ((s, dir) =>
-      Tables(s, dir).documents.where(col("text").isNotNull)
-        .select(col("doc_id"),
-          length(col("text")).cast("long").as("n_chars"),
-          F.deflatedLen(col("text")).cast("long").as("n_deflated"))
-        .withColumn("ratio_bp",
-          (col("n_deflated") * 10000 / greatest(col("n_chars"), lit(1L)))
-            .cast("long"))),
-
-    // 16d. ExactSubstr-style longest duplicated SPAN (Lee et al. 2022):
-    // the longest consecutive run of corpus-duplicated 5-grams per doc
-    // (= longest shared substring, k-gram-quantized) + the paper's
-    // drop-at->=minSpanTokens verdict; run structure distinguishes one
-    // verbatim block from q68's scattered boilerplate grams
-    "q93_dup_spans" -> ((s, dir) =>
-      DupSpans.maxDupSpan(Tables(s, dir).documents, "doc_id", "text",
-        k = 5, minSpanTokens = 15L)),
-
-    // 33b. Bloom-filter semi-join reduction: the fact scan pre-filters
-    // through a literal Bloom sketch of the selective dim keys before the
-    // shuffle join; result provably equals the plain join, which is what
-    // the oracle checks (the q34 salted-join proof pattern)
-    "q67_bloom_join" -> ((s, dir) => {
-      val t = Tables(s, dir)
-      val dim = t.orders
-        .where(col("o_orderpriority") === "1-URGENT" &&
-          col("o_orderstatus") === "F")
-        .select("o_orderkey")
-      BloomSemiJoin.filtered(t.lineitem, dim, "l_orderkey", "o_orderkey")
-        .groupBy(col("l_returnflag"))
-        .agg(count(lit(1)).as("n"), xsum(col("l_quantity")).as("sum_qty"))
-    }),
-
-    // 40. binned point-in-interval range join — oracled against a DuckDB
-    // inequality join
-    "q40_range_join" -> ((s, dir) => {
-      val t = Tables(s, dir)
-      val bands = priceBands(s)
-      RangeJoin
-        .pointInInterval(t.orders, bands, col("o_totalprice"),
-          col("band_lo").cast("double"), col("band_hi").cast("double"),
-          binWidth = 50000L)
-        .groupBy(col("band_id"))
-        .agg(count(lit(1)).as("n"), xsum(col("o_totalprice")).as("total"))
-    })
-  )
-
-  /** Deterministic slowly-changing-dim fixture for q39: three dated tier
-    * versions per customer (1993/1995-02-15/1996), tier value derived from
-    * the key and version.
-    */
-  private def scdFixture(t: Tables): DataFrame =
-    t.customer.select(col("c_custkey").as("o_custkey"),
-      posexplode(array(lit("1993-01-01"), lit("1995-02-15"), lit("1996-01-01")))
-        .as(Seq("ver", "eff")))
-      .select(col("o_custkey"),
-        col("eff").cast("timestamp").as("eff_date"),
-        (col("o_custkey") % 5 * 10 + col("ver")).cast("long").as("tier"))
-
-  /** q61 CDC fixture: a deterministic I/U/D changelog over the customer
-    * snapshot — keyed cases by c_custkey mod 4: two ordered updates (the
-    * later must win), a delete, a single update, and an insert of a brand
-    * new key. Exercises every CdcMerge path incl. seq ordering.
-    */
-  private def cdcFixture(t: Tables): DataFrame = {
-    val m = col("c_custkey") % 4
-    def row(key: Column, seq: Long, op: String, seg: Column) =
-      struct(key.cast("long").as("c_custkey"), lit(seq).as("seq"),
-        lit(op).as("op"), seg.cast("string").as("c_mktsegment"))
-    t.customer.select(col("c_custkey"),
-        explode(array(
-          when(m === 1, row(col("c_custkey"), 1L, "U", lit("UPGRADED"))),
-          when(m === 1, row(col("c_custkey"), 2L, "U", lit("FINAL"))),
-          when(m === 2, row(col("c_custkey"), 1L, "D", lit(null))),
-          when(m === 3, row(col("c_custkey"), 1L, "U", lit("TOUCHED"))),
-          when(m === 0, row(col("c_custkey") + 10000000L, 1L, "I",
-            lit("NEWSEG"))))).as("r"))
-      .where(col("r").isNotNull)
-      .select(col("r.c_custkey").as("c_custkey"), col("r.seq").as("seq"),
-        col("r.op").as("op"), col("r.c_mktsegment").as("c_mktsegment"))
-  }
-
-  /** Fixed price bands for q40 (overlapping on purpose — a point can land
-    * in the wide band and a narrow one).
-    */
-  private def priceBands(s: SparkSession): DataFrame = {
-    import s.implicits._
-    ((0 until 12).map(i => (i.toLong, i * 50000.0, (i + 1) * 50000.0)) :+
-      ((100L, 100000.0, 400000.0)))
-      .toDF("band_id", "band_lo", "band_hi")
-  }
-
-  // ---- oracles -------------------------------------------------------------
-
-  private def romanCase(inCol: String): String =
-    (1 to 30)
-      .map(i => s"WHEN $i THEN '${RomanCodec.toRomanStr(i)}'")
-      .mkString(s"CASE $inCol ", " ", " END")
-
-  private val langCase: String =
-    """CASE WHEN regexp_matches(text, '[\x{4e00}-\x{9fff}]') THEN 'zh'
-      | WHEN contains(p, ' der ') OR contains(p, ' und ') OR contains(p, ' nicht ') THEN 'de'
-      | WHEN contains(p, ' le ') OR contains(p, ' les ') OR contains(p, ' est ') THEN 'fr'
-      | WHEN contains(p, ' el ') OR contains(p, ' los ') OR contains(p, ' es ') THEN 'es'
-      | ELSE 'en' END""".stripMargin
-
-  private def expectationOracle(name: String, cond: String, pct: Int) =
-    s"""SELECT '$name' AS expectation, COUNT(*) AS n_rows,
-       | COUNT(*) FILTER (WHERE $cond) AS n_pass, $pct AS mostly_pct,
-       | (COUNT(*) FILTER (WHERE $cond) * 100 >= $pct * COUNT(*)) AS success
-       |FROM events""".stripMargin
-
-  /** Word-2-shingle distinct sets in DuckDB, mirroring F.shingles(k=2). */
-  private val duckShingleSets: String =
-    """WITH t AS (SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS toks FROM documents),
-      |s AS (SELECT doc_id, list_distinct(list_transform(
-      |  generate_series(1, greatest(len(toks)-1, 1)),
-      |  i -> CASE WHEN i+1 <= len(toks) THEN toks[i] || ' ' || toks[i+1]
-      |       ELSE toks[i] END)) AS sh FROM t)""".stripMargin
-
-  // ---- DuckDB replay of graft.functions.Hashing (q18/q26 oracles) --------
-  //
-  // DuckDB's BIGINT arithmetic is overflow-checked, so the wrapping
-  // 64-bit ops inside hash64/mix are emulated in HUGEINT with explicit
-  // `mod 2^64` reductions; multiplies whose product could exceed the
-  // signed-128 range split the left operand at 32 bits first. The
-  // expressions are assembled here rather than hand-written so the three
-  // splitmix64 steps stay readable.
-
-  private val m64 = "18446744073709551616" // 2^64
-
-  /** (x * c) mod 2^64, safe for x < 2^64 and any 64-bit constant `c`. */
-  private def wmul64(x: String, c: java.math.BigInteger): String =
-    s"(((($x) % 4294967296) * $c + (((($x) // 4294967296) * $c) % 4294967296) * 4294967296) % $m64)"
-
-  private def u64(hex: String) = new java.math.BigInteger(hex, 16)
-
-  /** splitmix64 finalizer (Hashing.mix) over a HUGEINT in [0, 2^64). */
-  private def splitmixSql(z: String): String = {
-    val a = s"((($z) + ${u64("9e3779b97f4a7c15")}) % $m64)"
-    val b = wmul64(s"xor(CAST($a AS HUGEINT), CAST(($a) // 1073741824 AS HUGEINT))",
-      u64("bf58476d1ce4e5b9")) // z ^= z >>> 30, * const
-    val c = wmul64(s"xor(CAST($b AS HUGEINT), CAST(($b) // 134217728 AS HUGEINT))",
-      u64("94d049bb133111eb")) // z ^= z >>> 27, * const
-    s"xor(CAST($c AS HUGEINT), CAST(($c) // 2147483648 AS HUGEINT))" // ^ >>> 31
-  }
-
-  /** Reinterpret a HUGEINT in [0, 2^64) as a signed 64-bit value. */
-  private def toSigned64(x: String): String =
-    s"CAST(CASE WHEN ($x) >= 9223372036854775808 THEN ($x) - $m64 ELSE ($x) END AS BIGINT)"
-
-  /** Hashing.cosineF replayed in DuckDB: list_reduce lambdas accumulate
-    * left-to-right, the same IEEE-754 double op order as the JVM loop,
-    * so the result is bit-identical (`x`/`y` are DOUBLE[] expressions).
-    */
-  private def duckCosine(x: String, y: String): String = {
-    def red(ex: String) =
-      s"list_reduce(list_transform(generate_series(1, len($x)), i -> $ex), (a,b) -> a+b)"
-    val dot = red(s"$x[i] * $y[i]")
-    val na = red(s"$x[i] * $x[i]")
-    val nb = red(s"$y[i] * $y[i]")
-    s"(CASE WHEN $na = 0 OR $nb = 0 THEN 0.0 ELSE $dot / sqrt($na * $nb) END)"
-  }
-
-  /** Hashing.l2sqF replayed in DuckDB — same left-fold IEEE order as
-    * [[duckCosine]] (`x`/`y` are DOUBLE[] expressions).
-    */
-  private def duckL2sq(x: String, y: String): String =
-    s"list_reduce(list_transform(generate_series(1, len($x)), " +
-      s"i -> ($x[i] - $y[i]) * ($x[i] - $y[i])), (a,b) -> a+b)"
-
-  /** The exact cosine top-k CTEs shared by the ANN recall oracles: `embd`
-    * (vec_id, DOUBLE[] vector) and `exact` (qid, nid — the true top-`k`
-    * per query under (cos DESC, nid), queries = vec_id < `nq`). Cosines
-    * replay bit-identically via [[duckCosine]]; the final recall SELECT is
-    * shared too (both sides are exact multiples of 100/k, so cast
-    * rounding-mode differences cannot bite).
-    */
-  private def annExactCtes(nq: Int, k: Int): String =
-    s"""embd AS (
-       |  SELECT vec_id, list_transform(embedding, e -> CAST(e AS DOUBLE)) AS v
-       |  FROM embeddings
-       |),
-       |exact AS (
-       |  SELECT qid, nid FROM (
-       |    SELECT q.vec_id AS qid, n.vec_id AS nid,
-       |      row_number() OVER (PARTITION BY q.vec_id
-       |        ORDER BY ${duckCosine("q.v", "n.v")} DESC, n.vec_id) AS rnk
-       |    FROM embd q JOIN embd n ON q.vec_id <> n.vec_id WHERE q.vec_id < $nq)
-       |  WHERE rnk <= $k
-       |)""".stripMargin
-
-  private def annRecallSelect(k: Int): String =
-    s"""SELECT e.qid, CAST(SUM(CASE WHEN a.nid IS NOT NULL THEN 1 ELSE 0 END) * 100 / $k AS BIGINT) AS recall_pct
-       |FROM exact e LEFT JOIN approx a ON a.qid = e.qid AND a.nid = e.nid
-       |GROUP BY e.qid""".stripMargin
-
-  /** q22 oracle: the banded hyperplane LSH replayed END-TO-END — plane
-    * signs are counter-mode splitmix64 (Hashing.hyperplaneCodes:
-    * component (t,p,j) = ±1 from mix((t·planes+p)·131071 + j) & 1), each
-    * projection is a left-fold double sum (JVM op order), codes re-pack
-    * the sign bits, candidates share any (table, code), and the ranked
-    * cosines replay via [[duckCosine]] — so recall_pct is derived from
-    * the same approx top-k the engine computed, not assumed.
-    */
-  private lazy val q22OracleSql: String = {
-    val planes = 4; val tables = 16; val nq = 50; val k = 5
-    val mixed = splitmixSql(s"CAST((t*$planes+p)*131071 + j AS HUGEINT)")
-    s"""WITH ${annExactCtes(nq, k)},
-       |sgn AS (
-       |  SELECT t, p, LIST(CASE WHEN ($mixed) % 2 = 0 THEN CAST(1.0 AS DOUBLE)
-       |                         ELSE CAST(-1.0 AS DOUBLE) END ORDER BY j) AS sv
-       |  FROM (SELECT CAST(a.range AS BIGINT) AS t, CAST(b.range AS BIGINT) AS p,
-       |               CAST(c.range AS BIGINT) AS j
-       |        FROM range($tables) a, range($planes) b, range(64) c)
-       |  GROUP BY t, p
-       |),
-       |proj AS (
-       |  SELECT e.vec_id, s.t, s.p,
-       |    list_reduce(list_transform(generate_series(1, len(e.v)), i -> s.sv[i] * e.v[i]),
-       |      (a,b) -> a+b) AS pr
-       |  FROM embd e CROSS JOIN sgn s
-       |),
-       |codes AS (
-       |  SELECT vec_id, t,
-       |    CAST(SUM(CASE WHEN pr >= 0 THEN CAST(1 AS BIGINT) << p ELSE 0 END) AS BIGINT) AS code
-       |  FROM proj GROUP BY vec_id, t
-       |),
-       |cand AS (
-       |  SELECT DISTINCT cq.vec_id AS qid, cc.vec_id AS nid
-       |  FROM codes cq JOIN codes cc ON cq.t = cc.t AND cq.code = cc.code
-       |  WHERE cq.vec_id < $nq AND cq.vec_id <> cc.vec_id
-       |),
-       |approx AS (
-       |  SELECT qid, nid FROM (
-       |    SELECT c.qid, c.nid,
-       |      row_number() OVER (PARTITION BY c.qid
-       |        ORDER BY ${duckCosine("a.v", "b.v")} DESC, c.nid) AS rnk
-       |    FROM cand c JOIN embd a ON a.vec_id = c.qid JOIN embd b ON b.vec_id = c.nid)
-       |  WHERE rnk <= $k
-       |)
-       |${annRecallSelect(k)}""".stripMargin
-  }
-
-  /** q32 oracle: IVF replayed end-to-end — centroids are the nCentroids
-    * corpus vectors with the smallest SIGNED splitmix-finalized FNV of
-    * the id's decimal string (IvfAnn.centroids / Hashing.hash64), cell
-    * assignment is argmax (cos, cid), probes rank (cos DESC, cell), and
-    * the candidate ranking replays via [[duckCosine]].
-    */
-  /** The IVF replay CTE chain shared by the q32 and q151 oracles:
-    * `fnv` (the centroid-sample hash rank), `cents`, `assigned` (one
-    * Voronoi cell per corpus vector) and `probes` (the nProbe nearest
-    * cells per query) — all cosines via [[duckCosine]], bit-identical.
-    */
-  /** The IvfAnn.centroids hash rank (Hashing.hash64 of the id's decimal
-    * string: FNV-1a folded through the splitmix finalizer) replayed for
-    * every embeddings id — shared by [[ivfCtes]] and the q153 oracle.
-    */
-  private def fnvCte: String =
-    s"""fnv AS (
-       |  WITH RECURSIVE r AS (
-       |    SELECT vec_id, CAST(vec_id AS VARCHAR) AS s, 1 AS pos,
-       |      CAST(${u64("cbf29ce484222325")} AS HUGEINT) AS h
-       |    FROM embeddings
-       |    UNION ALL
-       |    SELECT vec_id, s, pos+1,
-       |      CAST((xor(h, CAST(ascii(substr(s,pos,1)) AS HUGEINT)) * 1099511628211) % $m64 AS HUGEINT)
-       |    FROM r WHERE pos <= length(s)
-       |  )
-       |  SELECT vec_id, ${toSigned64(splitmixSql("h"))} AS hr FROM r WHERE pos = length(s) + 1
-       |)""".stripMargin
-
-  private def ivfCtes(nc: Int, np: Int, nq: Int): String =
-    s"""$fnvCte,
-       |cents AS (
-       |  SELECT e.vec_id AS cid, e.v AS c_vec
-       |  FROM embd e JOIN fnv f ON f.vec_id = e.vec_id
-       |  ORDER BY f.hr LIMIT $nc
-       |),
-       |assigned AS (
-       |  SELECT nid, cell FROM (
-       |    SELECT e.vec_id AS nid, c.cid AS cell,
-       |      row_number() OVER (PARTITION BY e.vec_id
-       |        ORDER BY ${duckCosine("e.v", "c.c_vec")} DESC, c.cid DESC) AS rn
-       |    FROM embd e CROSS JOIN cents c)
-       |  WHERE rn = 1
-       |),
-       |probes AS (
-       |  SELECT qid, cell FROM (
-       |    SELECT e.vec_id AS qid, c.cid AS cell,
-       |      row_number() OVER (PARTITION BY e.vec_id
-       |        ORDER BY ${duckCosine("e.v", "c.c_vec")} DESC, c.cid) AS pr
-       |    FROM embd e CROSS JOIN cents c WHERE e.vec_id < $nq)
-       |  WHERE pr <= $np
-       |)""".stripMargin
-
-  private lazy val q32OracleSql: String = {
-    val nc = 16; val np = 8; val nq = 50; val k = 5
-    s"""WITH ${annExactCtes(nq, k)},
-       |${ivfCtes(nc, np, nq)},
-       |approx AS (
-       |  SELECT qid, nid FROM (
-       |    SELECT p.qid, a.nid,
-       |      row_number() OVER (PARTITION BY p.qid
-       |        ORDER BY ${duckCosine("q.v", "n.v")} DESC, a.nid) AS rnk
-       |    FROM probes p JOIN assigned a ON a.cell = p.cell
-       |    JOIN embd q ON q.vec_id = p.qid JOIN embd n ON n.vec_id = a.nid
-       |    WHERE p.qid <> a.nid)
-       |  WHERE rnk <= $k
-       |)
-       |${annRecallSelect(k)}""".stripMargin
-  }
-
-  /** q65 oracle: the FULL PQ pipeline replayed — initial per-subspace
-    * codebook by signed murmur64 rank (DuckDB's native hash(BIGINT) IS
-    * Hashing.murmur64), two unrolled Lloyd iterations with the mean
-    * replayed exactly (float→DECIMAL(27,9) via DOUBLE — DuckDB's direct
-    * FLOAT→DECIMAL cast truncates where Spark rounds half-up; sums as
-    * scale-9 HUGEINTs; the decimal division result is scale 10, rounded
-    * half-away-from-zero, then narrowed to float), ADC distances
-    * quantized to DECIMAL(18,9) and summed exactly, shortlist of 50 by
-    * (dist, nid), exact-cosine re-rank to top-5, recall vs exact.
-    * All float arithmetic is forced through DOUBLE lists because DuckDB
-    * evaluates FLOAT-FLOAT in single precision while the JVM kernels
-    * upconvert per element.
-    */
-  /** q147 oracle: the SQ8 asymmetric search replayed END-TO-END — the
-    * milli-unit quantization (floor(v·1000), the q145 arithmetic), the
-    * exact floor(qi·127/max|qi|) codes via subtract-positive-mod
-    * division, the integer dot-product ADC score with its floor
-    * division, the top-50 shortlist under (score DESC, nid), and the
-    * exact-cosine re-rank via [[duckCosine]] — so recall_pct derives
-    * from the same approx top-k the engine computed, not assumed.
-    */
-  /** q148/q150 shared replay: the PHash fixture's hash bits
-    * regenerated from pure doc_id arithmetic (the jitter variant is
-    * provably hash-invariant, so the replay skips it), packed to signed
-    * 64-bit via HUGEINT shifts — the CTE chain ends at `hashes`
-    * (doc_id, dhash, ahash with NULLs at the corrupt plant).
-    */
-  private lazy val phashCtes: String =
-    s"""d AS (
-       |  SELECT doc_id, doc_id // 4 AS m, doc_id % 4 AS v FROM documents
-       |),
-       |g AS (
-       |  SELECT CAST(a.range AS BIGINT) AS x, CAST(b.range AS BIGINT) AS y
-       |  FROM range(9) a, range(8) b
-       |),
-       |bits AS (
-       |  SELECT doc_id, x, y,
-       |    CASE WHEN v = 2 AND x = m % 7 AND y = m % 8
-       |      THEN 1 - pb ELSE pb END AS b
-       |  FROM (
-       |    SELECT d.doc_id, d.m, d.v, g.x, g.y,
-       |      CAST(hash(73*d.m + CASE WHEN d.v = 3 THEN 997907 ELSE 0 END
-       |        + 9*g.y + g.x) % 2 AS BIGINT) AS pb
-       |    FROM d, g)
-       |),
-       |dh AS (
-       |  SELECT l.doc_id,
-       |    SUM(CASE WHEN r.b = 1 AND l.b = 0
-       |      THEN CAST(1 AS HUGEINT) << CAST(l.y*8 + l.x AS INTEGER)
-       |      ELSE CAST(0 AS HUGEINT) END) AS dhu
-       |  FROM bits l JOIN bits r
-       |    ON r.doc_id = l.doc_id AND r.y = l.y AND r.x = l.x + 1
-       |  WHERE l.x < 8
-       |  GROUP BY 1
-       |),
-       |cells AS (
-       |  SELECT l.doc_id, l.x AS cx, l.y AS cy,
-       |    CASE WHEN l.x < 7 THEN 40 + 160*l.b
-       |         ELSE 40 + 80*(l.b + r.b) END AS cell
-       |  FROM bits l JOIN bits r
-       |    ON r.doc_id = l.doc_id AND r.y = l.y AND r.x = 8
-       |  WHERE l.x < 8
-       |),
-       |am AS (
-       |  SELECT doc_id, CAST(SUM(cell) AS BIGINT) // 64 AS mean
-       |  FROM cells GROUP BY 1
-       |),
-       |ah AS (
-       |  SELECT c.doc_id,
-       |    SUM(CASE WHEN c.cell > am.mean
-       |      THEN CAST(1 AS HUGEINT) << CAST(c.cy*8 + c.cx AS INTEGER)
-       |      ELSE CAST(0 AS HUGEINT) END) AS ahu
-       |  FROM cells c JOIN am USING (doc_id)
-       |  GROUP BY 1
-       |),
-       |hashes AS (
-       |  SELECT d.doc_id,
-       |    CASE WHEN d.doc_id % 8 = 1 THEN NULL
-       |      ELSE ${toSigned64("dh.dhu")} END AS dhash,
-       |    CASE WHEN d.doc_id % 8 = 1 THEN NULL
-       |      ELSE ${toSigned64("ah.ahu")} END AS ahash
-       |  FROM d JOIN dh USING (doc_id) JOIN ah USING (doc_id)
-       |)""".stripMargin
-
-  /** Engine-faithful replay of [[graft.dedup.SimHashDedup.hammingPairs]]
-    * for the oracles that consume it (q148/q150/q154/q155): a pair must
-    * share at least one SURVIVING 16-bit-chunk bucket — occupancy
-    * within hammingPairs' `maxBucket` guard, modeled here the way the
-    * minhash oracles model their occupancy caps — and then verify
-    * bit_count(xor) ≤ maxHamming. Below the cap this is exactly the
-    * all-pairs Hamming ball; at any corpus size it is exactly what the
-    * engine computes (ADVICE r15: an unmodeled cap would diverge once a
-    * 0-biased chunk value concentrates ~maxBucket docs). Requires a
-    * `hashes` CTE exposing (doc_id, `hashCol`); emits `<out>` with
-    * (id_a, id_b).
-    */
-  private def hammingPairCtes(hashCol: String, out: String = "pr",
-      maxHamming: Int = 3, maxBucket: Int = 1024,
-      src: String = "hashes", pre: String = "h"): String =
-    s"""${pre}chunks AS (
-       |  SELECT h.doc_id, CAST(c.range AS INTEGER) AS cn,
-       |    (h.$hashCol >> (c.range * 16)) & 65535 AS chunk
-       |  FROM $src h, range(4) c WHERE h.$hashCol IS NOT NULL
-       |),
-       |${pre}occ AS (
-       |  SELECT cn, chunk FROM ${pre}chunks GROUP BY 1, 2
-       |  HAVING COUNT(*) <= $maxBucket
-       |),
-       |$out AS (
-       |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-       |  FROM ${pre}chunks a
-       |  JOIN ${pre}occ o ON o.cn = a.cn AND o.chunk = a.chunk
-       |  JOIN ${pre}chunks b ON b.cn = a.cn AND b.chunk = a.chunk
-       |    AND a.doc_id < b.doc_id
-       |  JOIN $src ha ON ha.doc_id = a.doc_id
-       |  JOIN $src hb ON hb.doc_id = b.doc_id
-       |  WHERE bit_count(xor(ha.$hashCol, hb.$hashCol)) <= $maxHamming
-       |)""".stripMargin
-
-  /** q148 oracle: [[phashCtes]] + the Hamming-pair/count fold. */
-  private lazy val q148OracleSql: String =
-    s"""WITH $phashCtes,
-       |${hammingPairCtes("dhash")},
-       |sided AS (
-       |  SELECT id_a AS doc_id, id_b AS partner FROM pr
-       |  UNION ALL SELECT id_b, id_a FROM pr
-       |),
-       |agg AS (
-       |  SELECT doc_id, COUNT(*) AS n_dups, MIN(partner) AS min_partner
-       |  FROM sided GROUP BY 1
-       |)
-       |SELECT h.doc_id, h.dhash, h.ahash,
-       |  CAST(COALESCE(a.n_dups, 0) AS BIGINT) AS n_dups, a.min_partner
-       |FROM hashes h LEFT JOIN agg a USING (doc_id)""".stripMargin
-
-  /** q154 oracle: the audio fingerprint replayed from doc_id arithmetic
-    * — levels hash(131m + salt + k) % 64 (+17 at the v2 bump box), bit
-    * k = lvl(k+1) > lvl(k) (the engine's exact cross-multiplied mean
-    * comparison reduces to level ordering because every box holds equal
-    * frame counts of the constant amplitude (37·lvl + 5)·gain — and the
-    * ×2 gain twin cancels BY CONSTRUCTION), HUGEINT bit packing, then
-    * the engine-faithful Hamming blocking ([[hammingPairCtes]]) and the
-    * q148 count fold.
-    */
-  private lazy val q154OracleSql: String =
-    s"""WITH $afpCtes,
-       |${hammingPairCtes("afp")},
-       |sided AS (
-       |  SELECT id_a AS doc_id, id_b AS partner FROM pr
-       |  UNION ALL SELECT id_b, id_a FROM pr
-       |),
-       |agg AS (
-       |  SELECT doc_id, COUNT(*) AS n_dups, MIN(partner) AS min_partner
-       |  FROM sided GROUP BY 1
-       |)
-       |SELECT h.doc_id, h.afp,
-       |  CAST(COALESCE(a.n_dups, 0) AS BIGINT) AS n_dups, a.min_partner
-       |FROM hashes h LEFT JOIN agg a USING (doc_id)""".stripMargin
-
-  /** q157 oracle: the margin criterion replayed end-to-end — cosines
-    * quantized to ×10⁹ BIGINT (the q152 route), both top-k windows
-    * ordered on the QUANTIZED value (the engine's tie-break), exact
-    * neighborhood sums, the floor-division margin, and the best-match
-    * accept verdicts.
-    */
-  /** q157 oracle — r17 note: c9 and the neighborhood sums are BIGINT
-    * (|c9| <= 1e9, num <= 8e15) so the margin's %/// floors never see
-    * a HUGEINT (the q164 red-row surface removed here preemptively).
-    */
-  private lazy val q157OracleSql: String = {
-    val k = 4; val accept = 1060000L
-    s"""WITH embd AS (
-       |  SELECT vec_id, list_transform(embedding, e -> CAST(e AS DOUBLE)) AS v
-       |  FROM embeddings
-       |),
-       |x AS (
-       |  SELECT s.vec_id AS sid, t.vec_id AS tid,
-       |    CAST(CAST(CAST(${duckCosine("s.v", "t.v")}
-       |      AS DECIMAL(18,9)) AS DECIMAL(28,9))
-       |      * 1000000000 AS BIGINT) AS c9
-       |  FROM embd s, embd t
-       |  WHERE s.vec_id % 2 = 0 AND s.vec_id < 1000 AND t.vec_id % 2 = 1
-       |),
-       |fwd AS (
-       |  SELECT sid, tid, c9 FROM (
-       |    SELECT sid, tid, c9, row_number() OVER (PARTITION BY sid
-       |      ORDER BY c9 DESC, tid) AS rn FROM x)
-       |  WHERE rn <= $k
-       |),
-       |da AS (
-       |  SELECT sid, CAST(SUM(c9) AS BIGINT) AS d_a FROM fwd GROUP BY 1
-       |),
-       |db AS (
-       |  SELECT tid, CAST(SUM(c9) AS BIGINT) AS d_b FROM (
-       |    SELECT x.tid, x.c9, row_number() OVER (PARTITION BY x.tid
-       |      ORDER BY x.c9 DESC, x.sid) AS rn
-       |    FROM x JOIN (SELECT DISTINCT tid FROM fwd) c USING (tid))
-       |  WHERE rn <= $k GROUP BY 1
-       |),
-       |m AS (
-       |  SELECT sid, tid,
-       |    CAST((num - ((num % den + den) % den)) // den AS BIGINT)
-       |      AS margin_x1e6
-       |  FROM (
-       |    SELECT f.sid, f.tid, f.c9 * ${2 * k} * 1000000 AS num,
-       |      greatest(da.d_a + db.d_b, 1) AS den
-       |    FROM fwd f JOIN da USING (sid) JOIN db USING (tid))
-       |)
-       |SELECT sid AS src_id, tid AS tgt_id, margin_x1e6,
-       |  margin_x1e6 >= $accept AS is_accepted
-       |FROM (
-       |  SELECT m.*, row_number() OVER (PARTITION BY sid
-       |    ORDER BY margin_x1e6 DESC, tid) AS b FROM m)
-       |WHERE b = 1""".stripMargin
-  }
-
-  /** q169 oracle: the GLOBAL mining replay — the same cosine frame,
-    * BOTH full rankings (per-source and per-target over the whole other
-    * corpus), the fwd ∪ bwd candidate union, and the best-margin
-    * verdict. c9 is BIGINT throughout (|c9| ≤ 10⁹, num ≤ 8·10¹⁵ — the
-    * q164 r17 lesson: no HUGEINT ever meets % or //).
-    */
-  private lazy val q169OracleSql: String = {
-    val k = 4; val accept = 1060000L
-    s"""WITH embd AS (
-       |  SELECT vec_id, list_transform(embedding, e -> CAST(e AS DOUBLE)) AS v
-       |  FROM embeddings
-       |),
-       |x AS MATERIALIZED (
-       |  SELECT s.vec_id AS sid, t.vec_id AS tid,
-       |    CAST(CAST(CAST(${duckCosine("s.v", "t.v")}
-       |      AS DECIMAL(18,9)) AS DECIMAL(28,9))
-       |      * 1000000000 AS BIGINT) AS c9
-       |  FROM embd s, embd t
-       |  WHERE s.vec_id % 2 = 0 AND s.vec_id < 1000 AND t.vec_id % 2 = 1
-       |),
-       |rk AS MATERIALIZED (
-       |  SELECT sid, tid, c9,
-       |    row_number() OVER (PARTITION BY sid
-       |      ORDER BY c9 DESC, tid) AS rf,
-       |    row_number() OVER (PARTITION BY tid
-       |      ORDER BY c9 DESC, sid) AS rb
-       |  FROM x
-       |),
-       |cand AS (SELECT * FROM rk WHERE rf <= $k OR rb <= $k),
-       |da AS (
-       |  SELECT sid, CAST(SUM(c9) AS BIGINT) AS d_a FROM cand
-       |  WHERE rf <= $k GROUP BY 1
-       |),
-       |db AS (
-       |  SELECT tid, CAST(SUM(c9) AS BIGINT) AS d_b FROM cand
-       |  WHERE rb <= $k GROUP BY 1
-       |),
-       |m AS (
-       |  SELECT sid, tid,
-       |    CAST((num - ((num % den + den) % den)) // den AS BIGINT)
-       |      AS margin_x1e6
-       |  FROM (
-       |    SELECT c.sid, c.tid, c.c9 * ${2 * k} * 1000000 AS num,
-       |      greatest(da.d_a + db.d_b, 1) AS den
-       |    FROM cand c JOIN da USING (sid) JOIN db USING (tid))
-       |)
-       |SELECT sid AS src_id, tid AS tgt_id, margin_x1e6,
-       |  margin_x1e6 >= $accept AS is_accepted
-       |FROM (
-       |  SELECT m.*, row_number() OVER (PARTITION BY sid
-       |    ORDER BY margin_x1e6 DESC, tid) AS b FROM m)
-       |WHERE b = 1""".stripMargin
-  }
-
-  /** q154's fingerprint replay (levels → bits → packed hash), shared
-    * with the q156 cluster oracle.
-    */
-  private lazy val afpCtes: String =
-    s"""d AS (
-       |  SELECT doc_id, doc_id // 4 AS m, doc_id % 4 AS v FROM documents
-       |),
-       |lv AS (
-       |  SELECT d.doc_id, CAST(k.range AS BIGINT) AS k,
-       |    CAST(hash(131*d.m
-       |        + CASE WHEN d.v = 3 THEN 424243 ELSE 0 END
-       |        + k.range) % 64 AS BIGINT)
-       |      + CASE WHEN d.v = 2 AND k.range = d.m % 65
-       |        THEN 17 ELSE 0 END AS lvl
-       |  FROM d, range(65) k
-       |),
-       |fp AS (
-       |  SELECT l.doc_id,
-       |    SUM(CASE WHEN r.lvl > l.lvl
-       |      THEN CAST(1 AS HUGEINT) << CAST(l.k AS INTEGER)
-       |      ELSE CAST(0 AS HUGEINT) END) AS fpu
-       |  FROM lv l JOIN lv r ON r.doc_id = l.doc_id AND r.k = l.k + 1
-       |  WHERE l.k < 64
-       |  GROUP BY 1
-       |),
-       |hashes AS (
-       |  SELECT d.doc_id,
-       |    CASE WHEN d.doc_id % 8 = 1 THEN NULL
-       |      ELSE ${toSigned64("fp.fpu")} END AS afp
-       |  FROM d JOIN fp USING (doc_id)
-       |)""".stripMargin
-
-  /** q163 oracle: box activity replayed from the q154 level plant —
-    * per-frame amplitude is channels·gain·(37·lvl + 5) (the fixture
-    * writes the same sample to every channel and the engine mixes by
-    * summing), so a box is active iff mult·(37·lvl + 5) ≥ 600; runs
-    * fold via lag (segment starts) and gaps-and-islands (longest
-    * silence). Corrupt docs (doc%8==1) are NULL rows.
-    */
-  private lazy val q163OracleSql: String =
-    s"""WITH d AS (
-       |  SELECT doc_id, doc_id // 4 AS m, doc_id % 4 AS v FROM documents
-       |),
-       |lv AS (
-       |  SELECT d.doc_id, CAST(k.range AS BIGINT) AS k,
-       |    CAST(hash(131*d.m
-       |        + CASE WHEN d.v = 3 THEN 424243 ELSE 0 END
-       |        + k.range) % 64 AS BIGINT)
-       |      + CASE WHEN d.v = 2 AND k.range = d.m % 65
-       |        THEN 17 ELSE 0 END AS lvl,
-       |    (1 + d.m % 2) * (CASE WHEN d.v = 1 THEN 2 ELSE 1 END) AS mult,
-       |    2 + d.m % 3 AS spw
-       |  FROM d, range(65) k
-       |  WHERE d.doc_id % 8 <> 1
-       |),
-       |fl AS (
-       |  SELECT doc_id, k, spw,
-       |    (mult * (37*lvl + 5) >= 600) AS active
-       |  FROM lv
-       |),
-       |base AS (
-       |  SELECT doc_id,
-       |    CAST(65 * MAX(spw) AS BIGINT) AS n_frames,
-       |    CAST(SUM(CASE WHEN active THEN 1 ELSE 0 END) AS BIGINT)
-       |      AS n_active,
-       |    CAST(SUM(CASE WHEN active AND (prev IS NULL OR NOT prev)
-       |      THEN 1 ELSE 0 END) AS BIGINT) AS n_segments,
-       |    MIN(CASE WHEN active THEN k END) AS first_active
-       |  FROM (SELECT *, lag(active) OVER (PARTITION BY doc_id
-       |    ORDER BY k) AS prev FROM fl) x
-       |  GROUP BY doc_id
-       |),
-       |sil AS (
-       |  SELECT doc_id, CAST(MAX(islsz) AS BIGINT) AS longest_silence
-       |  FROM (
-       |    SELECT doc_id, COUNT(*) AS islsz FROM (
-       |      SELECT doc_id, k,
-       |        k - row_number() OVER (PARTITION BY doc_id ORDER BY k)
-       |          AS isl
-       |      FROM fl WHERE NOT active) i
-       |    GROUP BY doc_id, isl) g
-       |  GROUP BY doc_id
-       |)
-       |SELECT d.doc_id, b.n_frames, b.n_active, b.n_segments,
-       |  CASE WHEN b.n_frames IS NOT NULL
-       |    THEN COALESCE(s.longest_silence, CAST(0 AS BIGINT)) END
-       |    AS longest_silence,
-       |  b.first_active
-       |FROM d LEFT JOIN base b USING (doc_id)
-       |LEFT JOIN sil s USING (doc_id)""".stripMargin
-
-  /** q156 oracle: [[afpCtes]] + the engine-faithful blocking + the
-    * q150-style recursive reachability fold (component = min id
-    * reachable through the Hamming ball; corrupt docs are singletons).
-    */
-  private lazy val q156OracleSql: String =
-    s"""WITH RECURSIVE $afpCtes,
-       |${hammingPairCtes("afp")},
-       |e AS (
-       |  SELECT id_a AS src, id_b AS dst FROM pr
-       |  UNION SELECT id_b, id_a FROM pr
-       |),
-       |reach AS (
-       |  SELECT doc_id AS id, doc_id AS comp FROM documents
-       |  UNION
-       |  SELECT e.src, reach.comp FROM e JOIN reach ON e.dst = reach.id
-       |)
-       |SELECT id, MIN(comp) AS component FROM reach GROUP BY id""".stripMargin
-
-  /** q155 oracle: every frame's dHash bits regenerated from the clip
-    * fixture arithmetic (pattern bit = hash(521m + salt + 73fr +
-    * 9y + x) parity, one flipped pixel in the v2 frame — the jitter
-    * twin is provably hash-invariant so the replay skips it), packed
-    * per (doc, frame), xor-folded to the clip signature, and paired by
-    * the engine's exact rule: equal frame counts and EVERY aligned
-    * frame within Hamming 3 (frame-0 blocking is complete for that
-    * conjunction). Corrupt clips (doc%8==1) are NULL rows.
-    */
-  private lazy val q155OracleSql: String =
-    s"""WITH d AS (
-       |  SELECT doc_id, doc_id // 4 AS m, doc_id % 4 AS v,
-       |    2 + (doc_id // 4) % 3 AS nf
-       |  FROM documents
-       |),
-       |frames AS (
-       |  SELECT d.*, CAST(f.range AS BIGINT) AS fr
-       |  FROM d, range(4) f WHERE f.range < d.nf
-       |),
-       |g AS (
-       |  SELECT CAST(a.range AS BIGINT) AS x, CAST(b.range AS BIGINT) AS y
-       |  FROM range(9) a, range(8) b
-       |),
-       |bits AS (
-       |  SELECT doc_id, fr, x, y,
-       |    CASE WHEN v = 2 AND fr = m % nf AND x = m % 7 AND y = m % 8
-       |      THEN 1 - pb ELSE pb END AS b
-       |  FROM (
-       |    SELECT t.doc_id, t.m, t.v, t.nf, t.fr, g.x, g.y,
-       |      CAST(hash(521*t.m + CASE WHEN t.v = 3 THEN 777781 ELSE 0 END
-       |        + 73*t.fr + 9*g.y + g.x) % 2 AS BIGINT) AS pb
-       |    FROM frames t, g)
-       |),
-       |dh AS (
-       |  SELECT l.doc_id, l.fr,
-       |    SUM(CASE WHEN r.b = 1 AND l.b = 0
-       |      THEN CAST(1 AS HUGEINT) << CAST(l.y*8 + l.x AS INTEGER)
-       |      ELSE CAST(0 AS HUGEINT) END) AS dhu
-       |  FROM bits l JOIN bits r
-       |    ON r.doc_id = l.doc_id AND r.fr = l.fr AND r.y = l.y
-       |      AND r.x = l.x + 1
-       |  WHERE l.x < 8
-       |  GROUP BY 1, 2
-       |),
-       |fh AS (
-       |  SELECT doc_id, fr, ${toSigned64("dhu")} AS dhash
-       |  FROM dh WHERE doc_id % 8 <> 1
-       |),
-       |nfv AS (
-       |  SELECT doc_id, COUNT(*) AS nf, bit_xor(dhash) AS clip_sig
-       |  FROM fh GROUP BY 1
-       |),
-       |hashes AS (SELECT doc_id, dhash FROM fh WHERE fr = 0),
-       |${hammingPairCtes("dhash", out = "pr0")},
-       |pr AS (
-       |  SELECT p.id_a, p.id_b
-       |  FROM pr0 p
-       |  JOIN nfv a ON a.doc_id = p.id_a
-       |  JOIN nfv b ON b.doc_id = p.id_b AND a.nf = b.nf
-       |  WHERE NOT EXISTS (
-       |    SELECT 1 FROM fh x JOIN fh y
-       |      ON y.doc_id = p.id_b AND y.fr = x.fr
-       |    WHERE x.doc_id = p.id_a
-       |      AND bit_count(xor(x.dhash, y.dhash)) > 3)
-       |),
-       |sided AS (
-       |  SELECT id_a AS doc_id, id_b AS partner FROM pr
-       |  UNION ALL SELECT id_b, id_a FROM pr
-       |),
-       |agg AS (
-       |  SELECT doc_id, COUNT(*) AS n_dups, MIN(partner) AS min_partner
-       |  FROM sided GROUP BY 1
-       |)
-       |SELECT d.doc_id, CAST(n.nf AS BIGINT) AS n_frames, n.clip_sig,
-       |  CAST(COALESCE(a.n_dups, 0) AS BIGINT) AS n_dups, a.min_partner
-       |FROM d LEFT JOIN nfv n USING (doc_id)
-       |LEFT JOIN agg a USING (doc_id)""".stripMargin
-
-  /** q158 oracle: the scene-clip fixture replayed bit-for-bit — planted
-    * cut indicators (hash % 4), the running shot number, per-shot
-    * pattern bits (hash % 2) with the per-frame jitter flip at
-    * (jh % 8, jh // 8 % 8), dHash packing, then the ENGINE's detection
-    * rule (lag + Hamming > 8 + running shot sum) applied in SQL.
-    * Corrupt clips (doc%8==1) are NULL rows.
-    */
-  private lazy val q158OracleSql: String =
-    s"""WITH d AS (
-       |  SELECT doc_id, 6 + doc_id % 5 AS nf FROM documents
-       |),
-       |frames AS (
-       |  SELECT d.doc_id, CAST(f.range AS BIGINT) AS fr
-       |  FROM d, range(10) f WHERE f.range < d.nf
-       |),
-       |shotno AS (
-       |  SELECT doc_id, fr,
-       |    SUM(CASE WHEN fr >= 1 AND hash(500009*doc_id + fr) % 4 = 0
-       |      THEN 1 ELSE 0 END)
-       |      OVER (PARTITION BY doc_id ORDER BY fr) AS shot
-       |  FROM frames
-       |),
-       |g AS (
-       |  SELECT CAST(a.range AS BIGINT) AS x, CAST(b.range AS BIGINT) AS y
-       |  FROM range(9) a, range(8) b
-       |),
-       |bits AS (
-       |  SELECT doc_id, fr, x, y,
-       |    CASE WHEN x = CAST(jh % 8 AS BIGINT)
-       |        AND y = CAST((jh // 8) % 8 AS BIGINT)
-       |      THEN 1 - pb ELSE pb END AS b
-       |  FROM (
-       |    SELECT s.doc_id, s.fr, g.x, g.y,
-       |      CAST(hash(1000003*s.doc_id + 4001*s.shot + 9*g.y + g.x) % 2
-       |        AS BIGINT) AS pb,
-       |      hash(9000011*s.doc_id + s.fr) AS jh
-       |    FROM shotno s, g)
-       |),
-       |dh AS (
-       |  SELECT l.doc_id, l.fr,
-       |    SUM(CASE WHEN r.b = 1 AND l.b = 0
-       |      THEN CAST(1 AS HUGEINT) << CAST(l.y*8 + l.x AS INTEGER)
-       |      ELSE CAST(0 AS HUGEINT) END) AS dhu
-       |  FROM bits l JOIN bits r
-       |    ON r.doc_id = l.doc_id AND r.fr = l.fr AND r.y = l.y
-       |      AND r.x = l.x + 1
-       |  WHERE l.x < 8
-       |  GROUP BY 1, 2
-       |),
-       |fh AS (
-       |  SELECT doc_id, fr, ${toSigned64("dhu")} AS dhash
-       |  FROM dh WHERE doc_id % 8 <> 1
-       |),
-       |mk AS (
-       |  SELECT doc_id, fr,
-       |    CASE WHEN prev IS NOT NULL AND bit_count(xor(dhash, prev)) > 8
-       |      THEN 1 ELSE 0 END AS is_cut
-       |  FROM (
-       |    SELECT doc_id, fr, dhash,
-       |      lag(dhash) OVER (PARTITION BY doc_id ORDER BY fr) AS prev
-       |    FROM fh)
-       |),
-       |sh AS (
-       |  SELECT doc_id, fr, is_cut,
-       |    SUM(is_cut) OVER (PARTITION BY doc_id ORDER BY fr) AS shot
-       |  FROM mk
-       |),
-       |slen AS (
-       |  SELECT doc_id, shot, COUNT(*) AS shot_len FROM sh GROUP BY 1, 2
-       |),
-       |agg AS (
-       |  SELECT s.doc_id, COUNT(*) AS n_frames,
-       |    CAST(SUM(s.is_cut) AS BIGINT) AS n_cuts,
-       |    MIN(CASE WHEN s.is_cut = 1 THEN s.fr END) AS first_cut
-       |  FROM sh s GROUP BY 1
-       |),
-       |ls AS (
-       |  SELECT doc_id, MAX(shot_len) AS longest_shot FROM slen GROUP BY 1
-       |)
-       |SELECT d.doc_id, a.n_frames, a.n_cuts,
-       |  CAST(a.n_cuts + 1 AS BIGINT) AS n_shots, ls.longest_shot,
-       |  a.first_cut
-       |FROM d LEFT JOIN agg a USING (doc_id)
-       |LEFT JOIN ls USING (doc_id)""".stripMargin
-
-  /** q150 oracle: [[phashCtes]] + the q37-style recursive reachability
-    * fold over the Hamming-ball edges — component = min reachable id;
-    * undecodable docs (NULL hash) are singletons by construction.
-    */
-  private lazy val q150OracleSql: String =
-    s"""WITH RECURSIVE $phashCtes,
-       |${hammingPairCtes("dhash")},
-       |e AS (
-       |  SELECT id_a AS src, id_b AS dst FROM pr
-       |  UNION SELECT id_b, id_a FROM pr
-       |),
-       |reach AS (
-       |  SELECT doc_id AS id, doc_id AS comp FROM documents
-       |  UNION
-       |  SELECT e.src, reach.comp FROM e JOIN reach ON e.dst = reach.id
-       |)
-       |SELECT id, MIN(comp) AS component FROM reach GROUP BY id""".stripMargin
-
-  /** The SQ8 quantization replay shared by the q147 and q151 oracles:
-    * `mill` (exact milli-unit components), `enc` (scale + norm), and
-    * `codes` (the exact int8 codes via subtract-positive-mod division —
-    * the q145 arithmetic).
-    */
-  private lazy val sq8CodeCtes: String =
-    s"""mill AS (
-       |  SELECT vec_id,
-       |    list_transform(v, x -> CAST(floor(x * 1000) AS BIGINT)) AS q
-       |  FROM embd
-       |),
-       |enc AS (
-       |  SELECT vec_id AS nid, q,
-       |    list_max(list_transform(q, x -> abs(x))) AS maxq,
-       |    CAST(floor(sqrt(CAST(list_sum(list_transform(q, x -> x*x))
-       |      AS DOUBLE))) AS BIGINT) AS nrm
-       |  FROM mill
-       |),
-       |codes AS (
-       |  SELECT nid, maxq, nrm,
-       |    list_transform(q, x -> CASE WHEN maxq = 0 THEN 0
-       |      ELSE (x*127 - ((x*127 % maxq + maxq) % maxq)) // maxq
-       |      END) AS cm
-       |  FROM enc
-       |)""".stripMargin
-
-  /** q162 oracle: the JL search replayed end-to-end — milli
-    * quantization, every ±1 sign as hash(8191j + i) parity
-    * (generate_subscripts is 1-based, hence i − 1), exact integer
-    * projected dots, the (pdot, nid) shortlist ranking, and the
-    * IEEE-exact cosine re-rank of shortlist survivors only.
-    */
-  private lazy val q162OracleSql: String = {
-    val nq = 50; val k = 5; val dims = 32; val shortlist = 100
-    s"""WITH ${annExactCtes(nq, k)},
-       |mill AS (
-       |  SELECT vec_id,
-       |    list_transform(v, x -> CAST(floor(x * 1000) AS BIGINT)) AS q
-       |  FROM embd
-       |),
-       |prc AS (
-       |  SELECT el.vec_id, CAST(jj.range AS BIGINT) AS j,
-       |    SUM(CASE WHEN hash(8191 * jj.range + (el.i - 1)) % 2 = 0
-       |      THEN el.x ELSE -el.x END) AS p
-       |  FROM (SELECT vec_id, generate_subscripts(q, 1) AS i,
-       |      unnest(q) AS x FROM mill) el,
-       |    range($dims) jj
-       |  GROUP BY 1, 2
-       |),
-       |pd AS (
-       |  SELECT a.vec_id AS qid, b.vec_id AS nid, SUM(a.p * b.p) AS pdot
-       |  FROM prc a JOIN prc b ON a.j = b.j AND a.vec_id <> b.vec_id
-       |  WHERE a.vec_id < $nq
-       |  GROUP BY 1, 2
-       |),
-       |short AS (
-       |  SELECT qid, nid FROM (
-       |    SELECT qid, nid, row_number() OVER (PARTITION BY qid
-       |      ORDER BY pdot DESC, nid) AS srnk FROM pd)
-       |  WHERE srnk <= $shortlist
-       |),
-       |approx AS (
-       |  SELECT qid, nid FROM (
-       |    SELECT s.qid, s.nid, row_number() OVER (PARTITION BY s.qid
-       |      ORDER BY ${duckCosine("q.v", "n.v")} DESC, s.nid) AS rnk
-       |    FROM short s JOIN embd q ON q.vec_id = s.qid
-       |      JOIN embd n ON n.vec_id = s.nid)
-       |  WHERE rnk <= $k
-       |)
-       |${annRecallSelect(k)}""".stripMargin
-  }
-
-  /** BIGINT floor(a/b) in DuckDB, b > 0: the subtract-pmod form —
-    * exact for either sign of `a` and deliberately BIGINT-only, immune
-    * to the cross-version HUGEINT `%`/`//` divergence that produced the
-    * r13 q127 and r16 q164 red rows (VERDICT r17 task 1).
-    */
-  private def duckFdiv(a: String, b: String): String =
-    s"((($a) - ((($a) % ($b) + ($b)) % ($b))) // ($b))"
-
-  /** The staged-BIGINT PCA Gram replay (graft.ann.Pca's arithmetic —
-    * see its magnitude proof): milli quantization, exact
-    * cross-multiplied centering + the one floor back to milli units,
-    * the d² Gram, and the ⌊max|G|/10⁹⌋+1 rescale. Emits `el` (vec_id,
-    * j, x), `g` (j, k, g with |g| ≲ 10⁹). Requires an `embd` CTE
-    * exposing (vec_id, v DOUBLE[]). Every SUM casts straight to
-    * BIGINT so no HUGEINT ever meets `%` or `//`.
-    */
-  private lazy val pcaGramCtes: String =
-    s"""mlq AS (
-       |  SELECT vec_id,
-       |    list_transform(v, x -> CAST(floor(x * 1000) AS BIGINT)) AS q
-       |  FROM embd
-       |),
-       |el AS MATERIALIZED (
-       |  SELECT vec_id, CAST(generate_subscripts(q, 1) - 1 AS BIGINT)
-       |    AS j, unnest(q) AS x
-       |  FROM mlq
-       |),
-       |st AS (
-       |  SELECT j, CAST(SUM(x) AS BIGINT) AS sj, COUNT(*) AS n
-       |  FROM el GROUP BY 1
-       |),
-       |ce AS MATERIALIZED (
-       |  SELECT vec_id, j, ${duckFdiv("cr", "n")} AS c
-       |  FROM (SELECT e.vec_id, e.j, e.x * st.n - st.sj AS cr, st.n AS n
-       |    FROM el e JOIN st USING (j))
-       |),
-       |graw AS MATERIALIZED (
-       |  SELECT a.j, b.j AS k, CAST(SUM(a.c * b.c) AS BIGINT) AS g0
-       |  FROM ce a JOIN ce b USING (vec_id) GROUP BY 1, 2
-       |),
-       |gdv AS (SELECT MAX(abs(g0)) // 1000000000 + 1 AS gdiv FROM graw),
-       |g AS MATERIALIZED (
-       |  SELECT j, k, ${duckFdiv("g0", "gdiv")} AS g
-       |  FROM graw CROSS JOIN gdv
-       |)""".stripMargin
-
-  /** Two exact power steps from v₀ = 1 over Gram CTE `$gram` (j, k, g):
-    * emits `${p}w1/${p}d1/${p}v1/${p}w2/${p}d2/${p}v2`; the component
-    * lands in `${p}v2` (k, v) with the ⌊max|w|/10⁶⌋+1 renormalization.
-    */
-  private def pcaPowerCtes(gram: String, p: String): String =
-    s"""${p}w1 AS (
-       |  SELECT j, CAST(SUM(g) AS BIGINT) AS w FROM $gram GROUP BY 1
-       |),
-       |${p}d1 AS (SELECT MAX(abs(w)) // 1000000 + 1 AS d FROM ${p}w1),
-       |${p}v1 AS MATERIALIZED (
-       |  SELECT j AS k, ${duckFdiv("w", "d")} AS v
-       |  FROM ${p}w1 CROSS JOIN ${p}d1
-       |),
-       |${p}w2 AS (
-       |  SELECT t.j, CAST(SUM(t.g * b.v) AS BIGINT) AS w
-       |  FROM $gram t JOIN ${p}v1 b ON b.k = t.k GROUP BY 1
-       |),
-       |${p}d2 AS (SELECT MAX(abs(w)) // 1000000 + 1 AS d FROM ${p}w2),
-       |${p}v2 AS MATERIALIZED (
-       |  SELECT j AS k, ${duckFdiv("w", "d")} AS v
-       |  FROM ${p}w2 CROSS JOIN ${p}d2
-       |)""".stripMargin
-
-  /** The Rayleigh gauge over Gram `$gram` and component `$vcte` (k, v):
-    * emits `${p}ray` (rayleigh) — λ in the Gram's cell units via the
-    * 10⁹/10⁹-cancelling staging (num = Σ⌊(Gv)/10⁶⌋·⌊v/10³⌋, den =
-    * ⌊Σ⌊v/10³⌋²/10³⌋ guarded at 1).
-    */
-  private def pcaRayCtes(gram: String, vcte: String, p: String): String =
-    s"""${p}rr AS (
-       |  SELECT t.j, CAST(SUM(t.g * b.v) AS BIGINT) AS r
-       |  FROM $gram t JOIN $vcte b ON b.k = t.k GROUP BY 1
-       |),
-       |${p}nm AS (
-       |  SELECT CAST(SUM((${duckFdiv("r", "1000000")}) *
-       |    (${duckFdiv("v", "1000")})) AS BIGINT) AS num
-       |  FROM ${p}rr JOIN $vcte a ON a.k = ${p}rr.j
-       |),
-       |${p}dn AS (
-       |  SELECT greatest(CAST(SUM((${duckFdiv("v", "1000")}) *
-       |    (${duckFdiv("v", "1000")})) AS BIGINT) // 1000, 1) AS den
-       |  FROM $vcte
-       |),
-       |${p}ray AS MATERIALIZED (
-       |  SELECT ${duckFdiv("num", "den")} AS rayleigh
-       |  FROM ${p}nm CROSS JOIN ${p}dn
-       |)""".stripMargin
-
-  /** `embd` + Gram + pc1 power steps + gauge — the shared head of the
-    * q164/q165/q166 oracles (pc1 in `v2`, gauge in `ray`).
-    */
-  private lazy val pcaCoreCtes: String =
-    s"""embd AS (
-       |  SELECT vec_id,
-       |    list_transform(embedding, e -> CAST(e AS DOUBLE)) AS v
-       |  FROM embeddings
-       |),
-       |$pcaGramCtes,
-       |${pcaPowerCtes("g", "")},
-       |${pcaRayCtes("g", "v2", "")}""".stripMargin
-
-  /** q164 oracle: the staged-BIGINT replay end-to-end (r17 redesign —
-    * the q127 r14 remedy applied: no HUGEINT operators, no DECIMAL
-    * output; rayleigh is BIGINT in Gram-scale units).
-    */
-  private lazy val q164OracleSql: String =
-    s"""WITH $pcaCoreCtes
-       |SELECT CAST(k AS BIGINT) AS dim, v AS pc1_x1e6, rayleigh
-       |FROM v2 CROSS JOIN ray""".stripMargin
-
-  /** The removeTop replay shared by q165/q166 (graft.ann.Pca.removeTop
-    * over `el`/`v2`): emits `vvx` (the guarded ⟨v,v⟩), `dtv` (per-vec
-    * ⟨m,v⟩), `shp` (vec_id, j, x, sh — raw and sharpened milli
-    * components).
-    */
-  private lazy val pcaRemoveTopCtes: String =
-    s"""vvx AS (
-       |  SELECT greatest(CAST(SUM(v * v) AS BIGINT), 1) AS vv FROM v2
-       |),
-       |dtv AS (
-       |  SELECT e.vec_id, CAST(SUM(e.x * b.v) AS BIGINT) AS dot_v
-       |  FROM el e JOIN v2 b ON b.k = e.j GROUP BY 1
-       |),
-       |shp AS MATERIALIZED (
-       |  SELECT vec_id, j, x, x - ${duckFdiv("dv", "vv")} AS sh
-       |  FROM (SELECT e.vec_id, e.j, e.x, d.dot_v * b.v AS dv, w.vv
-       |    FROM el e JOIN v2 b ON b.k = e.j
-       |    JOIN dtv d ON d.vec_id = e.vec_id CROSS JOIN vvx w)
-       |)""".stripMargin
-
-  /** q165 oracle: pc1 + the all-but-the-top transform + its audit,
-    * all integer-exact.
-    */
-  private lazy val q165OracleSql: String =
-    s"""WITH $pcaCoreCtes,
-       |$pcaRemoveTopCtes,
-       |aud AS (
-       |  SELECT s.vec_id,
-       |    CAST(SUM(s.sh * b.v) AS BIGINT) AS dot_after,
-       |    CAST(SUM(s.x * s.x) AS BIGINT) AS n2_before,
-       |    CAST(SUM(s.sh * s.sh) AS BIGINT) AS n2_after
-       |  FROM shp s JOIN v2 b ON b.k = s.j GROUP BY 1
-       |)
-       |SELECT d.vec_id, d.dot_v AS dot_before, a.dot_after,
-       |  a.n2_before, a.n2_after
-       |FROM dtv d JOIN aud a USING (vec_id)""".stripMargin
-
-  /** q166 oracle: the sharpened-corpus SRP near-dup pipeline replayed —
-    * pc1 → removeTop → 64 hash-parity sign projections of the SHARPENED
-    * milli vectors → bit-packed signature (bit 63 spelled as the min
-    * long: DuckDB errors on 1<<63) → the engine-faithful capped Hamming
-    * blocking → the q148 count fold.
-    */
-  private lazy val q166OracleSql: String =
-    s"""WITH $pcaCoreCtes,
-       |$pcaRemoveTopCtes,
-       |prc AS (
-       |  SELECT s.vec_id, CAST(ii.range AS BIGINT) AS i,
-       |    CAST(SUM(CASE WHEN hash(8191 * ii.range + s.j) % 2 = 0
-       |      THEN s.sh ELSE -s.sh END) AS BIGINT) AS p
-       |  FROM shp s, range(64) ii
-       |  GROUP BY 1, 2
-       |),
-       |hashes AS MATERIALIZED (
-       |  SELECT vec_id AS doc_id,
-       |    CAST(SUM(CASE WHEN p > 0 THEN
-       |      CASE WHEN i = 63 THEN -9223372036854775807 - 1
-       |        ELSE 1::BIGINT << CAST(i AS INTEGER) END
-       |      ELSE 0 END) AS BIGINT) AS srp_sig
-       |  FROM prc GROUP BY 1
-       |),
-       |${hammingPairCtes("srp_sig")},
-       |sided AS (
-       |  SELECT id_a AS doc_id, id_b AS partner FROM pr
-       |  UNION ALL SELECT id_b, id_a FROM pr
-       |),
-       |agg AS (
-       |  SELECT doc_id, COUNT(*) AS n_dups, MIN(partner) AS min_partner
-       |  FROM sided GROUP BY 1
-       |)
-       |SELECT h.doc_id AS vec_id, h.srp_sig,
-       |  CAST(COALESCE(a.n_dups, 0) AS BIGINT) AS n_dups, a.min_partner
-       |FROM hashes h LEFT JOIN agg a USING (doc_id)""".stripMargin
-
-  /** q177 oracle: the full A/B replay — the planted hub+duplicate
-    * fixture (rebuilt by the same id arithmetic), pc1 → removeTop
-    * (`shp` carries BOTH the raw milli x and sharpened sh per
-    * component), each arm's 64 hash-parity sign projections +
-    * bit-packed signature + the engine-faithful capped Hamming
-    * blocking, and the planted-truth fold.
-    */
-  private lazy val q177OracleSql: String = {
-    def prc(srcCol: String, name: String) =
-      s"""$name AS (
-         |  SELECT s.vec_id, CAST(ii.range AS BIGINT) AS i,
-         |    CAST(SUM(CASE WHEN hash(8191 * ii.range + s.j) % 2 = 0
-         |      THEN s.$srcCol ELSE -s.$srcCol END) AS BIGINT) AS p
-         |  FROM shp s, range(64) ii
-         |  GROUP BY 1, 2
-         |)""".stripMargin
-    def hashes(src: String, name: String) =
-      s"""$name AS MATERIALIZED (
-         |  SELECT vec_id AS doc_id,
-         |    CAST(SUM(CASE WHEN p > 0 THEN
-         |      CASE WHEN i = 63 THEN -9223372036854775807 - 1
-         |        ELSE 1::BIGINT << CAST(i AS INTEGER) END
-         |      ELSE 0 END) AS BIGINT) AS srp_sig
-         |  FROM $src GROUP BY 1
-         |)""".stripMargin
-    def armStats(pr: String, p: String) =
-      s"""${p}nc AS (
-         |  SELECT CAST(COUNT(*) AS BIGINT) AS n_candidates FROM $pr
-         |),
-         |${p}hits AS (
-         |  SELECT CAST(COUNT(*) AS BIGINT) AS n_hits
-         |  FROM truth t JOIN $pr USING (id_a, id_b)
-         |)""".stripMargin
-    def armRow(arm: String, p: String) =
-      s"""SELECT '$arm' AS arm, ${p}nc.n_candidates, tcnt.n_planted,
-         |  ${p}hits.n_hits,
-         |  CAST((1000000 * ${p}hits.n_hits)
-         |    // greatest(${p}nc.n_candidates, 1) AS BIGINT)
-         |    AS precision_x1e6,
-         |  CAST((1000000 * ${p}hits.n_hits)
-         |    // greatest(tcnt.n_planted, 1) AS BIGINT) AS recall_x1e6
-         |FROM ${p}nc, tcnt, ${p}hits""".stripMargin
-    s"""WITH fix AS MATERIALIZED (
-       |  SELECT a.vec_id,
-       |    list_transform(generate_series(1, 64), j ->
-       |      CAST(b.embedding[j] AS DOUBLE)
-       |      + (3.0 + CAST(a.vec_id % 7 AS DOUBLE))
-       |      + 0.001 * CAST((a.vec_id + j) % 5 - 2 AS DOUBLE)) AS emb
-       |  FROM embeddings a
-       |  JOIN embeddings b ON b.vec_id = a.vec_id - a.vec_id % 2
-       |),
-       |embd AS (SELECT vec_id, emb AS v FROM fix),
-       |$pcaGramCtes,
-       |${pcaPowerCtes("g", "")},
-       |${pcaRayCtes("g", "v2", "")},
-       |$pcaRemoveTopCtes,
-       |${prc("x", "rprc")},
-       |${hashes("rprc", "rhashes")},
-       |${prc("sh", "sprc")},
-       |${hashes("sprc", "shashes")},
-       |${hammingPairCtes("srp_sig", out = "rpr", src = "rhashes",
-            pre = "rh")},
-       |${hammingPairCtes("srp_sig", out = "spr", src = "shashes",
-            pre = "sh2")},
-       |truth AS MATERIALIZED (
-       |  SELECT a.vec_id AS id_a, a.vec_id + 1 AS id_b
-       |  FROM fix a JOIN fix b ON b.vec_id = a.vec_id + 1
-       |  WHERE a.vec_id % 2 = 0
-       |),
-       |tcnt AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_planted FROM truth),
-       |${armStats("rpr", "r")},
-       |${armStats("spr", "s")}
-       |${armRow("raw", "r")}
-       |UNION ALL
-       |${armRow("sharp", "s")}""".stripMargin
-  }
-
-  /** q167 oracle: two components by Hotelling deflation — the full
-    * comp-1 replay, the ⌊v_j·v_k/(⌊vᵀv/10⁹⌋+1)⌋ projector, the
-    * λ-staged subtraction with the constant /64 restage, then comp 2's
-    * power steps + gauge over the deflated Gram (gauge ×64 back to
-    * first-round units).
-    */
-  private lazy val q167OracleSql: String =
-    s"""WITH $pcaCoreCtes,
-       |pdv AS (
-       |  SELECT CAST(SUM(v * v) AS BIGINT) // 1000000000 + 1 AS pdiv
-       |  FROM v2
-       |),
-       |prj AS (
-       |  SELECT a.k AS j, b.k AS k, ${duckFdiv("a.v * b.v", "pdiv")} AS p
-       |  FROM v2 a CROSS JOIN v2 b CROSS JOIN pdv
-       |),
-       |g2 AS MATERIALIZED (
-       |  SELECT t.j, t.k,
-       |    ${duckFdiv(
-             s"t.g - ${duckFdiv(s"ray.rayleigh * (${duckFdiv("p.p", "1000")})",
-               "1000000")}", "64")} AS g
-       |  FROM g t JOIN prj p ON p.j = t.j AND p.k = t.k CROSS JOIN ray
-       |),
-       |${pcaPowerCtes("g2", "c2")},
-       |${pcaRayCtes("g2", "c2v2", "c2")}
-       |SELECT CAST(1 AS BIGINT) AS comp, CAST(k AS BIGINT) AS dim,
-       |  v AS loading_x1e6, rayleigh
-       |FROM v2 CROSS JOIN ray
-       |UNION ALL
-       |SELECT CAST(2 AS BIGINT), CAST(k AS BIGINT), v,
-       |  c2ray.rayleigh * 64
-       |FROM c2v2 CROSS JOIN c2ray""".stripMargin
-
-  private lazy val q147OracleSql: String = {
-    val nq = 50; val k = 5; val rerank = 50
-    s"""WITH ${annExactCtes(nq, k)},
-       |$sq8CodeCtes,
-       |scored AS (
-       |  SELECT qid, nid,
-       |    (ds - ((ds % nz + nz) % nz)) // nz AS score
-       |  FROM (
-       |    SELECT q.vec_id AS qid, c.nid,
-       |      CAST(list_sum(list_transform(generate_series(1, len(c.cm)),
-       |        i -> c.cm[i] * q.q[i])) AS BIGINT) * c.maxq * 10000 AS ds,
-       |      CASE WHEN c.nrm < 1 THEN 1 ELSE c.nrm END AS nz
-       |    FROM codes c, mill q
-       |    WHERE q.vec_id < $nq AND q.vec_id <> c.nid)
-       |),
-       |short AS (
-       |  SELECT qid, nid FROM (
-       |    SELECT qid, nid, row_number() OVER (PARTITION BY qid
-       |      ORDER BY score DESC, nid) AS rnk
-       |    FROM scored)
-       |  WHERE rnk <= $rerank
-       |),
-       |approx AS (
-       |  SELECT qid, nid FROM (
-       |    SELECT s.qid, s.nid,
-       |      row_number() OVER (PARTITION BY s.qid
-       |        ORDER BY ${duckCosine("q.v", "n.v")} DESC, s.nid) AS rnk
-       |    FROM short s JOIN embd q ON q.vec_id = s.qid
-       |      JOIN embd n ON n.vec_id = s.nid)
-       |  WHERE rnk <= $k
-       |)
-       |${annRecallSelect(k)}""".stripMargin
-  }
-
-  /** q151 oracle: the COMPOSED replay — [[ivfCtes]] confines candidates
-    * to each query's probed cells, [[sq8CodeCtes]] supplies the int8
-    * codes, the integer ADC scores and floor division replay exactly,
-    * and the shortlist re-ranks with [[duckCosine]].
-    */
-  private lazy val q151OracleSql: String = {
-    val nc = 16; val np = 8; val nq = 50; val k = 5; val rerank = 50
-    s"""WITH ${annExactCtes(nq, k)},
-       |${ivfCtes(nc, np, nq)},
-       |$sq8CodeCtes,
-       |scored AS (
-       |  SELECT qid, nid,
-       |    (ds - ((ds % nz + nz) % nz)) // nz AS score
-       |  FROM (
-       |    SELECT p.qid, a.nid,
-       |      CAST(list_sum(list_transform(generate_series(1, len(c.cm)),
-       |        i -> c.cm[i] * q.q[i])) AS BIGINT) * c.maxq * 10000 AS ds,
-       |      CASE WHEN c.nrm < 1 THEN 1 ELSE c.nrm END AS nz
-       |    FROM probes p JOIN assigned a ON a.cell = p.cell
-       |      JOIN codes c ON c.nid = a.nid
-       |      JOIN mill q ON q.vec_id = p.qid
-       |    WHERE p.qid <> a.nid)
-       |),
-       |short AS (
-       |  SELECT qid, nid FROM (
-       |    SELECT qid, nid, row_number() OVER (PARTITION BY qid
-       |      ORDER BY score DESC, nid) AS rnk
-       |    FROM scored)
-       |  WHERE rnk <= $rerank
-       |),
-       |approx AS (
-       |  SELECT qid, nid FROM (
-       |    SELECT s.qid, s.nid,
-       |      row_number() OVER (PARTITION BY s.qid
-       |        ORDER BY ${duckCosine("q.v", "n.v")} DESC, s.nid) AS rnk
-       |    FROM short s JOIN embd q ON q.vec_id = s.qid
-       |      JOIN embd n ON n.vec_id = s.nid)
-       |  WHERE rnk <= $k
-       |)
-       |${annRecallSelect(k)}""".stripMargin
-  }
-
-  /** q152 oracle: the frozen-centroid sample ([[ivfCtes]]; assigned/
-    * probes prune away unreferenced), the sign-reversed drift plant,
-    * the assignment of the DRIFTED corpus with the same (cos DESC, cid
-    * DESC) tie-break, DECIMAL(18,9)-quantized cosines, and the exact
-    * floor-division mean with the stale verdict.
-    */
-  private lazy val q152OracleSql: String = {
-    s"""WITH ${annExactCtes(50, 5)},
-       |${ivfCtes(16, 8, 50)},
-       |embd2 AS (
-       |  SELECT vec_id, CASE WHEN vec_id % 5 = 0
-       |    THEN list_transform(v, x -> -x) ELSE v END AS v
-       |  FROM embd
-       |),
-       |a2 AS (
-       |  SELECT nid, cell, cos9 FROM (
-       |    SELECT e.vec_id AS nid, c.cid AS cell,
-       |      CAST(CAST(CAST(${duckCosine("e.v", "c.c_vec")}
-       |        AS DECIMAL(18,9)) AS DECIMAL(28,9))
-       |        * 1000000000 AS HUGEINT) AS cos9,
-       |      row_number() OVER (PARTITION BY e.vec_id
-       |        ORDER BY ${duckCosine("e.v", "c.c_vec")} DESC, c.cid DESC)
-       |        AS rn
-       |    FROM embd2 e CROSS JOIN cents c)
-       |  WHERE rn = 1
-       |),
-       |pc AS (
-       |  SELECT cell, COUNT(*) AS nm, CAST(SUM(cos9) AS BIGINT) AS s9 FROM a2 GROUP BY 1
-       |)
-       |SELECT cell, n_members, mean_cos_x1e9,
-       |  (mean_cos_x1e9 IS NULL OR mean_cos_x1e9 < 700000000) AS is_stale
-       |FROM (
-       |  SELECT c.cid AS cell,
-       |    CAST(COALESCE(pc.nm, 0) AS BIGINT) AS n_members,
-       |    CASE WHEN pc.nm IS NULL THEN NULL
-       |      ELSE CAST((pc.s9 - ((pc.s9 % pc.nm + pc.nm) % pc.nm))
-       |        // pc.nm AS BIGINT) END AS mean_cos_x1e9
-       |  FROM cents c LEFT JOIN pc ON pc.cell = c.cid)""".stripMargin
-  }
-
-  /** q153 oracle: the ANN lifecycle replayed — `cents1` is the hash-rank
-    * centroid sample over the BASE subset (vec_id%4≠3, what buildIndex
-    * saw), `cents2` the sample over the full DRIFTED corpus (what the
-    * rebuild retrained on — the same winning ids, since the rank hashes
-    * the id alone, but drifted values), and the three stages replay
-    * q152's DECIMAL-quantized-mean audit over (full, cents1),
-    * (drifted, cents1), (drifted, cents2). The "absorbed" stage's
-    * corpus is ALL ids only because absorb worked — a row the absorb
-    * lost or doubled shifts that stage's n_members and reddens it.
-    */
-  private lazy val q153OracleSql: String = {
-    def audit(corpus: String, cents: String, stage: String) =
-      s"""SELECT '$stage' AS stage, cell, n_members, mean_cos_x1e9,
-         |  (mean_cos_x1e9 IS NULL OR mean_cos_x1e9 < 700000000) AS is_stale
-         |FROM (
-         |  SELECT c.cid AS cell,
-         |    CAST(COALESCE(pc.nm, 0) AS BIGINT) AS n_members,
-         |    CASE WHEN pc.nm IS NULL THEN NULL
-         |      ELSE CAST((pc.s9 - ((pc.s9 % pc.nm + pc.nm) % pc.nm))
-         |        // pc.nm AS BIGINT) END AS mean_cos_x1e9
-         |  FROM $cents c LEFT JOIN (
-         |    SELECT cell, COUNT(*) AS nm, CAST(SUM(cos9) AS BIGINT) AS s9 FROM (
-         |      SELECT cell, cos9 FROM (
-         |        SELECT e.vec_id AS nid, c.cid AS cell,
-         |          CAST(CAST(CAST(${duckCosine("e.v", "c.c_vec")}
-         |            AS DECIMAL(18,9)) AS DECIMAL(28,9))
-         |            * 1000000000 AS HUGEINT) AS cos9,
-         |          row_number() OVER (PARTITION BY e.vec_id
-         |            ORDER BY ${duckCosine("e.v", "c.c_vec")} DESC,
-         |              c.cid DESC) AS rn
-         |        FROM $corpus e CROSS JOIN $cents c)
-         |      WHERE rn = 1)
-         |    GROUP BY 1) pc ON pc.cell = c.cid)""".stripMargin
-    s"""WITH embd AS (
-       |  SELECT vec_id, list_transform(embedding, e -> CAST(e AS DOUBLE)) AS v
-       |  FROM embeddings
-       |),
-       |$fnvCte,
-       |cents1 AS (
-       |  SELECT e.vec_id AS cid, e.v AS c_vec
-       |  FROM embd e JOIN fnv f ON f.vec_id = e.vec_id
-       |  WHERE e.vec_id % 4 <> 3
-       |  ORDER BY f.hr LIMIT 16
-       |),
-       |drift AS (
-       |  SELECT vec_id, CASE WHEN vec_id % 5 = 0
-       |    THEN list_transform(v, x -> -x) ELSE v END AS v FROM embd
-       |),
-       |cents2 AS (
-       |  SELECT d.vec_id AS cid, d.v AS c_vec
-       |  FROM drift d JOIN fnv f ON f.vec_id = d.vec_id
-       |  ORDER BY f.hr LIMIT 16
-       |)
-       |${audit("embd", "cents1", "absorbed")}
-       |UNION ALL
-       |${audit("drift", "cents1", "drifted")}
-       |UNION ALL
-       |${audit("drift", "cents2", "rebuilt")}""".stripMargin
-  }
-
-  private lazy val q65OracleSql: String = {
-    val m = 8; val ksub = 16; val subDim = 8; val nq = 50; val k = 5
-    val rerank = 50
-    val mean10 = "CAST(CASE WHEN s10 >= 0 THEN (20*s10 + cnt) // (2*cnt) " +
-      "ELSE -((20*(-(s10)) + cnt) // (2*cnt)) END AS HUGEINT)"
-    def assignCte(name: String, cb: String) =
-      s"""$name AS (
-         |  SELECT nid, sub, code FROM (
-         |    SELECT s.nid, s.sub, c.code,
-         |      row_number() OVER (PARTITION BY s.nid, s.sub
-         |        ORDER BY ${duckL2sq("s.n_sub", "c.c_sub")}, c.code) AS rn
-         |    FROM subs s JOIN $cb c ON c.sub = s.sub)
-         |  WHERE rn = 1
-         |)""".stripMargin
-    def meansCte(assigned: String, name: String) =
-      s"""$name AS (
-         |  SELECT sub, code,
-         |    LIST(CAST(CAST(CAST(m10 AS DOUBLE) / 10000000000 AS FLOAT) AS DOUBLE) ORDER BY di) AS new_sub
-         |  FROM (
-         |    SELECT sub, code, di, $mean10 AS m10
-         |    FROM (
-         |      SELECT a.sub, a.code, d.di,
-         |        SUM(CAST(CAST(s.n_sub[d.di] AS DECIMAL(27,9)) * 1000000000 AS HUGEINT)) AS s10,
-         |        COUNT(*) AS cnt
-         |      FROM subs s JOIN $assigned a ON a.nid = s.nid AND a.sub = s.sub
-         |      CROSS JOIN (SELECT CAST(range AS INTEGER) + 1 AS di FROM range($subDim)) d
-         |      GROUP BY a.sub, a.code, d.di))
-         |  GROUP BY sub, code
-         |)""".stripMargin
-    def refineCte(prev: String, means: String, out: String) =
-      s"""$out AS (
-         |  SELECT p.sub, p.code, COALESCE(m.new_sub, p.c_sub) AS c_sub
-         |  FROM $prev p LEFT JOIN $means m ON m.sub = p.sub AND m.code = p.code
-         |)""".stripMargin
-    s"""WITH ${annExactCtes(nq, k)},
-       |subs AS (
-       |  SELECT e.vec_id AS nid, CAST(m.range AS INTEGER) AS sub,
-       |    e.v[m.range*$subDim+1 : m.range*$subDim+$subDim] AS n_sub
-       |  FROM embd e CROSS JOIN range($m) m
-       |),
-       |cb0 AS (
-       |  SELECT sub, code, n_sub AS c_sub FROM (
-       |    SELECT nid, sub, n_sub,
-       |      CAST(row_number() OVER (PARTITION BY sub
-       |        ORDER BY ${toSigned64("CAST(hash(nid*31 + sub) AS HUGEINT)")}, nid) AS INTEGER) - 1 AS code
-       |    FROM subs)
-       |  WHERE code < $ksub
-       |),
-       |${assignCte("a1", "cb0")},
-       |${meansCte("a1", "m1")},
-       |${refineCte("cb0", "m1", "cb1")},
-       |${assignCte("a2", "cb1")},
-       |${meansCte("a2", "m2")},
-       |${refineCte("cb1", "m2", "cbf")},
-       |${assignCte("codes", "cbf")},
-       |qd AS (
-       |  SELECT s.nid AS qid, s.sub, c.code,
-       |    CAST(CAST(${duckL2sq("s.n_sub", "c.c_sub")} AS DECIMAL(18,9)) * 1000000000 AS HUGEINT) AS d9
-       |  FROM subs s JOIN cbf c ON c.sub = s.sub
-       |  WHERE s.nid < $nq
-       |),
-       |short AS (
-       |  SELECT qid, nid FROM (
-       |    SELECT q.qid, c.nid,
-       |      row_number() OVER (PARTITION BY q.qid ORDER BY SUM(q.d9), c.nid) AS rnk
-       |    FROM codes c JOIN qd q ON q.sub = c.sub AND q.code = c.code
-       |    WHERE q.qid <> c.nid
-       |    GROUP BY q.qid, c.nid)
-       |  WHERE rnk <= $rerank
-       |),
-       |approx AS (
-       |  SELECT qid, nid FROM (
-       |    SELECT s.qid, s.nid,
-       |      row_number() OVER (PARTITION BY s.qid
-       |        ORDER BY ${duckCosine("q.v", "n.v")} DESC, s.nid) AS rnk
-       |    FROM short s JOIN embd q ON q.vec_id = s.qid JOIN embd n ON n.vec_id = s.nid)
-       |  WHERE rnk <= $k
-       |)
-       |${annRecallSelect(k)}""".stripMargin
-  }
-
-  /** q17 oracle: the minhash-LSH pair construction replayed end-to-end on
-    * the 32-doc slice — per-shingle FNV+splitmix hashes (recursive CTE),
-    * 128 per-permutation unsigned minima (HUGEINT MIN = JVM unsignedLt),
-    * the 64 band folds (xor-multiply mod 2^64), bucket grouping with the
-    * 2..256 occupancy gate, ordered pair formation, and the
-    * signature-agreement estimate with floor division (Spark's
-    * double-div + cast-long truncation = `//` for non-negatives).
-    */
-  /** The shared minhash replay (docs < 32 → tokenize → shingle →
-    * recursive-CTE FNV → splitmix permutations → signatures `sigl` →
-    * band buckets `bk`) — the CTE chain both the q17 within-corpus
-    * oracle and the q137 incremental-probe oracle build on.
-    */
-  private lazy val minhashCtes: String = minhashCtesN(32)
-
-  /** The minhash CTE chain over `doc_id < limit` — 32 for the q17/q137
-    * fixtures, 48 for q149's lifecycle fixture (whose probe docs live
-    * in [32, 48)).
-    */
-  private def minhashCtesN(limit: Int): String = {
-    val np = NumPerms; val bands = Bands; val rpb = np / bands
-    val prime = "1099511628211"
-    var h = s"xor(CAST(${u64("cbf29ce484222325")} AS HUGEINT), CAST(b AS HUGEINT))"
-    for (r <- 0 until rpb)
-      h = s"(((xor($h, sig[$rpb*b+${r + 1}])) * $prime) % $m64)"
-    val permG = splitmixSql(
-      s"xor(th, (CAST(${u64("9e3779b97f4a7c15")} AS HUGEINT) * (p+1)) % $m64)")
-    s"""d32 AS (
-       |  SELECT doc_id, text FROM documents
-       |  WHERE doc_id < $limit AND text IS NOT NULL AND trim(text) <> ''
-       |),
-       |toks AS (
-       |  SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS tk FROM d32
-       |),
-       |sh AS (
-       |  SELECT DISTINCT doc_id,
-       |    CASE WHEN i+2 <= nt THEN tk[i+1] || ' ' || tk[i+2] ELSE tk[i+1] END AS s
-       |  FROM (SELECT doc_id, tk, len(tk) AS nt,
-       |          unnest(generate_series(0, greatest(len(tk)-$ShingleK, 0))) AS i
-       |        FROM toks)
-       |),
-       |shfnv AS (
-       |  WITH RECURSIVE r AS (
-       |    SELECT doc_id, s, 1 AS pos, CAST(${u64("cbf29ce484222325")} AS HUGEINT) AS h FROM sh
-       |    UNION ALL
-       |    SELECT doc_id, s, pos+1,
-       |      CAST((xor(h, CAST(ascii(substr(s,pos,1)) AS HUGEINT)) * $prime) % $m64 AS HUGEINT)
-       |    FROM r WHERE pos <= length(s)
-       |  )
-       |  SELECT doc_id, ${splitmixSql("h")} AS th FROM r WHERE pos = length(s) + 1
-       |),
-       |mins AS (
-       |  SELECT doc_id, p, MIN(g) AS mn FROM (
-       |    SELECT f.doc_id, pr.p, $permG AS g
-       |    FROM shfnv f CROSS JOIN (SELECT CAST(range AS BIGINT) AS p FROM range($np)) pr)
-       |  GROUP BY doc_id, p
-       |),
-       |sigl AS (SELECT doc_id, LIST(mn ORDER BY p) AS sig FROM mins GROUP BY doc_id),
-       |bk AS (
-       |  SELECT doc_id, b, ${splitmixSql(h)} AS bucket
-       |  FROM sigl CROSS JOIN (SELECT CAST(range AS BIGINT) AS b FROM range($bands))
-       |)""".stripMargin
-  }
-
-  private lazy val q17OracleSql: String = {
-    val np = NumPerms
-    s"""WITH $minhashCtes,
-       |grp AS (
-       |  SELECT b, bucket, LIST(doc_id ORDER BY doc_id) AS ids
-       |  FROM bk GROUP BY b, bucket HAVING COUNT(*) BETWEEN 2 AND 256
-       |),
-       |cand AS (
-       |  SELECT DISTINCT x.ids[i.i] AS id_a, x.ids[j.j] AS id_b
-       |  FROM grp x
-       |  CROSS JOIN LATERAL (SELECT unnest(generate_series(1, len(x.ids))) AS i) i
-       |  CROSS JOIN LATERAL (SELECT unnest(generate_series(1, len(x.ids))) AS j) j
-       |  WHERE i.i < j.j
-       |)
-       |SELECT c.id_a, c.id_b,
-       |  CAST((len(list_filter(generate_series(1, $np), q -> a.sig[q] = b.sig[q])) * 100) // $np AS BIGINT) AS est_jaccard_pct
-       |FROM cand c JOIN sigl a ON a.doc_id = c.id_a JOIN sigl b ON b.doc_id = c.id_b
-       |WHERE (len(list_filter(generate_series(1, $np), q -> a.sig[q] = b.sig[q])) * 100) // $np >= 5""".stripMargin
-  }
-
-  /** q137: the same minhash replay, restricted to the PROBE direction —
-    * odd ids (the crawl) pair only against even ids (the index), index
-    * buckets over 256 members excluded, best match per incoming doc by
-    * (max estimate, min index id), unmatched docs verdict novel.
-    */
-  private lazy val q137OracleSql: String = {
-    val np = NumPerms
-    s"""WITH $minhashCtes,
-       |bkE AS (SELECT doc_id, b, bucket FROM bk WHERE doc_id % 2 = 0),
-       |bkO AS (SELECT doc_id, b, bucket FROM bk WHERE doc_id % 2 = 1),
-       |okb AS (
-       |  SELECT b, bucket FROM bkE GROUP BY b, bucket
-       |  HAVING COUNT(*) <= 256
-       |),
-       |cand AS (
-       |  SELECT DISTINCT o.doc_id AS id_new, e.doc_id AS id_idx
-       |  FROM bkO o JOIN okb USING (b, bucket) JOIN bkE e USING (b, bucket)
-       |),
-       |scored AS (
-       |  SELECT c.id_new, c.id_idx,
-       |    CAST((len(list_filter(generate_series(1, $np),
-       |      q -> a.sig[q] = e.sig[q])) * 100) // $np AS BIGINT) AS est
-       |  FROM cand c JOIN sigl a ON a.doc_id = c.id_new
-       |    JOIN sigl e ON e.doc_id = c.id_idx
-       |),
-       |pos AS (SELECT * FROM scored WHERE est >= 5),
-       |best AS (
-       |  SELECT id_new, max(est) AS best_jaccard_pct FROM pos
-       |  GROUP BY id_new
-       |),
-       |bestid AS (
-       |  SELECT s.id_new, bst.best_jaccard_pct,
-       |    min(s.id_idx) AS best_match
-       |  FROM pos s JOIN best bst ON s.id_new = bst.id_new
-       |    AND s.est = bst.best_jaccard_pct
-       |  GROUP BY s.id_new, bst.best_jaccard_pct
-       |)
-       |SELECT n.doc_id, bi.best_match, bi.best_jaccard_pct,
-       |  bi.best_match IS NULL AS is_novel
-       |FROM (SELECT doc_id FROM d32 WHERE doc_id % 2 = 1) n
-       |LEFT JOIN bestid bi ON bi.id_new = n.doc_id""".stripMargin
-  }
-
-  /** q149: the q137 replay over the LIFECYCLE fixture — after build +
-    * two absorbs + compaction the physical index must hold exactly the
-    * docs < 32, so the oracle probes [32, 48) against ALL of < 32 with
-    * the same banded machinery; any row the lifecycle lost or
-    * duplicated would shift a verdict.
-    */
-  private lazy val q149OracleSql: String = {
-    val np = NumPerms
-    s"""WITH ${minhashCtesN(48)},
-       |bkI AS (SELECT doc_id, b, bucket FROM bk WHERE doc_id < 32),
-       |bkN AS (SELECT doc_id, b, bucket FROM bk WHERE doc_id >= 32),
-       |okb AS (
-       |  SELECT b, bucket FROM bkI GROUP BY b, bucket
-       |  HAVING COUNT(*) <= 256
-       |),
-       |cand AS (
-       |  SELECT DISTINCT o.doc_id AS id_new, e.doc_id AS id_idx
-       |  FROM bkN o JOIN okb USING (b, bucket) JOIN bkI e USING (b, bucket)
-       |),
-       |scored AS (
-       |  SELECT c.id_new, c.id_idx,
-       |    CAST((len(list_filter(generate_series(1, $np),
-       |      q -> a.sig[q] = e.sig[q])) * 100) // $np AS BIGINT) AS est
-       |  FROM cand c JOIN sigl a ON a.doc_id = c.id_new
-       |    JOIN sigl e ON e.doc_id = c.id_idx
-       |),
-       |pos AS (SELECT * FROM scored WHERE est >= 5),
-       |best AS (
-       |  SELECT id_new, max(est) AS best_jaccard_pct FROM pos
-       |  GROUP BY id_new
-       |),
-       |bestid AS (
-       |  SELECT s.id_new, bst.best_jaccard_pct,
-       |    min(s.id_idx) AS best_match
-       |  FROM pos s JOIN best bst ON s.id_new = bst.id_new
-       |    AND s.est = bst.best_jaccard_pct
-       |  GROUP BY s.id_new, bst.best_jaccard_pct
-       |)
-       |SELECT n.doc_id, bi.best_match, bi.best_jaccard_pct,
-       |  bi.best_match IS NULL AS is_novel
-       |FROM (SELECT doc_id FROM d32 WHERE doc_id >= 32) n
-       |LEFT JOIN bestid bi ON bi.id_new = n.doc_id""".stripMargin
-  }
-
-  /** [[duckHash64Tokens]] extended with the simhash bit-vote: CTE `sim`
-    * is (doc_id, simhash) — per bit, sign of the vote over the token
-    * hashes, reassembled and reinterpreted signed. Shared by the q18
-    * (codes) and q31 (Hamming-ball pairs) oracles. Lazy: declared above
-    * [[duckHash64Tokens]], which it interpolates.
-    */
-  private lazy val duckSimhash: String =
-    s"""$duckHash64Tokens,
-       |bits AS (
-       |  SELECT f.doc_id, t.b,
-       |    CASE WHEN SUM(CASE WHEN (f.th // (CAST(1 AS HUGEINT) << t.b)) % 2 = 1
-       |                       THEN 1 ELSE -1 END) > 0
-       |         THEN CAST(1 AS HUGEINT) << t.b ELSE CAST(0 AS HUGEINT) END AS contrib
-       |  FROM fnv f CROSS JOIN (SELECT CAST(range AS INTEGER) AS b FROM range(64)) t
-       |  GROUP BY f.doc_id, t.b
-       |),
-       |sim AS (
-       |  SELECT doc_id, ${toSigned64("s")} AS simhash
-       |  FROM (SELECT doc_id, SUM(contrib) AS s FROM bits GROUP BY doc_id)
-       |)""".stripMargin
-
-  /** CTEs `toks` (ordered lowercase whitespace tokens, mirroring
-    * F.tokensLower) and `fnv` — per-token Hashing.hash64: the FNV-1a
-    * char loop as a recursive CTE (documents are ASCII, so ascii() IS
-    * the UTF-8 byte), splitmix-finalized. Output: (doc_id, ti, th).
-    */
-  /** The q120 Naive-Bayes scorer replay, shared with the q160 eval:
-    * ends at CTE `sc(doc_id, n_tokens, sum_w, prior_q)` — the exact
-    * DECIMAL(18,9)-quantized per-term log-odds sum the engine computes.
-    */
-  private val nbScoreCtes: String =
-    """WITH d AS (
-      |  SELECT doc_id, lang,
-      |    string_split_regex(trim(lower(text)), '\s+') AS l
-      |  FROM documents
-      |), pos AS (
-      |  SELECT * FROM d
-      |  WHERE lang = 'en' AND (hash(doc_id) >> 16) % 10000 < 5000
-      |), neg AS (
-      |  SELECT * FROM d WHERE (hash(doc_id) >> 16) % 10000 >= 5000
-      |), tr AS (
-      |  SELECT unnest(l) AS term, 1 AS y FROM pos
-      |  UNION ALL
-      |  SELECT unnest(l) AS term, 0 AS y FROM neg
-      |), c AS (
-      |  SELECT term, SUM(y) AS cpos, SUM(1 - y) AS cneg
-      |  FROM tr GROUP BY 1
-      |), t AS (
-      |  SELECT SUM(cpos) AS npos, SUM(cneg) AS nneg, COUNT(*) AS v,
-      |    CAST(ln((SELECT COUNT(*) FROM pos)
-      |      / ((SELECT COUNT(*) FROM neg) * 1.0)) AS DECIMAL(18,9))
-      |      AS prior_q
-      |  FROM c
-      |), sb AS (
-      |  SELECT doc_id, unnest(l) AS term FROM d
-      |), sc AS (
-      |  SELECT doc_id, COUNT(*) AS n_tokens,
-      |    SUM(CAST(ln((COALESCE(cpos, 0) + 1)
-      |          / ((npos + v) * 1.0)) AS DECIMAL(18,9))
-      |      - CAST(ln((COALESCE(cneg, 0) + 1)
-      |          / ((nneg + v) * 1.0)) AS DECIMAL(18,9))) AS sum_w,
-      |    MAX(prior_q) AS prior_q
-      |  FROM sb LEFT JOIN c USING (term) CROSS JOIN t
-      |  GROUP BY doc_id
-      |)""".stripMargin
-
-  private val duckHash64Tokens: String =
-    s"""WITH toks AS (
-       |  SELECT doc_id, generate_subscripts(tk,1) AS ti, unnest(tk) AS tok
-       |  FROM (SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS tk FROM documents)
-       |),
-       |fnv AS (
-       |  WITH RECURSIVE r AS (
-       |    SELECT doc_id, ti, tok, 1 AS pos, CAST(${u64("cbf29ce484222325")} AS HUGEINT) AS h
-       |    FROM toks
-       |    UNION ALL
-       |    SELECT doc_id, ti, tok, pos+1,
-       |      CAST((xor(h, CAST(ascii(substr(tok,pos,1)) AS HUGEINT)) * 1099511628211) % $m64 AS HUGEINT)
-       |    FROM r WHERE pos <= length(tok)
-       |  )
-       |  SELECT doc_id, ti, ${splitmixSql("h")} AS th FROM r WHERE pos = length(tok) + 1
-       |)""".stripMargin
-
-  def oracleSql: Map[String, String] = Map(
-    "q1_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-        | CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        | CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-        | CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS sum_disc_price,
-        | CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*) AS avg_qty,
-        | COUNT(*) AS count_order
-        |FROM lineitem GROUP BY l_returnflag, l_linestatus""".stripMargin,
-    "q2_date_window" ->
-      """SELECT o_orderkey, o_custkey, o_orderdate, o_totalprice FROM orders
-        |WHERE o_orderdate >= TIMESTAMP '1995-03-01' AND o_orderdate < TIMESTAMP '1995-04-01'""".stripMargin,
-    "q3_star_join" ->
-      """SELECT r_name, COUNT(*) AS n_orders,
-        | CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        | JOIN nation ON c_nationkey = n_nationkey
-        | JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name""".stripMargin,
-    "q4_pivot" ->
-      """SELECT o_orderpriority,
-        | COUNT(*) FILTER (WHERE o_orderstatus = 'O') AS "O",
-        | COUNT(*) FILTER (WHERE o_orderstatus = 'F') AS "F",
-        | COUNT(*) FILTER (WHERE o_orderstatus = 'P') AS "P"
-        |FROM orders GROUP BY o_orderpriority""".stripMargin,
-    "q5_multiwindow" ->
-      """SELECT n_name,
-        | COUNT(*) FILTER (WHERE o_orderdate >= TIMESTAMP '1995-01-01') AS cnt_3m,
-        | COUNT(*) FILTER (WHERE o_orderdate >= TIMESTAMP '1995-02-01') AS cnt_2m,
-        | COUNT(*) FILTER (WHERE o_orderdate >= TIMESTAMP '1995-03-01') AS cnt_1m
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        | JOIN nation ON c_nationkey = n_nationkey
-        |WHERE o_orderdate >= TIMESTAMP '1995-01-01' AND o_orderdate < TIMESTAMP '1995-04-01'
-        |GROUP BY n_name""".stripMargin,
-    "q6_anti_join" ->
-      """SELECT p_partkey, p_name FROM part
-        |WHERE NOT EXISTS (SELECT 1 FROM lineitem WHERE l_partkey = p_partkey AND l_quantity >= 45)""".stripMargin,
-    "q7_zero_fill" ->
-      """SELECT n_name, COALESCE(x.n_orders, 0) AS n_orders FROM nation
-        |LEFT JOIN (
-        |  SELECT c_nationkey, COUNT(*) AS n_orders
-        |  FROM orders JOIN customer ON o_custkey = c_custkey
-        |  GROUP BY c_nationkey) x
-        |ON n_nationkey = x.c_nationkey""".stripMargin,
-    "q8_code_correction" -> {
-      val prefixes = validCodePrefixes.map(p => s"'$p'").mkString(", ")
-      s"""WITH e AS (
-         |  SELECT *, regexp_extract(props, '[0-9]+', 0) AS base FROM events
-         |), c AS (
-         |  SELECT *, CASE WHEN CAST(base AS INT) % 7 = 0 THEN NULL
-         |    ELSE lpad(base, 2, '0') || lpad(CAST(user_id % 100000 AS VARCHAR), 5, '0') END AS raw0
-         |  FROM e
-         |), c2 AS (
-         |  SELECT *,
-         |    CASE WHEN raw0 IS NULL THEN NULL
-         |         WHEN event_type = 'click' THEN substr(raw0, 2, 6)
-         |         ELSE raw0 END AS rawc,
-         |    lpad(CAST(event_id % 100 AS VARCHAR), 2, '0') || '00000' AS fb
-         |  FROM c
-         |), f AS (
-         |  SELECT *, CASE WHEN rawc IS NULL OR length(trim(rawc)) = 0 THEN fb ELSE rawc END AS filled FROM c2
-         |), p AS (
-         |  SELECT *, CASE WHEN length(filled) = 6 THEN '0' || filled ELSE filled END AS code FROM f
-         |), st AS (
-         |  SELECT *, CASE WHEN code IS NULL THEN 'Unknown'
-         |    WHEN substr(code, 1, 2) NOT IN ($prefixes) THEN 'Unknown2'
-         |    WHEN rawc IS NULL OR length(trim(rawc)) = 0 THEN 'Matched'
-         |    ELSE 'Ok' END AS status FROM p
-         |)
-         |SELECT status, COUNT(*) AS n, COUNT(DISTINCT code) AS n_codes FROM st GROUP BY status""".stripMargin
-    },
-    "q9_topk_per_group" ->
-      """SELECT c_mktsegment, rnk, o_orderkey, o_totalprice FROM (
-        |  SELECT c_mktsegment, o_orderkey, o_totalprice,
-        |    CAST(row_number() OVER (
-        |      PARTITION BY c_mktsegment
-        |      ORDER BY o_totalprice DESC, o_orderkey) AS BIGINT) AS rnk
-        |  FROM orders JOIN customer ON o_custkey = c_custkey)
-        |WHERE rnk <= 5""".stripMargin,
-    "q10_validation" -> (Seq(
-      expectationOracle("props_format",
-        """props IS NOT NULL AND regexp_matches(props, '^\{"k": [0-9]+\}$')""", 100),
-      expectationOracle("event_type_in_set",
-        "event_type IN ('click','view','purchase','signup','error')", 100),
-      expectationOracle("value_range", "value >= 0.0 AND value <= 500.0", 100),
-      expectationOracle("ts_not_null", "ts IS NOT NULL", 100),
-      expectationOracle("user_id_low", "user_id >= 0 AND user_id <= 99", 50)
-    ) :+
-      """SELECT 'event_id_unique' AS expectation, COUNT(*) AS n_rows,
-        | COUNT(DISTINCT event_id) AS n_pass, 100 AS mostly_pct,
-        | (COUNT(DISTINCT event_id) * 100 >= 100 * COUNT(*)) AS success
-        |FROM events""".stripMargin).mkString("\nUNION ALL\n"),
-    "q11_deromanize" ->
-      s"""SELECT p_size, ${romanCase("p_size")} AS roman, p_size AS back
-         |FROM (SELECT DISTINCT p_size FROM part WHERE p_size BETWEEN 1 AND 30)""".stripMargin,
-    "q12_schema_align" ->
-      """SELECT src, COUNT(*) AS n,
-        | CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM (
-        |  SELECT o_orderkey, o_totalprice, 'y1995' AS src FROM orders WHERE year(o_orderdate) = 1995
-        |  UNION ALL
-        |  SELECT o_orderkey, 0 AS o_totalprice, 'y1996' AS src FROM orders WHERE year(o_orderdate) = 1996
-        |) GROUP BY src""".stripMargin,
-    "q13_sessionize" ->
-      """WITH x AS (
-        |  SELECT user_id, epoch_ms(ts) AS ms,
-        |    lag(epoch_ms(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ms
-        |  FROM events
-        |), f AS (
-        |  SELECT user_id,
-        |    CASE WHEN prev_ms IS NULL OR ms - prev_ms > 1800000 THEN 1 ELSE 0 END AS flag
-        |  FROM x)
-        |SELECT user_id, COUNT(*) AS n_events, CAST(SUM(flag) AS BIGINT) AS n_sessions
-        |FROM f GROUP BY user_id""".stripMargin,
-    "q14_time_buckets" ->
-      """SELECT date_trunc('hour', ts) AS bucket_ts, event_type, COUNT(*) AS n,
-        | CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-        |FROM events GROUP BY 1, 2""".stripMargin,
-    "q15_partition_manifest" ->
-      """SELECT strftime(o_orderdate, '%Y-%m') AS p_month, COUNT(*) AS n,
-        | MIN(o_orderkey) AS min_key, MAX(o_orderkey) AS max_key
-        |FROM orders GROUP BY 1""".stripMargin,
-    "q16_dedup_exact" ->
-      "SELECT MIN(doc_id) AS keep_id, COUNT(*) AS n_dups FROM documents GROUP BY text",
-    "q18_simhash" ->
-      s"""$duckSimhash
-         |SELECT doc_id, simhash FROM sim""".stripMargin,
-    // all-pairs Hamming ball over the q18-oracled codes: the Spark side's
-    // 16-bit-chunk pigeonhole blocking is COMPLETE for maxHamming <= 3
-    // (and its maxBucket cap cannot bind at the verify scale), so the
-    // exhaustive self-join is the exact same pair set; DuckDB
-    // bit_count(xor) is two's-complement popcount = JVM Long.bitCount
-    "q31_simhash_pairs" ->
-      s"""$duckSimhash
-         |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |  CAST(bit_count(xor(a.simhash, b.simhash)) AS INTEGER) AS hamming
-         |FROM sim a JOIN sim b ON b.doc_id > a.doc_id
-         |WHERE bit_count(xor(a.simhash, b.simhash)) <= 3""".stripMargin,
-    "q26_fingerprint" ->
-      s"""$duckHash64Tokens,
-         |roll AS (
-         |  WITH RECURSIVE q AS (
-         |    SELECT doc_id, 0 AS ti, CAST(${u64("cbf29ce484222325")} AS HUGEINT) AS fp,
-         |      CAST(max(ti) AS INTEGER) AS n
-         |    FROM fnv GROUP BY doc_id
-         |    UNION ALL
-         |    SELECT q.doc_id, q.ti+1,
-         |      CAST((q.fp * 1099511628211 + f.th) % $m64 AS HUGEINT), q.n
-         |    FROM q JOIN fnv f ON f.doc_id = q.doc_id AND f.ti = q.ti + 1
-         |    WHERE q.ti < q.n
-         |  )
-         |  SELECT doc_id, fp FROM q WHERE ti = n
-         |)
-         |SELECT doc_id, ${toSigned64("m")} AS fp
-         |FROM (SELECT doc_id, ${splitmixSql("fp")} AS m FROM roll)""".stripMargin,
-    // count-min heavy hitters: the sketch's counters are exactly
-    // "SUM of token counts per (row, bucket)" and the bucket function is
-    // mix(hash64(term) xor (d+1)) % width — width is a power of two, so
-    // the JVM's sign-fixup mod equals the unsigned low bits, i.e. plain
-    // HUGEINT % 1024. Query terms are hashed even when absent from the
-    // corpus (their buckets may still hold colliding counts — exactly
-    // what the JVM estimate returns); empty buckets coalesce to 0.
-    "q53_heavy_hitters" ->
-      s"""WITH tok AS (
-         |  SELECT unnest(string_split_regex(trim(lower(text)), '\\s+')) AS term
-         |  FROM documents
-         |), tc AS (
-         |  SELECT term, COUNT(*) AS c FROM tok GROUP BY 1
-         |), qt AS (
-         |  SELECT unnest(['the', 'a', 'and', 'of', 'to']) AS term
-         |), vocab AS (
-         |  SELECT DISTINCT term FROM (SELECT term FROM tc UNION SELECT term FROM qt)
-         |), fnv AS (
-         |  WITH RECURSIVE r AS (
-         |    SELECT term, 1 AS pos, CAST(${u64("cbf29ce484222325")} AS HUGEINT) AS h
-         |    FROM vocab
-         |    UNION ALL
-         |    SELECT term, pos+1,
-         |      CAST((xor(h, CAST(ascii(substr(term,pos,1)) AS HUGEINT)) * 1099511628211) % $m64 AS HUGEINT)
-         |    FROM r WHERE pos <= length(term)
-         |  )
-         |  SELECT term, ${splitmixSql("h")} AS th FROM r WHERE pos = length(term) + 1
-         |), bk AS (
-         |  SELECT f.term, t.d,
-         |    ${splitmixSql("xor(f.th, CAST(t.d AS HUGEINT))")} % 1024 AS idx
-         |  FROM fnv f CROSS JOIN (SELECT unnest(generate_series(1, 4)) AS d) t
-         |), counters AS (
-         |  SELECT b.d, b.idx, SUM(tc.c) AS cnt
-         |  FROM bk b JOIN tc USING (term) GROUP BY 1, 2
-         |), qb AS (
-         |  SELECT b.term, b.d, b.idx FROM bk b JOIN qt USING (term)
-         |)
-         |SELECT qb.term, CAST(MIN(COALESCE(c2.cnt, 0)) AS BIGINT) AS est_count
-         |FROM qb LEFT JOIN counters c2 ON c2.d = qb.d AND c2.idx = qb.idx
-         |GROUP BY qb.term""".stripMargin,
-    // winnowing fingerprint COUNT: gram hashes are the q26 FNV fold
-    // (h·P + token-hash64, splitmix-finalized) over each k=4 window,
-    // replayed with a list_reduce over the doc's ordered token hashes;
-    // the selected-value set is { unsigned-min of each w=6 gram window }
-    // (the rightmost-on-ties rule only picks WHICH index, never a
-    // different value, so it is invisible to the distinct count), and
-    // HUGEINT grams in [0, 2^64) make MIN the unsigned comparison the
-    // JVM uses; m <= w degenerates to the global minimum -> exactly 1
-    "q38_winnow" ->
-      s"""$duckHash64Tokens,
-         |tl AS (
-         |  SELECT doc_id, list(th ORDER BY ti) AS thl FROM fnv GROUP BY doc_id
-         |),
-         |gr AS (
-         |  SELECT doc_id, i,
-         |    list_reduce(
-         |      list_prepend(CAST(${u64("cbf29ce484222325")} AS HUGEINT),
-         |        thl[i:least(i+3, len(thl))]),
-         |      (a, b) -> CAST((a * 1099511628211 + b) % $m64 AS HUGEINT)) AS fold,
-         |    greatest(len(thl) - 3, 1) AS m
-         |  FROM (SELECT doc_id, thl,
-         |          unnest(generate_series(1, greatest(len(thl) - 3, 1))) AS i
-         |        FROM tl)
-         |),
-         |wm AS (
-         |  SELECT doc_id, m,
-         |    CASE WHEN i <= m - 5 THEN
-         |      MIN(g) OVER (PARTITION BY doc_id ORDER BY i
-         |                   ROWS BETWEEN CURRENT ROW AND 5 FOLLOWING)
-         |    END AS wmin
-         |  FROM (SELECT doc_id, i, m, ${splitmixSql("fold")} AS g FROM gr)
-         |)
-         |SELECT doc_id,
-         |  CAST(CASE WHEN MAX(m) <= 6 THEN 1
-         |            ELSE COUNT(DISTINCT wmin) END AS INTEGER) AS n_fingerprints
-         |FROM wm GROUP BY doc_id""".stripMargin,
-    "q19_ngram_jaccard" ->
-      s"""$duckShingleSets,
-         |p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |  len(list_intersect(a.sh, b.sh)) AS inter,
-         |  len(list_distinct(list_concat(a.sh, b.sh))) AS uni
-         |  FROM s a JOIN s b ON a.doc_id < b.doc_id)
-         |SELECT id_a, id_b,
-         |  CAST(floor(inter * 100.0 / greatest(uni, 1)) AS BIGINT) AS jaccard_pct
-         |FROM p WHERE floor(inter * 100.0 / greatest(uni, 1)) >= 50""".stripMargin,
-    "q20_embed_neardup" ->
-      """SELECT a.vec_id AS id_a, b.vec_id AS id_b
-        |FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-        |WHERE list_cosine_similarity(a.embedding, b.embedding) >= 0.5""".stripMargin,
-    "q21_ann_bruteforce" ->
-      """WITH q AS (SELECT vec_id AS qid, embedding AS q_vec FROM embeddings WHERE vec_id < 10),
-        | c AS (SELECT vec_id AS nid, embedding AS n_vec FROM embeddings)
-        |SELECT qid, nid, rnk FROM (
-        |  SELECT qid, nid, CAST(row_number() OVER (
-        |    PARTITION BY qid
-        |    ORDER BY list_cosine_similarity(q_vec, n_vec) DESC, nid) AS BIGINT) AS rnk
-        |  FROM c, q WHERE qid <> nid)
-        |WHERE rnk <= 5""".stripMargin,
-    // q22/q32/q65 (r8 flips): the approximate search itself is replayed in
-    // SQL — codes/cells/codebooks reconstructed from the same hash + IEEE
-    // arithmetic — so the recall metric is oracle-checked end-to-end, not
-    // merely asserted against a Spark-side exact baseline.
-    "q22_ann_lsh" -> q22OracleSql,
-    "q162_ann_jl" -> q162OracleSql,
-    "q164_pca_power" -> q164OracleSql,
-    "q165_remove_top" -> q165OracleSql,
-    "q166_sharpened_srp" -> q166OracleSql,
-    "q177_srp_ab" -> q177OracleSql,
-    "q167_pca_deflate" -> q167OracleSql,
-    "q32_ann_ivf" -> q32OracleSql,
-    "q65_pq_ann" -> q65OracleSql,
-    // q147: SQ8 ADC search replayed end-to-end — quantization, integer
-    // dot-product scores, shortlist, and IEEE re-rank cosines
-    "q147_sq8_ann" -> q147OracleSql,
-    // q148: every perceptual-hash bit regenerated from doc_id
-    // arithmetic (pattern bit = hash(73m + salt + 9y + x) % 2 — DuckDB
-    // hash == murmur64; dHash bit = right AND NOT left; aHash cells
-    // 40+160b with the double-width edge cell and the floor-mean), the
-    // Hamming-ball pairs via bit_count(xor), counts and best partner —
-    // while Spark genuinely decodes the BMP/PNG containers
-    "q148_image_phash" -> q148OracleSql,
-    // q150: the replayed hash bits + recursive reachability — component
-    // = min id reachable through the Hamming ball
-    "q150_image_clusters" -> q150OracleSql,
-    // q151: the IVF probe replay composed with the SQ8 code replay —
-    // candidates confined to probed cells, integer ADC, IEEE re-rank
-    "q151_ivf_sq8" -> q151OracleSql,
-    // q152: frozen centroids + drifted-corpus assignment + quantized
-    // per-cell means — the rebuild-when verdicts replay exactly
-    "q152_ivf_drift" -> q152OracleSql,
-    // q153: the lifecycle's three audits replayed — base-subset and
-    // drifted-corpus centroid samples, membership via the absorbed index
-    "q153_ann_lifecycle" -> q153OracleSql,
-    // q154: every audio fingerprint bit regenerated from doc_id
-    // arithmetic (levels = hash % 64) while Spark walks real RIFF
-    // containers; Hamming pairs + counts like q148
-    "q154_audio_fingerprint" -> q154OracleSql,
-    // q155: every frame hash replayed from arithmetic while Spark
-    // decodes real APNG animations; all-frames-aligned pairing rule
-    "q155_clip_neardup" -> q155OracleSql,
-    "q158_scene_cuts" -> q158OracleSql,
-    // q156: the q154 replay + blocking + recursive reachability
-    "q156_audio_clusters" -> q156OracleSql,
-    "q163_audio_vad" -> q163OracleSql,
-    // q157: quantized cosines + both top-k windows + the exact
-    // floor-division margin, replayed end-to-end
-    "q157_bitext_margin" -> q157OracleSql,
-    "q169_bitext_global" -> q169OracleSql,
-    // q171: the exact-quantile replay — one ROW_NUMBER window in SQL
-    // (the engine builds the rank distributedly via Prefix,
-    // byte-identical), ceil targets by integer arithmetic.
-    "q171_token_quantiles" ->
-      """WITH per AS (
-        |  SELECT doc_id,
-        |    CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT)
-        |      AS v
-        |  FROM documents
-        |),
-        |rk AS (
-        |  SELECT v, doc_id,
-        |    row_number() OVER (ORDER BY v, doc_id) AS idx
-        |  FROM per
-        |),
-        |tot AS (SELECT COUNT(*) AS n FROM per),
-        |tg AS (
-        |  SELECT CAST(p.pct AS BIGINT) AS pct,
-        |    (p.pct * t.n + 99) // 100 AS idx, t.n AS n
-        |  FROM (VALUES (50), (90), (99)) p(pct) CROSS JOIN tot t
-        |)
-        |SELECT tg.pct, tg.idx, rk.v, tg.n AS n_rows
-        |FROM rk JOIN tg USING (idx)""".stripMargin,
-    // q170: the Lorenz replay — per-source token mass, the global rank
-    // + exclusive cumulative (one window in SQL; the engine builds it
-    // distributedly via Prefix, byte-identical), the q160 ntile closed
-    // form, staged-divisor shares. All BIGINT.
-    "q170_lorenz_sources" ->
-      """WITH per AS (
-        |  SELECT source AS g,
-        |    CAST(SUM(len(string_split_regex(trim(text), '\s+')))
-        |      AS BIGINT) AS w
-        |  FROM documents GROUP BY 1
-        |),
-        |rk AS (
-        |  SELECT g, w,
-        |    row_number() OVER (ORDER BY w, g) AS idx,
-        |    CAST(COALESCE(SUM(w) OVER (ORDER BY w, g
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS BIGINT) AS cum_w
-        |  FROM per
-        |),
-        |tot AS (
-        |  SELECT COUNT(*) AS total, CAST(SUM(w) AS BIGINT) AS wt
-        |  FROM per
-        |),
-        |bnd AS (
-        |  SELECT rk.*, t.total // 10 AS qq, t.total % 10 AS rr,
-        |    (t.wt - t.wt % 1000000) // 1000000 + 1 AS sdiv
-        |  FROM rk CROSS JOIN tot t
-        |),
-        |bn AS (
-        |  SELECT *, CASE WHEN qq = 0 THEN idx
-        |    WHEN idx <= (qq + 1) * rr THEN (idx + qq) // (qq + 1)
-        |    ELSE rr + (idx - (qq + 1) * rr + qq - 1) // qq END AS bin
-        |  FROM bnd
-        |)
-        |SELECT CAST(bin AS BIGINT) AS bin, COUNT(*) AS n_groups,
-        |  CAST(SUM(w) AS BIGINT) AS tokens,
-        |  (CAST(SUM(w) AS BIGINT) - CAST(SUM(w) AS BIGINT) % MIN(sdiv))
-        |    // MIN(sdiv) AS share_x1e6,
-        |  (MAX(cum_w + w) - MAX(cum_w + w) % MIN(sdiv)) // MIN(sdiv)
-        |    AS cum_share_x1e6
-        |FROM bn GROUP BY 1""".stripMargin,
-    // q172: the recursive-CTE Viterbi replay (generated from the SAME
-    // Scala piece Seq the kernel ships — one source of truth); q173/
-    // q174 reuse it and add the frequency weighting / per-lang rollup.
-    "q172_unigram_encode" ->
-      s"""WITH RECURSIVE $unigramDpCte
-         |SELECT word, n_pieces, score_x1e3, seg FROM ufin""".stripMargin,
-    "q173_unigram_em" ->
-      s"""WITH RECURSIVE $unigramDpCte,
-         |tok AS (
-         |  SELECT unnest(string_split_regex(trim(lower(text)), '\\s+'))
-         |    AS word
-         |  FROM documents
-         |),
-         |freq AS (
-         |  SELECT word, CAST(COUNT(*) AS BIGINT) AS f FROM tok
-         |  WHERE regexp_full_match(word, '[a-z]{1,16}') GROUP BY 1
-         |),
-         |ex AS (
-         |  SELECT f.f, unnest(string_split(u.seg, '|')) AS piece
-         |  FROM ufin u JOIN freq f USING (word)
-         |),
-         |cts AS (
-         |  SELECT piece, CAST(SUM(f) AS BIGINT) AS cnt FROM ex GROUP BY 1
-         |),
-         |utot AS (SELECT CAST(SUM(cnt) AS BIGINT) AS t FROM cts)
-         |SELECT piece, cnt,
-         |  CAST((1000000 * cnt) // t AS BIGINT) AS p_x1e6
-         |FROM cts CROSS JOIN utot""".stripMargin,
-    "q174_unigram_fertility" ->
-      s"""WITH RECURSIVE $unigramDpCte,
-         |tokl AS (
-         |  SELECT lang,
-         |    unnest(string_split_regex(trim(lower(text)), '\\s+')) AS word
-         |  FROM documents
-         |),
-         |freq AS (
-         |  SELECT lang, word, CAST(COUNT(*) AS BIGINT) AS f FROM tokl
-         |  WHERE regexp_full_match(word, '[a-z]{1,16}') GROUP BY 1, 2
-         |)
-         |SELECT f.lang,
-         |  CAST(SUM(f.f) AS BIGINT) AS n_words,
-         |  CAST(SUM(f.f * u.n_pieces) AS BIGINT) AS n_pieces,
-         |  CAST(SUM(f.f * length(f.word)) AS BIGINT) AS n_chars,
-         |  CAST((1000000 * SUM(f.f * u.n_pieces)) // SUM(f.f) AS BIGINT)
-         |    AS fertility_x1e6,
-         |  CAST((1000000 * SUM(f.f * length(f.word)))
-         |    // SUM(f.f * u.n_pieces) AS BIGINT) AS chars_per_piece_x1e6
-         |FROM freq f JOIN ufin u USING (word)
-         |GROUP BY 1""".stripMargin,
-    // q175/q176: exact-substring semantics replayed with LITERAL grams
-    // (the rank construction computes the same answer hash-free)
-    "q175_exact_dup_spans" -> q175OracleSql,
-    "q176_repetition_profile" -> q176OracleSql,
-    // q178: keep-first span removal — literal-gram occurrence ranking +
-    // complement-segment string_agg rebuild (byte-identical texts)
-    "q178_remove_dup_spans" -> q178OracleSql,
-    // q17 (r8 flip): the slice-wide LSH construction, replayed fully
-    "q17_minhash_pairs" -> q17OracleSql,
-    "q137_dedup_probe" -> q137OracleSql,
-    // q137b reads the SAME fixture through the persisted bucketed
-    // index, so the oracle is q137's verbatim — the probe result must
-    // be layout-invariant
-    "q137b_dedup_probe_persisted" -> q137OracleSql,
-    // q149: the lifecycle (build + 2 absorbs + compact) must leave an
-    // index physically equal to "all docs < 32" — the oracle probes
-    // [32,48) against that set with the full minhash replay
-    "q149_index_lifecycle" -> q149OracleSql,
-    "q23_token_count" ->
-      """SELECT doc_id,
-        | CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT) AS n_tokens,
-        | CAST(ceil(length(text) / 4.0) AS BIGINT) AS n_bpe_est
-        |FROM documents""".stripMargin,
-    "q24_lang_id" ->
-      s"""SELECT lang, predicted, COUNT(*) AS n FROM (
-         |  SELECT lang, $langCase AS predicted
-         |  FROM (SELECT lang, text, ' ' || lower(text) || ' ' AS p FROM documents))
-         |GROUP BY lang, predicted""".stripMargin,
-    "q25_quality" ->
-      """SELECT doc_id,
-        | CAST(length(text) - length(regexp_replace(text, '[.,;:!?''"()\[\]{}-]', '', 'g')) AS BIGINT) AS n_punct,
-        | n_stop,
-        | least(100, CAST(floor(500.0 * n_stop / n_tokens) AS BIGINT)) AS quality
-        |FROM (
-        |  SELECT doc_id, text,
-        |    CAST((length(p) - length(replace(p, ' the ', ''))) / 5
-        |       + (length(p) - length(replace(p, ' a ', ''))) / 3
-        |       + (length(p) - length(replace(p, ' and ', ''))) / 5 AS BIGINT) AS n_stop,
-        |    CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT) AS n_tokens
-        |  FROM (SELECT doc_id, text, ' ' || text || ' ' AS p FROM documents))""".stripMargin,
-    "q27_multimodal_meta" ->
-      """SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-        | CAST(octet_length(encode(text)) % 640 AS BIGINT) AS fake_width
-        |FROM documents""".stripMargin,
-    "q28_csv_ingest" ->
-      """SELECT o_orderstatus, COUNT(*) AS n,
-        | COUNT(*) FILTER (WHERE o_orderkey % 97 = 0) AS n_bad_date,
-        | CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM orders GROUP BY o_orderstatus""".stripMargin,
-    // q59 reads the SAME rows through the ZIP path, so the oracle is q28's
-    "q59_zip_ingest" ->
-      """SELECT o_orderstatus, COUNT(*) AS n,
-        | COUNT(*) FILTER (WHERE o_orderkey % 97 = 0) AS n_bad_date,
-        | CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM orders GROUP BY o_orderstatus""".stripMargin,
-    // q60: the same integer ray cast over ALL (point, polygon) pairs —
-    // blocking is recall-complete (a contained point is inside the bbox),
-    // so the restricted Spark join and the all-pairs oracle agree exactly
-    "q60_spatial_join" ->
-      """WITH dirs(k, dx, dy) AS (
-        |  VALUES (0,1,0),(1,1,1),(2,0,1),(3,-1,1),(4,-1,0),(5,-1,-1),(6,0,-1),(7,1,-1)
-        |), v AS (
-        |  SELECT n_nationkey AS poly_id, k,
-        |    CAST(n_nationkey AS BIGINT)*1000 + (50 + (CAST(n_nationkey AS BIGINT)*7 + k*13) % 30)*dx AS x,
-        |    CAST(n_nationkey AS BIGINT)*500  + (50 + (CAST(n_nationkey AS BIGINT)*7 + k*13) % 30)*dy AS y
-        |  FROM nation CROSS JOIN dirs
-        |), e AS (
-        |  SELECT a.poly_id, a.x AS xi, a.y AS yi, b.x AS xj, b.y AS yj
-        |  FROM v a JOIN v b ON a.poly_id = b.poly_id AND b.k = (a.k + 1) % 8
-        |), p AS (
-        |  SELECT c_custkey AS pt_id,
-        |    CAST(c_nationkey AS BIGINT)*1000 + c_custkey*37 % 200 - 100 AS px,
-        |    CAST(c_nationkey AS BIGINT)*500  + c_custkey*53 % 200 - 100 AS py
-        |  FROM customer
-        |), c AS (
-        |  SELECT pt_id, poly_id,
-        |    COUNT(*) FILTER (WHERE ((yi > py) != (yj > py)) AND
-        |      (CASE WHEN yj - yi > 0 THEN (px - xi)*(yj - yi) < (py - yi)*(xj - xi)
-        |            ELSE (px - xi)*(yj - yi) > (py - yi)*(xj - xi) END)) AS nc
-        |  FROM p CROSS JOIN e
-        |  GROUP BY pt_id, poly_id
-        |)
-        |SELECT CAST(poly_id AS BIGINT) AS poly_id, COUNT(*) AS n_inside,
-        |  MIN(pt_id) AS min_pt, MAX(pt_id) AS max_pt
-        |FROM c WHERE nc % 2 = 1 GROUP BY poly_id""".stripMargin,
-    "q29_name_lookup" -> {
-      val prefixes = validCodePrefixes.map(p => s"'$p'").mkString(", ")
-      s"""WITH f AS (
-         |  SELECT c_custkey,
-         |    CASE WHEN c_custkey % 5 = 0 THEN 'area of ' || n_name || ' province'
-         |         ELSE 'nowhere' END AS place,
-         |    CASE WHEN c_custkey % 5 IN (0, 1) THEN NULL
-         |         WHEN c_custkey % 5 = 3 THEN '77' || lpad(CAST(c_custkey % 1000 AS VARCHAR), 5, '0')
-         |         WHEN c_custkey % 5 = 4 THEN lpad(CAST(c_custkey % 40 AS VARCHAR), 2, '0') || '1234'
-         |         ELSE lpad(CAST(c_custkey % 40 AS VARCHAR), 2, '0') || '12345' END AS rawcode,
-         |    CASE WHEN c_custkey % 10 = 1 THEN '0555555' END AS fb
-         |  FROM customer JOIN nation ON c_nationkey = n_nationkey
-         |), lk AS (
-         |  SELECT c_custkey AS pk,
-         |    MIN(lpad(CAST(nn.n_nationkey AS VARCHAR), 2, '0') || '00000') AS byname
-         |  FROM f JOIN nation nn ON contains(lower(f.place), lower(nn.n_name))
-         |  WHERE f.rawcode IS NULL AND f.fb IS NULL
-         |  GROUP BY 1
-         |), x AS (
-         |  SELECT f.*, COALESCE(f.rawcode, f.fb, lk.byname) AS filled
-         |  FROM f LEFT JOIN lk ON f.c_custkey = lk.pk
-         |), p AS (
-         |  SELECT *, CASE WHEN length(filled) = 6 THEN '0' || filled ELSE filled END AS code FROM x
-         |)
-         |SELECT status, COUNT(*) AS n, COUNT(DISTINCT code) AS n_codes FROM (
-         |  SELECT *, CASE WHEN code IS NULL THEN 'Unknown'
-         |    WHEN substr(code, 1, 2) NOT IN ($prefixes) THEN 'Unknown2'
-         |    WHEN rawcode IS NOT NULL THEN 'Ok'
-         |    WHEN fb IS NOT NULL THEN 'Matched'
-         |    ELSE 'MatchedByName' END AS status FROM p)
-         |GROUP BY status""".stripMargin
-    },
-    "q30_pivot2" -> {
-      val cols = for (a <- Seq("O", "F"); n <- 1 to 7) yield
-        s" COUNT(*) FILTER (WHERE l_linestatus = '$a' AND l_linenumber = $n) AS cnt_${a}_$n"
-      s"SELECT l_returnflag,\n${cols.mkString(",\n")}\nFROM lineitem GROUP BY l_returnflag"
-    },
-    "q33_profile" -> Seq("o_orderkey", "o_custkey", "o_orderstatus").map(c =>
-      s"""SELECT '$c' AS column_name, COUNT(*) AS n_rows, COUNT($c) AS n_nonnull,
-         | COUNT(DISTINCT $c) AS n_distinct, CAST(MIN($c) AS VARCHAR) AS min_s,
-         | CAST(MAX($c) AS VARCHAR) AS max_s FROM orders""".stripMargin)
-      .mkString("\nUNION ALL\n"),
-    "q34_salted_join" ->
-      """SELECT c_mktsegment, COUNT(*) AS n,
-        | CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY c_mktsegment""".stripMargin,
-    // q35: real APNG frame walk — every-2nd-of-nf sampling and the
-    // 9x8x3-byte decoded frame size replay from doc_id arithmetic
-    "q35_frame_sample" ->
-      """SELECT doc_id,
-        | CASE WHEN doc_id % 8 = 1 THEN 0
-        |   ELSE least(4, (2 + (doc_id // 4) % 3 + 1) // 2) END AS n_frames,
-        | CASE WHEN doc_id % 8 = 1 THEN 0
-        |   ELSE least(4, (2 + (doc_id // 4) % 3 + 1) // 2) * 216 END
-        |   AS total_frame_bytes
-        |FROM documents""".stripMargin,
-    // q91: the identical blocked window replayed in SQL — same
-    // (key, id) tie-break, same lead offsets, same levenshtein verify
-    "q91_sorted_neighborhood" ->
-      """WITH nb AS (
-        |  SELECT c_custkey AS id_a, c_name AS name_a,
-        |    lead(c_custkey, 1) OVER w AS b1, lead(c_name, 1) OVER w AS n1,
-        |    lead(c_custkey, 2) OVER w AS b2, lead(c_name, 2) OVER w AS n2
-        |  FROM customer
-        |  WINDOW w AS (PARTITION BY c_mktsegment ORDER BY c_name, c_custkey)
-        |), p AS (
-        |  SELECT id_a, b1 AS id_b,
-        |    CAST(levenshtein(name_a, n1) AS BIGINT) AS dist
-        |  FROM nb WHERE b1 IS NOT NULL
-        |  UNION ALL
-        |  SELECT id_a, b2, CAST(levenshtein(name_a, n2) AS BIGINT)
-        |  FROM nb WHERE b2 IS NOT NULL
-        |)
-        |SELECT id_a, id_b, dist FROM p WHERE dist <= 2""".stripMargin,
-    // q88/q89: identical integer arithmetic in DuckDB (// is integral
-    // division; ntile shares the standard remainder-to-leading-buckets
-    // definition)
-    "q88_minmax_scale" ->
-      """WITH v AS (
-        |  SELECT c_custkey AS id, c_mktsegment AS grp,
-        |    CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT) AS v
-        |  FROM customer
-        |), mm AS (
-        |  SELECT grp, MIN(v) AS mn, MAX(v) AS mx FROM v GROUP BY grp
-        |)
-        |SELECT id, v.grp, v.v,
-        |  CASE WHEN mx = mn THEN 0
-        |       ELSE ((v.v - mn) * 10000) // (mx - mn) END AS scaled_bp
-        |FROM v JOIN mm ON v.grp = mm.grp""".stripMargin,
-    "q89_equal_freq_bins" ->
-      """SELECT c_custkey AS id, c_mktsegment AS grp,
-        |  CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT) AS v,
-        |  CAST(ntile(4) OVER (PARTITION BY c_mktsegment
-        |    ORDER BY CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT), c_custkey) AS BIGINT)
-        |    AS bin
-        |FROM customer""".stripMargin,
-    // q87: the same union + RANGE-frame windows — strict-before frames
-    // ([m−W, m−1] in microseconds) and integer weights, engine-exact
-    "q87_pit_features" ->
-      """WITH m AS (
-        |  SELECT CAST(NULL AS BIGINT) AS label_id, user_id,
-        |    CAST(NULL AS TIMESTAMP) AS lts, epoch_us(ts) AS m,
-        |    CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS wc,
-        |    CASE WHEN event_type = 'view' THEN 1 ELSE 0 END AS wv
-        |  FROM events WHERE event_type IN ('click', 'view')
-        |  UNION ALL
-        |  SELECT event_id, user_id, ts, epoch_us(ts), 0, 0
-        |  FROM events WHERE event_type = 'purchase'
-        |), f AS (
-        |  SELECT label_id, user_id, lts AS ts,
-        |    CAST(COALESCE(SUM(wc) OVER w1, 0) AS BIGINT) AS click_1h,
-        |    CAST(COALESCE(SUM(wv) OVER w1, 0) AS BIGINT) AS view_1h,
-        |    CAST(COALESCE(SUM(wc) OVER w2, 0) AS BIGINT) AS click_24h,
-        |    CAST(COALESCE(SUM(wv) OVER w2, 0) AS BIGINT) AS view_24h
-        |  FROM m
-        |  WINDOW
-        |    w1 AS (PARTITION BY user_id ORDER BY m
-        |           RANGE BETWEEN 3600000000 PRECEDING AND 1 PRECEDING),
-        |    w2 AS (PARTITION BY user_id ORDER BY m
-        |           RANGE BETWEEN 86400000000 PRECEDING AND 1 PRECEDING)
-        |)
-        |SELECT label_id, user_id, ts, click_1h, view_1h, click_24h, view_24h
-        |FROM f WHERE label_id IS NOT NULL""".stripMargin,
-    // q86: the same three damped integer iterations, unrolled as CTEs —
-    // every per-edge contribution is one integral divide, so the engines
-    // agree bit-for-bit
-    "q86_pagerank" ->
-      """WITH nm AS (SELECT MAX(c_custkey) AS nmax FROM customer),
-        |e AS (
-        |  SELECT c_custkey AS src, GREATEST(c_custkey // 2, 1) AS dst FROM customer
-        |  UNION ALL
-        |  SELECT c_custkey, (c_custkey * 7) % nmax + 1 FROM customer, nm
-        |), n AS (
-        |  SELECT DISTINCT src AS node FROM e
-        |  UNION SELECT DISTINCT dst FROM e
-        |), outd AS (SELECT src, COUNT(*) AS o FROM e GROUP BY src),
-        |c1 AS (
-        |  SELECT e.dst AS node, SUM((1000000 * 850) // (1000 * outd.o)) AS m
-        |  FROM e JOIN outd USING (src) GROUP BY e.dst
-        |), r1 AS (
-        |  SELECT n.node, CAST(150000 + COALESCE(c1.m, 0) AS BIGINT) AS r
-        |  FROM n LEFT JOIN c1 USING (node)
-        |), c2 AS (
-        |  SELECT e.dst AS node, SUM((r1.r * 850) // (1000 * outd.o)) AS m
-        |  FROM e JOIN outd USING (src) JOIN r1 ON r1.node = e.src
-        |  GROUP BY e.dst
-        |), r2 AS (
-        |  SELECT n.node, CAST(150000 + COALESCE(c2.m, 0) AS BIGINT) AS r
-        |  FROM n LEFT JOIN c2 USING (node)
-        |), c3 AS (
-        |  SELECT e.dst AS node, SUM((r2.r * 850) // (1000 * outd.o)) AS m
-        |  FROM e JOIN outd USING (src) JOIN r2 ON r2.node = e.src
-        |  GROUP BY e.dst
-        |)
-        |SELECT n.node, CAST(150000 + COALESCE(c3.m, 0) AS BIGINT) AS rank_micro
-        |FROM n LEFT JOIN c3 USING (node)""".stripMargin,
-    // q102: q86's unrolled-CTE iterations plus the dangling-mass
-    // redistribution replay — D_k = (Σ_dangling r_k · 850) div 1000,
-    // every node +⌊D/n⌋, the D mod n lowest ids +1. The id index is the
-    // same ROW_NUMBER-by-id the engine computes (custkeys start at 0
-    // here, so the index is NOT the id itself — the r11 first-verify
-    // caught exactly that off-by-one at the remainder boundary).
-    "q102_pagerank_dangling" ->
-      """WITH nm AS (SELECT MAX(c_custkey) AS nmax FROM customer),
-        |e AS (
-        |  SELECT c_custkey AS src, GREATEST(c_custkey // 2, 1) AS dst FROM customer
-        |  UNION ALL
-        |  SELECT c_custkey, (c_custkey * 7) % nmax + 1 FROM customer, nm
-        |  UNION ALL
-        |  SELECT c_custkey, nmax + 1 + (c_custkey % 5) FROM customer, nm
-        |  WHERE c_custkey % 3 = 0
-        |), n0 AS (
-        |  SELECT DISTINCT src AS node FROM e
-        |  UNION SELECT DISTINCT dst FROM e
-        |), n AS (
-        |  SELECT node, ROW_NUMBER() OVER (ORDER BY node) AS idx FROM n0
-        |), cnt AS (SELECT COUNT(*) AS nn FROM n),
-        |outd AS (SELECT src, COUNT(*) AS o FROM e GROUP BY src),
-        |dang AS (SELECT node FROM n0 WHERE node NOT IN (SELECT src FROM e)),
-        |d1 AS (
-        |  SELECT ((SELECT COUNT(*) FROM dang) * 1000000 * 850) // 1000 AS dm
-        |), c1 AS (
-        |  SELECT e.dst AS node, SUM((1000000 * 850) // (1000 * outd.o)) AS m
-        |  FROM e JOIN outd USING (src) GROUP BY e.dst
-        |), r1 AS (
-        |  SELECT n.node, CAST(150000 + COALESCE(c1.m, 0) + d1.dm // cnt.nn +
-        |    CASE WHEN n.idx <= d1.dm % cnt.nn THEN 1 ELSE 0 END AS BIGINT) AS r
-        |  FROM n LEFT JOIN c1 USING (node), d1, cnt
-        |), d2 AS (
-        |  SELECT (SUM(r1.r) * 850) // 1000 AS dm
-        |  FROM r1 JOIN dang USING (node)
-        |), c2 AS (
-        |  SELECT e.dst AS node, SUM((r1.r * 850) // (1000 * outd.o)) AS m
-        |  FROM e JOIN outd USING (src) JOIN r1 ON r1.node = e.src
-        |  GROUP BY e.dst
-        |), r2 AS (
-        |  SELECT n.node, CAST(150000 + COALESCE(c2.m, 0) + d2.dm // cnt.nn +
-        |    CASE WHEN n.idx <= d2.dm % cnt.nn THEN 1 ELSE 0 END AS BIGINT) AS r
-        |  FROM n LEFT JOIN c2 USING (node), d2, cnt
-        |), d3 AS (
-        |  SELECT (SUM(r2.r) * 850) // 1000 AS dm
-        |  FROM r2 JOIN dang USING (node)
-        |), c3 AS (
-        |  SELECT e.dst AS node, SUM((r2.r * 850) // (1000 * outd.o)) AS m
-        |  FROM e JOIN outd USING (src) JOIN r2 ON r2.node = e.src
-        |  GROUP BY e.dst
-        |)
-        |SELECT n.node, CAST(150000 + COALESCE(c3.m, 0) + d3.dm // cnt.nn +
-        |  CASE WHEN n.idx <= d3.dm % cnt.nn THEN 1 ELSE 0 END AS BIGINT)
-        |  AS rank_micro
-        |FROM n LEFT JOIN c3 USING (node), d3, cnt""".stripMargin,
-    // q85: rebuild the WKT text + bbox from the same vertex arithmetic as
-    // the q60 oracle — string_agg in ring order, closing vertex repeated
-    "q85_geometry_dim" ->
-      """WITH dirs(k, dx, dy) AS (
-        |  VALUES (0,1,0),(1,1,1),(2,0,1),(3,-1,1),(4,-1,0),(5,-1,-1),(6,0,-1),(7,1,-1)
-        |), v AS (
-        |  SELECT CAST(n_nationkey AS BIGINT) AS poly_id, k,
-        |    CAST(n_nationkey AS BIGINT)*1000 + (50 + (CAST(n_nationkey AS BIGINT)*7 + k*13) % 30)*dx AS x,
-        |    CAST(n_nationkey AS BIGINT)*500  + (50 + (CAST(n_nationkey AS BIGINT)*7 + k*13) % 30)*dy AS y
-        |  FROM nation CROSS JOIN dirs
-        |)
-        |SELECT poly_id,
-        |  'POLYGON ((' || string_agg(x || ' ' || y, ', ' ORDER BY k) ||
-        |    ', ' || (array_agg(x || ' ' || y ORDER BY k))[1] || '))' AS wkt,
-        |  MIN(x) AS xmin, MIN(y) AS ymin, MAX(x) AS xmax, MAX(y) AS ymax
-        |FROM v GROUP BY poly_id""".stripMargin,
-    // q96: the same vertex arithmetic as q85 — the oracle never sees the
-    // shapefile bytes; Spark must recover identical WKT by parsing the
-    // binary container it assembled. recno is the 1-based shapefile
-    // record number, n_vertices the parsed open-ring length (8).
-    "q96_shapefile" ->
-      """WITH dirs(k, dx, dy) AS (
-        |  VALUES (0,1,0),(1,1,1),(2,0,1),(3,-1,1),(4,-1,0),(5,-1,-1),(6,0,-1),(7,1,-1)
-        |), v AS (
-        |  SELECT CAST(n_nationkey AS BIGINT) AS poly_id, k,
-        |    CAST(n_nationkey AS BIGINT)*1000 + (50 + (CAST(n_nationkey AS BIGINT)*7 + k*13) % 30)*dx AS x,
-        |    CAST(n_nationkey AS BIGINT)*500  + (50 + (CAST(n_nationkey AS BIGINT)*7 + k*13) % 30)*dy AS y
-        |  FROM nation CROSS JOIN dirs
-        |)
-        |SELECT poly_id, CAST(1 AS BIGINT) AS recno,
-        |  CAST(COUNT(*) AS BIGINT) AS n_vertices,
-        |  'POLYGON ((' || string_agg(x || ' ' || y, ', ' ORDER BY k) ||
-        |    ', ' || (array_agg(x || ' ' || y ORDER BY k))[1] || '))' AS wkt,
-        |  MIN(x) AS xmin, MIN(y) AS ymin, MAX(x) AS xmax, MAX(y) AS ymax
-        |FROM v GROUP BY poly_id""".stripMargin,
-    // q97: every emitted field is doc_id arithmetic over the documents
-    // table — Spark must recover the same numbers by stream-parsing the
-    // real WARC containers it assembled (45 = the fixed HTTP/1.1 200
-    // text/plain header byte count; 10 = the torn capture's "BROKEN"
-    // prefix; torn HTTP → NULL status/body)
-    "q97_warc_ingest" ->
-      """SELECT doc_id,
-        | CASE WHEN doc_id % 11 = 5 THEN NULL ELSE 200 END AS http_status,
-        | CAST(CASE WHEN doc_id % 11 = 5 THEN 10 ELSE 45 END
-        |   + octet_length(encode(text)) AS BIGINT) AS content_length,
-        | TIMESTAMP '2024-01-01 00:00:00' + to_seconds(doc_id % 86400) AS warc_ts,
-        | CASE WHEN doc_id % 11 = 5 THEN NULL
-        |   ELSE CAST(octet_length(encode(text)) AS BIGINT) END AS n_body_bytes
-        |FROM documents""".stripMargin,
-    // q98: both engines run the SAME href/host regexp extraction over the
-    // same constructed HTML — parse vs parse (patterns are
-    // dialect-neutral: no lookarounds/backreferences, so Java regex and
-    // RE2 extract identically)
-    "q98_outlink_hosts" ->
-      """WITH h AS (
-        |  SELECT doc_id, text
-        |    || ' <a href="http://host' || (doc_id % 20) || '.example/p/' || doc_id || '">x</a>'
-        |    || CASE WHEN doc_id % 3 = 0 THEN
-        |         ' <a href="http://host' || ((doc_id * 7) % 20) || '.example/q/' || doc_id || '">y</a>'
-        |       ELSE '' END
-        |    || CASE WHEN doc_id % 5 = 1 THEN ' <a href="/rel/p">z</a>' ELSE '' END AS html
-        |  FROM documents
-        |), u AS (
-        |  SELECT doc_id, unnest(regexp_extract_all(html, 'href="([^"]+)"', 1)) AS url FROM h
-        |), e AS (
-        |  SELECT doc_id, regexp_extract(url, '^https?://([^/]+)', 1) AS host FROM u
-        |)
-        |SELECT doc_id, host, COUNT(*) AS n_links FROM e
-        |WHERE host <> '' GROUP BY doc_id, host""".stripMargin,
-    // q100: the decoded strings from the charset plant — the oracle
-    // composes text || suffix literals (already UTF-8 in the SQL text);
-    // Spark must recover identical strings by transcoding the planted
-    // ISO-8859-1 / Windows-1250 / UTF-16 bytes. The unknown-label class
-    // must surface as NULL + reason, never as a guessed decode.
-    "q100_warc_transcode" ->
-      """WITH t AS (
-        |  SELECT doc_id, text ||
-        |    CASE WHEN doc_id % 7 = 6 THEN chr(7) ELSE '' END AS text
-        |  FROM documents
-        |)
-        |SELECT doc_id,
-        |  CASE CAST(doc_id % 5 AS INTEGER)
-        |    WHEN 1 THEN 'iso-8859-1' WHEN 2 THEN 'windows-1250'
-        |    WHEN 3 THEN 'utf-16' WHEN 4 THEN 'x-graft-unknown'
-        |    ELSE NULL END AS charset,
-        |  CASE CAST(doc_id % 5 AS INTEGER)
-        |    WHEN 0 THEN text || ' δ✓'
-        |    WHEN 1 THEN text || ' café æøå'
-        |    WHEN 2 THEN text || ' śćżź'
-        |    WHEN 3 THEN text || ' Ω16'
-        |    ELSE NULL END AS text_utf8,
-        |  CASE WHEN doc_id % 5 = 4 THEN 'unsupported_charset'
-        |    ELSE NULL END AS reason
-        |FROM t""".stripMargin,
-    // q101: the q90 composed replay with the web-ingest stages in front.
-    // w0/w1 are the charset fixture's record arithmetic (every doc → one
-    // response, all parse); w2 drops the unsupported-charset class
-    // (doc_id%5=4); the inner funnel's 0_raw is the encoding-clean
-    // handoff (also drops the BEL plant, doc_id%7=6); the remaining CTEs
-    // are q90's exact per-stage replays over the TRANSCODED text —
-    // text || suffix(doc_id%5) — which both engines reconstruct
-    // character-identically (the q100 oracle proves the transcode side).
-    // No image gate on the web path. The near-dup recall argument is
-    // q19's, at the web config (128 perms × 64 bands, candidate
-    // pre-filter at 5%): pair-miss ≤ 1e-8 at J = 0.5, and the exact
-    // all-pairs bigram-Jaccard-≥50 oracle matches the engine's
-    // LSH + exact-verify output.
-    "q101_warc_funnel" ->
-      """WITH RECURSIVE raw AS (
-        |  SELECT doc_id, text
-        |    || CASE WHEN doc_id % 7 = 6 THEN chr(7) ELSE '' END
-        |    || CASE CAST(doc_id % 5 AS INTEGER)
-        |         WHEN 0 THEN ' δ✓'
-        |         WHEN 1 THEN ' café æøå'
-        |         WHEN 2 THEN ' śćżź'
-        |         WHEN 3 THEN ' Ω16'
-        |         ELSE NULL END AS text
-        |  FROM documents WHERE doc_id % 5 <> 4
-        |), enc AS (
-        |  SELECT doc_id, text FROM raw WHERE doc_id % 7 <> 6
-        |), cleaned AS (
-        |  SELECT doc_id,
-        |    trim(regexp_replace(
-        |      regexp_replace(
-        |        nfc_normalize(regexp_replace(text, '<[^>]*>', '', 'g')),
-        |        '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z][A-Za-z]+', '<EMAIL>', 'g'),
-        |      '\s+', ' ', 'g')) AS text
-        |  FROM enc
-        |), gated AS (
-        |  SELECT doc_id, text FROM (
-        |    SELECT doc_id, text,
-        |      CASE WHEN regexp_matches(text, '[\x{4e00}-\x{9fff}]') THEN 'zh'
-        |        WHEN contains(p, ' der ') OR contains(p, ' und ') OR contains(p, ' nicht ') THEN 'de'
-        |        WHEN contains(p, ' le ') OR contains(p, ' les ') OR contains(p, ' est ') THEN 'fr'
-        |        WHEN contains(p, ' el ') OR contains(p, ' los ') OR contains(p, ' es ') THEN 'es'
-        |        ELSE 'en' END AS lang,
-        |      least(100, CAST(floor(500.0 * (
-        |          (length(sp) - length(replace(sp, ' the ', ''))) / 5
-        |        + (length(sp) - length(replace(sp, ' a ', ''))) / 3
-        |        + (length(sp) - length(replace(sp, ' and ', ''))) / 5)
-        |        / len(string_split_regex(trim(text), '\s+'))) AS BIGINT)) AS quality
-        |    FROM (SELECT doc_id, text, ' ' || lower(text) || ' ' AS p,
-        |          ' ' || text || ' ' AS sp FROM cleaned))
-        |  WHERE lang = 'en' AND quality >= 10
-        |), x AS (
-        |  SELECT MIN(doc_id) AS doc_id, text FROM gated GROUP BY text
-        |), s AS (
-        |  SELECT doc_id, list_distinct(list_transform(
-        |    generate_series(1, greatest(len(toks)-1, 1)),
-        |    i -> CASE WHEN i+1 <= len(toks) THEN toks[i] || ' ' || toks[i+1]
-        |         ELSE toks[i] END)) AS sh
-        |  FROM (SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS toks FROM x)
-        |), p AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-        |  FROM s a JOIN s b ON a.doc_id < b.doc_id
-        |  WHERE floor(len(list_intersect(a.sh, b.sh)) * 100.0 /
-        |        greatest(len(list_distinct(list_concat(a.sh, b.sh))), 1)) >= 50
-        |), e AS (
-        |  SELECT id_a AS src, id_b AS dst FROM p
-        |  UNION SELECT id_b, id_a FROM p
-        |), reach AS (
-        |  SELECT doc_id AS id, doc_id AS comp FROM x
-        |  UNION
-        |  SELECT e.src, reach.comp FROM e JOIN reach ON e.dst = reach.id
-        |), neardedup AS (
-        |  SELECT x.doc_id, x.text FROM x JOIN (
-        |    SELECT id AS doc_id FROM reach GROUP BY id HAVING id = MIN(comp)
-        |  ) k USING (doc_id)
-        |), bench AS (
-        |  SELECT doc_id, substr(text, 1, 150) AS text FROM documents WHERE doc_id < 40
-        |), cs AS (
-        |  SELECT DISTINCT unnest(sh) AS h FROM (
-        |    SELECT list_distinct(list_transform(
-        |      generate_series(1, greatest(len(toks)-4, 1)),
-        |      i -> list_aggregate(toks[i:least(i+4, len(toks))], 'string_agg', ' '))) AS sh
-        |    FROM (SELECT string_split_regex(trim(lower(text)), '\s+') AS toks FROM bench))
-        |), bs AS (
-        |  SELECT doc_id AS train_id, unnest(sh) AS h FROM (
-        |    SELECT doc_id, list_distinct(list_transform(
-        |      generate_series(1, greatest(len(toks)-4, 1)),
-        |      i -> list_aggregate(toks[i:least(i+4, len(toks))], 'string_agg', ' '))) AS sh
-        |    FROM (SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS toks FROM neardedup))
-        |), contam AS (
-        |  SELECT train_id FROM (
-        |    SELECT train_id, COUNT(*) AS n, COUNT(cs.h) AS n_hit
-        |    FROM bs LEFT JOIN cs USING (h) GROUP BY train_id)
-        |  WHERE floor(n_hit * 100.0 / n) >= 50
-        |), decon AS (
-        |  SELECT doc_id FROM neardedup
-        |  WHERE doc_id NOT IN (SELECT train_id FROM contam)
-        |)
-        |SELECT 'w0_records' AS stage, COUNT(*) AS n_docs FROM documents
-        |UNION ALL SELECT 'w1_http_bodies', COUNT(*) FROM documents
-        |UNION ALL SELECT 'w1b_text_routed', COUNT(*) FROM documents
-        |UNION ALL SELECT 'w2_transcoded', COUNT(*) FROM raw
-        |UNION ALL SELECT '0_raw', COUNT(*) FROM enc
-        |UNION ALL SELECT '1_gated', COUNT(*) FROM gated
-        |UNION ALL SELECT '2_exact_dedup', COUNT(*) FROM x
-        |UNION ALL SELECT '3_near_dedup', COUNT(*) FROM neardedup
-        |UNION ALL SELECT '4_decontaminated', COUNT(*) FROM decon
-        |UNION ALL SELECT '5_packed', COUNT(*) FROM decon""".stripMargin,
-    // q99: same plant + same replace/regexp count arithmetic in DuckDB;
-    // counts are length DIFFS on the same string, so base-text length
-    // semantics cancel per engine
-    "q99_encoding_quality" ->
-      """WITH d AS (
-        |  SELECT doc_id, text
-        |    || CASE WHEN doc_id % 13 = 4 THEN chr(65533) || chr(65533) ELSE '' END
-        |    || CASE WHEN doc_id % 17 = 2 THEN chr(195) || chr(169) || chr(195) || chr(168) ELSE '' END
-        |    || CASE WHEN doc_id % 19 = 3 THEN chr(7) ELSE '' END AS t
-        |  FROM documents
-        |), c AS (
-        |  SELECT doc_id,
-        |    CAST(length(t) - length(replace(t, chr(65533), '')) AS BIGINT) AS n_replacement,
-        |    CAST((length(t) - length(replace(t, chr(195), '')))
-        |       + (length(t) - length(replace(t, chr(226) || chr(8364), ''))) / 2 AS BIGINT) AS n_mojibake,
-        |    CAST(length(t) - length(regexp_replace(t, '[\x01-\x08\x0b\x0c\x0e-\x1f]', '', 'g')) AS BIGINT) AS n_control
-        |  FROM d
-        |)
-        |SELECT doc_id, n_replacement, n_mojibake, n_control,
-        |  n_replacement + n_mojibake + n_control = 0 AS is_clean
-        |FROM c""".stripMargin,
-    // q103: the oracle composes the EXPECTED extraction from
-    // documents.text (the entity literals already decoded in the SQL
-    // source — 'é' for &#233;, '©' for &copy;); Spark must recover
-    // identical strings by genuinely parsing the planted page (head/
-    // script/style/comment elision, quote-aware tags, entity decode)
-    "q103_html_extract" ->
-      """SELECT doc_id,
-        |  'Home | About' || chr(10) || 'Doc ' || doc_id || chr(10) || text
-        |  || CASE WHEN doc_id % 3 = 0
-        |       THEN chr(10) || 'Extra & entity é A test' ELSE '' END
-        |  || CASE WHEN doc_id % 7 = 5
-        |       THEN chr(10) || '<b>not a tag</b>' ELSE '' END
-        |  || chr(10) || 'Copyright © 2024' AS page_text,
-        |  CAST(4 + CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 0 END
-        |         + CASE WHEN doc_id % 7 = 5 THEN 1 ELSE 0 END
-        |    AS BIGINT) AS n_lines
-        |FROM documents""".stripMargin,
-    // q111: every routed output composes from doc_id arithmetic — the
-    // html page's extracted text ('Doc N' block + the doc text), the
-    // ISO-8859-1 prose with its transcoded suffix, the BMP dims the
-    // fixture encoded; binary and untyped captures carry NULLs with
-    // only the route label. Spark must genuinely parse the HTTP
-    // Content-Type, dispatch, and run the per-type kernel.
-    "q111_content_route" ->
-      """SELECT doc_id,
-        |  CASE CAST(doc_id % 6 AS INTEGER)
-        |    WHEN 0 THEN 'text/html' WHEN 1 THEN 'text/plain'
-        |    WHEN 2 THEN 'image/bmp' WHEN 3 THEN 'application/pdf'
-        |    WHEN 5 THEN 'application/rss+xml'
-        |    END AS media_type,
-        |  CASE CAST(doc_id % 6 AS INTEGER)
-        |    WHEN 0 THEN 'html' WHEN 1 THEN 'plain' WHEN 2 THEN 'image'
-        |    WHEN 3 THEN 'pdf' WHEN 5 THEN 'feed'
-        |    ELSE 'unknown' END AS route,
-        |  CASE CAST(doc_id % 6 AS INTEGER)
-        |    WHEN 0 THEN 'Doc ' || doc_id || chr(10) || text
-        |    WHEN 1 THEN text || ' café' END AS page_text,
-        |  CASE WHEN doc_id % 6 = 3 THEN 'no_text' END AS pdf_reason,
-        |  CASE WHEN doc_id % 6 = 2 THEN 'bmp' END AS img_format,
-        |  CASE WHEN doc_id % 6 = 2 THEN 1 + doc_id % 1024 END AS img_w,
-        |  CASE WHEN doc_id % 6 = 2 THEN 1 + doc_id % 768 END AS img_h,
-        |  CASE WHEN doc_id % 6 = 5 THEN CAST(1 + doc_id % 3 AS BIGINT)
-        |    END AS feed_item_count
-        |FROM documents""".stripMargin,
-    // q112: the oracle composes each host's advertised sitemap list
-    // (canonical spellings) from host_id arithmetic; Spark must recover
-    // it by scanning the robots text and canonicalizing each value
-    "q112_sitemap_discovery" ->
-      """WITH h AS (SELECT range AS host_id FROM range(10))
-        |SELECT host_id,
-        |  'http://site' || host_id || '.example/sm/index.xml.gz'
-        |    AS sitemap_canon
-        |FROM h WHERE host_id % 2 = 0
-        |UNION ALL
-        |SELECT host_id,
-        |  'http://site' || host_id || '.example/sm/extra.xml'
-        |FROM h WHERE host_id % 2 = 0
-        |UNION ALL
-        |SELECT host_id, CAST(NULL AS VARCHAR)
-        |FROM h WHERE host_id % 2 = 1""".stripMargin,
-    // q113: the oracle is the (host parity × agent) delay table the
-    // planted group-scoped Crawl-delay lines imply
-    "q113_crawl_delay" ->
-      """WITH h AS (SELECT range AS host_id FROM range(10))
-        |SELECT host_id,
-        |  CASE WHEN host_id % 2 = 0 THEN CAST(2.5 AS DOUBLE) END
-        |    AS delay_bot,
-        |  CASE WHEN host_id % 2 = 1 THEN CAST(10 AS DOUBLE) END
-        |    AS delay_other
-        |FROM h""".stripMargin,
-    // q124: the oracle rebuilds the keeper frontier from the q104/q105
-    // doc_id arithmetic and replays the planted policies as a decision
-    // table — even hosts (full policy): /private/ blocked with an
-    // /private/ok/ Allow override, /*.tmp$ blocked, delay 2.5s, two
-    // sitemaps; odd hosts (no-override policy): graftbot's group only
-    // disallows /private/ (which covers /private/ok/ — no override),
-    // advertises no delay and no sitemaps. The fetch sequence replays
-    // the same per-(host, allowed) window.
-    "q124_fetch_schedule" ->
-      """WITH f AS (
-        |  SELECT doc_id, (doc_id % 50) % 10 AS host_id,
-        |    CAST(doc_id % 4 AS INTEGER) AS vid,
-        |    CASE CAST(doc_id % 4 AS INTEGER)
-        |      WHEN 0 THEN '/a/' || (doc_id % 50)
-        |      WHEN 1 THEN '/private/' || (doc_id % 50)
-        |      WHEN 2 THEN '/private/ok/' || (doc_id % 50)
-        |      ELSE '/files/' || (doc_id % 50) || '.tmp' END AS path
-        |  FROM documents
-        |), k AS (
-        |  SELECT host_id, vid,
-        |    'http://site' || host_id || '.example' || path AS url_canon,
-        |    MIN(doc_id) AS keeper_doc
-        |  FROM f GROUP BY 1, 2, path
-        |), v AS (
-        |  SELECT host_id, url_canon, keeper_doc,
-        |    CASE WHEN host_id % 2 = 0 THEN vid IN (0, 2)
-        |         ELSE vid IN (0, 3) END AS allowed_bot,
-        |    CASE WHEN host_id % 2 = 0 THEN CAST(2500 AS BIGINT) END
-        |      AS delay_x1000,
-        |    CAST(CASE WHEN host_id % 2 = 0 THEN 2 ELSE 0 END AS BIGINT)
-        |      AS n_sitemaps
-        |  FROM k
-        |), s AS (
-        |  SELECT *,
-        |    CASE WHEN allowed_bot THEN CAST(ROW_NUMBER() OVER (
-        |      PARTITION BY host_id, allowed_bot ORDER BY url_canon)
-        |      AS BIGINT) END AS fetch_seq
-        |  FROM v
-        |)
-        |SELECT 'site' || host_id || '.example' AS host, url_canon,
-        |  keeper_doc, allowed_bot, delay_x1000, n_sitemaps, fetch_seq,
-        |  (fetch_seq - 1) * delay_x1000 AS sched_offset_ms
-        |FROM s""".stripMargin,
-    // q125: the oracle replays the plant arithmetic — noindex for the
-    // noindex/NOINDEX/none variants (0,1,3 mod 7), nofollow for
-    // nofollow/none (0,2,3); the googlebot decoy (6) and the viewport
-    // meta never count. Always 2 anchors; followable = 0 when the PAGE
-    // says nofollow, else minus the rel=nofollow-marked link (id%3=1) —
-    // the rel=noopener distractor never subtracts. Spark must genuinely
-    // parse attribute-order-reversed and case-folded tags to agree.
-    "q125_robots_meta" ->
-      """SELECT doc_id,
-        |  doc_id % 7 IN (0, 1, 3) AS noindex,
-        |  doc_id % 7 IN (0, 2, 3) AS nofollow,
-        |  CAST(2 AS BIGINT) AS n_links,
-        |  CAST(CASE WHEN doc_id % 7 IN (0, 2, 3) THEN 0
-        |            WHEN doc_id % 3 = 1 THEN 1 ELSE 2 END AS BIGINT)
-        |    AS n_follow_links
-        |FROM documents""".stripMargin,
-    // q126: the oracle refits both hashed-bucket LMs on the same
-    // hash-defined split and replays the scoring — per-token FNV hashes
-    // from the shared fnv CTE, the bigram combine as wrapping HUGEINT
-    // arithmetic re-signed into DuckDB's hash(BIGINT) (bit-identical to
-    // Hashing.murmur64, negatives included), buckets as low-bits mod
-    // 1024 (power-of-two ⇒ signed/unsigned agreement), DECIMAL(18,9)
-    // per-bucket quantization before the subtraction and document sum.
-    "q126_dsir_select" ->
-      s"""$duckHash64Tokens,
-         |feats AS (
-         |  SELECT doc_id, CAST(th % 1024 AS INTEGER) AS b FROM fnv
-         |  UNION ALL
-         |  SELECT a.doc_id,
-         |    CAST(hash(CAST(${toSigned64(s"((a.th*31 + b.th) % $m64)")}
-         |      AS BIGINT)) % 1024 AS INTEGER)
-         |  FROM fnv a JOIN fnv b ON a.doc_id = b.doc_id AND b.ti = a.ti + 1
-         |), cls AS (
-         |  SELECT doc_id, lang, (hash(doc_id) >> 16) % 10000 AS bkt
-         |  FROM documents
-         |), pc AS (
-         |  SELECT b, COUNT(*) AS cp FROM feats JOIN cls USING (doc_id)
-         |  WHERE lang = 'en' AND bkt < 5000 GROUP BY 1
-         |), qc AS (
-         |  SELECT b, COUNT(*) AS cq FROM feats JOIN cls USING (doc_id)
-         |  WHERE bkt >= 5000 GROUP BY 1
-         |), model AS (
-         |  SELECT COALESCE(pc.b, qc.b) AS b, COALESCE(cp, 0) AS cp,
-         |    COALESCE(cq, 0) AS cq
-         |  FROM pc FULL JOIN qc ON pc.b = qc.b
-         |), tot AS (
-         |  SELECT COALESCE(SUM(cp), 0) AS np, COALESCE(SUM(cq), 0) AS nq
-         |  FROM model
-         |), wt AS (
-         |  SELECT b,
-         |    CAST(ln(CAST(cp + 1 AS DOUBLE) / CAST(np + 1024 AS DOUBLE))
-         |      AS DECIMAL(18,9))
-         |    - CAST(ln(CAST(cq + 1 AS DOUBLE) / CAST(nq + 1024 AS DOUBLE))
-         |      AS DECIMAL(18,9)) AS w
-         |  FROM model CROSS JOIN tot
-         |), w0 AS (
-         |  SELECT CAST(ln(CAST(1 AS DOUBLE) / CAST(np + 1024 AS DOUBLE))
-         |      AS DECIMAL(18,9))
-         |    - CAST(ln(CAST(1 AS DOUBLE) / CAST(nq + 1024 AS DOUBLE))
-         |      AS DECIMAL(18,9)) AS w0
-         |  FROM tot
-         |), sc AS (
-         |  SELECT doc_id, COUNT(*) AS n_feats,
-         |    SUM(COALESCE(w, w0)) AS sum_w
-         |  FROM feats LEFT JOIN wt USING (b) CROSS JOIN w0 GROUP BY 1
-         |), lr AS (
-         |  SELECT doc_id, CAST(n_feats AS BIGINT) AS n_feats,
-         |    CAST(floor(sum_w * 1000) AS BIGINT) AS logratio_x1000
-         |  FROM sc
-         |), avgd AS (
-         |  -- exact BIGINT floor division (positive-mod subtract, the
-         |  -- q127 discipline): floor(1000*sum/n) = floor(floor(1000*sum)/n)
-         |  SELECT doc_id, n_feats, logratio_x1000,
-         |    (logratio_x1000 - ((logratio_x1000 % n_feats + n_feats)
-         |      % n_feats)) // n_feats AS avg_x1000
-         |  FROM lr
-         |), rk AS (
-         |  SELECT *, CAST(ROW_NUMBER() OVER (ORDER BY avg_x1000 DESC,
-         |      doc_id) AS BIGINT) AS dsir_rank,
-         |    COUNT(*) OVER () AS total
-         |  FROM avgd
-         |)
-         |SELECT doc_id, n_feats, logratio_x1000, avg_x1000, dsir_rank,
-         |  dsir_rank * 1000 <= total * 250 AS selected
-         |FROM rk""".stripMargin,
-    // q127: full sketch replay — 3-gram hashes from the per-token fnv
-    // relation (wrapping base-31 fold re-signed into hash(BIGINT), the
-    // q126 bigram construction one order higher; short docs emit one
-    // fold over all tokens), k-min sketches by ORDER BY/LIMIT, θ = 2^64
-    // for an unfull sketch. The estimator is engine-portable 63-bit
-    // arithmetic (the r13 HUGEINT `//` / DECIMAL(38,0) surface diverged
-    // under the driver's DuckDB): θ quantized to 2^14 granularity via
-    // an EXACT double divide (θ−θ%2^14 = q·2^14 with q < 2^50 is
-    // exactly representable), then floor(r·2^50/θq) in BIGINT with the
-    // modulus subtracted before `//` so no division rounding can move
-    // the integer quotient. kmv_estimate is BIGINT on both sides.
-    "q127_kmv_overlap" -> {
-      val comb = "(CASE WHEN nt >= 3 THEN ((((th*31 + t2) % " + m64 +
-        ") * 31 + t3) % " + m64 + ") WHEN nt = 2 THEN ((th*31 + t2) % " +
-        m64 + ") ELSE th END)"
-      s"""$duckHash64Tokens,
-         |g AS (
-         |  SELECT doc_id, ti, th,
-         |    lead(th, 1) OVER (PARTITION BY doc_id ORDER BY ti) AS t2,
-         |    lead(th, 2) OVER (PARTITION BY doc_id ORDER BY ti) AS t3,
-         |    COUNT(*) OVER (PARTITION BY doc_id) AS nt
-         |  FROM fnv
-         |), kg AS (
-         |  SELECT doc_id,
-         |    hash(CAST(${toSigned64(comb)} AS BIGINT)) AS u
-         |  FROM g
-         |  WHERE (nt >= 3 AND ti <= nt - 2) OR (nt < 3 AND ti = 1)
-         |), cls AS (
-         |  SELECT doc_id, (hash(doc_id) >> 16) % 10000 AS bkt
-         |  FROM documents
-         |), mg AS (
-         |  SELECT u, MAX(ina) AS ina, MAX(inb) AS inb FROM (
-         |    SELECT kg.u, CASE WHEN bkt < 5000 THEN 1 ELSE 0 END AS ina,
-         |      CASE WHEN bkt >= 5000 THEN 1 ELSE 0 END AS inb
-         |    FROM kg JOIN cls USING (doc_id)) GROUP BY 1
-         |), exacts AS (
-         |  SELECT SUM(ina) AS ea, SUM(inb) AS eb, COUNT(*) AS eu,
-         |    SUM(ina * inb) AS ei
-         |  FROM mg
-         |), ska AS (SELECT u FROM mg WHERE ina = 1 ORDER BY u LIMIT 512),
-         |skb AS (SELECT u FROM mg WHERE inb = 1 ORDER BY u LIMIT 512),
-         |ta AS (
-         |  SELECT COUNT(*) AS ca, CASE WHEN COUNT(*) < 512
-         |    THEN CAST($m64 AS HUGEINT)
-         |    ELSE CAST(MAX(u) AS HUGEINT) END AS tha
-         |  FROM ska
-         |), tb AS (
-         |  SELECT COUNT(*) AS cb, CASE WHEN COUNT(*) < 512
-         |    THEN CAST($m64 AS HUGEINT)
-         |    ELSE CAST(MAX(u) AS HUGEINT) END AS thb
-         |  FROM skb
-         |), th AS (
-         |  SELECT ca, cb, tha, thb, least(tha, thb) AS thu
-         |  FROM ta CROSS JOIN tb
-         |), thq AS (
-         |  SELECT ca, cb, thu,
-         |    GREATEST(1, CAST(CAST(tha - (tha % 16384) AS DOUBLE)
-         |      / 16384.0 AS BIGINT)) AS qa,
-         |    GREATEST(1, CAST(CAST(thb - (thb % 16384) AS DOUBLE)
-         |      / 16384.0 AS BIGINT)) AS qb,
-         |    GREATEST(1, CAST(CAST(thu - (thu % 16384) AS DOUBLE)
-         |      / 16384.0 AS BIGINT)) AS qu
-         |  FROM th
-         |), mrg AS (
-         |  SELECT u, MAX(ina) AS ina, MAX(inb) AS inb FROM (
-         |    SELECT u, 1 AS ina, 0 AS inb FROM ska
-         |    UNION ALL SELECT u, 0, 1 FROM skb) GROUP BY 1
-         |), ui AS (
-         |  SELECT COUNT(*) AS ru, COALESCE(SUM(ina * inb), 0) AS ri
-         |  FROM mrg CROSS JOIN thq WHERE CAST(u AS HUGEINT) < thu
-         |), nums AS (
-         |  SELECT 'a' AS scope, CAST(CASE WHEN ca < 512 THEN ca
-         |    ELSE 511 END AS BIGINT) * 1125899906842624 AS num, qa AS q
-         |  FROM thq
-         |  UNION ALL
-         |  SELECT 'b', CAST(CASE WHEN cb < 512 THEN cb ELSE 511 END
-         |    AS BIGINT) * 1125899906842624, qb FROM thq
-         |  UNION ALL
-         |  SELECT 'union', CAST(ru AS BIGINT) * 1125899906842624, qu
-         |  FROM ui CROSS JOIN thq
-         |  UNION ALL
-         |  SELECT 'overlap', CAST(ri AS BIGINT) * 1125899906842624, qu
-         |  FROM ui CROSS JOIN thq
-         |), est AS (
-         |  SELECT scope, (num - (num % q)) // q AS kmv_estimate
-         |  FROM nums
-         |), exrows AS (
-         |  SELECT 'a' AS scope, CAST(ea AS BIGINT) AS exact_distinct
-         |  FROM exacts
-         |  UNION ALL SELECT 'b', CAST(eb AS BIGINT) FROM exacts
-         |  UNION ALL SELECT 'union', CAST(eu AS BIGINT) FROM exacts
-         |  UNION ALL SELECT 'overlap', CAST(ei AS BIGINT) FROM exacts
-         |)
-         |SELECT est.scope, kmv_estimate, exact_distinct
-         |FROM est JOIN exrows USING (scope)""".stripMargin
-    },
-    // q159: the full HLL replay — per-token FNV+splitmix hashes from
-    // the recursive CTE (th is unsigned HUGEINT in [0,2^64), so
-    // register = th % 64 == the engine's h & 63 and rest = th // 64 ==
-    // h >>> 6), trailing-zero ρ via the same bit algebra, MAX-merged
-    // registers, the exact harmonic sum with absent registers at 2^32,
-    // and the single integer floor division. All columns BIGINT on
-    // both sides.
-    "q159_hll_distinct" ->
-      s"""$duckHash64Tokens,
-         |regs AS (
-         |  SELECT d.lang, CAST(f.th % 64 AS BIGINT) AS reg,
-         |    CAST(f.th // 64 AS BIGINT) AS rest
-         |  FROM fnv f JOIN documents d USING (doc_id)
-         |),
-         |rh AS (
-         |  SELECT lang, reg,
-         |    CASE WHEN rest = 0 THEN 32
-         |      ELSE LEAST(bit_count((rest & -rest) - 1) + 1, 32)
-         |    END AS rho
-         |  FROM regs
-         |),
-         |mx AS (SELECT lang, reg, MAX(rho) AS m FROM rh GROUP BY 1, 2),
-         |sk AS (
-         |  SELECT lang,
-         |    SUM(CAST(1 AS BIGINT) << CAST(32 - m AS INTEGER)) AS sp,
-         |    COUNT(*) AS np
-         |  FROM mx GROUP BY 1
-         |),
-         |aud AS (
-         |  SELECT d.lang, COUNT(*) AS n_tokens,
-         |    COUNT(DISTINCT t.tok) AS exact_distinct
-         |  FROM toks t JOIN documents d USING (doc_id) GROUP BY 1
-         |),
-         |est AS (
-         |  SELECT s.lang, a.n_tokens, a.exact_distinct,
-         |    CAST(64 - s.np AS BIGINT) AS v_zero,
-         |    CAST(s.sp + (64 - s.np) * 4294967296 AS BIGINT)
-         |      AS s_harmonic,
-         |    CAST(${graft.functions.Hll.EstNumerator}
-         |      // (10000 * (s.sp + (64 - s.np) * 4294967296)) AS BIGINT)
-         |      AS est_hll
-         |  FROM sk s JOIN aud a USING (lang)
-         |)
-         |SELECT *,
-         |  CASE WHEN est_hll <= ${graft.functions.Hll.SmallRange}
-         |      AND v_zero > 0
-         |    THEN ([${graft.functions.Hll.LinearTable.mkString(", ")}])
-         |      [CAST(v_zero AS INTEGER)]
-         |    ELSE est_hll END AS estimate
-         |FROM est""".stripMargin,
-    // q168: the q159 replay at p = 12 — 4096 registers, rho cap 26,
-    // the alphaE4(12) numerator, the 4096-entry driver-literal linear
-    // table; every term BIGINT (the same proof as the engine's).
-    "q168_hll_p12" ->
-      s"""$duckHash64Tokens,
-         |regs AS (
-         |  SELECT d.lang, CAST(f.th % 4096 AS BIGINT) AS reg,
-         |    CAST(f.th // 4096 AS BIGINT) AS rest
-         |  FROM fnv f JOIN documents d USING (doc_id)
-         |),
-         |rh AS (
-         |  SELECT lang, reg,
-         |    CASE WHEN rest = 0 THEN 26
-         |      ELSE LEAST(bit_count((rest & -rest) - 1) + 1, 26)
-         |    END AS rho
-         |  FROM regs
-         |),
-         |mx AS (SELECT lang, reg, MAX(rho) AS m FROM rh GROUP BY 1, 2),
-         |sk AS (
-         |  SELECT lang,
-         |    SUM(CAST(1 AS BIGINT) << CAST(26 - m AS INTEGER)) AS sp,
-         |    COUNT(*) AS np
-         |  FROM mx GROUP BY 1
-         |),
-         |aud AS (
-         |  SELECT d.lang, COUNT(*) AS n_tokens,
-         |    COUNT(DISTINCT t.tok) AS exact_distinct
-         |  FROM toks t JOIN documents d USING (doc_id) GROUP BY 1
-         |),
-         |est AS (
-         |  SELECT s.lang, a.n_tokens, a.exact_distinct,
-         |    CAST(4096 - s.np AS BIGINT) AS v_zero,
-         |    CAST(s.sp + (4096 - s.np) * 67108864 AS BIGINT)
-         |      AS s_harmonic,
-         |    CAST(${graft.functions.Hll.estNumerator(12)}
-         |      // (10000 * (s.sp + (4096 - s.np) * 67108864)) AS BIGINT)
-         |      AS est_hll
-         |  FROM sk s JOIN aud a USING (lang)
-         |)
-         |SELECT *,
-         |  CASE WHEN est_hll <= ${graft.functions.Hll.smallRange(12)}
-         |      AND v_zero > 0
-         |    THEN ([${graft.functions.Hll.linearTable(12).mkString(", ")}])
-         |      [CAST(v_zero AS INTEGER)]
-         |    ELSE est_hll END AS estimate
-         |FROM est""".stripMargin,
-    // q128: the oracle replants the same fetch history from doc_id
-    // arithmetic and replays the estimator — lag-window change flags,
-    // the doubled-integer ratio, ln quantized to DECIMAL(18,9) before
-    // the ×1e6 floor, and the same bucket thresholds.
-    "q128_recrawl_rate" ->
-      """WITH h AS (
-        |  SELECT doc_id % 20 AS url_id, doc_id // 20 AS seq,
-        |    CASE (doc_id % 20) % 4 WHEN 0 THEN 0
-        |      WHEN 1 THEN doc_id // 20
-        |      WHEN 2 THEN (doc_id // 20) // 2
-        |      ELSE (doc_id // 20) // 12 END AS ch
-        |  FROM documents
-        |), fl AS (
-        |  SELECT url_id,
-        |    CASE WHEN lag(ch) OVER w IS NULL THEN 0
-        |      WHEN ch <> lag(ch) OVER w THEN 1 ELSE 0 END AS changed
-        |  FROM h WINDOW w AS (PARTITION BY url_id ORDER BY seq)
-        |), agg AS (
-        |  SELECT url_id, COUNT(*) AS n_fetches, SUM(changed) AS n_changes
-        |  FROM fl GROUP BY 1
-        |), lam AS (
-        |  SELECT url_id, CAST(n_fetches AS BIGINT) AS n_fetches,
-        |    CAST(n_changes AS BIGINT) AS n_changes,
-        |    CASE WHEN n_fetches > 1 THEN CAST(floor(
-        |      CAST(ln(CAST(2*(n_fetches-1-n_changes)+1 AS DOUBLE)
-        |        / CAST(2*(n_fetches-1)+1 AS DOUBLE)) AS DECIMAL(18,9))
-        |      * -1000000) AS BIGINT) END AS lambda_x1e6
-        |  FROM agg
-        |)
-        |SELECT url_id, n_fetches, n_changes, lambda_x1e6,
-        |  CASE WHEN n_fetches = 1 THEN 'unknown'
-        |       WHEN lambda_x1e6 >= 700000 THEN 'hot'
-        |       WHEN lambda_x1e6 >= 100000 THEN 'warm'
-        |       WHEN lambda_x1e6 > 0 THEN 'cool'
-        |       ELSE 'cold' END AS revisit_bucket
-        |FROM lam""".stripMargin,
-    // q133: the oracle generates the expected rows from the plant
-    // arithmetic (row/col geometry, cell naming); Spark must genuinely
-    // re-parse the table markup — th/td uniformity, markup stripping,
-    // trimming — to agree
-    "q133_table_extract" ->
-      """WITH d AS (
-        |  SELECT doc_id, 2 + doc_id % 3 AS nr, 2 + doc_id % 2 AS nc
-        |  FROM documents WHERE doc_id % 7 <> 6
-        |), r AS (
-        |  SELECT doc_id, nc,
-        |    unnest(generate_series(0, CAST(nr - 1 AS INTEGER))) AS row_idx
-        |  FROM d
-        |)
-        |SELECT doc_id, CAST(row_idx AS BIGINT) AS row_idx,
-        |  CAST(nc AS BIGINT) AS n_cells,
-        |  array_to_string(list_transform(
-        |    generate_series(0, CAST(nc - 1 AS INTEGER)),
-        |    c -> 'r' || row_idx || 'c' || c || '-' || doc_id), ' | ')
-        |    AS row_text
-        |FROM r""".stripMargin,
-    // q132: both engines genuinely normalize — DuckDB's nfc_normalize
-    // and the JDK kernel implement the same UAX#15 tables; combining
-    // marks are planted via chr() so no source-encoding mangling can
-    // silently change the fixture
-    "q132_nfc_audit" ->
-      """WITH t AS (
-        |  SELECT doc_id, text || CASE doc_id % 5
-        |    WHEN 1 THEN ' cafe' || chr(769)
-        |    WHEN 2 THEN ' A' || chr(778) || 'ngstro' || chr(776) || 'm'
-        |    WHEN 3 THEN ' café'
-        |    ELSE '' END AS txt
-        |  FROM documents
-        |)
-        |SELECT doc_id, txt = nfc_normalize(txt) AS nfc_equal,
-        |  CAST(length(txt) AS BIGINT) AS len_raw,
-        |  CAST(length(nfc_normalize(txt)) AS BIGINT) AS len_nfc
-        |FROM t""".stripMargin,
-    // q131: both engines genuinely count — the script classes are
-    // literal codepoint ranges (identical pattern bytes, no escape
-    // dialect), counts via match-removal length deltas, then the same
-    // fixed-order argmax and 5% integer threshold
-    "q131_script_mix" ->
-      """WITH t AS (
-        |  SELECT doc_id, text || CASE doc_id % 9
-        |    WHEN 2 THEN ' Пример текста для проверки'
-        |    WHEN 3 THEN ' 這是一個測試樣本文字'
-        |    WHEN 4 THEN ' δείγμα κειμένου εδώ'
-        |    WHEN 5 THEN ' عينة نص للاختبار'
-        |    WHEN 6 THEN ' Пx'
-        |    ELSE '' END AS txt
-        |  FROM documents
-        |), c AS (
-        |  SELECT doc_id,
-        |    length(txt) - length(regexp_replace(txt,
-        |      '[A-Za-zÀ-ÖØ-öø-ɏ]', '', 'g')) AS n_latin,
-        |    length(txt) - length(regexp_replace(txt, '[Ѐ-ӿ]', '', 'g'))
-        |      AS n_cyrillic,
-        |    length(txt) - length(regexp_replace(txt, '[一-鿿ぁ-ヿ]', '',
-        |      'g')) AS n_cjk,
-        |    length(txt) - length(regexp_replace(txt, '[Ͱ-Ͽ]', '', 'g'))
-        |      AS n_greek,
-        |    length(txt) - length(regexp_replace(txt, '[؀-ۿ]', '', 'g'))
-        |      AS n_arabic,
-        |    length(txt) - length(regexp_replace(txt, '\p{L}', '', 'g'))
-        |      AS letters
-        |  FROM t
-        |), d AS (
-        |  SELECT doc_id, n_latin, n_cyrillic, n_cjk, n_greek, n_arabic,
-        |    letters - n_latin - n_cyrillic - n_cjk - n_greek - n_arabic
-        |      AS n_other, letters
-        |  FROM c
-        |), e AS (
-        |  SELECT *, greatest(n_latin, n_cyrillic, n_cjk, n_greek,
-        |      n_arabic, n_other) AS mx,
-        |    CASE WHEN letters = 0 THEN 'none'
-        |      WHEN n_latin = greatest(n_latin, n_cyrillic, n_cjk,
-        |        n_greek, n_arabic, n_other) THEN 'latin'
-        |      WHEN n_cyrillic = greatest(n_latin, n_cyrillic, n_cjk,
-        |        n_greek, n_arabic, n_other) THEN 'cyrillic'
-        |      WHEN n_cjk = greatest(n_latin, n_cyrillic, n_cjk,
-        |        n_greek, n_arabic, n_other) THEN 'cjk'
-        |      WHEN n_greek = greatest(n_latin, n_cyrillic, n_cjk,
-        |        n_greek, n_arabic, n_other) THEN 'greek'
-        |      WHEN n_arabic = greatest(n_latin, n_cyrillic, n_cjk,
-        |        n_greek, n_arabic, n_other) THEN 'arabic'
-        |      ELSE 'other' END AS dominant_script
-        |  FROM d
-        |)
-        |SELECT doc_id, CAST(n_latin AS BIGINT) AS n_latin,
-        |  CAST(n_cyrillic AS BIGINT) AS n_cyrillic,
-        |  CAST(n_cjk AS BIGINT) AS n_cjk,
-        |  CAST(n_greek AS BIGINT) AS n_greek,
-        |  CAST(n_arabic AS BIGINT) AS n_arabic,
-        |  CAST(n_other AS BIGINT) AS n_other, dominant_script,
-        |  letters > 0 AND (
-        |    (dominant_script <> 'latin' AND n_latin * 20 >= letters
-        |      AND n_latin > 0) OR
-        |    (dominant_script <> 'cyrillic' AND n_cyrillic * 20 >= letters
-        |      AND n_cyrillic > 0) OR
-        |    (dominant_script <> 'cjk' AND n_cjk * 20 >= letters
-        |      AND n_cjk > 0) OR
-        |    (dominant_script <> 'greek' AND n_greek * 20 >= letters
-        |      AND n_greek > 0) OR
-        |    (dominant_script <> 'arabic' AND n_arabic * 20 >= letters
-        |      AND n_arabic > 0) OR
-        |    (dominant_script <> 'other' AND n_other * 20 >= letters
-        |      AND n_other > 0)) AS mixed_script
-        |FROM e""".stripMargin,
-    // q138: the fixture is pure arithmetic, so the oracle rebuilds the
-    // exact expected markdown string — heading hashes, finished inline
-    // spans, bullet lines — while Spark genuinely converts the HTML it
-    // assembled (incl. the torn heading degrading to plain text)
-    "q138_markdown" ->
-      """SELECT doc_id,
-        |  CASE
-        |    WHEN doc_id % 9 = 8 THEN 'Torn ' || doc_id
-        |    WHEN doc_id % 7 = 6 THEN 'plain ' || doc_id
-        |    WHEN doc_id % 5 = 0 THEN
-        |      'Pre ' || doc_id || '.' || chr(10) || chr(10)
-        |      || '| H0 | H1' || CASE WHEN doc_id % 2 = 1
-        |           THEN ' | H2' ELSE '' END || ' |' || chr(10)
-        |      || '| --- | ---' || CASE WHEN doc_id % 2 = 1
-        |           THEN ' | ---' ELSE '' END || ' |' || chr(10)
-        |      || array_to_string(list_transform(
-        |           generate_series(0, CAST(doc_id % 3 AS INTEGER)),
-        |           r -> '| c' || doc_id || '-' || r || '-0 | c'
-        |             || doc_id || '-' || r || '-1'
-        |             || CASE WHEN doc_id % 2 = 1 THEN ' | c' || doc_id
-        |                  || '-' || r || '-2' ELSE '' END
-        |             || ' |'), chr(10))
-        |    WHEN doc_id % 5 = 1 THEN
-        |      '- o ' || doc_id || '-0' || chr(10)
-        |      || array_to_string(list_transform(
-        |           generate_series(0, CAST(doc_id % 2 AS INTEGER)),
-        |           i -> '  - n ' || doc_id || '-' || i), chr(10))
-        |      || chr(10) || '- o ' || doc_id || '-1'
-        |    ELSE repeat('#', CAST(1 + doc_id % 3 AS INTEGER))
-        |      || ' Head ' || doc_id || chr(10) || chr(10)
-        |      || 'Intro **bold' || doc_id || '** and [link ' || doc_id
-        |      || '](http://site' || (doc_id % 50) % 10 || '.example/a/'
-        |      || doc_id || ') & *it' || doc_id || '* tail.'
-        |      || chr(10) || chr(10)
-        |      || array_to_string(list_transform(
-        |           generate_series(0, CAST(1 + doc_id % 2 AS INTEGER)),
-        |           i -> '- item ' || doc_id || '-' || i), chr(10))
-        |  END AS markdown
-        |FROM documents""".stripMargin,
-    // q139: declared replays the plant (attr absent when id%5=2, value
-    // case-folds back to the lang column); predicted replays the q24
-    // n-gram heuristic; Spark genuinely extracts the anchored attr
-    "q139_lang_attr" ->
-      s"""WITH b AS (
-         |  SELECT doc_id, lang, text, ' ' || lower(text) || ' ' AS p
-         |  FROM documents
-         |), pr AS (
-         |  SELECT doc_id, lang, $langCase AS predicted FROM b
-         |)
-         |SELECT doc_id,
-         |  CASE WHEN doc_id % 5 <> 2 THEN lang END AS declared_lang,
-         |  predicted AS predicted_lang,
-         |  doc_id % 5 <> 2 AND lang = predicted AS agree
-         |FROM pr""".stripMargin,
-    // q142: the oracle replays the chain plant — hop j of a normal
-    // chain lands on /page with L−j hops; a loop source's final target
-    // after the resolver's 2³ doubled steps is hop (j+8) mod L, hops
-    // NULL, resolved false. id%7=3 chains plant a STALE duplicate
-    // capture of hop 0 (an hour older, shortcutting to the page): the
-    // expected rows are exactly the newest-capture chain, so a resolver
-    // that keeps both edges (row multiplication) or picks the stale one
-    // (final_url/hops off) replays red
-    "q142_redirects" ->
-      """WITH d AS (
-        |  SELECT doc_id, (doc_id % 50) % 10 AS h,
-        |    CAST(doc_id % 4 AS INTEGER) AS l,
-        |    doc_id % 9 = 8 AS lp
-        |  FROM documents WHERE doc_id % 4 <> 0
-        |), j AS (
-        |  SELECT doc_id, h, l, lp,
-        |    unnest(generate_series(0, l - 1)) AS hop_idx
-        |  FROM d
-        |)
-        |SELECT doc_id, CAST(hop_idx AS BIGINT) AS hop_idx,
-        |  CASE WHEN lp THEN 'http://site' || h || '.example/r/' ||
-        |      doc_id || '/' || (hop_idx + 8) % l
-        |    ELSE 'http://site' || h || '.example/page/' || doc_id
-        |    END AS final_url,
-        |  CASE WHEN NOT lp THEN CAST(l - hop_idx AS BIGINT) END AS hops,
-        |  NOT lp AS resolved
-        |FROM j""".stripMargin,
-    // q141: the oracle replays the Info plant — full metadata id%4=0
-    // (title through the escape decoder), title-only id%4=1, no Info
-    // id%4=2, not a PDF id%4=3; Spark genuinely walks trailer → /Info
-    // ref → object → literal strings
-    "q141_pdf_meta" ->
-      """SELECT doc_id,
-        |  CASE CAST(doc_id % 4 AS INTEGER)
-        |    WHEN 0 THEN 'T (' || doc_id || ') esc'
-        |    WHEN 1 THEN 'T ' || doc_id END AS pdf_title,
-        |  CASE WHEN doc_id % 4 = 0 THEN 'Au ' || doc_id END
-        |    AS pdf_author,
-        |  CASE WHEN doc_id % 4 = 0 THEN make_date(2024,
-        |    CAST(1 + doc_id % 12 AS INTEGER),
-        |    CAST(1 + doc_id % 28 AS INTEGER)) END AS created_date,
-        |  doc_id % 4 IN (0, 1) AS has_info
-        |FROM documents""".stripMargin,
-    // q140: both engines genuinely measure — same tokenization, same
-    // min-per-term first occurrences, same checkpoint arithmetic, same
-    // milli-quantized ln regression in pure integer arithmetic
-    "q140_heaps_audit" ->
-      """WITH d AS (
-        |  SELECT doc_id, text || ' u' || doc_id AS text FROM documents
-        |),
-        |mx AS (SELECT max(doc_id) + 1 AS nd FROM d),
-        |tok AS (
-        |  SELECT doc_id, unnest(string_split_regex(trim(lower(text)),
-        |    '\s+')) AS term
-        |  FROM d
-        |),
-        |fd AS (SELECT term, min(doc_id) AS first_doc FROM tok
-        |  GROUP BY term),
-        |dt AS (SELECT (doc_id * 10) // nd AS dec, count(*) AS n
-        |  FROM tok, mx GROUP BY 1),
-        |dv AS (SELECT (first_doc * 10) // nd AS dec, count(*) AS v
-        |  FROM fd, mx GROUP BY 1),
-        |ds AS (SELECT CAST(range AS BIGINT) AS dec FROM range(10)),
-        |cum AS (
-        |  SELECT d.dec,
-        |    CAST(sum(coalesce(t.n, 0)) OVER (ORDER BY d.dec)
-        |      AS BIGINT) AS n_tokens,
-        |    CAST(sum(coalesce(v.v, 0)) OVER (ORDER BY d.dec)
-        |      AS BIGINT) AS n_vocab
-        |  FROM ds d LEFT JOIN dt t ON t.dec = d.dec
-        |    LEFT JOIN dv v ON v.dec = d.dec
-        |),
-        |pts AS (
-        |  SELECT dec, n_tokens, n_vocab,
-        |    CAST(floor(CAST(ln(n_tokens) AS DECIMAL(18,9)) * 1000)
-        |      AS BIGINT) AS x,
-        |    CAST(floor(CAST(ln(n_vocab) AS DECIMAL(18,9)) * 1000)
-        |      AS BIGINT) AS y
-        |  FROM cum
-        |),
-        |reg AS (
-        |  SELECT (10 * sum(x * y) - sum(x) * sum(y)) * 1000000 AS num,
-        |    10 * sum(x * x) - sum(x) * sum(x) AS den
-        |  FROM pts
-        |)
-        |SELECT dec + 1 AS bucket, n_tokens, n_vocab,
-        |  CAST(num // den AS BIGINT) AS heaps_beta_x1e6
-        |FROM pts, reg""".stripMargin,
-    // q134: the oracle replays the plant — og:title unless id%5=4
-    // (absent) or id%10=3 (tag present, content attribute missing);
-    // Spark must genuinely match case-folded/attribute-reordered tags,
-    // pair rel=alternate with the feed media type inside ONE tag, and
-    // never read the decoy generator tag's value as a key
-    "q134_meta_tags" ->
-      """SELECT doc_id,
-        |  CASE WHEN doc_id % 5 <> 4 AND doc_id % 10 <> 3
-        |    THEN 'Page ' || doc_id END AS og_title,
-        |  CASE WHEN doc_id % 3 <> 0 THEN 'Desc ' || doc_id END
-        |    AS meta_description,
-        |  CASE WHEN doc_id % 4 <> 3 THEN 'http://site' ||
-        |    (doc_id % 50) % 10 || '.example/p/' || doc_id END
-        |    AS canonical_url,
-        |  CASE doc_id % 4
-        |    WHEN 0 THEN 'http://site' || (doc_id % 50) % 10 ||
-        |      '.example/feed.xml'
-        |    WHEN 1 THEN 'http://site' || (doc_id % 50) % 10 ||
-        |      '.example/atom.xml' END AS feed_url,
-        |  CASE doc_id % 4 WHEN 0 THEN 'rss' WHEN 1 THEN 'atom' END
-        |    AS feed_type
-        |FROM documents""".stripMargin,
-    // q135: the oracle regenerates items by arithmetic (torn id%9=8
-    // bodies contribute ZERO rows); Spark must genuinely inflate the
-    // gzip wire form, split item/entry blocks, strip the RFC-822
-    // day-of-week prefix, honor the +0200 numeric zone (pub_hour 5,
-    // not 7), and parse RFC-822 vs ISO-8601 back to the same days
-    "q135_feed_parse" ->
-      """WITH d AS (
-        |  SELECT doc_id, 2 + doc_id % 3 AS n, (doc_id % 50) % 10 AS h
-        |  FROM documents WHERE doc_id % 9 <> 8
-        |), i AS (
-        |  SELECT doc_id, h,
-        |    unnest(generate_series(0, CAST(n - 1 AS INTEGER))) AS i
-        |  FROM d
-        |)
-        |SELECT doc_id,
-        |  CASE WHEN doc_id % 2 = 0 THEN 'rss' ELSE 'atom' END
-        |    AS feed_format,
-        |  CAST(i AS BIGINT) AS item_idx,
-        |  'Post ' || doc_id || '-' || i AS title,
-        |  'http://site' || h || '.example/post/' || doc_id || '/' || i
-        |    AS url,
-        |  CASE WHEN doc_id % 2 = 0 AND doc_id % 6 = 4 THEN NULL
-        |    ELSE make_date(2024, 1, CAST(1 + (doc_id + i) % 28
-        |      AS INTEGER)) END AS pub_date,
-        |  CAST(CASE WHEN doc_id % 2 = 0 AND doc_id % 6 = 4 THEN NULL
-        |    WHEN doc_id % 2 = 0 AND doc_id % 6 = 2
-        |      AND (doc_id + i) % 2 = 1 THEN 5
-        |    ELSE 8 END AS INTEGER) AS pub_hour
-        |FROM i""".stripMargin,
-    // q136: both engines genuinely run the capped selection — the same
-    // hash order (DuckDB hash(BIGINT) == murmur64), the same per-host
-    // running sum, the same integer cross-multiplied 10% cap
-    "q136_domain_cap" ->
-      """WITH b AS (
-        |  SELECT doc_id,
-        |    'site' || CASE WHEN doc_id % 2 = 0 THEN '0'
-        |      WHEN doc_id % 4 = 1 THEN '1'
-        |      ELSE CAST(doc_id % 32 AS VARCHAR) END || '.example'
-        |      AS host,
-        |    CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT)
-        |      AS n_tokens
-        |  FROM documents
-        |), t AS (SELECT sum(n_tokens) AS w_total FROM b),
-        |c AS (
-        |  SELECT doc_id, host, n_tokens,
-        |    sum(n_tokens) OVER (PARTITION BY host
-        |      ORDER BY hash(doc_id) >> 1, doc_id
-        |      ROWS UNBOUNDED PRECEDING) AS w_cum
-        |  FROM b)
-        |SELECT doc_id, host, n_tokens,
-        |  w_cum * 10000 <= w_total * 1000 AS kept
-        |FROM c, t""".stripMargin,
-    // q143: the q136 replay with the q25 quality score leading the
-    // within-domain order — best pages survive the cap, the hash only
-    // breaks score ties
-    "q143_domain_cap_quality" ->
-      """WITH b AS (
-        |  SELECT doc_id,
-        |    'site' || CASE WHEN doc_id % 2 = 0 THEN '0'
-        |      WHEN doc_id % 4 = 1 THEN '1'
-        |      ELSE CAST(doc_id % 32 AS VARCHAR) END || '.example'
-        |      AS host,
-        |    CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT)
-        |      AS n_tokens,
-        |    least(100, CAST(floor(500.0 * (
-        |        (length(p) - length(replace(p, ' the ', ''))) / 5
-        |        + (length(p) - length(replace(p, ' a ', ''))) / 3
-        |        + (length(p) - length(replace(p, ' and ', ''))) / 5)
-        |      / len(string_split_regex(trim(text), '\s+'))) AS BIGINT))
-        |      AS quality
-        |  FROM (SELECT doc_id, text, ' ' || text || ' ' AS p
-        |        FROM documents)
-        |), t AS (SELECT sum(n_tokens) AS w_total FROM b),
-        |c AS (
-        |  SELECT doc_id, host, n_tokens, quality,
-        |    sum(n_tokens) OVER (PARTITION BY host
-        |      ORDER BY quality DESC, hash(doc_id) >> 1, doc_id
-        |      ROWS UNBOUNDED PRECEDING) AS w_cum
-        |  FROM b)
-        |SELECT doc_id, host, n_tokens, quality,
-        |  w_cum * 10000 <= w_total * 1000 AS kept
-        |FROM c, t""".stripMargin,
-    // q146: the oracle refits all three gram tables on the same
-    // hash-defined train split and replays the branch ladder — string
-    // gram keys (tokens cannot contain whitespace, so ' '-joined keys
-    // are unambiguous; the q114 split_part posture), the same IEEE
-    // branch expressions over exact BIGINT counts, DECIMAL(18,9)
-    // per-position quantization, positive-mod BIGINT floor average
-    "q146_stupid_backoff" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    string_split_regex(trim(lower(text)), '\s+') AS l
-        |  FROM documents
-        |), tr AS (
-        |  SELECT l FROM d WHERE (hash(doc_id) >> 16) % 10000 < 9000
-        |), c3 AS (
-        |  SELECT tg, COUNT(*) AS c3 FROM (
-        |    SELECT unnest(list_transform(range(1, len(l) - 1),
-        |      i -> l[i] || ' ' || l[i+1] || ' ' || l[i+2])) AS tg
-        |    FROM tr) GROUP BY 1
-        |), c2 AS (
-        |  SELECT bg, COUNT(*) AS c2 FROM (
-        |    SELECT unnest(list_transform(range(1, len(l)),
-        |      i -> l[i] || ' ' || l[i+1])) AS bg
-        |    FROM tr) GROUP BY 1
-        |), c1 AS (
-        |  SELECT w, COUNT(*) AS c1 FROM (
-        |    SELECT unnest(l) AS w FROM tr) GROUP BY 1
-        |), tot AS (
-        |  SELECT CAST(SUM(c1) AS BIGINT) AS n,
-        |    CAST(COUNT(*) AS BIGINT) AS v
-        |  FROM c1
-        |), sb AS (
-        |  SELECT doc_id, unnest(list_transform(range(1, len(l) - 1),
-        |    i -> l[i] || ' ' || l[i+1] || ' ' || l[i+2])) AS tg
-        |  FROM d
-        |), j AS (
-        |  SELECT doc_id,
-        |    CASE WHEN c3.c3 IS NOT NULL THEN 0
-        |         WHEN bg.c2 IS NOT NULL THEN 1 ELSE 2 END AS lvl,
-        |    CAST(-ln(CASE
-        |      WHEN c3.c3 IS NOT NULL
-        |        THEN CAST(c3.c3 AS DOUBLE) / CAST(ctx.c2 AS DOUBLE)
-        |      WHEN bg.c2 IS NOT NULL
-        |        THEN 0.4 * CAST(bg.c2 AS DOUBLE)
-        |          / CAST(w2c.c1 AS DOUBLE)
-        |      ELSE 0.16 * CAST(COALESCE(w3c.c1, 0) + 1 AS DOUBLE)
-        |        / CAST(n + v AS DOUBLE)
-        |    END) AS DECIMAL(18,9)) AS nll
-        |  FROM sb
-        |  LEFT JOIN c3 ON sb.tg = c3.tg
-        |  LEFT JOIN c2 ctx ON split_part(sb.tg, ' ', 1) || ' '
-        |    || split_part(sb.tg, ' ', 2) = ctx.bg
-        |  LEFT JOIN c2 bg ON split_part(sb.tg, ' ', 2) || ' '
-        |    || split_part(sb.tg, ' ', 3) = bg.bg
-        |  LEFT JOIN c1 w2c ON split_part(sb.tg, ' ', 2) = w2c.w
-        |  LEFT JOIN c1 w3c ON split_part(sb.tg, ' ', 3) = w3c.w
-        |  CROSS JOIN tot
-        |), g AS (
-        |  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_trigrams,
-        |    CAST(SUM(CASE WHEN lvl = 0 THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_tri_hits,
-        |    CAST(SUM(CASE WHEN lvl = 1 THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_bi_backoffs,
-        |    CAST(SUM(CASE WHEN lvl = 2 THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_uni_backoffs,
-        |    CAST(floor(SUM(nll) * 1000) AS BIGINT) AS sum_nll_x1000
-        |  FROM j GROUP BY 1
-        |)
-        |SELECT doc_id, n_trigrams, n_tri_hits, n_bi_backoffs,
-        |  n_uni_backoffs, sum_nll_x1000,
-        |  (sum_nll_x1000 - ((sum_nll_x1000 % n_trigrams + n_trigrams)
-        |    % n_trigrams)) // n_trigrams AS avg_nll_x1000
-        |FROM g""".stripMargin,
-    // q145: both engines genuinely quantize — the same floor(v*1000)
-    // milli-unit map (float->double widening exact, IEEE multiply and
-    // floor portable), the same positive-mod floor divisions for
-    // code/dequant, the same correctly-rounded sqrt of an exact
-    // integer; the oracle unnests per element where Spark runs array
-    // lambdas, and list_position's NULL-on-absent matches the Spark
-    // side's nullif(array_position, 0)
-    "q145_vector_sq8" ->
-      """WITH e AS (
-        |  SELECT vec_id,
-        |    list_transform(embedding,
-        |      v -> CAST(floor(CAST(v AS DOUBLE) * 1000) AS BIGINT)) AS q
-        |  FROM embeddings
-        |), m AS (
-        |  SELECT vec_id, q, CAST(len(q) AS BIGINT) AS n_dims,
-        |    CAST(COALESCE(list_max(list_transform(q, x -> abs(x))), 0)
-        |      AS BIGINT) AS max_abs_q,
-        |    CAST(COALESCE(list_sum(list_transform(q, x -> x * x)), 0)
-        |      AS BIGINT) AS ssq,
-        |    CAST(list_position(list_transform(q, x -> abs(x)),
-        |      CAST(COALESCE(list_max(list_transform(q, x -> abs(x))), 0)
-        |        AS BIGINT)) AS BIGINT) AS argmax_dim
-        |  FROM e
-        |), x AS (
-        |  SELECT vec_id, unnest(q) AS xi FROM m WHERE max_abs_q > 0
-        |), c AS (
-        |  SELECT x.vec_id, xi, max_abs_q,
-        |    (xi * 127 - ((xi * 127 % max_abs_q + max_abs_q) % max_abs_q))
-        |      // max_abs_q AS code
-        |  FROM x JOIN m USING (vec_id)
-        |), r AS (
-        |  SELECT vec_id, SUM(abs(xi -
-        |    (code * max_abs_q
-        |      - ((code * max_abs_q % 127 + 127) % 127)) // 127)) AS mae
-        |  FROM c GROUP BY 1
-        |)
-        |SELECT m.vec_id, n_dims,
-        |  CAST(floor(sqrt(CAST(ssq AS DOUBLE))) AS BIGINT) AS norm_x1e3,
-        |  max_abs_q, argmax_dim,
-        |  CAST(COALESCE(r.mae, 0) AS BIGINT) AS quant_mae_sum,
-        |  max_abs_q = 0 AS is_zero
-        |FROM m LEFT JOIN r ON m.vec_id = r.vec_id""".stripMargin,
-    // q144: the q128 estimator replay over the THINNED history plant,
-    // composed with the feed plant's arithmetic (newest item ages
-    // url_id*3 days at the 2024-02-15 as-of; urls =2 mod 3 publish no
-    // feed) — Spark genuinely gunzips and regex-parses the Atom
-    // documents; the oracle replays what was planted
-    "q144_feed_recrawl" ->
-      """WITH h0 AS (
-        |  SELECT doc_id % 20 AS url_id, doc_id // 20 AS seq,
-        |    CASE (doc_id % 20) % 4 WHEN 0 THEN 0
-        |      WHEN 1 THEN doc_id // 20
-        |      WHEN 2 THEN (doc_id // 20) // 2
-        |      ELSE (doc_id // 20) // 12 END AS ch
-        |  FROM documents
-        |), h AS (
-        |  SELECT * FROM h0
-        |  WHERE NOT (url_id % 5 = 4 OR url_id <= 1 OR url_id = 16)
-        |     OR seq = 0
-        |), fl AS (
-        |  SELECT url_id,
-        |    CASE WHEN lag(ch) OVER w IS NULL THEN 0
-        |      WHEN ch <> lag(ch) OVER w THEN 1 ELSE 0 END AS changed
-        |  FROM h WINDOW w AS (PARTITION BY url_id ORDER BY seq)
-        |), agg AS (
-        |  SELECT url_id, COUNT(*) AS n_fetches, SUM(changed) AS n_changes
-        |  FROM fl GROUP BY 1
-        |), lam AS (
-        |  SELECT url_id, CAST(n_fetches AS BIGINT) AS n_fetches,
-        |    CAST(n_changes AS BIGINT) AS n_changes,
-        |    CASE WHEN n_fetches > 1 THEN CAST(floor(
-        |      CAST(ln(CAST(2*(n_fetches-1-n_changes)+1 AS DOUBLE)
-        |        / CAST(2*(n_fetches-1)+1 AS DOUBLE)) AS DECIMAL(18,9))
-        |      * -1000000) AS BIGINT) END AS lambda_x1e6
-        |  FROM agg
-        |), hist AS (
-        |  SELECT url_id, n_fetches, n_changes, lambda_x1e6,
-        |    CASE WHEN n_fetches = 1 THEN 'unknown'
-        |         WHEN lambda_x1e6 >= 700000 THEN 'hot'
-        |         WHEN lambda_x1e6 >= 100000 THEN 'warm'
-        |         WHEN lambda_x1e6 > 0 THEN 'cool'
-        |         ELSE 'cold' END AS history_bucket
-        |  FROM lam
-        |), fr AS (
-        |  SELECT url_id, CAST(2 + url_id % 2 AS BIGINT) AS n_feed_items,
-        |    DATE '2024-02-15' - CAST(url_id * 3 AS INTEGER)
-        |      AS feed_newest,
-        |    CAST(url_id * 3 AS BIGINT) AS feed_age_days
-        |  FROM (SELECT DISTINCT doc_id % 20 AS url_id FROM documents)
-        |  WHERE url_id % 3 <> 2
-        |), j AS (
-        |  SELECT hist.*, COALESCE(fr.n_feed_items, 0) AS n_feed_items,
-        |    fr.feed_newest, fr.feed_age_days,
-        |    CASE WHEN fr.feed_age_days IS NULL THEN NULL
-        |         WHEN fr.feed_age_days <= 2 THEN 'hot'
-        |         WHEN fr.feed_age_days <= 7 THEN 'warm'
-        |         WHEN fr.feed_age_days <= 30 THEN 'cool'
-        |         ELSE 'cold' END AS feed_bucket
-        |  FROM hist LEFT JOIN fr USING (url_id)
-        |)
-        |SELECT url_id, n_fetches, n_changes, lambda_x1e6,
-        |  history_bucket, n_feed_items, feed_newest, feed_age_days,
-        |  feed_bucket,
-        |  CASE WHEN n_fetches >= 3 OR feed_bucket IS NULL
-        |    THEN 'history' ELSE 'feed' END AS prior_source,
-        |  CASE WHEN n_fetches >= 3 OR feed_bucket IS NULL
-        |    THEN history_bucket ELSE feed_bucket END AS revisit_bucket
-        |FROM j""".stripMargin,
-    // q130: the oracle replays the plant — a block exists unless
-    // id%6=5, fields only when the JSON is well-formed (id%6 not in
-    // 4,5); Spark must genuinely match case-folded/reordered script
-    // tags, skip the decoy plain script, and parse the JSON it planted
-    "q130_jsonld" ->
-      """SELECT doc_id,
-        |  doc_id % 6 <> 5 AS has_jsonld,
-        |  CASE WHEN doc_id % 6 NOT IN (4, 5) THEN
-        |    CASE WHEN doc_id % 3 = 0 THEN 'Article'
-        |         WHEN doc_id % 3 = 1 THEN 'Product'
-        |         ELSE 'NewsArticle' END END AS schema_type,
-        |  CASE WHEN doc_id % 6 NOT IN (4, 5)
-        |    THEN 'Item ' || doc_id END AS headline,
-        |  CASE WHEN doc_id % 6 NOT IN (4, 5)
-        |    THEN make_date(2024, 1, CAST(1 + doc_id % 28 AS INTEGER))
-        |    END AS date_published
-        |FROM documents""".stripMargin,
-    // q129: the fixture fields are pure doc_id arithmetic — the oracle
-    // recomputes them; Spark must recover the same numbers by walking
-    // the RIFF container it assembled (incl. the odd-LIST pad byte)
-    "q129_wav_headers" ->
-      """WITH v AS (
-        |  SELECT doc_id, doc_id % 11 AS vv,
-        |    doc_id % 11 NOT IN (7, 9, 10) AS ok
-        |  FROM documents
-        |)
-        |SELECT doc_id,
-        |  CASE WHEN ok THEN CAST(CASE WHEN vv = 8 THEN 3 ELSE 1 END
-        |    AS BIGINT) END AS audio_format,
-        |  CASE WHEN ok THEN CAST(1 + doc_id % 2 AS BIGINT) END
-        |    AS channels,
-        |  CASE WHEN ok THEN CAST(8000 + (doc_id % 5) * 2000 AS BIGINT)
-        |    END AS sample_rate,
-        |  CASE WHEN ok THEN CAST(CASE WHEN vv = 8 THEN 32
-        |    WHEN doc_id % 3 = 0 THEN 8 ELSE 16 END AS BIGINT) END
-        |    AS bits_per_sample,
-        |  CASE WHEN ok THEN CAST(1 + doc_id % 50 AS BIGINT) END
-        |    AS n_frames,
-        |  CASE WHEN ok THEN CAST((1 + doc_id % 50) * 1000
-        |    // (8000 + (doc_id % 5) * 2000) AS BIGINT) END
-        |    AS duration_ms
-        |FROM v""".stripMargin,
-    // q114: the oracle refits the same add-one bigram LM on the same
-    // hash-defined train split (q41's membership arithmetic) and replays
-    // the scoring; the DECIMAL(18,9) per-bigram quantization absorbs
-    // engine ln() ulp differences exactly as q58's does. range(1,len) is
-    // empty for single-token docs on both engines (the Spark side guards
-    // sequence()'s descending surprise explicitly).
-    "q114_bigram_lm" ->
-      """WITH d AS (
-        |  SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS l
-        |  FROM documents
-        |), tb AS (
-        |  SELECT unnest(list_transform(range(1, len(l)),
-        |    i -> l[i] || ' ' || l[i+1])) AS bg
-        |  FROM d WHERE (hash(doc_id) >> 16) % 10000 < 9000
-        |), c2 AS (
-        |  SELECT bg, COUNT(*) AS c2 FROM tb GROUP BY 1
-        |), c1 AS (
-        |  SELECT split_part(bg, ' ', 1) AS w1, COUNT(*) AS c1
-        |  FROM tb GROUP BY 1
-        |), voc AS (
-        |  SELECT COUNT(DISTINCT term) AS v FROM (
-        |    SELECT unnest(l) AS term FROM d
-        |    WHERE (hash(doc_id) >> 16) % 10000 < 9000)
-        |), sb AS (
-        |  SELECT doc_id, unnest(list_transform(range(1, len(l)),
-        |    i -> l[i] || ' ' || l[i+1])) AS bg
-        |  FROM d
-        |)
-        |SELECT doc_id, COUNT(*) AS n_bigrams,
-        |  CAST(floor(SUM(CAST(-ln((COALESCE(c2, 0) + 1)
-        |      / (COALESCE(c1, 0) + v * 1.0)) AS DECIMAL(18,9)))
-        |    * 1000 / COUNT(*)) AS BIGINT) AS avg_nll_x1000
-        |FROM sb
-        |LEFT JOIN c2 USING (bg)
-        |LEFT JOIN c1 ON split_part(sb.bg, ' ', 1) = c1.w1
-        |CROSS JOIN voc
-        |GROUP BY doc_id""".stripMargin,
-    // q115: every Gopher rule is integer cross-multiplied arithmetic, so
-    // the oracle recomputes counters and verdicts exactly (list lambdas
-    // replay the token/line scans; '//' and the long cast agree with
-    // Spark's truncating markerCount division on non-negative counts)
-    "q115_gopher_rules" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    string_split_regex(trim(lower(text)), '\s+') AS l,
-        |    string_split(text, chr(10)) AS ln, text
-        |  FROM documents
-        |), m AS (
-        |  SELECT doc_id,
-        |    CAST(len(l) AS BIGINT) AS n_words,
-        |    CAST(list_sum(list_transform(l, x -> len(x))) AS BIGINT)
-        |      AS word_chars,
-        |    CAST(len(list_filter(l, x -> regexp_matches(x, '[a-z]')))
-        |      AS BIGINT) AS n_alpha_words,
-        |    CAST((len(text) - len(replace(text, '#', '')))
-        |      + (len(text) - len(replace(text, '...', ''))) // 3
-        |      + (len(text) - len(replace(text, '…', '')))
-        |      AS BIGINT) AS n_symbols,
-        |    CAST(len(ln) AS BIGINT) AS n_lines,
-        |    CAST(len(list_filter(ln,
-        |      x -> regexp_matches(x, '^[ \t]*[-*•]'))) AS BIGINT)
-        |      AS n_bullet_lines,
-        |    CAST(len(list_filter(ln,
-        |      x -> regexp_matches(x, '(\.\.\.|…)[ \t]*$'))) AS BIGINT)
-        |      AS n_ellipsis_lines,
-        |    CAST(CAST(list_contains(l, 'the') AS INT)
-        |      + CAST(list_contains(l, 'be') AS INT)
-        |      + CAST(list_contains(l, 'to') AS INT)
-        |      + CAST(list_contains(l, 'of') AS INT)
-        |      + CAST(list_contains(l, 'and') AS INT)
-        |      + CAST(list_contains(l, 'that') AS INT)
-        |      + CAST(list_contains(l, 'have') AS INT)
-        |      + CAST(list_contains(l, 'with') AS INT) AS BIGINT)
-        |      AS n_stop_hits
-        |  FROM d
-        |)
-        |SELECT doc_id, n_words, word_chars, n_alpha_words, n_symbols,
-        |  n_lines, n_bullet_lines, n_ellipsis_lines, n_stop_hits,
-        |  n_words >= 50 AND n_words <= 100000 AS r_word_count,
-        |  word_chars >= n_words * 3 AND word_chars <= n_words * 10
-        |    AS r_mean_len,
-        |  n_symbols * 10 < n_words AS r_symbol_ratio,
-        |  n_bullet_lines * 10 <= n_lines * 9 AS r_bullet,
-        |  n_ellipsis_lines * 10 <= n_lines * 3 AS r_ellipsis,
-        |  n_alpha_words * 5 >= n_words * 4 AS r_alpha,
-        |  n_stop_hits >= 2 AS r_stop_words,
-        |  (n_words >= 50 AND n_words <= 100000)
-        |    AND (word_chars >= n_words * 3 AND word_chars <= n_words * 10)
-        |    AND n_symbols * 10 < n_words
-        |    AND n_bullet_lines * 10 <= n_lines * 9
-        |    AND n_ellipsis_lines * 10 <= n_lines * 3
-        |    AND n_alpha_words * 5 >= n_words * 4
-        |    AND n_stop_hits >= 2 AS pass
-        |FROM m""".stripMargin,
-    // q116: the oracle replays the line predicate and page gates with
-    // list lambdas; regexp_replace carries the 'g' flag (DuckDB is
-    // first-match-only by default where Spark replaces all), and the
-    // empty-kept-list sums COALESCE to 0 (DuckDB list_sum([]) is NULL,
-    // Spark's aggregate zero is 0)
-    "q116_c4_filters" ->
-      """WITH d AS (
-        |  SELECT doc_id, text, string_split(text, chr(10)) AS ln
-        |  FROM documents
-        |), m AS (
-        |  SELECT doc_id,
-        |    CAST(len(ln) AS BIGINT) AS n_lines,
-        |    list_filter(ln, l -> regexp_matches(l, '[.!?"][ \t]*$')
-        |      AND len(string_split_regex(trim(l), '\s+')) >= 5
-        |      AND NOT contains(lower(l), 'javascript')) AS kept,
-        |    CAST(len(list_filter(ln, l -> contains(lower(l), 'javascript')))
-        |      AS BIGINT) AS n_js_lines,
-        |    contains(text, '{') AS has_curly,
-        |    contains(lower(text), 'lorem ipsum') AS has_lorem
-        |  FROM d
-        |), c AS (
-        |  SELECT doc_id, n_lines,
-        |    CAST(len(kept) AS BIGINT) AS n_kept_lines,
-        |    n_js_lines,
-        |    CAST(COALESCE(list_sum(list_transform(kept, l -> len(l))), 0)
-        |      AS BIGINT) AS kept_chars,
-        |    CAST(COALESCE(list_sum(list_transform(kept,
-        |      l -> len(l) - len(regexp_replace(l, '[.!?]', '', 'g')))), 0)
-        |      AS BIGINT) AS n_sentences,
-        |    has_curly, has_lorem
-        |  FROM m
-        |)
-        |SELECT *, n_sentences >= 3 AND NOT has_curly AND NOT has_lorem
-        |  AS keep
-        |FROM c""".stripMargin,
-    // q117: pow() ulp differences are absorbed by the DECIMAL(18,9)
-    // quantization of the smoothed mass; the normalization is then
-    // integer-over-double floor arithmetic on the quantized longs, so
-    // both engines compute identical weights
-    "q117_temperature_mix" ->
-      """WITH by_lang AS (
-        |  SELECT lang, COUNT(*) AS n_docs FROM documents GROUP BY 1
-        |), tot AS (
-        |  SELECT SUM(n_docs) AS n_total FROM by_lang
-        |), q AS (
-        |  SELECT lang, n_docs,
-        |    CAST(floor(CAST(pow(n_docs / (n_total * 1.0), 0.7)
-        |      AS DECIMAL(18,9)) * 1000000000) AS BIGINT) AS q_x1e9
-        |  FROM by_lang CROSS JOIN tot
-        |), qt AS (
-        |  SELECT SUM(q_x1e9) AS q_total FROM q
-        |)
-        |SELECT lang, n_docs, q_x1e9,
-        |  CAST(floor(q_x1e9 * 1000000 / (q_total * 1.0)) AS BIGINT)
-        |    AS w_ppm
-        |FROM q CROSS JOIN qt""".stripMargin,
-    // q118: the oracle replays the census on the paragraph STRING (the
-    // Spark side shuffles (xxhash64, length) instead of text — identical
-    // up to the documented 2^-64 collision risk shared with q16/q79)
-    "q118_dup_paragraphs" ->
-      """WITH p AS (
-        |  SELECT doc_id, unnest(string_split_regex(text, '\n{2,}')) AS para
-        |  FROM documents
-        |), dup AS (
-        |  SELECT para FROM (
-        |    SELECT para, COUNT(DISTINCT doc_id) AS nd FROM p GROUP BY 1
-        |  ) WHERE nd >= 2
-        |), g AS (
-        |  SELECT p.doc_id,
-        |    CAST(COUNT(*) AS BIGINT) AS n_paras,
-        |    CAST(SUM(CASE WHEN dup.para IS NOT NULL THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS n_dup_paras,
-        |    CAST(SUM(len(p.para)) AS BIGINT) AS total_chars,
-        |    CAST(SUM(CASE WHEN dup.para IS NOT NULL THEN len(p.para)
-        |      ELSE 0 END) AS BIGINT) AS dup_chars
-        |  FROM p LEFT JOIN dup USING (para)
-        |  GROUP BY p.doc_id
-        |), f AS (
-        |  SELECT *,
-        |    CASE WHEN total_chars > 0
-        |      THEN CAST(floor(dup_chars * 10000 / (total_chars * 1.0))
-        |        AS BIGINT)
-        |      ELSE 0 END AS dup_bp
-        |  FROM g
-        |)
-        |SELECT *, dup_bp <= 3000 AS keep FROM f""".stripMargin,
-    // q119: the oracle rebuilds the planted URLs by the same doc_id
-    // arithmetic, then re-derives host/digits/dots/score with DuckDB
-    // string and list functions and replays the blocklist against a
-    // range()-built dim — exact-host plus the parent-suffix ban over
-    // the SAME bounded shortest-first suffix window the engine joins
-    // (UrlFilter.MaxSuffixJoins = MaxHostDots+1 = 5), so the two
-    // battery replays are exhaustively equivalent BY CONSTRUCTION on
-    // every host, 8+-label frontiers included (the r13 LIKE replay was
-    // unbounded and could disagree past 7 labels) — a genuine replay
-    // of the battery, not a decision table
-    "q119_url_filter" ->
-      """WITH u AS (
-        |  SELECT doc_id,
-        |    CASE CAST(doc_id % 10 AS INTEGER)
-        |      WHEN 0 THEN 'http://site' || ((doc_id % 50) % 10)
-        |        || '.example/news/' || (doc_id % 50)
-        |      WHEN 1 THEN 'http://site' || ((doc_id % 50) % 10)
-        |        || '.example/casino/' || (doc_id % 50)
-        |      WHEN 2 THEN 'http://site' || ((doc_id % 50) % 10)
-        |        || '.example/casino/poker/' || (doc_id % 50)
-        |      WHEN 3 THEN 'http://site' || ((doc_id % 50) % 10)
-        |        || '.example/a/p' || (doc_id % 50) || 'xxx4'
-        |      WHEN 4 THEN 'http://h' || (doc_id % 50) || 'x'
-        |        || (doc_id % 50) || '.biz/news/' || (doc_id % 50)
-        |      WHEN 5 THEN 'http://blocked' || ((doc_id % 50) % 10)
-        |        || '.example/news/' || (doc_id % 50)
-        |      WHEN 6 THEN 'http://a.b.c.d.site' || ((doc_id % 50) % 10)
-        |        || '.example/news/' || (doc_id % 50)
-        |      WHEN 7 THEN 'http://cdn.blocked' || ((doc_id % 50) % 10)
-        |        || '.example/news/' || (doc_id % 50)
-        |      WHEN 8 THEN 'http://a.b.c.d.e.f.blocked'
-        |        || ((doc_id % 50) % 10)
-        |        || '.example/news/' || (doc_id % 50)
-        |      ELSE 'www.site' || ((doc_id % 50) % 10)
-        |        || '.example/news/' || (doc_id % 50)
-        |    END AS url
-        |  FROM documents
-        |), f AS (
-        |  SELECT doc_id, lower(url) AS lurl,
-        |    regexp_extract(lower(url),
-        |      '^[a-z][a-z0-9+.-]*://([^/:?#]+)', 1) AS host
-        |  FROM u
-        |), g AS (
-        |  SELECT doc_id, host,
-        |    length(host) AS host_len,
-        |    length(regexp_replace(host, '[^0-9]', '', 'g'))
-        |      AS n_host_digits,
-        |    length(host) - length(replace(host, '.', '')) AS n_host_dots,
-        |    CAST(COALESCE(list_sum(list_transform(
-        |        string_split_regex(lurl, '[^a-z0-9]+'),
-        |        t -> CASE t WHEN 'casino' THEN 40 WHEN 'poker' THEN 30
-        |                    WHEN 'pills' THEN 50 ELSE 0 END)), 0)
-        |      + (CASE WHEN contains(lurl, 'xxx') THEN 100 ELSE 0 END)
-        |      + (CASE WHEN contains(lurl, 'porn') THEN 100 ELSE 0 END)
-        |      AS BIGINT) AS badword_score
-        |  FROM f
-        |), b AS (
-        |  SELECT 'blocked' || i || '.example' AS bhost FROM range(10) t(i)
-        |), lb AS (
-        |  SELECT doc_id, string_split(host, '.') AS labs,
-        |    len(string_split(host, '.')) AS nlab
-        |  FROM g
-        |), sfx AS (
-        |  -- the i-th SHORTEST proper suffix with >=2 labels, i=1..5 —
-        |  -- the engine's exact bounded window
-        |  SELECT lb.doc_id,
-        |    array_to_string(list_slice(labs,
-        |      nlab - CAST(s.i AS BIGINT), nlab), '.') AS suffix
-        |  FROM lb CROSS JOIN range(1, 6) s(i)
-        |  WHERE CAST(s.i AS BIGINT) <= nlab - 2
-        |), v AS (
-        |  SELECT g.*,
-        |    EXISTS (SELECT 1 FROM b WHERE g.host = b.bhost)
-        |      AS blocked_domain,
-        |    EXISTS (SELECT 1 FROM sfx JOIN b ON sfx.suffix = b.bhost
-        |      WHERE sfx.doc_id = g.doc_id)
-        |      AS blocked_parent
-        |  FROM g
-        |)
-        |SELECT doc_id, host, host_len, n_host_digits, n_host_dots,
-        |  badword_score, blocked_domain, blocked_parent,
-        |  host_len > 0 AS r_has_host,
-        |  NOT (blocked_domain OR blocked_parent) AS r_blocklist,
-        |  badword_score < 60 AS r_badwords,
-        |  host_len = 0 OR n_host_digits * 10 < host_len * 3
-        |    AS r_digit_host,
-        |  n_host_dots <= 4 AS r_depth,
-        |  host_len > 0 AND NOT (blocked_domain OR blocked_parent)
-        |    AND badword_score < 60
-        |    AND (host_len = 0 OR n_host_digits * 10 < host_len * 3)
-        |    AND n_host_dots <= 4 AS url_ok
-        |FROM v""".stripMargin,
-    // q120: the oracle refits the same add-one NB counts on the same
-    // hash-defined class split and replays the decision function; the
-    // DECIMAL(18,9) per-class-likelihood quantization (BEFORE the
-    // subtraction and the document sum) absorbs engine ln() ulp
-    // differences exactly as q114's does
-    "q120_nb_quality" ->
-      s"""$nbScoreCtes
-        |SELECT doc_id, n_tokens,
-        |  CAST(floor((prior_q + sum_w) * 1000) AS BIGINT) AS logit_x1000,
-        |  CAST(floor(sum_w * 1000 / n_tokens) AS BIGINT)
-        |    AS avg_logodds_x1000,
-        |  CAST(floor((prior_q + sum_w) * 1000) AS BIGINT) >= 0 AS nb_keep
-        |FROM sc""".stripMargin,
-    // q161: the code battery replayed with DuckDB list lambdas — line
-    // split on chr(10), per-line lengths, the same ×1e6 integer floors
-    // and threshold gates.
-    "q161_code_filters" ->
-      """WITH b AS (
-        |  SELECT doc_id, text,
-        |    list_transform(string_split(text, chr(10)),
-        |      l -> CAST(length(l) AS BIGINT)) AS lens
-        |  FROM documents
-        |), m AS (
-        |  SELECT doc_id,
-        |    CAST(len(lens) AS BIGINT) AS n_lines,
-        |    CAST(list_max(lens) AS BIGINT) AS max_line_len,
-        |    CAST(list_sum(lens) AS BIGINT) AS sum_len,
-        |    CAST(len(list_filter(lens, x -> x > 120)) AS BIGINT)
-        |      AS n_long,
-        |    CAST(length(text) AS BIGINT) AS n_chars,
-        |    CAST(length(regexp_replace(text, '[^A-Za-z0-9]', '', 'g'))
-        |      AS BIGINT) AS n_alnum,
-        |    (contains(lower(text), 'auto-generated')
-        |      OR contains(lower(text), 'do not edit')
-        |      OR contains(lower(text), 'generated by')) AS is_autogen
-        |  FROM b
-        |), f AS (
-        |  SELECT doc_id, n_lines, max_line_len,
-        |    (100 * sum_len) // n_lines AS avg_line_x100,
-        |    CASE WHEN n_chars > 0 THEN (1000000 * n_alnum) // n_chars
-        |      ELSE CAST(0 AS BIGINT) END AS alnum_frac_x1e6,
-        |    (1000000 * n_long) // n_lines AS long_line_frac_x1e6,
-        |    is_autogen
-        |  FROM m
-        |)
-        |SELECT *,
-        |  (max_line_len <= 1000 AND avg_line_x100 <= 10000
-        |    AND alnum_frac_x1e6 >= 250000 AND NOT is_autogen)
-        |    AS code_keep
-        |FROM f""".stripMargin,
-    // q160: the q120 score replay composed with the rank-statistic AUC
-    // (distinct-score cumulative algebra, ties at half credit via the
-    // 2×-scaled numerator) and the closed-form ntile(10) calibration
-    // bins — every step exact integer arithmetic on both engines.
-    "q160_classifier_eval" ->
-      s"""$nbScoreCtes,
-        |lbl AS (
-        |  SELECT sc.doc_id,
-        |    CAST(floor((prior_q + sum_w) * 1000) AS BIGINT) AS s,
-        |    CASE WHEN dd.lang = 'en' THEN 1 ELSE 0 END AS y
-        |  FROM sc JOIN documents dd USING (doc_id)
-        |),
-        |bys AS (
-        |  SELECT s, SUM(y) AS np, SUM(1 - y) AS nn FROM lbl GROUP BY 1
-        |),
-        |cum AS (
-        |  SELECT s, np, nn,
-        |    COALESCE(SUM(nn) OVER (ORDER BY s
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS below_n,
-        |    COALESCE(SUM(np + nn) OVER (ORDER BY s
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS below_all
-        |  FROM bys
-        |),
-        |tot AS (SELECT CAST(SUM(np) AS BIGINT) AS p,
-        |  CAST(SUM(nn) AS BIGINT) AS n FROM bys),
-        |auc AS (
-        |  -- BIGINT-only with the guarded divisor: a single-class corpus
-        |  -- divides by 1 and reports 0 (ADVICE r16), and no HUGEINT
-        |  -- ever meets % or // (the q164 r17 lesson)
-        |  SELECT CAST((num2 * 1000000 - ((num2 * 1000000) % pn2))
-        |    // pn2 AS BIGINT) AS auc_x1e6
-        |  FROM (SELECT CAST(SUM(np * (2 * below_n + nn)) AS BIGINT)
-        |    AS num2 FROM cum)
-        |  CROSS JOIN (SELECT greatest(2 * p * n, 1) AS pn2 FROM tot)
-        |),
-        |ids AS (
-        |  SELECT l.y, c.below_all
-        |    + row_number() OVER (PARTITION BY l.s ORDER BY l.doc_id)
-        |    AS idx
-        |  FROM lbl l JOIN cum c USING (s)
-        |),
-        |dcl AS (
-        |  SELECT y, CASE WHEN qq = 0 THEN idx
-        |    WHEN idx <= (qq + 1) * rr THEN (idx + qq) // (qq + 1)
-        |    ELSE rr + (idx - (qq + 1) * rr + qq - 1) // qq END AS decile
-        |  FROM ids CROSS JOIN (
-        |    SELECT (p + n) // 10 AS qq, (p + n) % 10 AS rr FROM tot)
-        |)
-        |SELECT CAST(decile AS BIGINT) AS decile, COUNT(*) AS n,
-        |  CAST(SUM(y) AS BIGINT) AS n_pos,
-        |  CAST((1000000 * SUM(y)) // COUNT(*) AS BIGINT)
-        |    AS pos_rate_x1e6,
-        |  auc_x1e6
-        |FROM dcl CROSS JOIN auc
-        |GROUP BY 1, auc_x1e6""".stripMargin,
-    // q121: the oracle replays the closed-form waterfill — ranked
-    // prefix sums locate the capped boundary in the same
-    // cross-multiplied integer arithmetic, '//' and '%' agree with
-    // Spark's div/% on the non-negative operands
-    "q121_unimax" ->
-      """WITH per AS (
-        |  SELECT lang,
-        |    CAST(SUM(len(string_split_regex(trim(lower(text)), '\s+')))
-        |      AS BIGINT) AS n_tokens
-        |  FROM documents GROUP BY 1
-        |), tot AS (
-        |  SELECT SUM(n_tokens) AS t, COUNT(*) AS nlang FROM per
-        |), r AS (
-        |  SELECT lang, n_tokens, n_tokens * 1 AS cap_tokens, nlang,
-        |    CAST((t * 9000) // 10000 AS BIGINT) AS budget,
-        |    ROW_NUMBER() OVER (ORDER BY n_tokens * 1, lang) AS k,
-        |    CAST(COALESCE(SUM(n_tokens * 1) OVER (
-        |      ORDER BY n_tokens * 1, lang
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS BIGINT) AS cap_prefix
-        |  FROM per CROSS JOIN tot
-        |), rc AS (
-        |  SELECT *, cap_tokens * (nlang - k + 1) < budget - cap_prefix
-        |    AS capped
-        |  FROM r
-        |), b AS (
-        |  SELECT COALESCE(SUM(CASE WHEN capped THEN 1 ELSE 0 END), 0)
-        |      AS n_capped,
-        |    CAST(COALESCE(SUM(CASE WHEN capped THEN cap_tokens
-        |      ELSE 0 END), 0) AS BIGINT) AS p_capped
-        |  FROM rc
-        |)
-        |SELECT lang, n_tokens, cap_tokens, capped,
-        |  CAST(CASE WHEN capped THEN cap_tokens
-        |    ELSE ((budget - p_capped) // (nlang - n_capped))
-        |      + (CASE WHEN k - n_capped <=
-        |          ((budget - p_capped) % (nlang - n_capped))
-        |         THEN 1 ELSE 0 END)
-        |  END AS BIGINT) AS alloc_tokens,
-        |  CAST((CASE WHEN capped THEN cap_tokens
-        |    ELSE ((budget - p_capped) // (nlang - n_capped))
-        |      + (CASE WHEN k - n_capped <=
-        |          ((budget - p_capped) % (nlang - n_capped))
-        |         THEN 1 ELSE 0 END)
-        |  END * 1000) // n_tokens AS BIGINT) AS epochs_x1000
-        |FROM rc CROSS JOIN b""".stripMargin,
-    // q122: the oracle replays the q47b separator-string BPE encode per
-    // document, then re-aggregates words (non-empty whitespace tokens),
-    // UTF-8 bytes (strlen) and BPE tokens per language; both ratios
-    // divide once over group totals with '//', matching Spark's div on
-    // the non-negative sums
-    "q122_bpe_fertility" ->
-      """WITH w AS (
-        |  SELECT doc_id,
-        |    unnest(string_split_regex(trim(lower(text)), '\s+')) AS wd
-        |  FROM documents
-        |), s0 AS (
-        |  SELECT doc_id, '|' || regexp_replace(wd, '(.)', '\1|', 'g') AS s
-        |  FROM w WHERE wd <> ''
-        |), m0 AS (SELECT doc_id, replace(replace(replace(s,
-        |    '|a|g|', '|ag|'), '|a|g|', '|ag|'), '|a|g|', '|ag|') AS s FROM s0
-        |), m1 AS (SELECT doc_id, replace(replace(replace(s,
-        |    '|s|c|', '|sc|'), '|s|c|', '|sc|'), '|s|c|', '|sc|') AS s FROM m0
-        |), m2 AS (SELECT doc_id, replace(replace(replace(s,
-        |    '|a|n|', '|an|'), '|a|n|', '|an|'), '|a|n|', '|an|') AS s FROM m1
-        |), m3 AS (SELECT doc_id, replace(replace(replace(s,
-        |    '|l|e|', '|le|'), '|l|e|', '|le|'), '|l|e|', '|le|') AS s FROM m2
-        |), m4 AS (SELECT doc_id, replace(replace(replace(s,
-        |    '|b|le|', '|ble|'), '|b|le|', '|ble|'), '|b|le|', '|ble|') AS s FROM m3
-        |), m5 AS (SELECT doc_id, replace(replace(replace(s,
-        |    '|r|o|', '|ro|'), '|r|o|', '|ro|'), '|r|o|', '|ro|') AS s FROM m4
-        |), n AS (
-        |  SELECT doc_id,
-        |    SUM(length(s) - length(replace(s, '|', '')) - 1) AS nb
-        |  FROM m5 GROUP BY doc_id
-        |), d AS (
-        |  SELECT doc_id, lang,
-        |    CAST(len(list_filter(string_split_regex(trim(lower(text)),
-        |      '\s+'), x -> x <> '')) AS BIGINT) AS nw,
-        |    CAST(strlen(text) AS BIGINT) AS ny
-        |  FROM documents
-        |)
-        |SELECT lang, COUNT(*) AS n_docs,
-        |  CAST(SUM(nw) AS BIGINT) AS n_words,
-        |  CAST(SUM(COALESCE(nb, 0)) AS BIGINT) AS n_bpe_tokens,
-        |  CAST(SUM(ny) AS BIGINT) AS n_bytes,
-        |  CAST(CASE WHEN SUM(nw) > 0
-        |    THEN (SUM(COALESCE(nb, 0)) * 1000) // SUM(nw)
-        |  END AS BIGINT) AS fertility_x1000,
-        |  CAST(CASE WHEN SUM(COALESCE(nb, 0)) > 0
-        |    THEN (SUM(ny) * 1000) // SUM(COALESCE(nb, 0))
-        |  END AS BIGINT) AS bytes_per_bpe_x1000
-        |FROM d LEFT JOIN n USING (doc_id)
-        |GROUP BY lang""".stripMargin,
-    // q123: the oracle composes each variant's expected extraction from
-    // doc_id arithmetic + the doc text (the planted string rides the
-    // literal-escape round trip, so extraction returns it verbatim);
-    // Spark must genuinely walk the objects, inflate the FlateDecode
-    // stream, and replay the text operators of the container it built
-    "q123_pdf_text" ->
-      """SELECT doc_id,
-        |  CASE CAST(doc_id % 5 AS INTEGER)
-        |    WHEN 0 THEN 'Doc ' || doc_id || ' uncompressed'
-        |      || chr(10) || text
-        |    WHEN 1 THEN 'Doc ' || doc_id || ' flate' || chr(10) || text
-        |  END AS pdf_text,
-        |  CASE CAST(doc_id % 5 AS INTEGER)
-        |    WHEN 0 THEN 'ok' WHEN 1 THEN 'ok' WHEN 2 THEN 'encrypted'
-        |    WHEN 3 THEN 'torn' ELSE 'no_text' END AS pdf_reason
-        |FROM documents""".stripMargin,
-    // q104: every planted spelling canonicalizes to the same target
-    // string, which the oracle composes directly from doc_id arithmetic;
-    // Spark must recover it by genuinely normalizing each variant
-    "q104_url_canon" ->
-      """WITH u AS (
-        |  SELECT doc_id,
-        |    'http://site' || ((doc_id % 50) % 10) || '.example/a/'
-        |      || (doc_id % 50) AS url_canon
-        |  FROM documents
-        |)
-        |SELECT doc_id, url_canon,
-        |  COUNT(*) OVER (PARTITION BY url_canon) AS n_captures,
-        |  doc_id = MIN(doc_id) OVER (PARTITION BY url_canon) AS is_keeper
-        |FROM u""".stripMargin,
-    // q105: the oracle is the decision table the planted policies imply
-    // (vid 0 allowed, vid 1 blocked, vid 2/3 split on host parity — the
-    // Allow override and the $-anchored wildcard exist on even hosts
-    // only); Spark must reach it by parsing and longest-matching the
-    // actual robots text through the broadcast join
-    "q105_robots_gate" ->
-      """WITH u AS (
-        |  SELECT doc_id, (doc_id % 50) % 10 AS h,
-        |    CAST(doc_id % 4 AS INTEGER) AS vid, doc_id % 50 AS gid
-        |  FROM documents
-        |)
-        |SELECT doc_id,
-        |  CASE vid WHEN 0 THEN '/a/' || gid
-        |    WHEN 1 THEN '/private/' || gid
-        |    WHEN 2 THEN '/private/ok/' || gid
-        |    ELSE '/files/' || gid || '.tmp' END AS path,
-        |  CASE WHEN vid = 0 THEN TRUE WHEN vid = 1 THEN FALSE
-        |    WHEN vid = 2 THEN h % 2 = 0 ELSE h % 2 = 1 END AS allowed_bot,
-        |  FALSE AS allowed_other
-        |FROM u""".stripMargin,
-    // q106: parse vs parse (the q98 posture) — DuckDB replays the same
-    // two-group extraction and zips positionally; the canonical column
-    // is the q104 composition the planted href implies (port strip +
-    // dot segments; the relative link yields NULL)
-    "q106_anchor_text" ->
-      """WITH d AS (
-        |  SELECT doc_id, text || ' <a href="http://site' || (doc_id % 20)
-        |    || '.example:80/p/../a/' || doc_id || '">go ' || (doc_id % 9)
-        |    || '</a>'
-        |    || CASE WHEN doc_id % 5 = 1
-        |         THEN ' <a href="/rel/p">rel</a>' ELSE '' END AS html
-        |  FROM documents
-        |), pairs AS (
-        |  SELECT doc_id,
-        |    unnest(regexp_extract_all(html,
-        |      '<a href="([^"]+)"[^>]*>([^<]*)</a>', 1)) AS href,
-        |    unnest(regexp_extract_all(html,
-        |      '<a href="([^"]+)"[^>]*>([^<]*)</a>', 2)) AS anchor
-        |  FROM d
-        |)
-        |SELECT doc_id, href,
-        |  CASE WHEN href LIKE 'http://%' THEN 'http://site' || (doc_id % 20)
-        |    || '.example/a/' || doc_id END AS url_canon,
-        |  anchor
-        |FROM pairs""".stripMargin,
-    // q107: the host report is pure plant arithmetic for the oracle —
-    // blocked replays the q105 decision table, dirty the q99 plant
-    // predicate, pages the gid identity behind the q104 canonical;
-    // Spark must reach the same numbers through the real kernels and
-    // the two-stage rollup
-    "q107_host_report" ->
-      """WITH u AS (
-        |  SELECT doc_id, (doc_id % 50) % 10 AS h, doc_id % 50 AS gid,
-        |    CASE WHEN doc_id % 13 = 4 OR doc_id % 17 = 2
-        |      OR doc_id % 19 = 3 THEN 1 ELSE 0 END AS dirty,
-        |    CASE WHEN doc_id % 4 = 0 THEN 0
-        |      WHEN doc_id % 4 = 1 THEN 1
-        |      WHEN doc_id % 4 = 2 THEN
-        |        CASE WHEN ((doc_id % 50) % 10) % 2 = 0 THEN 0 ELSE 1 END
-        |      ELSE
-        |        CASE WHEN ((doc_id % 50) % 10) % 2 = 1 THEN 0 ELSE 1 END
-        |      END AS blocked
-        |  FROM documents
-        |), g AS (
-        |  SELECT h, gid, COUNT(*) AS cnt,
-        |    SUM(blocked) AS nb, SUM(dirty) AS nd
-        |  FROM u GROUP BY h, gid
-        |)
-        |SELECT 'site' || h || '.example' AS host,
-        |  CAST(SUM(cnt) AS BIGINT) AS n_captures,
-        |  COUNT(*) AS n_pages,
-        |  CAST(SUM(nb) AS BIGINT) AS n_blocked,
-        |  CAST(SUM(nd) AS BIGINT) AS n_dirty
-        |FROM g GROUP BY h""".stripMargin,
-    // q108: the decoded strings from the byte plant (the q100 posture:
-    // the oracle composes text || suffix literals already in UTF-8;
-    // Spark must recover them by sniffing and decoding actual bytes)
-    "q108_charset_sniff" ->
-      """SELECT doc_id,
-        |  CASE CAST(doc_id % 4 AS INTEGER)
-        |    WHEN 0 THEN 'utf-8' WHEN 1 THEN 'windows-1252'
-        |    WHEN 2 THEN 'utf-16le' ELSE 'utf-8-bom' END AS detected,
-        |  text || CASE CAST(doc_id % 4 AS INTEGER)
-        |    WHEN 0 THEN ' plain' WHEN 1 THEN ' café'
-        |    WHEN 2 THEN ' Ω' ELSE ' bom' END AS text_utf8
-        |FROM documents""".stripMargin,
-    // q109: the surviving lines are the prose plants (nav/footer are
-    // link-dominated by construction); the oracle composes them
-    // decoded, Spark must reach the same text by scanning anchors and
-    // measuring densities. The h1 line 'Doc <id>' is under the
-    // 12-char minimum at every oracle scale but NOT in principle
-    // (8-digit ids pass it), so the oracle carries the same length
-    // rule rather than hard-coding the drop (r11 review)
-    "q109_boilerplate" ->
-      """SELECT doc_id,
-        |  CASE WHEN length('Doc ' || doc_id) >= 12
-        |       THEN 'Doc ' || doc_id || chr(10) ELSE '' END
-        |  || text
-        |  || CASE WHEN doc_id % 3 = 0
-        |       THEN chr(10) || 'Extra & entity é A test' ELSE '' END
-        |  || CASE WHEN doc_id % 7 = 5
-        |       THEN chr(10) || '<b>not a tag</b>' ELSE '' END AS main_text,
-        |  CAST(1 + CASE WHEN length('Doc ' || doc_id) >= 12 THEN 1 ELSE 0 END
-        |         + CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 0 END
-        |         + CASE WHEN doc_id % 7 = 5 THEN 1 ELSE 0 END
-        |    AS INTEGER) AS n_kept
-        |FROM documents""".stripMargin,
-    // q110: the oracle composes every expected row (url + sitemap-index
-    // children, canonical spellings, lastmod arithmetic) directly from
-    // doc_id; Spark must reach them by inflating the gzipped bodies,
-    // splitting <url>/<sitemap> blocks, and canonicalizing each loc
-    "q110_sitemap" ->
-      """WITH d AS (
-        |  SELECT doc_id, ((doc_id % 50) % 10) AS h,
-        |    CAST('2024-' || lpad(CAST(1 + doc_id % 12 AS VARCHAR), 2, '0')
-        |      || '-' || lpad(CAST(1 + doc_id % 28 AS VARCHAR), 2, '0')
-        |      AS DATE) AS lm
-        |  FROM documents
-        |)
-        |SELECT doc_id, 'url' AS kind,
-        |  'http://site' || h || '.example/a/' || doc_id AS url_canon,
-        |  lm AS lastmod,
-        |  CASE WHEN doc_id % 2 = 0 THEN 'daily' END AS changefreq
-        |FROM d WHERE doc_id % 7 <> 1
-        |UNION ALL
-        |SELECT doc_id, 'url',
-        |  'http://site' || h || '.example/b/' || doc_id,
-        |  CAST(NULL AS DATE), NULL
-        |FROM d WHERE doc_id % 7 <> 1 AND doc_id % 3 = 0
-        |UNION ALL
-        |SELECT doc_id, 'sitemap',
-        |  'http://site' || h || '.example/sm/' || doc_id || '/a.xml.gz',
-        |  lm, NULL
-        |FROM d WHERE doc_id % 7 = 1
-        |UNION ALL
-        |SELECT doc_id, 'sitemap',
-        |  'http://site' || h || '.example/sm/' || doc_id || '/b.xml.gz',
-        |  CAST(NULL AS DATE), NULL
-        |FROM d WHERE doc_id % 7 = 1""".stripMargin,
-    // q83: the fixture dims are pure doc_id arithmetic — the oracle
-    // recomputes them directly; Spark must recover the same numbers by
-    // actually parsing the headers it assembled
-    "q83_image_headers" ->
-      """SELECT doc_id,
-        | CASE WHEN doc_id % 5 = 0 THEN 'png'
-        |      WHEN doc_id % 5 = 1 THEN 'jpeg'
-        |      WHEN doc_id % 5 = 3 THEN 'gif'
-        |      WHEN doc_id % 5 = 4 THEN 'bmp' END AS format,
-        | CASE WHEN doc_id % 5 = 0 THEN 1 + doc_id % 640
-        |      WHEN doc_id % 5 = 1 THEN 1 + doc_id % 1000
-        |      WHEN doc_id % 5 = 3 THEN 1 + doc_id % 320
-        |      WHEN doc_id % 5 = 4 THEN 1 + doc_id % 1024 END AS width,
-        | CASE WHEN doc_id % 5 = 0 THEN 1 + doc_id % 480
-        |      WHEN doc_id % 5 = 1 THEN 1 + doc_id % 800
-        |      WHEN doc_id % 5 = 3 THEN 1 + doc_id % 200
-        |      WHEN doc_id % 5 = 4 THEN 1 + doc_id % 768 END AS height
-        |FROM documents""".stripMargin,
-    // q95: pixel (x,y) channel c of doc d is (7d + 31y + 13x + 5c) mod 256
-    // with dims (1 + d%9) × (1 + d%7) — the oracle recomputes the stats
-    // from that formula alone; Spark must decode the actual containers.
-    // The uncorrelated 9×7 grid + WHERE keeps the lateral-free form exact.
-    "q95_pixel_stats" ->
-      """WITH d AS (
-        |  SELECT doc_id, 1 + doc_id % 9 AS w, 1 + doc_id % 7 AS h
-        |  FROM documents
-        |), px AS (
-        |  SELECT d.doc_id,
-        |    (d.doc_id*7 + sy.y*31 + sx.x*13) % 256 AS r,
-        |    (d.doc_id*7 + sy.y*31 + sx.x*13 + 5) % 256 AS g,
-        |    (d.doc_id*7 + sy.y*31 + sx.x*13 + 10) % 256 AS b
-        |  FROM d
-        |  CROSS JOIN generate_series(0, 8) AS sx(x)
-        |  CROSS JOIN generate_series(0, 6) AS sy(y)
-        |  WHERE sx.x < d.w AND sy.y < d.h
-        |), agg AS (
-        |  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_pixels,
-        |    CAST(SUM(r) AS BIGINT) AS sum_r, CAST(SUM(g) AS BIGINT) AS sum_g,
-        |    CAST(SUM(b) AS BIGINT) AS sum_b,
-        |    CAST(COUNT(*) FILTER (WHERE r + g + b > 0) AS BIGINT) AS n_nonzero
-        |  FROM px GROUP BY doc_id
-        |)
-        |SELECT d.doc_id,
-        |  CASE WHEN d.doc_id % 3 = 0 THEN 'bmp'
-        |       WHEN d.doc_id % 3 = 1 THEN 'png' END AS format,
-        |  CASE WHEN d.doc_id % 3 < 2 THEN a.n_pixels END AS n_pixels,
-        |  CASE WHEN d.doc_id % 3 < 2 THEN a.sum_r END AS sum_r,
-        |  CASE WHEN d.doc_id % 3 < 2 THEN a.sum_g END AS sum_g,
-        |  CASE WHEN d.doc_id % 3 < 2 THEN a.sum_b END AS sum_b,
-        |  CASE WHEN d.doc_id % 3 < 2 THEN a.n_nonzero END AS n_nonzero
-        |FROM d JOIN agg a USING (doc_id)""".stripMargin,
-    "q84b_semdedup_fixed" ->
-      s"""WITH emb AS (
-         |  SELECT vec_id, list_transform(embedding, e -> CAST(e AS DOUBLE)) AS v
-         |  FROM embeddings
-         |),
-         |cents AS (SELECT vec_id AS cid, v AS c FROM emb WHERE vec_id % 37 = 0),
-         |scored AS (
-         |  SELECT e.vec_id, c.cid, ${duckCosine("e.v", "c.c")} AS cos
-         |  FROM emb e CROSS JOIN cents c
-         |),
-         |best AS (
-         |  SELECT vec_id, cid AS cell FROM (
-         |    SELECT vec_id, cid,
-         |      row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, cid DESC) AS rn
-         |    FROM scored) WHERE rn = 1
-         |),
-         |dropped AS (
-         |  SELECT DISTINCT bx.vec_id AS xid
-         |  FROM best bx JOIN best b2 ON bx.cell = b2.cell AND b2.vec_id < bx.vec_id
-         |  JOIN emb ex ON ex.vec_id = bx.vec_id
-         |  JOIN emb ey ON ey.vec_id = b2.vec_id
-         |  WHERE ${duckCosine("ex.v", "ey.v")} >= 0.9
-         |)
-         |SELECT b.vec_id, b.cell, (d.xid IS NULL) AS is_kept
-         |FROM best b LEFT JOIN dropped d ON b.vec_id = d.xid""".stripMargin,
-    // q84c: the q84b replay composed with ONE exact-decimal Lloyd step —
-    // assignment to the fixed init, per-cell per-dim DECIMAL(27,9) means
-    // (the q65 scale-10 half-up formula) cast to float, re-assignment to
-    // the trained centroids, then the same drop policy
-    "q84c_semdedup_train1" -> {
-      val mean10 = "CAST(CASE WHEN s10 >= 0 THEN (20*s10 + cnt) // (2*cnt) " +
-        "ELSE -((20*(-(s10)) + cnt) // (2*cnt)) END AS HUGEINT)"
-      def bestCte(name: String, cents: String) =
-        s"""$name AS (
-           |  SELECT vec_id, cid AS cell FROM (
-           |    SELECT e.vec_id, c.cid,
-           |      row_number() OVER (PARTITION BY e.vec_id
-           |        ORDER BY ${duckCosine("e.v", "c.c")} DESC, c.cid DESC) AS rn
-           |    FROM emb e CROSS JOIN $cents c) WHERE rn = 1
-           |)""".stripMargin
-      s"""WITH emb AS (
-         |  SELECT vec_id, list_transform(embedding, e -> CAST(e AS DOUBLE)) AS v
-         |  FROM embeddings
-         |),
-         |cents0 AS (SELECT vec_id AS cid, v AS c FROM emb
-         |  WHERE vec_id % 37 = 0 AND vec_id < 37 * (
-         |    SELECT CAST(ceil(1.5 * sqrt(COUNT(*))) AS BIGINT)
-         |    FROM embeddings)),
-         |${bestCte("a0", "cents0")},
-         |means AS (
-         |  SELECT cell,
-         |    LIST(CAST(CAST(CAST(m10 AS DOUBLE) / 10000000000 AS FLOAT) AS DOUBLE) ORDER BY di) AS m_vec
-         |  FROM (
-         |    SELECT cell, di, $mean10 AS m10
-         |    FROM (
-         |      SELECT a.cell, d.di,
-         |        SUM(CAST(CAST(e.v[d.di] AS DECIMAL(27,9)) * 1000000000 AS HUGEINT)) AS s10,
-         |        COUNT(*) AS cnt
-         |      FROM emb e JOIN a0 a ON a.vec_id = e.vec_id
-         |      CROSS JOIN (SELECT CAST(range AS INTEGER) + 1 AS di FROM range(64)) d
-         |      GROUP BY a.cell, d.di))
-         |  GROUP BY cell
-         |),
-         |cents1 AS (
-         |  SELECT c.cid, COALESCE(m.m_vec, c.c) AS c
-         |  FROM cents0 c LEFT JOIN means m ON m.cell = c.cid
-         |),
-         |${bestCte("a1", "cents1")},
-         |dropped AS (
-         |  SELECT DISTINCT bx.vec_id AS xid
-         |  FROM a1 bx JOIN a1 b2 ON bx.cell = b2.cell AND b2.vec_id < bx.vec_id
-         |  JOIN emb ex ON ex.vec_id = bx.vec_id
-         |  JOIN emb ey ON ey.vec_id = b2.vec_id
-         |  WHERE ${duckCosine("ex.v", "ey.v")} >= 0.9
-         |)
-         |SELECT b.vec_id, b.cell, (d.xid IS NULL) AS is_kept
-         |FROM a1 b LEFT JOIN dropped d ON b.vec_id = d.xid""".stripMargin
-    },
-    "q36_top_terms" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '\s+')) AS term
-        |  FROM documents
-        |), tf AS (
-        |  SELECT doc_id, term, COUNT(*) AS tf FROM tok GROUP BY 1, 2
-        |), idf AS (
-        |  SELECT term, COUNT(*) AS df FROM tf GROUP BY 1
-        |)
-        |SELECT doc_id, rnk, term FROM (
-        |  SELECT doc_id, term, CAST(row_number() OVER (
-        |    PARTITION BY doc_id
-        |    ORDER BY tf * 1.0 / df DESC, term) AS BIGINT) AS rnk
-        |  FROM tf JOIN idf USING (term))
-        |WHERE rnk <= 3""".stripMargin,
-    "q39_asof_join" ->
-      """WITH scd AS (
-        |  SELECT c_custkey AS k, CAST(eff AS TIMESTAMP) AS eff_date,
-        |    c_custkey % 5 * 10 + ver AS tier
-        |  FROM customer, (VALUES (0, '1993-01-01'), (1, '1995-02-15'),
-        |    (2, '1996-01-01')) AS v(ver, eff)
-        |)
-        |SELECT tier, COUNT(*) AS n,
-        | CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM orders ASOF LEFT JOIN scd
-        |  ON o_custkey = scd.k AND o_orderdate >= scd.eff_date
-        |GROUP BY tier""".stripMargin,
-    "q56_dedup_funnel" ->
-      s"""WITH RECURSIVE t AS (
-         |  SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS toks FROM documents
-         |), s AS (
-         |  SELECT doc_id, list_distinct(list_transform(
-         |    generate_series(1, greatest(len(toks)-1, 1)),
-         |    i -> CASE WHEN i+1 <= len(toks) THEN toks[i] || ' ' || toks[i+1]
-         |         ELSE toks[i] END)) AS sh FROM t
-         |), p AS (
-         |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-         |  FROM s a JOIN s b ON a.doc_id < b.doc_id
-         |  WHERE floor(len(list_intersect(a.sh, b.sh)) * 100.0 /
-         |        greatest(len(list_distinct(list_concat(a.sh, b.sh))), 1)) >= 50
-         |), e AS (
-         |  SELECT id_a AS src, id_b AS dst FROM p UNION SELECT id_b, id_a FROM p
-         |), reach AS (
-         |  SELECT doc_id AS id, doc_id AS comp FROM documents
-         |  UNION
-         |  SELECT e.src, reach.comp FROM e JOIN reach ON e.dst = reach.id
-         |), comp AS (
-         |  SELECT id, MIN(comp) AS component FROM reach GROUP BY id
-         |)
-         |SELECT 'raw' AS stage, COUNT(*) AS n_docs FROM documents
-         |UNION ALL
-         |SELECT 'exact_dedup', COUNT(DISTINCT text) FROM documents
-         |UNION ALL
-         |SELECT 'near_dedup', COUNT(DISTINCT component) FROM comp""".stripMargin,
-    // q75: the oracle rebuilds the q61 merge and diffs by VALUE where the
-    // engine diffs by 64-bit payload hash - equivalence holds unless two
-    // different segments collide in hash64 (2^-64 per key; the q45/q68
-    // hash-reduction precedent)
-    "q75_snapshot_diff" ->
-      """WITH chg AS (
-        |  SELECT c_custkey, 1 AS seq, 'U' AS op, 'UPGRADED' AS seg
-        |  FROM customer WHERE c_custkey % 4 = 1
-        |  UNION ALL SELECT c_custkey, 2, 'U', 'FINAL'
-        |  FROM customer WHERE c_custkey % 4 = 1
-        |  UNION ALL SELECT c_custkey, 1, 'D', NULL
-        |  FROM customer WHERE c_custkey % 4 = 2
-        |  UNION ALL SELECT c_custkey, 1, 'U', 'TOUCHED'
-        |  FROM customer WHERE c_custkey % 4 = 3
-        |  UNION ALL SELECT c_custkey + 10000000, 1, 'I', 'NEWSEG'
-        |  FROM customer WHERE c_custkey % 4 = 0
-        |), allr AS (
-        |  SELECT c_custkey, CAST(-9223372036854775808 AS BIGINT) AS seq,
-        |    'S' AS op, c_mktsegment AS seg FROM customer
-        |  UNION ALL SELECT c_custkey, CAST(seq AS BIGINT), op, seg FROM chg
-        |), w AS (
-        |  SELECT c_custkey, seg, op,
-        |    row_number() OVER (PARTITION BY c_custkey ORDER BY seq DESC) AS rn
-        |  FROM allr
-        |), merged AS (
-        |  SELECT c_custkey, seg FROM w WHERE rn = 1 AND op <> 'D'
-        |), snap AS (
-        |  SELECT c_custkey, c_mktsegment AS seg FROM customer
-        |)
-        |SELECT status, COUNT(*) AS n, MIN(k) AS min_key, MAX(k) AS max_key
-        |FROM (
-        |  SELECT COALESCE(s.c_custkey, m.c_custkey) AS k,
-        |    CASE WHEN s.c_custkey IS NULL THEN 'added'
-        |         WHEN m.c_custkey IS NULL THEN 'removed'
-        |         WHEN s.seg = m.seg THEN 'same'
-        |         ELSE 'changed' END AS status
-        |  FROM snap s FULL JOIN merged m ON s.c_custkey = m.c_custkey)
-        |GROUP BY status""".stripMargin,
-    "q76_k_anonymity" ->
-      """WITH g AS (
-        |  SELECT c_nationkey, c_mktsegment, COUNT(*) AS group_n
-        |  FROM customer GROUP BY 1, 2
-        |)
-        |SELECT COUNT(*) AS n_groups,
-        |  CAST(SUM(CASE WHEN group_n < 10 THEN group_n ELSE 0 END) AS BIGINT) AS rows_at_risk,
-        |  CAST(SUM(CASE WHEN group_n < 10 THEN 1 ELSE 0 END) AS BIGINT) AS groups_at_risk,
-        |  MIN(group_n) AS min_group
-        |FROM g""".stripMargin,
-    "q73_time_weighted" ->
-      """WITH scd AS (
-        |  SELECT c_custkey, CAST(eff AS TIMESTAMP) AS valid_from,
-        |    c_custkey % 5 * 10 + ver AS tier
-        |  FROM customer, (VALUES (0, '1993-01-01'), (1, '1995-02-15'),
-        |    (2, '1996-01-01')) AS v(ver, eff)
-        |), iv AS (
-        |  SELECT tier, valid_from,
-        |    lead(valid_from) OVER (PARTITION BY c_custkey ORDER BY valid_from) AS valid_to
-        |  FROM scd
-        |), clipped AS (
-        |  SELECT tier,
-        |    greatest(CAST(valid_from AS DATE), DATE '1994-01-01') AS lo,
-        |    least(COALESCE(CAST(valid_to AS DATE), DATE '1996-06-01'),
-        |      DATE '1996-06-01') AS hi
-        |  FROM iv
-        |), d AS (
-        |  SELECT tier, CAST(greatest(hi - lo, 0) AS BIGINT) AS days FROM clipped
-        |)
-        |SELECT tier, CAST(SUM(days) AS BIGINT) AS total_days,
-        |  COUNT(*) FILTER (WHERE days > 0) AS n_intervals
-        |FROM d GROUP BY tier""".stripMargin,
-    "q74_group_median" ->
-      """WITH r AS (
-        |  SELECT o_orderstatus AS grp,
-        |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS DOUBLE) AS v,
-        |    o_orderkey AS id,
-        |    CAST(row_number() OVER (PARTITION BY o_orderstatus
-        |      ORDER BY CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS DOUBLE),
-        |        o_orderkey) AS BIGINT) AS rnk,
-        |    CAST(COUNT(*) OVER (PARTITION BY o_orderstatus) AS BIGINT) AS n
-        |  FROM orders
-        |)
-        |SELECT grp, v AS median_v, id AS median_id, n AS n_rows
-        |FROM r WHERE rnk = (n + 1) // 2""".stripMargin,
-    "q72_moving_avg" ->
-      """WITH daily AS (
-        |  SELECT o_orderpriority AS grp, CAST(o_orderdate AS DATE) AS d,
-        |    SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS t
-        |  FROM orders WHERE o_orderdate < TIMESTAMP '1995-07-01'
-        |  GROUP BY 1, 2
-        |)
-        |SELECT grp, d, CAST(t AS DOUBLE) AS day_total,
-        |  CAST(SUM(t) OVER w AS DOUBLE) AS total_w,
-        |  CAST(COUNT(*) OVER w AS BIGINT) AS n_days_w,
-        |  CAST(SUM(t) OVER w AS DOUBLE) / COUNT(*) OVER w AS avg_w
-        |FROM daily
-        |WINDOW w AS (PARTITION BY grp ORDER BY d
-        |  RANGE BETWEEN INTERVAL 6 DAYS PRECEDING AND CURRENT ROW)""".stripMargin,
-    "q54_time_fill" ->
-      """WITH b AS (
-        |  SELECT event_type, date_trunc('hour', ts) AS bucket_ts, COUNT(*) AS v
-        |  FROM events WHERE event_type IN ('purchase', 'signup')
-        |  GROUP BY 1, 2
-        |), bounds AS (
-        |  SELECT MIN(bucket_ts) AS lo, MAX(bucket_ts) AS hi FROM b
-        |), spine AS (
-        |  SELECT k.event_type, g.ts AS bucket_ts
-        |  FROM (SELECT DISTINCT event_type FROM b) k,
-        |    bounds, LATERAL (SELECT unnest(generate_series(lo, hi, INTERVAL 1 HOUR)) AS ts) g
-        |)
-        |SELECT spine.event_type, spine.bucket_ts, COALESCE(b.v, 0) AS v
-        |FROM spine LEFT JOIN b
-        |  ON spine.event_type = b.event_type AND spine.bucket_ts = b.bucket_ts""".stripMargin,
-    "q55_scd2_intervals" ->
-      """WITH scd AS (
-        |  SELECT c_custkey, CAST(eff AS TIMESTAMP) AS valid_from,
-        |    c_custkey % 5 * 10 + ver AS tier
-        |  FROM customer, (VALUES (0, '1993-01-01'), (1, '1995-02-15'),
-        |    (2, '1996-01-01')) AS v(ver, eff)
-        |), iv AS (
-        |  SELECT tier, valid_from,
-        |    lead(valid_from) OVER (PARTITION BY c_custkey ORDER BY valid_from) AS valid_to
-        |  FROM scd
-        |)
-        |SELECT tier, COUNT(*) AS n_versions,
-        | COUNT(*) FILTER (WHERE valid_to IS NULL) AS n_open
-        |FROM iv GROUP BY tier""".stripMargin,
-    "q49_rollup" ->
-      """SELECT COALESCE(o_orderstatus, 'ALL') AS status,
-        | COALESCE(o_orderpriority, 'ALL') AS priority, COUNT(*) AS n,
-        | CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM orders GROUP BY ROLLUP (o_orderstatus, o_orderpriority)""".stripMargin,
-    "q77_unpivot" ->
-      """WITH g AS (SELECT DISTINCT o_orderpriority FROM orders),
-        | v(status) AS (VALUES ('O'), ('F'), ('P')),
-        | c AS (
-        |  SELECT o_orderpriority, o_orderstatus AS status, COUNT(*) AS cnt
-        |  FROM orders GROUP BY 1, 2
-        |)
-        |SELECT g.o_orderpriority, v.status,
-        |  CAST(COALESCE(c.cnt, 0) AS BIGINT) AS cnt
-        |FROM g CROSS JOIN v
-        |LEFT JOIN c ON c.o_orderpriority IS NOT DISTINCT FROM g.o_orderpriority
-        |  AND c.status = v.status""".stripMargin,
-    "q80_cube" ->
-      """SELECT COALESCE(o_orderstatus, 'ALL') AS status,
-        | COALESCE(o_orderpriority, 'ALL') AS priority,
-        | CAST(GROUPING(o_orderstatus, o_orderpriority) AS BIGINT) AS grain_id,
-        | COUNT(*) AS n,
-        | CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)""".stripMargin,
-    "q50_argmax" ->
-      """SELECT o_orderstatus,
-        | arg_max(o_orderkey, CAST(o_totalprice AS DECIMAL(18,2)) * 10000000000 + o_orderkey) AS biggest_order,
-        | arg_min(o_orderkey, CAST(o_totalprice AS DECIMAL(18,2)) * 10000000000 + o_orderkey) AS smallest_order,
-        | CAST(MAX(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS max_price
-        |FROM orders GROUP BY o_orderstatus""".stripMargin,
-    "q51_running_total" ->
-      """SELECT o_custkey, o_orderkey,
-        | CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) OVER (
-        |   PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-        |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE)
-        |   AS running_total
-        |FROM orders WHERE o_custkey < 20""".stripMargin,
-    "q52_histogram" ->
-      """SELECT CASE WHEN o_totalprice < 0 THEN 0
-        |  WHEN o_totalprice >= 600000.0 THEN 13
-        |  ELSE CAST(floor(o_totalprice / 50000.0) AS BIGINT) + 1 END AS bucket,
-        | COUNT(*) AS n
-        |FROM orders GROUP BY 1""".stripMargin,
-    // q47b: the oracle replays BPE encoding as separator-string
-    // rewriting — each word becomes |c|h|a|r|s|, each merge rank applies
-    // as replace('|a|b|' → '|ab|') in rank order. One pass can miss
-    // CHAINED occurrences (adjacent matches share a boundary separator
-    // the replacement consumes), so each rank applies three times —
-    // after one pass no two remaining occurrences are adjacent, so two
-    // always suffice; the third is margin. Rank-order rewriting equals
-    // the kernel's lowest-rank-first greedy loop because no planted
-    // rule's output feeds an earlier rank (see the entry comment).
-    "q47b_bpe_encode_fixed" ->
-      """WITH w AS (
-        |  SELECT doc_id,
-        |    unnest(string_split_regex(trim(lower(text)), '\s+')) AS wd
-        |  FROM documents
-        |), s0 AS (
-        |  SELECT doc_id, '|' || regexp_replace(wd, '(.)', '\1|', 'g') AS s
-        |  FROM w WHERE wd <> ''
-        |), m0 AS (SELECT doc_id, replace(replace(replace(s,
-        |    '|a|g|', '|ag|'), '|a|g|', '|ag|'), '|a|g|', '|ag|') AS s FROM s0
-        |), m1 AS (SELECT doc_id, replace(replace(replace(s,
-        |    '|s|c|', '|sc|'), '|s|c|', '|sc|'), '|s|c|', '|sc|') AS s FROM m0
-        |), m2 AS (SELECT doc_id, replace(replace(replace(s,
-        |    '|a|n|', '|an|'), '|a|n|', '|an|'), '|a|n|', '|an|') AS s FROM m1
-        |), m3 AS (SELECT doc_id, replace(replace(replace(s,
-        |    '|l|e|', '|le|'), '|l|e|', '|le|'), '|l|e|', '|le|') AS s FROM m2
-        |), m4 AS (SELECT doc_id, replace(replace(replace(s,
-        |    '|b|le|', '|ble|'), '|b|le|', '|ble|'), '|b|le|', '|ble|') AS s FROM m3
-        |), m5 AS (SELECT doc_id, replace(replace(replace(s,
-        |    '|r|o|', '|ro|'), '|r|o|', '|ro|'), '|r|o|', '|ro|') AS s FROM m4
-        |), n AS (
-        |  SELECT doc_id,
-        |    SUM(length(s) - length(replace(s, '|', '')) - 1) AS n
-        |  FROM m5 GROUP BY doc_id
-        |)
-        |SELECT d.doc_id, CAST(COALESCE(n.n, 0) AS BIGINT) AS n_bpe_tokens
-        |FROM documents d LEFT JOIN n USING (doc_id)""".stripMargin,
-    "q48_fuzzy_join" ->
-      """WITH l AS (SELECT n_nationkey AS lid, lower(n_name) AS ls FROM nation),
-        |r AS (SELECT n_nationkey AS rid,
-        |  lower(substr(n_name, 1, 2) || substr(n_name, 4)) AS rs FROM nation)
-        |SELECT rid AS r_id, COUNT(*) AS n_matches, MIN(lid) AS best_l_id,
-        | MIN(levenshtein(ls, rs)) AS best_dist
-        |FROM r JOIN l ON levenshtein(ls, rs) <= 1
-        |GROUP BY rid""".stripMargin,
-    "q45_contamination" -> {
-      // word-5-shingles, mirroring F.shingles(k=5) incl. the short-doc rule
-      def duckSh(src: String) =
-        s"""SELECT ${if (src == "bench") "doc_id," else ""}
-           |  list_distinct(list_transform(
-           |    generate_series(1, greatest(len(toks)-4, 1)),
-           |    i -> list_aggregate(toks[i:least(i+4, len(toks))], 'string_agg', ' '))) AS sh
-           |FROM (SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS toks
-           |      FROM $src)""".stripMargin
-      s"""WITH bench AS (
-         |  SELECT doc_id, substr(text, 1, 150) AS text FROM documents WHERE doc_id < 40
-         |), cs AS (
-         |  SELECT DISTINCT unnest(sh) AS h FROM (${duckSh("documents")})
-         |), bs AS (
-         |  SELECT doc_id AS bench_id, unnest(sh) AS h FROM (${duckSh("bench")})
-         |)
-         |SELECT bench_id, COUNT(*) AS n_shingles,
-         |  COUNT(cs.h) AS n_hit,
-         |  CAST(floor(COUNT(cs.h) * 100.0 / COUNT(*)) AS BIGINT) AS contaminated_pct
-         |FROM bs LEFT JOIN cs USING (h)
-         |GROUP BY bench_id""".stripMargin
-    },
-    // q46: replay the per-bin first-fit scan as a recursive CTE — the bin
-    // is the same top-63-bit hash both engines compute, the recursion
-    // steps one doc at a time per bin in id order, exactly the
-    // mapPartitions loop
-    "q46_packing" ->
-      """WITH RECURSIVE d AS (
-        |  SELECT doc_id,
-        |    CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT) AS n,
-        |    CAST((hash(doc_id) >> 1) % 8 AS BIGINT) AS bin
-        |  FROM documents
-        |), o AS (
-        |  SELECT *, row_number() OVER (PARTITION BY bin ORDER BY doc_id) AS rn
-        |  FROM d
-        |), packed AS (
-        |  SELECT bin, rn, doc_id, n, CAST(0 AS BIGINT) AS seq, n AS used
-        |  FROM o WHERE rn = 1
-        |  UNION ALL
-        |  SELECT o.bin, o.rn, o.doc_id, o.n,
-        |    CASE WHEN p.used + o.n > 512 THEN p.seq + 1 ELSE p.seq END,
-        |    CASE WHEN p.used + o.n > 512 THEN o.n ELSE p.used + o.n END
-        |  FROM packed p JOIN o ON o.bin = p.bin AND o.rn = p.rn + 1
-        |)
-        |SELECT bin * 1099511627776 + seq AS seq_id, COUNT(*) AS n_docs,
-        |  CAST(SUM(n) AS BIGINT) AS seq_tokens
-        |FROM packed GROUP BY 1""".stripMargin,
-    "q44_json_extract" ->
-      """SELECT event_type, COUNT(*) AS n,
-        | CAST(SUM(CAST(props->>'$.k' AS BIGINT)) AS BIGINT) AS sum_k,
-        | MIN(CAST(props->>'$.k' AS BIGINT)) AS min_k,
-        | MAX(CAST(props->>'$.k' AS BIGINT)) AS max_k
-        |FROM events GROUP BY event_type""".stripMargin,
-    "q42_text_clean" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    '<p>Contact: bob' || CAST(doc_id % 100 AS VARCHAR) ||
-        |    '@mail.example.com</p> ' || text AS dirty
-        |  FROM documents
-        |)
-        |SELECT doc_id, CAST(length(dirty) AS BIGINT) AS len_dirty,
-        | CAST(length(trim(regexp_replace(
-        |   regexp_replace(
-        |     nfc_normalize(regexp_replace(dirty, '<[^>]*>', '', 'g')),
-        |     '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z][A-Za-z]+', '<EMAIL>', 'g'),
-        |   '\s+', ' ', 'g'))) AS BIGINT) AS len_clean
-        |FROM d""".stripMargin,
-    "q43_diversity" ->
-      """SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS n_tokens, COUNT(*) AS n_distinct,
-        | MAX(tf) AS top_tf,
-        | CAST(floor(COUNT(*) * 100.0 / SUM(tf)) AS BIGINT) AS diversity_pct,
-        | CAST(floor(MAX(tf) * 100.0 / SUM(tf)) AS BIGINT) AS dominance_pct
-        |FROM (
-        |  SELECT doc_id, term, COUNT(*) AS tf FROM (
-        |    SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '\s+')) AS term
-        |    FROM documents)
-        |  GROUP BY doc_id, term)
-        |GROUP BY doc_id""".stripMargin,
-    // q58: the per-token NLL is quantized to DECIMAL(18,9) on BOTH sides
-    // before summing, so engine ln() ulp differences are absorbed by the
-    // quantization (verified value-exact at sf0.01); the decimal sum and
-    // floor are then exact integer arithmetic on either engine
-    "q58_perplexity" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '\s+')) AS term
-        |  FROM documents
-        |), lm AS (
-        |  SELECT term, COUNT(*) AS tf FROM toks GROUP BY 1
-        |), tot AS (
-        |  SELECT COUNT(*) AS n_total FROM toks
-        |)
-        |SELECT doc_id, COUNT(*) AS n_tokens,
-        |  CAST(floor(SUM(CAST(-ln((tf + 1) / (n_total + 1.0)) AS DECIMAL(18,9))) * 1000
-        |    / COUNT(*)) AS BIGINT) AS avg_nll_x1000
-        |FROM toks JOIN lm USING (term) CROSS JOIN tot
-        |GROUP BY doc_id""".stripMargin,
-    "q57_stratified" ->
-      """SELECT lang, COUNT(*) AS n, MIN(doc_id) AS min_id FROM (
-        |  SELECT lang, doc_id, (hash(doc_id) >> 16) % 10000 AS bkt FROM documents)
-        |WHERE bkt < CASE lang WHEN 'en' THEN 2500 WHEN 'de' THEN 5000
-        |  WHEN 'fr' THEN 5000 ELSE 10000 END
-        |GROUP BY lang""".stripMargin,
-    "q41_sample_split" ->
-      """WITH b AS (
-        |  SELECT doc_id, (hash(doc_id) >> 16) % 10000 AS bkt FROM documents
-        |)
-        |SELECT CAST(CASE WHEN bkt < 9000 THEN 0 WHEN bkt < 9500 THEN 1 ELSE 2 END AS BIGINT) AS split_id,
-        | COUNT(*) AS n, MIN(doc_id) AS min_id, MAX(doc_id) AS max_id
-        |FROM b GROUP BY 1""".stripMargin,
-    "q81_weighted_sample" ->
-      """SELECT doc_id, n_chars FROM documents
-        |WHERE (hash(doc_id) >> 16) % 10000 <
-        |  LEAST(GREATEST(n_chars * 25, 0), 10000)""".stripMargin,
-    "q82_group_sample" ->
-      """SELECT o_orderpriority, CAST(rnk AS BIGINT) AS sample_rank,
-        |  o_orderkey
-        |FROM (
-        |  SELECT o_orderpriority, o_orderkey,
-        |    row_number() OVER (PARTITION BY o_orderpriority
-        |      ORDER BY hash(o_orderkey) >> 1, o_orderkey) AS rnk
-        |  FROM orders
-        |) WHERE rnk <= 20""".stripMargin,
-    "q61_cdc_merge" ->
-      """WITH chg AS (
-        |  SELECT c_custkey, 1 AS seq, 'U' AS op, 'UPGRADED' AS seg
-        |  FROM customer WHERE c_custkey % 4 = 1
-        |  UNION ALL SELECT c_custkey, 2, 'U', 'FINAL'
-        |  FROM customer WHERE c_custkey % 4 = 1
-        |  UNION ALL SELECT c_custkey, 1, 'D', NULL
-        |  FROM customer WHERE c_custkey % 4 = 2
-        |  UNION ALL SELECT c_custkey, 1, 'U', 'TOUCHED'
-        |  FROM customer WHERE c_custkey % 4 = 3
-        |  UNION ALL SELECT c_custkey + 10000000, 1, 'I', 'NEWSEG'
-        |  FROM customer WHERE c_custkey % 4 = 0
-        |), allr AS (
-        |  SELECT c_custkey, CAST(-9223372036854775808 AS BIGINT) AS seq,
-        |    'S' AS op, c_mktsegment AS seg FROM customer
-        |  UNION ALL SELECT c_custkey, CAST(seq AS BIGINT), op, seg FROM chg
-        |), w AS (
-        |  SELECT c_custkey, seg, op,
-        |    row_number() OVER (PARTITION BY c_custkey ORDER BY seq DESC) AS rn
-        |  FROM allr
-        |)
-        |SELECT seg AS c_mktsegment, COUNT(*) AS n,
-        |  MIN(c_custkey) AS min_key, MAX(c_custkey) AS max_key
-        |FROM w WHERE rn = 1 AND op <> 'D' GROUP BY 1""".stripMargin,
-    "q62_chunking" ->
-      """WITH t AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks
-        |  FROM documents
-        |), n AS (
-        |  SELECT doc_id, toks, CAST(len(toks) AS BIGINT) AS n FROM t
-        |), c AS (
-        |  SELECT doc_id, toks, n,
-        |    unnest(generate_series(0,
-        |      CASE WHEN n <= 32 THEN 0 ELSE (n - 32 + 23) // 24 END)) AS chunk_id
-        |  FROM n
-        |)
-        |SELECT doc_id, CAST(chunk_id AS BIGINT) AS chunk_id,
-        |  CAST(chunk_id * 24 AS BIGINT) AS start_tok,
-        |  CAST(least(32, n - chunk_id * 24) AS BIGINT) AS n_tok_chunk,
-        |  CAST(length(array_to_string(
-        |    toks[CAST(chunk_id*24 + 1 AS BIGINT):
-        |         CAST(chunk_id*24 + least(32, n - chunk_id*24) AS BIGINT)],
-        |    ' ')) AS BIGINT) AS n_chars_chunk
-        |FROM c""".stripMargin,
-    "q64_length_trim" ->
-      """WITH r AS (
-        |  SELECT doc_id, CAST(n_chars AS BIGINT) AS n_chars,
-        |    CAST(row_number() OVER (ORDER BY n_chars, doc_id) AS BIGINT) AS grank,
-        |    COUNT(*) OVER () AS total
-        |  FROM documents
-        |)
-        |SELECT doc_id, n_chars, grank FROM r
-        |WHERE grank > total * 500 // 10000
-        |  AND grank <= total - total * 500 // 10000""".stripMargin,
-    "q63_pii_redact" ->
-      """WITH d AS (
-        |  SELECT doc_id, text || CASE
-        |    WHEN doc_id % 4 = 0 THEN ' visit https://example.org/p/' ||
-        |      CAST(doc_id AS VARCHAR) || ' now'
-        |    WHEN doc_id % 4 = 1 THEN ' call +48 123-456-' ||
-        |      lpad(CAST(doc_id % 1000 AS VARCHAR), 3, '0') || ' now'
-        |    WHEN doc_id % 4 = 2 THEN ' from 10.' ||
-        |      CAST(doc_id % 256 AS VARCHAR) || '.0.1 node'
-        |    ELSE '' END AS dirty
-        |  FROM documents
-        |)
-        |SELECT doc_id,
-        |  CAST(len(regexp_extract_all(dirty, 'https?://[^\s]+')) AS BIGINT) AS n_urls,
-        |  CAST(len(regexp_extract_all(dirty, '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b')) AS BIGINT) AS n_ips,
-        |  CAST(len(regexp_extract_all(dirty, '\+\d{2} \d{3}-\d{3}-\d{3}')) AS BIGINT) AS n_phones,
-        |  CAST(length(dirty) AS BIGINT) AS len_dirty,
-        |  CAST(length(
-        |    regexp_replace(regexp_replace(regexp_replace(regexp_replace(dirty,
-        |      'https?://[^\s]+', '<URL>', 'g'),
-        |      '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '<IP>', 'g'),
-        |      '\+\d{2} \d{3}-\d{3}-\d{3}', '<PHONE>', 'g'),
-        |      '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z][A-Za-z]+', '<EMAIL>', 'g')
-        |  ) AS BIGINT) AS len_clean
-        |FROM d""".stripMargin,
-    // q67: the oracle is the PLAIN join — equality proves the Bloom
-    // pre-filter dropped only non-matching rows (no false negatives)
-    "q67_bloom_join" ->
-      """SELECT l_returnflag, COUNT(*) AS n,
-        | CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |WHERE o_orderpriority = '1-URGENT' AND o_orderstatus = 'F'
-        |GROUP BY l_returnflag""".stripMargin,
-    "q68_dup_ngrams" ->
-      """WITH t AS (
-        |  SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS toks
-        |  FROM documents
-        |), g AS (
-        |  SELECT doc_id, unnest(list_transform(
-        |    generate_series(1, greatest(len(toks)-4, 1)),
-        |    i -> list_aggregate(toks[i:least(i+4, len(toks))], 'string_agg', ' ')))
-        |    AS gram
-        |  FROM t
-        |), pd AS (
-        |  SELECT doc_id, gram, COUNT(*) AS occ FROM g GROUP BY 1, 2
-        |), df AS (
-        |  SELECT gram, COUNT(*) AS ndocs FROM pd GROUP BY 1
-        |)
-        |SELECT doc_id, CAST(SUM(occ) AS BIGINT) AS n_grams,
-        |  CAST(SUM(CASE WHEN ndocs >= 2 THEN occ ELSE 0 END) AS BIGINT) AS n_dup,
-        |  CAST(SUM(CASE WHEN ndocs >= 2 THEN occ ELSE 0 END) * 100 // SUM(occ)
-        |    AS BIGINT) AS dup_pct
-        |FROM pd JOIN df USING (gram) GROUP BY doc_id""".stripMargin,
-    // intra-doc repetition: same gram conventions as q68 (string grams
-    // stand in for the hash64 grams — identical grouping up to 64-bit
-    // collisions), but occ >= 2 within the SAME doc, no df join
-    "q92_repetition" ->
-      """WITH t AS (
-        |  SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS toks
-        |  FROM documents WHERE text IS NOT NULL
-        |), g AS (
-        |  SELECT doc_id, unnest(list_transform(
-        |    generate_series(1, greatest(len(toks)-2, 1)),
-        |    i -> list_aggregate(toks[i:least(i+2, len(toks))], 'string_agg', ' ')))
-        |    AS gram
-        |  FROM t
-        |), pd AS (
-        |  SELECT doc_id, gram, COUNT(*) AS occ FROM g GROUP BY 1, 2
-        |)
-        |SELECT doc_id, CAST(SUM(occ) AS BIGINT) AS n_grams,
-        |  CAST(SUM(CASE WHEN occ >= 2 THEN occ ELSE 0 END) AS BIGINT) AS rep_grams,
-        |  CAST(SUM(CASE WHEN occ >= 2 THEN occ ELSE 0 END) * 100 // SUM(occ)
-        |    AS BIGINT) AS rep_pct,
-        |  CAST(MAX(occ) AS BIGINT) AS top_occ,
-        |  CAST(MAX(occ) * 100 // SUM(occ) AS BIGINT) AS top_pct
-        |FROM pd GROUP BY doc_id""".stripMargin,
-    // longest duplicated span: positions of corpus-duplicated 5-grams,
-    // gaps-and-islands (pos - row_number) run grouping, max run + k-1;
-    // docs with no duplicated gram -> span 0 via the LEFT JOIN
-    "q93_dup_spans" ->
-      """WITH t AS (
-        |  SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS toks
-        |  FROM documents WHERE text IS NOT NULL
-        |), g0 AS (
-        |  SELECT doc_id, list_transform(
-        |    generate_series(1, greatest(len(toks)-4, 1)),
-        |    i -> list_aggregate(toks[i:least(i+4, len(toks))], 'string_agg', ' ')) AS gl
-        |  FROM t
-        |), g AS (
-        |  SELECT doc_id, generate_subscripts(gl, 1) AS pos, unnest(gl) AS gram
-        |  FROM g0
-        |), tot AS (
-        |  SELECT gram, COUNT(*) AS occ FROM g GROUP BY 1
-        |), d AS (
-        |  SELECT g.doc_id, g.pos FROM g JOIN tot USING (gram) WHERE occ >= 2
-        |), r AS (
-        |  SELECT doc_id,
-        |    pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS grp
-        |  FROM d
-        |), runs AS (
-        |  SELECT doc_id, COUNT(*) AS rl FROM r GROUP BY doc_id, grp
-        |), mx AS (
-        |  SELECT doc_id, MAX(rl) AS mrl FROM runs GROUP BY doc_id
-        |)
-        |SELECT t.doc_id,
-        |  CAST(COALESCE(mx.mrl + 4, 0) AS BIGINT) AS max_dup_span,
-        |  COALESCE(mx.mrl + 4, 0) >= 15 AS is_dropped
-        |FROM t LEFT JOIN mx USING (doc_id)""".stripMargin,
-    "q66_inverted_index" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '\s+')) AS term
-        |  FROM documents
-        |), tf AS (
-        |  SELECT doc_id, term, COUNT(*) AS tf FROM tok GROUP BY 1, 2
-        |)
-        |SELECT term, CAST(COUNT(*) OVER (PARTITION BY term) AS BIGINT) AS df,
-        |  doc_id,
-        |  CAST(row_number() OVER (PARTITION BY term ORDER BY doc_id) AS BIGINT) AS prank,
-        |  tf
-        |FROM tf""".stripMargin,
-    "q78_bm25" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '\s+')) AS term
-        |  FROM documents
-        |), tf AS (
-        |  SELECT doc_id, term, CAST(COUNT(*) AS HUGEINT) AS tf FROM tok GROUP BY 1, 2
-        |), dl AS (
-        |  SELECT doc_id, CAST(SUM(tf) AS HUGEINT) AS dl FROM tf GROUP BY 1
-        |), tot AS (
-        |  SELECT CAST(COUNT(*) AS HUGEINT) AS nd, CAST(SUM(dl) AS HUGEINT) AS nt FROM dl
-        |), q(query_id, term) AS (
-        |  VALUES (0, 'spark'), (0, 'window'), (0, 'customer'),
-        |         (1, 'vector'), (1, 'merge'), (1, 'stream'),
-        |         (2, 'slow'), (2, 'filter')
-        |), p AS (
-        |  SELECT tf.* FROM tf WHERE term IN (SELECT DISTINCT term FROM q)
-        |), dft AS (
-        |  SELECT term, CAST(COUNT(*) AS HUGEINT) AS df FROM p GROUP BY 1
-        |), s AS (
-        |  SELECT p.doc_id, p.term,
-        |    (1000 * (2*nd - 2*df + 1) * 44 * p.tf * nt)
-        |      // ((2*df + 1) * (20*p.tf*nt + 6*nt + 18*dl.dl*nd)) AS sm
-        |  FROM p JOIN dft USING (term) JOIN dl USING (doc_id) CROSS JOIN tot
-        |), sq AS (
-        |  SELECT CAST(q.query_id AS BIGINT) AS query_id, s.doc_id,
-        |    CAST(SUM(sm) AS BIGINT) AS score_milli
-        |  FROM s JOIN q USING (term) GROUP BY 1, 2
-        |)
-        |SELECT query_id,
-        |  CAST(row_number() OVER (PARTITION BY query_id
-        |    ORDER BY score_milli DESC, doc_id) AS BIGINT) AS rnk,
-        |  doc_id, score_milli
-        |FROM sq QUALIFY rnk <= 10""".stripMargin,
-    "q79_line_dedup" ->
-      """WITH d AS (
-        |  SELECT doc_id, text || chr(10) || 'Subscribe to our newsletter'
-        |    || CASE WHEN doc_id % 5 = 0
-        |         THEN chr(10) || 'Follow us on example social' ELSE '' END
-        |    || chr(10) || 'id: ' || CAST(doc_id AS VARCHAR) AS dirty
-        |  FROM documents
-        |), a AS (
-        |  SELECT doc_id, string_split(dirty, chr(10)) AS arr FROM d
-        |), i AS (
-        |  SELECT doc_id, arr, unnest(generate_series(1, len(arr))) AS pos
-        |  FROM a
-        |), l AS (
-        |  SELECT doc_id, pos, arr[pos] AS line FROM i
-        |), b AS (
-        |  SELECT line FROM (
-        |    SELECT line, COUNT(DISTINCT doc_id) AS nd FROM l GROUP BY 1
-        |  ) WHERE nd >= 3
-        |)
-        |SELECT l.doc_id, CAST(COUNT(*) AS BIGINT) AS n_lines,
-        |  CAST(SUM(CASE WHEN b.line IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_removed,
-        |  COALESCE(string_agg(CASE WHEN b.line IS NULL THEN l.line END,
-        |    chr(10) ORDER BY l.pos), '') AS kept_text
-        |FROM l LEFT JOIN b ON l.line = b.line
-        |GROUP BY 1""".stripMargin,
-    "q40_range_join" ->
-      """WITH bands(band_id, band_lo, band_hi) AS (
-        |  SELECT i, i * 50000.0, (i + 1) * 50000.0
-        |  FROM generate_series(0, 11) AS t(i)
-        |  UNION ALL SELECT 100, 100000.0, 400000.0
-        |)
-        |SELECT band_id, COUNT(*) AS n,
-        | CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM orders JOIN bands
-        |  ON o_totalprice >= band_lo AND o_totalprice < band_hi
-        |GROUP BY band_id""".stripMargin,
-    "q69_best_keeper" ->
-      s"""WITH RECURSIVE t AS (
-         |  SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS toks FROM documents
-         |), s AS (
-         |  SELECT doc_id, list_distinct(list_transform(
-         |    generate_series(1, greatest(len(toks)-1, 1)),
-         |    i -> CASE WHEN i+1 <= len(toks) THEN toks[i] || ' ' || toks[i+1]
-         |         ELSE toks[i] END)) AS sh FROM t
-         |), p AS (
-         |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-         |  FROM s a JOIN s b ON a.doc_id < b.doc_id
-         |  WHERE floor(len(list_intersect(a.sh, b.sh)) * 100.0 /
-         |        greatest(len(list_distinct(list_concat(a.sh, b.sh))), 1)) >= 50
-         |), e AS (
-         |  SELECT id_a AS src, id_b AS dst FROM p
-         |  UNION SELECT id_b, id_a FROM p
-         |), reach AS (
-         |  SELECT doc_id AS id, doc_id AS comp FROM documents
-         |  UNION
-         |  SELECT e.src, reach.comp FROM e JOIN reach ON e.dst = reach.id
-         |), comp AS (
-         |  SELECT id, MIN(comp) AS component FROM reach GROUP BY id
-         |), q AS (
-         |  SELECT doc_id,
-         |    least(100, CAST(floor(500.0 * n_stop / n_tokens) AS BIGINT)) AS quality
-         |  FROM (
-         |    SELECT doc_id,
-         |      CAST((length(p2) - length(replace(p2, ' the ', ''))) / 5
-         |         + (length(p2) - length(replace(p2, ' a ', ''))) / 3
-         |         + (length(p2) - length(replace(p2, ' and ', ''))) / 5 AS BIGINT) AS n_stop,
-         |      CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT) AS n_tokens
-         |    FROM (SELECT doc_id, text, ' ' || text || ' ' AS p2 FROM documents))
-         |)
-         |SELECT component, COUNT(*) AS n_members,
-         |  arg_max(id, quality * 1000000000000 - id) AS keeper_id,
-         |  MAX(quality) AS keeper_quality
-         |FROM comp JOIN q ON comp.id = q.doc_id
-         |GROUP BY component""".stripMargin,
-    "q70_mix_weights" ->
-      """WITH per AS (
-        |  SELECT source, COUNT(*) AS n_docs FROM documents GROUP BY source
-        |), tot AS (
-        |  SELECT CAST(SUM(n_docs) AS BIGINT) AS n_total,
-        |    COUNT(*) AS n_sources FROM per
-        |)
-        |SELECT source, n_docs,
-        |  n_docs * 10000 // n_total AS share_bp,
-        |  10000 * n_total // (n_sources * n_docs) AS weight_x10000
-        |FROM per, tot""".stripMargin,
-    "q71_ppl_buckets" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '\s+')) AS term
-        |  FROM documents
-        |), lm AS (
-        |  SELECT term, COUNT(*) AS tf FROM toks GROUP BY 1
-        |), tot AS (
-        |  SELECT COUNT(*) AS n_total FROM toks
-        |), ppl AS (
-        |  SELECT doc_id,
-        |    CAST(floor(SUM(CAST(-ln((tf + 1) / (n_total + 1.0)) AS DECIMAL(18,9))) * 1000
-        |      / COUNT(*)) AS BIGINT) AS avg_nll_x1000
-        |  FROM toks JOIN lm USING (term) CROSS JOIN tot
-        |  GROUP BY doc_id
-        |), b AS (
-        |  SELECT lang, avg_nll_x1000,
-        |    CAST(ntile(3) OVER (PARTITION BY lang
-        |      ORDER BY avg_nll_x1000, d.doc_id) AS BIGINT) AS bucket
-        |  FROM ppl JOIN documents d USING (doc_id)
-        |)
-        |SELECT lang, bucket, COUNT(*) AS n,
-        |  MIN(avg_nll_x1000) AS min_nll, MAX(avg_nll_x1000) AS max_nll
-        |FROM b GROUP BY lang, bucket""".stripMargin,
-    "q37_dedup_clusters" ->
-      s"""WITH RECURSIVE t AS (
-         |  SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS toks FROM documents
-         |), s AS (
-         |  SELECT doc_id, list_distinct(list_transform(
-         |    generate_series(1, greatest(len(toks)-1, 1)),
-         |    i -> CASE WHEN i+1 <= len(toks) THEN toks[i] || ' ' || toks[i+1]
-         |         ELSE toks[i] END)) AS sh FROM t
-         |), p AS (
-         |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-         |  FROM s a JOIN s b ON a.doc_id < b.doc_id
-         |  WHERE floor(len(list_intersect(a.sh, b.sh)) * 100.0 /
-         |        greatest(len(list_distinct(list_concat(a.sh, b.sh))), 1)) >= 50
-         |), e AS (
-         |  SELECT id_a AS src, id_b AS dst FROM p
-         |  UNION SELECT id_b, id_a FROM p
-         |), reach AS (
-         |  SELECT doc_id AS id, doc_id AS comp FROM documents
-         |  UNION
-         |  SELECT e.src, reach.comp FROM e JOIN reach ON e.dst = reach.id
-         |)
-         |SELECT id, MIN(comp) AS component FROM reach GROUP BY id""".stripMargin,
-    // q90 (r10 flip, rows-only tail 4 → 3): the funnel's stage COUNTS are
-    // fully SQL-expressible by composing the already-oracled per-stage
-    // replays over the same fixtures — clean (q42's chain, here on the raw
-    // corpus), lang/quality gate (q24/q25 expressions on the CLEANED
-    // text), image gate (the q83 blob fixture is corrupt exactly at
-    // doc_id % 5 = 2; all surviving headers have w,h ≥ 1), exact dedup
-    // (q16's GROUP BY text), near-dup keepers (q19's exact all-pairs
-    // bigram Jaccard — recall-equivalent to the engine's LSH+verify at
-    // the corpus's near-dup J levels, exactly the q19 oracle argument —
-    // then q37's recursive-CTE connected components, keeper = id = min
-    // component), decontamination (q45's 5-shingle containment with the
-    // funnel's bench slice), and packing (every survivor packs exactly
-    // once — PipelineSpec's law — so 5_packed ≡ 4_decontaminated by
-    // count; the per-bin first-fit itself is q46's oracle).
-    "q90_corpus_prep" ->
-      """WITH RECURSIVE cleaned AS (
-        |  SELECT doc_id,
-        |    trim(regexp_replace(
-        |      regexp_replace(
-        |        nfc_normalize(regexp_replace(text, '<[^>]*>', '', 'g')),
-        |        '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z][A-Za-z]+', '<EMAIL>', 'g'),
-        |      '\s+', ' ', 'g')) AS text
-        |  FROM documents
-        |), gated AS (
-        |  SELECT doc_id, text FROM (
-        |    SELECT doc_id, text,
-        |      CASE WHEN regexp_matches(text, '[\x{4e00}-\x{9fff}]') THEN 'zh'
-        |        WHEN contains(p, ' der ') OR contains(p, ' und ') OR contains(p, ' nicht ') THEN 'de'
-        |        WHEN contains(p, ' le ') OR contains(p, ' les ') OR contains(p, ' est ') THEN 'fr'
-        |        WHEN contains(p, ' el ') OR contains(p, ' los ') OR contains(p, ' es ') THEN 'es'
-        |        ELSE 'en' END AS lang,
-        |      least(100, CAST(floor(500.0 * (
-        |          (length(sp) - length(replace(sp, ' the ', ''))) / 5
-        |        + (length(sp) - length(replace(sp, ' a ', ''))) / 3
-        |        + (length(sp) - length(replace(sp, ' and ', ''))) / 5)
-        |        / len(string_split_regex(trim(text), '\s+'))) AS BIGINT)) AS quality
-        |    FROM (SELECT doc_id, text, ' ' || lower(text) || ' ' AS p,
-        |          ' ' || text || ' ' AS sp FROM cleaned))
-        |  WHERE lang = 'en' AND quality >= 10
-        |), img AS (
-        |  SELECT doc_id, text FROM gated WHERE doc_id % 5 <> 2
-        |), x AS (
-        |  SELECT MIN(doc_id) AS doc_id, text FROM img GROUP BY text
-        |), s AS (
-        |  SELECT doc_id, list_distinct(list_transform(
-        |    generate_series(1, greatest(len(toks)-1, 1)),
-        |    i -> CASE WHEN i+1 <= len(toks) THEN toks[i] || ' ' || toks[i+1]
-        |         ELSE toks[i] END)) AS sh
-        |  FROM (SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS toks FROM x)
-        |), p AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-        |  FROM s a JOIN s b ON a.doc_id < b.doc_id
-        |  WHERE floor(len(list_intersect(a.sh, b.sh)) * 100.0 /
-        |        greatest(len(list_distinct(list_concat(a.sh, b.sh))), 1)) >= 50
-        |), e AS (
-        |  SELECT id_a AS src, id_b AS dst FROM p
-        |  UNION SELECT id_b, id_a FROM p
-        |), reach AS (
-        |  SELECT doc_id AS id, doc_id AS comp FROM x
-        |  UNION
-        |  SELECT e.src, reach.comp FROM e JOIN reach ON e.dst = reach.id
-        |), neardedup AS (
-        |  SELECT x.doc_id, x.text FROM x JOIN (
-        |    SELECT id AS doc_id FROM reach GROUP BY id HAVING id = MIN(comp)
-        |  ) k USING (doc_id)
-        |), bench AS (
-        |  SELECT doc_id, substr(text, 1, 150) AS text FROM documents WHERE doc_id < 40
-        |), cs AS (
-        |  SELECT DISTINCT unnest(sh) AS h FROM (
-        |    SELECT list_distinct(list_transform(
-        |      generate_series(1, greatest(len(toks)-4, 1)),
-        |      i -> list_aggregate(toks[i:least(i+4, len(toks))], 'string_agg', ' '))) AS sh
-        |    FROM (SELECT string_split_regex(trim(lower(text)), '\s+') AS toks FROM bench))
-        |), bs AS (
-        |  SELECT doc_id AS train_id, unnest(sh) AS h FROM (
-        |    SELECT doc_id, list_distinct(list_transform(
-        |      generate_series(1, greatest(len(toks)-4, 1)),
-        |      i -> list_aggregate(toks[i:least(i+4, len(toks))], 'string_agg', ' '))) AS sh
-        |    FROM (SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS toks FROM neardedup))
-        |), contam AS (
-        |  SELECT train_id FROM (
-        |    SELECT train_id, COUNT(*) AS n, COUNT(cs.h) AS n_hit
-        |    FROM bs LEFT JOIN cs USING (h) GROUP BY train_id)
-        |  WHERE floor(n_hit * 100.0 / n) >= 50
-        |), decon AS (
-        |  SELECT doc_id FROM neardedup
-        |  WHERE doc_id NOT IN (SELECT train_id FROM contam)
-        |)
-        |SELECT '0_raw' AS stage, COUNT(*) AS n_docs FROM documents
-        |UNION ALL SELECT '1_gated', COUNT(*) FROM gated
-        |UNION ALL SELECT '1b_image_gate', COUNT(*) FROM img
-        |UNION ALL SELECT '2_exact_dedup', COUNT(*) FROM x
-        |UNION ALL SELECT '3_near_dedup', COUNT(*) FROM neardedup
-        |UNION ALL SELECT '4_decontaminated', COUNT(*) FROM decon
-        |UNION ALL SELECT '5_packed', COUNT(*) FROM decon""".stripMargin
-  )
+  val registry: Seq[QueryDef] = QueryDef.registry(
+    EtlQueries.all ++ DedupQueries.all ++ AnnQueries.all ++ TextQueries.all ++
+      WebQueries.all ++ MultimodalQueries.all ++ GraphQueries.all)
+
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(q => q.name -> q.build).toMap
+
+  val oracleSql: Map[String, String] =
+    registry.flatMap(q => q.oracle.map(q.name -> _)).toMap
 }

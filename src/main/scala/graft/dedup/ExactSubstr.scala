@@ -191,11 +191,6 @@ object ExactSubstr {
       .select(col("g"), col("nr").as("r")))
   }
 
-  /** The lazy (un-checkpointed) plan of one prefix-doubling round —
-    * explain-evidence only ([[graft.PlanDump]]): the committed plan
-    * artifact shows the 2-exchange round kernel that the eager
-    * checkpoints hide from the final query plans.
-    */
   /** The lazy (un-checkpointed) plan of one duplicated-window probe —
     * explain-evidence only, like [[roundPlanForExplain]]: the eager
     * substrate checkpoints hide the probe join from the final q175/
@@ -205,19 +200,24 @@ object ExactSubstr {
   def probePlanForExplain(docs: DataFrame, idCol: String,
       textCol: String): DataFrame = {
     val (pos, lens0) = charPositions(docs, idCol, textCol)
-    val posBase = 1000000L
+    // the stats the executed probe uses (one tiny action on the lens)
+    val stats = lensStatsOf(lens0)
     val packed = pos.select(
-      (col("doc_id") * posBase + col("off")).as("g"), col("r"))
-    val stats = LensStats(posBase, 1000L, 1000000L)
+      (col("doc_id") * stats.posBase + col("off")).as("g"), col("r"))
     // the real q175/q178 probe shape: level-3 table, window 12 →
     // shift 4 (the per-doc lead window) + the lens join + the SHJ
     val full = fullWindows(packed, 3, lens0, 12L, stats)
     full.join(dupContents(full).hint("shuffle_hash"), Seq("ra", "rb"))
-      .select(expr(s"g div $posBase").as("doc_id"),
-        pmod(col("g"), lit(posBase)).as("off"),
+      .select(expr(s"g div ${stats.posBase}").as("doc_id"),
+        pmod(col("g"), lit(stats.posBase)).as("off"),
         col("ra"), col("rb"))
   }
 
+  /** The lazy (un-checkpointed) plan of one prefix-doubling round —
+    * explain-evidence only ([[graft.PlanDump]]): the committed plan
+    * artifact shows the 2-exchange round kernel that the eager
+    * checkpoints hide from the final query plans.
+    */
   def roundPlanForExplain(docs: DataFrame, idCol: String,
       textCol: String): DataFrame = {
     val (pos, _) = charPositions(docs, idCol, textCol)
@@ -352,7 +352,7 @@ object ExactSubstr {
     * exact covered set). Output: (doc_id, span_start 1-based,
     * span_end exclusive, span_len).
     *
-    * Standalone build; SparkEntry's q175 routes through the shared
+    * Standalone build; the q175 registry entry routes through the shared
     * memoized (rank, lens, starts) substrate instead via
     * [[dupSpansFromStarts]].
     */

@@ -1,0 +1,2268 @@
+package graft
+package registry
+
+import graft.dedup._
+import graft.etl._
+import graft.functions.{Bm25, Bpe, F, Repetition, TermScores, TextStats}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+/** Text-analysis and corpus-preparation queries over `documents`:
+  * tokenizers, quality signals and filters, language models, sketches,
+  * sampling, retrieval and the corpus-prep funnel.
+  */
+private[graft] object TextQueries {
+  import Shared._
+
+  /** q119's URL fixture: ten variants keyed by doc_id%10, each
+    * exercising one dimension of the UrlFilter battery — clean, a lone
+    * soft word (scores 40, below the 60 threshold: weighted scoring is
+    * not substring banning), two soft words (70 ≥ 60 → filtered), a
+    * strict word embedded INSIDE a longer token (substring mode catches
+    * what word matching can't), a digit-heavy host whose verdict flips
+    * on gid's digit count, a blocklisted host, a 5-dot-deep host, a
+    * SUBDOMAIN of a blocklisted host (parent-suffix matching bans it
+    * without list pre-expansion), an 8-LABEL subdomain of a blocklisted
+    * host (fails r_depth, yet blocked_parent must still agree with the
+    * oracle's identically-bounded suffix window — the exposed column
+    * can't lean on r_depth masking it), and a schemeless URL (rejected
+    * by the explicit r_has_host rule, not mislabeled digit-heavy). The
+    * oracle rebuilds these URLs by the same arithmetic and re-derives
+    * every counter with DuckDB string/list functions — a genuine
+    * replay, not a decision table.
+    */
+  // the fixed BPE merge table shared by q47b (encode oracle) and q122
+  // (fertility audit): six ranked rules whose outputs never feed an
+  // earlier rank, so the SQL replay's rank-order rewriting is exact
+  private val fixedBpeMerges = Seq("a" -> "g", "s" -> "c", "a" -> "n",
+    "l" -> "e", "b" -> "le", "r" -> "o")
+
+  // the fixed unigram-LM piece table shared by q172 (Viterbi encode
+  // oracle), q173 (one hard-EM step) and q174 (fertility audit): full
+  // single-character coverage (SentencePiece's invariant — the DP is
+  // total over [a-z]+ words) plus multi-char pieces planted to hit the
+  // corpus vocabulary with COMPETING segmentations (e.g. "window" is
+  // w|ind|ow, beating wi|nd|ow — the DP genuinely optimizes, it is not
+  // greedy longest-match). Scores are distinct integer milli-log
+  // weights; a length-L piece always beats its own decomposition, so
+  // every planted piece is reachable.
+  private val unigramMultiPieces: Seq[String] = Seq(
+    "jo", "in", "ha", "sh", "ba", "tc", "sc", "an", "me", "rg", "or",
+    "de", "ta", "bl", "re", "st", "am", "wi", "nd", "ow", "co", "lu",
+    "va", "ue", "li", "ne", "da", "qu", "er", "fa", "gr", "ou", "so",
+    "rt", "sp", "ar", "ro", "up", "he", "om", "us", "il", "te", "ke",
+    "ey", "sm", "al", "lo", "ag", "ig",
+    "tch", "rge", "der", "ble", "ind", "the", "oup", "ark", "que",
+    "ter", "eam", "olu", "umn", "ery", "dow", "ast", "ort", "can",
+    "ine", "ata",
+    "atch", "ecto", "trea", "usto", "mall",
+    // length 5–8 (VERDICT r18 task 6 — real SentencePiece vocabularies
+    // carry pieces well past 4 chars; MaxPieceLen is now 16): full-word
+    // and sliding fragments of the corpus vocabulary, so the DP faces
+    // genuine multi-length competition and the 8-char "customer" WINS
+    // its word (a length-L piece always outscores its decompositions)
+    "windo", "indow", "strea", "tream", "custo", "ustom", "stome",
+    "tomer", "filte", "ilter",
+    "window", "stream", "column", "vector", "filter", "custom",
+    "ustome", "stomer",
+    "custome", "ustomer",
+    "customer")
+
+  private val fixedUnigramPieces: Seq[(String, Long)] =
+    ('a' to 'z').map(c => c.toString -> (-3500L - (c - 'a') * 7L)) ++
+      unigramMultiPieces.zipWithIndex.map { case (p, i) =>
+        p -> (p.length match {
+          case 2 => -5200L - i * 10L
+          case 3 => -6600L - i * 10L
+          case 4 => -8000L - i * 10L
+          // longer pieces: −600 per extra char keeps every planted
+          // piece strictly cheaper than any decomposition of itself
+          case n => -8000L - (n - 4) * 600L - i * 10L
+        })
+      }
+
+  /** The q172/q173/q174 oracle's shared Viterbi replay: a recursive CTE
+    * whose state carries the last [[graft.functions.Unigram.MaxPieceLen]]
+    * dp values and backtrack strings as fixed-width columns — one
+    * iteration per character position, LEFT JOINs against the piece
+    * VALUES for each candidate length, longest-first CASE on ties
+    * (exactly the kernel's strictly-greater descending-L scan). The
+    * VALUES list is GENERATED from the same Scala Seq the Spark kernel
+    * ships, so there is one source of truth.
+    */
+  private def unigramDpCte: String = {
+    // the whole CTE is GENERATED from Unigram.MaxPieceLen (now 16 —
+    // VERDICT r18 task 6): M carried dp values d0..d{M-1}, M carried
+    // backtrack strings g0..g{M-1}, M candidate LEFT JOINs, and the
+    // longest-first CASE — widening the kernel's bound widens the
+    // replay automatically
+    val m = graft.functions.Unigram.MaxPieceLen
+    val vals = fixedUnigramPieces
+      .map { case (p, s) => s"('$p', CAST($s AS BIGINT))" }.mkString(", ")
+    val neg = "-1000000000000"
+    def cand(l: Int) = s"coalesce(d${l - 1} + p$l.sc, $neg)"
+    val best = s"greatest(${(m to 1 by -1).map(cand).mkString(", ")})"
+    def app(g: String, p: String) =
+      s"CASE WHEN $g = '' THEN $p ELSE $g || '|' || $p END"
+    val initD = "CAST(0 AS BIGINT) AS d0" +: (1 until m).map(k =>
+      s"CAST(NULL AS BIGINT) AS d$k")
+    val initG = "'' AS g0" +: (1 until m).map(k =>
+      s"CAST(NULL AS VARCHAR) AS g$k")
+    // longest-first tie scan: branches L = M .. 2, ELSE = the 1-char
+    // piece (exactly the kernel's strictly-greater descending-L loop)
+    val caseG = (m to 2 by -1).map(l =>
+      s"WHEN ${cand(l)} = $best THEN ${app(s"g${l - 1}", s"p$l.piece")}")
+      .mkString("CASE ", "\n         ", s"\n         ELSE ${app("g0", "p1.piece")} END")
+    val joins = (1 to m).map { l =>
+      val guard = if (l == 1) "" else s"i >= ${l - 1} AND "
+      s"LEFT JOIN pieces p$l ON ${guard}p$l.piece = substr(word, i + ${2 - l}, $l)"
+    }.mkString("\n       |  ")
+    val shiftD = (0 until m - 1).map(k => s"d$k").mkString(", ")
+    val shiftG = (0 until m - 1).map(k => s"g$k").mkString(", ")
+    s"""pieces(piece, sc) AS (VALUES $vals),
+       |uw AS (
+       |  SELECT DISTINCT
+       |    unnest(string_split_regex(trim(lower(text)), '\\s+')) AS word
+       |  FROM documents
+       |),
+       |ww AS (
+       |  SELECT word, length(word) AS len FROM uw
+       |  WHERE regexp_full_match(word, '[a-z]{1,16}')
+       |),
+       |dp AS (
+       |  SELECT word, len, 0 AS i,
+       |    ${initD.mkString(", ")},
+       |    ${initG.mkString(", ")}
+       |  FROM ww
+       |  UNION ALL
+       |  SELECT word, len, i + 1,
+       |    $best, $shiftD,
+       |    $caseG,
+       |    $shiftG
+       |  FROM dp
+       |  $joins
+       |  WHERE i < len
+       |),
+       |ufin AS (
+       |  SELECT word, d0 AS score_x1e3, g0 AS seg,
+       |    CAST(length(g0) - length(replace(g0, '|', '')) + 1 AS BIGINT)
+       |      AS n_pieces
+       |  FROM dp WHERE i = len
+       |)""".stripMargin
+  }
+
+  // q78's fixed retrieval workload: three queries over the synthetic vocab
+  // (identical VALUES literals in the oracle)
+  private val Bm25Queries: Seq[(Long, Seq[String])] = Seq(
+    0L -> Seq("spark", "window", "customer"),
+    1L -> Seq("vector", "merge", "stream"),
+    2L -> Seq("slow", "filter"))
+
+  /** CTEs `toks` (ordered lowercase whitespace tokens, mirroring
+    * F.tokensLower) and `fnv` — per-token Hashing.hash64: the FNV-1a
+    * char loop as a recursive CTE (documents are ASCII, so ascii() IS
+    * the UTF-8 byte), splitmix-finalized. Output: (doc_id, ti, th).
+    */
+  /** The q120 Naive-Bayes scorer replay, shared with the q160 eval:
+    * ends at CTE `sc(doc_id, n_tokens, sum_w, prior_q)` — the exact
+    * DECIMAL(18,9)-quantized per-term log-odds sum the engine computes.
+    */
+  private val nbScoreCtes: String =
+    """WITH d AS (
+      |  SELECT doc_id, lang,
+      |    string_split_regex(trim(lower(text)), '\s+') AS l
+      |  FROM documents
+      |), pos AS (
+      |  SELECT * FROM d
+      |  WHERE lang = 'en' AND (hash(doc_id) >> 16) % 10000 < 5000
+      |), neg AS (
+      |  SELECT * FROM d WHERE (hash(doc_id) >> 16) % 10000 >= 5000
+      |), tr AS (
+      |  SELECT unnest(l) AS term, 1 AS y FROM pos
+      |  UNION ALL
+      |  SELECT unnest(l) AS term, 0 AS y FROM neg
+      |), c AS (
+      |  SELECT term, SUM(y) AS cpos, SUM(1 - y) AS cneg
+      |  FROM tr GROUP BY 1
+      |), t AS (
+      |  SELECT SUM(cpos) AS npos, SUM(cneg) AS nneg, COUNT(*) AS v,
+      |    CAST(ln((SELECT COUNT(*) FROM pos)
+      |      / ((SELECT COUNT(*) FROM neg) * 1.0)) AS DECIMAL(18,9))
+      |      AS prior_q
+      |  FROM c
+      |), sb AS (
+      |  SELECT doc_id, unnest(l) AS term FROM d
+      |), sc AS (
+      |  SELECT doc_id, COUNT(*) AS n_tokens,
+      |    SUM(CAST(ln((COALESCE(cpos, 0) + 1)
+      |          / ((npos + v) * 1.0)) AS DECIMAL(18,9))
+      |      - CAST(ln((COALESCE(cneg, 0) + 1)
+      |          / ((nneg + v) * 1.0)) AS DECIMAL(18,9))) AS sum_w,
+      |    MAX(prior_q) AS prior_q
+      |  FROM sb LEFT JOIN c USING (term) CROSS JOIN t
+      |  GROUP BY doc_id
+      |)""".stripMargin
+
+  val all: Seq[QueryDef] = Seq(
+    // 23. token counting (whitespace + BPE-ish estimate)
+    QueryDef("q23_token_count", (s, dir) =>
+      Tables(s, dir).documents.select(
+        col("doc_id"),
+        TextStats.tokenCount(col("text")).as("n_tokens"),
+        TextStats.bpeTokenEstimate(col("text")).as("n_bpe_est")),
+      oracle = Some("""SELECT doc_id,
+          | CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT) AS n_tokens,
+          | CAST(ceil(length(text) / 4.0) AS BIGINT) AS n_bpe_est
+          |FROM documents""".stripMargin)),
+
+    // 24. language-id heuristic, confusion counts vs labels
+    QueryDef("q24_lang_id", (s, dir) =>
+      Tables(s, dir).documents
+        .select(col("lang"), TextStats.langId(col("text")).as("predicted"))
+        .groupBy(col("lang"), col("predicted"))
+        .agg(count(lit(1)).as("n")),
+      oracle = Some(s"""SELECT lang, predicted, COUNT(*) AS n FROM (
+           |  SELECT lang, $langCase AS predicted
+           |  FROM (SELECT lang, text, ' ' || lower(text) || ' ' AS p FROM documents))
+           |GROUP BY lang, predicted""".stripMargin)),
+
+    // 25. quality scoring (punctuation / stopword density)
+    QueryDef("q25_quality", (s, dir) =>
+      Tables(s, dir).documents.select(
+        col("doc_id"),
+        TextStats.punctCount(col("text")).as("n_punct"),
+        TextStats.stopwordHits(col("text")).as("n_stop"),
+        TextStats.qualityScore(col("text")).as("quality")),
+      oracle = Some("""SELECT doc_id,
+          | CAST(length(text) - length(regexp_replace(text, '[.,;:!?''"()\[\]{}-]', '', 'g')) AS BIGINT) AS n_punct,
+          | n_stop,
+          | least(100, CAST(floor(500.0 * n_stop / n_tokens) AS BIGINT)) AS quality
+          |FROM (
+          |  SELECT doc_id, text,
+          |    CAST((length(p) - length(replace(p, ' the ', ''))) / 5
+          |       + (length(p) - length(replace(p, ' a ', ''))) / 3
+          |       + (length(p) - length(replace(p, ' and ', ''))) / 5 AS BIGINT) AS n_stop,
+          |    CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT) AS n_tokens
+          |  FROM (SELECT doc_id, text, ' ' || text || ' ' AS p FROM documents))""".stripMargin)),
+
+    // 48. end-to-end corpus-prep funnel (clean → gate → image gate →
+    // exact dedup → near-dup keeper → decontaminate → pack), stages
+    // counted in one lazy frame. FULL oracle as of r10: the stage counts
+    // are replayed in DuckDB by composing the per-stage oracles (see the
+    // q90 oracleSql comment); PipelineSpec additionally gates the
+    // composition laws. The multimodal branch rides the q83 blob fixture:
+    // docs with corrupt/truncated blobs (doc_id % 5 = 2) drop at
+    // 1b_image_gate, survivors carry (img_format, img_w, img_h) onto
+    // the packed output.
+    QueryDef("q90_corpus_prep", (s, dir) => {
+      // the prep (its eagerly-materialized CC loop + persisted stage
+      // frames) is memoized per (session, sf) — the q78 BM25-index
+      // precedent: the warm-up run pays the one-time funnel build,
+      // timed runs re-execute the six stage counts over the persisted
+      // stage frames. Exactly ONE prep lives per (session, sf), so
+      // repeated invocations never accumulate cache blocks (library
+      // callers get the same guarantee via CorpusPrep.release).
+      val prep = memoized(s, s"q90_prep|$dir") {
+        val d = Tables(s, dir).documents
+        Pipeline.prepareCorpus(d, "doc_id", "text",
+          bench = d.where(col("doc_id") < 40)
+            .select(col("doc_id"), substring(col("text"), 1, 150).as("text")),
+          benchId = "doc_id", benchText = "text",
+          images = Some(imageBlobFixture(d)))
+      }
+      prep.funnel
+    },
+      // q90 (r10 flip, rows-only tail 4 → 3): the funnel's stage COUNTS are
+      // fully SQL-expressible by composing the already-oracled per-stage
+      // replays over the same fixtures — clean (q42's chain, here on the raw
+      // corpus), lang/quality gate (q24/q25 expressions on the CLEANED
+      // text), image gate (the q83 blob fixture is corrupt exactly at
+      // doc_id % 5 = 2; all surviving headers have w,h ≥ 1), exact dedup
+      // (q16's GROUP BY text), near-dup keepers (q19's exact all-pairs
+      // bigram Jaccard — recall-equivalent to the engine's LSH+verify at
+      // the corpus's near-dup J levels, exactly the q19 oracle argument —
+      // then q37's recursive-CTE connected components, keeper = id = min
+      // component), decontamination (q45's 5-shingle containment with the
+      // funnel's bench slice), and packing (every survivor packs exactly
+      // once — PipelineSpec's law — so 5_packed ≡ 4_decontaminated by
+      // count; the per-bin first-fit itself is q46's oracle).
+      oracle = Some("""WITH RECURSIVE cleaned AS (
+          |  SELECT doc_id,
+          |    trim(regexp_replace(
+          |      regexp_replace(
+          |        nfc_normalize(regexp_replace(text, '<[^>]*>', '', 'g')),
+          |        '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z][A-Za-z]+', '<EMAIL>', 'g'),
+          |      '\s+', ' ', 'g')) AS text
+          |  FROM documents
+          |), gated AS (
+          |  SELECT doc_id, text FROM (
+          |    SELECT doc_id, text,
+          |      CASE WHEN regexp_matches(text, '[\x{4e00}-\x{9fff}]') THEN 'zh'
+          |        WHEN contains(p, ' der ') OR contains(p, ' und ') OR contains(p, ' nicht ') THEN 'de'
+          |        WHEN contains(p, ' le ') OR contains(p, ' les ') OR contains(p, ' est ') THEN 'fr'
+          |        WHEN contains(p, ' el ') OR contains(p, ' los ') OR contains(p, ' es ') THEN 'es'
+          |        ELSE 'en' END AS lang,
+          |      least(100, CAST(floor(500.0 * (
+          |          (length(sp) - length(replace(sp, ' the ', ''))) / 5
+          |        + (length(sp) - length(replace(sp, ' a ', ''))) / 3
+          |        + (length(sp) - length(replace(sp, ' and ', ''))) / 5)
+          |        / len(string_split_regex(trim(text), '\s+'))) AS BIGINT)) AS quality
+          |    FROM (SELECT doc_id, text, ' ' || lower(text) || ' ' AS p,
+          |          ' ' || text || ' ' AS sp FROM cleaned))
+          |  WHERE lang = 'en' AND quality >= 10
+          |), img AS (
+          |  SELECT doc_id, text FROM gated WHERE doc_id % 5 <> 2
+          |), x AS (
+          |  SELECT MIN(doc_id) AS doc_id, text FROM img GROUP BY text
+          |), s AS (
+          |  SELECT doc_id, list_distinct(list_transform(
+          |    generate_series(1, greatest(len(toks)-1, 1)),
+          |    i -> CASE WHEN i+1 <= len(toks) THEN toks[i] || ' ' || toks[i+1]
+          |         ELSE toks[i] END)) AS sh
+          |  FROM (SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS toks FROM x)
+          |), p AS (
+          |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
+          |  FROM s a JOIN s b ON a.doc_id < b.doc_id
+          |  WHERE floor(len(list_intersect(a.sh, b.sh)) * 100.0 /
+          |        greatest(len(list_distinct(list_concat(a.sh, b.sh))), 1)) >= 50
+          |), e AS (
+          |  SELECT id_a AS src, id_b AS dst FROM p
+          |  UNION SELECT id_b, id_a FROM p
+          |), reach AS (
+          |  SELECT doc_id AS id, doc_id AS comp FROM x
+          |  UNION
+          |  SELECT e.src, reach.comp FROM e JOIN reach ON e.dst = reach.id
+          |), neardedup AS (
+          |  SELECT x.doc_id, x.text FROM x JOIN (
+          |    SELECT id AS doc_id FROM reach GROUP BY id HAVING id = MIN(comp)
+          |  ) k USING (doc_id)
+          |), bench AS (
+          |  SELECT doc_id, substr(text, 1, 150) AS text FROM documents WHERE doc_id < 40
+          |), cs AS (
+          |  SELECT DISTINCT unnest(sh) AS h FROM (
+          |    SELECT list_distinct(list_transform(
+          |      generate_series(1, greatest(len(toks)-4, 1)),
+          |      i -> list_aggregate(toks[i:least(i+4, len(toks))], 'string_agg', ' '))) AS sh
+          |    FROM (SELECT string_split_regex(trim(lower(text)), '\s+') AS toks FROM bench))
+          |), bs AS (
+          |  SELECT doc_id AS train_id, unnest(sh) AS h FROM (
+          |    SELECT doc_id, list_distinct(list_transform(
+          |      generate_series(1, greatest(len(toks)-4, 1)),
+          |      i -> list_aggregate(toks[i:least(i+4, len(toks))], 'string_agg', ' '))) AS sh
+          |    FROM (SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS toks FROM neardedup))
+          |), contam AS (
+          |  SELECT train_id FROM (
+          |    SELECT train_id, COUNT(*) AS n, COUNT(cs.h) AS n_hit
+          |    FROM bs LEFT JOIN cs USING (h) GROUP BY train_id)
+          |  WHERE floor(n_hit * 100.0 / n) >= 50
+          |), decon AS (
+          |  SELECT doc_id FROM neardedup
+          |  WHERE doc_id NOT IN (SELECT train_id FROM contam)
+          |)
+          |SELECT '0_raw' AS stage, COUNT(*) AS n_docs FROM documents
+          |UNION ALL SELECT '1_gated', COUNT(*) FROM gated
+          |UNION ALL SELECT '1b_image_gate', COUNT(*) FROM img
+          |UNION ALL SELECT '2_exact_dedup', COUNT(*) FROM x
+          |UNION ALL SELECT '3_near_dedup', COUNT(*) FROM neardedup
+          |UNION ALL SELECT '4_decontaminated', COUNT(*) FROM decon
+          |UNION ALL SELECT '5_packed', COUNT(*) FROM decon""".stripMargin)),
+
+    // 26ab. DSIR importance-resampling data selection (Xie et al. 2023):
+    // hashed unigram+bigram bucket LMs fit on the q120 reference split
+    // (target = the hash-deterministic curated-English half) vs the
+    // disjoint crawl half, every document scored by the quantized
+    // importance log-ratio, top-quarter selected by length-normalized
+    // score with a deterministic (score, doc_id) rank — no global row
+    // sort (the q64 offsets shape over the bounded score domain), the
+    // ≤1024-row model always broadcast, kernel-side wraparound hashing.
+    QueryDef("q126_dsir_select", (s, dir) => {
+      val docs = Tables(s, dir).documents
+      val b = Sampling.bucket(col("doc_id"))
+      graft.functions.Dsir.select(
+        docs.where(col("lang") === "en" && b < 5000),
+        docs.where(b >= 5000),
+        docs, "doc_id", "text")
+    },
+      // q126: the oracle refits both hashed-bucket LMs on the same
+      // hash-defined split and replays the scoring — per-token FNV hashes
+      // from the shared fnv CTE, the bigram combine as wrapping HUGEINT
+      // arithmetic re-signed into DuckDB's hash(BIGINT) (bit-identical to
+      // Hashing.murmur64, negatives included), buckets as low-bits mod
+      // 1024 (power-of-two ⇒ signed/unsigned agreement), DECIMAL(18,9)
+      // per-bucket quantization before the subtraction and document sum.
+      oracle = Some(s"""$duckHash64Tokens,
+           |feats AS (
+           |  SELECT doc_id, CAST(th % 1024 AS INTEGER) AS b FROM fnv
+           |  UNION ALL
+           |  SELECT a.doc_id,
+           |    CAST(hash(CAST(${toSigned64(s"((a.th*31 + b.th) % $m64)")}
+           |      AS BIGINT)) % 1024 AS INTEGER)
+           |  FROM fnv a JOIN fnv b ON a.doc_id = b.doc_id AND b.ti = a.ti + 1
+           |), cls AS (
+           |  SELECT doc_id, lang, (hash(doc_id) >> 16) % 10000 AS bkt
+           |  FROM documents
+           |), pc AS (
+           |  SELECT b, COUNT(*) AS cp FROM feats JOIN cls USING (doc_id)
+           |  WHERE lang = 'en' AND bkt < 5000 GROUP BY 1
+           |), qc AS (
+           |  SELECT b, COUNT(*) AS cq FROM feats JOIN cls USING (doc_id)
+           |  WHERE bkt >= 5000 GROUP BY 1
+           |), model AS (
+           |  SELECT COALESCE(pc.b, qc.b) AS b, COALESCE(cp, 0) AS cp,
+           |    COALESCE(cq, 0) AS cq
+           |  FROM pc FULL JOIN qc ON pc.b = qc.b
+           |), tot AS (
+           |  SELECT COALESCE(SUM(cp), 0) AS np, COALESCE(SUM(cq), 0) AS nq
+           |  FROM model
+           |), wt AS (
+           |  SELECT b,
+           |    CAST(ln(CAST(cp + 1 AS DOUBLE) / CAST(np + 1024 AS DOUBLE))
+           |      AS DECIMAL(18,9))
+           |    - CAST(ln(CAST(cq + 1 AS DOUBLE) / CAST(nq + 1024 AS DOUBLE))
+           |      AS DECIMAL(18,9)) AS w
+           |  FROM model CROSS JOIN tot
+           |), w0 AS (
+           |  SELECT CAST(ln(CAST(1 AS DOUBLE) / CAST(np + 1024 AS DOUBLE))
+           |      AS DECIMAL(18,9))
+           |    - CAST(ln(CAST(1 AS DOUBLE) / CAST(nq + 1024 AS DOUBLE))
+           |      AS DECIMAL(18,9)) AS w0
+           |  FROM tot
+           |), sc AS (
+           |  SELECT doc_id, COUNT(*) AS n_feats,
+           |    SUM(COALESCE(w, w0)) AS sum_w
+           |  FROM feats LEFT JOIN wt USING (b) CROSS JOIN w0 GROUP BY 1
+           |), lr AS (
+           |  SELECT doc_id, CAST(n_feats AS BIGINT) AS n_feats,
+           |    CAST(floor(sum_w * 1000) AS BIGINT) AS logratio_x1000
+           |  FROM sc
+           |), avgd AS (
+           |  -- exact BIGINT floor division (positive-mod subtract, the
+           |  -- q127 discipline): floor(1000*sum/n) = floor(floor(1000*sum)/n)
+           |  SELECT doc_id, n_feats, logratio_x1000,
+           |    (logratio_x1000 - ((logratio_x1000 % n_feats + n_feats)
+           |      % n_feats)) // n_feats AS avg_x1000
+           |  FROM lr
+           |), rk AS (
+           |  SELECT *, CAST(ROW_NUMBER() OVER (ORDER BY avg_x1000 DESC,
+           |      doc_id) AS BIGINT) AS dsir_rank,
+           |    COUNT(*) OVER () AS total
+           |  FROM avgd
+           |)
+           |SELECT doc_id, n_feats, logratio_x1000, avg_x1000, dsir_rank,
+           |  dsir_rank * 1000 <= total * 250 AS selected
+           |FROM rk""".stripMargin)),
+
+    // 26ac. KMV/theta corpus-overlap sketch (Bar-Yossef 2002 / the
+    // theta-sketch set algebra): distinct 3-gram estimates for two
+    // corpus halves plus their union/overlap, sketch vs exact side by
+    // side — the audit for the operator a 100 TB deployment runs
+    // sketch-only (estimating cross-corpus contamination without q45's
+    // full co-shuffle). Grams hash by per-token fold so the oracle
+    // replays them with integer arithmetic; one distinct-hash shuffle,
+    // TakeOrdered k-min cut, all sketch algebra on ≤2k-row frames.
+    QueryDef("q127_kmv_overlap", (s, dir) => {
+      val docs = Tables(s, dir).documents
+      val b = Sampling.bucket(col("doc_id"))
+      def grams(df: org.apache.spark.sql.DataFrame) = df.select(
+        explode(F.kgramHashes(F.tokensLower(col("text")), 3)).as("h"))
+      graft.functions.Kmv.overlapReport(
+        grams(docs.where(b < 5000)), grams(docs.where(b >= 5000)), "h")
+    },
+      // q127: full sketch replay — 3-gram hashes from the per-token fnv
+      // relation (wrapping base-31 fold re-signed into hash(BIGINT), the
+      // q126 bigram construction one order higher; short docs emit one
+      // fold over all tokens), k-min sketches by ORDER BY/LIMIT, θ = 2^64
+      // for an unfull sketch. The estimator is engine-portable 63-bit
+      // arithmetic (the r13 HUGEINT `//` / DECIMAL(38,0) surface diverged
+      // under the driver's DuckDB): θ quantized to 2^14 granularity via
+      // an EXACT double divide (θ−θ%2^14 = q·2^14 with q < 2^50 is
+      // exactly representable), then floor(r·2^50/θq) in BIGINT with the
+      // modulus subtracted before `//` so no division rounding can move
+      // the integer quotient. kmv_estimate is BIGINT on both sides.
+      oracle = Some {
+        val comb = "(CASE WHEN nt >= 3 THEN ((((th*31 + t2) % " + m64 +
+          ") * 31 + t3) % " + m64 + ") WHEN nt = 2 THEN ((th*31 + t2) % " +
+          m64 + ") ELSE th END)"
+        s"""$duckHash64Tokens,
+           |g AS (
+           |  SELECT doc_id, ti, th,
+           |    lead(th, 1) OVER (PARTITION BY doc_id ORDER BY ti) AS t2,
+           |    lead(th, 2) OVER (PARTITION BY doc_id ORDER BY ti) AS t3,
+           |    COUNT(*) OVER (PARTITION BY doc_id) AS nt
+           |  FROM fnv
+           |), kg AS (
+           |  SELECT doc_id,
+           |    hash(CAST(${toSigned64(comb)} AS BIGINT)) AS u
+           |  FROM g
+           |  WHERE (nt >= 3 AND ti <= nt - 2) OR (nt < 3 AND ti = 1)
+           |), cls AS (
+           |  SELECT doc_id, (hash(doc_id) >> 16) % 10000 AS bkt
+           |  FROM documents
+           |), mg AS (
+           |  SELECT u, MAX(ina) AS ina, MAX(inb) AS inb FROM (
+           |    SELECT kg.u, CASE WHEN bkt < 5000 THEN 1 ELSE 0 END AS ina,
+           |      CASE WHEN bkt >= 5000 THEN 1 ELSE 0 END AS inb
+           |    FROM kg JOIN cls USING (doc_id)) GROUP BY 1
+           |), exacts AS (
+           |  SELECT SUM(ina) AS ea, SUM(inb) AS eb, COUNT(*) AS eu,
+           |    SUM(ina * inb) AS ei
+           |  FROM mg
+           |), ska AS (SELECT u FROM mg WHERE ina = 1 ORDER BY u LIMIT 512),
+           |skb AS (SELECT u FROM mg WHERE inb = 1 ORDER BY u LIMIT 512),
+           |ta AS (
+           |  SELECT COUNT(*) AS ca, CASE WHEN COUNT(*) < 512
+           |    THEN CAST($m64 AS HUGEINT)
+           |    ELSE CAST(MAX(u) AS HUGEINT) END AS tha
+           |  FROM ska
+           |), tb AS (
+           |  SELECT COUNT(*) AS cb, CASE WHEN COUNT(*) < 512
+           |    THEN CAST($m64 AS HUGEINT)
+           |    ELSE CAST(MAX(u) AS HUGEINT) END AS thb
+           |  FROM skb
+           |), th AS (
+           |  SELECT ca, cb, tha, thb, least(tha, thb) AS thu
+           |  FROM ta CROSS JOIN tb
+           |), thq AS (
+           |  SELECT ca, cb, thu,
+           |    GREATEST(1, CAST(CAST(tha - (tha % 16384) AS DOUBLE)
+           |      / 16384.0 AS BIGINT)) AS qa,
+           |    GREATEST(1, CAST(CAST(thb - (thb % 16384) AS DOUBLE)
+           |      / 16384.0 AS BIGINT)) AS qb,
+           |    GREATEST(1, CAST(CAST(thu - (thu % 16384) AS DOUBLE)
+           |      / 16384.0 AS BIGINT)) AS qu
+           |  FROM th
+           |), mrg AS (
+           |  SELECT u, MAX(ina) AS ina, MAX(inb) AS inb FROM (
+           |    SELECT u, 1 AS ina, 0 AS inb FROM ska
+           |    UNION ALL SELECT u, 0, 1 FROM skb) GROUP BY 1
+           |), ui AS (
+           |  SELECT COUNT(*) AS ru, COALESCE(SUM(ina * inb), 0) AS ri
+           |  FROM mrg CROSS JOIN thq WHERE CAST(u AS HUGEINT) < thu
+           |), nums AS (
+           |  SELECT 'a' AS scope, CAST(CASE WHEN ca < 512 THEN ca
+           |    ELSE 511 END AS BIGINT) * 1125899906842624 AS num, qa AS q
+           |  FROM thq
+           |  UNION ALL
+           |  SELECT 'b', CAST(CASE WHEN cb < 512 THEN cb ELSE 511 END
+           |    AS BIGINT) * 1125899906842624, qb FROM thq
+           |  UNION ALL
+           |  SELECT 'union', CAST(ru AS BIGINT) * 1125899906842624, qu
+           |  FROM ui CROSS JOIN thq
+           |  UNION ALL
+           |  SELECT 'overlap', CAST(ri AS BIGINT) * 1125899906842624, qu
+           |  FROM ui CROSS JOIN thq
+           |), est AS (
+           |  SELECT scope, (num - (num % q)) // q AS kmv_estimate
+           |  FROM nums
+           |), exrows AS (
+           |  SELECT 'a' AS scope, CAST(ea AS BIGINT) AS exact_distinct
+           |  FROM exacts
+           |  UNION ALL SELECT 'b', CAST(eb AS BIGINT) FROM exacts
+           |  UNION ALL SELECT 'union', CAST(eu AS BIGINT) FROM exacts
+           |  UNION ALL SELECT 'overlap', CAST(ei AS BIGINT) FROM exacts
+           |)
+           |SELECT est.scope, kmv_estimate, exact_distinct
+           |FROM est JOIN exrows USING (scope)""".stripMargin
+      }),
+
+    // 26ad-b. HyperLogLog per-language vocabulary census — the sketch
+    // you run at 100 TB where q33's exact distinct cannot: 64 MAX-merged
+    // registers per group, trailing-zero ρ capped at 32, the estimate
+    // as one exact integer floor division (no IEEE ln/pow — see
+    // functions.Hll). `exact_distinct`/`n_tokens` are the oracle-SF
+    // audit columns a production run drops. One (lang, reg) shuffle
+    // where the map-side combiner collapses everything to ≤64 rows per
+    // group; the audit aggregate is the only distinct pass.
+    QueryDef("q159_hll_distinct", (s, dir) => {
+      val docs = Tables(s, dir).documents
+      val toks = docs.select(col("lang"),
+        explode(F.tokensLower(col("text"))).as("tok"))
+      val sk = graft.functions.Hll.sketch(
+        toks.select(col("lang"), F.hash64(col("tok")).as("h")),
+        Seq("lang"), "h")
+      val audit = toks.groupBy(col("lang")).agg(
+        count(lit(1)).as("n_tokens"),
+        countDistinct(col("tok")).as("exact_distinct"))
+      sk.join(audit, Seq("lang"))
+        .select(col("lang"), col("n_tokens"), col("exact_distinct"),
+          col("v_zero"), col("s_harmonic"), col("est_hll"),
+          col("estimate"))
+    },
+      // q159: the full HLL replay — per-token FNV+splitmix hashes from
+      // the recursive CTE (th is unsigned HUGEINT in [0,2^64), so
+      // register = th % 64 == the engine's h & 63 and rest = th // 64 ==
+      // h >>> 6), trailing-zero ρ via the same bit algebra, MAX-merged
+      // registers, the exact harmonic sum with absent registers at 2^32,
+      // and the single integer floor division. All columns BIGINT on
+      // both sides.
+      oracle = Some(s"""$duckHash64Tokens,
+           |regs AS (
+           |  SELECT d.lang, CAST(f.th % 64 AS BIGINT) AS reg,
+           |    CAST(f.th // 64 AS BIGINT) AS rest
+           |  FROM fnv f JOIN documents d USING (doc_id)
+           |),
+           |rh AS (
+           |  SELECT lang, reg,
+           |    CASE WHEN rest = 0 THEN 32
+           |      ELSE LEAST(bit_count((rest & -rest) - 1) + 1, 32)
+           |    END AS rho
+           |  FROM regs
+           |),
+           |mx AS (SELECT lang, reg, MAX(rho) AS m FROM rh GROUP BY 1, 2),
+           |sk AS (
+           |  SELECT lang,
+           |    SUM(CAST(1 AS BIGINT) << CAST(32 - m AS INTEGER)) AS sp,
+           |    COUNT(*) AS np
+           |  FROM mx GROUP BY 1
+           |),
+           |aud AS (
+           |  SELECT d.lang, COUNT(*) AS n_tokens,
+           |    COUNT(DISTINCT t.tok) AS exact_distinct
+           |  FROM toks t JOIN documents d USING (doc_id) GROUP BY 1
+           |),
+           |est AS (
+           |  SELECT s.lang, a.n_tokens, a.exact_distinct,
+           |    CAST(64 - s.np AS BIGINT) AS v_zero,
+           |    CAST(s.sp + (64 - s.np) * 4294967296 AS BIGINT)
+           |      AS s_harmonic,
+           |    CAST(${graft.functions.Hll.EstNumerator}
+           |      // (10000 * (s.sp + (64 - s.np) * 4294967296)) AS BIGINT)
+           |      AS est_hll
+           |  FROM sk s JOIN aud a USING (lang)
+           |)
+           |SELECT *,
+           |  CASE WHEN est_hll <= ${graft.functions.Hll.SmallRange}
+           |      AND v_zero > 0
+           |    THEN ([${graft.functions.Hll.LinearTable.mkString(", ")}])
+           |      [CAST(v_zero AS INTEGER)]
+           |    ELSE est_hll END AS estimate
+           |FROM est""".stripMargin)),
+
+    // 26ac-c. the same census at CENSUS precision (VERDICT r16
+    // next-task 7): p = 12 → 4096 registers, ~1.6% σ — the precision a
+    // real 100 TB vocabulary census wants; rho caps at C(12) = 26 so
+    // every estimator term stays a 63-bit BIGINT, and the 4096-entry
+    // linear-counting table is still a driver-bounded literal in both
+    // plans. Same one (group, reg) map-side-combined shuffle as q159.
+    QueryDef("q168_hll_p12", (s, dir) => {
+      val docs = Tables(s, dir).documents
+      val toks = docs.select(col("lang"),
+        explode(F.tokensLower(col("text"))).as("tok"))
+      val sk = graft.functions.Hll.sketch(
+        toks.select(col("lang"), F.hash64(col("tok")).as("h")),
+        Seq("lang"), "h", p = 12)
+      val audit = toks.groupBy(col("lang")).agg(
+        count(lit(1)).as("n_tokens"),
+        countDistinct(col("tok")).as("exact_distinct"))
+      sk.join(audit, Seq("lang"))
+        .select(col("lang"), col("n_tokens"), col("exact_distinct"),
+          col("v_zero"), col("s_harmonic"), col("est_hll"),
+          col("estimate"))
+    },
+      // q168: the q159 replay at p = 12 — 4096 registers, rho cap 26,
+      // the alphaE4(12) numerator, the 4096-entry driver-literal linear
+      // table; every term BIGINT (the same proof as the engine's).
+      oracle = Some(s"""$duckHash64Tokens,
+           |regs AS (
+           |  SELECT d.lang, CAST(f.th % 4096 AS BIGINT) AS reg,
+           |    CAST(f.th // 4096 AS BIGINT) AS rest
+           |  FROM fnv f JOIN documents d USING (doc_id)
+           |),
+           |rh AS (
+           |  SELECT lang, reg,
+           |    CASE WHEN rest = 0 THEN 26
+           |      ELSE LEAST(bit_count((rest & -rest) - 1) + 1, 26)
+           |    END AS rho
+           |  FROM regs
+           |),
+           |mx AS (SELECT lang, reg, MAX(rho) AS m FROM rh GROUP BY 1, 2),
+           |sk AS (
+           |  SELECT lang,
+           |    SUM(CAST(1 AS BIGINT) << CAST(26 - m AS INTEGER)) AS sp,
+           |    COUNT(*) AS np
+           |  FROM mx GROUP BY 1
+           |),
+           |aud AS (
+           |  SELECT d.lang, COUNT(*) AS n_tokens,
+           |    COUNT(DISTINCT t.tok) AS exact_distinct
+           |  FROM toks t JOIN documents d USING (doc_id) GROUP BY 1
+           |),
+           |est AS (
+           |  SELECT s.lang, a.n_tokens, a.exact_distinct,
+           |    CAST(4096 - s.np AS BIGINT) AS v_zero,
+           |    CAST(s.sp + (4096 - s.np) * 67108864 AS BIGINT)
+           |      AS s_harmonic,
+           |    CAST(${graft.functions.Hll.estNumerator(12)}
+           |      // (10000 * (s.sp + (4096 - s.np) * 67108864)) AS BIGINT)
+           |      AS est_hll
+           |  FROM sk s JOIN aud a USING (lang)
+           |)
+           |SELECT *,
+           |  CASE WHEN est_hll <= ${graft.functions.Hll.smallRange(12)}
+           |      AND v_zero > 0
+           |    THEN ([${graft.functions.Hll.linearTable(12).mkString(", ")}])
+           |      [CAST(v_zero AS INTEGER)]
+           |    ELSE est_hll END AS estimate
+           |FROM est""".stripMargin)),
+
+    // 26am. corpus-concentration Lorenz report: per-source token mass
+    // sorted ascending (the Lorenz axis), folded into 10 exact ntile
+    // bins — group count, mass, mass share, cumulative share at the
+    // bin edge. The global rank + cumulative prefix build via
+    // etl.Prefix (range-partition + broadcast offsets — the PageRank/
+    // Eval mold, NO single-partition window); shares by the staged
+    // ⌊W/1e6⌋+1 divisor so nothing outgrows the token total. The
+    // mixing gauge read before domain caps (q136) / temperature (q117).
+    QueryDef("q170_lorenz_sources", (s, dir) =>
+      graft.etl.CorpusStats.lorenzReport(
+        Tables(s, dir).documents.select(col("source"),
+          TextStats.tokenCount(col("text")).as("w")),
+        "source", "w", bins = 10),
+      // q170: the Lorenz replay — per-source token mass, the global rank
+      // + exclusive cumulative (one window in SQL; the engine builds it
+      // distributedly via Prefix, byte-identical), the q160 ntile closed
+      // form, staged-divisor shares. All BIGINT.
+      oracle = Some("""WITH per AS (
+          |  SELECT source AS g,
+          |    CAST(SUM(len(string_split_regex(trim(text), '\s+')))
+          |      AS BIGINT) AS w
+          |  FROM documents GROUP BY 1
+          |),
+          |rk AS (
+          |  SELECT g, w,
+          |    row_number() OVER (ORDER BY w, g) AS idx,
+          |    CAST(COALESCE(SUM(w) OVER (ORDER BY w, g
+          |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+          |      AS BIGINT) AS cum_w
+          |  FROM per
+          |),
+          |tot AS (
+          |  SELECT COUNT(*) AS total, CAST(SUM(w) AS BIGINT) AS wt
+          |  FROM per
+          |),
+          |bnd AS (
+          |  SELECT rk.*, t.total // 10 AS qq, t.total % 10 AS rr,
+          |    (t.wt - t.wt % 1000000) // 1000000 + 1 AS sdiv
+          |  FROM rk CROSS JOIN tot t
+          |),
+          |bn AS (
+          |  SELECT *, CASE WHEN qq = 0 THEN idx
+          |    WHEN idx <= (qq + 1) * rr THEN (idx + qq) // (qq + 1)
+          |    ELSE rr + (idx - (qq + 1) * rr + qq - 1) // qq END AS bin
+          |  FROM bnd
+          |)
+          |SELECT CAST(bin AS BIGINT) AS bin, COUNT(*) AS n_groups,
+          |  CAST(SUM(w) AS BIGINT) AS tokens,
+          |  (CAST(SUM(w) AS BIGINT) - CAST(SUM(w) AS BIGINT) % MIN(sdiv))
+          |    // MIN(sdiv) AS share_x1e6,
+          |  (MAX(cum_w + w) - MAX(cum_w + w) % MIN(sdiv)) // MIN(sdiv)
+          |    AS cum_share_x1e6
+          |FROM bn GROUP BY 1""".stripMargin)),
+
+    // 14b. exact corpus-wide quantiles WITHOUT a global sort (the
+    // sizing gauge for chunking budgets and length filters): type-1
+    // quantile values at p50/p90/p99 of the per-doc token count, read
+    // off the etl.Prefix distributed rank (range-partition + broadcast
+    // offsets — no single-partition window, no second pass; the
+    // quantile SELECT is a broadcast semi-filter on idx). Complements
+    // q74 (per-GROUP median via partitioned windows) with the
+    // whole-corpus report that window cannot scale to.
+    QueryDef("q171_token_quantiles", (s, dir) =>
+      GroupStats.globalQuantiles(
+        Tables(s, dir).documents.select(col("doc_id"),
+          TextStats.tokenCount(col("text")).as("w")),
+        col("w"), col("doc_id")),
+      // q171: the exact-quantile replay — one ROW_NUMBER window in SQL
+      // (the engine builds the rank distributedly via Prefix,
+      // byte-identical), ceil targets by integer arithmetic.
+      oracle = Some("""WITH per AS (
+          |  SELECT doc_id,
+          |    CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT)
+          |      AS v
+          |  FROM documents
+          |),
+          |rk AS (
+          |  SELECT v, doc_id,
+          |    row_number() OVER (ORDER BY v, doc_id) AS idx
+          |  FROM per
+          |),
+          |tot AS (SELECT COUNT(*) AS n FROM per),
+          |tg AS (
+          |  SELECT CAST(p.pct AS BIGINT) AS pct,
+          |    (p.pct * t.n + 99) // 100 AS idx, t.n AS n
+          |  FROM (VALUES (50), (90), (99)) p(pct) CROSS JOIN tot t
+          |)
+          |SELECT tg.pct, tg.idx, rk.v, tg.n AS n_rows
+          |FROM rk JOIN tg USING (idx)""".stripMargin)),
+
+    // 23c. unigram-LM (SentencePiece-style) Viterbi ENCODE under the
+    // fixed piece table (VERDICT r17 next-task 5 — the tokenizer rung
+    // above BPE that public multilingual pipelines default to): exact
+    // max-score segmentation by per-word DP, TYPE-level (the distinct
+    // [a-z]{1,16} words — a vocabulary-bounded frame at any corpus
+    // scale; per-token work never exists). Kernel is one codegen
+    // StaticInvoke with the table as a spec literal; ties prefer the
+    // longest final piece. FULL oracle: the recursive-CTE DP replay
+    // (fixed-width dp + backtrack state, one iteration per character).
+    QueryDef("q172_unigram_encode", (s, dir) => {
+      val seg = graft.functions.Unigram
+        .segment(col("word"), fixedUnigramPieces)
+      Tables(s, dir).documents
+        .select(explode(split(trim(lower(col("text"))), "\\s+"))
+          .as("word"))
+        .where(col("word").rlike("^[a-z]{1,16}$"))
+        .distinct()
+        .select(col("word"), seg.as("seg"),
+          graft.functions.Unigram
+            .scoreMilli(col("word"), fixedUnigramPieces).as("score_x1e3"))
+        .withColumn("n_pieces",
+          (length(col("seg")) -
+            length(regexp_replace(col("seg"), "\\|", "")) + 1)
+            .cast("long"))
+        .select(col("word"), col("n_pieces"), col("score_x1e3"),
+          col("seg"))
+    },
+      // q172: the recursive-CTE Viterbi replay (generated from the SAME
+      // Scala piece Seq the kernel ships — one source of truth); q173/
+      // q174 reuse it and add the frequency weighting / per-lang rollup.
+      oracle = Some(s"""WITH RECURSIVE $unigramDpCte
+           |SELECT word, n_pieces, score_x1e3, seg FROM ufin""".stripMargin)),
+
+    // 23d. ONE oracled hard-EM step of the unigram trainer (the q84c
+    // isolate-one-step precedent — the full Viterbi-EM loop is
+    // spec-gated in UnigramSpec like BPE's q47): segment the word
+    // TYPES under the fixed table, weight pieces by corpus frequency,
+    // re-estimate p(piece) as the exact integer floor. The piece-count
+    // frame is vocabulary-bounded (the SemDedup codebook posture).
+    QueryDef("q173_unigram_em", (s, dir) => {
+      val words = Tables(s, dir).documents
+        .select(explode(split(trim(lower(col("text"))), "\\s+"))
+          .as("word"))
+        .where(col("word").rlike("^[a-z]{1,16}$"))
+        .groupBy(col("word")).agg(count(lit(1)).as("f"))
+      graft.functions.Unigram.emStep(words, fixedUnigramPieces)
+    },
+      oracle = Some(s"""WITH RECURSIVE $unigramDpCte,
+           |tok AS (
+           |  SELECT unnest(string_split_regex(trim(lower(text)), '\\s+'))
+           |    AS word
+           |  FROM documents
+           |),
+           |freq AS (
+           |  SELECT word, CAST(COUNT(*) AS BIGINT) AS f FROM tok
+           |  WHERE regexp_full_match(word, '[a-z]{1,16}') GROUP BY 1
+           |),
+           |ex AS (
+           |  SELECT f.f, unnest(string_split(u.seg, '|')) AS piece
+           |  FROM ufin u JOIN freq f USING (word)
+           |),
+           |cts AS (
+           |  SELECT piece, CAST(SUM(f) AS BIGINT) AS cnt FROM ex GROUP BY 1
+           |),
+           |utot AS (SELECT CAST(SUM(cnt) AS BIGINT) AS t FROM cts)
+           |SELECT piece, cnt,
+           |  CAST((1000000 * cnt) // t AS BIGINT) AS p_x1e6
+           |FROM cts CROSS JOIN utot""".stripMargin)),
+
+    // 23e. unigram fertility equity audit — q122's Rust et al. 2021
+    // gauge for the unigram tokenizer (VERDICT r17 task 5's third leg):
+    // tokens-per-word and chars-per-piece per language under the q172
+    // fixed table. Segment the distinct types once, broadcast-join the
+    // per-type piece count back onto (lang, word) frequencies, one
+    // bounded-dim groupBy.
+    QueryDef("q174_unigram_fertility", (s, dir) => {
+      val wl = Tables(s, dir).documents
+        .select(col("lang"),
+          explode(split(trim(lower(col("text"))), "\\s+")).as("word"))
+        .where(col("word").rlike("^[a-z]{1,16}$"))
+        .groupBy(col("lang"), col("word")).agg(count(lit(1)).as("f"))
+      val seg = graft.functions.Unigram
+        .segment(col("word"), fixedUnigramPieces)
+      val types = wl.select(col("word")).distinct()
+        .select(col("word"),
+          (length(seg) - length(regexp_replace(seg, "\\|", "")) + 1)
+            .cast("long").as("np"))
+      wl.join(broadcast(types), Seq("word"))
+        .groupBy(col("lang"))
+        .agg(sum(col("f")).as("n_words"),
+          sum(col("f") * col("np")).as("n_pieces"),
+          sum(col("f") * length(col("word")).cast("long")).as("n_chars"))
+        .select(col("lang"), col("n_words"), col("n_pieces"),
+          col("n_chars"),
+          expr("(1000000 * n_pieces) div n_words").as("fertility_x1e6"),
+          expr("(1000000 * n_chars) div n_pieces")
+            .as("chars_per_piece_x1e6"))
+    },
+      oracle = Some(s"""WITH RECURSIVE $unigramDpCte,
+           |tokl AS (
+           |  SELECT lang,
+           |    unnest(string_split_regex(trim(lower(text)), '\\s+')) AS word
+           |  FROM documents
+           |),
+           |freq AS (
+           |  SELECT lang, word, CAST(COUNT(*) AS BIGINT) AS f FROM tokl
+           |  WHERE regexp_full_match(word, '[a-z]{1,16}') GROUP BY 1, 2
+           |)
+           |SELECT f.lang,
+           |  CAST(SUM(f.f) AS BIGINT) AS n_words,
+           |  CAST(SUM(f.f * u.n_pieces) AS BIGINT) AS n_pieces,
+           |  CAST(SUM(f.f * length(f.word)) AS BIGINT) AS n_chars,
+           |  CAST((1000000 * SUM(f.f * u.n_pieces)) // SUM(f.f) AS BIGINT)
+           |    AS fertility_x1e6,
+           |  CAST((1000000 * SUM(f.f * length(f.word)))
+           |    // SUM(f.f * u.n_pieces) AS BIGINT) AS chars_per_piece_x1e6
+           |FROM freq f JOIN ufin u USING (word)
+           |GROUP BY 1""".stripMargin)),
+
+    // 26ae. Unicode script-mix audit — the homoglyph/script-confusion
+    // spam signal (mixed-script text is the classic phishing shape, and
+    // a corpus doc whose script disagrees with its claimed language is
+    // mislabeled): per-script letter counts over literal codepoint-range
+    // classes (identical pattern BYTES on both engines — no \\u escape
+    // dialect to disagree on), deterministic dominant-script argmax in
+    // fixed class order, and an integer cross-multiplied minority
+    // threshold (a second script ≥5% of letters flags mixed — planted
+    // one-word homoglyph tails stay under it). Map-side regexp_count
+    // passes, zero shuffles.
+    QueryDef("q131_script_mix", (s, dir) => {
+      val id = col("doc_id")
+      val txt = concat(col("text"),
+        when(id % 9 === 2, lit(" Пример текста для проверки"))
+          .when(id % 9 === 3, lit(" 這是一個測試樣本文字"))
+          .when(id % 9 === 4, lit(" δείγμα κειμένου εδώ"))
+          .when(id % 9 === 5, lit(" عينة نص للاختبار"))
+          .when(id % 9 === 6, lit(" Пx")) // tiny homoglyph tail: < 5%
+          .otherwise(lit("")))
+      def cnt(cls: String) =
+        regexp_count(txt, lit(s"[$cls]")).cast("long")
+      val latin = cnt("A-Za-zÀ-ÖØ-öø-ɏ")
+      val cyr = cnt("Ѐ-ӿ")
+      val cjk = cnt("一-鿿ぁ-ヿ")
+      val greek = cnt("Ͱ-Ͽ")
+      val arabic = cnt("؀-ۿ")
+      val letters = regexp_count(txt, lit("\\p{L}")).cast("long")
+      val other = letters - latin - cyr - cjk - greek - arabic
+      val mx = greatest(latin, cyr, cjk, greek, arabic, other)
+      val dominant = when(letters === 0, lit("none"))
+        .when(latin === mx, lit("latin")).when(cyr === mx, lit("cyrillic"))
+        .when(cjk === mx, lit("cjk")).when(greek === mx, lit("greek"))
+        .when(arabic === mx, lit("arabic")).otherwise(lit("other"))
+      Tables(s, dir).documents
+        .select(id, latin.as("n_latin"), cyr.as("n_cyrillic"),
+          cjk.as("n_cjk"), greek.as("n_greek"), arabic.as("n_arabic"),
+          other.as("n_other"), dominant.as("dominant_script"),
+          // a NON-dominant script holding >= 5% of letters
+          (letters > 0 && (
+            (dominant =!= "latin" && latin * 20 >= letters && latin > 0) ||
+            (dominant =!= "cyrillic" && cyr * 20 >= letters && cyr > 0) ||
+            (dominant =!= "cjk" && cjk * 20 >= letters && cjk > 0) ||
+            (dominant =!= "greek" && greek * 20 >= letters && greek > 0) ||
+            (dominant =!= "arabic" && arabic * 20 >= letters && arabic > 0) ||
+            (dominant =!= "other" && other * 20 >= letters && other > 0)))
+            .as("mixed_script"))
+    },
+      // q131: both engines genuinely count — the script classes are
+      // literal codepoint ranges (identical pattern bytes, no escape
+      // dialect), counts via match-removal length deltas, then the same
+      // fixed-order argmax and 5% integer threshold
+      oracle = Some("""WITH t AS (
+          |  SELECT doc_id, text || CASE doc_id % 9
+          |    WHEN 2 THEN ' Пример текста для проверки'
+          |    WHEN 3 THEN ' 這是一個測試樣本文字'
+          |    WHEN 4 THEN ' δείγμα κειμένου εδώ'
+          |    WHEN 5 THEN ' عينة نص للاختبار'
+          |    WHEN 6 THEN ' Пx'
+          |    ELSE '' END AS txt
+          |  FROM documents
+          |), c AS (
+          |  SELECT doc_id,
+          |    length(txt) - length(regexp_replace(txt,
+          |      '[A-Za-zÀ-ÖØ-öø-ɏ]', '', 'g')) AS n_latin,
+          |    length(txt) - length(regexp_replace(txt, '[Ѐ-ӿ]', '', 'g'))
+          |      AS n_cyrillic,
+          |    length(txt) - length(regexp_replace(txt, '[一-鿿ぁ-ヿ]', '',
+          |      'g')) AS n_cjk,
+          |    length(txt) - length(regexp_replace(txt, '[Ͱ-Ͽ]', '', 'g'))
+          |      AS n_greek,
+          |    length(txt) - length(regexp_replace(txt, '[؀-ۿ]', '', 'g'))
+          |      AS n_arabic,
+          |    length(txt) - length(regexp_replace(txt, '\p{L}', '', 'g'))
+          |      AS letters
+          |  FROM t
+          |), d AS (
+          |  SELECT doc_id, n_latin, n_cyrillic, n_cjk, n_greek, n_arabic,
+          |    letters - n_latin - n_cyrillic - n_cjk - n_greek - n_arabic
+          |      AS n_other, letters
+          |  FROM c
+          |), e AS (
+          |  SELECT *, greatest(n_latin, n_cyrillic, n_cjk, n_greek,
+          |      n_arabic, n_other) AS mx,
+          |    CASE WHEN letters = 0 THEN 'none'
+          |      WHEN n_latin = greatest(n_latin, n_cyrillic, n_cjk,
+          |        n_greek, n_arabic, n_other) THEN 'latin'
+          |      WHEN n_cyrillic = greatest(n_latin, n_cyrillic, n_cjk,
+          |        n_greek, n_arabic, n_other) THEN 'cyrillic'
+          |      WHEN n_cjk = greatest(n_latin, n_cyrillic, n_cjk,
+          |        n_greek, n_arabic, n_other) THEN 'cjk'
+          |      WHEN n_greek = greatest(n_latin, n_cyrillic, n_cjk,
+          |        n_greek, n_arabic, n_other) THEN 'greek'
+          |      WHEN n_arabic = greatest(n_latin, n_cyrillic, n_cjk,
+          |        n_greek, n_arabic, n_other) THEN 'arabic'
+          |      ELSE 'other' END AS dominant_script
+          |  FROM d
+          |)
+          |SELECT doc_id, CAST(n_latin AS BIGINT) AS n_latin,
+          |  CAST(n_cyrillic AS BIGINT) AS n_cyrillic,
+          |  CAST(n_cjk AS BIGINT) AS n_cjk,
+          |  CAST(n_greek AS BIGINT) AS n_greek,
+          |  CAST(n_arabic AS BIGINT) AS n_arabic,
+          |  CAST(n_other AS BIGINT) AS n_other, dominant_script,
+          |  letters > 0 AND (
+          |    (dominant_script <> 'latin' AND n_latin * 20 >= letters
+          |      AND n_latin > 0) OR
+          |    (dominant_script <> 'cyrillic' AND n_cyrillic * 20 >= letters
+          |      AND n_cyrillic > 0) OR
+          |    (dominant_script <> 'cjk' AND n_cjk * 20 >= letters
+          |      AND n_cjk > 0) OR
+          |    (dominant_script <> 'greek' AND n_greek * 20 >= letters
+          |      AND n_greek > 0) OR
+          |    (dominant_script <> 'arabic' AND n_arabic * 20 >= letters
+          |      AND n_arabic > 0) OR
+          |    (dominant_script <> 'other' AND n_other * 20 >= letters
+          |      AND n_other > 0)) AS mixed_script
+          |FROM e""".stripMargin)),
+
+    // 26af. NFC normalization audit (UAX #15): canonically-equivalent
+    // but byte-different text (precomposed é vs e + combining acute)
+    // defeats every exact-dedup/fingerprint hash unless the corpus is
+    // normalized first — this measures how much of the corpus is
+    // denormalized, the decision input for the normalization pass.
+    // Planted combining-mark tails (and a precomposed control that must
+    // NOT flag) ride the JDK's UAX#15 kernel; DuckDB's nfc_normalize
+    // implements the same tables, making the audit full-oracle.
+    // Map-side, zero shuffles.
+    QueryDef("q132_nfc_audit", (s, dir) => {
+      val id = col("doc_id")
+      val txt = concat(col("text"),
+        when(id % 5 === 1, lit(" cafe\u0301")) // e + combining acute
+          .when(id % 5 === 2, lit(" A\u030Angstro\u0308m")) // combining ring + diaeresis
+          .when(id % 5 === 3, lit(" caf\u00E9")) // precomposed: already NFC
+          .otherwise(lit("")))
+      val nfc = F.nfc(txt)
+      Tables(s, dir).documents.select(id,
+        (txt === nfc).as("nfc_equal"),
+        length(txt).cast("long").as("len_raw"),
+        length(nfc).cast("long").as("len_nfc"))
+    },
+      // q132: both engines genuinely normalize — DuckDB's nfc_normalize
+      // and the JDK kernel implement the same UAX#15 tables; combining
+      // marks are planted via chr() so no source-encoding mangling can
+      // silently change the fixture
+      oracle = Some("""WITH t AS (
+          |  SELECT doc_id, text || CASE doc_id % 5
+          |    WHEN 1 THEN ' cafe' || chr(769)
+          |    WHEN 2 THEN ' A' || chr(778) || 'ngstro' || chr(776) || 'm'
+          |    WHEN 3 THEN ' café'
+          |    ELSE '' END AS txt
+          |  FROM documents
+          |)
+          |SELECT doc_id, txt = nfc_normalize(txt) AS nfc_equal,
+          |  CAST(length(txt) AS BIGINT) AS len_raw,
+          |  CAST(length(nfc_normalize(txt)) AS BIGINT) AS len_nfc
+          |FROM t""".stripMargin)),
+
+    // 26w2. stupid-backoff trigram LM scoring (Brants 2007 — the
+    // published web-scale rung above q114's bigram filter): relative
+    // frequencies with α=0.4 backoff through tri→bi→uni, add-one at the
+    // unigram floor only (documented totality deviation). Trained on
+    // the same deterministic q41 split as q114; scores rank, they are
+    // not probabilities. Per-level hit counters are emitted so the
+    // filter's backoff mix is auditable without a re-scan. Three
+    // gram-keyed counting shuffles + gram-keyed score joins (AQE skew
+    // split), one-row totals broadcast; per-position ln quantized to
+    // DECIMAL(18,9) before the sum and the per-token average by exact
+    // BIGINT floor division.
+    QueryDef("q146_stupid_backoff", (s, dir) => {
+      val docs = Tables(s, dir).documents
+      graft.functions.Perplexity.stupidBackoffScore(
+        Sampling.sample(docs, "doc_id", 9000), docs, "doc_id", "text")
+    },
+      // q146: the oracle refits all three gram tables on the same
+      // hash-defined train split and replays the branch ladder — string
+      // gram keys (tokens cannot contain whitespace, so ' '-joined keys
+      // are unambiguous; the q114 split_part posture), the same IEEE
+      // branch expressions over exact BIGINT counts, DECIMAL(18,9)
+      // per-position quantization, positive-mod BIGINT floor average
+      oracle = Some("""WITH d AS (
+          |  SELECT doc_id,
+          |    string_split_regex(trim(lower(text)), '\s+') AS l
+          |  FROM documents
+          |), tr AS (
+          |  SELECT l FROM d WHERE (hash(doc_id) >> 16) % 10000 < 9000
+          |), c3 AS (
+          |  SELECT tg, COUNT(*) AS c3 FROM (
+          |    SELECT unnest(list_transform(range(1, len(l) - 1),
+          |      i -> l[i] || ' ' || l[i+1] || ' ' || l[i+2])) AS tg
+          |    FROM tr) GROUP BY 1
+          |), c2 AS (
+          |  SELECT bg, COUNT(*) AS c2 FROM (
+          |    SELECT unnest(list_transform(range(1, len(l)),
+          |      i -> l[i] || ' ' || l[i+1])) AS bg
+          |    FROM tr) GROUP BY 1
+          |), c1 AS (
+          |  SELECT w, COUNT(*) AS c1 FROM (
+          |    SELECT unnest(l) AS w FROM tr) GROUP BY 1
+          |), tot AS (
+          |  SELECT CAST(SUM(c1) AS BIGINT) AS n,
+          |    CAST(COUNT(*) AS BIGINT) AS v
+          |  FROM c1
+          |), sb AS (
+          |  SELECT doc_id, unnest(list_transform(range(1, len(l) - 1),
+          |    i -> l[i] || ' ' || l[i+1] || ' ' || l[i+2])) AS tg
+          |  FROM d
+          |), j AS (
+          |  SELECT doc_id,
+          |    CASE WHEN c3.c3 IS NOT NULL THEN 0
+          |         WHEN bg.c2 IS NOT NULL THEN 1 ELSE 2 END AS lvl,
+          |    CAST(-ln(CASE
+          |      WHEN c3.c3 IS NOT NULL
+          |        THEN CAST(c3.c3 AS DOUBLE) / CAST(ctx.c2 AS DOUBLE)
+          |      WHEN bg.c2 IS NOT NULL
+          |        THEN 0.4 * CAST(bg.c2 AS DOUBLE)
+          |          / CAST(w2c.c1 AS DOUBLE)
+          |      ELSE 0.16 * CAST(COALESCE(w3c.c1, 0) + 1 AS DOUBLE)
+          |        / CAST(n + v AS DOUBLE)
+          |    END) AS DECIMAL(18,9)) AS nll
+          |  FROM sb
+          |  LEFT JOIN c3 ON sb.tg = c3.tg
+          |  LEFT JOIN c2 ctx ON split_part(sb.tg, ' ', 1) || ' '
+          |    || split_part(sb.tg, ' ', 2) = ctx.bg
+          |  LEFT JOIN c2 bg ON split_part(sb.tg, ' ', 2) || ' '
+          |    || split_part(sb.tg, ' ', 3) = bg.bg
+          |  LEFT JOIN c1 w2c ON split_part(sb.tg, ' ', 2) = w2c.w
+          |  LEFT JOIN c1 w3c ON split_part(sb.tg, ' ', 3) = w3c.w
+          |  CROSS JOIN tot
+          |), g AS (
+          |  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_trigrams,
+          |    CAST(SUM(CASE WHEN lvl = 0 THEN 1 ELSE 0 END) AS BIGINT)
+          |      AS n_tri_hits,
+          |    CAST(SUM(CASE WHEN lvl = 1 THEN 1 ELSE 0 END) AS BIGINT)
+          |      AS n_bi_backoffs,
+          |    CAST(SUM(CASE WHEN lvl = 2 THEN 1 ELSE 0 END) AS BIGINT)
+          |      AS n_uni_backoffs,
+          |    CAST(floor(SUM(nll) * 1000) AS BIGINT) AS sum_nll_x1000
+          |  FROM j GROUP BY 1
+          |)
+          |SELECT doc_id, n_trigrams, n_tri_hits, n_bi_backoffs,
+          |  n_uni_backoffs, sum_nll_x1000,
+          |  (sum_nll_x1000 - ((sum_nll_x1000 % n_trigrams + n_trigrams)
+          |    % n_trigrams)) // n_trigrams AS avg_nll_x1000
+          |FROM g""".stripMargin)),
+
+    // 26al. vocabulary-growth (Heaps-law) audit — the sizing input for
+    // vocab budgets and Heaps-bounded broadcast decisions (see
+    // QualityClassifier): cumulative tokens + cumulative distinct terms
+    // (by first occurrence) at ten doc-id-prefix checkpoints, plus the
+    // log-log least-squares slope as an integer micro-β both engines
+    // compute bit-equal (milli-quantized lns, BIGINT cross-multiplied
+    // regression, pmod-floor division). ONE wide shuffle — min doc id
+    // per term; everything after runs on the 10-row checkpoint dim.
+    // (the synthetic corpus has a CLOSED wordlist — vocab saturates in
+    // bucket 1 and β degenerates to 0 — so the fixture appends one
+    // doc-unique token per doc, the id/timestamp-like open-class tail
+    // every real corpus has; β then lands mid-curve and the regression
+    // arithmetic is genuinely discriminated)
+    QueryDef("q140_heaps_audit", (s, dir) =>
+      CorpusStats.heapsGrowth(
+        Tables(s, dir).documents.select(col("doc_id"),
+          concat(col("text"), lit(" u"), col("doc_id").cast("string"))
+            .as("text")),
+        "doc_id", "text"),
+      // q140: both engines genuinely measure — same tokenization, same
+      // min-per-term first occurrences, same checkpoint arithmetic, same
+      // milli-quantized ln regression in pure integer arithmetic
+      oracle = Some("""WITH d AS (
+          |  SELECT doc_id, text || ' u' || doc_id AS text FROM documents
+          |),
+          |mx AS (SELECT max(doc_id) + 1 AS nd FROM d),
+          |tok AS (
+          |  SELECT doc_id, unnest(string_split_regex(trim(lower(text)),
+          |    '\s+')) AS term
+          |  FROM d
+          |),
+          |fd AS (SELECT term, min(doc_id) AS first_doc FROM tok
+          |  GROUP BY term),
+          |dt AS (SELECT (doc_id * 10) // nd AS dec, count(*) AS n
+          |  FROM tok, mx GROUP BY 1),
+          |dv AS (SELECT (first_doc * 10) // nd AS dec, count(*) AS v
+          |  FROM fd, mx GROUP BY 1),
+          |ds AS (SELECT CAST(range AS BIGINT) AS dec FROM range(10)),
+          |cum AS (
+          |  SELECT d.dec,
+          |    CAST(sum(coalesce(t.n, 0)) OVER (ORDER BY d.dec)
+          |      AS BIGINT) AS n_tokens,
+          |    CAST(sum(coalesce(v.v, 0)) OVER (ORDER BY d.dec)
+          |      AS BIGINT) AS n_vocab
+          |  FROM ds d LEFT JOIN dt t ON t.dec = d.dec
+          |    LEFT JOIN dv v ON v.dec = d.dec
+          |),
+          |pts AS (
+          |  SELECT dec, n_tokens, n_vocab,
+          |    CAST(floor(CAST(ln(n_tokens) AS DECIMAL(18,9)) * 1000)
+          |      AS BIGINT) AS x,
+          |    CAST(floor(CAST(ln(n_vocab) AS DECIMAL(18,9)) * 1000)
+          |      AS BIGINT) AS y
+          |  FROM cum
+          |),
+          |reg AS (
+          |  SELECT (10 * sum(x * y) - sum(x) * sum(y)) * 1000000 AS num,
+          |    10 * sum(x * x) - sum(x) * sum(x) AS den
+          |  FROM pts
+          |)
+          |SELECT dec + 1 AS bucket, n_tokens, n_vocab,
+          |  CAST(num // den AS BIGINT) AS heaps_beta_x1e6
+          |FROM pts, reg""".stripMargin)),
+
+    // 26r. CCNet-style trained-LM perplexity: fit an add-one bigram LM on
+    // the deterministic q41 train split, score the WHOLE corpus against
+    // it — model and corpus decoupled (q58's self-LM can't say "looks
+    // like the reference domain"; this is the signal CCNet buckets into
+    // head/middle/tail). DECIMAL(18,9) per-bigram quantization keeps the
+    // score engine-exact; the LM join shuffles on the bigram key (the
+    // bigram table is O(train tokens), not Heaps-sublinear — see
+    // Perplexity.bigramScore's scaladoc for why broadcast is opt-in).
+    QueryDef("q114_bigram_lm", (s, dir) => {
+      val docs = Tables(s, dir).documents
+      graft.functions.Perplexity.bigramScore(
+        Sampling.sample(docs, "doc_id", 9000), docs, "doc_id", "text")
+    },
+      // q114: the oracle refits the same add-one bigram LM on the same
+      // hash-defined train split (q41's membership arithmetic) and replays
+      // the scoring; the DECIMAL(18,9) per-bigram quantization absorbs
+      // engine ln() ulp differences exactly as q58's does. range(1,len) is
+      // empty for single-token docs on both engines (the Spark side guards
+      // sequence()'s descending surprise explicitly).
+      oracle = Some("""WITH d AS (
+          |  SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS l
+          |  FROM documents
+          |), tb AS (
+          |  SELECT unnest(list_transform(range(1, len(l)),
+          |    i -> l[i] || ' ' || l[i+1])) AS bg
+          |  FROM d WHERE (hash(doc_id) >> 16) % 10000 < 9000
+          |), c2 AS (
+          |  SELECT bg, COUNT(*) AS c2 FROM tb GROUP BY 1
+          |), c1 AS (
+          |  SELECT split_part(bg, ' ', 1) AS w1, COUNT(*) AS c1
+          |  FROM tb GROUP BY 1
+          |), voc AS (
+          |  SELECT COUNT(DISTINCT term) AS v FROM (
+          |    SELECT unnest(l) AS term FROM d
+          |    WHERE (hash(doc_id) >> 16) % 10000 < 9000)
+          |), sb AS (
+          |  SELECT doc_id, unnest(list_transform(range(1, len(l)),
+          |    i -> l[i] || ' ' || l[i+1])) AS bg
+          |  FROM d
+          |)
+          |SELECT doc_id, COUNT(*) AS n_bigrams,
+          |  CAST(floor(SUM(CAST(-ln((COALESCE(c2, 0) + 1)
+          |      / (COALESCE(c1, 0) + v * 1.0)) AS DECIMAL(18,9)))
+          |    * 1000 / COUNT(*)) AS BIGINT) AS avg_nll_x1000
+          |FROM sb
+          |LEFT JOIN c2 USING (bg)
+          |LEFT JOIN c1 ON split_part(sb.bg, ' ', 1) = c1.w1
+          |CROSS JOIN voc
+          |GROUP BY doc_id""".stripMargin)),
+
+    // 26s. Gopher quality-rule battery (Rae et al. 2021 table A1 — the
+    // public heuristic set MassiveText/RefinedWeb/Dolma filter with):
+    // word-count and mean-word-length bounds, symbol-to-word ratio,
+    // bullet/ellipsis line fractions, alphabetic-word fraction, stop-word
+    // hits. Every rule decided in integer cross-multiplied arithmetic —
+    // no float thresholds for engines to disagree on. One map-side
+    // codegen pass, zero shuffles.
+    QueryDef("q115_gopher_rules", (s, dir) =>
+      graft.functions.GopherRules.evaluate(Tables(s, dir).documents,
+        "doc_id", "text"),
+      // q115: every Gopher rule is integer cross-multiplied arithmetic, so
+      // the oracle recomputes counters and verdicts exactly (list lambdas
+      // replay the token/line scans; '//' and the long cast agree with
+      // Spark's truncating markerCount division on non-negative counts)
+      oracle = Some("""WITH d AS (
+          |  SELECT doc_id,
+          |    string_split_regex(trim(lower(text)), '\s+') AS l,
+          |    string_split(text, chr(10)) AS ln, text
+          |  FROM documents
+          |), m AS (
+          |  SELECT doc_id,
+          |    CAST(len(l) AS BIGINT) AS n_words,
+          |    CAST(list_sum(list_transform(l, x -> len(x))) AS BIGINT)
+          |      AS word_chars,
+          |    CAST(len(list_filter(l, x -> regexp_matches(x, '[a-z]')))
+          |      AS BIGINT) AS n_alpha_words,
+          |    CAST((len(text) - len(replace(text, '#', '')))
+          |      + (len(text) - len(replace(text, '...', ''))) // 3
+          |      + (len(text) - len(replace(text, '…', '')))
+          |      AS BIGINT) AS n_symbols,
+          |    CAST(len(ln) AS BIGINT) AS n_lines,
+          |    CAST(len(list_filter(ln,
+          |      x -> regexp_matches(x, '^[ \t]*[-*•]'))) AS BIGINT)
+          |      AS n_bullet_lines,
+          |    CAST(len(list_filter(ln,
+          |      x -> regexp_matches(x, '(\.\.\.|…)[ \t]*$'))) AS BIGINT)
+          |      AS n_ellipsis_lines,
+          |    CAST(CAST(list_contains(l, 'the') AS INT)
+          |      + CAST(list_contains(l, 'be') AS INT)
+          |      + CAST(list_contains(l, 'to') AS INT)
+          |      + CAST(list_contains(l, 'of') AS INT)
+          |      + CAST(list_contains(l, 'and') AS INT)
+          |      + CAST(list_contains(l, 'that') AS INT)
+          |      + CAST(list_contains(l, 'have') AS INT)
+          |      + CAST(list_contains(l, 'with') AS INT) AS BIGINT)
+          |      AS n_stop_hits
+          |  FROM d
+          |)
+          |SELECT doc_id, n_words, word_chars, n_alpha_words, n_symbols,
+          |  n_lines, n_bullet_lines, n_ellipsis_lines, n_stop_hits,
+          |  n_words >= 50 AND n_words <= 100000 AS r_word_count,
+          |  word_chars >= n_words * 3 AND word_chars <= n_words * 10
+          |    AS r_mean_len,
+          |  n_symbols * 10 < n_words AS r_symbol_ratio,
+          |  n_bullet_lines * 10 <= n_lines * 9 AS r_bullet,
+          |  n_ellipsis_lines * 10 <= n_lines * 3 AS r_ellipsis,
+          |  n_alpha_words * 5 >= n_words * 4 AS r_alpha,
+          |  n_stop_hits >= 2 AS r_stop_words,
+          |  (n_words >= 50 AND n_words <= 100000)
+          |    AND (word_chars >= n_words * 3 AND word_chars <= n_words * 10)
+          |    AND n_symbols * 10 < n_words
+          |    AND n_bullet_lines * 10 <= n_lines * 9
+          |    AND n_ellipsis_lines * 10 <= n_lines * 3
+          |    AND n_alpha_words * 5 >= n_words * 4
+          |    AND n_stop_hits >= 2 AS pass
+          |FROM m""".stripMargin)),
+
+    // 26t. C4 cleaning rules (Raffel et al. 2020 §2.2): line-level keep
+    // predicate (terminal punctuation + >=5 words + no javascript) and
+    // page-level gates (>=3 sentences, no curly brace, no lorem ipsum) —
+    // the line-granular sibling of q115's document-level battery. One
+    // map-side pass of list lambdas, zero shuffles.
+    QueryDef("q116_c4_filters", (s, dir) =>
+      graft.functions.C4Filters.evaluate(Tables(s, dir).documents,
+        "doc_id", "text"),
+      // q116: the oracle replays the line predicate and page gates with
+      // list lambdas; regexp_replace carries the 'g' flag (DuckDB is
+      // first-match-only by default where Spark replaces all), and the
+      // empty-kept-list sums COALESCE to 0 (DuckDB list_sum([]) is NULL,
+      // Spark's aggregate zero is 0)
+      oracle = Some("""WITH d AS (
+          |  SELECT doc_id, text, string_split(text, chr(10)) AS ln
+          |  FROM documents
+          |), m AS (
+          |  SELECT doc_id,
+          |    CAST(len(ln) AS BIGINT) AS n_lines,
+          |    list_filter(ln, l -> regexp_matches(l, '[.!?"][ \t]*$')
+          |      AND len(string_split_regex(trim(l), '\s+')) >= 5
+          |      AND NOT contains(lower(l), 'javascript')) AS kept,
+          |    CAST(len(list_filter(ln, l -> contains(lower(l), 'javascript')))
+          |      AS BIGINT) AS n_js_lines,
+          |    contains(text, '{') AS has_curly,
+          |    contains(lower(text), 'lorem ipsum') AS has_lorem
+          |  FROM d
+          |), c AS (
+          |  SELECT doc_id, n_lines,
+          |    CAST(len(kept) AS BIGINT) AS n_kept_lines,
+          |    n_js_lines,
+          |    CAST(COALESCE(list_sum(list_transform(kept, l -> len(l))), 0)
+          |      AS BIGINT) AS kept_chars,
+          |    CAST(COALESCE(list_sum(list_transform(kept,
+          |      l -> len(l) - len(regexp_replace(l, '[.!?]', '', 'g')))), 0)
+          |      AS BIGINT) AS n_sentences,
+          |    has_curly, has_lorem
+          |  FROM m
+          |)
+          |SELECT *, n_sentences >= 3 AND NOT has_curly AND NOT has_lorem
+          |  AS keep
+          |FROM c""".stripMargin)),
+
+    // 26t-b. code-quality battery (the BigCode/StarCoder recipe) —
+    // line-geometry gates, alphanumeric density, long-line share,
+    // autogen-marker scan; the q115/q116 shape applied to code
+    // corpora. One map-side pass of list lambdas, zero shuffles; all
+    // fractions are ×1e6 integer floors the oracle replays exactly.
+    QueryDef("q161_code_filters", (s, dir) =>
+      graft.functions.CodeFilters.evaluate(Tables(s, dir).documents,
+        "doc_id", "text"),
+      // q161: the code battery replayed with DuckDB list lambdas — line
+      // split on chr(10), per-line lengths, the same ×1e6 integer floors
+      // and threshold gates.
+      oracle = Some("""WITH b AS (
+          |  SELECT doc_id, text,
+          |    list_transform(string_split(text, chr(10)),
+          |      l -> CAST(length(l) AS BIGINT)) AS lens
+          |  FROM documents
+          |), m AS (
+          |  SELECT doc_id,
+          |    CAST(len(lens) AS BIGINT) AS n_lines,
+          |    CAST(list_max(lens) AS BIGINT) AS max_line_len,
+          |    CAST(list_sum(lens) AS BIGINT) AS sum_len,
+          |    CAST(len(list_filter(lens, x -> x > 120)) AS BIGINT)
+          |      AS n_long,
+          |    CAST(length(text) AS BIGINT) AS n_chars,
+          |    CAST(length(regexp_replace(text, '[^A-Za-z0-9]', '', 'g'))
+          |      AS BIGINT) AS n_alnum,
+          |    (contains(lower(text), 'auto-generated')
+          |      OR contains(lower(text), 'do not edit')
+          |      OR contains(lower(text), 'generated by')) AS is_autogen
+          |  FROM b
+          |), f AS (
+          |  SELECT doc_id, n_lines, max_line_len,
+          |    (100 * sum_len) // n_lines AS avg_line_x100,
+          |    CASE WHEN n_chars > 0 THEN (1000000 * n_alnum) // n_chars
+          |      ELSE CAST(0 AS BIGINT) END AS alnum_frac_x1e6,
+          |    (1000000 * n_long) // n_lines AS long_line_frac_x1e6,
+          |    is_autogen
+          |  FROM m
+          |)
+          |SELECT *,
+          |  (max_line_len <= 1000 AND avg_line_x100 <= 10000
+          |    AND alnum_frac_x1e6 >= 250000 AND NOT is_autogen)
+          |    AS code_keep
+          |FROM f""".stripMargin)),
+
+    // 26x. Trained quality classifier (GPT-3/LLaMA/CCNet reference-vs-
+    // crawl gate): fit multinomial NB on a curated reference class (the
+    // hash-deterministic half of the English docs) vs a disjoint random-
+    // crawl class (the other hash half, all languages), then score the
+    // WHOLE corpus. Training is one counting shuffle; the Heaps-bounded
+    // (term, cpos, cneg) model broadcasts so the corpus stream joins
+    // map-side. DECIMAL(18,9) per-token quantization keeps scores
+    // engine-exact; the oracle refits the same counts and replays the
+    // decision function.
+    QueryDef("q120_nb_quality", (s, dir) => {
+      val docs = Tables(s, dir).documents
+      val b = Sampling.bucket(col("doc_id"))
+      graft.functions.QualityClassifier.nbScore(
+        docs.where(col("lang") === "en" && b < 5000),
+        docs.where(b >= 5000),
+        docs, "doc_id", "text")
+    },
+      // q120: the oracle refits the same add-one NB counts on the same
+      // hash-defined class split and replays the decision function; the
+      // DECIMAL(18,9) per-class-likelihood quantization (BEFORE the
+      // subtraction and the document sum) absorbs engine ln() ulp
+      // differences exactly as q114's does
+      oracle = Some(s"""$nbScoreCtes
+          |SELECT doc_id, n_tokens,
+          |  CAST(floor((prior_q + sum_w) * 1000) AS BIGINT) AS logit_x1000,
+          |  CAST(floor(sum_w * 1000 / n_tokens) AS BIGINT)
+          |    AS avg_logodds_x1000,
+          |  CAST(floor((prior_q + sum_w) * 1000) AS BIGINT) >= 0 AS nb_keep
+          |FROM sc""".stripMargin)),
+
+    // 26x-b. classifier EVALUATION — the audit loop q120 was missing
+    // (a filter model you can't score is a filter you can't trust):
+    // label = "is the doc English" (the signal the NB model was weakly
+    // trained toward), metric = ROC AUC via the rank statistic plus a
+    // 10-bin calibration table. AUC is computed in the distributed
+    // shape — collapse to DISTINCT logit values first (groupBy with
+    // map-side combine), then one bounded window over the score frame;
+    // ties contribute the standard half-credit via the 2×-scaled
+    // integer numerator. Deciles come from the same cumulative counts
+    // plus a per-score row_number (ntile's exact closed form — no
+    // global row sort; the q64 offsets shape). Every output is an
+    // exact integer: DECIMAL(38,0) cross-multiplication, floor by
+    // subtract-mod. FULL oracle: the q120 score replay + the same rank
+    // algebra in SQL.
+    QueryDef("q160_classifier_eval", (s, dir) => {
+      val docs = Tables(s, dir).documents
+      val b = Sampling.bucket(col("doc_id"))
+      val scored = graft.functions.QualityClassifier.nbScore(
+        docs.where(col("lang") === "en" && b < 5000),
+        docs.where(b >= 5000),
+        docs, "doc_id", "text")
+      val lbl = scored.select(col("doc_id"), col("logit_x1000"))
+        .join(docs.select(col("doc_id"),
+          when(col("lang") === "en", 1L).otherwise(0L).as("y")),
+          Seq("doc_id"))
+      graft.functions.Eval.rocAudit(lbl, "doc_id", "logit_x1000", "y")
+    },
+      // q160: the q120 score replay composed with the rank-statistic AUC
+      // (distinct-score cumulative algebra, ties at half credit via the
+      // 2×-scaled numerator) and the closed-form ntile(10) calibration
+      // bins — every step exact integer arithmetic on both engines.
+      oracle = Some(s"""$nbScoreCtes,
+          |lbl AS (
+          |  SELECT sc.doc_id,
+          |    CAST(floor((prior_q + sum_w) * 1000) AS BIGINT) AS s,
+          |    CASE WHEN dd.lang = 'en' THEN 1 ELSE 0 END AS y
+          |  FROM sc JOIN documents dd USING (doc_id)
+          |),
+          |bys AS (
+          |  SELECT s, SUM(y) AS np, SUM(1 - y) AS nn FROM lbl GROUP BY 1
+          |),
+          |cum AS (
+          |  SELECT s, np, nn,
+          |    COALESCE(SUM(nn) OVER (ORDER BY s
+          |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+          |      AS below_n,
+          |    COALESCE(SUM(np + nn) OVER (ORDER BY s
+          |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+          |      AS below_all
+          |  FROM bys
+          |),
+          |tot AS (SELECT CAST(SUM(np) AS BIGINT) AS p,
+          |  CAST(SUM(nn) AS BIGINT) AS n FROM bys),
+          |auc AS (
+          |  -- BIGINT-only with the guarded divisor: a single-class corpus
+          |  -- divides by 1 and reports 0 (ADVICE r16), and no HUGEINT
+          |  -- ever meets % or // (the q164 r17 lesson)
+          |  SELECT CAST((num2 * 1000000 - ((num2 * 1000000) % pn2))
+          |    // pn2 AS BIGINT) AS auc_x1e6
+          |  FROM (SELECT CAST(SUM(np * (2 * below_n + nn)) AS BIGINT)
+          |    AS num2 FROM cum)
+          |  CROSS JOIN (SELECT greatest(2 * p * n, 1) AS pn2 FROM tot)
+          |),
+          |ids AS (
+          |  SELECT l.y, c.below_all
+          |    + row_number() OVER (PARTITION BY l.s ORDER BY l.doc_id)
+          |    AS idx
+          |  FROM lbl l JOIN cum c USING (s)
+          |),
+          |dcl AS (
+          |  SELECT y, CASE WHEN qq = 0 THEN idx
+          |    WHEN idx <= (qq + 1) * rr THEN (idx + qq) // (qq + 1)
+          |    ELSE rr + (idx - (qq + 1) * rr + qq - 1) // qq END AS decile
+          |  FROM ids CROSS JOIN (
+          |    SELECT (p + n) // 10 AS qq, (p + n) % 10 AS rr FROM tot)
+          |)
+          |SELECT CAST(decile AS BIGINT) AS decile, COUNT(*) AS n,
+          |  CAST(SUM(y) AS BIGINT) AS n_pos,
+          |  CAST((1000000 * SUM(y)) // COUNT(*) AS BIGINT)
+          |    AS pos_rate_x1e6,
+          |  auc_x1e6
+          |FROM dcl CROSS JOIN auc
+          |GROUP BY 1, auc_x1e6""".stripMargin)),
+
+    // 26y. UniMax budget allocation (Chung et al. 2023): distribute 90%
+    // of the corpus token budget as uniformly as possible across
+    // languages, capped at 1 epoch per language — tail languages run
+    // whole, the head splits the remainder evenly. Closed-form waterfill
+    // in cross-multiplied integer arithmetic over the bounded language
+    // dim; the corpus is touched once (map-side token count + one
+    // groupBy). Allocations sum to the budget exactly.
+    QueryDef("q121_unimax", (s, dir) =>
+      UniMax.allocate(Tables(s, dir).documents, "lang", "text",
+        budgetBp = 9000, epochCap = 1),
+      // q121: the oracle replays the closed-form waterfill — ranked
+      // prefix sums locate the capped boundary in the same
+      // cross-multiplied integer arithmetic, '//' and '%' agree with
+      // Spark's div/% on the non-negative operands
+      oracle = Some("""WITH per AS (
+          |  SELECT lang,
+          |    CAST(SUM(len(string_split_regex(trim(lower(text)), '\s+')))
+          |      AS BIGINT) AS n_tokens
+          |  FROM documents GROUP BY 1
+          |), tot AS (
+          |  SELECT SUM(n_tokens) AS t, COUNT(*) AS nlang FROM per
+          |), r AS (
+          |  SELECT lang, n_tokens, n_tokens * 1 AS cap_tokens, nlang,
+          |    CAST((t * 9000) // 10000 AS BIGINT) AS budget,
+          |    ROW_NUMBER() OVER (ORDER BY n_tokens * 1, lang) AS k,
+          |    CAST(COALESCE(SUM(n_tokens * 1) OVER (
+          |      ORDER BY n_tokens * 1, lang
+          |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+          |      AS BIGINT) AS cap_prefix
+          |  FROM per CROSS JOIN tot
+          |), rc AS (
+          |  SELECT *, cap_tokens * (nlang - k + 1) < budget - cap_prefix
+          |    AS capped
+          |  FROM r
+          |), b AS (
+          |  SELECT COALESCE(SUM(CASE WHEN capped THEN 1 ELSE 0 END), 0)
+          |      AS n_capped,
+          |    CAST(COALESCE(SUM(CASE WHEN capped THEN cap_tokens
+          |      ELSE 0 END), 0) AS BIGINT) AS p_capped
+          |  FROM rc
+          |)
+          |SELECT lang, n_tokens, cap_tokens, capped,
+          |  CAST(CASE WHEN capped THEN cap_tokens
+          |    ELSE ((budget - p_capped) // (nlang - n_capped))
+          |      + (CASE WHEN k - n_capped <=
+          |          ((budget - p_capped) % (nlang - n_capped))
+          |         THEN 1 ELSE 0 END)
+          |  END AS BIGINT) AS alloc_tokens,
+          |  CAST((CASE WHEN capped THEN cap_tokens
+          |    ELSE ((budget - p_capped) // (nlang - n_capped))
+          |      + (CASE WHEN k - n_capped <=
+          |          ((budget - p_capped) % (nlang - n_capped))
+          |         THEN 1 ELSE 0 END)
+          |  END * 1000) // n_tokens AS BIGINT) AS epochs_x1000
+          |FROM rc CROSS JOIN b""".stripMargin)),
+
+    QueryDef("q117_temperature_mix", (s, dir) => {
+      val per = Tables(s, dir).documents
+        .groupBy(col("lang")).agg(count(lit(1)).as("n_docs"))
+      val tot = per.agg(sum(col("n_docs")).as("n_total"))
+      val q = per.crossJoin(broadcast(tot))
+        .withColumn("q_x1e9",
+          floor(pow(col("n_docs").cast("double") /
+              col("n_total").cast("double"), lit(0.7))
+            .cast(DecimalType(18, 9)) * 1000000000L).cast("long"))
+      val qt = q.agg(sum(col("q_x1e9")).as("q_total"))
+      q.crossJoin(broadcast(qt))
+        .select(col("lang"), col("n_docs"), col("q_x1e9"),
+          floor(col("q_x1e9") * 1000000L /
+            (col("q_total").cast("double"))).cast("long").as("w_ppm"))
+    },
+      // q117: pow() ulp differences are absorbed by the DECIMAL(18,9)
+      // quantization of the smoothed mass; the normalization is then
+      // integer-over-double floor arithmetic on the quantized longs, so
+      // both engines compute identical weights
+      oracle = Some("""WITH by_lang AS (
+          |  SELECT lang, COUNT(*) AS n_docs FROM documents GROUP BY 1
+          |), tot AS (
+          |  SELECT SUM(n_docs) AS n_total FROM by_lang
+          |), q AS (
+          |  SELECT lang, n_docs,
+          |    CAST(floor(CAST(pow(n_docs / (n_total * 1.0), 0.7)
+          |      AS DECIMAL(18,9)) * 1000000000) AS BIGINT) AS q_x1e9
+          |  FROM by_lang CROSS JOIN tot
+          |), qt AS (
+          |  SELECT SUM(q_x1e9) AS q_total FROM q
+          |)
+          |SELECT lang, n_docs, q_x1e9,
+          |  CAST(floor(q_x1e9 * 1000000 / (q_total * 1.0)) AS BIGINT)
+          |    AS w_ppm
+          |FROM q CROSS JOIN qt""".stripMargin)),
+
+    // 36. top-k distinguishing terms per doc (tf/df rational scoring, so
+    // the ranking is engine-exact — see TermScores.topTerms)
+    QueryDef("q36_top_terms", (s, dir) =>
+      TermScores.topTerms(Tables(s, dir).documents, "doc_id", "text", 3),
+      oracle = Some("""WITH tok AS (
+          |  SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '\s+')) AS term
+          |  FROM documents
+          |), tf AS (
+          |  SELECT doc_id, term, COUNT(*) AS tf FROM tok GROUP BY 1, 2
+          |), idf AS (
+          |  SELECT term, COUNT(*) AS df FROM tf GROUP BY 1
+          |)
+          |SELECT doc_id, rnk, term FROM (
+          |  SELECT doc_id, term, CAST(row_number() OVER (
+          |    PARTITION BY doc_id
+          |    ORDER BY tf * 1.0 / df DESC, term) AS BIGINT) AS rnk
+          |  FROM tf JOIN idf USING (term))
+          |WHERE rnk <= 3""".stripMargin)),
+
+    // 37c. source-mixing weights: per-source doc share and the per-doc
+    // sampling weight that rebalances to a uniform source mixture — the
+    // data-mixture step of corpus assembly, integer-exact
+    QueryDef("q70_mix_weights", (s, dir) => {
+      val per = Tables(s, dir).documents
+        .groupBy(col("source")).agg(count(lit(1)).as("n_docs"))
+      val tot = per.agg(sum(col("n_docs")).as("n_total"),
+        count(lit(1)).as("n_sources"))
+      per.crossJoin(broadcast(tot))
+        .select(col("source"), col("n_docs"),
+          (col("n_docs") * 10000 / col("n_total")).cast("long").as("share_bp"),
+          (lit(10000L) * col("n_total") / (col("n_sources") * col("n_docs")))
+            .cast("long").as("weight_x10000"))
+    },
+      oracle = Some("""WITH per AS (
+          |  SELECT source, COUNT(*) AS n_docs FROM documents GROUP BY source
+          |), tot AS (
+          |  SELECT CAST(SUM(n_docs) AS BIGINT) AS n_total,
+          |    COUNT(*) AS n_sources FROM per
+          |)
+          |SELECT source, n_docs,
+          |  n_docs * 10000 // n_total AS share_bp,
+          |  10000 * n_total // (n_sources * n_docs) AS weight_x10000
+          |FROM per, tot""".stripMargin)),
+
+    // 25b. per-language perplexity terciles (CCNet-style head/middle/tail
+    // quality buckets): ntile over the deterministic decimal NLL
+    QueryDef("q71_ppl_buckets", (s, dir) => {
+      val docs = Tables(s, dir).documents
+      val ppl = graft.functions.Perplexity.score(docs, "doc_id", "text")
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("lang"))
+        .orderBy(col("avg_nll_x1000"), col("doc_id"))
+      ppl.join(docs.select("doc_id", "lang"), "doc_id")
+        .withColumn("bucket", ntile(3).over(w).cast("long"))
+        .groupBy(col("lang"), col("bucket"))
+        .agg(count(lit(1)).as("n"),
+          min(col("avg_nll_x1000")).as("min_nll"),
+          max(col("avg_nll_x1000")).as("max_nll"))
+    },
+      oracle = Some("""WITH toks AS (
+          |  SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '\s+')) AS term
+          |  FROM documents
+          |), lm AS (
+          |  SELECT term, COUNT(*) AS tf FROM toks GROUP BY 1
+          |), tot AS (
+          |  SELECT COUNT(*) AS n_total FROM toks
+          |), ppl AS (
+          |  SELECT doc_id,
+          |    CAST(floor(SUM(CAST(-ln((tf + 1) / (n_total + 1.0)) AS DECIMAL(18,9))) * 1000
+          |      / COUNT(*)) AS BIGINT) AS avg_nll_x1000
+          |  FROM toks JOIN lm USING (term) CROSS JOIN tot
+          |  GROUP BY doc_id
+          |), b AS (
+          |  SELECT lang, avg_nll_x1000,
+          |    CAST(ntile(3) OVER (PARTITION BY lang
+          |      ORDER BY avg_nll_x1000, d.doc_id) AS BIGINT) AS bucket
+          |  FROM ppl JOIN documents d USING (doc_id)
+          |)
+          |SELECT lang, bucket, COUNT(*) AS n,
+          |  MIN(avg_nll_x1000) AS min_nll, MAX(avg_nll_x1000) AS max_nll
+          |FROM b GROUP BY lang, bucket""".stripMargin)),
+
+    // 53. heavy-hitter frequency estimates from a count-min sketch built
+    // by the custom typed Aggregator (constant state per partition, one
+    // bounded sketch row to the driver) — full oracle as of r7 (DuckDB
+    // rebuilds the counters as per-(row, bucket) SUMs and replays the
+    // min-over-rows estimate; CountMinSpec keeps gating the
+    // overestimate guarantee and distributed-merge parity)
+    QueryDef("q53_heavy_hitters", (s, dir) => {
+      import s.implicits._
+      val toks = Tables(s, dir).documents
+        .select(explode(F.tokensLower(col("text"))).as("term"))
+      val r = toks.agg(graft.functions.CountMin.sketch(col("term")).as("sk"))
+        .select("sk.*").as[(Int, Int, Array[Long])].head()
+      val sk = graft.functions.Cms(r._1, r._2, r._3)
+      Seq("the", "a", "and", "of", "to")
+        .map(t => (t, sk.estimate(t))).toDF("term", "est_count")
+    },
+      // count-min heavy hitters: the sketch's counters are exactly
+      // "SUM of token counts per (row, bucket)" and the bucket function is
+      // mix(hash64(term) xor (d+1)) % width — width is a power of two, so
+      // the JVM's sign-fixup mod equals the unsigned low bits, i.e. plain
+      // HUGEINT % 1024. Query terms are hashed even when absent from the
+      // corpus (their buckets may still hold colliding counts — exactly
+      // what the JVM estimate returns); empty buckets coalesce to 0.
+      oracle = Some(s"""WITH tok AS (
+           |  SELECT unnest(string_split_regex(trim(lower(text)), '\\s+')) AS term
+           |  FROM documents
+           |), tc AS (
+           |  SELECT term, COUNT(*) AS c FROM tok GROUP BY 1
+           |), qt AS (
+           |  SELECT unnest(['the', 'a', 'and', 'of', 'to']) AS term
+           |), vocab AS (
+           |  SELECT DISTINCT term FROM (SELECT term FROM tc UNION SELECT term FROM qt)
+           |), fnv AS (
+           |  WITH RECURSIVE r AS (
+           |    SELECT term, 1 AS pos, CAST(${u64("cbf29ce484222325")} AS HUGEINT) AS h
+           |    FROM vocab
+           |    UNION ALL
+           |    SELECT term, pos+1,
+           |      CAST((xor(h, CAST(ascii(substr(term,pos,1)) AS HUGEINT)) * 1099511628211) % $m64 AS HUGEINT)
+           |    FROM r WHERE pos <= length(term)
+           |  )
+           |  SELECT term, ${splitmixSql("h")} AS th FROM r WHERE pos = length(term) + 1
+           |), bk AS (
+           |  SELECT f.term, t.d,
+           |    ${splitmixSql("xor(f.th, CAST(t.d AS HUGEINT))")} % 1024 AS idx
+           |  FROM fnv f CROSS JOIN (SELECT unnest(generate_series(1, 4)) AS d) t
+           |), counters AS (
+           |  SELECT b.d, b.idx, SUM(tc.c) AS cnt
+           |  FROM bk b JOIN tc USING (term) GROUP BY 1, 2
+           |), qb AS (
+           |  SELECT b.term, b.d, b.idx FROM bk b JOIN qt USING (term)
+           |)
+           |SELECT qb.term, CAST(MIN(COALESCE(c2.cnt, 0)) AS BIGINT) AS est_count
+           |FROM qb LEFT JOIN counters c2 ON c2.d = qb.d AND c2.idx = qb.idx
+           |GROUP BY qb.term""".stripMargin)),
+
+    // 47. trained BPE token counts: merges train on a deterministic 10%
+    // hash-sample (driver-side, bounded), encode runs distributed through
+    // a codegen'd kernel [rows-only; trainer+encoder gated in BpeSpec]
+    QueryDef("q47_bpe_tokens", (s, dir) => {
+      val docs = Tables(s, dir).documents
+      val merges = memoized(s, s"bpe|$dir") {
+        Bpe.train(docs, "doc_id", "text", nMerges = 200,
+          sampleBasisPoints = 1000)
+      }
+      docs.select(col("doc_id"),
+        Bpe.tokenCount(col("text"), merges).as("n_bpe_tokens"))
+    },
+      // rows-only: merges train on a driver-side sample; BpeSpec gates
+      // the trainer and encoder, q47b oracles the encode
+      oracle = None),
+
+    // 23b. BPE ENCODE under a FIXED merge table (VERDICT r11 task 5):
+    // training is inherently sequential (spec-gated, q47), but encoding
+    // under a fixed table is deterministic and fully distributable — the
+    // q84b isolate-the-distributable-step precedent. The planted merges
+    // hit the corpus vocabulary (scan/agg/table/row...), including one
+    // second-order rule (b+le) consuming an earlier rule's output, and
+    // no rule's output ever feeds an EARLIER rank — which is what makes
+    // the oracle's rank-order separator-string rewrite equivalent to
+    // the kernel's greedy lowest-rank-first loop.
+    QueryDef("q47b_bpe_encode_fixed", (s, dir) =>
+      Tables(s, dir).documents.select(col("doc_id"),
+        Bpe.tokenCount(col("text"), fixedBpeMerges).as("n_bpe_tokens")),
+      // q47b: the oracle replays BPE encoding as separator-string
+      // rewriting — each word becomes |c|h|a|r|s|, each merge rank applies
+      // as replace('|a|b|' → '|ab|') in rank order. One pass can miss
+      // CHAINED occurrences (adjacent matches share a boundary separator
+      // the replacement consumes), so each rank applies three times —
+      // after one pass no two remaining occurrences are adjacent, so two
+      // always suffice; the third is margin. Rank-order rewriting equals
+      // the kernel's lowest-rank-first greedy loop because no planted
+      // rule's output feeds an earlier rank (see the entry comment).
+      oracle = Some("""WITH w AS (
+          |  SELECT doc_id,
+          |    unnest(string_split_regex(trim(lower(text)), '\s+')) AS wd
+          |  FROM documents
+          |), s0 AS (
+          |  SELECT doc_id, '|' || regexp_replace(wd, '(.)', '\1|', 'g') AS s
+          |  FROM w WHERE wd <> ''
+          |), m0 AS (SELECT doc_id, replace(replace(replace(s,
+          |    '|a|g|', '|ag|'), '|a|g|', '|ag|'), '|a|g|', '|ag|') AS s FROM s0
+          |), m1 AS (SELECT doc_id, replace(replace(replace(s,
+          |    '|s|c|', '|sc|'), '|s|c|', '|sc|'), '|s|c|', '|sc|') AS s FROM m0
+          |), m2 AS (SELECT doc_id, replace(replace(replace(s,
+          |    '|a|n|', '|an|'), '|a|n|', '|an|'), '|a|n|', '|an|') AS s FROM m1
+          |), m3 AS (SELECT doc_id, replace(replace(replace(s,
+          |    '|l|e|', '|le|'), '|l|e|', '|le|'), '|l|e|', '|le|') AS s FROM m2
+          |), m4 AS (SELECT doc_id, replace(replace(replace(s,
+          |    '|b|le|', '|ble|'), '|b|le|', '|ble|'), '|b|le|', '|ble|') AS s FROM m3
+          |), m5 AS (SELECT doc_id, replace(replace(replace(s,
+          |    '|r|o|', '|ro|'), '|r|o|', '|ro|'), '|r|o|', '|ro|') AS s FROM m4
+          |), n AS (
+          |  SELECT doc_id,
+          |    SUM(length(s) - length(replace(s, '|', '')) - 1) AS n
+          |  FROM m5 GROUP BY doc_id
+          |)
+          |SELECT d.doc_id, CAST(COALESCE(n.n, 0) AS BIGINT) AS n_bpe_tokens
+          |FROM documents d LEFT JOIN n USING (doc_id)""".stripMargin)),
+
+    // 26z. Tokenizer fertility equity audit (Rust et al. 2021): BPE
+    // tokens-per-word and bytes-per-token under the q47b fixed merge
+    // table, per language — the multilingual-vocabulary fairness signal.
+    // One map-side kernel pass, one bounded-dim groupBy; ratios are
+    // integer floor-scaled over group totals, divided once at the end.
+    QueryDef("q122_bpe_fertility", (s, dir) =>
+      Bpe.fertilityByGroup(Tables(s, dir).documents, "lang", "text",
+        fixedBpeMerges),
+      // q122: the oracle replays the q47b separator-string BPE encode per
+      // document, then re-aggregates words (non-empty whitespace tokens),
+      // UTF-8 bytes (strlen) and BPE tokens per language; both ratios
+      // divide once over group totals with '//', matching Spark's div on
+      // the non-negative sums
+      oracle = Some("""WITH w AS (
+          |  SELECT doc_id,
+          |    unnest(string_split_regex(trim(lower(text)), '\s+')) AS wd
+          |  FROM documents
+          |), s0 AS (
+          |  SELECT doc_id, '|' || regexp_replace(wd, '(.)', '\1|', 'g') AS s
+          |  FROM w WHERE wd <> ''
+          |), m0 AS (SELECT doc_id, replace(replace(replace(s,
+          |    '|a|g|', '|ag|'), '|a|g|', '|ag|'), '|a|g|', '|ag|') AS s FROM s0
+          |), m1 AS (SELECT doc_id, replace(replace(replace(s,
+          |    '|s|c|', '|sc|'), '|s|c|', '|sc|'), '|s|c|', '|sc|') AS s FROM m0
+          |), m2 AS (SELECT doc_id, replace(replace(replace(s,
+          |    '|a|n|', '|an|'), '|a|n|', '|an|'), '|a|n|', '|an|') AS s FROM m1
+          |), m3 AS (SELECT doc_id, replace(replace(replace(s,
+          |    '|l|e|', '|le|'), '|l|e|', '|le|'), '|l|e|', '|le|') AS s FROM m2
+          |), m4 AS (SELECT doc_id, replace(replace(replace(s,
+          |    '|b|le|', '|ble|'), '|b|le|', '|ble|'), '|b|le|', '|ble|') AS s FROM m3
+          |), m5 AS (SELECT doc_id, replace(replace(replace(s,
+          |    '|r|o|', '|ro|'), '|r|o|', '|ro|'), '|r|o|', '|ro|') AS s FROM m4
+          |), n AS (
+          |  SELECT doc_id,
+          |    SUM(length(s) - length(replace(s, '|', '')) - 1) AS nb
+          |  FROM m5 GROUP BY doc_id
+          |), d AS (
+          |  SELECT doc_id, lang,
+          |    CAST(len(list_filter(string_split_regex(trim(lower(text)),
+          |      '\s+'), x -> x <> '')) AS BIGINT) AS nw,
+          |    CAST(strlen(text) AS BIGINT) AS ny
+          |  FROM documents
+          |)
+          |SELECT lang, COUNT(*) AS n_docs,
+          |  CAST(SUM(nw) AS BIGINT) AS n_words,
+          |  CAST(SUM(COALESCE(nb, 0)) AS BIGINT) AS n_bpe_tokens,
+          |  CAST(SUM(ny) AS BIGINT) AS n_bytes,
+          |  CAST(CASE WHEN SUM(nw) > 0
+          |    THEN (SUM(COALESCE(nb, 0)) * 1000) // SUM(nw)
+          |  END AS BIGINT) AS fertility_x1000,
+          |  CAST(CASE WHEN SUM(COALESCE(nb, 0)) > 0
+          |    THEN (SUM(ny) * 1000) // SUM(COALESCE(nb, 0))
+          |  END AS BIGINT) AS bytes_per_bpe_x1000
+          |FROM d LEFT JOIN n USING (doc_id)
+          |GROUP BY lang""".stripMargin)),
+
+    // 46. deterministic greedy sequence packing — bin assignment is the
+    // DuckDB-replicable top-63-bit hash, so the oracle replays the
+    // first-fit scan as a recursive CTE and matches bit-for-bit
+    // (DedupSpec keeps the budget/coverage/determinism invariants)
+    QueryDef("q46_packing", (s, dir) => {
+      val withTokens = Tables(s, dir).documents
+        .select(col("doc_id"), TextStats.tokenCount(col("text")).as("n_tok"))
+      Packing.firstFit(withTokens, "doc_id", col("n_tok"),
+        maxTokens = 512, partitions = 8)
+        .groupBy(col("seq_id"))
+        .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("seq_tokens"))
+    },
+      // q46: replay the per-bin first-fit scan as a recursive CTE — the bin
+      // is the same top-63-bit hash both engines compute, the recursion
+      // steps one doc at a time per bin in id order, exactly the
+      // mapPartitions loop
+      oracle = Some("""WITH RECURSIVE d AS (
+          |  SELECT doc_id,
+          |    CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT) AS n,
+          |    CAST((hash(doc_id) >> 1) % 8 AS BIGINT) AS bin
+          |  FROM documents
+          |), o AS (
+          |  SELECT *, row_number() OVER (PARTITION BY bin ORDER BY doc_id) AS rn
+          |  FROM d
+          |), packed AS (
+          |  SELECT bin, rn, doc_id, n, CAST(0 AS BIGINT) AS seq, n AS used
+          |  FROM o WHERE rn = 1
+          |  UNION ALL
+          |  SELECT o.bin, o.rn, o.doc_id, o.n,
+          |    CASE WHEN p.used + o.n > 512 THEN p.seq + 1 ELSE p.seq END,
+          |    CASE WHEN p.used + o.n > 512 THEN o.n ELSE p.used + o.n END
+          |  FROM packed p JOIN o ON o.bin = p.bin AND o.rn = p.rn + 1
+          |)
+          |SELECT bin * 1099511627776 + seq AS seq_id, COUNT(*) AS n_docs,
+          |  CAST(SUM(n) AS BIGINT) AS seq_tokens
+          |FROM packed GROUP BY 1""".stripMargin)),
+
+    // 42. text cleaning chain (tag strip → NFC → email redaction →
+    // whitespace collapse), surfaced as before/after lengths
+    QueryDef("q42_text_clean", (s, dir) => {
+      val d = Tables(s, dir).documents
+        .withColumn("dirty",
+          concat(lit("<p>Contact: bob"), (col("doc_id") % 100).cast("string"),
+            lit("@mail.example.com</p> "), col("text")))
+      d.select(col("doc_id"),
+        length(col("dirty")).cast("long").as("len_dirty"),
+        length(graft.functions.TextClean.cleanChain(col("dirty")))
+          .cast("long").as("len_clean"))
+    },
+      oracle = Some("""WITH d AS (
+          |  SELECT doc_id,
+          |    '<p>Contact: bob' || CAST(doc_id % 100 AS VARCHAR) ||
+          |    '@mail.example.com</p> ' || text AS dirty
+          |  FROM documents
+          |)
+          |SELECT doc_id, CAST(length(dirty) AS BIGINT) AS len_dirty,
+          | CAST(length(trim(regexp_replace(
+          |   regexp_replace(
+          |     nfc_normalize(regexp_replace(dirty, '<[^>]*>', '', 'g')),
+          |     '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z][A-Za-z]+', '<EMAIL>', 'g'),
+          |   '\s+', ' ', 'g'))) AS BIGINT) AS len_clean
+          |FROM d""".stripMargin)),
+
+    // 43. lexical diversity / dominance quality metrics (Gopher-style
+    // repetition filters)
+    QueryDef("q43_diversity", (s, dir) =>
+      graft.functions.Diversity.metrics(Tables(s, dir).documents,
+        "doc_id", "text"),
+      oracle = Some("""SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS n_tokens, COUNT(*) AS n_distinct,
+          | MAX(tf) AS top_tf,
+          | CAST(floor(COUNT(*) * 100.0 / SUM(tf)) AS BIGINT) AS diversity_pct,
+          | CAST(floor(MAX(tf) * 100.0 / SUM(tf)) AS BIGINT) AS dominance_pct
+          |FROM (
+          |  SELECT doc_id, term, COUNT(*) AS tf FROM (
+          |    SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '\s+')) AS term
+          |    FROM documents)
+          |  GROUP BY doc_id, term)
+          |GROUP BY doc_id""".stripMargin)),
+
+    // 58. unigram-LM perplexity quality scores (the corpus is its own LM);
+    // oracle-backed since r3 — the DECIMAL(18,9) NLL quantization absorbs
+    // engine ln() ulp differences (plus invariants in EtlSpec)
+    QueryDef("q58_perplexity", (s, dir) =>
+      graft.functions.Perplexity.score(Tables(s, dir).documents,
+        "doc_id", "text"),
+      // q58: the per-token NLL is quantized to DECIMAL(18,9) on BOTH sides
+      // before summing, so engine ln() ulp differences are absorbed by the
+      // quantization (verified value-exact at sf0.01); the decimal sum and
+      // floor are then exact integer arithmetic on either engine
+      oracle = Some("""WITH toks AS (
+          |  SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '\s+')) AS term
+          |  FROM documents
+          |), lm AS (
+          |  SELECT term, COUNT(*) AS tf FROM toks GROUP BY 1
+          |), tot AS (
+          |  SELECT COUNT(*) AS n_total FROM toks
+          |)
+          |SELECT doc_id, COUNT(*) AS n_tokens,
+          |  CAST(floor(SUM(CAST(-ln((tf + 1) / (n_total + 1.0)) AS DECIMAL(18,9))) * 1000
+          |    / COUNT(*)) AS BIGINT) AS avg_nll_x1000
+          |FROM toks JOIN lm USING (term) CROSS JOIN tot
+          |GROUP BY doc_id""".stripMargin)),
+
+    // 57. stratified sampling: per-language rates rebalance the corpus,
+    // same engine-portable hash membership as q41
+    QueryDef("q57_stratified", (s, dir) =>
+      Sampling.stratified(Tables(s, dir).documents, "doc_id", col("lang"),
+        Map("en" -> 2500, "de" -> 5000, "fr" -> 5000), defaultBp = 10000)
+        .groupBy(col("lang"))
+        .agg(count(lit(1)).as("n"), min(col("doc_id")).as("min_id")),
+      oracle = Some("""SELECT lang, COUNT(*) AS n, MIN(doc_id) AS min_id FROM (
+          |  SELECT lang, doc_id, (hash(doc_id) >> 16) % 10000 AS bkt FROM documents)
+          |WHERE bkt < CASE lang WHEN 'en' THEN 2500 WHEN 'de' THEN 5000
+          |  WHEN 'fr' THEN 5000 ELSE 10000 END
+          |GROUP BY lang""".stripMargin)),
+
+    // 41. deterministic hash sampling + train/val/test split — bucket
+    // function is bit-identical to DuckDB's hash(BIGINT), so the oracle
+    // recomputes the exact same membership
+    QueryDef("q41_sample_split", (s, dir) =>
+      Sampling.split(Tables(s, dir).documents, "doc_id", Seq(9000, 500, 500))
+        .groupBy(col("split_id"))
+        .agg(count(lit(1)).as("n"), min(col("doc_id")).as("min_id"),
+          max(col("doc_id")).as("max_id")),
+      oracle = Some("""WITH b AS (
+          |  SELECT doc_id, (hash(doc_id) >> 16) % 10000 AS bkt FROM documents
+          |)
+          |SELECT CAST(CASE WHEN bkt < 9000 THEN 0 WHEN bkt < 9500 THEN 1 ELSE 2 END AS BIGINT) AS split_id,
+          | COUNT(*) AS n, MIN(doc_id) AS min_id, MAX(doc_id) AS max_id
+          |FROM b GROUP BY 1""".stripMargin)),
+
+    // 37c. weighted deterministic sampling: P(keep) proportional to
+    // n_chars (clamped at 1) — pure filter, pushes to the scan
+    QueryDef("q81_weighted_sample", (s, dir) =>
+      Sampling.weighted(
+        Tables(s, dir).documents.select(col("doc_id"),
+          col("n_chars").cast("long").as("n_chars")),
+        "doc_id", col("n_chars") * 25),
+      oracle = Some("""SELECT doc_id, n_chars FROM documents
+          |WHERE (hash(doc_id) >> 16) % 10000 <
+          |  LEAST(GREATEST(n_chars * 25, 0), 10000)""".stripMargin)),
+
+    // 23b. context-window chunking: fixed-size overlapping token windows
+    // (LM pretraining example prep) — pure map-side arithmetic, no shuffle
+    QueryDef("q62_chunking", (s, dir) =>
+      Chunking.tokenWindows(Tables(s, dir).documents, "doc_id", "text",
+        window = 32, stride = 24),
+      oracle = Some("""WITH t AS (
+          |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks
+          |  FROM documents
+          |), n AS (
+          |  SELECT doc_id, toks, CAST(len(toks) AS BIGINT) AS n FROM t
+          |), c AS (
+          |  SELECT doc_id, toks, n,
+          |    unnest(generate_series(0,
+          |      CASE WHEN n <= 32 THEN 0 ELSE (n - 32 + 23) // 24 END)) AS chunk_id
+          |  FROM n
+          |)
+          |SELECT doc_id, CAST(chunk_id AS BIGINT) AS chunk_id,
+          |  CAST(chunk_id * 24 AS BIGINT) AS start_tok,
+          |  CAST(least(32, n - chunk_id * 24) AS BIGINT) AS n_tok_chunk,
+          |  CAST(length(array_to_string(
+          |    toks[CAST(chunk_id*24 + 1 AS BIGINT):
+          |         CAST(chunk_id*24 + least(32, n - chunk_id*24) AS BIGINT)],
+          |    ' ')) AS BIGINT) AS n_chars_chunk
+          |FROM c""".stripMargin)),
+
+    // 37b. exact percentile-band trim (drop length outliers) WITHOUT a
+    // global sort: per-value counts + running offsets + in-value ranks
+    QueryDef("q64_length_trim", (s, dir) =>
+      RankTrim.middleBand(
+        Tables(s, dir).documents.select(col("doc_id"),
+          col("n_chars").cast("long").as("n_chars")),
+        "doc_id", "n_chars", trimBp = 500),
+      oracle = Some("""WITH r AS (
+          |  SELECT doc_id, CAST(n_chars AS BIGINT) AS n_chars,
+          |    CAST(row_number() OVER (ORDER BY n_chars, doc_id) AS BIGINT) AS grank,
+          |    COUNT(*) OVER () AS total
+          |  FROM documents
+          |)
+          |SELECT doc_id, n_chars, grank FROM r
+          |WHERE grank > total * 500 // 10000
+          |  AND grank <= total - total * 500 // 10000""".stripMargin)),
+
+    // 26f. inverted index: doc_id-ordered posting lists with df — the
+    // retrieval-side layout of the q36 term statistics
+    QueryDef("q66_inverted_index", (s, dir) =>
+      TermScores.invertedIndex(Tables(s, dir).documents, "doc_id", "text"),
+      oracle = Some("""WITH tok AS (
+          |  SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '\s+')) AS term
+          |  FROM documents
+          |), tf AS (
+          |  SELECT doc_id, term, COUNT(*) AS tf FROM tok GROUP BY 1, 2
+          |)
+          |SELECT term, CAST(COUNT(*) OVER (PARTITION BY term) AS BIGINT) AS df,
+          |  doc_id,
+          |  CAST(row_number() OVER (PARTITION BY term ORDER BY doc_id) AS BIGINT) AS prank,
+          |  tf
+          |FROM tf""".stripMargin)),
+
+    // 26h. BM25 batch retrieval: broadcast query set, posting-list-pruned
+    // scoring, per-query top-k — exact integer arithmetic (rational idf,
+    // milli-quantized), so the ranking is engine-exact. The index builds
+    // ONCE per (session, sf) — the Bpe.train/IvfAnn.buildIndex protocol:
+    // the corpus tokenizes at build time, each query batch scans only the
+    // bucket partitions its terms hash into (searchIndex ≡ topK,
+    // Round6Spec-gated; the oracle scores the same corpus in SQL)
+    QueryDef("q78_bm25", (s, dir) => {
+      val idx = memoized(s, s"bm25|$dir") {
+        val p = tempDirCleanedAtExit("graft_bm25_idx")
+        Bm25.buildIndex(Tables(s, dir).documents, "doc_id", "text", p)
+        p
+      }
+      Bm25.searchIndex(s, idx, Bm25Queries, k = 10)
+    },
+      oracle = Some("""WITH tok AS (
+          |  SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '\s+')) AS term
+          |  FROM documents
+          |), tf AS (
+          |  SELECT doc_id, term, CAST(COUNT(*) AS HUGEINT) AS tf FROM tok GROUP BY 1, 2
+          |), dl AS (
+          |  SELECT doc_id, CAST(SUM(tf) AS HUGEINT) AS dl FROM tf GROUP BY 1
+          |), tot AS (
+          |  SELECT CAST(COUNT(*) AS HUGEINT) AS nd, CAST(SUM(dl) AS HUGEINT) AS nt FROM dl
+          |), q(query_id, term) AS (
+          |  VALUES (0, 'spark'), (0, 'window'), (0, 'customer'),
+          |         (1, 'vector'), (1, 'merge'), (1, 'stream'),
+          |         (2, 'slow'), (2, 'filter')
+          |), p AS (
+          |  SELECT tf.* FROM tf WHERE term IN (SELECT DISTINCT term FROM q)
+          |), dft AS (
+          |  SELECT term, CAST(COUNT(*) AS HUGEINT) AS df FROM p GROUP BY 1
+          |), s AS (
+          |  SELECT p.doc_id, p.term,
+          |    (1000 * (2*nd - 2*df + 1) * 44 * p.tf * nt)
+          |      // ((2*df + 1) * (20*p.tf*nt + 6*nt + 18*dl.dl*nd)) AS sm
+          |  FROM p JOIN dft USING (term) JOIN dl USING (doc_id) CROSS JOIN tot
+          |), sq AS (
+          |  SELECT CAST(q.query_id AS BIGINT) AS query_id, s.doc_id,
+          |    CAST(SUM(sm) AS BIGINT) AS score_milli
+          |  FROM s JOIN q USING (term) GROUP BY 1, 2
+          |)
+          |SELECT query_id,
+          |  CAST(row_number() OVER (PARTITION BY query_id
+          |    ORDER BY score_milli DESC, doc_id) AS BIGINT) AS rnk,
+          |  doc_id, score_milli
+          |FROM sq QUALIFY rnk <= 10""".stripMargin)),
+
+    // 26g. PII scrub: URL / IPv4 / phone / email redaction with per-kind
+    // match counts, over a deterministic injection fixture (doc_id mod 4
+    // picks the PII kind) — all dialect-neutral regex, DuckDB-oracled
+    QueryDef("q63_pii_redact", (s, dir) => {
+      import graft.functions.TextClean
+      val m = col("doc_id") % 4
+      val d = Tables(s, dir).documents.withColumn("dirty",
+        concat(col("text"),
+          when(m === 0, concat(lit(" visit https://example.org/p/"),
+            col("doc_id").cast("string"), lit(" now")))
+            .when(m === 1, concat(lit(" call +48 123-456-"),
+              lpad((col("doc_id") % 1000).cast("string"), 3, "0"), lit(" now")))
+            .when(m === 2, concat(lit(" from 10."),
+              (col("doc_id") % 256).cast("string"), lit(".0.1 node")))
+            .otherwise(lit(""))))
+      d.select(col("doc_id"),
+        regexp_count(col("dirty"), lit(TextClean.UrlPattern)).cast("long")
+          .as("n_urls"),
+        regexp_count(col("dirty"), lit(TextClean.Ipv4Pattern)).cast("long")
+          .as("n_ips"),
+        regexp_count(col("dirty"), lit(TextClean.PhonePattern)).cast("long")
+          .as("n_phones"),
+        length(col("dirty")).cast("long").as("len_dirty"),
+        length(TextClean.redactPii(col("dirty"))).cast("long").as("len_clean"))
+    },
+      oracle = Some("""WITH d AS (
+          |  SELECT doc_id, text || CASE
+          |    WHEN doc_id % 4 = 0 THEN ' visit https://example.org/p/' ||
+          |      CAST(doc_id AS VARCHAR) || ' now'
+          |    WHEN doc_id % 4 = 1 THEN ' call +48 123-456-' ||
+          |      lpad(CAST(doc_id % 1000 AS VARCHAR), 3, '0') || ' now'
+          |    WHEN doc_id % 4 = 2 THEN ' from 10.' ||
+          |      CAST(doc_id % 256 AS VARCHAR) || '.0.1 node'
+          |    ELSE '' END AS dirty
+          |  FROM documents
+          |)
+          |SELECT doc_id,
+          |  CAST(len(regexp_extract_all(dirty, 'https?://[^\s]+')) AS BIGINT) AS n_urls,
+          |  CAST(len(regexp_extract_all(dirty, '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b')) AS BIGINT) AS n_ips,
+          |  CAST(len(regexp_extract_all(dirty, '\+\d{2} \d{3}-\d{3}-\d{3}')) AS BIGINT) AS n_phones,
+          |  CAST(length(dirty) AS BIGINT) AS len_dirty,
+          |  CAST(length(
+          |    regexp_replace(regexp_replace(regexp_replace(regexp_replace(dirty,
+          |      'https?://[^\s]+', '<URL>', 'g'),
+          |      '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '<IP>', 'g'),
+          |      '\+\d{2} \d{3}-\d{3}-\d{3}', '<PHONE>', 'g'),
+          |      '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z][A-Za-z]+', '<EMAIL>', 'g')
+          |  ) AS BIGINT) AS len_clean
+          |FROM d""".stripMargin)),
+
+    // 16b. duplicated-n-gram fraction (RefinedWeb-style quality filter):
+    // per doc, the share of 5-gram occurrences appearing in >= 2 docs
+    QueryDef("q68_dup_ngrams", (s, dir) =>
+      DupNgramStats.fraction(Tables(s, dir).documents, "doc_id", "text",
+        k = 5),
+      oracle = Some("""WITH t AS (
+          |  SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS toks
+          |  FROM documents
+          |), g AS (
+          |  SELECT doc_id, unnest(list_transform(
+          |    generate_series(1, greatest(len(toks)-4, 1)),
+          |    i -> list_aggregate(toks[i:least(i+4, len(toks))], 'string_agg', ' ')))
+          |    AS gram
+          |  FROM t
+          |), pd AS (
+          |  SELECT doc_id, gram, COUNT(*) AS occ FROM g GROUP BY 1, 2
+          |), df AS (
+          |  SELECT gram, COUNT(*) AS ndocs FROM pd GROUP BY 1
+          |)
+          |SELECT doc_id, CAST(SUM(occ) AS BIGINT) AS n_grams,
+          |  CAST(SUM(CASE WHEN ndocs >= 2 THEN occ ELSE 0 END) AS BIGINT) AS n_dup,
+          |  CAST(SUM(CASE WHEN ndocs >= 2 THEN occ ELSE 0 END) * 100 // SUM(occ)
+          |    AS BIGINT) AS dup_pct
+          |FROM pd JOIN df USING (gram) GROUP BY doc_id""".stripMargin)),
+
+    // 16c. WITHIN-doc repetition metrics (Gopher repetition-filter
+    // family): share of a doc's 3-gram occurrences that repeat a gram
+    // the doc already used + the top gram's share — intra-document
+    // (looping/templated text), where q68 is cross-corpus; integer
+    // counts and floored percentages, engine-exact
+    QueryDef("q92_repetition", (s, dir) =>
+      Repetition.metrics(Tables(s, dir).documents, "doc_id", "text",
+        k = 3),
+      // intra-doc repetition: same gram conventions as q68 (string grams
+      // stand in for the hash64 grams — identical grouping up to 64-bit
+      // collisions), but occ >= 2 within the SAME doc, no df join
+      oracle = Some("""WITH t AS (
+          |  SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS toks
+          |  FROM documents WHERE text IS NOT NULL
+          |), g AS (
+          |  SELECT doc_id, unnest(list_transform(
+          |    generate_series(1, greatest(len(toks)-2, 1)),
+          |    i -> list_aggregate(toks[i:least(i+2, len(toks))], 'string_agg', ' ')))
+          |    AS gram
+          |  FROM t
+          |), pd AS (
+          |  SELECT doc_id, gram, COUNT(*) AS occ FROM g GROUP BY 1, 2
+          |)
+          |SELECT doc_id, CAST(SUM(occ) AS BIGINT) AS n_grams,
+          |  CAST(SUM(CASE WHEN occ >= 2 THEN occ ELSE 0 END) AS BIGINT) AS rep_grams,
+          |  CAST(SUM(CASE WHEN occ >= 2 THEN occ ELSE 0 END) * 100 // SUM(occ)
+          |    AS BIGINT) AS rep_pct,
+          |  CAST(MAX(occ) AS BIGINT) AS top_occ,
+          |  CAST(MAX(occ) * 100 // SUM(occ) AS BIGINT) AS top_pct
+          |FROM pd GROUP BY doc_id""".stripMargin)),
+
+    // 16c-b. compression-ratio quality signal (CCNet/RefinedWeb
+    // family): deflated/raw length in basis points — looping/templated
+    // text compresses anomalously WELL (low ratio), near-random noise
+    // barely compresses (ratio ≈ 10000+); natural prose sits between.
+    // The kernel is a StaticInvoke inside whole-stage codegen
+    // [rows-only: DuckDB has no DEFLATE — Round7Spec gates the
+    // discrimination ordering and determinism]
+    QueryDef("q94_compress_ratio", (s, dir) =>
+      Tables(s, dir).documents.where(col("text").isNotNull)
+        .select(col("doc_id"),
+          length(col("text")).cast("long").as("n_chars"),
+          F.deflatedLen(col("text")).cast("long").as("n_deflated"))
+        .withColumn("ratio_bp",
+          (col("n_deflated") * 10000 / greatest(col("n_chars"), lit(1L)))
+            .cast("long")),
+      // rows-only: DuckDB has no DEFLATE; Round7Spec gates the
+      // discrimination ordering and determinism
+      oracle = None)
+  )
+}

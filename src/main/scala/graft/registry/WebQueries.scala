@@ -1,0 +1,2207 @@
+package graft
+package registry
+
+import graft.etl._
+import graft.functions.{HtmlText, RobotsTxt, TextStats, UrlNorm}
+import graft.sources.{ContentRoute, GraftWarc, WarcCodec, WarcTranscode}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+
+/** Web-crawl queries: WARC ingest and transcoding, HTML extraction, URL
+  * canonicalization and filtering, robots, sitemaps, feeds, redirects,
+  * recrawl scheduling and per-domain capping.
+  */
+private[graft] object WebQueries {
+  import Shared._
+
+  /** The crawl-layer plants shared by q104/q105/q107 (hoisted so the
+    * three entries and their oracles cannot drift apart — r11 review):
+    * five URL spellings per canonical target keyed by doc_id%5, four
+    * path variants keyed by doc_id%4, and the two per-host robots
+    * policies (even hosts carry the Allow override and the $-anchored
+    * wildcard rule, odd hosts neither).
+    */
+  private def plantedCrawlUrl(id: Column): Column = {
+    val gid = id % 50
+    val h = (gid % 10).cast("string")
+    val tgt = gid.cast("string")
+    when(id % 5 === 0, concat(
+        lit("http://site"), h, lit(".example/a/"), tgt))
+      .when(id % 5 === 1, concat(
+        lit("HTTP://SITE"), h, lit(".EXAMPLE:80/a/"), tgt))
+      .when(id % 5 === 2, concat(
+        lit("http://site"), h, lit(".example/x/../a/./"), tgt))
+      .when(id % 5 === 3, concat(
+        lit("http://site"), h, lit(".example/%61/"), tgt, lit("#frag")))
+      .otherwise(concat(
+        lit("http://u:pw@site"), h, lit(".example/a/"), tgt, lit("?")))
+  }
+
+  private def plantedCrawlPath(id: Column): Column = {
+    val gid = id % 50
+    val vid = id % 4
+    when(vid === 0, concat(lit("/a/"), gid.cast("string")))
+      .when(vid === 1, concat(lit("/private/"), gid.cast("string")))
+      .when(vid === 2, concat(lit("/private/ok/"), gid.cast("string")))
+      .otherwise(concat(lit("/files/"), gid.cast("string"), lit(".tmp")))
+  }
+
+  private def plantedFilterUrl(id: Column): Column = {
+    val gid = id % 50
+    val h = (gid % 10).cast("string")
+    val tgt = gid.cast("string")
+    when(id % 10 === 0, concat(
+        lit("http://site"), h, lit(".example/news/"), tgt))
+      .when(id % 10 === 1, concat(
+        lit("http://site"), h, lit(".example/casino/"), tgt))
+      .when(id % 10 === 2, concat(
+        lit("http://site"), h, lit(".example/casino/poker/"), tgt))
+      .when(id % 10 === 3, concat(
+        lit("http://site"), h, lit(".example/a/p"), tgt, lit("xxx4")))
+      .when(id % 10 === 4, concat(
+        lit("http://h"), tgt, lit("x"), tgt, lit(".biz/news/"), tgt))
+      .when(id % 10 === 5, concat(
+        lit("http://blocked"), h, lit(".example/news/"), tgt))
+      .when(id % 10 === 6, concat(
+        lit("http://a.b.c.d.site"), h, lit(".example/news/"), tgt))
+      .when(id % 10 === 7, concat(
+        lit("http://cdn.blocked"), h, lit(".example/news/"), tgt))
+      .when(id % 10 === 8, concat(
+        lit("http://a.b.c.d.e.f.blocked"), h, lit(".example/news/"), tgt))
+      .otherwise(concat(
+        lit("www.site"), h, lit(".example/news/"), tgt))
+  }
+
+  private def blocklistDim(s: SparkSession): DataFrame =
+    s.range(10).select(
+      concat(lit("blocked"), col("id").cast("string"), lit(".example"))
+        .as("host"))
+
+  // Crawl-delay lines ride the existing groups (graftbot's on even
+  // hosts, the * group's on odd) — the q105 gate ignores them, q113
+  // reads them; sitemap discovery lines are appended host-specific in
+  // robotsPolicyDim below
+  private val RobotsFullPolicy: String =
+    "User-agent: graftbot\nDisallow: /private/\n" +
+      "Allow: /private/ok/\nDisallow: /*.tmp$\nCrawl-delay: 2.5\n\n" +
+      "User-agent: *\nDisallow: /\n"
+
+  private val RobotsNoOverride: String =
+    "User-agent: graftbot\nDisallow: /private/\n\n" +
+      "User-agent: *\nDisallow: /\nCrawl-delay: 10\n"
+
+  /** Even hosts additionally advertise two `Sitemap:` lines (one in a
+    * non-canonical spelling) APPENDED after the groups — the record is
+    * group-independent (RFC 9309 / sitemaps.org), so q105's decision
+    * table is untouched while q112 gets a discovery surface; odd hosts
+    * advertise none (the empty-array path).
+    */
+  private def robotsPolicyDim(s: SparkSession): DataFrame =
+    s.range(10).select(col("id").as("host_id"),
+      when(col("id") % 2 === 0, concat(lit(RobotsFullPolicy),
+          lit("Sitemap: http://site"), col("id").cast("string"),
+          lit(".example/sm/index.xml.gz\nSitemap: HTTP://SITE"),
+          col("id").cast("string"), lit(".EXAMPLE:80/sm/extra.xml\n")))
+        .otherwise(lit(RobotsNoOverride)).as("robots"))
+
+  /** Archive count for the WARC fixtures: one task streams one archive,
+    * so parallelism IS the archive count — Common Crawl ships tens of
+    * thousands of archives per snapshot, and a fixture that pinned 4
+    * archives at every scale left 28 of 32 cores idle from 10× up (the
+    * r11 100× probe measured q100 at 37× per decade purely from this).
+    * ~2000 records per archive, clamped to [4, 64]; a pure function of
+    * the table's row count (footer-count, no shuffle), so the record
+    * SET stays deterministic per sf across core counts, and the oracle
+    * scales (sf0.001-0.1) keep their historical 4-archive layout.
+    */
+  private def warcArchiveCount(s: SparkSession, dir: String): Int =
+    math.max(4L, math.min(64L,
+      (tableRowCount(s, dir, "documents") + 1999L) / 2000L)).toInt
+
+  /** q97 fixture: the documents table assembled into 4 real WARC archives
+    * (one per task — the format's file-count parallelism contract), each
+    * record's bytes fully determined by doc_id arithmetic so the oracle
+    * replays the parse in SQL:
+    *  - every doc → a 'response' record at http://corpus.example/doc/<id>,
+    *    WARC-Date = 2024-01-01T00:00:00Z + (id mod 86400) s, payload an
+    *    HTTP/1.1 200 text/plain response around the text (45 header
+    *    bytes — WarcCodec.httpResponse);
+    *  - id mod 7 = 3 → an extra 'metadata' record (exercises the type
+    *    filter);
+    *  - id mod 11 = 5 → the response payload is a torn capture
+    *    ("BROKEN\r\n\r\n" + text, 10 prefix bytes): WARC framing intact,
+    *    HTTP parse fails → status/body NULL;
+    *  - partition 0's archive is per-record-gzip'd (concatenated members,
+    *    the in-the-wild layout) — the decode path shares the oracle.
+    * Partitioning is hash(doc_id) so the record SET is identical across
+    * core counts (file assignment varies; the query never exposes it).
+    */
+  private def warcFixture(s: SparkSession, dir: String): String =
+    memoized(s, s"warc|$dir") {
+      // fresh per-session dir (ADVICE r10: a fixed tmpdir path keyed on
+      // dir.hashCode could serve stale or mid-rewrite part files to the
+      // *.warc* glob across JVMs/sessions); cleaned at JVM exit
+      val path = tempDirCleanedAtExit("graft_warc_docs_")
+      Tables(s, dir).documents.select(col("doc_id"), col("text"))
+        .repartition(warcArchiveCount(s, dir), col("doc_id"))
+        .sortWithinPartitions("doc_id")
+        .foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
+          val pid = org.apache.spark.TaskContext.getPartitionId()
+          val gz = pid == 0
+          val f = new java.io.File(path,
+            if (gz) s"part-$pid.warc.gz" else s"part-$pid.warc")
+          val fos = new java.io.FileOutputStream(f)
+          def writeRec(b: Array[Byte]): Unit =
+            if (gz) { // one gzip member per record, concatenated
+              val g = new java.util.zip.GZIPOutputStream(fos) {
+                // flush the member WITHOUT closing fos; release the
+                // Deflater's native buffer (ADVICE r10 leak)
+                override def close(): Unit = { finish(); `def`.end(); fos.flush() }
+              }
+              g.write(b); g.close()
+            } else fos.write(b)
+          rows.foreach { r =>
+            val id = r.getAs[Long]("doc_id")
+            val text = r.getAs[String]("text").getBytes("UTF-8")
+            val uri = s"http://corpus.example/doc/$id"
+            val date = java.time.Instant.parse("2024-01-01T00:00:00Z")
+              .plusSeconds(id % 86400).toString
+            if (id % 7 == 3)
+              writeRec(WarcCodec.buildRecord("metadata",
+                s"<urn:graft:meta:$id>", uri, date, "k: v\r\n".getBytes("US-ASCII")))
+            val payload =
+              if (id % 11 == 5) "BROKEN\r\n\r\n".getBytes("US-ASCII") ++ text
+              else WarcCodec.httpResponse(text)
+            writeRec(WarcCodec.buildRecord("response",
+              s"<urn:graft:$id>", uri, date, payload))
+          }
+          fos.close()
+        }
+      path
+    }
+
+  /** q100 fixture: the documents table as WARC archives whose response
+    * bodies arrive in the charsets a real web crawl serves, keyed by
+    * doc_id mod 5 (each body is the doc text plus a deterministic
+    * non-ASCII suffix, encoded in the declared charset — the oracle knows
+    * the decoded STRING; Spark must recover it by genuinely transcoding
+    * the planted bytes):
+    *  - 0: UTF-8 body, NO charset parameter (the modern-web default path);
+    *  - 1: ISO-8859-1 (`charset=iso-8859-1`);
+    *  - 2: Windows-1250 (`charset=windows-1250` — the reference corpus's
+    *    Polish locale);
+    *  - 3: UTF-16 with BOM (`charset=utf-16`);
+    *  - 4: UTF-8 bytes labeled `charset=x-graft-unknown` — must yield
+    *    NULL text + `unsupported_charset`, never a guessed decode.
+    * Additionally doc_id % 7 = 6 docs carry a stray BEL (U+0007, valid in
+    * every planted charset) before the suffix: q100's transcode passes it
+    * THROUGH (transcoding fixes labeling, not content), and q101's
+    * encoding gate (q99's control-char signal) then drops those docs —
+    * the two-layer contract. documents.text is printable-ASCII by
+    * construction (TESTDATA), so every legacy-charset encode is lossless.
+    * Partition 0's archive is per-record-gzip'd like the q97 fixture.
+    */
+  private def warcCharsetFixture(s: SparkSession, dir: String): String =
+    memoized(s, s"warc_cs|$dir") {
+      val path = tempDirCleanedAtExit("graft_warc_cs_")
+      Tables(s, dir).documents.select(col("doc_id"), col("text"))
+        .repartition(warcArchiveCount(s, dir), col("doc_id"))
+        .sortWithinPartitions("doc_id")
+        .foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
+          val pid = org.apache.spark.TaskContext.getPartitionId()
+          val gz = pid == 0
+          val f = new java.io.File(path,
+            if (gz) s"part-$pid.warc.gz" else s"part-$pid.warc")
+          val fos = new java.io.FileOutputStream(f)
+          def writeRec(b: Array[Byte]): Unit =
+            if (gz) {
+              val g = new java.util.zip.GZIPOutputStream(fos) {
+                override def close(): Unit = { finish(); `def`.end(); fos.flush() }
+              }
+              g.write(b); g.close()
+            } else fos.write(b)
+          rows.foreach { r =>
+            val id = r.getAs[Long]("doc_id")
+            val text = r.getAs[String]("text") +
+              (if (id % 7 == 6) "\u0007" else "")
+            val date = java.time.Instant.parse("2024-01-01T00:00:00Z")
+              .plusSeconds(id % 86400).toString
+            val (ctype, body) = ((id % 5).toInt: @annotation.switch) match {
+              case 0 => ("text/plain", (text + " δ✓").getBytes("UTF-8"))
+              case 1 => ("text/plain; charset=iso-8859-1",
+                (text + " café æøå").getBytes("ISO-8859-1"))
+              case 2 => ("text/plain; charset=windows-1250",
+                (text + " śćżź").getBytes("windows-1250"))
+              case 3 => ("text/plain; charset=utf-16",
+                (text + " Ω16").getBytes("UTF-16"))
+              case _ => ("text/plain; charset=x-graft-unknown",
+                text.getBytes("UTF-8"))
+            }
+            writeRec(WarcCodec.buildRecord("response", s"<urn:graft:cs:$id>",
+              s"http://corpus.example/doc/$id", date,
+              WarcCodec.httpResponse(body, ctype)))
+          }
+          fos.close()
+        }
+      path
+    }
+
+  /** q111 fixture: a MIXED-TYPE crawl — the payload classes a real
+    * archive interleaves, keyed by doc_id mod 5 so the oracle composes
+    * every expected output from arithmetic while Spark must genuinely
+    * dispatch on the declared Content-Type and run the per-type kernel:
+    *  - 0: `text/html; charset=utf-8` — a page wrapping the doc text
+    *    (head elision + block structure exercise the q103 extractor
+    *    INSIDE the route);
+    *  - 1: `text/plain; charset=iso-8859-1` — legacy-charset prose with
+    *    a non-ASCII suffix (transcode inside the route);
+    *  - 2: `image/bmp` — a real BMP header whose dims are id arithmetic
+    *    (the q83 kernel reads metadata; bytes never touch a text path);
+    *  - 3: `application/pdf` — routed to the PdfText extractor; the
+    *    payload is a bare `%PDF-` marker with no objects, so the route
+    *    answers with an attributable `no_text`, never mangled prose
+    *    (q123 oracles the REAL extraction over full planted PDFs);
+    *  - 4: NO Content-Type header at all — unknown, counted skip.
+    * Partition 0's archive is per-record-gzip'd like the q97 fixture.
+    */
+  private def warcMixedFixture(s: SparkSession, dir: String): String =
+    memoized(s, s"warc_mixed|$dir") {
+      val path = tempDirCleanedAtExit("graft_warc_mixed_")
+      Tables(s, dir).documents.select(col("doc_id"), col("text"))
+        .repartition(warcArchiveCount(s, dir), col("doc_id"))
+        .sortWithinPartitions("doc_id")
+        .foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
+          val pid = org.apache.spark.TaskContext.getPartitionId()
+          val gz = pid == 0
+          val f = new java.io.File(path,
+            if (gz) s"part-$pid.warc.gz" else s"part-$pid.warc")
+          val fos = new java.io.FileOutputStream(f)
+          def writeRec(b: Array[Byte]): Unit =
+            if (gz) {
+              val g = new java.util.zip.GZIPOutputStream(fos) {
+                override def close(): Unit = { finish(); `def`.end(); fos.flush() }
+              }
+              g.write(b); g.close()
+            } else fos.write(b)
+          def le32(v: Int): Array[Byte] = Array[Byte](
+            (v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
+            ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
+          def bmp(w: Int, h: Int): Array[Byte] =
+            // "BM" file header (size/reserved/offset) + BITMAPINFOHEADER
+            // prefix through bitcount — the q83 fixture's layout
+            Array[Byte]('B', 'M') ++ le32(0) ++ le32(0) ++ le32(0x36) ++
+              le32(40) ++ le32(w) ++ le32(h) ++
+              Array[Byte](1, 0, 24, 0)
+          rows.foreach { r =>
+            val id = r.getAs[Long]("doc_id")
+            val text = r.getAs[String]("text")
+            val date = java.time.Instant.parse("2024-01-01T00:00:00Z")
+              .plusSeconds(id % 86400).toString
+            val payload = ((id % 6).toInt: @annotation.switch) match {
+              case 0 => WarcCodec.httpResponse(
+                (s"<html><head><title>skip</title></head><body><h1>Doc " +
+                  s"$id</h1><p>$text</p></body></html>").getBytes("UTF-8"),
+                "text/html; charset=utf-8")
+              case 1 => WarcCodec.httpResponse(
+                (text + " café").getBytes("ISO-8859-1"),
+                "text/plain; charset=iso-8859-1")
+              case 2 => WarcCodec.httpResponse(
+                bmp(1 + (id % 1024).toInt, 1 + (id % 768).toInt),
+                "image/bmp")
+              case 3 => WarcCodec.httpResponse(
+                (s"%PDF-1.4 graft $id").getBytes("US-ASCII"),
+                "application/pdf")
+              case 5 => WarcCodec.httpResponse(
+                (s"""<?xml version="1.0"?><rss version="2.0"><channel>""" +
+                  s"<title>F $id</title>" +
+                  (0L to id % 3).map(i =>
+                    s"<item><title>i$i</title><link>http://corpus" +
+                      s".example/p/$id/$i</link></item>").mkString +
+                  "</channel></rss>").getBytes("UTF-8"),
+                "application/rss+xml")
+              case _ => // untyped: no Content-Type header anywhere
+                ("HTTP/1.1 200 OK\r\nX-Graft: untyped\r\n\r\n")
+                  .getBytes("US-ASCII") ++ text.getBytes("UTF-8")
+            }
+            writeRec(WarcCodec.buildRecord("response", s"<urn:graft:mx:$id>",
+              s"http://corpus.example/doc/$id", date, payload))
+          }
+          fos.close()
+        }
+      path
+    }
+
+  /** q142 fixture: redirect chains planted by doc_id arithmetic — chain
+    * length L = id%4 (L=0 ids plant only their 200 page), hop j at
+    * /r/{id}/{j} answering 301/302 alternating with Location to the next
+    * hop, the last hop landing on /page/{id} — except id%9=8 chains,
+    * whose last hop points BACK to hop 0 (the loop misconfiguration the
+    * resolver must bound). id%7=3 chains additionally capture hop 0 a
+    * SECOND time, one hour EARLIER, redirecting straight to the page —
+    * the duplicate-source shape a real frontier produces; the resolver
+    * must pick the newest capture (the full chain), or final_url/hops
+    * replay wrong and row counts multiply through the doubling joins.
+    */
+  private def warcRedirectFixture(s: SparkSession, dir: String): String =
+    memoized(s, s"warc_redir|$dir") {
+      val path = tempDirCleanedAtExit("graft_warc_redir_")
+      Tables(s, dir).documents.select(col("doc_id"))
+        .repartition(warcArchiveCount(s, dir), col("doc_id"))
+        .sortWithinPartitions("doc_id")
+        .foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
+          val pid = org.apache.spark.TaskContext.getPartitionId()
+          val f = new java.io.File(path, s"part-$pid.warc")
+          val fos = new java.io.FileOutputStream(f)
+          rows.foreach { r =>
+            val id = r.getAs[Long]("doc_id")
+            val h = (id % 50) % 10
+            val chainLen = (id % 4).toInt
+            val loop = id % 9 == 8 && chainLen > 0
+            val date = java.time.Instant.parse("2024-01-01T00:00:00Z")
+              .plusSeconds(id % 86400).toString
+            def u(j: Int) = s"http://site$h.example/r/$id/$j"
+            val page = s"http://site$h.example/page/$id"
+            for (j <- 0 until chainLen) {
+              val st = if (j % 2 == 0) 301 else 302
+              val dst =
+                if (j < chainLen - 1) u(j + 1)
+                else if (loop) u(0) else page
+              fos.write(WarcCodec.buildRecord("response",
+                s"<urn:graft:rd:$id:$j>", u(j), date,
+                WarcCodec.httpRedirect(st, dst)))
+            }
+            // duplicate capture of hop 0: an hour older, shortcutting
+            // straight to the page — the stale edge the newest-capture
+            // winner must discard
+            if (chainLen > 0 && id % 7 == 3) {
+              val older = java.time.Instant
+                .parse("2024-01-01T00:00:00Z")
+                .plusSeconds(id % 86400 - 3600).toString
+              fos.write(WarcCodec.buildRecord("response",
+                s"<urn:graft:rd:$id:0d>", u(0), older,
+                WarcCodec.httpRedirect(301, page)))
+            }
+            fos.write(WarcCodec.buildRecord("response",
+              s"<urn:graft:rd:$id:p>", page, date,
+              WarcCodec.httpResponse(s"Doc $id".getBytes("UTF-8"),
+                "text/html")))
+          }
+          fos.close()
+        }
+      path
+    }
+
+  val all: Seq[QueryDef] = Seq(
+    // 29c. WARC (ISO 28500) web-archive ingest — the Common Crawl
+    // container, the wire format of the LLM-corpus side of this engine
+    // (the ZIP/SHP treatment applied to web captures): 4 real archives
+    // assembled from doc_id arithmetic (one gzip'd with concatenated
+    // per-record members), stream-parsed back by WarcCodec, HTTP
+    // payloads split, torn captures surfacing as NULLs. The oracle
+    // replays every emitted field from the documents table. Scale:
+    // parallelism = archive count (one task streams one archive,
+    // constant memory) — the readZip contract.
+    QueryDef("q97_warc_ingest", (s, dir) => {
+      val warcDir = warcFixture(s, dir)
+      GraftWarc.read(s, s"$warcDir/*.warc*")
+        .where(col("warc_type") === "response")
+        .select(
+          regexp_extract(col("target_uri"), "/doc/([0-9]+)$", 1)
+            .cast("long").as("doc_id"),
+          col("http_status"),
+          col("content_length"),
+          col("warc_date").as("warc_ts"),
+          length(col("body")).cast("long").as("n_body_bytes"))
+    },
+      // q97: every emitted field is doc_id arithmetic over the documents
+      // table — Spark must recover the same numbers by stream-parsing the
+      // real WARC containers it assembled (45 = the fixed HTTP/1.1 200
+      // text/plain header byte count; 10 = the torn capture's "BROKEN"
+      // prefix; torn HTTP → NULL status/body)
+      oracle = Some("""SELECT doc_id,
+          | CASE WHEN doc_id % 11 = 5 THEN NULL ELSE 200 END AS http_status,
+          | CAST(CASE WHEN doc_id % 11 = 5 THEN 10 ELSE 45 END
+          |   + octet_length(encode(text)) AS BIGINT) AS content_length,
+          | TIMESTAMP '2024-01-01 00:00:00' + to_seconds(doc_id % 86400) AS warc_ts,
+          | CASE WHEN doc_id % 11 = 5 THEN NULL
+          |   ELSE CAST(octet_length(encode(text)) AS BIGINT) END AS n_body_bytes
+          |FROM documents""".stripMargin)),
+
+    // 29d. outlink host extraction — the WARC → host-authority-graph
+    // bridge (TextStats.outlinkHosts feeds PageRank's edge shape): hrefs
+    // extracted map-side from a deterministic dirty-HTML fixture (one
+    // absolute anchor per doc, a second for doc_id%3=0 — colliding hosts
+    // when 6·doc_id ≡ 0 mod 20 exercise the count — and a RELATIVE link
+    // for doc_id%5=1 that must drop), one narrow (doc_id, host) shuffle.
+    // Oracle replays the same regexp extraction in DuckDB — parse vs
+    // parse, not fixture arithmetic.
+    QueryDef("q98_outlink_hosts", (s, dir) => {
+      val id = col("doc_id")
+      val html = concat(col("text"),
+        lit(" <a href=\"http://host"), (id % 20).cast("string"),
+        lit(".example/p/"), id.cast("string"), lit("\">x</a>"),
+        when(id % 3 === 0,
+          concat(lit(" <a href=\"http://host"), ((id * 7) % 20).cast("string"),
+            lit(".example/q/"), id.cast("string"), lit("\">y</a>")))
+          .otherwise(lit("")),
+        when(id % 5 === 1, lit(" <a href=\"/rel/p\">z</a>"))
+          .otherwise(lit("")))
+      TextStats.outlinkHosts(
+        Tables(s, dir).documents.select(id, html.as("html")),
+        "doc_id", "html")
+    },
+      // q98: both engines run the SAME href/host regexp extraction over the
+      // same constructed HTML — parse vs parse (patterns are
+      // dialect-neutral: no lookarounds/backreferences, so Java regex and
+      // RE2 extract identically)
+      oracle = Some("""WITH h AS (
+          |  SELECT doc_id, text
+          |    || ' <a href="http://host' || (doc_id % 20) || '.example/p/' || doc_id || '">x</a>'
+          |    || CASE WHEN doc_id % 3 = 0 THEN
+          |         ' <a href="http://host' || ((doc_id * 7) % 20) || '.example/q/' || doc_id || '">y</a>'
+          |       ELSE '' END
+          |    || CASE WHEN doc_id % 5 = 1 THEN ' <a href="/rel/p">z</a>' ELSE '' END AS html
+          |  FROM documents
+          |), u AS (
+          |  SELECT doc_id, unnest(regexp_extract_all(html, 'href="([^"]+)"', 1)) AS url FROM h
+          |), e AS (
+          |  SELECT doc_id, regexp_extract(url, '^https?://([^/]+)', 1) AS host FROM u
+          |)
+          |SELECT doc_id, host, COUNT(*) AS n_links FROM e
+          |WHERE host <> '' GROUP BY doc_id, host""".stripMargin)),
+
+    // 26m. encoding-garbage quality signal (the CCNet-style filter a
+    // WARC-fed corpus needs before any text op): U+FFFD tracers,
+    // double-encoded mojibake prefixes, stray C0 controls — planted
+    // deterministically (doc_id%13=4 → 2 replacement chars, %17=2 →
+    // 'Ã©Ã¨' = 2 mojibake prefixes, %19=3 → one BEL) and counted back by
+    // the same replace/regexp arithmetic in both engines. Map-side only:
+    // zero shuffles, scans prune to (doc_id, text).
+    QueryDef("q99_encoding_quality", (s, dir) => {
+      val id = col("doc_id")
+      val dirty = concat(col("text"),
+        when(id % 13 === 4, lit("��")).otherwise(lit("")),
+        when(id % 17 === 2, lit("Ã©Ã¨")).otherwise(lit("")),
+        when(id % 19 === 3, lit("\u0007")).otherwise(lit("")))
+      Tables(s, dir).documents.select(id,
+        TextStats.replacementCount(dirty).as("n_replacement"),
+        TextStats.mojibakeCount(dirty).as("n_mojibake"),
+        TextStats.controlCharCount(dirty).as("n_control"))
+        .withColumn("is_clean",
+          col("n_replacement") + col("n_mojibake") + col("n_control") === 0)
+    },
+      // q99: same plant + same replace/regexp count arithmetic in DuckDB;
+      // counts are length DIFFS on the same string, so base-text length
+      // semantics cancel per engine
+      oracle = Some("""WITH d AS (
+          |  SELECT doc_id, text
+          |    || CASE WHEN doc_id % 13 = 4 THEN chr(65533) || chr(65533) ELSE '' END
+          |    || CASE WHEN doc_id % 17 = 2 THEN chr(195) || chr(169) || chr(195) || chr(168) ELSE '' END
+          |    || CASE WHEN doc_id % 19 = 3 THEN chr(7) ELSE '' END AS t
+          |  FROM documents
+          |), c AS (
+          |  SELECT doc_id,
+          |    CAST(length(t) - length(replace(t, chr(65533), '')) AS BIGINT) AS n_replacement,
+          |    CAST((length(t) - length(replace(t, chr(195), '')))
+          |       + (length(t) - length(replace(t, chr(226) || chr(8364), ''))) / 2 AS BIGINT) AS n_mojibake,
+          |    CAST(length(t) - length(regexp_replace(t, '[\x01-\x08\x0b\x0c\x0e-\x1f]', '', 'g')) AS BIGINT) AS n_control
+          |  FROM d
+          |)
+          |SELECT doc_id, n_replacement, n_mojibake, n_control,
+          |  n_replacement + n_mojibake + n_control = 0 AS is_clean
+          |FROM c""".stripMargin)),
+
+    // 29e. WARC body charset transcoding — the step between q97's raw
+    // bytes and every text operator (VERDICT r10 gap #1): charset from
+    // the HTTP Content-Type parameter, STRICT decode to UTF-8 (mislabeled
+    // bytes → NULL + reason, never half-mojibake), unknown labels →
+    // NULL + 'unsupported_charset'. Bodies planted in ISO-8859-1 /
+    // Windows-1250 / UTF-16 / unlabeled-UTF-8 by doc_id arithmetic; the
+    // oracle knows the decoded STRINGS, Spark must genuinely transcode
+    // the bytes. Map-side kernels — zero shuffles.
+    QueryDef("q100_warc_transcode", (s, dir) => {
+      val cs = WarcTranscode.charsetOf(col("content_type"))
+      // decode ONCE, derive the reason from the materialized text —
+      // failReason(body, cs) inline would run the strict decode twice
+      // per record (measured at the r11 100× probe)
+      GraftWarc.read(s, s"${warcCharsetFixture(s, dir)}/*.warc*")
+        .where(col("warc_type") === "response")
+        .select(
+          regexp_extract(col("target_uri"), "/doc/([0-9]+)$", 1)
+            .cast("long").as("doc_id"),
+          cs.as("charset"),
+          WarcTranscode.utf8Text(col("body"), cs).as("text_utf8"))
+        .withColumn("reason",
+          WarcTranscode.failReasonFromText(col("text_utf8"), col("charset")))
+    },
+      // q100: the decoded strings from the charset plant — the oracle
+      // composes text || suffix literals (already UTF-8 in the SQL text);
+      // Spark must recover identical strings by transcoding the planted
+      // ISO-8859-1 / Windows-1250 / UTF-16 bytes. The unknown-label class
+      // must surface as NULL + reason, never as a guessed decode.
+      oracle = Some("""WITH t AS (
+          |  SELECT doc_id, text ||
+          |    CASE WHEN doc_id % 7 = 6 THEN chr(7) ELSE '' END AS text
+          |  FROM documents
+          |)
+          |SELECT doc_id,
+          |  CASE CAST(doc_id % 5 AS INTEGER)
+          |    WHEN 1 THEN 'iso-8859-1' WHEN 2 THEN 'windows-1250'
+          |    WHEN 3 THEN 'utf-16' WHEN 4 THEN 'x-graft-unknown'
+          |    ELSE NULL END AS charset,
+          |  CASE CAST(doc_id % 5 AS INTEGER)
+          |    WHEN 0 THEN text || ' δ✓'
+          |    WHEN 1 THEN text || ' café æøå'
+          |    WHEN 2 THEN text || ' śćżź'
+          |    WHEN 3 THEN text || ' Ω16'
+          |    ELSE NULL END AS text_utf8,
+          |  CASE WHEN doc_id % 5 = 4 THEN 'unsupported_charset'
+          |    ELSE NULL END AS reason
+          |FROM t""".stripMargin)),
+
+    // 48b. WEB-FED corpus-prep funnel — the r10 WARC pieces composed
+    // end-to-end as ONE lazy program (VERDICT r10 task 3): archive bytes
+    // (q97 parse) → HTTP bodies → strict charset transcode (q100) →
+    // encoding-garbage gate (q99 signals) → the q90 funnel (clean →
+    // lang/quality → exact dedup → near-dup keeper → decontaminate →
+    // pack). Full stage-count oracle: the ingest/encoding stages are
+    // doc_id arithmetic over the charset fixture; the inner stages are
+    // the q90 composed replay over the transcoded text (the suffixed
+    // strings BOTH engines can reconstruct).
+    QueryDef("q101_warc_funnel", (s, dir) => {
+      // memoized like q90: the CC loop materializes eagerly; one prep
+      // per (session, sf) so repeated invocations don't stack cache
+      val prep = memoized(s, s"q101_prep|$dir") {
+        val d = Tables(s, dir).documents
+        Pipeline.prepareWebCorpus(
+          GraftWarc.read(s, s"${warcCharsetFixture(s, dir)}/*.warc*"),
+          docId = regexp_extract(col("target_uri"), "/doc/([0-9]+)$", 1),
+          bench = d.where(col("doc_id") < 40)
+            .select(col("doc_id"), substring(col("text"), 1, 150).as("text")),
+          benchId = "doc_id", benchText = "text")
+      }
+      prep.funnel
+    },
+      // q101: the q90 composed replay with the web-ingest stages in front.
+      // w0/w1 are the charset fixture's record arithmetic (every doc → one
+      // response, all parse); w2 drops the unsupported-charset class
+      // (doc_id%5=4); the inner funnel's 0_raw is the encoding-clean
+      // handoff (also drops the BEL plant, doc_id%7=6); the remaining CTEs
+      // are q90's exact per-stage replays over the TRANSCODED text —
+      // text || suffix(doc_id%5) — which both engines reconstruct
+      // character-identically (the q100 oracle proves the transcode side).
+      // No image gate on the web path. The near-dup recall argument is
+      // q19's, at the web config (128 perms × 64 bands, candidate
+      // pre-filter at 5%): pair-miss ≤ 1e-8 at J = 0.5, and the exact
+      // all-pairs bigram-Jaccard-≥50 oracle matches the engine's
+      // LSH + exact-verify output.
+      oracle = Some("""WITH RECURSIVE raw AS (
+          |  SELECT doc_id, text
+          |    || CASE WHEN doc_id % 7 = 6 THEN chr(7) ELSE '' END
+          |    || CASE CAST(doc_id % 5 AS INTEGER)
+          |         WHEN 0 THEN ' δ✓'
+          |         WHEN 1 THEN ' café æøå'
+          |         WHEN 2 THEN ' śćżź'
+          |         WHEN 3 THEN ' Ω16'
+          |         ELSE NULL END AS text
+          |  FROM documents WHERE doc_id % 5 <> 4
+          |), enc AS (
+          |  SELECT doc_id, text FROM raw WHERE doc_id % 7 <> 6
+          |), cleaned AS (
+          |  SELECT doc_id,
+          |    trim(regexp_replace(
+          |      regexp_replace(
+          |        nfc_normalize(regexp_replace(text, '<[^>]*>', '', 'g')),
+          |        '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z][A-Za-z]+', '<EMAIL>', 'g'),
+          |      '\s+', ' ', 'g')) AS text
+          |  FROM enc
+          |), gated AS (
+          |  SELECT doc_id, text FROM (
+          |    SELECT doc_id, text,
+          |      CASE WHEN regexp_matches(text, '[\x{4e00}-\x{9fff}]') THEN 'zh'
+          |        WHEN contains(p, ' der ') OR contains(p, ' und ') OR contains(p, ' nicht ') THEN 'de'
+          |        WHEN contains(p, ' le ') OR contains(p, ' les ') OR contains(p, ' est ') THEN 'fr'
+          |        WHEN contains(p, ' el ') OR contains(p, ' los ') OR contains(p, ' es ') THEN 'es'
+          |        ELSE 'en' END AS lang,
+          |      least(100, CAST(floor(500.0 * (
+          |          (length(sp) - length(replace(sp, ' the ', ''))) / 5
+          |        + (length(sp) - length(replace(sp, ' a ', ''))) / 3
+          |        + (length(sp) - length(replace(sp, ' and ', ''))) / 5)
+          |        / len(string_split_regex(trim(text), '\s+'))) AS BIGINT)) AS quality
+          |    FROM (SELECT doc_id, text, ' ' || lower(text) || ' ' AS p,
+          |          ' ' || text || ' ' AS sp FROM cleaned))
+          |  WHERE lang = 'en' AND quality >= 10
+          |), x AS (
+          |  SELECT MIN(doc_id) AS doc_id, text FROM gated GROUP BY text
+          |), s AS (
+          |  SELECT doc_id, list_distinct(list_transform(
+          |    generate_series(1, greatest(len(toks)-1, 1)),
+          |    i -> CASE WHEN i+1 <= len(toks) THEN toks[i] || ' ' || toks[i+1]
+          |         ELSE toks[i] END)) AS sh
+          |  FROM (SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS toks FROM x)
+          |), p AS (
+          |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
+          |  FROM s a JOIN s b ON a.doc_id < b.doc_id
+          |  WHERE floor(len(list_intersect(a.sh, b.sh)) * 100.0 /
+          |        greatest(len(list_distinct(list_concat(a.sh, b.sh))), 1)) >= 50
+          |), e AS (
+          |  SELECT id_a AS src, id_b AS dst FROM p
+          |  UNION SELECT id_b, id_a FROM p
+          |), reach AS (
+          |  SELECT doc_id AS id, doc_id AS comp FROM x
+          |  UNION
+          |  SELECT e.src, reach.comp FROM e JOIN reach ON e.dst = reach.id
+          |), neardedup AS (
+          |  SELECT x.doc_id, x.text FROM x JOIN (
+          |    SELECT id AS doc_id FROM reach GROUP BY id HAVING id = MIN(comp)
+          |  ) k USING (doc_id)
+          |), bench AS (
+          |  SELECT doc_id, substr(text, 1, 150) AS text FROM documents WHERE doc_id < 40
+          |), cs AS (
+          |  SELECT DISTINCT unnest(sh) AS h FROM (
+          |    SELECT list_distinct(list_transform(
+          |      generate_series(1, greatest(len(toks)-4, 1)),
+          |      i -> list_aggregate(toks[i:least(i+4, len(toks))], 'string_agg', ' '))) AS sh
+          |    FROM (SELECT string_split_regex(trim(lower(text)), '\s+') AS toks FROM bench))
+          |), bs AS (
+          |  SELECT doc_id AS train_id, unnest(sh) AS h FROM (
+          |    SELECT doc_id, list_distinct(list_transform(
+          |      generate_series(1, greatest(len(toks)-4, 1)),
+          |      i -> list_aggregate(toks[i:least(i+4, len(toks))], 'string_agg', ' '))) AS sh
+          |    FROM (SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS toks FROM neardedup))
+          |), contam AS (
+          |  SELECT train_id FROM (
+          |    SELECT train_id, COUNT(*) AS n, COUNT(cs.h) AS n_hit
+          |    FROM bs LEFT JOIN cs USING (h) GROUP BY train_id)
+          |  WHERE floor(n_hit * 100.0 / n) >= 50
+          |), decon AS (
+          |  SELECT doc_id FROM neardedup
+          |  WHERE doc_id NOT IN (SELECT train_id FROM contam)
+          |)
+          |SELECT 'w0_records' AS stage, COUNT(*) AS n_docs FROM documents
+          |UNION ALL SELECT 'w1_http_bodies', COUNT(*) FROM documents
+          |UNION ALL SELECT 'w1b_text_routed', COUNT(*) FROM documents
+          |UNION ALL SELECT 'w2_transcoded', COUNT(*) FROM raw
+          |UNION ALL SELECT '0_raw', COUNT(*) FROM enc
+          |UNION ALL SELECT '1_gated', COUNT(*) FROM gated
+          |UNION ALL SELECT '2_exact_dedup', COUNT(*) FROM x
+          |UNION ALL SELECT '3_near_dedup', COUNT(*) FROM neardedup
+          |UNION ALL SELECT '4_decontaminated', COUNT(*) FROM decon
+          |UNION ALL SELECT '5_packed', COUNT(*) FROM decon""".stripMargin)),
+
+    // 26n. HTML → visible-text extraction — the real extractor between a
+    // transcoded capture (q100) and the text operators (q98's href kernel
+    // reads the markup's LINKS; this reads its TEXT). The fixture wraps
+    // each doc in a full page exercising every documented rule: head
+    // (title/style/script) elision with raw-text scanning (the script
+    // contains `1<2` and a quoted `</div>`), a chrome comment, a
+    // quote-aware `>` inside an attribute, block-vs-inline line breaks,
+    // and the three entity classes (named/decimal/hex) — including
+    // `&lt;b&gt;` decoding to a literal `<b>` that must NOT be re-parsed
+    // (entity decode runs after tag removal). Oracle composes the
+    // expected text from documents.text; Spark must genuinely parse.
+    // Map-side kernel — zero shuffles.
+    QueryDef("q103_html_extract", (s, dir) => {
+      val id = col("doc_id")
+      val html = concat(
+        lit("<!DOCTYPE html><html><head><title>skip</title>" +
+          "<style>body{color:#000;}</style>" +
+          "<script>if(1<2){var s=\"</div>\";}</script></head><body>" +
+          "<!-- chrome: <p>never shown</p> -->" +
+          "<nav><a href=\"/home\">Home</a> | " +
+          "<a href=\"/about\" title=\"a>b\">About</a></nav><h1>Doc "),
+        id.cast("string"), lit("</h1><p>"), col("text"), lit("</p>"),
+        when(id % 3 === 0,
+          lit("<p>Extra &amp; entity &#233; &#x41; test</p>"))
+          .otherwise(lit("")),
+        when(id % 7 === 5,
+          lit("<p>&lt;b&gt;not a tag&lt;/b&gt;</p>")).otherwise(lit("")),
+        lit("<footer>Copyright &copy; 2024</footer></body></html>"))
+      Tables(s, dir).documents
+        .select(id, HtmlText.extract(html).as("page_text"))
+        .withColumn("n_lines",
+          size(split(col("page_text"), "\n")).cast("long"))
+    },
+      // q103: the oracle composes the EXPECTED extraction from
+      // documents.text (the entity literals already decoded in the SQL
+      // source — 'é' for &#233;, '©' for &copy;); Spark must recover
+      // identical strings by genuinely parsing the planted page (head/
+      // script/style/comment elision, quote-aware tags, entity decode)
+      oracle = Some("""SELECT doc_id,
+          |  'Home | About' || chr(10) || 'Doc ' || doc_id || chr(10) || text
+          |  || CASE WHEN doc_id % 3 = 0
+          |       THEN chr(10) || 'Extra & entity é A test' ELSE '' END
+          |  || CASE WHEN doc_id % 7 = 5
+          |       THEN chr(10) || '<b>not a tag</b>' ELSE '' END
+          |  || chr(10) || 'Copyright © 2024' AS page_text,
+          |  CAST(4 + CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 0 END
+          |         + CASE WHEN doc_id % 7 = 5 THEN 1 ELSE 0 END
+          |    AS BIGINT) AS n_lines
+          |FROM documents""".stripMargin)),
+
+    // 26o. URL canonicalization + crawl dedup — the identity key a web
+    // corpus needs BEFORE content dedup (refetches of one page under
+    // many spellings collapse for free). Five planted spellings per
+    // canonical target (case/default-port, dot segments, %-encoding +
+    // fragment, userinfo + empty query) all canonicalize to the same
+    // string; doc_id%50 keys the target so ~10 captures share each.
+    // Kernel map-side; the dedup is ONE narrow shuffle on the canonical
+    // string (both window functions share the partition key).
+    QueryDef("q104_url_canon", (s, dir) => {
+      val id = col("doc_id")
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("url_canon"))
+      Tables(s, dir).documents
+        .select(id,
+          UrlNorm.canonicalize(plantedCrawlUrl(id)).as("url_canon"))
+        .withColumn("n_captures", count(lit(1)).over(w))
+        .withColumn("is_keeper", id === min(id).over(w))
+    },
+      // q104: every planted spelling canonicalizes to the same target
+      // string, which the oracle composes directly from doc_id arithmetic;
+      // Spark must recover it by genuinely normalizing each variant
+      oracle = Some("""WITH u AS (
+          |  SELECT doc_id,
+          |    'http://site' || ((doc_id % 50) % 10) || '.example/a/'
+          |      || (doc_id % 50) AS url_canon
+          |  FROM documents
+          |)
+          |SELECT doc_id, url_canon,
+          |  COUNT(*) OVER (PARTITION BY url_canon) AS n_captures,
+          |  doc_id = MIN(doc_id) OVER (PARTITION BY url_canon) AS is_keeper
+          |FROM u""".stripMargin)),
+
+    // 29f. robots.txt gate (RFC 9309) — the crawl-politeness audit over
+    // the canonical-URL frontier: a per-host robots dim (10 hosts, two
+    // policies — even hosts carry an Allow override and a $-anchored
+    // wildcard rule, odd hosts neither) BROADCAST-joins the captures,
+    // and the kernel evaluates longest-match per path map-side. Plan:
+    // one broadcast hash join, zero wide shuffles. The oracle replays
+    // the decision table the planted policies imply.
+    QueryDef("q105_robots_gate", (s, dir) => {
+      val id = col("doc_id")
+      Tables(s, dir).documents
+        .select(id, (id % 50 % 10).as("host_id"),
+          plantedCrawlPath(id).as("path"))
+        .join(broadcast(robotsPolicyDim(s)), "host_id")
+        .select(id, col("path"),
+          RobotsTxt.allowed(col("robots"), lit("graftbot"), col("path"))
+            .as("allowed_bot"),
+          RobotsTxt.allowed(col("robots"), lit("otherbot"), col("path"))
+            .as("allowed_other"))
+    },
+      // q105: the oracle is the decision table the planted policies imply
+      // (vid 0 allowed, vid 1 blocked, vid 2/3 split on host parity — the
+      // Allow override and the $-anchored wildcard exist on even hosts
+      // only); Spark must reach it by parsing and longest-matching the
+      // actual robots text through the broadcast join
+      oracle = Some("""WITH u AS (
+          |  SELECT doc_id, (doc_id % 50) % 10 AS h,
+          |    CAST(doc_id % 4 AS INTEGER) AS vid, doc_id % 50 AS gid
+          |  FROM documents
+          |)
+          |SELECT doc_id,
+          |  CASE vid WHEN 0 THEN '/a/' || gid
+          |    WHEN 1 THEN '/private/' || gid
+          |    WHEN 2 THEN '/private/ok/' || gid
+          |    ELSE '/files/' || gid || '.tmp' END AS path,
+          |  CASE WHEN vid = 0 THEN TRUE WHEN vid = 1 THEN FALSE
+          |    WHEN vid = 2 THEN h % 2 = 0 ELSE h % 2 = 1 END AS allowed_bot,
+          |  FALSE AS allowed_other
+          |FROM u""".stripMargin)),
+
+    // 29g. anchor-text extraction — the other half of the q98 link
+    // bridge (hosts feed PageRank; anchor TEXT is the classic relevance
+    // signal a link-graph feature store wants). Two same-pattern group
+    // extractions zip positionally into (href, anchor) pairs, then each
+    // href canonicalizes in flight (q104's kernel: port strip + dot
+    // segments; relative links → NULL canon). Map-side throughout.
+    QueryDef("q106_anchor_text", (s, dir) => {
+      val id = col("doc_id")
+      val html = concat(col("text"),
+        lit(" <a href=\"http://site"), (id % 20).cast("string"),
+        lit(".example:80/p/../a/"), id.cast("string"), lit("\">go "),
+        (id % 9).cast("string"), lit("</a>"),
+        when(id % 5 === 1, lit(" <a href=\"/rel/p\">rel</a>"))
+          .otherwise(lit("")))
+      val pat = "<a href=\"([^\"]+)\"[^>]*>([^<]*)</a>"
+      Tables(s, dir).documents.select(id, html.as("html"))
+        .select(id, explode(arrays_zip(
+          regexp_extract_all(col("html"), lit(pat), lit(1)).as("href"),
+          regexp_extract_all(col("html"), lit(pat), lit(2)).as("anchor")))
+          .as("p"))
+        .select(id, col("p.href").as("href"),
+          UrlNorm.canonicalize(col("p.href")).as("url_canon"),
+          col("p.anchor").as("anchor"))
+    },
+      // q106: parse vs parse (the q98 posture) — DuckDB replays the same
+      // two-group extraction and zips positionally; the canonical column
+      // is the q104 composition the planted href implies (port strip +
+      // dot segments; the relative link yields NULL)
+      oracle = Some("""WITH d AS (
+          |  SELECT doc_id, text || ' <a href="http://site' || (doc_id % 20)
+          |    || '.example:80/p/../a/' || doc_id || '">go ' || (doc_id % 9)
+          |    || '</a>'
+          |    || CASE WHEN doc_id % 5 = 1
+          |         THEN ' <a href="/rel/p">rel</a>' ELSE '' END AS html
+          |  FROM documents
+          |), pairs AS (
+          |  SELECT doc_id,
+          |    unnest(regexp_extract_all(html,
+          |      '<a href="([^"]+)"[^>]*>([^<]*)</a>', 1)) AS href,
+          |    unnest(regexp_extract_all(html,
+          |      '<a href="([^"]+)"[^>]*>([^<]*)</a>', 2)) AS anchor
+          |  FROM d
+          |)
+          |SELECT doc_id, href,
+          |  CASE WHEN href LIKE 'http://%' THEN 'http://site' || (doc_id % 20)
+          |    || '.example/a/' || doc_id END AS url_canon,
+          |  anchor
+          |FROM pairs""".stripMargin)),
+
+    // 29h. per-host crawl-health report — the corpus-ops rollup that
+    // composes the web-layer kernels end-to-end: canonical-URL identity
+    // (q104), the robots gate (q105's broadcast dim), and the encoding
+    // garbage signals (q99's plant), reduced host-wise. Deliberately the
+    // scalable two-stage shape: (host, page) partial aggregate first
+    // (so the distinct-page count is a row count, never an EXPAND), then
+    // the host rollup — two narrow shuffles over integer-and-hash rows.
+    QueryDef("q107_host_report", (s, dir) => {
+      val id = col("doc_id")
+      val dirtyText = concat(col("text"),
+        when(id % 13 === 4, lit("\ufffd\ufffd")).otherwise(lit("")),
+        when(id % 17 === 2, lit("\u00c3\u00a9\u00c3\u00a8")).otherwise(lit("")),
+        when(id % 19 === 3, lit("\u0007")).otherwise(lit("")))
+      Tables(s, dir).documents
+        .select(id, (id % 50 % 10).as("host_id"),
+          UrlNorm.canonicalize(plantedCrawlUrl(id)).as("url_canon"),
+          plantedCrawlPath(id).as("path"),
+          when(TextStats.replacementCount(dirtyText) +
+            TextStats.mojibakeCount(dirtyText) +
+            TextStats.controlCharCount(dirtyText) > 0, 1L).otherwise(0L)
+            .as("dirty"))
+        .join(broadcast(robotsPolicyDim(s)), "host_id")
+        .select(col("doc_id"), col("host_id"), col("url_canon"), col("dirty"),
+          when(!RobotsTxt.allowed(col("robots"), lit("graftbot"), col("path")),
+            1L).otherwise(0L).as("blocked"))
+        .groupBy(col("host_id"), col("url_canon"))
+        .agg(count(lit(1)).as("cnt"), sum(col("blocked")).as("nb"),
+          sum(col("dirty")).as("nd"))
+        .groupBy(col("host_id"))
+        .agg(sum(col("cnt")).as("n_captures"),
+          count(lit(1)).as("n_pages"),
+          sum(col("nb")).as("n_blocked"), sum(col("nd")).as("n_dirty"))
+        .select(concat(lit("site"), col("host_id").cast("string"),
+          lit(".example")).as("host"),
+          col("n_captures"), col("n_pages"), col("n_blocked"), col("n_dirty"))
+    },
+      // q107: the host report is pure plant arithmetic for the oracle —
+      // blocked replays the q105 decision table, dirty the q99 plant
+      // predicate, pages the gid identity behind the q104 canonical;
+      // Spark must reach the same numbers through the real kernels and
+      // the two-stage rollup
+      oracle = Some("""WITH u AS (
+          |  SELECT doc_id, (doc_id % 50) % 10 AS h, doc_id % 50 AS gid,
+          |    CASE WHEN doc_id % 13 = 4 OR doc_id % 17 = 2
+          |      OR doc_id % 19 = 3 THEN 1 ELSE 0 END AS dirty,
+          |    CASE WHEN doc_id % 4 = 0 THEN 0
+          |      WHEN doc_id % 4 = 1 THEN 1
+          |      WHEN doc_id % 4 = 2 THEN
+          |        CASE WHEN ((doc_id % 50) % 10) % 2 = 0 THEN 0 ELSE 1 END
+          |      ELSE
+          |        CASE WHEN ((doc_id % 50) % 10) % 2 = 1 THEN 0 ELSE 1 END
+          |      END AS blocked
+          |  FROM documents
+          |), g AS (
+          |  SELECT h, gid, COUNT(*) AS cnt,
+          |    SUM(blocked) AS nb, SUM(dirty) AS nd
+          |  FROM u GROUP BY h, gid
+          |)
+          |SELECT 'site' || h || '.example' AS host,
+          |  CAST(SUM(cnt) AS BIGINT) AS n_captures,
+          |  COUNT(*) AS n_pages,
+          |  CAST(SUM(nb) AS BIGINT) AS n_blocked,
+          |  CAST(SUM(nd) AS BIGINT) AS n_dirty
+          |FROM g GROUP BY h""".stripMargin)),
+
+    // 29i. unlabeled-body charset recovery — the other half of q100's
+    // transcode story: captures with NO charset label recover via the
+    // WHATWG sniff (BOM first, BOM never reaches the text; else strict
+    // UTF-8 validation; else the documented windows-1252 fallback,
+    // whose total byte map degrades garbage to countable C1 controls
+    // instead of dropping the capture). Bodies planted as real bytes
+    // (encode + BOM prefixes); the oracle knows the decoded strings.
+    // Map-side kernels — zero shuffles.
+    QueryDef("q108_charset_sniff", (s, dir) => {
+      val id = col("doc_id")
+      val bomU8 = lit(Array[Byte](0xEF.toByte, 0xBB.toByte, 0xBF.toByte))
+      val bomLE = lit(Array[Byte](0xFF.toByte, 0xFE.toByte))
+      val body = when(id % 4 === 0,
+          encode(concat(col("text"), lit(" plain")), "UTF-8"))
+        .when(id % 4 === 1,
+          encode(concat(col("text"), lit(" café")), "ISO-8859-1"))
+        .when(id % 4 === 2,
+          concat(bomLE, encode(concat(col("text"), lit(" Ω")), "UTF-16LE")))
+        .otherwise(
+          concat(bomU8, encode(concat(col("text"), lit(" bom")), "UTF-8")))
+      Tables(s, dir).documents.select(id,
+        WarcTranscode.sniffedCharset(body).as("detected"),
+        WarcTranscode.sniffedText(body).as("text_utf8"))
+    },
+      // q108: the decoded strings from the byte plant (the q100 posture:
+      // the oracle composes text || suffix literals already in UTF-8;
+      // Spark must recover them by sniffing and decoding actual bytes)
+      oracle = Some("""SELECT doc_id,
+          |  CASE CAST(doc_id % 4 AS INTEGER)
+          |    WHEN 0 THEN 'utf-8' WHEN 1 THEN 'windows-1252'
+          |    WHEN 2 THEN 'utf-16le' ELSE 'utf-8-bom' END AS detected,
+          |  text || CASE CAST(doc_id % 4 AS INTEGER)
+          |    WHEN 0 THEN ' plain' WHEN 1 THEN ' café'
+          |    WHEN 2 THEN ' Ω' ELSE ' bom' END AS text_utf8
+          |FROM documents""".stripMargin)),
+
+    // 26p. boilerplate removal — the main-content step between raw
+    // extraction (q103) and quality filtering: the public line-wise
+    // heuristic (jusText / CCNet / RefinedWeb family) rides q103's tag
+    // scan with anchor-depth tracking — link-dominated lines (nav,
+    // footer link bars) and short fragments (bare headings) drop,
+    // prose survives; thresholds apply before entity decode (decode
+    // stays last). The fixture's nav and footer lines are
+    // link-dominated by construction, the h1 is always under-length,
+    // the prose lines always pass. Map-side kernel, zero shuffles.
+    QueryDef("q109_boilerplate", (s, dir) => {
+      val id = col("doc_id")
+      val html = concat(
+        lit("<html><head><title>skip</title></head><body>" +
+          "<nav><a href=\"/home\">Home</a> | " +
+          "<a href=\"/about\">About</a></nav><h1>Doc "),
+        id.cast("string"), lit("</h1><p>"), col("text"), lit("</p>"),
+        when(id % 3 === 0,
+          lit("<p>Extra &amp; entity &#233; &#x41; test</p>"))
+          .otherwise(lit("")),
+        when(id % 7 === 5,
+          lit("<p>&lt;b&gt;not a tag&lt;/b&gt;</p>")).otherwise(lit("")),
+        lit("<footer><a href=\"/tos\">Terms</a> · " +
+          "<a href=\"/privacy\">Privacy</a></footer></body></html>"))
+      Tables(s, dir).documents.select(id,
+        HtmlText.mainContent(html).as("main_text"),
+        HtmlText.keptLineCount(html).as("n_kept"))
+    },
+      // q109: the surviving lines are the prose plants (nav/footer are
+      // link-dominated by construction); the oracle composes them
+      // decoded, Spark must reach the same text by scanning anchors and
+      // measuring densities. The h1 line 'Doc <id>' is under the
+      // 12-char minimum at every oracle scale but NOT in principle
+      // (8-digit ids pass it), so the oracle carries the same length
+      // rule rather than hard-coding the drop (r11 review)
+      oracle = Some("""SELECT doc_id,
+          |  CASE WHEN length('Doc ' || doc_id) >= 12
+          |       THEN 'Doc ' || doc_id || chr(10) ELSE '' END
+          |  || text
+          |  || CASE WHEN doc_id % 3 = 0
+          |       THEN chr(10) || 'Extra & entity é A test' ELSE '' END
+          |  || CASE WHEN doc_id % 7 = 5
+          |       THEN chr(10) || '<b>not a tag</b>' ELSE '' END AS main_text,
+          |  CAST(1 + CASE WHEN length('Doc ' || doc_id) >= 12 THEN 1 ELSE 0 END
+          |         + CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 0 END
+          |         + CASE WHEN doc_id % 7 = 5 THEN 1 ELSE 0 END
+          |    AS INTEGER) AS n_kept
+          |FROM documents""".stripMargin)),
+
+    // 29k. sitemap ingest — the third crawl-side surface (robots says
+    // what MAY be fetched, sitemaps say what SHOULD be): url-block
+    // extraction with dialect-neutral regexps (parse vs parse, the q98
+    // posture), per-entry loc/lastmod/changefreq fields (absent →
+    // NULL), and each loc canonicalized in flight (q104 — the second
+    // entry is planted in a non-canonical spelling). Map-side
+    // extraction + one explode, zero shuffles.
+    QueryDef("q110_sitemap", (s, dir) => {
+      val id = col("doc_id")
+      val h = ((id % 50) % 10).cast("string")
+      val mm = lpad((lit(1) + id % 12).cast("string"), 2, "0")
+      val dd = lpad((lit(1) + id % 28).cast("string"), 2, "0")
+      val urlset = concat(
+        lit("<?xml version=\"1.0\"?><urlset><url><loc>http://site"), h,
+        lit(".example/a/"), id.cast("string"),
+        lit("</loc><lastmod>2024-"), mm, lit("-"), dd, lit("</lastmod>"),
+        when(id % 2 === 0, lit("<changefreq>daily</changefreq>"))
+          .otherwise(lit("")),
+        lit("</url>"),
+        when(id % 3 === 0, concat(
+          lit("<url><loc>HTTP://SITE"), h, lit(".EXAMPLE:80/b/"),
+          id.cast("string"), lit("</loc></url>"))).otherwise(lit("")),
+        lit("</urlset>"))
+      // the recursion contract (r11 VERDICT task 4): doc_id%7=1 bodies
+      // are <sitemapindex> files — their <sitemap> children are CHILD
+      // SITEMAP URLs (kind='sitemap', feeding the next ingest round),
+      // one with lastmod and one spelled non-canonically
+      val index = concat(
+        lit("<?xml version=\"1.0\"?><sitemapindex><sitemap>" +
+          "<loc>http://site"), h, lit(".example/sm/"), id.cast("string"),
+        lit("/a.xml.gz</loc><lastmod>2024-"), mm, lit("-"), dd,
+        lit("</lastmod></sitemap><sitemap><loc>HTTP://SITE"), h,
+        lit(".EXAMPLE:80/sm/"), id.cast("string"),
+        lit("/b.xml.gz</loc></sitemap></sitemapindex>"))
+      val xml = when(id % 7 === 1, index).otherwise(urlset)
+      // the dominant wire form is gzip: doc_id%4=2 bodies arrive
+      // compressed and Sitemap.bodyText must sniff + inflate them
+      val body = when(id % 4 === 2, graft.sources.Sitemap.gzipUtf8(xml))
+        .otherwise(xml.cast("binary"))
+      Tables(s, dir).documents
+        .select(id, graft.sources.Sitemap.bodyText(body).as("xml"))
+        .select(id, explode(concat(
+          transform(regexp_extract_all(col("xml"),
+            lit("<url>([\\s\\S]*?)</url>"), lit(1)),
+            b => struct(lit("url").as("kind"), b.as("b"))),
+          transform(regexp_extract_all(col("xml"),
+            lit("<sitemap>([\\s\\S]*?)</sitemap>"), lit(1)),
+            b => struct(lit("sitemap").as("kind"), b.as("b"))))).as("e"))
+        .select(id, col("e.kind").as("kind"),
+          UrlNorm.canonicalize(
+            regexp_extract(col("e.b"), "<loc>([^<]*)</loc>", 1))
+            .as("url_canon"),
+          nullif(regexp_extract(col("e.b"), "<lastmod>([^<]*)</lastmod>", 1),
+            lit("")).cast("date").as("lastmod"),
+          nullif(regexp_extract(col("e.b"),
+            "<changefreq>([^<]*)</changefreq>", 1), lit(""))
+            .as("changefreq"))
+    },
+      // q110: the oracle composes every expected row (url + sitemap-index
+      // children, canonical spellings, lastmod arithmetic) directly from
+      // doc_id; Spark must reach them by inflating the gzipped bodies,
+      // splitting <url>/<sitemap> blocks, and canonicalizing each loc
+      oracle = Some("""WITH d AS (
+          |  SELECT doc_id, ((doc_id % 50) % 10) AS h,
+          |    CAST('2024-' || lpad(CAST(1 + doc_id % 12 AS VARCHAR), 2, '0')
+          |      || '-' || lpad(CAST(1 + doc_id % 28 AS VARCHAR), 2, '0')
+          |      AS DATE) AS lm
+          |  FROM documents
+          |)
+          |SELECT doc_id, 'url' AS kind,
+          |  'http://site' || h || '.example/a/' || doc_id AS url_canon,
+          |  lm AS lastmod,
+          |  CASE WHEN doc_id % 2 = 0 THEN 'daily' END AS changefreq
+          |FROM d WHERE doc_id % 7 <> 1
+          |UNION ALL
+          |SELECT doc_id, 'url',
+          |  'http://site' || h || '.example/b/' || doc_id,
+          |  CAST(NULL AS DATE), NULL
+          |FROM d WHERE doc_id % 7 <> 1 AND doc_id % 3 = 0
+          |UNION ALL
+          |SELECT doc_id, 'sitemap',
+          |  'http://site' || h || '.example/sm/' || doc_id || '/a.xml.gz',
+          |  lm, NULL
+          |FROM d WHERE doc_id % 7 = 1
+          |UNION ALL
+          |SELECT doc_id, 'sitemap',
+          |  'http://site' || h || '.example/sm/' || doc_id || '/b.xml.gz',
+          |  CAST(NULL AS DATE), NULL
+          |FROM d WHERE doc_id % 7 = 1""".stripMargin)),
+
+    // 26q. Content-Type payload routing (VERDICT r11 task 3) — the
+    // dispatch step a mixed-type crawl needs between transcode and
+    // extraction: html → strict transcode + q103 visible-text kernel,
+    // text/* → transcode passthrough, image/* → q83 header metadata
+    // (bytes never touch a text path), application/* → counted binary
+    // skip, absent Content-Type → counted unknown skip. The fixture
+    // interleaves all five classes by doc_id arithmetic; the oracle
+    // composes every expected output (extracted page text, transcoded
+    // prose, BMP dims) from the same arithmetic while Spark genuinely
+    // parses the HTTP header, dispatches, and runs the per-type kernel.
+    // Map-side end-to-end: zero shuffles.
+    QueryDef("q111_content_route", (s, dir) => {
+      GraftWarc.read(s, s"${warcMixedFixture(s, dir)}/*.warc*")
+        .where(col("warc_type") === "response")
+        .transform(df => ContentRoute.routed(df))
+        .select(
+          regexp_extract(col("target_uri"), "/doc/([0-9]+)$", 1)
+            .cast("long").as("doc_id"),
+          col("media_type"), col("route"),
+          col("text").as("page_text"), col("pdf_reason"),
+          col("img_format"),
+          col("img_w").cast("long").as("img_w"),
+          col("img_h").cast("long").as("img_h"),
+          col("feed_item_count"))
+    },
+      // q111: every routed output composes from doc_id arithmetic — the
+      // html page's extracted text ('Doc N' block + the doc text), the
+      // ISO-8859-1 prose with its transcoded suffix, the BMP dims the
+      // fixture encoded; binary and untyped captures carry NULLs with
+      // only the route label. Spark must genuinely parse the HTTP
+      // Content-Type, dispatch, and run the per-type kernel.
+      oracle = Some("""SELECT doc_id,
+          |  CASE CAST(doc_id % 6 AS INTEGER)
+          |    WHEN 0 THEN 'text/html' WHEN 1 THEN 'text/plain'
+          |    WHEN 2 THEN 'image/bmp' WHEN 3 THEN 'application/pdf'
+          |    WHEN 5 THEN 'application/rss+xml'
+          |    END AS media_type,
+          |  CASE CAST(doc_id % 6 AS INTEGER)
+          |    WHEN 0 THEN 'html' WHEN 1 THEN 'plain' WHEN 2 THEN 'image'
+          |    WHEN 3 THEN 'pdf' WHEN 5 THEN 'feed'
+          |    ELSE 'unknown' END AS route,
+          |  CASE CAST(doc_id % 6 AS INTEGER)
+          |    WHEN 0 THEN 'Doc ' || doc_id || chr(10) || text
+          |    WHEN 1 THEN text || ' café' END AS page_text,
+          |  CASE WHEN doc_id % 6 = 3 THEN 'no_text' END AS pdf_reason,
+          |  CASE WHEN doc_id % 6 = 2 THEN 'bmp' END AS img_format,
+          |  CASE WHEN doc_id % 6 = 2 THEN 1 + doc_id % 1024 END AS img_w,
+          |  CASE WHEN doc_id % 6 = 2 THEN 1 + doc_id % 768 END AS img_h,
+          |  CASE WHEN doc_id % 6 = 5 THEN CAST(1 + doc_id % 3 AS BIGINT)
+          |    END AS feed_item_count
+          |FROM documents""".stripMargin)),
+
+    // 29l. robots → sitemap discovery — the composition the sitemap trio
+    // implies: each host's advertised Sitemap: lines (group-independent,
+    // RobotsTxt.sitemaps) surface per host and canonicalize in flight
+    // (q104's kernel — the second planted line is spelled
+    // non-canonically); hosts advertising none keep a NULL row
+    // (explode_outer), so the frontier join can distinguish
+    // "no sitemap" from "host missing". Map-side over the broadcast-size
+    // policy dim — zero shuffles.
+    QueryDef("q112_sitemap_discovery", (s, dir) =>
+      robotsPolicyDim(s)
+        .select(col("host_id"),
+          explode_outer(RobotsTxt.sitemaps(col("robots"))).as("sm"))
+        .select(col("host_id"),
+          UrlNorm.canonicalize(col("sm")).as("sitemap_canon")),
+      // q112: the oracle composes each host's advertised sitemap list
+      // (canonical spellings) from host_id arithmetic; Spark must recover
+      // it by scanning the robots text and canonicalizing each value
+      oracle = Some("""WITH h AS (SELECT range AS host_id FROM range(10))
+          |SELECT host_id,
+          |  'http://site' || host_id || '.example/sm/index.xml.gz'
+          |    AS sitemap_canon
+          |FROM h WHERE host_id % 2 = 0
+          |UNION ALL
+          |SELECT host_id,
+          |  'http://site' || host_id || '.example/sm/extra.xml'
+          |FROM h WHERE host_id % 2 = 0
+          |UNION ALL
+          |SELECT host_id, CAST(NULL AS VARCHAR)
+          |FROM h WHERE host_id % 2 = 1""".stripMargin)),
+
+    // 29m. Crawl-delay politeness (the de-facto convention alongside the
+    // RFC 9309 gate): per-host delay for the product token and for an
+    // unnamed agent — group-scoped with exact-agent precedence, so the
+    // planted policies resolve differently per (host parity, agent):
+    // graftbot reads its own group's delay on even hosts and NULL on
+    // odd (its group exists but advertises none — no * fallback);
+    // an unnamed agent reads the * group's delay on odd hosts only.
+    QueryDef("q113_crawl_delay", (s, dir) =>
+      robotsPolicyDim(s).select(col("host_id"),
+        RobotsTxt.crawlDelay(col("robots"), lit("graftbot"))
+          .as("delay_bot"),
+        RobotsTxt.crawlDelay(col("robots"), lit("OtherBot"))
+          .as("delay_other")),
+      // q113: the oracle is the (host parity × agent) delay table the
+      // planted group-scoped Crawl-delay lines imply
+      oracle = Some("""WITH h AS (SELECT range AS host_id FROM range(10))
+          |SELECT host_id,
+          |  CASE WHEN host_id % 2 = 0 THEN CAST(2.5 AS DOUBLE) END
+          |    AS delay_bot,
+          |  CASE WHEN host_id % 2 = 1 THEN CAST(10 AS DOUBLE) END
+          |    AS delay_other
+          |FROM h""".stripMargin)),
+
+    // 29n. per-host fetch schedule — the composition a crawler actually
+    // consumes (VERDICT r12 #6): the q104 canonical frontier reduced to
+    // its keeper URLs, gated by the q105 robots decision, paced by the
+    // q113 crawl-delay, and annotated with the q112 sitemap surface —
+    // all against ONE broadcast policy dim. Allowed URLs get a
+    // deterministic per-host fetch sequence and a millisecond schedule
+    // offset ((seq−1)·delay — exact integer ms); blocked URLs stay
+    // visible with NULL sequence, so politeness remains auditable.
+    // Plan: keeper groupBy (one hash-reduced shuffle), broadcast join,
+    // then a per-host window — partition-by-host is the SEMANTICS of a
+    // politeness schedule (each host is fetched serially), and a real
+    // frontier shards by host anyway, so the window sort is the q107
+    // per-host rollup's scale shape, not a global sort.
+    QueryDef("q124_fetch_schedule", (s, dir) => {
+      val id = col("doc_id")
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("host_id"), col("allowed_bot"))
+        .orderBy(col("url_canon"))
+      Tables(s, dir).documents
+        .select(id, (id % 50 % 10).as("host_id"),
+          plantedCrawlPath(id).as("path"))
+        .withColumn("url_canon", UrlNorm.canonicalize(
+          concat(lit("http://site"), col("host_id").cast("string"),
+            lit(".example"), col("path"))))
+        .groupBy(col("host_id"), col("url_canon"), col("path"))
+        .agg(min(id).as("keeper_doc"))
+        .join(broadcast(robotsPolicyDim(s)), "host_id")
+        .select(col("host_id"), col("url_canon"), col("keeper_doc"),
+          RobotsTxt.allowed(col("robots"), lit("graftbot"), col("path"))
+            .as("allowed_bot"),
+          floor(RobotsTxt.crawlDelay(col("robots"), lit("graftbot"))
+            * 1000).cast("long").as("delay_x1000"),
+          size(RobotsTxt.sitemaps(col("robots"))).cast("long")
+            .as("n_sitemaps"))
+        .withColumn("fetch_seq",
+          when(col("allowed_bot"), row_number().over(w)).cast("long"))
+        .withColumn("sched_offset_ms",
+          (col("fetch_seq") - 1L) * col("delay_x1000"))
+        .select(concat(lit("site"), col("host_id").cast("string"),
+            lit(".example")).as("host"),
+          col("url_canon"), col("keeper_doc"), col("allowed_bot"),
+          col("delay_x1000"), col("n_sitemaps"), col("fetch_seq"),
+          col("sched_offset_ms"))
+    },
+      // q124: the oracle rebuilds the keeper frontier from the q104/q105
+      // doc_id arithmetic and replays the planted policies as a decision
+      // table — even hosts (full policy): /private/ blocked with an
+      // /private/ok/ Allow override, /*.tmp$ blocked, delay 2.5s, two
+      // sitemaps; odd hosts (no-override policy): graftbot's group only
+      // disallows /private/ (which covers /private/ok/ — no override),
+      // advertises no delay and no sitemaps. The fetch sequence replays
+      // the same per-(host, allowed) window.
+      oracle = Some("""WITH f AS (
+          |  SELECT doc_id, (doc_id % 50) % 10 AS host_id,
+          |    CAST(doc_id % 4 AS INTEGER) AS vid,
+          |    CASE CAST(doc_id % 4 AS INTEGER)
+          |      WHEN 0 THEN '/a/' || (doc_id % 50)
+          |      WHEN 1 THEN '/private/' || (doc_id % 50)
+          |      WHEN 2 THEN '/private/ok/' || (doc_id % 50)
+          |      ELSE '/files/' || (doc_id % 50) || '.tmp' END AS path
+          |  FROM documents
+          |), k AS (
+          |  SELECT host_id, vid,
+          |    'http://site' || host_id || '.example' || path AS url_canon,
+          |    MIN(doc_id) AS keeper_doc
+          |  FROM f GROUP BY 1, 2, path
+          |), v AS (
+          |  SELECT host_id, url_canon, keeper_doc,
+          |    CASE WHEN host_id % 2 = 0 THEN vid IN (0, 2)
+          |         ELSE vid IN (0, 3) END AS allowed_bot,
+          |    CASE WHEN host_id % 2 = 0 THEN CAST(2500 AS BIGINT) END
+          |      AS delay_x1000,
+          |    CAST(CASE WHEN host_id % 2 = 0 THEN 2 ELSE 0 END AS BIGINT)
+          |      AS n_sitemaps
+          |  FROM k
+          |), s AS (
+          |  SELECT *,
+          |    CASE WHEN allowed_bot THEN CAST(ROW_NUMBER() OVER (
+          |      PARTITION BY host_id, allowed_bot ORDER BY url_canon)
+          |      AS BIGINT) END AS fetch_seq
+          |  FROM v
+          |)
+          |SELECT 'site' || host_id || '.example' AS host, url_canon,
+          |  keeper_doc, allowed_bot, delay_x1000, n_sitemaps, fetch_seq,
+          |  (fetch_seq - 1) * delay_x1000 AS sched_offset_ms
+          |FROM s""".stripMargin)),
+
+    // 29o. robots-meta page directives + rel=nofollow link gating — the
+    // page-level leg of the politeness stack (q105 gates the FETCH, this
+    // gates what the fetched page may be USED for: corpus inclusion and
+    // frontier expansion). Planted meta variants cover attribute-order
+    // reversal, case folding, the none alias, an explicit allow, a
+    // missing tag, and a non-robots decoy name; anchors alternate a
+    // rel=nofollow marker against a rel=noopener distractor. Spark
+    // genuinely parses the tags (RobotsMeta's order/case-robust scan);
+    // the oracle replays the plant arithmetic. Map-side, zero shuffles.
+    QueryDef("q125_robots_meta", (s, dir) => {
+      import graft.functions.RobotsMeta
+      val id = col("doc_id")
+      val meta =
+        when(id % 7 === 0,
+          lit("<meta content=\"noindex, nofollow\" name=\"robots\">"))
+        .when(id % 7 === 1, lit("<META NAME=\"ROBOTS\" CONTENT=\"NOINDEX\">"))
+        .when(id % 7 === 2, lit("<meta name=\"robots\" content=\"nofollow\">"))
+        .when(id % 7 === 3, lit("<meta name=\"robots\" content=\"none\">"))
+        .when(id % 7 === 4,
+          lit("<meta name=\"robots\" content=\"index, follow\">"))
+        .when(id % 7 === 5, lit(""))
+        .otherwise(lit("<meta name=\"googlebot\" content=\"noindex\">"))
+      val links = concat(
+        lit("<a href=\"http://l"), (id % 11).cast("string"),
+        lit(".example/a\">one</a>"),
+        when(id % 3 === 1,
+          lit(" <a rel=\"nofollow\" href=\"/x\">two</a>"))
+          .otherwise(lit(" <a href=\"/y\" rel=\"noopener\">two</a>")))
+      val html = concat(
+        lit("<html><head><meta name=\"viewport\" content=\"width=1\">"),
+        meta, lit("</head><body><p>"), col("text"), lit("</p>"), links,
+        lit("</body></html>"))
+      Tables(s, dir).documents.select(id,
+        RobotsMeta.noindex(html).as("noindex"),
+        RobotsMeta.nofollow(html).as("nofollow"),
+        size(RobotsMeta.anchorTags(html)).cast("long").as("n_links"),
+        RobotsMeta.followableLinks(html).as("n_follow_links"))
+    },
+      // q125: the oracle replays the plant arithmetic — noindex for the
+      // noindex/NOINDEX/none variants (0,1,3 mod 7), nofollow for
+      // nofollow/none (0,2,3); the googlebot decoy (6) and the viewport
+      // meta never count. Always 2 anchors; followable = 0 when the PAGE
+      // says nofollow, else minus the rel=nofollow-marked link (id%3=1) —
+      // the rel=noopener distractor never subtracts. Spark must genuinely
+      // parse attribute-order-reversed and case-folded tags to agree.
+      oracle = Some("""SELECT doc_id,
+          |  doc_id % 7 IN (0, 1, 3) AS noindex,
+          |  doc_id % 7 IN (0, 2, 3) AS nofollow,
+          |  CAST(2 AS BIGINT) AS n_links,
+          |  CAST(CASE WHEN doc_id % 7 IN (0, 2, 3) THEN 0
+          |            WHEN doc_id % 3 = 1 THEN 1 ELSE 2 END AS BIGINT)
+          |    AS n_follow_links
+          |FROM documents""".stripMargin)),
+
+    // 29p. adaptive recrawl scheduling (Cho & Garcia-Molina 2003): the
+    // planted fetch history gives each of 20 URLs a volatility class —
+    // never-changing, every-fetch, every-2nd, every-12th — and the
+    // bias-corrected Poisson estimator λ̂ = −ln((n−X+½)/(n+½)) buckets
+    // them back apart (all four buckets exercised at sf0.01). One
+    // per-URL lag window + one groupBy; the DECIMAL(18,9)-quantized ln
+    // replays exactly.
+    QueryDef("q128_recrawl_rate", (s, dir) => {
+      val id = col("doc_id")
+      val seqc = floor(id / 20).cast("long")
+      val v = (id % 20) % 4
+      val hist = Tables(s, dir).documents.select(
+        (id % 20).as("url_id"), seqc.as("seq"),
+        when(v === 0, lit(0L)).when(v === 1, seqc)
+          .when(v === 2, floor(seqc / 2).cast("long"))
+          .otherwise(floor(seqc / 12).cast("long")).as("ch"))
+      Recrawl.changeRate(hist, "url_id", "seq", "ch")
+    },
+      // q128: the oracle replants the same fetch history from doc_id
+      // arithmetic and replays the estimator — lag-window change flags,
+      // the doubled-integer ratio, ln quantized to DECIMAL(18,9) before
+      // the ×1e6 floor, and the same bucket thresholds.
+      oracle = Some("""WITH h AS (
+          |  SELECT doc_id % 20 AS url_id, doc_id // 20 AS seq,
+          |    CASE (doc_id % 20) % 4 WHEN 0 THEN 0
+          |      WHEN 1 THEN doc_id // 20
+          |      WHEN 2 THEN (doc_id // 20) // 2
+          |      ELSE (doc_id // 20) // 12 END AS ch
+          |  FROM documents
+          |), fl AS (
+          |  SELECT url_id,
+          |    CASE WHEN lag(ch) OVER w IS NULL THEN 0
+          |      WHEN ch <> lag(ch) OVER w THEN 1 ELSE 0 END AS changed
+          |  FROM h WINDOW w AS (PARTITION BY url_id ORDER BY seq)
+          |), agg AS (
+          |  SELECT url_id, COUNT(*) AS n_fetches, SUM(changed) AS n_changes
+          |  FROM fl GROUP BY 1
+          |), lam AS (
+          |  SELECT url_id, CAST(n_fetches AS BIGINT) AS n_fetches,
+          |    CAST(n_changes AS BIGINT) AS n_changes,
+          |    CASE WHEN n_fetches > 1 THEN CAST(floor(
+          |      CAST(ln(CAST(2*(n_fetches-1-n_changes)+1 AS DOUBLE)
+          |        / CAST(2*(n_fetches-1)+1 AS DOUBLE)) AS DECIMAL(18,9))
+          |      * -1000000) AS BIGINT) END AS lambda_x1e6
+          |  FROM agg
+          |)
+          |SELECT url_id, n_fetches, n_changes, lambda_x1e6,
+          |  CASE WHEN n_fetches = 1 THEN 'unknown'
+          |       WHEN lambda_x1e6 >= 700000 THEN 'hot'
+          |       WHEN lambda_x1e6 >= 100000 THEN 'warm'
+          |       WHEN lambda_x1e6 > 0 THEN 'cool'
+          |       ELSE 'cold' END AS revisit_bucket
+          |FROM lam""".stripMargin)),
+
+    // 26ad. schema.org JSON-LD metadata extraction: the structured
+    // channel a page carries beside its prose — typed entity, headline,
+    // publish date — planted with attribute-order/case variants, a
+    // malformed-JSON page (block countable, fields NULL), a no-block
+    // page, and a decoy plain <script> carrying fake @type that must
+    // never be read. Spark genuinely scans the tag and evaluates JSON
+    // paths (get_json_object — codegen); the oracle replays the plant
+    // arithmetic. Map-side, zero shuffles.
+    QueryDef("q130_jsonld", (s, dir) => {
+      import graft.functions.StructuredData
+      val id = col("doc_id")
+      val day = lpad((lit(1) + id % 28).cast("string"), 2, "0")
+      val typ = when(id % 3 === 0, lit("Article"))
+        .when(id % 3 === 1, lit("Product")).otherwise(lit("NewsArticle"))
+      val ld = concat(
+        lit("{\"@context\":\"https://schema.org\",\"@type\":\""), typ,
+        lit("\",\"headline\":\"Item "), id.cast("string"),
+        lit("\",\"datePublished\":\"2024-01-"), day, lit("\"}"))
+      val open = when(id % 2 === 0,
+        lit("<script type=\"application/ld+json\" data-x=\"1\">"))
+        .otherwise(lit("<script async TYPE=\"APPLICATION/LD+JSON\">"))
+      val block = when(id % 6 === 5, lit(""))
+        .when(id % 6 === 4,
+          concat(open, lit("{\"@type\":\"Article\",\"headline\":"),
+            lit("</script>")))
+        .otherwise(concat(open, ld, lit("</script>")))
+      val html = concat(
+        lit("<html><head><script>var a = {\"@type\":\"Fake\"};</script>"),
+        block, lit("</head><body><p>"), col("text"),
+        lit("</p></body></html>"))
+      Tables(s, dir).documents.select(id,
+        StructuredData.jsonLd(html).isNotNull.as("has_jsonld"),
+        StructuredData.ldField(html, "@type").as("schema_type"),
+        StructuredData.ldField(html, "headline").as("headline"),
+        to_date(StructuredData.ldField(html, "datePublished"))
+          .as("date_published"))
+    },
+      // q130: the oracle replays the plant — a block exists unless
+      // id%6=5, fields only when the JSON is well-formed (id%6 not in
+      // 4,5); Spark must genuinely match case-folded/reordered script
+      // tags, skip the decoy plain script, and parse the JSON it planted
+      oracle = Some("""SELECT doc_id,
+          |  doc_id % 6 <> 5 AS has_jsonld,
+          |  CASE WHEN doc_id % 6 NOT IN (4, 5) THEN
+          |    CASE WHEN doc_id % 3 = 0 THEN 'Article'
+          |         WHEN doc_id % 3 = 1 THEN 'Product'
+          |         ELSE 'NewsArticle' END END AS schema_type,
+          |  CASE WHEN doc_id % 6 NOT IN (4, 5)
+          |    THEN 'Item ' || doc_id END AS headline,
+          |  CASE WHEN doc_id % 6 NOT IN (4, 5)
+          |    THEN make_date(2024, 1, CAST(1 + doc_id % 28 AS INTEGER))
+          |    END AS date_published
+          |FROM documents""".stripMargin)),
+
+    // 26ag. HTML table extraction — tables are the densest structured
+    // text a page carries (the table-to-text corpus slice): per-row
+    // cell recovery from the bounded non-nested subset, th/td
+    // uniformly, inline markup stripped, padding trimmed. The fixture
+    // builds variable-geometry tables (2-4 rows × 2-3 cols, header row
+    // for even ids, bolded cells on an arithmetic stripe, a no-table
+    // page emitting zero rows) entirely in plan expressions; Spark must
+    // genuinely re-parse what it assembled while the oracle generates
+    // the expectation from arithmetic. Map-side scan + posexplode.
+    QueryDef("q133_table_extract", (s, dir) => {
+      val id = col("doc_id")
+      val nrows = (lit(2) + id % 3).cast("int")
+      val ncols = (lit(2) + id % 2).cast("int")
+      val rowsHtml = array_join(transform(sequence(lit(0), nrows - 1), r => {
+        val cells = array_join(transform(sequence(lit(0), ncols - 1), c => {
+          val body = concat(lit("r"), r.cast("string"), lit("c"),
+            c.cast("string"), lit("-"), id.cast("string"))
+          val deco = when((r + c + id) % 3 === 0,
+            concat(lit("<b>"), body, lit("</b>"))).otherwise(body)
+          when(id % 2 === 0 && r === 0,
+            concat(lit("<th class=\"h\"> "), deco, lit(" </th>")))
+            .otherwise(concat(lit("<td> "), deco, lit(" </td>")))
+        }), "")
+        concat(lit("<tr>"), cells, lit("</tr>"))
+      }), "")
+      val html = when(id % 7 === 6,
+        concat(lit("<html><body><p>"), col("text"),
+          lit("</p></body></html>")))
+        .otherwise(concat(lit("<html><body><p>"), col("text"),
+          lit("</p><table class=\"t\">"), rowsHtml,
+          lit("</table></body></html>")))
+      Tables(s, dir).documents
+        .select(id,
+          posexplode(HtmlText.tableRows(html)).as(Seq("row_idx", "row")))
+        .select(id, col("row_idx").cast("long").as("row_idx"),
+          size(HtmlText.rowCells(col("row"))).cast("long").as("n_cells"),
+          array_join(HtmlText.rowCells(col("row")), " | ").as("row_text"))
+    },
+      // q133: the oracle generates the expected rows from the plant
+      // arithmetic (row/col geometry, cell naming); Spark must genuinely
+      // re-parse the table markup — th/td uniformity, markup stripping,
+      // trimming — to agree
+      oracle = Some("""WITH d AS (
+          |  SELECT doc_id, 2 + doc_id % 3 AS nr, 2 + doc_id % 2 AS nc
+          |  FROM documents WHERE doc_id % 7 <> 6
+          |), r AS (
+          |  SELECT doc_id, nc,
+          |    unnest(generate_series(0, CAST(nr - 1 AS INTEGER))) AS row_idx
+          |  FROM d
+          |)
+          |SELECT doc_id, CAST(row_idx AS BIGINT) AS row_idx,
+          |  CAST(nc AS BIGINT) AS n_cells,
+          |  array_to_string(list_transform(
+          |    generate_series(0, CAST(nc - 1 AS INTEGER)),
+          |    c -> 'r' || row_idx || 'c' || c || '-' || doc_id), ' | ')
+          |    AS row_text
+          |FROM r""".stripMargin)),
+
+    // 26ah. Open Graph / head-metadata extraction (ogp.me + WHATWG
+    // standard metadata names + feed autodiscovery): the page-metadata
+    // channel social/search pipelines read — og:title, description,
+    // rel=canonical (the dedup hint that beats URL heuristics), and the
+    // advertised RSS/Atom feed that seeds q135's feed ingest. Fixture
+    // plants attribute-order and case variants, a malformed og tag with
+    // NO content attribute (present but NULL — the soft contract), a
+    // generator decoy whose CONTENT mentions og:title (the tag-list
+    // scan must never read a key out of another tag's value), and both
+    // feed media types. Spark genuinely scans tags; the oracle replays
+    // the plant arithmetic. Map-side tag-list pass, zero shuffles.
+    QueryDef("q134_meta_tags", (s, dir) => {
+      import graft.functions.StructuredData
+      val id = col("doc_id")
+      val site = concat(lit("http://site"),
+        ((id % 50) % 10).cast("string"), lit(".example"))
+      val og = when(id % 5 === 4, lit(""))
+        .when(id % 10 === 3, lit("<meta property=\"og:title\">"))
+        .when(id % 2 === 0,
+          concat(lit("<meta property=\"og:title\" content=\"Page "),
+            id.cast("string"), lit("\">")))
+        .otherwise(concat(lit("<META CONTENT=\"Page "), id.cast("string"),
+          lit("\" PROPERTY=\"OG:TITLE\">")))
+      val desc = when(id % 3 =!= 0,
+        concat(lit("<meta name=\"description\" content=\"Desc "),
+          id.cast("string"), lit("\">"))).otherwise(lit(""))
+      val canon = when(id % 4 === 3, lit(""))
+        .when(id % 8 === 1, concat(lit("<LINK REL=\"canonical\" HREF=\""),
+          site, lit("/p/"), id.cast("string"), lit("\">")))
+        .otherwise(concat(lit("<link rel=\"canonical\" href=\""), site,
+          lit("/p/"), id.cast("string"), lit("\">")))
+      val feed = when(id % 4 === 0, concat(
+          lit("<link rel=\"alternate\" type=\"application/rss+xml\"" +
+            " href=\""), site, lit("/feed.xml\">")))
+        .when(id % 4 === 1, concat(
+          lit("<link type=\"application/atom+xml\" href=\""), site,
+          lit("/atom.xml\" rel=\"alternate\">")))
+        .otherwise(lit(""))
+      val html = concat(lit("<html><head><meta charset=\"utf-8\">"),
+        og, desc, canon, feed,
+        lit("<meta name=\"generator\" content=\"og:title decoy\">"),
+        lit("</head><body><p>"), col("text"), lit("</p></body></html>"))
+      val fl = StructuredData.feedLink(html)
+      Tables(s, dir).documents.select(id,
+        StructuredData.metaContent(html, "og:title").as("og_title"),
+        StructuredData.metaContent(html, "description")
+          .as("meta_description"),
+        StructuredData.linkHref(html, "canonical").as("canonical_url"),
+        fl.getField("url").as("feed_url"),
+        fl.getField("fmt").as("feed_type"))
+    },
+      // q134: the oracle replays the plant — og:title unless id%5=4
+      // (absent) or id%10=3 (tag present, content attribute missing);
+      // Spark must genuinely match case-folded/attribute-reordered tags,
+      // pair rel=alternate with the feed media type inside ONE tag, and
+      // never read the decoy generator tag's value as a key
+      oracle = Some("""SELECT doc_id,
+          |  CASE WHEN doc_id % 5 <> 4 AND doc_id % 10 <> 3
+          |    THEN 'Page ' || doc_id END AS og_title,
+          |  CASE WHEN doc_id % 3 <> 0 THEN 'Desc ' || doc_id END
+          |    AS meta_description,
+          |  CASE WHEN doc_id % 4 <> 3 THEN 'http://site' ||
+          |    (doc_id % 50) % 10 || '.example/p/' || doc_id END
+          |    AS canonical_url,
+          |  CASE doc_id % 4
+          |    WHEN 0 THEN 'http://site' || (doc_id % 50) % 10 ||
+          |      '.example/feed.xml'
+          |    WHEN 1 THEN 'http://site' || (doc_id % 50) % 10 ||
+          |      '.example/atom.xml' END AS feed_url,
+          |  CASE doc_id % 4 WHEN 0 THEN 'rss' WHEN 1 THEN 'atom' END
+          |    AS feed_type
+          |FROM documents""".stripMargin)),
+
+    // 29q. RSS/Atom feed parsing (RSS 2.0 / RFC 4287) — the change-feed
+    // side of the discovery loop: where sitemaps enumerate a site
+    // (q110), the feed q134 discovered carries the NEWEST items with
+    // timestamps, the cheapest recrawl signal a crawler gets (feeds
+    // compose with q128's change-rate estimator). Fixture assembles
+    // RSS for even ids / Atom for odd, 2-4 items each, with pubDate in
+    // ALL the conventional RFC-822 wire shapes: the day-of-week-
+    // prefixed `EEE, dd MMM yyyy HH:mm:ss GMT` virtually every real
+    // feed emits (id%6=0), the prefix-free legacy shape, a numeric
+    // `+0200` zone whose offset must be HONORED (pub_hour proves the
+    // UTC conversion, not a mere strip), a missing-pubDate variant,
+    // an attribute-reordered Atom link, a torn body yielding ZERO
+    // rows, and the gzip wire form riding the q110 sniff+inflate
+    // kernel. Day names are the TRUE weekday of the planted date. The
+    // oracle regenerates items by arithmetic. Map-side parse +
+    // posexplode, zero shuffles.
+    QueryDef("q135_feed_parse", (s, dir) => {
+      val id = col("doc_id")
+      val site = concat(lit("http://site"),
+        ((id % 50) % 10).cast("string"), lit(".example"))
+      val n = (lit(2) + id % 3).cast("int")
+      def dd(i: Column) =
+        lpad((lit(1) + (id + i) % 28).cast("string"), 2, "0")
+      def dow(i: Column) = date_format(
+        make_date(lit(2024), lit(1), (lit(1) + (id + i) % 28).cast("int")),
+        "EEE")
+      val rssItems = array_join(transform(sequence(lit(0), n - 1), i =>
+        concat(lit("<item><title>Post "), id.cast("string"), lit("-"),
+          i.cast("string"), lit("</title><link>"), site, lit("/post/"),
+          id.cast("string"), lit("/"), i.cast("string"), lit("</link>"),
+          when(id % 6 === 4, lit(""))
+            .when(id % 6 === 0, concat(lit("<pubDate>"), dow(i),
+              lit(", "), dd(i), lit(" Jan 2024 08:00:00 GMT</pubDate>")))
+            .otherwise(when((id + i) % 2 === 0,
+              concat(lit("<pubDate>"), dd(i),
+                lit(" Jan 2024 08:00:00 GMT</pubDate>")))
+              .otherwise(concat(lit("<pubDate>"), dow(i), lit(", "),
+                dd(i), lit(" Jan 2024 07:00:00 +0200</pubDate>")))),
+          lit("</item>"))), "")
+      val atomEntries = array_join(transform(sequence(lit(0), n - 1), i =>
+        concat(lit("<entry><title>Post "), id.cast("string"), lit("-"),
+          i.cast("string"), lit("</title>"),
+          when(id % 6 === 5,
+            concat(lit("<link rel=\"alternate\" href=\""), site,
+              lit("/post/"), id.cast("string"), lit("/"),
+              i.cast("string"), lit("\"/>")))
+            .otherwise(concat(lit("<link href=\""), site, lit("/post/"),
+              id.cast("string"), lit("/"), i.cast("string"),
+              lit("\"/>"))),
+          lit("<updated>2024-01-"), dd(i),
+          lit("T08:00:00Z</updated></entry>"))), "")
+      val xml = when(id % 9 === 8,
+        lit("<?xml version=\"1.0\"?><rss><channel><item><title>torn"))
+        .when(id % 2 === 0, concat(
+          lit("<?xml version=\"1.0\"?><rss version=\"2.0\"><channel>" +
+            "<title>Feed "), id.cast("string"), lit("</title>"),
+          rssItems, lit("</channel></rss>")))
+        .otherwise(concat(
+          lit("<?xml version=\"1.0\"?>" +
+            "<feed xmlns=\"http://www.w3.org/2005/Atom\"><title>Feed "),
+          id.cast("string"), lit("</title>"), atomEntries, lit("</feed>")))
+      val body = when(id % 4 === 2, graft.sources.Sitemap.gzipUtf8(xml))
+        .otherwise(xml.cast("binary"))
+      graft.sources.Feeds.items(
+        Tables(s, dir).documents
+          .select(id, graft.sources.Sitemap.bodyText(body).as("xml")),
+        "doc_id", "xml")
+        .select(id, col("feed_format"), col("item_idx"), col("title"),
+          col("url"), col("pub_ts").cast("date").as("pub_date"),
+          hour(col("pub_ts")).as("pub_hour"))
+    },
+      // q135: the oracle regenerates items by arithmetic (torn id%9=8
+      // bodies contribute ZERO rows); Spark must genuinely inflate the
+      // gzip wire form, split item/entry blocks, strip the RFC-822
+      // day-of-week prefix, honor the +0200 numeric zone (pub_hour 5,
+      // not 7), and parse RFC-822 vs ISO-8601 back to the same days
+      oracle = Some("""WITH d AS (
+          |  SELECT doc_id, 2 + doc_id % 3 AS n, (doc_id % 50) % 10 AS h
+          |  FROM documents WHERE doc_id % 9 <> 8
+          |), i AS (
+          |  SELECT doc_id, h,
+          |    unnest(generate_series(0, CAST(n - 1 AS INTEGER))) AS i
+          |  FROM d
+          |)
+          |SELECT doc_id,
+          |  CASE WHEN doc_id % 2 = 0 THEN 'rss' ELSE 'atom' END
+          |    AS feed_format,
+          |  CAST(i AS BIGINT) AS item_idx,
+          |  'Post ' || doc_id || '-' || i AS title,
+          |  'http://site' || h || '.example/post/' || doc_id || '/' || i
+          |    AS url,
+          |  CASE WHEN doc_id % 2 = 0 AND doc_id % 6 = 4 THEN NULL
+          |    ELSE make_date(2024, 1, CAST(1 + (doc_id + i) % 28
+          |      AS INTEGER)) END AS pub_date,
+          |  CAST(CASE WHEN doc_id % 2 = 0 AND doc_id % 6 = 4 THEN NULL
+          |    WHEN doc_id % 2 = 0 AND doc_id % 6 = 2
+          |      AND (doc_id + i) % 2 = 1 THEN 5
+          |    ELSE 8 END AS INTEGER) AS pub_hour
+          |FROM i""".stripMargin)),
+
+    // 26ai. per-domain contribution capping (C4/FineWeb-class head-
+    // domain limits): the fixture plants a Zipf-shaped host skew —
+    // host 0 holds ~50% of docs, host 1 ~25%, 30 tail hosts split the
+    // rest — and the 10% cap must cut both head hosts back while every
+    // tail host keeps all its docs. The keep-set is deterministic hash
+    // order on BOTH engines (murmur64 == DuckDB hash(BIGINT)); the cap
+    // test is integer cross-multiplied. One shuffle by host, per-host
+    // window only — no global sort (see etl/DomainCap.scala).
+    QueryDef("q136_domain_cap", (s, dir) => {
+      val id = col("doc_id")
+      val host = concat(lit("site"),
+        when(id % 2 === 0, lit("0")).when(id % 4 === 1, lit("1"))
+          .otherwise((id % 32).cast("string")), lit(".example"))
+      val base = Tables(s, dir).documents.select(id, host.as("host"),
+        TextStats.tokenCount(col("text")).as("n_tokens"))
+      DomainCap.cap(base, "doc_id", "host", "n_tokens", 1000)
+    },
+      // q136: both engines genuinely run the capped selection — the same
+      // hash order (DuckDB hash(BIGINT) == murmur64), the same per-host
+      // running sum, the same integer cross-multiplied 10% cap
+      oracle = Some("""WITH b AS (
+          |  SELECT doc_id,
+          |    'site' || CASE WHEN doc_id % 2 = 0 THEN '0'
+          |      WHEN doc_id % 4 = 1 THEN '1'
+          |      ELSE CAST(doc_id % 32 AS VARCHAR) END || '.example'
+          |      AS host,
+          |    CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT)
+          |      AS n_tokens
+          |  FROM documents
+          |), t AS (SELECT sum(n_tokens) AS w_total FROM b),
+          |c AS (
+          |  SELECT doc_id, host, n_tokens,
+          |    sum(n_tokens) OVER (PARTITION BY host
+          |      ORDER BY hash(doc_id) >> 1, doc_id
+          |      ROWS UNBOUNDED PRECEDING) AS w_cum
+          |  FROM b)
+          |SELECT doc_id, host, n_tokens,
+          |  w_cum * 10000 <= w_total * 1000 AS kept
+          |FROM c, t""".stripMargin)),
+
+    // 26ai-b. QUALITY-weighted per-domain capping: the q136 shape, but
+    // an over-cap head domain discards its WORST pages — within-domain
+    // order is (quality DESC, hash, id), quality being the q25 integer
+    // stopword-density score both engines replay exactly. Same single
+    // host-keyed shuffle; the ordering swap is free once rows are
+    // co-located, which is the point: upgrading hash-random survival to
+    // keep-the-best costs nothing at 100 TB.
+    QueryDef("q143_domain_cap_quality", (s, dir) => {
+      val id = col("doc_id")
+      val host = concat(lit("site"),
+        when(id % 2 === 0, lit("0")).when(id % 4 === 1, lit("1"))
+          .otherwise((id % 32).cast("string")), lit(".example"))
+      val base = Tables(s, dir).documents.select(id, host.as("host"),
+        TextStats.tokenCount(col("text")).as("n_tokens"),
+        TextStats.qualityScore(col("text")).as("quality"))
+      DomainCap.capByQuality(base, "doc_id", "host", "n_tokens",
+        "quality", 1000)
+    },
+      // q143: the q136 replay with the q25 quality score leading the
+      // within-domain order — best pages survive the cap, the hash only
+      // breaks score ties
+      oracle = Some("""WITH b AS (
+          |  SELECT doc_id,
+          |    'site' || CASE WHEN doc_id % 2 = 0 THEN '0'
+          |      WHEN doc_id % 4 = 1 THEN '1'
+          |      ELSE CAST(doc_id % 32 AS VARCHAR) END || '.example'
+          |      AS host,
+          |    CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT)
+          |      AS n_tokens,
+          |    least(100, CAST(floor(500.0 * (
+          |        (length(p) - length(replace(p, ' the ', ''))) / 5
+          |        + (length(p) - length(replace(p, ' a ', ''))) / 3
+          |        + (length(p) - length(replace(p, ' and ', ''))) / 5)
+          |      / len(string_split_regex(trim(text), '\s+'))) AS BIGINT))
+          |      AS quality
+          |  FROM (SELECT doc_id, text, ' ' || text || ' ' AS p
+          |        FROM documents)
+          |), t AS (SELECT sum(n_tokens) AS w_total FROM b),
+          |c AS (
+          |  SELECT doc_id, host, n_tokens, quality,
+          |    sum(n_tokens) OVER (PARTITION BY host
+          |      ORDER BY quality DESC, hash(doc_id) >> 1, doc_id
+          |      ROWS UNBOUNDED PRECEDING) AS w_cum
+          |  FROM b)
+          |SELECT doc_id, host, n_tokens, quality,
+          |  w_cum * 10000 <= w_total * 1000 AS kept
+          |FROM c, t""".stripMargin)),
+
+    // 29s. feed → recrawl composition: the q128 estimator's cold start
+    // solved with the channel q134 discovers and q135 parses — URLs
+    // whose fetch history is thinner than 3 observations take their
+    // revisit bucket from the newest feed-item age instead (≤2d hot,
+    // ≤7d warm, ≤30d cool, else cold); thick history always wins, and
+    // a thin URL with no feed keeps its history verdict. The fixture
+    // thins the q128 plant on a known URL subset and plants per-URL
+    // feeds (some gzipped) whose newest item ages url_id·3 days —
+    // RSS with the conventional day-of-week-prefixed RFC-822 pubDate
+    // (GMT for url%4=0, numeric +0000 for url%4=2) on even urls, Atom
+    // ISO on odd; Spark genuinely decodes + parses via the SHARED
+    // Feeds.items/Sitemap kernels while the oracle replays the plant
+    // arithmetic. Two url-keyed aggs + one co-partitioned join.
+    QueryDef("q144_feed_recrawl", (s, dir) => {
+      val id = col("doc_id")
+      val docs = Tables(s, dir).documents
+      val seqc = floor(id / 20).cast("long")
+      val v = (id % 20) % 4
+      val thin = col("url_id") % 5 === 4 || col("url_id") <= 1 ||
+        col("url_id") === 16
+      val hist = docs.select(
+        (id % 20).as("url_id"), seqc.as("seq"),
+        when(v === 0, lit(0L)).when(v === 1, seqc)
+          .when(v === 2, floor(seqc / 2).cast("long"))
+          .otherwise(floor(seqc / 12).cast("long")).as("ch"))
+        .where(!thin || col("seq") === 0L)
+      val u = col("url_id")
+      val nit = (lit(2) + u % 2).cast("int")
+      val newest = date_sub(lit("2024-02-15").cast("date"),
+        (u * 3).cast("int"))
+      val entries = array_join(transform(sequence(lit(0), nit - 1), i =>
+        concat(lit("<entry><title>I</title>" +
+            "<link href=\"http://f.example/"),
+          u.cast("string"), lit("/"), i.cast("string"),
+          lit("\"/><updated>"),
+          date_format(date_sub(newest, i * 40), "yyyy-MM-dd"),
+          lit("T08:00:00Z</updated></entry>"))), "")
+      val rssItems = array_join(transform(sequence(lit(0), nit - 1), i =>
+        concat(lit("<item><title>I</title><link>http://f.example/"),
+          u.cast("string"), lit("/"), i.cast("string"),
+          lit("</link><pubDate>"),
+          date_format(date_sub(newest, i * 40), "EEE, dd MMM yyyy"),
+          when(u % 4 === 0, lit(" 08:00:00 GMT"))
+            .otherwise(lit(" 08:00:00 +0000")),
+          lit("</pubDate></item>"))), "")
+      val xml = when(u % 2 === 0, concat(
+          lit("<?xml version=\"1.0\"?><rss version=\"2.0\"><channel>" +
+            "<title>F</title>"),
+          rssItems, lit("</channel></rss>")))
+        .otherwise(concat(
+          lit("<?xml version=\"1.0\"?>" +
+            "<feed xmlns=\"http://www.w3.org/2005/Atom\"><title>F</title>"),
+          entries, lit("</feed>")))
+      val body = when(u % 4 === 2, graft.sources.Sitemap.gzipUtf8(xml))
+        .otherwise(xml.cast("binary"))
+      val feedDocs = docs.select((id % 20).as("url_id")).distinct()
+        .where(u % 3 =!= 2)
+        .select(u, graft.sources.Sitemap.bodyText(body).as("xml"))
+      val items = graft.sources.Feeds.items(feedDocs, "url_id", "xml")
+      Recrawl.scheduleWithFeedPrior(hist, "url_id", "seq", "ch",
+        items, "url_id", "pub_ts", "2024-02-15", minFetches = 3)
+    },
+      // q144: the q128 estimator replay over the THINNED history plant,
+      // composed with the feed plant's arithmetic (newest item ages
+      // url_id*3 days at the 2024-02-15 as-of; urls =2 mod 3 publish no
+      // feed) — Spark genuinely gunzips and regex-parses the Atom
+      // documents; the oracle replays what was planted
+      oracle = Some("""WITH h0 AS (
+          |  SELECT doc_id % 20 AS url_id, doc_id // 20 AS seq,
+          |    CASE (doc_id % 20) % 4 WHEN 0 THEN 0
+          |      WHEN 1 THEN doc_id // 20
+          |      WHEN 2 THEN (doc_id // 20) // 2
+          |      ELSE (doc_id // 20) // 12 END AS ch
+          |  FROM documents
+          |), h AS (
+          |  SELECT * FROM h0
+          |  WHERE NOT (url_id % 5 = 4 OR url_id <= 1 OR url_id = 16)
+          |     OR seq = 0
+          |), fl AS (
+          |  SELECT url_id,
+          |    CASE WHEN lag(ch) OVER w IS NULL THEN 0
+          |      WHEN ch <> lag(ch) OVER w THEN 1 ELSE 0 END AS changed
+          |  FROM h WINDOW w AS (PARTITION BY url_id ORDER BY seq)
+          |), agg AS (
+          |  SELECT url_id, COUNT(*) AS n_fetches, SUM(changed) AS n_changes
+          |  FROM fl GROUP BY 1
+          |), lam AS (
+          |  SELECT url_id, CAST(n_fetches AS BIGINT) AS n_fetches,
+          |    CAST(n_changes AS BIGINT) AS n_changes,
+          |    CASE WHEN n_fetches > 1 THEN CAST(floor(
+          |      CAST(ln(CAST(2*(n_fetches-1-n_changes)+1 AS DOUBLE)
+          |        / CAST(2*(n_fetches-1)+1 AS DOUBLE)) AS DECIMAL(18,9))
+          |      * -1000000) AS BIGINT) END AS lambda_x1e6
+          |  FROM agg
+          |), hist AS (
+          |  SELECT url_id, n_fetches, n_changes, lambda_x1e6,
+          |    CASE WHEN n_fetches = 1 THEN 'unknown'
+          |         WHEN lambda_x1e6 >= 700000 THEN 'hot'
+          |         WHEN lambda_x1e6 >= 100000 THEN 'warm'
+          |         WHEN lambda_x1e6 > 0 THEN 'cool'
+          |         ELSE 'cold' END AS history_bucket
+          |  FROM lam
+          |), fr AS (
+          |  SELECT url_id, CAST(2 + url_id % 2 AS BIGINT) AS n_feed_items,
+          |    DATE '2024-02-15' - CAST(url_id * 3 AS INTEGER)
+          |      AS feed_newest,
+          |    CAST(url_id * 3 AS BIGINT) AS feed_age_days
+          |  FROM (SELECT DISTINCT doc_id % 20 AS url_id FROM documents)
+          |  WHERE url_id % 3 <> 2
+          |), j AS (
+          |  SELECT hist.*, COALESCE(fr.n_feed_items, 0) AS n_feed_items,
+          |    fr.feed_newest, fr.feed_age_days,
+          |    CASE WHEN fr.feed_age_days IS NULL THEN NULL
+          |         WHEN fr.feed_age_days <= 2 THEN 'hot'
+          |         WHEN fr.feed_age_days <= 7 THEN 'warm'
+          |         WHEN fr.feed_age_days <= 30 THEN 'cool'
+          |         ELSE 'cold' END AS feed_bucket
+          |  FROM hist LEFT JOIN fr USING (url_id)
+          |)
+          |SELECT url_id, n_fetches, n_changes, lambda_x1e6,
+          |  history_bucket, n_feed_items, feed_newest, feed_age_days,
+          |  feed_bucket,
+          |  CASE WHEN n_fetches >= 3 OR feed_bucket IS NULL
+          |    THEN 'history' ELSE 'feed' END AS prior_source,
+          |  CASE WHEN n_fetches >= 3 OR feed_bucket IS NULL
+          |    THEN history_bucket ELSE feed_bucket END AS revisit_bucket
+          |FROM j""".stripMargin)),
+
+    // 26aj. HTML → Markdown conversion — structure-preserving corpus
+    // text (the markdown-corpus convention of recent public pipeline
+    // work): headings, emphasis, links and lists carry signal flat
+    // extraction (q103) throws away. Bounded non-nested subset;
+    // fixture pages are PURE arithmetic (headings h1-h3, b/strong and
+    // i/em variants, an entity, a planted link, 2-3 bullets, a
+    // plain-paragraph page, and a TORN unclosed heading that must
+    // degrade to stripped plain text) so the oracle rebuilds the exact
+    // expected markdown string. Map-side kernel, zero shuffles.
+    QueryDef("q138_markdown", (s, dir) => {
+      val id = col("doc_id")
+      val site = concat(lit("http://site"),
+        ((id % 50) % 10).cast("string"), lit(".example"))
+      val lvl = (lit(1) + id % 3).cast("string")
+      val head = concat(lit("<h"), lvl, lit(">Head "), id.cast("string"),
+        lit("</h"), lvl, lit(">"))
+      val boldTag = when(id % 2 === 0, lit("b")).otherwise(lit("strong"))
+      val emTag = when(id % 4 < 2, lit("i")).otherwise(lit("em"))
+      val para = concat(lit("<p>Intro <"), boldTag, lit(">bold"),
+        id.cast("string"), lit("</"), boldTag, lit("> and <a href=\""),
+        site, lit("/a/"), id.cast("string"), lit("\">link "),
+        id.cast("string"), lit("</a> &amp; <"), emTag, lit(">it"),
+        id.cast("string"), lit("</"), emTag, lit("> tail.</p>"))
+      val items = array_join(transform(
+        sequence(lit(0), (lit(1) + id % 2).cast("int")), i =>
+          concat(lit("<li>item "), id.cast("string"), lit("-"),
+            i.cast("string"), lit("</li>"))), "")
+      // table page (id%5=0): th header + 1..3 data rows, 2-3 columns —
+      // the q133 geometry rendered as GFM pipes
+      val nc3 = id % 2 === 1 // third column present
+      val nr = (lit(1) + id % 3).cast("int")
+      val hdr = concat(lit("<tr><th>H0</th><th>H1</th>"),
+        when(nc3, lit("<th>H2</th>")).otherwise(lit("")), lit("</tr>"))
+      val dataRows = array_join(transform(sequence(lit(0), nr - 1), r =>
+        concat(lit("<tr><td>c"), id.cast("string"), lit("-"),
+          r.cast("string"), lit("-0</td><td>c"), id.cast("string"),
+          lit("-"), r.cast("string"), lit("-1</td>"),
+          when(nc3, concat(lit("<td>c"), id.cast("string"), lit("-"),
+            r.cast("string"), lit("-2</td>"))).otherwise(lit("")),
+          lit("</tr>"))), "")
+      val tablePage = concat(lit("<html><body><p>Pre "),
+        id.cast("string"), lit(".</p><table>"), hdr, dataRows,
+        lit("</table></body></html>"))
+      // nested-list page (id%5=1): outer item 0 carries a 1-2 item
+      // inner list — one-level nesting, the documented subset
+      val ni = (lit(1) + id % 2).cast("int")
+      val inner = array_join(transform(sequence(lit(0), ni - 1), i =>
+        concat(lit("<li>n "), id.cast("string"), lit("-"),
+          i.cast("string"), lit("</li>"))), "")
+      val nestedPage = concat(lit("<html><body><ul><li>o "),
+        id.cast("string"), lit("-0<ul>"), inner,
+        lit("</ul></li><li>o "), id.cast("string"),
+        lit("-1</li></ul></body></html>"))
+      val html = when(id % 9 === 8,
+        concat(lit("<html><body><h1>Torn "), id.cast("string"),
+          lit("</body></html>")))
+        .when(id % 7 === 6,
+          concat(lit("<html><body><p>plain "), id.cast("string"),
+            lit("</p></body></html>")))
+        .when(id % 5 === 0, tablePage)
+        .when(id % 5 === 1, nestedPage)
+        .otherwise(concat(lit("<html><body>"), head, para,
+          lit("<ul>"), items, lit("</ul></body></html>")))
+      Tables(s, dir).documents
+        .select(id, HtmlText.toMarkdown(html).as("markdown"))
+    },
+      // q138: the fixture is pure arithmetic, so the oracle rebuilds the
+      // exact expected markdown string — heading hashes, finished inline
+      // spans, bullet lines — while Spark genuinely converts the HTML it
+      // assembled (incl. the torn heading degrading to plain text)
+      oracle = Some("""SELECT doc_id,
+          |  CASE
+          |    WHEN doc_id % 9 = 8 THEN 'Torn ' || doc_id
+          |    WHEN doc_id % 7 = 6 THEN 'plain ' || doc_id
+          |    WHEN doc_id % 5 = 0 THEN
+          |      'Pre ' || doc_id || '.' || chr(10) || chr(10)
+          |      || '| H0 | H1' || CASE WHEN doc_id % 2 = 1
+          |           THEN ' | H2' ELSE '' END || ' |' || chr(10)
+          |      || '| --- | ---' || CASE WHEN doc_id % 2 = 1
+          |           THEN ' | ---' ELSE '' END || ' |' || chr(10)
+          |      || array_to_string(list_transform(
+          |           generate_series(0, CAST(doc_id % 3 AS INTEGER)),
+          |           r -> '| c' || doc_id || '-' || r || '-0 | c'
+          |             || doc_id || '-' || r || '-1'
+          |             || CASE WHEN doc_id % 2 = 1 THEN ' | c' || doc_id
+          |                  || '-' || r || '-2' ELSE '' END
+          |             || ' |'), chr(10))
+          |    WHEN doc_id % 5 = 1 THEN
+          |      '- o ' || doc_id || '-0' || chr(10)
+          |      || array_to_string(list_transform(
+          |           generate_series(0, CAST(doc_id % 2 AS INTEGER)),
+          |           i -> '  - n ' || doc_id || '-' || i), chr(10))
+          |      || chr(10) || '- o ' || doc_id || '-1'
+          |    ELSE repeat('#', CAST(1 + doc_id % 3 AS INTEGER))
+          |      || ' Head ' || doc_id || chr(10) || chr(10)
+          |      || 'Intro **bold' || doc_id || '** and [link ' || doc_id
+          |      || '](http://site' || (doc_id % 50) % 10 || '.example/a/'
+          |      || doc_id || ') & *it' || doc_id || '* tail.'
+          |      || chr(10) || chr(10)
+          |      || array_to_string(list_transform(
+          |           generate_series(0, CAST(1 + doc_id % 2 AS INTEGER)),
+          |           i -> '- item ' || doc_id || '-' || i), chr(10))
+          |  END AS markdown
+          |FROM documents""".stripMargin)),
+
+    // 26ak. declared-vs-detected language audit — `<html lang>` (the
+    // WHATWG attribute) against the content-based n-gram language id
+    // (q24): a page whose declaration disagrees with its content is
+    // mislabeled (wrong-language boilerplate, copy-paste templates) and
+    // corpus language routing must trust the CONTENT. Attr extraction
+    // is anchored to the OPENING <html> tag so a decoy inside body text
+    // can never match; a missing attr is an honest NULL (agree=false).
+    // Map-side, zero shuffles.
+    QueryDef("q139_lang_attr", (s, dir) => {
+      val id = col("doc_id")
+      val attr = when(id % 5 === 2, lit(""))
+        .when(id % 4 === 1,
+          concat(lit(" LANG=\""), upper(col("lang")), lit("\"")))
+        .otherwise(concat(lit(" lang=\""), col("lang"), lit("\"")))
+      val html = concat(lit("<html"), attr,
+        lit("><head></head><body><p>"), col("text"),
+        lit("</p></body></html>"))
+      val openTag = regexp_extract(html, "(?i)^<html\\b[^>]*>", 0)
+      val declared = lower(nullif(regexp_extract(openTag,
+        "(?i)\\blang\\s*=\\s*\"([^\"]*)\"", 1), lit("")))
+      val predicted = TextStats.langId(col("text"))
+      Tables(s, dir).documents.select(id,
+        declared.as("declared_lang"), predicted.as("predicted_lang"),
+        coalesce(declared === predicted, lit(false)).as("agree"))
+    },
+      // q139: declared replays the plant (attr absent when id%5=2, value
+      // case-folds back to the lang column); predicted replays the q24
+      // n-gram heuristic; Spark genuinely extracts the anchored attr
+      oracle = Some(s"""WITH b AS (
+           |  SELECT doc_id, lang, text, ' ' || lower(text) || ' ' AS p
+           |  FROM documents
+           |), pr AS (
+           |  SELECT doc_id, lang, $langCase AS predicted FROM b
+           |)
+           |SELECT doc_id,
+           |  CASE WHEN doc_id % 5 <> 2 THEN lang END AS declared_lang,
+           |  predicted AS predicted_lang,
+           |  doc_id % 5 <> 2 AND lang = predicted AS agree
+           |FROM pr""".stripMargin)),
+
+    // 29r. redirect-chain resolution — the frontier step between
+    // fetching and canonical URL identity: 3xx captures yield the
+    // functional (source, Location) edge set; path DOUBLING resolves
+    // every source to its final target in log₂(maxHops) joins (8 hops =
+    // 3 joins), loops and over-limit chains report unresolved with a
+    // NULL hop count. The fixture plants 1-3 hop chains by arithmetic
+    // plus loop chains (id%9=8) whose last hop points back to hop 0;
+    // Spark genuinely parses statuses + Location headers and resolves,
+    // while the oracle replays the plant (a loop source's position
+    // after 2³ doubled steps is (j+8) mod L — exact arithmetic).
+    QueryDef("q142_redirects", (s, dir) => {
+      val warc = GraftWarc.read(s, s"${warcRedirectFixture(s, dir)}/*.warc*")
+      val edges = warc.where(col("warc_type") === "response" &&
+        col("http_status").between(300, 399) &&
+        col("http_location").isNotNull)
+        .select(col("target_uri").as("src"),
+          col("http_location").as("dst"), col("warc_date"))
+      Redirects.resolve(edges, "src", "dst", maxHops = 8,
+          preferCol = Some("warc_date"))
+        .select(
+          regexp_extract(col("src"), "/r/([0-9]+)/", 1).cast("long")
+            .as("doc_id"),
+          regexp_extract(col("src"), "/r/[0-9]+/([0-9]+)$", 1).cast("long")
+            .as("hop_idx"),
+          col("final_url"), col("hops"), col("resolved"))
+    },
+      // q142: the oracle replays the chain plant — hop j of a normal
+      // chain lands on /page with L−j hops; a loop source's final target
+      // after the resolver's 2³ doubled steps is hop (j+8) mod L, hops
+      // NULL, resolved false. id%7=3 chains plant a STALE duplicate
+      // capture of hop 0 (an hour older, shortcutting to the page): the
+      // expected rows are exactly the newest-capture chain, so a resolver
+      // that keeps both edges (row multiplication) or picks the stale one
+      // (final_url/hops off) replays red
+      oracle = Some("""WITH d AS (
+          |  SELECT doc_id, (doc_id % 50) % 10 AS h,
+          |    CAST(doc_id % 4 AS INTEGER) AS l,
+          |    doc_id % 9 = 8 AS lp
+          |  FROM documents WHERE doc_id % 4 <> 0
+          |), j AS (
+          |  SELECT doc_id, h, l, lp,
+          |    unnest(generate_series(0, l - 1)) AS hop_idx
+          |  FROM d
+          |)
+          |SELECT doc_id, CAST(hop_idx AS BIGINT) AS hop_idx,
+          |  CASE WHEN lp THEN 'http://site' || h || '.example/r/' ||
+          |      doc_id || '/' || (hop_idx + 8) % l
+          |    ELSE 'http://site' || h || '.example/page/' || doc_id
+          |    END AS final_url,
+          |  CASE WHEN NOT lp THEN CAST(l - hop_idx AS BIGINT) END AS hops,
+          |  NOT lp AS resolved
+          |FROM j""".stripMargin)),
+
+    // 26w. URL quality filter (RefinedWeb §3.1.2): judge pages by URL
+    // alone — blocklist dim (broadcast hash joins: exact host + the
+    // bounded parent-suffix chain, so `example.com` bans its subdomains
+    // without list pre-expansion), severity-weighted soft/strict
+    // bad-word score (soft = whole-token map lookup, strict = substring
+    // containment), an explicit has-host rule, digit-host and
+    // subdomain-depth bounds in integer cross-multiplication. One
+    // map-side codegen pass + broadcast joins, zero wide shuffles; the
+    // oracle re-derives every counter from the reconstructed URL with
+    // DuckDB string/list functions.
+    QueryDef("q119_url_filter", (s, dir) =>
+      graft.functions.UrlFilter.evaluate(
+        Tables(s, dir).documents
+          .select(col("doc_id"), plantedFilterUrl(col("doc_id")).as("url")),
+        "doc_id", "url", blocklistDim(s)),
+      // q119: the oracle rebuilds the planted URLs by the same doc_id
+      // arithmetic, then re-derives host/digits/dots/score with DuckDB
+      // string and list functions and replays the blocklist against a
+      // range()-built dim — exact-host plus the parent-suffix ban over
+      // the SAME bounded shortest-first suffix window the engine joins
+      // (UrlFilter.MaxSuffixJoins = MaxHostDots+1 = 5), so the two
+      // battery replays are exhaustively equivalent BY CONSTRUCTION on
+      // every host, 8+-label frontiers included (the r13 LIKE replay was
+      // unbounded and could disagree past 7 labels) — a genuine replay
+      // of the battery, not a decision table
+      oracle = Some("""WITH u AS (
+          |  SELECT doc_id,
+          |    CASE CAST(doc_id % 10 AS INTEGER)
+          |      WHEN 0 THEN 'http://site' || ((doc_id % 50) % 10)
+          |        || '.example/news/' || (doc_id % 50)
+          |      WHEN 1 THEN 'http://site' || ((doc_id % 50) % 10)
+          |        || '.example/casino/' || (doc_id % 50)
+          |      WHEN 2 THEN 'http://site' || ((doc_id % 50) % 10)
+          |        || '.example/casino/poker/' || (doc_id % 50)
+          |      WHEN 3 THEN 'http://site' || ((doc_id % 50) % 10)
+          |        || '.example/a/p' || (doc_id % 50) || 'xxx4'
+          |      WHEN 4 THEN 'http://h' || (doc_id % 50) || 'x'
+          |        || (doc_id % 50) || '.biz/news/' || (doc_id % 50)
+          |      WHEN 5 THEN 'http://blocked' || ((doc_id % 50) % 10)
+          |        || '.example/news/' || (doc_id % 50)
+          |      WHEN 6 THEN 'http://a.b.c.d.site' || ((doc_id % 50) % 10)
+          |        || '.example/news/' || (doc_id % 50)
+          |      WHEN 7 THEN 'http://cdn.blocked' || ((doc_id % 50) % 10)
+          |        || '.example/news/' || (doc_id % 50)
+          |      WHEN 8 THEN 'http://a.b.c.d.e.f.blocked'
+          |        || ((doc_id % 50) % 10)
+          |        || '.example/news/' || (doc_id % 50)
+          |      ELSE 'www.site' || ((doc_id % 50) % 10)
+          |        || '.example/news/' || (doc_id % 50)
+          |    END AS url
+          |  FROM documents
+          |), f AS (
+          |  SELECT doc_id, lower(url) AS lurl,
+          |    regexp_extract(lower(url),
+          |      '^[a-z][a-z0-9+.-]*://([^/:?#]+)', 1) AS host
+          |  FROM u
+          |), g AS (
+          |  SELECT doc_id, host,
+          |    length(host) AS host_len,
+          |    length(regexp_replace(host, '[^0-9]', '', 'g'))
+          |      AS n_host_digits,
+          |    length(host) - length(replace(host, '.', '')) AS n_host_dots,
+          |    CAST(COALESCE(list_sum(list_transform(
+          |        string_split_regex(lurl, '[^a-z0-9]+'),
+          |        t -> CASE t WHEN 'casino' THEN 40 WHEN 'poker' THEN 30
+          |                    WHEN 'pills' THEN 50 ELSE 0 END)), 0)
+          |      + (CASE WHEN contains(lurl, 'xxx') THEN 100 ELSE 0 END)
+          |      + (CASE WHEN contains(lurl, 'porn') THEN 100 ELSE 0 END)
+          |      AS BIGINT) AS badword_score
+          |  FROM f
+          |), b AS (
+          |  SELECT 'blocked' || i || '.example' AS bhost FROM range(10) t(i)
+          |), lb AS (
+          |  SELECT doc_id, string_split(host, '.') AS labs,
+          |    len(string_split(host, '.')) AS nlab
+          |  FROM g
+          |), sfx AS (
+          |  -- the i-th SHORTEST proper suffix with >=2 labels, i=1..5 —
+          |  -- the engine's exact bounded window
+          |  SELECT lb.doc_id,
+          |    array_to_string(list_slice(labs,
+          |      nlab - CAST(s.i AS BIGINT), nlab), '.') AS suffix
+          |  FROM lb CROSS JOIN range(1, 6) s(i)
+          |  WHERE CAST(s.i AS BIGINT) <= nlab - 2
+          |), v AS (
+          |  SELECT g.*,
+          |    EXISTS (SELECT 1 FROM b WHERE g.host = b.bhost)
+          |      AS blocked_domain,
+          |    EXISTS (SELECT 1 FROM sfx JOIN b ON sfx.suffix = b.bhost
+          |      WHERE sfx.doc_id = g.doc_id)
+          |      AS blocked_parent
+          |  FROM g
+          |)
+          |SELECT doc_id, host, host_len, n_host_digits, n_host_dots,
+          |  badword_score, blocked_domain, blocked_parent,
+          |  host_len > 0 AS r_has_host,
+          |  NOT (blocked_domain OR blocked_parent) AS r_blocklist,
+          |  badword_score < 60 AS r_badwords,
+          |  host_len = 0 OR n_host_digits * 10 < host_len * 3
+          |    AS r_digit_host,
+          |  n_host_dots <= 4 AS r_depth,
+          |  host_len > 0 AND NOT (blocked_domain OR blocked_parent)
+          |    AND badword_score < 60
+          |    AND (host_len = 0 OR n_host_digits * 10 < host_len * 3)
+          |    AND n_host_dots <= 4 AS url_ok
+          |FROM v""".stripMargin))
+  )
+}

@@ -77,7 +77,7 @@ object ShpCodec {
 
   /** The q60/q85 star-polygon ring for one nation, OPEN (8 vertices) —
     * the single source of truth the oracle mirrors
-    * (SparkEntry.polygonFixture arithmetic).
+    * (registry.EtlQueries.polygonFixture arithmetic).
     */
   private def fixtureRing(polyId: Long): Array[(Double, Double)] =
     dirs.zipWithIndex.map { case ((dx, dy), k) =>

@@ -1,6 +1,8 @@
 package graft
 
 import graft.dedup.{DupSpans, ExactSubstr}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
 import org.apache.spark.sql.functions._
 
 /** ExactSubstr laws the q175/q176 oracles can't isolate: equality with
@@ -180,5 +182,16 @@ class ExactSubstrSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted
     assert(a === b)
     assert(a.toSet === bruteSpans(docs, 12))
+  }
+
+  test("the explain probe plan on sf0.001 documents is a shuffled hash join") {
+    val df = ExactSubstr.probePlanForExplain(
+      Tables(spark, sf0001).documents, "doc_id", "text")
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case p => p
+    }
+    assert(plan.collectFirst { case j: ShuffledHashJoinExec => j }.nonEmpty,
+      plan.toString)
   }
 }

@@ -272,7 +272,7 @@ class PlanSpec extends SparkSpec {
     // frame — scan → full-data round-robin exchange → count, a 100 TB
     // shuffle at scale. The sizing count must read the raw parquet scan;
     // its only exchange is the one-row-per-partition partial-count merge.
-    val p = SparkEntry.sizingCountFrame(spark, sf0001, "embeddings")
+    val p = registry.Shared.sizingCountFrame(spark, sf0001, "embeddings")
       .queryExecution.executedPlan.toString
     assert(!p.contains("RoundRobinPartitioning"),
       "sizing count shuffles the data before counting:\n" + p.take(1200))
