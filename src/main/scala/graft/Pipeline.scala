@@ -5,12 +5,12 @@ import graft.dedup.{Contamination, DedupClusters, ExactDedup, MinHashDedup,
 import graft.functions.{TextClean, TextStats}
 import graft.functions.HtmlText
 import graft.sources.{ContentRoute, GraftWarc, WarcTranscode}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** End-to-end training-corpus preparation — the §2 operators composed the
-  * way a real data pipeline chains them, as ONE lazily-built DataFrame
-  * program (no intermediate actions; Catalyst sees the whole funnel):
+  * way a real data pipeline chains them:
   *
   *   clean → language/quality gate → exact dedup → near-dup keeper
   *   (MinHash LSH candidates → exact-Jaccard verify → connected
@@ -24,16 +24,28 @@ import org.apache.spark.sql.functions._
   * near-dups collapse to one survivor, contaminated docs drop, and the
   * whole funnel is deterministic across partitionings.
   *
+  * Not one lazy program: building a prep runs work. The connected-
+  * components loop ([[DedupClusters.connectedComponents]]) runs its
+  * label rounds while the frame is built, and every stage frame is a
+  * stored plan leaf ([[org.apache.spark.sql.GraftSqlBridge.persistAsLeaf]])
+  * — under adaptive execution, building a leaf runs the shuffle stages
+  * beneath it. What stays lazy is each leaf's last stage and everything
+  * above the leaves: the funnel frame is six count aggregates, not six
+  * actions, and `packed` is a join over the leaves.
+  *
+  * Why stage frames are stored: each is consumed by its successor stage
+  * AND the funnel count, and union branches do not share subplans —
+  * without storage the chain re-executes once per downstream consumer
+  * (~6× the work; the round-6 bench caught exactly that). They are
+  * leaves, not `persist`ed frames, because a persisted stage keeps its
+  * whole cached plan and every query over the chain rendered all of
+  * them nested stage by stage (see `persistAsLeaf`). The stored handles
+  * travel in [[CorpusPrep.handles]]; call [[CorpusPrep.release]] once
+  * done (or after materializing `packed`) so repeated invocations in one
+  * session don't accumulate stored blocks until executor eviction.
+  *
   * Scale: inherits each operator's shape (narrow-key shuffles, bucket
-  * caps, hash-reduced payloads); the funnel frame is six count
-  * aggregates, not six actions. Stage frames PERSIST (memory+disk):
-  * each is consumed by its successor stage AND the funnel count, and
-  * union branches do not share subplans — without the persist the
-  * chain re-executes once per downstream consumer (~6× the work; the
-  * round-6 bench caught exactly that). The persisted handles travel in
-  * [[CorpusPrep.handles]]; call [[CorpusPrep.release]] once done (or
-  * after materializing `packed`) so repeated invocations in one
-  * session don't accumulate cached blocks until executor eviction.
+  * caps, hash-reduced payloads).
   *
   * Multimodal: pass `images` (id, binary blob) to insert the q83/q27
   * image gate after the text gate — documents whose blob fails the
@@ -49,8 +61,10 @@ object Pipeline {
 
   final case class CorpusPrep(packed: DataFrame, funnel: DataFrame,
       handles: Seq[DataFrame] = Nil) {
-    /** Unpersist every stage frame this prep cached. */
-    def release(): Unit = handles.foreach(_.unpersist())
+    /** Free every stage frame this prep stored. The handles are plan
+      * leaves, which `Dataset.unpersist` does not reach.
+      */
+    def release(): Unit = handles.foreach(GraftSqlBridge.unpersistCheckpoints)
   }
 
   private def stage(name: String, df: DataFrame): DataFrame =
@@ -76,10 +90,9 @@ object Pipeline {
     val cleaned = docs.select(col(idCol).cast("long").as("doc_id"),
       TextClean.cleanChain(col(textCol)).as("text"))
 
-    import org.apache.spark.storage.StorageLevel
     val handles = Seq.newBuilder[DataFrame]
     def shared(df: DataFrame) = {
-      val h = df.persist(StorageLevel.MEMORY_AND_DISK)
+      val h = GraftSqlBridge.persistAsLeaf(df, StorageLevel.MEMORY_AND_DISK)
       handles += h
       h
     }
@@ -124,9 +137,9 @@ object Pipeline {
     val cands = MinHashDedup.candidatePairs(exact, "doc_id", "text",
       shingleK = shingleK, numPerms = numPerms, bands = bands,
       minJaccardPct = if (candJaccardPct >= 0) candJaccardPct else minJaccardPct)
-    // the verified pair list persists too (the q37/q56 memoized-pairs
+    // the verified pair list is stored too (the q37/q56 memoized-pairs
     // rule): the CC loop below consumes it once per label-propagation
-    // ITERATION, and without the persist each iteration re-runs the
+    // ITERATION, and without the store each iteration re-runs the
     // whole shingle → minhash → band-join → Jaccard-verify subtree
     val pairs = shared(NgramJaccard.verify(exact, cands, "doc_id", "text",
       shingleK, minJaccardPct).select("id_a", "id_b"))
@@ -175,8 +188,8 @@ object Pipeline {
     * web-ingest stages composed in front — WARC records ([[GraftWarc]],
     * q97) → HTTP response bodies → strict charset transcode to UTF-8
     * ([[WarcTranscode]], q100) → encoding-garbage gate (q99's signals) →
-    * [[prepareCorpus]]. One lazily-built program: Catalyst sees the whole
-    * chain from archive bytes to packed sequences.
+    * [[prepareCorpus]], whose stage frames (and the connected-components
+    * loop) run work while the prep is built — see the object doc.
     *
     * `docId` extracts the document id from the WARC columns (typically a
     * regexp over `target_uri`). Funnel rows prepend `w0_records` (all
@@ -201,9 +214,9 @@ object Pipeline {
     *
     * Scale shape: ingest + transcode + gate are map-side over the archive
     * scan (parallelism = archive count, the q97 contract); `records` and
-    * `transcoded` persist because the funnel counts and the downstream
-    * chain both consume them — without the persist every stage count
-    * re-parses the archives.
+    * `transcoded` are stored plan leaves because the funnel counts and the
+    * downstream chain both consume them — without the store every stage
+    * count re-parses the archives.
     */
   def prepareWebCorpus(warc: DataFrame, docId: Column,
       bench: DataFrame, benchId: String, benchText: String,
@@ -212,9 +225,8 @@ object Pipeline {
       contamShingleK: Int = 5, minJaccardPct: Int = 50,
       numPerms: Int = 128, bands: Int = 64,
       maxTokens: Long = 512L, packPartitions: Int = 8): CorpusPrep = {
-    import org.apache.spark.storage.StorageLevel
-    val records = GraftWarc.records(warc)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val records = GraftSqlBridge.persistAsLeaf(GraftWarc.records(warc),
+      StorageLevel.MEMORY_AND_DISK)
     val responses = records.where(col("warc_type") === "response" &&
       col("body").isNotNull)
     // media-type dispatch (ContentRoute, q111): only html/plain/pdf
@@ -233,7 +245,7 @@ object Pipeline {
     // robots-meta noindex (q125's page directive): an html page whose
     // owner opted out of indexing never enters the corpus — NULL text,
     // dropping at the same gate as torn transcodes, counted w1b − w2
-    val transcoded = textual
+    val transcoded = GraftSqlBridge.persistAsLeaf(textual
       .select(docId.cast("long").as("doc_id"),
         when(routeCol === ContentRoute.RouteHtml,
           when(!graft.functions.RobotsMeta.noindex(decoded),
@@ -241,8 +253,7 @@ object Pipeline {
           .when(routeCol === ContentRoute.RoutePdf,
             element_at(graft.functions.F.pdfExtract(col("body")), 1))
           .otherwise(decoded).as("text"))
-      .where(col("text").isNotNull)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .where(col("text").isNotNull), StorageLevel.MEMORY_AND_DISK)
     val encodingClean = transcoded.where(
       TextStats.replacementCount(col("text")) +
         TextStats.mojibakeCount(col("text")) +

@@ -1,7 +1,7 @@
 package graft.dedup
 
 import graft.functions.F
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for document corpora. Four families:
@@ -538,6 +538,15 @@ object DedupClusters {
     * Each round costs two narrow shuffles (edge⋈label join + min-agg);
     * the driver only ever sees a per-round changed-row COUNT, never data.
     *
+    * Eager: the loop runs while the frame is built. The symmetric edge
+    * list is stored once as a plan leaf
+    * ([[org.apache.spark.sql.GraftSqlBridge.persistAsLeaf]]), so each
+    * round's queries plan and render one scan instead of the pair list's
+    * whole lineage (for the corpus funnel, every upstream stage). Each
+    * round's labels are an eager `localCheckpoint`; round k-1's blocks
+    * are released once round k's change count has run, and the edge
+    * leaf once the loop ends — only the final labels stay stored.
+    *
     * Output: (id, component) for every id in `docs`, where component is
     * the smallest doc id reachable through pairs (singletons map to
     * themselves) — exactly the "keep one per cluster" key a dedup
@@ -546,9 +555,10 @@ object DedupClusters {
   def connectedComponents(docs: DataFrame, idCol: String, pairs: DataFrame,
       maxIter: Int = 10, failOnMaxIter: Boolean = true): DataFrame = {
     import org.apache.spark.storage.StorageLevel
-    val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val edges = GraftSqlBridge.persistAsLeaf(
+      pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
+        .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst"))),
+      StorageLevel.MEMORY_AND_DISK)
     // Propagation runs ONLY over nodes that appear in a pair — near-dup
     // edges are sparse, so the iterated frames hold the duplicate
     // subgraph, not the corpus; singletons attach in one outer join at
@@ -575,11 +585,12 @@ object DedupClusters {
       val changed = next.join(labels.withColumnRenamed("component", "prev"), "id")
         .where(col("component") =!= col("prev"))
         .limit(1).count()
+      GraftSqlBridge.unpersistCheckpoints(labels) // round k-1: done with it
       labels = next
       converged = changed == 0
       iter += 1
     }
-    edges.unpersist()
+    GraftSqlBridge.unpersistCheckpoints(edges)
     // A non-fixpoint exit would silently return PARTIALLY-merged components
     // (any chain with diameter > maxIter) — that is data corruption for a
     // dedup keep-one-per-cluster consumer, so the default is to fail loudly;

@@ -247,21 +247,23 @@ private[graft] object TextQueries {
 
     // 48. end-to-end corpus-prep funnel (clean → gate → image gate →
     // exact dedup → near-dup keeper → decontaminate → pack), stages
-    // counted in one lazy frame. FULL oracle as of r10: the stage counts
-    // are replayed in DuckDB by composing the per-stage oracles (see the
-    // q90 oracleSql comment); PipelineSpec additionally gates the
-    // composition laws. The multimodal branch rides the q83 blob fixture:
-    // docs with corrupt/truncated blobs (doc_id % 5 = 2) drop at
-    // 1b_image_gate, survivors carry (img_format, img_w, img_h) onto
-    // the packed output.
+    // counted in one frame over the stored stage leaves. FULL oracle as
+    // of r10: the stage counts are replayed in DuckDB by composing the
+    // per-stage oracles (see the q90 oracleSql comment); PipelineSpec
+    // additionally gates the composition laws. The multimodal branch
+    // rides the q83 blob fixture: docs with corrupt/truncated blobs
+    // (doc_id % 5 = 2) drop at 1b_image_gate, survivors carry
+    // (img_format, img_w, img_h) onto the packed output.
     QueryDef("q90_corpus_prep", (s, dir) => {
-      // the prep (its eagerly-materialized CC loop + persisted stage
-      // frames) is memoized per (session, sf) — the q78 BM25-index
-      // precedent: the warm-up run pays the one-time funnel build,
-      // timed runs re-execute the six stage counts over the persisted
-      // stage frames. Exactly ONE prep lives per (session, sf), so
-      // repeated invocations never accumulate cache blocks (library
-      // callers get the same guarantee via CorpusPrep.release).
+      // the prep (its eager CC loop + stage frames stored as plan
+      // leaves, whose build runs the shuffle stages beneath them) is
+      // memoized per (session, sf) — the q78 BM25-index precedent: the
+      // warm-up run pays the one-time funnel build, timed runs
+      // re-execute the six stage counts over the stored leaves, and the
+      // returned funnel's plan is six counts over six scans. Exactly ONE
+      // prep lives per (session, sf), so repeated invocations never
+      // accumulate stored blocks (library callers get the same guarantee
+      // via CorpusPrep.release).
       val prep = memoized(s, s"q90_prep|$dir") {
         val d = Tables(s, dir).documents
         Pipeline.prepareCorpus(d, "doc_id", "text",

@@ -560,7 +560,7 @@ private[graft] object WebQueries {
           |FROM t""".stripMargin)),
 
     // 48b. WEB-FED corpus-prep funnel — the r10 WARC pieces composed
-    // end-to-end as ONE lazy program (VERDICT r10 task 3): archive bytes
+    // end-to-end as one program (VERDICT r10 task 3): archive bytes
     // (q97 parse) → HTTP bodies → strict charset transcode (q100) →
     // encoding-garbage gate (q99 signals) → the q90 funnel (clean →
     // lang/quality → exact dedup → near-dup keeper → decontaminate →
@@ -569,8 +569,9 @@ private[graft] object WebQueries {
     // the q90 composed replay over the transcoded text (the suffixed
     // strings BOTH engines can reconstruct).
     QueryDef("q101_warc_funnel", (s, dir) => {
-      // memoized like q90: the CC loop materializes eagerly; one prep
-      // per (session, sf) so repeated invocations don't stack cache
+      // memoized like q90: the CC loop and the stage leaves run work
+      // while the prep is built; one prep per (session, sf) so repeated
+      // invocations don't stack stored blocks
       val prep = memoized(s, s"q101_prep|$dir") {
         val d = Tables(s, dir).documents
         Pipeline.prepareWebCorpus(

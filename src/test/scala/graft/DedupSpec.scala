@@ -248,6 +248,21 @@ class DedupSpec extends SparkSpec {
       6L -> 6L, 7L -> 7L))
   }
 
+  test("connected components keeps only the final labels stored") {
+    val n = 12L
+    val nodes = (1L to n).map(i => (i, "")).toDF("doc_id", "text")
+    val chain = (1L until n).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val comp = DedupClusters.connectedComponents(nodes, "doc_id", chain,
+      maxIter = 15)
+    // the chain needs ~11 rounds; the edge list and every superseded
+    // round are released, the final round backs `comp`
+    val added = sc.getPersistentRDDs.keySet -- before
+    assert(added.size == 1, s"stored after the loop: $added")
+    assert(comp.select("component").distinct().count() == 1L)
+  }
+
   test("connected components converge on a long chain within maxIter") {
     val n = 12L
     val nodes = (1L to n).map(i => (i, "")).toDF("doc_id", "text")

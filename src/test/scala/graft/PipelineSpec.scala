@@ -1,6 +1,10 @@
 package graft
 
+import org.apache.spark.sql.GraftSqlBridge
+import org.apache.spark.sql.execution.{ExplainMode, LogicalRDD}
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Composition laws for the end-to-end corpus-prep funnel: each stage's
   * operator is individually gated elsewhere; here we assert the CHAIN
@@ -26,6 +30,14 @@ class PipelineSpec extends SparkSpec {
     (100L, "alpha beta gamma delta and the epsilon zeta eta theta iota kappa")
   ).toDF("bench_id", "text")
 
+  private def hx(s: String) =
+    s.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray
+  private val okGif = hx("474946383961" + "0800" + "0600" + "F70000") // 8×6
+  private val images = Seq(
+    (1L, okGif), (2L, okGif), (3L, okGif), (4L, okGif), (5L, okGif),
+    (6L, hx("DEADBEEF")) // doc 6: corrupt container → image gate drop
+  ).toDF("doc_id", "blob")
+
   test("corpus prep funnel drops each planted doc at its stage and packs survivors once") {
     val prep = Pipeline.prepareCorpus(docs, "doc_id", "text",
       bench, "bench_id", "text")
@@ -50,12 +62,6 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("image gate drops corrupt blobs and metadata rides through packing") {
-    def hx(s: String) = s.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray
-    val okGif = hx("474946383961" + "0800" + "0600" + "F70000") // 8×6
-    val images = Seq(
-      (1L, okGif), (2L, okGif), (3L, okGif), (4L, okGif), (5L, okGif),
-      (6L, hx("DEADBEEF")) // doc 6: corrupt container → image gate drop
-    ).toDF("doc_id", "blob")
     val prep = Pipeline.prepareCorpus(docs, "doc_id", "text",
       bench, "bench_id", "text", images = Some(images))
     val funnel = prep.funnel.as[(String, Long)].collect().toMap
@@ -75,16 +81,28 @@ class PipelineSpec extends SparkSpec {
       bench, "bench_id", "text", images = Some(images), minImageW = 9)
       .funnel.as[(String, Long)].collect().toMap
     assert(none("1b_image_gate") == 0L && none("5_packed") == 0L)
-    prep.release() // the cached stage frames free without error
+    // release frees every stored stage frame: `Dataset.unpersist` would
+    // be a silent no-op on a leaf frame, leaking its blocks
+    val stored = prep.handles.flatMap(_.queryExecution.analyzed.collect {
+      case l: LogicalRDD => l.rdd.id
+    })
+    assert(stored.size == prep.handles.size)
+    prep.release()
+    val left = spark.sparkContext.getPersistentRDDs.keySet
+    assert(stored.forall(id => !left.contains(id)),
+      s"released handles still stored: ${stored.filter(left.contains)}")
   }
 
-  test("web funnel composes ingest → transcode → encoding gate ahead of the text chain") {
+  /** The web funnel over a one-archive WARC fixture. 6 captures: 1-3
+    * clean UTF-8, 4 ISO-8859-1 (must transcode, then survive), 5 unknown
+    * charset (drops at transcode), 6 well-labeled but carrying a stray BEL
+    * (survives transcode, drops at the encoding gate), a PDF and a
+    * noindex page (both drop before w2) — plus one torn record (excluded
+    * from w0 entirely).
+    */
+  private def webPrep(): Pipeline.CorpusPrep = {
     import graft.sources.{GraftWarc, WarcCodec}
     import org.apache.spark.sql.functions.{col, regexp_extract}
-    // 6 captures: 1-3 clean UTF-8, 4 ISO-8859-1 (must transcode, then
-    // survive), 5 unknown charset (drops at transcode), 6 well-labeled
-    // but carrying a stray BEL (survives transcode, drops at the
-    // encoding gate) — plus one torn record (excluded from w0 entirely)
     val t = "the quick brown fox jumps over the lazy dog and then the " +
       "fox naps on the warm stone all day"
     def cap(id: Long, body: Array[Byte], ctype: String) =
@@ -113,11 +131,15 @@ class PipelineSpec extends SparkSpec {
       cap(6, t.getBytes("UTF-8"), "text/plain").dropRight(30) // torn
     val dir = java.nio.file.Files.createTempDirectory("webfunnel").toString
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/a.warc"), bytes)
-    val prep = Pipeline.prepareWebCorpus(
+    Pipeline.prepareWebCorpus(
       GraftWarc.read(spark, s"$dir/a.warc"),
       docId = regexp_extract(col("target_uri"), "/doc/([0-9]+)$", 1),
       bench = Seq.empty[(Long, String)].toDF("bench_id", "text"),
       benchId = "bench_id", benchText = "text")
+  }
+
+  test("web funnel composes ingest → transcode → encoding gate ahead of the text chain") {
+    val prep = webPrep()
     val funnel = prep.funnel.as[(String, Long)].collect().toMap
     assert(funnel("w0_records") == 7L, s"torn record must not count: $funnel")
     assert(funnel("w1_http_bodies") == 7L)
@@ -132,6 +154,43 @@ class PipelineSpec extends SparkSpec {
       funnel("5_packed") == 1L, s"$funnel")
     // the transcoded ISO body decodes to real é, never mojibake
     prep.release()
+  }
+
+  test("stage frames are plan leaves, so the funnel plan stays small") {
+    val preps = Seq(
+      Pipeline.prepareCorpus(docs, "doc_id", "text",
+        bench, "bench_id", "text", images = Some(images)),
+      webPrep())
+    preps.foreach { prep =>
+      prep.handles.foreach { h =>
+        val plan = h.queryExecution.analyzed
+        assert(plan.isInstanceOf[LogicalRDD] && plan.children.isEmpty,
+          s"stage handle is not one plan leaf:\n$plan")
+        assert(h.queryExecution.withCachedData
+          .collect { case m: InMemoryRelation => m }.isEmpty,
+          s"stage handle reads a cached plan:\n$plan")
+      }
+      // with `persist`ed stages every cached plan renders nested inside
+      // the next: ~480k characters for q90 at sf0.001
+      val explained = prep.funnel.queryExecution
+        .explainString(ExplainMode.fromString("formatted"))
+      assert(explained.length < 64 * 1024,
+        s"funnel plan renders ${explained.length} characters")
+      prep.release()
+    }
+  }
+
+  test("a leaf frame keeps its lineage: dropped blocks recompute") {
+    val src = docs.groupBy(length(col("text")) % 3).count()
+    val leaf = GraftSqlBridge.persistAsLeaf(src, StorageLevel.MEMORY_AND_DISK)
+    val rdd = leaf.queryExecution.analyzed
+      .collect { case l: LogicalRDD => l.rdd }.head
+    val n = leaf.count()
+    assert(rdd.getStorageLevel == StorageLevel.MEMORY_AND_DISK)
+    rdd.unpersist(blocking = true)
+    assert(!spark.sparkContext.getPersistentRDDs.contains(rdd.id))
+    assert(leaf.count() == n)
+    assert(!rdd.isCheckpointed, "a checkpoint would have cut the lineage")
   }
 
   test("empty benchmark set skips decontamination without dropping anything") {
