@@ -25,8 +25,7 @@ import org.apache.spark.sql.types.DecimalType
   * partial min, then the term-keyed exchange; term cardinality is the
   * Heaps-sublinear vocabulary itself). Checkpoint assignment is
   * arithmetic on the doc id; the per-checkpoint groupBy has B keys and
-  * the cumulative window sorts B rows (bounded-dim global window, the
-  * UniMax/Sampling posture). The doc-id bound rides a one-row
+  * the cumulative window sorts B rows. The doc-id bound rides a one-row
   * broadcast crossJoin.
   */
 object CorpusStats {
@@ -40,6 +39,11 @@ object CorpusStats {
     * Checkpoints cut by DOC ID (`dec = id·B div (max id + 1)`), so the
     * prefix order is the corpus' own stable order and both engines
     * agree without any sort.
+    *
+    * Bound: the cumulative and full-frame windows here are graft's only
+    * windows without a partition spec (every global rank goes through
+    * [[Prefix]]). They plan a SinglePartition exchange over exactly B =
+    * `buckets` rows — one per checkpoint, never a doc or a term row.
     */
   def heapsGrowth(docs: DataFrame, idCol: String, textCol: String,
       buckets: Int = 10): DataFrame = {
@@ -106,39 +110,28 @@ object CorpusStats {
     * upper edge (the Lorenz curve ordinate — a straight diagonal is
     * perfect equality; the sag is the concentration).
     *
-    * Exactness and scale: the global rank and the cumulative token
-    * prefix come from [[Prefix.withRankAndPrefix]] — the
-    * range-partition + broadcast-offsets build, NO single-partition
-    * window (PlanSpec-gated on q160's twin). Shares quantize via the
-    * staged divisor ⌊W/10⁶⌋+1 (exact floor by subtract-pmod; ≈ 10⁶·x/W
-    * with ≤ 1-unit staging error, both engines identical), so no
-    * product ever exceeds the token total itself. One groupBy + one
-    * bounded-bin fold after the rank build.
+    * Exactness and scale: the global rank, the cumulative token prefix,
+    * the group count and the token total W all come from
+    * [[Prefix.withRankPrefixTotals]] — the range-partition +
+    * broadcast-offsets build, NO single-partition window (PlanSpec
+    * gates q170) — and the bins from [[Prefix.ntileBin]]. Shares
+    * quantize via the staged divisor ⌊W/10⁶⌋+1 (exact floor by
+    * subtract-pmod; ≈ 10⁶·x/W with ≤ 1-unit staging error, both engines
+    * identical), so no product ever exceeds the token total itself. One
+    * groupBy + one bounded-bin fold after the rank build.
     */
   def lorenzReport(weighted: DataFrame, groupCol: String,
       weightCol: String, bins: Int = 10): DataFrame = {
     val per = weighted.groupBy(col(groupCol).as("g"))
       .agg(sum(col(weightCol)).as("w"))
-    val ranked = Prefix.withRankAndPrefix(per,
+    val r = Prefix.withRankPrefixTotals(per,
       orderCols = Seq("w", "g"), valueCols = Seq("w" -> "cum_w"))
-      .localCheckpoint(true) // one row per group; three consumers below
-    val tot = ranked.agg(count(lit(1)).as("total"), sum(col("w")).as("wt"))
-    val binned = ranked.crossJoin(broadcast(tot))
-      .withColumn("qq", expr(s"total div $bins"))
-      .withColumn("rr", col("total") % bins)
-      .withColumn("bin",
-        when(col("qq") === 0L, col("idx"))
-          .when(col("idx") <= (col("qq") + 1L) * col("rr"),
-            expr("(idx + qq) div (qq + 1)"))
-          .otherwise(col("rr") +
-            expr("(idx - (qq + 1) * rr + qq - 1) div qq")))
-      .withColumn("sdiv", fdiv(col("wt"), lit(1000000L)) + 1L)
-    binned.groupBy(col("bin"))
+    val sdiv = fdiv(lit(r.totals("cum_w")), lit(1000000L)) + 1L
+    r.df.groupBy(Prefix.ntileBin(col("idx"), r.totalCount, bins).as("bin"))
       .agg(count(lit(1)).as("n_groups"), sum(col("w")).as("tokens"),
-        max(col("cum_w") + col("w")).as("cum_end"),
-        min(col("sdiv")).as("sdiv"))
+        max(col("cum_w") + col("w")).as("cum_end"))
       .select(col("bin"), col("n_groups"), col("tokens"),
-        fdiv(col("tokens"), col("sdiv")).as("share_x1e6"),
-        fdiv(col("cum_end"), col("sdiv")).as("cum_share_x1e6"))
+        fdiv(col("tokens"), sdiv).as("share_x1e6"),
+        fdiv(col("cum_end"), sdiv).as("cum_share_x1e6"))
   }
 }

@@ -540,9 +540,10 @@ object GroupStats {
   /** EXACT corpus-wide quantiles without a global sort (q171): the
     * classical type-1 (lower) quantile — the value whose global rank is
     * ⌈q·n/100⌉ under (value, id) order — read straight off the
-    * [[Prefix.withRankAndPrefix]] distributed rank. Where [[medianBy]]
-    * is per-GROUP (ranks inside a partitioned window), this is the
-    * whole-corpus report: a `Window.orderBy(value)` here would funnel
+    * [[Prefix.withRankPrefixTotals]] distributed rank, whose offset
+    * scan also returns n. Where [[medianBy]] is per-GROUP (ranks inside
+    * a partitioned window), this is the whole-corpus report: a
+    * `Window.orderBy(value)` here would funnel
     * every row through one task at 100 TB; the range-partition +
     * broadcast-offsets build ranks in parallel and the quantile SELECT
     * is a broadcast semi-filter on idx (no second pass, no sort).
@@ -555,17 +556,15 @@ object GroupStats {
       s"percentiles must be in [1,100], got $pcts")
     val spark = df.sparkSession
     import spark.implicits._
-    val ranked = graft.etl.Prefix.withRankAndPrefix(
+    val r = Prefix.withRankPrefixTotals(
       df.select(valueCol.as("v"), idCol.as("id")),
       orderCols = Seq("v", "id"), valueCols = Seq.empty)
-      .localCheckpoint(true) // reused by the count and the filter
-    val tot = ranked.agg(count(lit(1)).as("n"))
     // target rank per pct: ceil(p·n/100) = (p·n + 99) div 100 — exact
     // integer, n·100 ≪ 2⁶³ at any corpus size
-    val targets = tot.crossJoin(pcts.toDF("pct"))
+    val targets = pcts.toDF("pct").withColumn("n", lit(r.totalCount))
       .select(col("pct").cast("long").as("pct"),
         expr("(pct * n + 99) div 100").as("idx"), col("n"))
-    ranked.join(broadcast(targets), Seq("idx"))
+    r.df.join(broadcast(targets), Seq("idx"))
       .select(col("pct"), col("idx"), col("v"), col("n").as("n_rows"))
   }
 }

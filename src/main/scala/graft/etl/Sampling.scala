@@ -112,13 +112,11 @@ object Sampling {
   * integer-exact so any engine reproduces the same kept set.
   *
   * Scale shape: a naive `row_number() OVER (ORDER BY value)` is a
-  * single-partition window — a scale killer. Instead: (1) per-value counts
-  * (one narrow shuffle on the value; the distinct-value domain of a length
-  * column is tiny vs the row count), (2) a running offset over that tiny
-  * per-value frame, (3) broadcast-join the offsets back and rank within
-  * each value partition only. global_rank = offset + rank_in_value, exactly
-  * the rank the naive sort would give, with the widest window bounded by
-  * the hottest single value.
+  * single-partition window — a scale killer. The rank comes from the
+  * shared distributed build [[Prefix]] (range-partition on (value, id),
+  * rank within each partition, broadcast per-partition offsets), and
+  * the row total from its offset scan — no window without a partition
+  * spec, however skewed or continuous the value column.
   */
 object RankTrim {
 
@@ -128,25 +126,13 @@ object RankTrim {
   def middleBand(df: DataFrame, idCol: String, valueCol: String,
       trimBp: Int): DataFrame = {
     require(trimBp >= 0 && trimBp < 5000, s"trimBp must be in [0, 5000)")
-    import org.apache.spark.sql.expressions.Window
-    val cnts = df.groupBy(col(valueCol)).agg(count(lit(1)).as("_n_v"))
-    // tiny frame: one row per distinct value — the single-partition window
-    // here sorts |distinct values| rows, not |rows|
-    val offsets = cnts
-      .withColumn("_off",
-        coalesce(sum(col("_n_v")).over(
-          Window.orderBy(col(valueCol))
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("_total", sum(col("_n_v")).over(
-        Window.rowsBetween(Window.unboundedPreceding,
-          Window.unboundedFollowing)))
-      .select(col(valueCol), col("_off"), col("_total"))
-    val wIn = Window.partitionBy(col(valueCol)).orderBy(col(idCol))
-    val lo = (col("_total") * trimBp / Sampling.Buckets).cast("long")
-    df.join(broadcast(offsets), valueCol)
-      .withColumn("grank",
-        (col("_off") + row_number().over(wIn)).cast("long"))
-      .where(col("grank") > lo && col("grank") <= col("_total") - lo)
-      .select(col(idCol), col(valueCol), col("grank"))
+    val r = Prefix.withRankPrefixTotals(df.select(col(idCol), col(valueCol)),
+      Seq(valueCol, idCol), Nil)
+    val total = lit(r.totalCount)
+    val lo = (total * trimBp / Sampling.Buckets).cast("long")
+    // a null value takes a rank (nulls sort first) but is never kept
+    r.df.where(col(valueCol).isNotNull &&
+        col("idx") > lo && col("idx") <= total - lo)
+      .select(col(idCol), col(valueCol), col("idx").as("grank"))
   }
 }

@@ -2,7 +2,6 @@ package graft.etl
 
 import graft.functions.F
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** UniMax language-budget allocation (Chung et al. 2023, public) — the
@@ -20,7 +19,7 @@ import org.apache.spark.sql.functions._
   * `cap_k · (L−k+1) < B − Σ_{i<k} cap_i`, cross-multiplied INTEGER
   * arithmetic (no float shares for engines to disagree on). Capped
   * languages form a prefix of the sort order (proof in scaladoc of the
-  * predicate below), so one prefix-sum window + one tiny aggregate
+  * predicate below), so one ranked prefix sum + one tiny aggregate
   * finds the boundary; uncapped languages each get the integer share
   * `(B − P) div U` with the remainder granted to the `(B − P) mod U`
   * smallest uncapped languages — allocations sum to B exactly (when
@@ -30,10 +29,11 @@ import org.apache.spark.sql.functions._
   * Scale shape: the corpus is touched once — a map-side token count
   * into a per-language groupBy (one shuffle over (lang, count) partial
   * aggregates). Everything after runs on the LANGUAGE DIM, a frame
-  * bounded by the number of human languages (≤ thousands), so the
-  * global sort window is bounded the same way Sampling.middleBand's
-  * distinct-value window is — it sorts |languages| rows, never |docs|.
-  * Totals and the boundary ride one-row crossJoins.
+  * bounded by the number of human languages (≤ thousands). The rank k
+  * and the exclusive cap prefix come from the shared distributed build
+  * [[Prefix]] on (cap_tokens, lang), which also returns the language
+  * count and Σcap as driver values; the capped boundary rides a
+  * one-row crossJoin.
   */
 object UniMax {
 
@@ -55,25 +55,24 @@ object UniMax {
     val per = docs.groupBy(col(langCol).as("lang"))
       .agg(sum(size(F.tokensLower(col(textCol)))).as("n_tokens"))
       .withColumn("cap_tokens", col("n_tokens") * epochCap.toLong)
-    val tot = per.agg(sum(col("n_tokens")).as("t"),
-      count(lit(1)).as("nlang"))
     // bounded dim from here down: one row per language
-    val w = Window.orderBy(col("cap_tokens"), col("lang"))
-    val ranked = per.crossJoin(tot)
-      .withColumn("budget", expr(s"(t * $budgetBp) div 10000"))
-      .withColumn("k", row_number().over(w).cast("long"))
-      .withColumn("cap_prefix",
-        coalesce(sum(col("cap_tokens")).over(
-          w.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+    val r = Prefix.withRankPrefixTotals(per, Seq("cap_tokens", "lang"),
+      Seq("cap_tokens" -> "cap_prefix"))
+    // Σcap = epochCap · Σn_tokens exactly, so the corpus total divides out
+    val t = r.totals("cap_prefix") / epochCap
+    val nlang = lit(r.totalCount)
+    val ranked = r.df
+      .withColumn("budget",
+        call_function("div", lit(t) * budgetBp, lit(10000)))
       .withColumn("capped",
-        col("cap_tokens") * (col("nlang") - col("k") + 1L) <
+        col("cap_tokens") * (nlang - col("idx") + 1L) <
           col("budget") - col("cap_prefix"))
     val boundary = ranked.agg(
       sum(when(col("capped"), 1L).otherwise(0L)).as("n_capped"),
       sum(when(col("capped"), col("cap_tokens")).otherwise(0L))
         .as("p_capped"))
     ranked.crossJoin(boundary)
-      .withColumn("n_unc", col("nlang") - col("n_capped"))
+      .withColumn("n_unc", nlang - col("n_capped"))
       .withColumn("b_unc", col("budget") - coalesce(col("p_capped"), lit(0L)))
       .withColumn("share",
         when(col("n_unc") > 0L, expr("b_unc div n_unc")).otherwise(lit(0L)))
@@ -82,7 +81,7 @@ object UniMax {
       .withColumn("alloc_tokens",
         when(col("capped"), col("cap_tokens"))
           .otherwise(col("share") +
-            when(col("k") - col("n_capped") <= col("rem"), 1L)
+            when(col("idx") - col("n_capped") <= col("rem"), 1L)
               .otherwise(0L)))
       .withColumn("epochs_x1000", expr("(alloc_tokens * 1000) div n_tokens"))
       .select(col("lang"), col("n_tokens"), col("cap_tokens"), col("capped"),

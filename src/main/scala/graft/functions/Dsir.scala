@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -40,11 +39,10 @@ import org.apache.spark.sql.types.DecimalType
   * model is a groupBy onto AT MOST `buckets` rows, so the joined
   * (bucket, w) model is plan-literal-small and ALWAYS broadcast — the
   * scored corpus never shuffles for the model lookup, only for the
-  * per-document sum. The selection rank reuses the q64 RankTrim shape:
-  * per-value counts + a running offset over the BOUNDED distinct
-  * domain of the x1000-quantized normalized score (score magnitude is
-  * bounded by the smoothing floor, so the domain never grows with the
-  * corpus), then a within-value rank — no global row sort anywhere.
+  * per-document sum. The selection rank is the shared distributed
+  * build [[graft.etl.Prefix]] over (−score, doc_id): range-partitioned,
+  * ranked within each partition, offsets broadcast back — no window
+  * without a partition spec, however continuous the score.
   */
 object Dsir {
 
@@ -60,6 +58,25 @@ object Dsir {
       selectPerMille: Int = 250): DataFrame = {
     require(selectPerMille >= 0 && selectPerMille <= 1000,
       s"selectPerMille must be in [0,1000], got $selectPerMille")
+    // rank by (avg_x1000 DESC, doc_id): ascending on the negated score
+    val r = graft.etl.Prefix.withRankPrefixTotals(
+      scored(target, raw, docs, idCol, textCol, buckets)
+        .withColumn("_neg_avg", -col("avg_x1000")),
+      Seq("_neg_avg", "doc_id"), Nil)
+    r.df.select(col("doc_id"), col("n_feats"), col("logratio_x1000"),
+      col("avg_x1000"), col("idx").as("dsir_rank"),
+      (col("idx") * 1000 <= lit(r.totalCount) * selectPerMille)
+        .as("selected"))
+  }
+
+  /** The per-document scores before the selection rank: doc_id,
+    * n_feats, logratio_x1000, avg_x1000. Split out so PlanSpec can see
+    * the model broadcast, which the rank build otherwise runs inside its
+    * input snapshot.
+    */
+  private[graft] def scored(target: DataFrame, raw: DataFrame,
+      docs: DataFrame, idCol: String, textCol: String,
+      buckets: Int): DataFrame = {
     def feats(df: DataFrame): DataFrame =
       df.select(col(idCol).as("doc_id"),
         explode(F.dsirBuckets(F.tokensLower(col(textCol)), buckets))
@@ -90,7 +107,7 @@ object Dsir {
         - log(lit(1.0) / (col("nq") + buckets).cast("double")).cast(Dec))
         .as("w0"))
 
-    val scored = feats(docs)
+    feats(docs)
       .join(broadcast(weighted), Seq("b"), "left")
       .crossJoin(broadcast(w0))
       .withColumn("w", coalesce(col("w"), col("w0")))
@@ -107,26 +124,5 @@ object Dsir {
         ((col("logratio_x1000")
             - pmod(col("logratio_x1000"), col("n_feats")))
           / col("n_feats")).cast("long"))
-
-    // global rank by (avg_x1000 DESC, doc_id) without a global sort:
-    // offsets over the bounded distinct-score frame, rank within score
-    val cnts = scored.groupBy(col("avg_x1000"))
-      .agg(count(lit(1)).as("_n_v"))
-    val offsets = cnts
-      .withColumn("_off", coalesce(sum(col("_n_v")).over(
-        Window.orderBy(col("avg_x1000").desc)
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("_total", sum(col("_n_v")).over(
-        Window.rowsBetween(Window.unboundedPreceding,
-          Window.unboundedFollowing)))
-      .select(col("avg_x1000"), col("_off"), col("_total"))
-    val wIn = Window.partitionBy(col("avg_x1000")).orderBy(col("doc_id"))
-    scored.join(broadcast(offsets), "avg_x1000")
-      .withColumn("dsir_rank",
-        (col("_off") + row_number().over(wIn)).cast("long"))
-      .select(col("doc_id"), col("n_feats"), col("logratio_x1000"),
-        col("avg_x1000"), col("dsir_rank"),
-        (col("dsir_rank") * 1000 <= col("_total") * selectPerMille)
-          .as("selected"))
   }
 }

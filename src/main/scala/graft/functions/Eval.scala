@@ -16,22 +16,23 @@ import org.apache.spark.sql.types.DecimalType
   *    RANGE-PARTITIONED prefix-sum build (below) — AUC·(2PN) =
   *    Σ_s np(s)·(2·negBelow(s) + nn(s)), held as an exact 2×-scaled
   *    integer so tie half-credit never leaves integer arithmetic.
-  *  - **Calibration bins** via ntile's exact closed form over the
-  *    global rank index (cumulative counts per score + a per-score
-  *    row_number) — the first (total mod k) tiles take ceil(total/k)
-  *    rows, degenerate total < k gives one row per tile.
+  *  - **Calibration bins** via ntile's exact closed form
+  *    ([[graft.etl.Prefix.ntileBin]]) over the global rank index
+  *    (cumulative counts per score + a per-score row_number) — the
+  *    first (total mod k) tiles take ceil(total/k) rows, degenerate
+  *    total < k gives one row per tile.
   *
   * Scale shape (VERDICT r16 task 3): the r16 version ran BOTH
   * cumulative windows as unpartitioned `Window.orderBy(s)` — a
   * SinglePartition exchange over the distinct-score frame, which for
   * continuous per-document scores is ~N rows through ONE task at
-  * 100 TB. The prefix sums now build the way PageRank's node index
-  * does (graph/PageRank.scala nodeIndexFrame): range-partition by
-  * score, window WITHIN each partition (parallel), add per-partition
-  * start offsets computed from the partition TOTALS — a driver-side
-  * frame bounded by the partition count, never by data — broadcast
-  * back on. Byte-identical to the global window by construction;
-  * PlanSpec asserts the build plans no SinglePartition exchange.
+  * 100 TB. The prefix sums now come from the shared distributed rank
+  * build [[graft.etl.Prefix]]: range-partition by score, window WITHIN
+  * each partition (parallel), add per-partition start offsets computed
+  * from the partition TOTALS — a driver-side frame bounded by the
+  * partition count, never by data — broadcast back on. Byte-identical
+  * to the global window by construction; PlanSpec asserts the build
+  * plans no SinglePartition exchange.
   *
   * Everything is exact: DECIMAL(38,0) cross-multiplication, floor by
   * subtract-mod — engine-portable to the last digit (the q160 oracle
@@ -100,19 +101,12 @@ object Eval {
         pmod(col("num2") * lit(1000000L), pn2)) / pn2)
         .cast("long").as("auc_x1e6"))
     val wd = Window.partitionBy("s").orderBy("eval_id")
-    val qq = totAll / bins
-    val rr = totAll % bins
-    val withIdx = lbl
+    val deciled = lbl
       .join(cum.select(col("s"), col("below_all")), Seq("s"))
       .withColumn("idx",
         col("below_all") + row_number().over(wd).cast("long"))
-    val deciled = withIdx
       .withColumn("decile",
-        if (qq == 0L) col("idx")
-        else when(col("idx") <= (qq + 1L) * rr,
-            expr(s"(idx + $qq) div ($qq + 1)"))
-          .otherwise(lit(rr) +
-            expr(s"(idx - ($qq + 1) * $rr + $qq - 1) div $qq")))
+        graft.etl.Prefix.ntileBin(col("idx"), totAll, bins))
     deciled.groupBy(col("decile"))
       .agg(count(lit(1)).as("n"), sum(col("y")).as("n_pos"))
       .withColumn("pos_rate_x1e6", expr("(1000000 * n_pos) div n"))

@@ -1,5 +1,6 @@
 package graft.graph
 
+import graft.etl.Prefix
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -67,7 +68,7 @@ object PageRank {
 
   /** Static per-run frames for dangling-mass redistribution: the dangling
     * node set, the 1-based id index (remainder micro-units go to the
-    * lowest ids), and the node count.
+    * lowest ids), and the node count (the index build's own total).
     */
   private[graft] final case class Redistribution(dangling: DataFrame,
       idx: DataFrame, n: Long)
@@ -91,7 +92,10 @@ object PageRank {
       val dangling = nodes
         .join(eo.select(col("src").as("node")), Seq("node"), "left_anti")
         .localCheckpoint(true) // static: nodes with no out-edges
-      Some(Redistribution(dangling, nodeIndex(nodes), nodes.count()))
+      val ix = rankNodes(nodes)
+      Some(Redistribution(dangling,
+        ix.df.localCheckpoint(true), // static: no iteration re-sorts
+        ix.totalCount))
     }
     var r = nodes.select(col("node"), lit(1000000L).as("rank_micro"))
     var it = 0
@@ -120,46 +124,20 @@ object PageRank {
     (r, it)
   }
 
-  /** 1-based rank of each node id, built DISTRIBUTEDLY (VERDICT r11
-    * task 1): a global `row_number().over(Window.orderBy(node))` funnels
-    * every node through ONE task — the classic zipWithIndex bottleneck
-    * at 10⁹-node host graphs. Instead: range-partition the node set by
-    * id (each partition holds a contiguous id range, partition index
-    * increasing with id), rank WITHIN each partition (parallel window),
-    * and add per-partition start offsets computed from the partition
-    * COUNTS — a driver-side frame bounded by the partition count, never
-    * by data — broadcast back onto the rows. Reproduces global
-    * ROW_NUMBER-over-id semantics byte-identically (the q102 oracle
-    * replays ROW_NUMBER), checkpointed so no iteration re-sorts.
+  /** 1-based rank of each node id (`idx`, global ROW_NUMBER over id —
+    * the q102 oracle replays it) and the node count, from the shared
+    * distributed rank build [[graft.etl.Prefix]] (VERDICT r11 task 1: a
+    * global `Window.orderBy(node)` funnels every node through ONE task
+    * at 10⁹-node host graphs).
     */
-  private[graft] def nodeIndex(nodes: DataFrame): DataFrame =
-    nodeIndexFrame(nodes).localCheckpoint(true)
+  private def rankNodes(nodes: DataFrame): Prefix.Ranked =
+    Prefix.withRankPrefixTotals(nodes, Seq("node"), Nil)
 
-  /** The un-checkpointed index plan — split out so PlanSpec can assert
-    * it contains NO single-partition exchange (the gate for this fix).
+  /** [[rankNodes]]'s un-checkpointed index plan — split out so PlanSpec
+    * can assert it contains NO single-partition exchange.
     */
-  private[graft] def nodeIndexFrame(nodes: DataFrame): DataFrame = {
-    val spark = nodes.sparkSession
-    // stamp the range-partition id BEFORE any later exchange can move
-    // rows; the checkpoint freezes the assignment
-    val stamped = nodes.repartitionByRange(col("node"))
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint(true)
-    // per-partition counts → cumulative start offsets: rows == partition
-    // count (bounded by spark.sql.shuffle.partitions, not by data)
-    val counts = stamped.groupBy("pid").agg(count(lit(1)).as("cnt"))
-      .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    var run = 0L
-    val offsets = counts.map { case (pid, cnt) =>
-      val start = run; run += cnt; (pid, start)
-    }.toSeq
-    import spark.implicits._
-    stamped.join(broadcast(offsets.toDF("pid", "off")), "pid")
-      .select(col("node"),
-        (row_number().over(org.apache.spark.sql.expressions.Window
-          .partitionBy(col("pid")).orderBy(col("node"))).cast("long") +
-          col("off")).as("idx"))
-  }
+  private[graft] def nodeIndexFrame(nodes: DataFrame): DataFrame =
+    rankNodes(nodes).df
 
   /** Probe cadence: every iteration while shallow (cheap, catches quick
     * convergence), every [[ProbeEvery]]-th past [[ProbeDepth]], and

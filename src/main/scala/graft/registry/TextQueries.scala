@@ -375,7 +375,7 @@ private[graft] object TextQueries {
     // disjoint crawl half, every document scored by the quantized
     // importance log-ratio, top-quarter selected by length-normalized
     // score with a deterministic (score, doc_id) rank — no global row
-    // sort (the q64 offsets shape over the bounded score domain), the
+    // sort (the etl.Prefix distributed rank, as q64), the
     // ≤1024-row model always broadcast, kernel-side wraparound hashing.
     QueryDef("q126_dsir_select", (s, dir) => {
       val docs = Tables(s, dir).documents
@@ -1466,11 +1466,11 @@ private[graft] object TextQueries {
     // trained toward), metric = ROC AUC via the rank statistic plus a
     // 10-bin calibration table. AUC is computed in the distributed
     // shape — collapse to DISTINCT logit values first (groupBy with
-    // map-side combine), then one bounded window over the score frame;
-    // ties contribute the standard half-credit via the 2×-scaled
+    // map-side combine), then the etl.Prefix prefix sums over the score
+    // frame; ties contribute the standard half-credit via the 2×-scaled
     // integer numerator. Deciles come from the same cumulative counts
-    // plus a per-score row_number (ntile's exact closed form — no
-    // global row sort; the q64 offsets shape). Every output is an
+    // plus a per-score row_number (ntile's exact closed form,
+    // Prefix.ntileBin — no global row sort). Every output is an
     // exact integer: DECIMAL(38,0) cross-multiplication, floor by
     // subtract-mod. FULL oracle: the q120 score replay + the same rank
     // algebra in SQL.
@@ -2062,7 +2062,7 @@ private[graft] object TextQueries {
           |FROM c""".stripMargin)),
 
     // 37b. exact percentile-band trim (drop length outliers) WITHOUT a
-    // global sort: per-value counts + running offsets + in-value ranks
+    // global sort: the etl.Prefix distributed rank on (n_chars, doc_id)
     QueryDef("q64_length_trim", (s, dir) =>
       RankTrim.middleBand(
         Tables(s, dir).documents.select(col("doc_id"),

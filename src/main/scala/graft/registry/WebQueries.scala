@@ -118,6 +118,55 @@ private[graft] object WebQueries {
     math.max(4L, math.min(64L,
       (tableRowCount(s, dir, "documents") + 1999L) / 2000L)).toInt
 
+  /** The documents table written as [[warcArchiveCount]] WARC archives,
+    * one per task (the format's file-count parallelism contract):
+    * hash(doc_id)-partitioned, so the record SET is identical across core
+    * counts, and doc_id-sorted within each archive. `records` maps one
+    * row of `cols` (the documents columns the fixture reads, doc_id
+    * among them) to its WARC records in file order. With
+    * `gzipFirst`, partition 0's archive is per-record-gzip'd —
+    * concatenated members, the in-the-wild layout. The archives land in
+    * a fresh per-session dir (ADVICE r10: a fixed tmpdir path keyed on
+    * dir.hashCode could serve stale or mid-rewrite part files to the
+    * *.warc* glob across JVMs/sessions), cleaned at JVM exit, memoized
+    * per (session, `key`, dir).
+    */
+  private def warcArchives(s: SparkSession, dir: String, key: String,
+      prefix: String, gzipFirst: Boolean,
+      cols: Seq[String] = Seq("doc_id", "text"))(
+      records: org.apache.spark.sql.Row => Seq[Array[Byte]]): String =
+    memoized(s, s"$key|$dir") {
+      val path = tempDirCleanedAtExit(prefix)
+      Tables(s, dir).documents.select(cols.map(col): _*)
+        .repartition(warcArchiveCount(s, dir), col("doc_id"))
+        .sortWithinPartitions("doc_id")
+        .foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
+          val pid = org.apache.spark.TaskContext.getPartitionId()
+          val gz = gzipFirst && pid == 0
+          val fos = new java.io.FileOutputStream(new java.io.File(path,
+            if (gz) s"part-$pid.warc.gz" else s"part-$pid.warc"))
+          def writeRec(b: Array[Byte]): Unit =
+            if (gz) { // one gzip member per record, concatenated
+              val g = new java.util.zip.GZIPOutputStream(fos) {
+                // flush the member WITHOUT closing fos; release the
+                // Deflater's native buffer (ADVICE r10 leak)
+                override def close(): Unit = { finish(); `def`.end(); fos.flush() }
+              }
+              g.write(b); g.close()
+            } else fos.write(b)
+          rows.foreach(r => records(r).foreach(writeRec))
+          fos.close()
+        }
+      path
+    }
+
+  /** The fixtures' WARC-Date of doc `id`:
+    * 2024-01-01T00:00:00Z + (id mod 86400) s + `shift` s.
+    */
+  private def warcDate(id: Long, shift: Long = 0L): String =
+    java.time.Instant.parse("2024-01-01T00:00:00Z")
+      .plusSeconds(id % 86400 + shift).toString
+
   /** q97 fixture: the documents table assembled into 4 real WARC archives
     * (one per task — the format's file-count parallelism contract), each
     * record's bytes fully determined by doc_id arithmetic so the oracle
@@ -133,51 +182,22 @@ private[graft] object WebQueries {
     *    HTTP parse fails → status/body NULL;
     *  - partition 0's archive is per-record-gzip'd (concatenated members,
     *    the in-the-wild layout) — the decode path shares the oracle.
-    * Partitioning is hash(doc_id) so the record SET is identical across
-    * core counts (file assignment varies; the query never exposes it).
     */
   private def warcFixture(s: SparkSession, dir: String): String =
-    memoized(s, s"warc|$dir") {
-      // fresh per-session dir (ADVICE r10: a fixed tmpdir path keyed on
-      // dir.hashCode could serve stale or mid-rewrite part files to the
-      // *.warc* glob across JVMs/sessions); cleaned at JVM exit
-      val path = tempDirCleanedAtExit("graft_warc_docs_")
-      Tables(s, dir).documents.select(col("doc_id"), col("text"))
-        .repartition(warcArchiveCount(s, dir), col("doc_id"))
-        .sortWithinPartitions("doc_id")
-        .foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-          val pid = org.apache.spark.TaskContext.getPartitionId()
-          val gz = pid == 0
-          val f = new java.io.File(path,
-            if (gz) s"part-$pid.warc.gz" else s"part-$pid.warc")
-          val fos = new java.io.FileOutputStream(f)
-          def writeRec(b: Array[Byte]): Unit =
-            if (gz) { // one gzip member per record, concatenated
-              val g = new java.util.zip.GZIPOutputStream(fos) {
-                // flush the member WITHOUT closing fos; release the
-                // Deflater's native buffer (ADVICE r10 leak)
-                override def close(): Unit = { finish(); `def`.end(); fos.flush() }
-              }
-              g.write(b); g.close()
-            } else fos.write(b)
-          rows.foreach { r =>
-            val id = r.getAs[Long]("doc_id")
-            val text = r.getAs[String]("text").getBytes("UTF-8")
-            val uri = s"http://corpus.example/doc/$id"
-            val date = java.time.Instant.parse("2024-01-01T00:00:00Z")
-              .plusSeconds(id % 86400).toString
-            if (id % 7 == 3)
-              writeRec(WarcCodec.buildRecord("metadata",
-                s"<urn:graft:meta:$id>", uri, date, "k: v\r\n".getBytes("US-ASCII")))
-            val payload =
-              if (id % 11 == 5) "BROKEN\r\n\r\n".getBytes("US-ASCII") ++ text
-              else WarcCodec.httpResponse(text)
-            writeRec(WarcCodec.buildRecord("response",
-              s"<urn:graft:$id>", uri, date, payload))
-          }
-          fos.close()
-        }
-      path
+    warcArchives(s, dir, "warc", "graft_warc_docs_", gzipFirst = true) { r =>
+      val id = r.getAs[Long]("doc_id")
+      val text = r.getAs[String]("text").getBytes("UTF-8")
+      val uri = s"http://corpus.example/doc/$id"
+      val date = warcDate(id)
+      val meta =
+        if (id % 7 == 3) Seq(WarcCodec.buildRecord("metadata",
+          s"<urn:graft:meta:$id>", uri, date, "k: v\r\n".getBytes("US-ASCII")))
+        else Nil
+      val payload =
+        if (id % 11 == 5) "BROKEN\r\n\r\n".getBytes("US-ASCII") ++ text
+        else WarcCodec.httpResponse(text)
+      meta :+ WarcCodec.buildRecord("response",
+        s"<urn:graft:$id>", uri, date, payload)
     }
 
   /** q100 fixture: the documents table as WARC archives whose response
@@ -202,48 +222,24 @@ private[graft] object WebQueries {
     * Partition 0's archive is per-record-gzip'd like the q97 fixture.
     */
   private def warcCharsetFixture(s: SparkSession, dir: String): String =
-    memoized(s, s"warc_cs|$dir") {
-      val path = tempDirCleanedAtExit("graft_warc_cs_")
-      Tables(s, dir).documents.select(col("doc_id"), col("text"))
-        .repartition(warcArchiveCount(s, dir), col("doc_id"))
-        .sortWithinPartitions("doc_id")
-        .foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-          val pid = org.apache.spark.TaskContext.getPartitionId()
-          val gz = pid == 0
-          val f = new java.io.File(path,
-            if (gz) s"part-$pid.warc.gz" else s"part-$pid.warc")
-          val fos = new java.io.FileOutputStream(f)
-          def writeRec(b: Array[Byte]): Unit =
-            if (gz) {
-              val g = new java.util.zip.GZIPOutputStream(fos) {
-                override def close(): Unit = { finish(); `def`.end(); fos.flush() }
-              }
-              g.write(b); g.close()
-            } else fos.write(b)
-          rows.foreach { r =>
-            val id = r.getAs[Long]("doc_id")
-            val text = r.getAs[String]("text") +
-              (if (id % 7 == 6) "\u0007" else "")
-            val date = java.time.Instant.parse("2024-01-01T00:00:00Z")
-              .plusSeconds(id % 86400).toString
-            val (ctype, body) = ((id % 5).toInt: @annotation.switch) match {
-              case 0 => ("text/plain", (text + " δ✓").getBytes("UTF-8"))
-              case 1 => ("text/plain; charset=iso-8859-1",
-                (text + " café æøå").getBytes("ISO-8859-1"))
-              case 2 => ("text/plain; charset=windows-1250",
-                (text + " śćżź").getBytes("windows-1250"))
-              case 3 => ("text/plain; charset=utf-16",
-                (text + " Ω16").getBytes("UTF-16"))
-              case _ => ("text/plain; charset=x-graft-unknown",
-                text.getBytes("UTF-8"))
-            }
-            writeRec(WarcCodec.buildRecord("response", s"<urn:graft:cs:$id>",
-              s"http://corpus.example/doc/$id", date,
-              WarcCodec.httpResponse(body, ctype)))
-          }
-          fos.close()
-        }
-      path
+    warcArchives(s, dir, "warc_cs", "graft_warc_cs_", gzipFirst = true) { r =>
+      val id = r.getAs[Long]("doc_id")
+      val text = r.getAs[String]("text") +
+        (if (id % 7 == 6) "\u0007" else "")
+      val (ctype, body) = ((id % 5).toInt: @annotation.switch) match {
+        case 0 => ("text/plain", (text + " δ✓").getBytes("UTF-8"))
+        case 1 => ("text/plain; charset=iso-8859-1",
+          (text + " café æøå").getBytes("ISO-8859-1"))
+        case 2 => ("text/plain; charset=windows-1250",
+          (text + " śćżź").getBytes("windows-1250"))
+        case 3 => ("text/plain; charset=utf-16",
+          (text + " Ω16").getBytes("UTF-16"))
+        case _ => ("text/plain; charset=x-graft-unknown",
+          text.getBytes("UTF-8"))
+      }
+      Seq(WarcCodec.buildRecord("response", s"<urn:graft:cs:$id>",
+        s"http://corpus.example/doc/$id", warcDate(id),
+        WarcCodec.httpResponse(body, ctype)))
     }
 
   /** q111 fixture: a MIXED-TYPE crawl — the payload classes a real
@@ -264,72 +260,50 @@ private[graft] object WebQueries {
     *  - 4: NO Content-Type header at all — unknown, counted skip.
     * Partition 0's archive is per-record-gzip'd like the q97 fixture.
     */
-  private def warcMixedFixture(s: SparkSession, dir: String): String =
-    memoized(s, s"warc_mixed|$dir") {
-      val path = tempDirCleanedAtExit("graft_warc_mixed_")
-      Tables(s, dir).documents.select(col("doc_id"), col("text"))
-        .repartition(warcArchiveCount(s, dir), col("doc_id"))
-        .sortWithinPartitions("doc_id")
-        .foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-          val pid = org.apache.spark.TaskContext.getPartitionId()
-          val gz = pid == 0
-          val f = new java.io.File(path,
-            if (gz) s"part-$pid.warc.gz" else s"part-$pid.warc")
-          val fos = new java.io.FileOutputStream(f)
-          def writeRec(b: Array[Byte]): Unit =
-            if (gz) {
-              val g = new java.util.zip.GZIPOutputStream(fos) {
-                override def close(): Unit = { finish(); `def`.end(); fos.flush() }
-              }
-              g.write(b); g.close()
-            } else fos.write(b)
-          def le32(v: Int): Array[Byte] = Array[Byte](
-            (v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-            ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
-          def bmp(w: Int, h: Int): Array[Byte] =
-            // "BM" file header (size/reserved/offset) + BITMAPINFOHEADER
-            // prefix through bitcount — the q83 fixture's layout
-            Array[Byte]('B', 'M') ++ le32(0) ++ le32(0) ++ le32(0x36) ++
-              le32(40) ++ le32(w) ++ le32(h) ++
-              Array[Byte](1, 0, 24, 0)
-          rows.foreach { r =>
-            val id = r.getAs[Long]("doc_id")
-            val text = r.getAs[String]("text")
-            val date = java.time.Instant.parse("2024-01-01T00:00:00Z")
-              .plusSeconds(id % 86400).toString
-            val payload = ((id % 6).toInt: @annotation.switch) match {
-              case 0 => WarcCodec.httpResponse(
-                (s"<html><head><title>skip</title></head><body><h1>Doc " +
-                  s"$id</h1><p>$text</p></body></html>").getBytes("UTF-8"),
-                "text/html; charset=utf-8")
-              case 1 => WarcCodec.httpResponse(
-                (text + " café").getBytes("ISO-8859-1"),
-                "text/plain; charset=iso-8859-1")
-              case 2 => WarcCodec.httpResponse(
-                bmp(1 + (id % 1024).toInt, 1 + (id % 768).toInt),
-                "image/bmp")
-              case 3 => WarcCodec.httpResponse(
-                (s"%PDF-1.4 graft $id").getBytes("US-ASCII"),
-                "application/pdf")
-              case 5 => WarcCodec.httpResponse(
-                (s"""<?xml version="1.0"?><rss version="2.0"><channel>""" +
-                  s"<title>F $id</title>" +
-                  (0L to id % 3).map(i =>
-                    s"<item><title>i$i</title><link>http://corpus" +
-                      s".example/p/$id/$i</link></item>").mkString +
-                  "</channel></rss>").getBytes("UTF-8"),
-                "application/rss+xml")
-              case _ => // untyped: no Content-Type header anywhere
-                ("HTTP/1.1 200 OK\r\nX-Graft: untyped\r\n\r\n")
-                  .getBytes("US-ASCII") ++ text.getBytes("UTF-8")
-            }
-            writeRec(WarcCodec.buildRecord("response", s"<urn:graft:mx:$id>",
-              s"http://corpus.example/doc/$id", date, payload))
-          }
-          fos.close()
-        }
-      path
+  private def warcMixedFixture(s: SparkSession, dir: String): String = {
+    def le32(v: Int): Array[Byte] = Array[Byte](
+      (v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
+      ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
+    def bmp(w: Int, h: Int): Array[Byte] =
+      // "BM" file header (size/reserved/offset) + BITMAPINFOHEADER
+      // prefix through bitcount — the q83 fixture's layout
+      Array[Byte]('B', 'M') ++ le32(0) ++ le32(0) ++ le32(0x36) ++
+        le32(40) ++ le32(w) ++ le32(h) ++
+        Array[Byte](1, 0, 24, 0)
+    warcArchives(s, dir, "warc_mixed", "graft_warc_mixed_",
+        gzipFirst = true) { r =>
+      val id = r.getAs[Long]("doc_id")
+      val text = r.getAs[String]("text")
+      val payload = ((id % 6).toInt: @annotation.switch) match {
+        case 0 => WarcCodec.httpResponse(
+          (s"<html><head><title>skip</title></head><body><h1>Doc " +
+            s"$id</h1><p>$text</p></body></html>").getBytes("UTF-8"),
+          "text/html; charset=utf-8")
+        case 1 => WarcCodec.httpResponse(
+          (text + " café").getBytes("ISO-8859-1"),
+          "text/plain; charset=iso-8859-1")
+        case 2 => WarcCodec.httpResponse(
+          bmp(1 + (id % 1024).toInt, 1 + (id % 768).toInt),
+          "image/bmp")
+        case 3 => WarcCodec.httpResponse(
+          (s"%PDF-1.4 graft $id").getBytes("US-ASCII"),
+          "application/pdf")
+        case 5 => WarcCodec.httpResponse(
+          (s"""<?xml version="1.0"?><rss version="2.0"><channel>""" +
+            s"<title>F $id</title>" +
+            (0L to id % 3).map(i =>
+              s"<item><title>i$i</title><link>http://corpus" +
+                s".example/p/$id/$i</link></item>").mkString +
+            "</channel></rss>").getBytes("UTF-8"),
+          "application/rss+xml")
+        case _ => // untyped: no Content-Type header anywhere
+          ("HTTP/1.1 200 OK\r\nX-Graft: untyped\r\n\r\n")
+            .getBytes("US-ASCII") ++ text.getBytes("UTF-8")
+      }
+      Seq(WarcCodec.buildRecord("response", s"<urn:graft:mx:$id>",
+        s"http://corpus.example/doc/$id", warcDate(id), payload))
     }
+  }
 
   /** q142 fixture: redirect chains planted by doc_id arithmetic — chain
     * length L = id%4 (L=0 ids plant only their 200 page), hop j at
@@ -343,52 +317,35 @@ private[graft] object WebQueries {
     * replay wrong and row counts multiply through the doubling joins.
     */
   private def warcRedirectFixture(s: SparkSession, dir: String): String =
-    memoized(s, s"warc_redir|$dir") {
-      val path = tempDirCleanedAtExit("graft_warc_redir_")
-      Tables(s, dir).documents.select(col("doc_id"))
-        .repartition(warcArchiveCount(s, dir), col("doc_id"))
-        .sortWithinPartitions("doc_id")
-        .foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-          val pid = org.apache.spark.TaskContext.getPartitionId()
-          val f = new java.io.File(path, s"part-$pid.warc")
-          val fos = new java.io.FileOutputStream(f)
-          rows.foreach { r =>
-            val id = r.getAs[Long]("doc_id")
-            val h = (id % 50) % 10
-            val chainLen = (id % 4).toInt
-            val loop = id % 9 == 8 && chainLen > 0
-            val date = java.time.Instant.parse("2024-01-01T00:00:00Z")
-              .plusSeconds(id % 86400).toString
-            def u(j: Int) = s"http://site$h.example/r/$id/$j"
-            val page = s"http://site$h.example/page/$id"
-            for (j <- 0 until chainLen) {
-              val st = if (j % 2 == 0) 301 else 302
-              val dst =
-                if (j < chainLen - 1) u(j + 1)
-                else if (loop) u(0) else page
-              fos.write(WarcCodec.buildRecord("response",
-                s"<urn:graft:rd:$id:$j>", u(j), date,
-                WarcCodec.httpRedirect(st, dst)))
-            }
-            // duplicate capture of hop 0: an hour older, shortcutting
-            // straight to the page — the stale edge the newest-capture
-            // winner must discard
-            if (chainLen > 0 && id % 7 == 3) {
-              val older = java.time.Instant
-                .parse("2024-01-01T00:00:00Z")
-                .plusSeconds(id % 86400 - 3600).toString
-              fos.write(WarcCodec.buildRecord("response",
-                s"<urn:graft:rd:$id:0d>", u(0), older,
-                WarcCodec.httpRedirect(301, page)))
-            }
-            fos.write(WarcCodec.buildRecord("response",
-              s"<urn:graft:rd:$id:p>", page, date,
-              WarcCodec.httpResponse(s"Doc $id".getBytes("UTF-8"),
-                "text/html")))
-          }
-          fos.close()
-        }
-      path
+    warcArchives(s, dir, "warc_redir", "graft_warc_redir_",
+        gzipFirst = false, cols = Seq("doc_id")) { r =>
+      val id = r.getAs[Long]("doc_id")
+      val h = (id % 50) % 10
+      val chainLen = (id % 4).toInt
+      val loop = id % 9 == 8 && chainLen > 0
+      val date = warcDate(id)
+      def u(j: Int) = s"http://site$h.example/r/$id/$j"
+      val page = s"http://site$h.example/page/$id"
+      val hops = (0 until chainLen).map { j =>
+        val st = if (j % 2 == 0) 301 else 302
+        val dst =
+          if (j < chainLen - 1) u(j + 1)
+          else if (loop) u(0) else page
+        WarcCodec.buildRecord("response",
+          s"<urn:graft:rd:$id:$j>", u(j), date,
+          WarcCodec.httpRedirect(st, dst))
+      }
+      // duplicate capture of hop 0: an hour older, shortcutting
+      // straight to the page — the stale edge the newest-capture
+      // winner must discard
+      val stale =
+        if (chainLen > 0 && id % 7 == 3) Seq(WarcCodec.buildRecord(
+          "response", s"<urn:graft:rd:$id:0d>", u(0), warcDate(id, -3600),
+          WarcCodec.httpRedirect(301, page)))
+        else Nil
+      hops ++ stale :+ WarcCodec.buildRecord("response",
+        s"<urn:graft:rd:$id:p>", page, date,
+        WarcCodec.httpResponse(s"Doc $id".getBytes("UTF-8"), "text/html"))
     }
 
   val all: Seq[QueryDef] = Seq(

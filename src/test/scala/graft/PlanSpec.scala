@@ -223,6 +223,18 @@ class PlanSpec extends SparkSpec {
       "model/offsets not broadcast:\n" + p.take(1500))
     assert(!p.contains("SortMergeJoin"),
       "a bounded-dim join fell back to a shuffle join:\n" + p.take(1500))
+    // the model join runs inside the rank build's input snapshot, so
+    // assert its broadcast on the pre-rank scored frame (q126's inputs)
+    import org.apache.spark.sql.functions.col
+    val docs = Tables(spark, sf0001).documents
+    val b = graft.etl.Sampling.bucket(col("doc_id"))
+    val sp = graft.functions.Dsir.scored(
+      docs.where(col("lang") === "en" && b < 5000), docs.where(b >= 5000),
+      docs, "doc_id", "text", 1024).queryExecution.executedPlan.toString
+    assert(sp.contains("BroadcastHashJoin"),
+      "the bucket model is not broadcast:\n" + sp.take(1500))
+    assert(!sp.contains("SortMergeJoin"),
+      "the scored corpus shuffle-joined the model:\n" + sp.take(1500))
   }
 
   test("KMV sketch cuts via TakeOrdered, never a global sort exchange") {
@@ -385,6 +397,41 @@ class PlanSpec extends SparkSpec {
         p.take(1500))
     assert(p.contains("windowspecdefinition(pid"),
       "the prefix-sum window lost its pid partition spec:\n" + p.take(1500))
+  }
+
+  test("global-rank queries plan no single-partition exchange") {
+    // every global rank goes through etl.Prefix (range partitions +
+    // broadcast offsets); a Window.orderBy over rows would plan an
+    // Exchange SinglePartition over the rows here. An exchange over a
+    // keyless partial aggregate (a global agg's merge, e.g. UniMax's
+    // capped boundary) moves one row per partition and is not a funnel.
+    import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    def funnels(p: SparkPlan): Seq[SparkPlan] = {
+      val here = p match {
+        case e: ShuffleExchangeExec
+            if e.outputPartitioning == SinglePartition =>
+          e.child match {
+            case a: BaseAggregateExec if a.groupingExpressions.isEmpty => Nil
+            case _ => Seq(e)
+          }
+        case _ => Nil
+      }
+      val kids = p match {
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case _ => p.children ++ p.subqueries
+      }
+      here ++ kids.flatMap(funnels)
+    }
+    for (q <- Seq("q64_length_trim", "q121_unimax", "q126_dsir_select",
+        "q170_lorenz_sources", "q171_token_quantiles")) {
+      val ep = SparkEntry.queries(q)(spark, sf0001).queryExecution.executedPlan
+      assert(funnels(ep).isEmpty,
+        s"$q funnels rows through one partition:\n" + ep.toString.take(1500))
+    }
   }
 
   test("PCA: the Gram aggregate combines map-side and nothing goes cartesian") {

@@ -33,17 +33,40 @@ class PrefixSpec extends SparkSpec {
   test("reserved-name collisions fail loudly, never corrupt") {
     val withPid = Seq((1L, 2L)).toDF("pid", "v")
     val e1 = intercept[IllegalArgumentException] {
-      Prefix.withRankAndPrefix(withPid, Seq("v"), Nil)
+      Prefix.withRankPrefixTotals(withPid, Seq("v"), Nil)
     }
     assert(e1.getMessage.contains("pid"))
     val withOff = Seq((1L, 2L)).toDF("x", "_off_cum")
     intercept[IllegalArgumentException] {
-      Prefix.withRankAndPrefix(withOff, Seq("x"), Seq("x" -> "cum"))
+      Prefix.withRankPrefixTotals(withOff, Seq("x"), Seq("x" -> "cum"))
     }
     // an alias colliding with an input column is rejected too
     val dup = Seq((1L, 2L)).toDF("x", "y")
     intercept[IllegalArgumentException] {
-      Prefix.withRankAndPrefix(dup, Seq("x"), Seq("x" -> "y"))
+      Prefix.withRankPrefixTotals(dup, Seq("x"), Seq("x" -> "y"))
+    }
+  }
+
+  test("an empty input gives zero totals and an empty ranked frame") {
+    val empty = Seq.empty[(Long, Long)].toDF("id", "v")
+    val r = Prefix.withRankPrefixTotals(empty, Seq("id"),
+      Seq("v" -> "cum_v"))
+    assert(r.totalCount === 0L)
+    assert(r.totals === Map("cum_v" -> 0L))
+    assert(r.df.columns.toSeq === Seq("id", "v", "idx", "cum_v"))
+    assert(r.df.isEmpty)
+  }
+
+  test("ntileBin equals SQL ntile for every total and bin count") {
+    import org.apache.spark.sql.expressions.Window
+    for (total <- Seq(0, 1, 2, 7, 9, 10, 11, 23); bins <- Seq(1, 3, 10)) {
+      val ix = spark.range(1, total + 1).toDF("idx")
+      val got = ix.select(col("idx"),
+          Prefix.ntileBin(col("idx"), total.toLong, bins).as("b"))
+        .orderBy("idx").collect().map(_.getLong(1)).toSeq
+      val want = ix.select(ntile(bins).over(Window.orderBy("idx")))
+        .collect().map(_.getInt(0).toLong).toSeq
+      assert(got === want, s"total=$total bins=$bins")
     }
   }
 }

@@ -267,4 +267,27 @@ class RobustnessSpec extends SparkSpec {
       out.head.getAs[String]("revisit_bucket") == "unknown",
       "no feed + one fetch -> the history 'unknown' verdict survives")
   }
+
+  test("rank-built reports return an empty frame with their schema on empty input") {
+    import graft.etl.{CorpusStats, GroupStats, RankTrim, UniMax}
+    import org.apache.spark.sql.types._
+    def shape(df: org.apache.spark.sql.DataFrame) = {
+      assert(df.collect().isEmpty)
+      df.schema.fields.map(f => f.name -> f.dataType).toSeq
+    }
+    val L = LongType
+    val idv = Seq.empty[(Long, Long)].toDF("id", "v")
+    assert(shape(RankTrim.middleBand(idv, "id", "v", 500)) ===
+      Seq("id" -> L, "v" -> L, "grank" -> L))
+    assert(shape(GroupStats.globalQuantiles(idv, col("v"), col("id"))) ===
+      Seq("pct" -> L, "idx" -> L, "v" -> L, "n_rows" -> L))
+    val docs = Seq.empty[(String, String)].toDF("lang", "text")
+    assert(shape(UniMax.allocate(docs, "lang", "text")) ===
+      Seq("lang" -> StringType, "n_tokens" -> L, "cap_tokens" -> L,
+        "capped" -> BooleanType, "alloc_tokens" -> L, "epochs_x1000" -> L))
+    val w = Seq.empty[(String, Long)].toDF("src", "t")
+    assert(shape(CorpusStats.lorenzReport(w, "src", "t")) ===
+      Seq("bin" -> L, "n_groups" -> L, "tokens" -> L, "share_x1e6" -> L,
+        "cum_share_x1e6" -> L))
+  }
 }
