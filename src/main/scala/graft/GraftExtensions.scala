@@ -1,111 +1,92 @@
 package graft
 
-import graft.functions.{Hashing, RomanCodec}
+import graft.functions.{F, HtmlText, Kernel, RobotsTxt, UrlNorm}
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-/** SQL surface for the graft kernels: registers `graft_*` scalar functions
-  * so every hashing/codec primitive is callable from `spark.sql(...)` —
-  * a user who lives in SQL gets the same codegen'd StaticInvoke
-  * expressions the DataFrame API uses (never a UDF).
+/** SQL surface for the graft kernels: `graft_*` scalar functions, so
+  * every hashing/codec primitive is callable from `spark.sql(...)`.
+  * Each function is a name and a usage over a [[Kernel]] binding that
+  * the DataFrame surface declares, so SQL and DataFrame calls build the
+  * same codegen'd expression (never a UDF). SQL gets the kernel itself:
+  * `graft_image_width`/`graft_image_height` return -1 on corrupt bytes,
+  * where [[F.imageWidth]]/[[F.imageHeight]] turn -1 into NULL.
   *
-  * Two entry points, same builder table:
+  * Two entry points register the same [[SqlFunction]]s:
   *  - `spark.sql.extensions=graft.GraftExtensions` (cluster config) injects
-  *    at session build;
+  *    them at session build;
   *  - [[GraftFunctions.register]] adds them to an already-running session.
   */
 object GraftFunctions {
 
-  private def invoke(clazz: Class[_], dt: DataType, method: String,
-      nullableOut: Boolean)(args: Seq[Expression]): Expression =
-    StaticInvoke(clazz, dt, method, args, inputTypes = Nil,
-      propagateNull = true, returnNullable = nullableOut)
-
-  /** Like [[invoke]] but NULL args reach the kernel (for kernels whose
-    * documented NULL semantics are not null-out — e.g. robots
-    * evaluation, where NULL robots means "no rules" and must yield
-    * TRUE, not NULL; the DataFrame surface already does this).
+  /** A `graft_*` function. Its catalog entry (what `DESCRIBE FUNCTION`
+    * shows) names the kernel's class and carries the usage.
     */
-  private def invokeNullIn(clazz: Class[_], dt: DataType, method: String,
-      nullableOut: Boolean)(args: Seq[Expression]): Expression =
-    StaticInvoke(clazz, dt, method, args, inputTypes = Nil,
-      propagateNull = false, returnNullable = nullableOut)
+  final case class SqlFunction(name: String, usage: String, kernel: Kernel) {
+    val info: ExpressionInfo = new ExpressionInfo(kernel.owner.getName, null,
+      name, usage, "", "", "", "", "", "", "")
+  }
 
-  /** (name, description, builder) for every SQL-exposed kernel. */
-  val builders: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
-    ("graft_to_roman", "int -> Roman numeral string (null outside 1..3999)",
-      invoke(classOf[RomanCodec.type], StringType, "toRoman", nullableOut = true) _),
-    ("graft_from_roman", "Roman numeral string -> int (0 for invalid)",
-      invoke(classOf[RomanCodec.type], IntegerType, "fromRoman", nullableOut = false) _),
-    ("graft_hash64", "FNV-1a/splitmix64 64-bit hash of (string, seed)",
-      invoke(classOf[Hashing.type], LongType, "hash64", nullableOut = false) _),
-    ("graft_hamming", "Hamming distance between two 64-bit hashes",
-      invoke(classOf[Hashing.type], IntegerType, "hamming", nullableOut = false) _),
-    ("graft_simhash", "64-bit SimHash of an array<string> of tokens",
-      invoke(classOf[Hashing.type], LongType, "simhash64", nullableOut = false) _),
-    ("graft_fingerprint", "order-sensitive rolling-hash fingerprint of array<string>",
-      invoke(classOf[Hashing.type], LongType, "fingerprint", nullableOut = false) _),
-    ("graft_cosine", "cosine similarity of two array<float> vectors",
-      invoke(classOf[Hashing.type], DoubleType, "cosineF", nullableOut = false) _),
-    ("graft_dot", "dot product of two array<float> vectors",
-      invoke(classOf[Hashing.type], DoubleType, "dotF", nullableOut = false) _),
-    ("graft_l2sq", "squared L2 distance of two array<float> vectors",
-      invoke(classOf[Hashing.type], DoubleType, "l2sqF", nullableOut = false) _),
-    ("graft_bloom_contains",
+  /** Every SQL-exposed kernel. */
+  val builders: Seq[SqlFunction] = Seq(
+    SqlFunction("graft_to_roman",
+      "int -> Roman numeral string (null outside 1..3999)", F.ToRoman),
+    SqlFunction("graft_from_roman",
+      "Roman numeral string -> int (0 for invalid)", F.FromRoman),
+    SqlFunction("graft_hash64",
+      "FNV-1a/splitmix64 64-bit hash of (string, seed)", F.Hash64),
+    SqlFunction("graft_hamming",
+      "Hamming distance between two 64-bit hashes", F.Hamming),
+    SqlFunction("graft_simhash",
+      "64-bit SimHash of an array<string> of tokens", F.SimHash64),
+    SqlFunction("graft_fingerprint",
+      "order-sensitive rolling-hash fingerprint of array<string>",
+      F.Fingerprint),
+    SqlFunction("graft_cosine",
+      "cosine similarity of two array<float> vectors", F.Cosine),
+    SqlFunction("graft_dot", "dot product of two array<float> vectors", F.Dot),
+    SqlFunction("graft_l2sq",
+      "squared L2 distance of two array<float> vectors", F.L2sq),
+    SqlFunction("graft_bloom_contains",
       "Bloom membership probe of (words array<long>, numHashes, key)",
-      invoke(classOf[Hashing.type], BooleanType, "bloomContains", nullableOut = false) _),
-    ("graft_image_format",
+      F.BloomContains),
+    SqlFunction("graft_image_format",
       "container sniff of an image binary: 'png' / 'jpeg' / null",
-      invoke(classOf[graft.multimodal.MediaHeader.type], StringType,
-        "format", nullableOut = true) _),
-    ("graft_image_width",
+      F.ImageFormat),
+    SqlFunction("graft_image_width",
       "pixel width from a PNG IHDR / JPEG SOF header (-1 if corrupt)",
-      invoke(classOf[graft.multimodal.MediaHeader.type], IntegerType,
-        "width", nullableOut = false) _),
-    ("graft_image_height",
+      F.ImageWidth),
+    SqlFunction("graft_image_height",
       "pixel height from a PNG IHDR / JPEG SOF header (-1 if corrupt)",
-      invoke(classOf[graft.multimodal.MediaHeader.type], IntegerType,
-        "height", nullableOut = false) _),
-    ("graft_html_text",
+      F.ImageHeight),
+    SqlFunction("graft_html_text",
       "visible text of an HTML string (tags/script/style/head stripped, " +
-        "entities decoded, one line per block)",
-      invoke(classOf[graft.functions.HtmlText.type], StringType,
-        "extractKernel", nullableOut = true) _),
-    ("graft_url_canon",
+        "entities decoded, one line per block)", HtmlText.Extract),
+    SqlFunction("graft_url_canon",
       "canonical form of an absolute http(s) URL (RFC 3986 safe " +
         "normalizations; NULL for relative/other schemes)",
-      invoke(classOf[graft.functions.UrlNorm.type], StringType,
-        "canonicalizeKernel", nullableOut = true) _),
-    ("graft_robots_allowed",
+      UrlNorm.Canonicalize),
+    SqlFunction("graft_robots_allowed",
       "RFC 9309 robots.txt decision for (robots_body, agent, path); " +
-        "NULL robots (no robots.txt) allows",
-      invokeNullIn(classOf[graft.functions.RobotsTxt.type], BooleanType,
-        "allowedKernel", nullableOut = false) _),
-    ("graft_html_main",
+        "NULL robots (no robots.txt) allows", RobotsTxt.Allowed),
+    SqlFunction("graft_html_main",
       "main-content text of (html, max_link_pct, min_line_chars) — " +
         "visible text minus link-dominated and too-short lines",
-      invoke(classOf[graft.functions.HtmlText.type], StringType,
-        "mainContentKernel", nullableOut = true) _))
+      HtmlText.MainContent))
 
   /** Register every graft function into a live session's catalog. */
   def register(spark: SparkSession): Unit =
-    builders.foreach { case (name, usage, builder) =>
+    builders.foreach { f =>
       spark.sessionState.functionRegistry.registerFunction(
-        FunctionIdentifier(name),
-        new ExpressionInfo(Hashing.getClass.getCanonicalName, name),
-        builder)
+        FunctionIdentifier(f.name), f.info, f.kernel.expr _)
     }
 }
 
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    GraftFunctions.builders.foreach { case (name, usage, builder) =>
-      ext.injectFunction((FunctionIdentifier(name),
-        new ExpressionInfo(Hashing.getClass.getCanonicalName, name),
-        builder))
+    GraftFunctions.builders.foreach { f =>
+      ext.injectFunction((FunctionIdentifier(f.name), f.info, f.kernel.expr))
     }
     ext.injectOptimizerRule(_ => RomanRoundTripElimination)
   }
@@ -123,23 +104,12 @@ object RomanRoundTripElimination
     extends org.apache.spark.sql.catalyst.rules.Rule[
       org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] {
   import org.apache.spark.sql.catalyst.expressions._
-  import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
   import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   import org.apache.spark.sql.types.IntegerType
 
-  private def isCodec(cls: Class[_], method: String, si: StaticInvoke): Boolean =
-    si.staticObject == cls && si.functionName == method
-
   override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transformAllExpressions {
-      case outer: StaticInvoke
-          if isCodec(classOf[functions.RomanCodec.type], "fromRoman", outer) &&
-            outer.arguments.headOption.exists {
-              case inner: StaticInvoke =>
-                isCodec(classOf[functions.RomanCodec.type], "toRoman", inner)
-              case _ => false
-            } =>
-        val x = outer.arguments.head.asInstanceOf[StaticInvoke].arguments.head
+      case F.FromRoman(F.ToRoman(x)) =>
         If(And(GreaterThanOrEqual(x, Literal(1)), LessThanOrEqual(x, Literal(3999))),
           x, Literal(null, IntegerType))
     }

@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import scala.collection.immutable.ListMap
@@ -585,14 +585,7 @@ object PartitionedSink {
     */
   def writeMonthly(df: DataFrame, dateCol: String, clusterCol: String,
       path: String, filesPerMonth: Int = 8): Unit =
-    df.withColumn("p_month", date_format(col(dateCol), "yyyy-MM"))
-      .repartition(col("p_month"),
-        pmod(hash(col(clusterCol)), lit(filesPerMonth)))
-      .sortWithinPartitions(col("p_month"), col(clusterCol))
-      .write
-      .mode("overwrite")
-      .partitionBy("p_month")
-      .parquet(path)
+    monthLayout(df, dateCol, clusterCol, filesPerMonth).parquet(path)
 
   /** Idempotent month upsert: dynamic partition overwrite replaces ONLY
     * the months present in `df`, leaving all other partitions untouched —
@@ -602,15 +595,22 @@ object PartitionedSink {
     */
   def upsertMonths(df: DataFrame, dateCol: String, clusterCol: String,
       path: String, filesPerMonth: Int = 8): Unit =
+    monthLayout(df, dateCol, clusterCol, filesPerMonth)
+      .option("partitionOverwriteMode", "dynamic")
+      .parquet(path)
+
+  /** The month-partitioned, cluster-sorted overwrite writer both sinks
+    * share (see [[writeMonthly]] for the layout).
+    */
+  private def monthLayout(df: DataFrame, dateCol: String, clusterCol: String,
+      filesPerMonth: Int): DataFrameWriter[Row] =
     df.withColumn("p_month", date_format(col(dateCol), "yyyy-MM"))
       .repartition(col("p_month"),
         pmod(hash(col(clusterCol)), lit(filesPerMonth)))
       .sortWithinPartitions(col("p_month"), col(clusterCol))
       .write
       .mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
       .partitionBy("p_month")
-      .parquet(path)
 
   /** Append a batch to an existing parquet table with two-sided schema
     * evolution — the reference's BigQuery append (helpers.py:383-411) adds

@@ -203,16 +203,9 @@ object Bpe {
   }
 
   /** BPE token count of a text column under a trained merge table. */
-  def tokenCount(text: Column, merges: Seq[(String, String)]): Column = {
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
-    import org.apache.spark.sql.types.LongType
-    org.apache.spark.sql.GraftSqlBridge.column(
-      StaticInvoke(classOf[BpeKernels.type], LongType, "encodeCount",
-        Seq(org.apache.spark.sql.GraftSqlBridge.expression(text),
-          Literal(UTF8String.fromString(mergesToSpec(merges)), org.apache.spark.sql.types.StringType)),
-        inputTypes = Nil, propagateNull = true, returnNullable = false))
-  }
+  def tokenCount(text: Column, merges: Seq[(String, String)]): Column =
+    Kernel(classOf[BpeKernels.type], "encodeCount",
+      org.apache.spark.sql.types.LongType)(text, lit(mergesToSpec(merges)))
 }
 
 object BpeKernels {

@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType}
 
 /** Source-code quality filters — the BigCode/StarCoder-style battery
   * (Li et al. 2023 §3, public recipe) that every code-pretraining
@@ -41,14 +42,8 @@ object CodeFilters {
     */
   def evaluate(docs: DataFrame, idCol: String, textCol: String)
       : DataFrame = {
-    val stats = org.apache.spark.sql.GraftSqlBridge.column(
-      org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke(
-        classOf[TextCleanKernels.type],
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.LongType, containsNull = false),
-        "codeStats",
-        Seq(org.apache.spark.sql.GraftSqlBridge.expression(col(textCol))),
-        inputTypes = Nil, propagateNull = true, returnNullable = false))
+    val stats = Kernel(classOf[TextCleanKernels.type], "codeStats",
+      ArrayType(LongType, containsNull = false))(col(textCol))
     docs.select(col(idCol).as("doc_id"), stats.as("_cs"))
       .select(col("doc_id"),
         col("_cs").getItem(0).as("n_lines"),

@@ -1,36 +1,17 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
-import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
-import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** graft's column-function surface. Everything here lowers to either
-  * built-in (codegen'd) Spark functions or a [[StaticInvoke]] of a static
-  * JVM method — never a Scala/Python UDF — so plans keep whole-stage
-  * codegen and null handling stays in Catalyst (propagateNull).
+  * built-in (codegen'd) Spark functions or a [[Kernel]] binding of a
+  * static JVM method — never a Scala/Python UDF — so plans keep
+  * whole-stage codegen and null handling stays in Catalyst. The
+  * bindings the `graft_*` SQL functions also expose are the capitalised
+  * values here ([[Hash64]], [[ToRoman]], …), read by both surfaces.
   */
 object F {
-
-  private def col(e: Expression): Column = GraftSqlBridge.column(e)
-  private def ex(c: Column): Expression = GraftSqlBridge.expression(c)
-
-  private def invoke(
-      dataType: DataType,
-      method: String,
-      args: Seq[Expression],
-      nullableOut: Boolean = false): Column =
-    col(
-      StaticInvoke(
-        classOf[Hashing.type],
-        dataType,
-        method,
-        args,
-        inputTypes = Nil,
-        propagateNull = true,
-        returnNullable = nullableOut))
 
   // ---- tokenization -------------------------------------------------------
 
@@ -62,124 +43,125 @@ object F {
   // ---- hashing / sketches -------------------------------------------------
 
   /** 64-bit content hash of a string (FNV-1a + splitmix64). */
-  def hash64(c: Column, seed: Long = 0L): Column =
-    invoke(LongType, "hash64", Seq(ex(c), Literal(seed)))
+  val Hash64: Kernel = Kernel(classOf[Hashing.type], "hash64", LongType)
+  def hash64(c: Column, seed: Long = 0L): Column = Hash64(c, lit(seed))
 
   /** MinHash signature (array<long> of length numPerms) of a shingle array. */
   def minhashSig(shingleArr: Column, numPerms: Int = 128): Column =
-    invoke(ArrayType(LongType, containsNull = false), "minhashSig",
-      Seq(ex(shingleArr), Literal(numPerms)))
+    Kernel(classOf[Hashing.type], "minhashSig",
+      ArrayType(LongType, containsNull = false))(shingleArr, lit(numPerms))
 
   /** LSH band bucket ids (array<long> of length bands) of a minhash signature. */
   def bandBuckets(sig: Column, bands: Int = 16): Column =
-    invoke(ArrayType(LongType, containsNull = false), "bandBuckets",
-      Seq(ex(sig), Literal(bands)))
+    Kernel(classOf[Hashing.type], "bandBuckets",
+      ArrayType(LongType, containsNull = false))(sig, lit(bands))
 
   /** DSIR hashed unigram+bigram feature buckets (array<int>, each in
     * [0, buckets)) of a token array — [[Hashing.dsirBuckets]]; `buckets`
     * must be a power of two.
     */
   def dsirBuckets(tokenArr: Column, buckets: Int): Column =
-    invoke(ArrayType(IntegerType, containsNull = false), "dsirBuckets",
-      Seq(ex(tokenArr), Literal(buckets)))
+    Kernel(classOf[Hashing.type], "dsirBuckets",
+      ArrayType(IntegerType, containsNull = false))(tokenArr, lit(buckets))
 
   /** Token k-gram hashes (array<long>) by per-token hash folding —
     * [[Hashing.kgramHashes]]; replayable externally from a per-token
     * hash relation with integer arithmetic alone.
     */
   def kgramHashes(tokenArr: Column, k: Int): Column =
-    invoke(ArrayType(LongType, containsNull = false), "kgramHashes",
-      Seq(ex(tokenArr), Literal(k)))
+    Kernel(classOf[Hashing.type], "kgramHashes",
+      ArrayType(LongType, containsNull = false))(tokenArr, lit(k))
 
   /** 64-bit SimHash of a token array. */
-  def simhash64(tokenArr: Column): Column =
-    invoke(LongType, "simhash64", Seq(ex(tokenArr)))
+  val SimHash64: Kernel = Kernel(classOf[Hashing.type], "simhash64", LongType)
+  def simhash64(tokenArr: Column): Column = SimHash64(tokenArr)
 
   /** Order-sensitive polynomial rolling-hash fingerprint of a token array. */
-  def fingerprint(tokenArr: Column): Column =
-    invoke(LongType, "fingerprint", Seq(ex(tokenArr)))
+  val Fingerprint: Kernel =
+    Kernel(classOf[Hashing.type], "fingerprint", LongType)
+  def fingerprint(tokenArr: Column): Column = Fingerprint(tokenArr)
 
   /** Winnowing fingerprint set (distinct window-min k-gram hashes) of a
     * token array — the partial-overlap sketch (MOSS).
     */
   def winnow(tokenArr: Column, k: Int, w: Int): Column =
-    invoke(ArrayType(LongType, containsNull = false), "winnow",
-      Seq(ex(tokenArr), Literal(k), Literal(w)))
+    Kernel(classOf[Hashing.type], "winnow",
+      ArrayType(LongType, containsNull = false))(tokenArr, lit(k), lit(w))
 
   /** Hamming distance between two 64-bit hashes. */
-  def hamming(a: Column, b: Column): Column =
-    invoke(IntegerType, "hamming", Seq(ex(a), ex(b)))
+  val Hamming: Kernel = Kernel(classOf[Hashing.type], "hamming", IntegerType)
+  def hamming(a: Column, b: Column): Column = Hamming(a, b)
 
   /** DEFLATE-compressed byte length of a string (raw deflate, fixed
     * level 6) — the CCNet/RefinedWeb compression-ratio quality signal's
     * kernel ([[Hashing.deflatedLen]]).
     */
   def deflatedLen(c: Column): Column =
-    invoke(IntegerType, "deflatedLen", Seq(ex(c)))
+    Kernel(classOf[Hashing.type], "deflatedLen", IntegerType)(c)
 
   /** Xorshift-multiply integer finalizer (DuckDB-hash-compatible). */
   def murmur64(c: Column): Column =
-    invoke(LongType, "murmur64", Seq(ex(c)))
+    Kernel(classOf[Hashing.type], "murmur64", LongType)(c)
 
   /** Morton/Z-order key of two long columns (low 32 bits each) — sort by
     * this to cluster for range filters on either dimension.
     */
   def zorder2(a: Column, b: Column): Column =
-    invoke(LongType, "interleave2", Seq(ex(a), ex(b)))
+    Kernel(classOf[Hashing.type], "interleave2", LongType)(a, b)
 
   /** Bloom membership of a long key against a driver-built filter — the
     * filter's word array inlines as a LITERAL, so the probe runs inside
     * whole-stage codegen on the scan side (a runtime filter, not a join).
     */
+  val BloomContains: Kernel =
+    Kernel(classOf[Hashing.type], "bloomContains", BooleanType)
   def bloomContains(words: Array[Long], numHashes: Int, key: Column): Column =
-    invoke(BooleanType, "bloomContains",
-      Seq(Literal.create(words, ArrayType(LongType, containsNull = false)),
-        Literal(numHashes), ex(key)))
+    BloomContains(typedLit(words), lit(numHashes), key)
 
   // ---- vector math --------------------------------------------------------
 
   /** Cosine similarity of two array<float> columns (double accumulation). */
-  def cosine(a: Column, b: Column): Column =
-    invoke(DoubleType, "cosineF", Seq(ex(a), ex(b)))
+  val Cosine: Kernel = Kernel(classOf[Hashing.type], "cosineF", DoubleType)
+  def cosine(a: Column, b: Column): Column = Cosine(a, b)
 
   /** Dot product of two array<float> columns (double accumulation). */
-  def dot(a: Column, b: Column): Column =
-    invoke(DoubleType, "dotF", Seq(ex(a), ex(b)))
+  val Dot: Kernel = Kernel(classOf[Hashing.type], "dotF", DoubleType)
+  def dot(a: Column, b: Column): Column = Dot(a, b)
 
   /** JL sign projection of a milli-quantized array<long> into `dims`
     * exact integer components ([[Hashing.jlProject]] — signs are hash
     * parity, nothing stored).
     */
   def jlProject(milli: Column, dims: Int): Column =
-    invoke(ArrayType(LongType, containsNull = false), "jlProject",
-      Seq(ex(milli), Literal(dims)))
+    Kernel(classOf[Hashing.type], "jlProject",
+      ArrayType(LongType, containsNull = false))(milli, lit(dims))
 
   /** Squared L2 distance of two array<float> columns (double accumulation). */
-  def l2sq(a: Column, b: Column): Column =
-    invoke(DoubleType, "l2sqF", Seq(ex(a), ex(b)))
+  val L2sq: Kernel = Kernel(classOf[Hashing.type], "l2sqF", DoubleType)
+  def l2sq(a: Column, b: Column): Column = L2sq(a, b)
 
   /** Banded random-hyperplane LSH codes (array<long>, one sign-bit code per
     * table) of an array<float> column. AND within a table, OR across tables.
     */
   def hyperplaneCodes(vec: Column, planes: Int, tables: Int): Column =
-    invoke(ArrayType(LongType, containsNull = false), "hyperplaneCodes",
-      Seq(ex(vec), Literal(planes), Literal(tables)))
+    Kernel(classOf[Hashing.type], "hyperplaneCodes",
+      ArrayType(LongType, containsNull = false))(vec, lit(planes), lit(tables))
 
   // ---- roman numerals -----------------------------------------------------
 
   /** Int → Roman numeral (null outside 1..3999). Reference:
     * aggregates_python_helpers.py:72-78 builds the I..XXX validation set.
     */
-  def toRoman(c: Column): Column =
-    col(StaticInvoke(classOf[RomanCodec.type], StringType, "toRoman",
-      Seq(ex(c)), Nil, propagateNull = true, returnNullable = true))
+  val ToRoman: Kernel = Kernel(classOf[RomanCodec.type], "toRoman",
+    StringType, returnNullable = true)
+  def toRoman(c: Column): Column = ToRoman(c)
 
   /** Roman numeral → Int (0 for invalid). Reference de-Romanize pass:
     * aggregates_python_helpers.py:517-533.
     */
-  def fromRoman(c: Column): Column =
-    col(StaticInvoke(classOf[RomanCodec.type], IntegerType, "fromRoman",
-      Seq(ex(c)), Nil, propagateNull = true, returnNullable = false))
+  val FromRoman: Kernel =
+    Kernel(classOf[RomanCodec.type], "fromRoman", IntegerType)
+  def fromRoman(c: Column): Column = FromRoman(c)
 
   // ---- media headers ------------------------------------------------------
 
@@ -187,39 +169,36 @@ object F {
     * (real header parse — graft.multimodal.MediaHeader, RFC 2083 /
     * ITU T.81 — via StaticInvoke, inside whole-stage codegen).
     */
-  def imageFormat(blob: Column): Column =
-    col(StaticInvoke(classOf[graft.multimodal.MediaHeader.type], StringType,
-      "format", Seq(ex(blob)), Nil, propagateNull = true,
-      returnNullable = true))
+  val ImageFormat: Kernel = Kernel(classOf[graft.multimodal.MediaHeader.type],
+    "format", StringType, returnNullable = true)
+  def imageFormat(blob: Column): Column = ImageFormat(blob)
+
+  /** Pixel width / height from a PNG IHDR / JPEG SOF header; -1 when
+    * the bytes are corrupt, truncated, or not a recognized image
+    * container ([[imageWidth]] / [[imageHeight]] turn -1 into NULL).
+    */
+  val ImageWidth: Kernel =
+    Kernel(classOf[graft.multimodal.MediaHeader.type], "width", IntegerType)
+  val ImageHeight: Kernel =
+    Kernel(classOf[graft.multimodal.MediaHeader.type], "height", IntegerType)
 
   /** Pixel width from a PNG IHDR / JPEG SOF header; NULL when the bytes
     * are corrupt, truncated, or not a recognized image container.
     */
-  def imageWidth(blob: Column): Column = {
-    val w = col(StaticInvoke(classOf[graft.multimodal.MediaHeader.type],
-      IntegerType, "width", Seq(ex(blob)), Nil, propagateNull = true,
-      returnNullable = false))
-    nullif(w, lit(-1))
-  }
+  def imageWidth(blob: Column): Column = nullif(ImageWidth(blob), lit(-1))
 
   /** Pixel height from a PNG IHDR / JPEG SOF header; NULL like
     * [[imageWidth]].
     */
-  def imageHeight(blob: Column): Column = {
-    val h = col(StaticInvoke(classOf[graft.multimodal.MediaHeader.type],
-      IntegerType, "height", Seq(ex(blob)), Nil, propagateNull = true,
-      returnNullable = false))
-    nullif(h, lit(-1))
-  }
+  def imageHeight(blob: Column): Column = nullif(ImageHeight(blob), lit(-1))
 
   /** q95 fixture encoder: deterministic BMP / PNG / corrupt bytes from a
     * doc_id (graft.multimodal.PixelCodec.makeImage — pixel values are pure
     * doc_id arithmetic the oracle recomputes).
     */
   def pixelFixture(docId: Column): Column =
-    col(StaticInvoke(classOf[graft.multimodal.PixelCodec.type], BinaryType,
-      "makeImage", Seq(ex(docId)), Nil, propagateNull = true,
-      returnNullable = false))
+    Kernel(classOf[graft.multimodal.PixelCodec.type], "makeImage",
+      BinaryType)(docId)
 
   /** REAL pixel decode (BMP BI_RGB + PNG truecolor incl. all five filters
     * and zlib inflate): array [n_pixels, sum_r, sum_g, sum_b, n_nonzero]
@@ -227,9 +206,8 @@ object F {
     * whole-stage codegen, never a UDF.
     */
   def pixelStats(blob: Column): Column =
-    col(StaticInvoke(classOf[graft.multimodal.PixelCodec.type],
-      ArrayType(LongType, containsNull = false), "stats", Seq(ex(blob)),
-      Nil, propagateNull = true, returnNullable = true))
+    Kernel(classOf[graft.multimodal.PixelCodec.type], "stats",
+      ArrayType(LongType, containsNull = false), returnNullable = true)(blob)
 
   /** q148 fixture encoder: deterministic 9×8 gray-pattern BMP / PNG /
     * corrupt bytes from a doc_id ([[graft.multimodal.PHash
@@ -237,9 +215,8 @@ object F {
     * recomputes via DuckDB hash()).
     */
   def patternImageFixture(docId: Column): Column =
-    col(StaticInvoke(classOf[graft.multimodal.PHash.type], BinaryType,
-      "makePatternImage", Seq(ex(docId)), Nil, propagateNull = true,
-      returnNullable = false))
+    Kernel(classOf[graft.multimodal.PHash.type], "makePatternImage",
+      BinaryType)(docId)
 
   /** Perceptual image hashes over a decoded blob: [dhash64, ahash64]
     * (difference / average hash, 8×8 grid, LSB-first bits) or NULL on
@@ -247,9 +224,8 @@ object F {
     * never a UDF.
     */
   def perceptualHashes(blob: Column): Column =
-    col(StaticInvoke(classOf[graft.multimodal.PHash.type],
-      ArrayType(LongType, containsNull = false), "hashes", Seq(ex(blob)),
-      Nil, propagateNull = true, returnNullable = true))
+    Kernel(classOf[graft.multimodal.PHash.type], "hashes",
+      ArrayType(LongType, containsNull = false), returnNullable = true)(blob)
 
   /** q35/q155 fixture encoder: a deterministic per-doc APNG clip (2–4
     * pattern frames, all five scanline filters, corrupt bytes at
@@ -257,9 +233,8 @@ object F {
     * ([[graft.multimodal.PHash.makeClip]]).
     */
   def clipFixture(docId: Column): Column =
-    col(StaticInvoke(classOf[graft.multimodal.PHash.type], BinaryType,
-      "makeClip", Seq(ex(docId)), Nil, propagateNull = true,
-      returnNullable = false))
+    Kernel(classOf[graft.multimodal.PHash.type], "makeClip",
+      BinaryType)(docId)
 
   /** q158 fixture encoder: a deterministic per-doc APNG clip with SHOT
     * structure (6–10 frames, runs of near-identical frames separated by
@@ -267,9 +242,8 @@ object F {
     * ([[graft.multimodal.PHash.makeSceneClip]]).
     */
   def sceneClipFixture(docId: Column): Column =
-    col(StaticInvoke(classOf[graft.multimodal.PHash.type], BinaryType,
-      "makeSceneClip", Seq(ex(docId)), Nil, propagateNull = true,
-      returnNullable = false))
+    Kernel(classOf[graft.multimodal.PHash.type], "makeSceneClip",
+      BinaryType)(docId)
 
   /** Per-frame dHashes of an APNG clip (real frame walk: chunk CRC
     * audit, per-frame zlib inflate, unfilter, the q148 dHash per
@@ -277,16 +251,15 @@ object F {
     * .frameHashes]]). StaticInvoke — whole-stage codegen, never a UDF.
     */
   def clipFrameHashes(blob: Column): Column =
-    col(StaticInvoke(classOf[graft.multimodal.PHash.type],
-      ArrayType(LongType, containsNull = false), "frameHashes",
-      Seq(ex(blob)), Nil, propagateNull = true, returnNullable = true))
+    Kernel(classOf[graft.multimodal.PHash.type], "frameHashes",
+      ArrayType(LongType, containsNull = false), returnNullable = true)(blob)
 
   /** Unicode NFC canonical form ([[UnicodeNorm.nfc]] — UAX #15): the
     * normalization every content hash should see first.
     */
-  def nfc(c: Column): Column =
-    col(StaticInvoke(classOf[UnicodeNorm.type], StringType, "nfc",
-      Seq(ex(c)), Nil, propagateNull = true, returnNullable = true))
+  val Nfc: Kernel =
+    Kernel(classOf[UnicodeNorm.type], "nfc", StringType, returnNullable = true)
+  def nfc(c: Column): Column = Nfc(c)
 
   /** q129 fixture encoder: a deterministic per-doc WAV container
     * (PCM/IEEE-float/torn/non-RIFF/non-WAVE by doc_id arithmetic,
@@ -294,27 +267,24 @@ object F {
     * the oracle recomputes ([[graft.multimodal.AudioHeader.makeWav]]).
     */
   def wavFixture(docId: Column): Column =
-    col(StaticInvoke(classOf[graft.multimodal.AudioHeader.type],
-      BinaryType, "makeWav", Seq(ex(docId)), Nil, propagateNull = true,
-      returnNullable = false))
+    Kernel(classOf[graft.multimodal.AudioHeader.type], "makeWav",
+      BinaryType)(docId)
 
   /** WAV/RIFF header decode: array [audio_format, channels, sample_rate,
     * bits_per_sample, n_frames, duration_ms] or NULL on
     * torn/non-WAV bytes ([[graft.multimodal.AudioHeader.wavMeta]]).
     */
   def wavMeta(blob: Column): Column =
-    col(StaticInvoke(classOf[graft.multimodal.AudioHeader.type],
-      ArrayType(LongType, containsNull = false), "wavMeta", Seq(ex(blob)),
-      Nil, propagateNull = true, returnNullable = true))
+    Kernel(classOf[graft.multimodal.AudioHeader.type], "wavMeta",
+      ArrayType(LongType, containsNull = false), returnNullable = true)(blob)
 
   /** q154 fixture encoder: a deterministic per-doc PCM WAV whose energy
     * contour the oracle replays from doc_id arithmetic
     * ([[graft.multimodal.AudioFingerprint.makeFpWav]]).
     */
   def fpWavFixture(docId: Column): Column =
-    col(StaticInvoke(classOf[graft.multimodal.AudioFingerprint.type],
-      BinaryType, "makeFpWav", Seq(ex(docId)), Nil, propagateNull = true,
-      returnNullable = false))
+    Kernel(classOf[graft.multimodal.AudioFingerprint.type], "makeFpWav",
+      BinaryType)(docId)
 
   /** Energy-threshold VAD segmentation of a PCM WAV: [n_frames,
     * n_active, n_segments, longest_silence, first_active] or NULL on
@@ -322,10 +292,9 @@ object F {
     * StaticInvoke — whole-stage codegen, never a UDF.
     */
   def vadStats(blob: Column, threshold: Long): Column =
-    col(StaticInvoke(classOf[graft.multimodal.AudioFingerprint.type],
-      ArrayType(LongType, containsNull = false), "vadStats",
-      Seq(ex(blob), Literal(threshold)), Nil, propagateNull = true,
-      returnNullable = true))
+    Kernel(classOf[graft.multimodal.AudioFingerprint.type], "vadStats",
+      ArrayType(LongType, containsNull = false), returnNullable = true)(
+      blob, lit(threshold))
 
   /** 64-bit audio energy-contour fingerprint over a PCM WAV blob —
     * exactly gain-invariant (cross-multiplied mean comparison), NULL on
@@ -334,9 +303,8 @@ object F {
     * codegen, never a UDF.
     */
   def audioFingerprint(blob: Column): Column =
-    col(StaticInvoke(classOf[graft.multimodal.AudioFingerprint.type],
-      LongType, "fingerprint", Seq(ex(blob)), Nil, propagateNull = true,
-      returnNullable = true))
+    Kernel(classOf[graft.multimodal.AudioFingerprint.type], "fingerprint",
+      LongType, returnNullable = true)(blob)
 
   /** q123 fixture encoder: a deterministic per-doc PDF (uncompressed /
     * FlateDecode / encrypted / torn / no-text by doc_id arithmetic) whose
@@ -344,24 +312,21 @@ object F {
     * .fixture).
     */
   def pdfFixture(docId: Column, text: Column): Column =
-    col(StaticInvoke(classOf[graft.sources.PdfText.type], BinaryType,
-      "fixture", Seq(ex(docId), ex(text)), Nil, propagateNull = false,
-      returnNullable = false))
+    Kernel(classOf[graft.sources.PdfText.type], "fixture", BinaryType,
+      propagateNull = false)(docId, text)
 
   /** PDF Info-dictionary metadata (graft.sources.PdfText.infoMeta,
     * ISO 32000-1 §14.3.3 subset): array [title, author,
     * creation_date_raw], NULLs when out of subset — never a throw.
     */
   def pdfInfo(blob: Column): Column =
-    col(StaticInvoke(classOf[graft.sources.PdfText.type],
-      ArrayType(StringType, containsNull = true), "infoMeta",
-      Seq(ex(blob)), Nil, propagateNull = true, returnNullable = false))
+    Kernel(classOf[graft.sources.PdfText.type], "infoMeta",
+      ArrayType(StringType, containsNull = true))(blob)
 
   /** q141 fixture: the q123 skeleton plus a planted Info object. */
   def pdfInfoFixture(docId: Column): Column =
-    col(StaticInvoke(classOf[graft.sources.PdfText.type], BinaryType,
-      "fixtureWithInfo", Seq(ex(docId)), Nil, propagateNull = false,
-      returnNullable = false))
+    Kernel(classOf[graft.sources.PdfText.type], "fixtureWithInfo",
+      BinaryType, propagateNull = false)(docId)
 
   /** REAL bounded-subset PDF text extraction (object/stream walk,
     * FlateDecode via JDK zlib, BT/ET text operators with the full literal
@@ -372,18 +337,16 @@ object F {
     * bytes produce reasons, never a throw.
     */
   def pdfExtract(blob: Column): Column =
-    col(StaticInvoke(classOf[graft.sources.PdfText.type],
-      ArrayType(StringType, containsNull = true), "extract", Seq(ex(blob)),
-      Nil, propagateNull = true, returnNullable = false))
+    Kernel(classOf[graft.sources.PdfText.type], "extract",
+      ArrayType(StringType, containsNull = true))(blob)
 
   /** q96 fixture encoder: a complete single-record ESRI `.shp` file for one
     * fixture polygon (graft.sources.ShpCodec.makeShp — vertices are the
     * q60/q85 star-polygon arithmetic the oracle recomputes).
     */
   def shpFixture(polyId: Column): Column =
-    col(StaticInvoke(classOf[graft.sources.ShpCodec.type], BinaryType,
-      "makeShp", Seq(ex(polyId)), Nil, propagateNull = true,
-      returnNullable = false))
+    Kernel(classOf[graft.sources.ShpCodec.type], "makeShp",
+      BinaryType)(polyId)
 
   /** REAL ESRI `.shp` container parse (header walk, BE record framing /
     * LE shape bodies, multi-part polygons, ring de-closing, bbox
@@ -398,9 +361,8 @@ object F {
       containsNull = false), nullable = false))), containsNull = false)
 
   def shpRecords(blob: Column): Column =
-    col(StaticInvoke(classOf[graft.sources.ShpCodec.type], shpRecordsType,
-      "rings", Seq(ex(blob)), Nil, propagateNull = true,
-      returnNullable = true))
+    Kernel(classOf[graft.sources.ShpCodec.type], "rings", shpRecordsType,
+      returnNullable = true)(blob)
 
   // ---- decimal-exact aggregation helpers ----------------------------------
 

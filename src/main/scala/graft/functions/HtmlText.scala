@@ -1,8 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftSqlBridge
-import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.functions.{lit, regexp_extract_all,
   regexp_replace, transform, trim}
 import org.apache.spark.sql.types.{IntegerType, StringType}
@@ -55,10 +53,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * damage posture at the markup layer.
   */
 object HtmlText {
-
-  private def col(e: org.apache.spark.sql.catalyst.expressions.Expression) =
-    GraftSqlBridge.column(e)
-  private def ex(c: Column) = GraftSqlBridge.expression(c)
 
   /** Tags that break lines. Everything else is inline. */
   private val BlockTags: java.util.HashSet[String] = {
@@ -531,30 +525,28 @@ object HtmlText {
 
   /** Markdown of an HTML column (bounded subset — see [[markdownKernel]]). */
   def toMarkdown(html: Column): Column =
-    col(StaticInvoke(classOf[HtmlText.type], StringType, "markdownKernel",
-      Seq(ex(html)), Nil, propagateNull = true, returnNullable = true))
+    Kernel(classOf[HtmlText.type], "markdownKernel", StringType,
+      returnNullable = true)(html)
 
   /** Visible text of an HTML column, one `\n`-joined line per block. */
-  def extract(html: Column): Column =
-    col(StaticInvoke(classOf[HtmlText.type], StringType, "extractKernel",
-      Seq(ex(html)), Nil, propagateNull = true, returnNullable = true))
+  val Extract: Kernel = Kernel(classOf[HtmlText.type], "extractKernel",
+    StringType, returnNullable = true)
+  def extract(html: Column): Column = Extract(html)
 
   /** Main content of an HTML column: visible text minus link-dominated
     * and too-short lines (see [[mainContentKernel]]).
     */
+  val MainContent: Kernel = Kernel(classOf[HtmlText.type],
+    "mainContentKernel", StringType, returnNullable = true)
   def mainContent(html: Column, maxLinkPct: Int = 50,
       minChars: Int = 12): Column =
-    col(StaticInvoke(classOf[HtmlText.type], StringType, "mainContentKernel",
-      Seq(ex(html), ex(lit(maxLinkPct)), ex(lit(minChars))), Nil,
-      propagateNull = true, returnNullable = true))
+    MainContent(html, lit(maxLinkPct), lit(minChars))
 
   /** Lines [[mainContent]] keeps, as a column (−1 for NULL html). */
   def keptLineCount(html: Column, maxLinkPct: Int = 50,
       minChars: Int = 12): Column =
-    col(StaticInvoke(classOf[HtmlText.type], IntegerType,
-      "keptLineCountKernel",
-      Seq(ex(html), ex(lit(maxLinkPct)), ex(lit(minChars))), Nil,
-      propagateNull = false, returnNullable = false))
+    Kernel(classOf[HtmlText.type], "keptLineCountKernel", IntegerType,
+      propagateNull = false)(html, lit(maxLinkPct), lit(minChars))
 
   // ---- table extraction (q133) --------------------------------------------
 

@@ -1,9 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftSqlBridge
-import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
-import org.apache.spark.sql.types.BooleanType
+import org.apache.spark.sql.types.{ArrayType, BooleanType, DoubleType,
+  StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** robots.txt evaluation (RFC 9309) — the crawl-politeness gate between a
@@ -33,10 +32,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * (robots bodies for the host set in play are tiny next to captures).
   */
 object RobotsTxt {
-
-  private def col(e: org.apache.spark.sql.catalyst.expressions.Expression) =
-    GraftSqlBridge.column(e)
-  private def ex(c: Column) = GraftSqlBridge.expression(c)
 
   /** Anchored wildcard match: `*` spans, trailing `$` anchors the end. */
   private def patternMatches(pattern: String, path: String): Boolean = {
@@ -211,19 +206,17 @@ object RobotsTxt {
   /** True when `agent` may fetch `path` under the `robots` body (NULL
     * robots/agent/path → allowed: no rules is no restriction).
     */
+  val Allowed: Kernel = Kernel(classOf[RobotsTxt.type], "allowedKernel",
+    BooleanType, propagateNull = false)
   def allowed(robots: Column, agent: Column, path: Column): Column =
-    col(StaticInvoke(classOf[RobotsTxt.type], BooleanType, "allowedKernel",
-      Seq(ex(robots), ex(agent), ex(path)), Nil, propagateNull = false,
-      returnNullable = false))
+    Allowed(robots, agent, path)
 
   /** Crawl-delay seconds for `agent` under `robots`, NULL when the
     * applicable group advertises none (see kernel).
     */
   def crawlDelay(robots: Column, agent: Column): Column = {
-    val raw = col(StaticInvoke(classOf[RobotsTxt.type],
-      org.apache.spark.sql.types.DoubleType, "crawlDelayKernel",
-      Seq(ex(robots), ex(agent)), Nil, propagateNull = false,
-      returnNullable = false))
+    val raw = Kernel(classOf[RobotsTxt.type], "crawlDelayKernel",
+      DoubleType, propagateNull = false)(robots, agent)
     org.apache.spark.sql.functions.when(
       raw >= 0, raw)
   }
@@ -232,9 +225,7 @@ object RobotsTxt {
     * NULL robots → empty array).
     */
   def sitemaps(robots: Column): Column =
-    col(StaticInvoke(classOf[RobotsTxt.type],
-      org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.StringType, containsNull = false),
-      "sitemapsKernel", Seq(ex(robots)), Nil, propagateNull = false,
-      returnNullable = false))
+    Kernel(classOf[RobotsTxt.type], "sitemapsKernel",
+      ArrayType(StringType, containsNull = false),
+      propagateNull = false)(robots)
 }

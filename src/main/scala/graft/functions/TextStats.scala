@@ -40,12 +40,8 @@ object TextStats {
     * doubled q115 at the 100× probe.
     */
   def gopherSymbolCount(text: Column): Column =
-    org.apache.spark.sql.GraftSqlBridge.column(
-      org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke(
-        classOf[TextCleanKernels.type],
-        org.apache.spark.sql.types.LongType, "gopherSymbols",
-        Seq(org.apache.spark.sql.GraftSqlBridge.expression(text)),
-        inputTypes = Nil, propagateNull = true, returnNullable = false))
+    Kernel(classOf[TextCleanKernels.type], "gopherSymbols",
+      org.apache.spark.sql.types.LongType)(text)
 
   /** English stopword hits: occurrences of ' the ' / ' a ' / ' and ' in a
     * single-space-padded body.
@@ -150,29 +146,16 @@ object TextClean {
   def collapseWhitespace(text: Column): Column =
     trim(regexp_replace(text, "\\s+", " "))
 
-  /** Unicode NFC normalization (combining sequences → composed forms) —
-    * the canonical first step before hashing/dedup so visually-identical
-    * text hashes identically. StaticInvoke of java.text.Normalizer keeps
-    * codegen; DuckDB's nfc_normalize implements the same Unicode
-    * normalization for the oracle.
-    */
-  def nfc(text: Column): Column = {
-    import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
-    import org.apache.spark.sql.types.StringType
-    org.apache.spark.sql.GraftSqlBridge.column(
-      StaticInvoke(classOf[TextCleanKernels.type], StringType, "nfc",
-        Seq(org.apache.spark.sql.GraftSqlBridge.expression(text)),
-        inputTypes = Nil, propagateNull = true, returnNullable = true))
-  }
-
   /** Mask email addresses (PII scrub). Dialect-neutral pattern. */
   def redactEmails(text: Column, mask: String = "<EMAIL>"): Column =
     regexp_replace(text,
       "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z][A-Za-z]+", mask)
 
-  /** The standard cleaning chain: strip tags → NFC → redact → collapse. */
+  /** The standard cleaning chain: strip tags → NFC ([[F.nfc]]) → redact →
+    * collapse.
+    */
   def cleanChain(text: Column): Column =
-    collapseWhitespace(redactEmails(nfc(stripHtml(text))))
+    collapseWhitespace(redactEmails(F.nfc(stripHtml(text))))
 
   // ---- PII / leakage scrubbing --------------------------------------------
   // All patterns avoid lookarounds and backreferences so Java regex (Spark)
@@ -208,10 +191,6 @@ object TextClean {
 
 object TextCleanKernels {
   import org.apache.spark.unsafe.types.UTF8String
-
-  def nfc(s: UTF8String): UTF8String =
-    UTF8String.fromString(
-      java.text.Normalizer.normalize(s.toString, java.text.Normalizer.Form.NFC))
 
   /** '#' + non-overlapping '...' + '…' in one raw UTF-8 byte pass.
     * Bytewise is sound: '#' (0x23) and '.' (0x2E) are ASCII and never

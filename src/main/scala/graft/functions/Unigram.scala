@@ -53,35 +53,24 @@ object Unigram {
   def toSpec(pieces: Seq[(String, Long)]): String =
     pieces.map { case (p, s) => s"$p $s" }.mkString("\n")
 
-  private def kernel(method: String, dt: org.apache.spark.sql.types.DataType,
-      word: Column, spec: String, nullable: Boolean): Column = {
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
-    org.apache.spark.sql.GraftSqlBridge.column(
-      StaticInvoke(classOf[UnigramKernels.type], dt, method,
-        Seq(org.apache.spark.sql.GraftSqlBridge.expression(word),
-          Literal(UTF8String.fromString(spec),
-            org.apache.spark.sql.types.StringType)),
-        inputTypes = Nil, propagateNull = true,
-        returnNullable = nullable))
-  }
-
   /** Viterbi segmentation of one lower-case word under the fixed
     * table: pieces joined by `|`. NULL when some character has no
     * covering piece (the caller's filter plus full single-char
     * coverage makes the planted tables total).
     */
   def segment(word: Column, pieces: Seq[(String, Long)]): Column =
-    kernel("segment", org.apache.spark.sql.types.StringType,
-      word, toSpec(pieces), nullable = true)
+    Kernel(classOf[UnigramKernels.type], "segment",
+      org.apache.spark.sql.types.StringType, returnNullable = true)(
+      word, lit(toSpec(pieces)))
 
   /** The winning segmentation's total score in milli-log units
     * (Long.MinValue/4-floored sentinel never escapes: NULL on an
     * uncoverable word, like [[segment]]).
     */
   def scoreMilli(word: Column, pieces: Seq[(String, Long)]): Column =
-    kernel("scoreMilli", org.apache.spark.sql.types.LongType,
-      word, toSpec(pieces), nullable = true)
+    Kernel(classOf[UnigramKernels.type], "scoreMilli",
+      org.apache.spark.sql.types.LongType, returnNullable = true)(
+      word, lit(toSpec(pieces)))
 
   /** One hard-EM count step over `words` (word, f): Viterbi-segment
     * each word TYPE under `pieces`, weight pieces by f, return

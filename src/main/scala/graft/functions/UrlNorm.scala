@@ -1,8 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftSqlBridge
-import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -42,10 +40,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * canonical string.
   */
 object UrlNorm {
-
-  private def col(e: org.apache.spark.sql.catalyst.expressions.Expression) =
-    GraftSqlBridge.column(e)
-  private def ex(c: Column) = GraftSqlBridge.expression(c)
 
   private def isHex(c: Char): Boolean =
     (c >= '0' && c <= '9') || (c >= 'a' && c <= 'f') || (c >= 'A' && c <= 'F')
@@ -168,7 +162,7 @@ object UrlNorm {
   // ---- column surface -----------------------------------------------------
 
   /** Canonical form of an absolute http(s) URL column; NULL otherwise. */
-  def canonicalize(url: Column): Column =
-    col(StaticInvoke(classOf[UrlNorm.type], StringType, "canonicalizeKernel",
-      Seq(ex(url)), Nil, propagateNull = true, returnNullable = true))
+  val Canonicalize: Kernel = Kernel(classOf[UrlNorm.type],
+    "canonicalizeKernel", StringType, returnNullable = true)
+  def canonicalize(url: Column): Column = Canonicalize(url)
 }

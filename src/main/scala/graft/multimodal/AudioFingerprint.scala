@@ -39,47 +39,21 @@ package graft.multimodal
   */
 object AudioFingerprint {
 
-  private def u16le(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
   private def s16le(b: Array[Byte], i: Int): Int =
     ((b(i) & 0xff) | (b(i + 1) << 8)).toShort.toInt
-  private def u32le(b: Array[Byte], i: Int): Long =
-    (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) |
-      ((b(i + 2) & 0xffL) << 16) | ((b(i + 3) & 0xffL) << 24)
-  private def tag(b: Array[Byte], i: Int): String =
-    new String(Array(b(i), b(i + 1), b(i + 2), b(i + 3)), "US-ASCII")
 
   /** Per-frame amplitudes |Σ channels| of an integer-PCM WAV (the
-    * [[AudioHeader.wavMeta]] walk plus the data offset), or null on
-    * corrupt/torn/non-PCM bytes — shared by [[fingerprint]] and
-    * [[vadStats]].
+    * [[AudioHeader.walk]] chunk walk), or null on corrupt/torn/non-PCM
+    * bytes — shared by [[fingerprint]] and [[vadStats]].
     */
   private def decodeAmp(b: Array[Byte]): Array[Long] = {
-    if (b == null || b.length < 12) return null
-    if (tag(b, 0) != "RIFF" || tag(b, 8) != "WAVE") return null
-    var off = 12
-    var fmtCode = -1; var ch = -1; var bits = -1
-    var dataOff = -1; var dataSize = -1L
-    while (off + 8 <= b.length && (fmtCode < 0 || dataOff < 0)) {
-      val id = tag(b, off)
-      val sz = u32le(b, off + 4)
-      val body = off + 8
-      if (body + sz > b.length) return null // declared size overruns: torn
-      if (id == "fmt ") {
-        if (sz < 16) return null
-        fmtCode = u16le(b, body)
-        ch = u16le(b, body + 2)
-        bits = u16le(b, body + 14)
-      } else if (id == "data") {
-        dataOff = body; dataSize = sz
-      }
-      off = body + sz.toInt + (sz.toInt & 1) // word-align: odd sizes pad
-    }
-    if (fmtCode != 1 || dataOff < 0) return null // integer PCM only
+    val w = AudioHeader.walk(b)
+    if (w == null || w.format != 1) return null // integer PCM only
+    val ch = w.channels; val bits = w.bits; val dataOff = w.dataOff
     if (ch <= 0 || (bits != 8 && bits != 16)) return null
     val stride = ch * bits / 8
-    if (dataSize % stride != 0) return null
-    val n = (dataSize / stride).toInt
+    if (w.dataSize % stride != 0) return null
+    val n = (w.dataSize / stride).toInt
     if (n < 1) return null
     // amplitude per frame: |sum of channel samples| (8-bit WAV is
     // unsigned, centered at 128 per the RIFF spec; 16-bit is signed LE)
@@ -204,15 +178,13 @@ object AudioFingerprint {
     val gain = if (v == 1) 2 else 1
     val stride = ch * 2
     val dataSize = n * stride
-    val out = new java.io.ByteArrayOutputStream
-    def w16(x: Int): Unit = { out.write(x & 0xff); out.write((x >> 8) & 0xff) }
-    def w32(x: Long): Unit = { var i = 0; while (i < 4) {
-      out.write(((x >> (8 * i)) & 0xff).toInt); i += 1 } }
-    out.write("RIFF".getBytes("US-ASCII")); w32(4 + 24 + 8 + dataSize)
-    out.write("WAVE".getBytes("US-ASCII"))
-    out.write("fmt ".getBytes("US-ASCII")); w32(16)
-    w16(1); w16(ch); w32(8000); w32(8000L * stride); w16(stride); w16(16)
-    out.write("data".getBytes("US-ASCII")); w32(dataSize)
+    val out = new AudioHeader.LeWriter
+    out.ascii("RIFF"); out.w32(4 + 24 + 8 + dataSize)
+    out.ascii("WAVE")
+    out.ascii("fmt "); out.w32(16)
+    out.w16(1); out.w16(ch); out.w32(8000); out.w32(8000L * stride)
+    out.w16(stride); out.w16(16)
+    out.ascii("data"); out.w32(dataSize)
     var f = 0
     while (f < n) {
       val k = f / spw
@@ -220,7 +192,7 @@ object AudioFingerprint {
       if (v == 2 && k == (m % 65).toInt) lvl += 17
       val s = (if (f % 2 == 0) 1 else -1) * (37 * lvl.toInt + 5) * gain
       var c = 0
-      while (c < ch) { w16(s & 0xffff); c += 1 }
+      while (c < ch) { out.w16(s & 0xffff); c += 1 }
       f += 1
     }
     out.toByteArray

@@ -30,16 +30,22 @@ object AudioHeader {
   private def tag(b: Array[Byte], i: Int): String =
     new String(Array(b(i), b(i + 1), b(i + 2), b(i + 3)), "US-ASCII")
 
-  /** [audio_format, channels, sample_rate, bits_per_sample, n_frames,
-    * duration_ms] or NULL when the bytes are not a parseable WAV.
+  /** The `fmt ` fields and the `data` chunk's place in a WAV. */
+  private[multimodal] final case class WavLayout(format: Int, channels: Int,
+      sampleRate: Long, bits: Int, dataOff: Int, dataSize: Long)
+
+  /** The RIFF/WAVE chunk walk: the first `fmt ` and `data` chunks, or
+    * null when the bytes are not RIFF/WAVE, a chunk's declared size
+    * overruns the buffer (torn), `fmt ` is short, or either chunk is
+    * missing. Odd-sized chunks are followed by a pad byte.
     */
-  def wavMeta(b: Array[Byte]): ArrayData = {
+  private[multimodal] def walk(b: Array[Byte]): WavLayout = {
     if (b == null || b.length < 12) return null
     if (tag(b, 0) != "RIFF" || tag(b, 8) != "WAVE") return null
     var off = 12
     var fmtCode = -1; var ch = -1; var sr = -1L; var bits = -1
-    var dataSize = -1L
-    while (off + 8 <= b.length && (fmtCode < 0 || dataSize < 0)) {
+    var dataOff = -1; var dataSize = -1L
+    while (off + 8 <= b.length && (fmtCode < 0 || dataOff < 0)) {
       val id = tag(b, off)
       val sz = u32le(b, off + 4)
       val body = off + 8
@@ -51,17 +57,35 @@ object AudioHeader {
         sr = u32le(b, body + 4)
         bits = u16le(b, body + 14)
       } else if (id == "data") {
-        dataSize = sz
+        dataOff = body; dataSize = sz
       }
       off = body + sz.toInt + (sz.toInt & 1) // word-align: odd sizes pad
     }
-    if (fmtCode < 0 || dataSize < 0) return null
-    val stride = ch.toLong * bits / 8
-    if (ch <= 0 || sr <= 0 || bits <= 0 || bits % 8 != 0 ||
-      dataSize % stride != 0) return null
-    val frames = dataSize / stride
-    new GenericArrayData(Array(fmtCode.toLong, ch.toLong, sr, bits.toLong,
-      frames, frames * 1000L / sr))
+    if (fmtCode < 0 || dataOff < 0) null
+    else WavLayout(fmtCode, ch, sr, bits, dataOff, dataSize)
+  }
+
+  /** A little-endian byte writer for the WAV fixtures. */
+  private[multimodal] final class LeWriter
+      extends java.io.ByteArrayOutputStream {
+    def w16(x: Int): Unit = { write(x & 0xff); write((x >> 8) & 0xff) }
+    def w32(x: Long): Unit = { var i = 0; while (i < 4) {
+      write(((x >> (8 * i)) & 0xff).toInt); i += 1 } }
+    def ascii(s: String): Unit = write(s.getBytes("US-ASCII"))
+  }
+
+  /** [audio_format, channels, sample_rate, bits_per_sample, n_frames,
+    * duration_ms] or NULL when the bytes are not a parseable WAV.
+    */
+  def wavMeta(b: Array[Byte]): ArrayData = {
+    val w = walk(b)
+    if (w == null) return null
+    val stride = w.channels.toLong * w.bits / 8
+    if (w.channels <= 0 || w.sampleRate <= 0 || w.bits <= 0 ||
+      w.bits % 8 != 0 || w.dataSize % stride != 0) return null
+    val frames = w.dataSize / stride
+    new GenericArrayData(Array(w.format.toLong, w.channels.toLong,
+      w.sampleRate, w.bits.toLong, frames, frames * 1000L / w.sampleRate))
   }
 
   /** Deterministic per-doc WAV fixture (the q95/q123 plant pattern):
@@ -85,20 +109,17 @@ object AudioHeader {
     val dataSize = frames * stride
     val list = if (docId % 4 == 1) 8 + 5 + 1 else 0 // odd LIST + pad
     val riffSize = 4 + 24 + list + 8 + dataSize
-    val out = new java.io.ByteArrayOutputStream
-    def w16(x: Int): Unit = { out.write(x & 0xff); out.write((x >> 8) & 0xff) }
-    def w32(x: Long): Unit = { var i = 0; while (i < 4) {
-      out.write(((x >> (8 * i)) & 0xff).toInt); i += 1 } }
-    out.write("RIFF".getBytes("US-ASCII")); w32(riffSize)
-    out.write((if (v == 10) "AVI " else "WAVE").getBytes("US-ASCII"))
-    out.write("fmt ".getBytes("US-ASCII")); w32(16)
-    w16(fmtCode); w16(ch); w32(sr); w32(sr.toLong * stride)
-    w16(stride); w16(bits)
+    val out = new LeWriter
+    out.ascii("RIFF"); out.w32(riffSize)
+    out.ascii(if (v == 10) "AVI " else "WAVE")
+    out.ascii("fmt "); out.w32(16)
+    out.w16(fmtCode); out.w16(ch); out.w32(sr); out.w32(sr.toLong * stride)
+    out.w16(stride); out.w16(bits)
     if (list > 0) {
-      out.write("LIST".getBytes("US-ASCII")); w32(5)
-      out.write("INFO!".getBytes("US-ASCII")); out.write(0) // pad byte
+      out.ascii("LIST"); out.w32(5)
+      out.ascii("INFO!"); out.write(0) // pad byte
     }
-    out.write("data".getBytes("US-ASCII")); w32(dataSize)
+    out.ascii("data"); out.w32(dataSize)
     out.write(new Array[Byte](dataSize))
     val full = out.toByteArray
     if (v == 7) java.util.Arrays.copyOf(full, 18) else full

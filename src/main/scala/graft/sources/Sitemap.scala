@@ -1,8 +1,7 @@
 package graft.sources
 
+import graft.functions.Kernel
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftSqlBridge
-import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.types.{BinaryType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -26,10 +25,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * is row count — no shuffles anywhere in the decode.
   */
 object Sitemap {
-
-  private def col(e: org.apache.spark.sql.catalyst.expressions.Expression) =
-    GraftSqlBridge.column(e)
-  private def ex(c: Column) = GraftSqlBridge.expression(c)
 
   private def isGzip(b: Array[Byte]): Boolean =
     b.length > 2 && b(0) == 0x1f.toByte && b(1) == 0x8b.toByte
@@ -78,11 +73,11 @@ object Sitemap {
 
   /** XML text of a possibly-gzipped sitemap body (see kernel). */
   def bodyText(body: Column): Column =
-    col(StaticInvoke(classOf[Sitemap.type], StringType, "bodyTextKernel",
-      Seq(ex(body)), Nil, propagateNull = true, returnNullable = true))
+    Kernel(classOf[Sitemap.type], "bodyTextKernel", StringType,
+      returnNullable = true)(body)
 
   /** Gzip a UTF-8 string column (fixture side). */
   def gzipUtf8(s: Column): Column =
-    col(StaticInvoke(classOf[Sitemap.type], BinaryType, "gzipUtf8Kernel",
-      Seq(ex(s)), Nil, propagateNull = true, returnNullable = true))
+    Kernel(classOf[Sitemap.type], "gzipUtf8Kernel", BinaryType,
+      returnNullable = true)(s)
 }

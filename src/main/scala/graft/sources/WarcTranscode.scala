@@ -1,9 +1,7 @@
 package graft.sources
 
+import graft.functions.Kernel
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftSqlBridge
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BooleanType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -34,9 +32,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * corrupt-record contract at the character-encoding layer).
   */
 object WarcTranscode {
-
-  private def col(e: Expression): Column = GraftSqlBridge.column(e)
-  private def ex(c: Column): Expression = GraftSqlBridge.expression(c)
 
   /** Reason labels, in precedence order. */
   val ReasonUnsupported = "unsupported_charset"
@@ -221,18 +216,16 @@ object WarcTranscode {
 
   /** Sniffed charset of an unlabeled body column (see kernel docs). */
   def sniffedCharset(body: Column): Column =
-    col(StaticInvoke(classOf[WarcTranscode.type], StringType,
-      "sniffCharsetKernel", Seq(ex(body)), Nil, propagateNull = true,
-      returnNullable = true))
+    Kernel(classOf[WarcTranscode.type], "sniffCharsetKernel", StringType,
+      returnNullable = true)(body)
 
   /** UTF-8 text of an unlabeled body via the WHATWG sniff. NULL only for
     * a NULL body or a BOM-labeled body whose payload contradicts the BOM
     * (torn multi-byte tail).
     */
   def sniffedText(body: Column): Column =
-    col(StaticInvoke(classOf[WarcTranscode.type], StringType,
-      "sniffDecodeKernel", Seq(ex(body)), Nil, propagateNull = true,
-      returnNullable = true))
+    Kernel(classOf[WarcTranscode.type], "sniffDecodeKernel", StringType,
+      returnNullable = true)(body)
 
   // ---- column surface -----------------------------------------------------
 
@@ -252,15 +245,13 @@ object WarcTranscode {
     * charset or non-conforming bytes (see [[failReason]]).
     */
   def utf8Text(body: Column, charset: Column): Column =
-    col(StaticInvoke(classOf[WarcTranscode.type], StringType, "decodeKernel",
-      Seq(ex(body), ex(effective(charset))), Nil, propagateNull = true,
-      returnNullable = true))
+    Kernel(classOf[WarcTranscode.type], "decodeKernel", StringType,
+      returnNullable = true)(body, effective(charset))
 
   /** True when the JVM can decode the (effective) charset label. */
   def charsetSupported(charset: Column): Column =
-    col(StaticInvoke(classOf[WarcTranscode.type], BooleanType,
-      "charsetSupportedKernel", Seq(ex(effective(charset))), Nil,
-      propagateNull = true, returnNullable = false))
+    Kernel(classOf[WarcTranscode.type], "charsetSupportedKernel",
+      BooleanType)(effective(charset))
 
   /** Why [[utf8Text]] is NULL: `unsupported_charset` / `undecodable` /
     * NULL (decoded fine). Countable map-side, the damage-audit column.

@@ -62,25 +62,38 @@ object Validator {
     * comparisons): expectation, n_rows, n_pass, mostly_pct, success.
     */
   def validate(df: DataFrame, expectations: Seq[Expectation]): DataFrame = {
-    val counters = count(lit(1)).as("n_rows") +:
+    val counters = counterColumns(expectations)
+    df.agg(counters.head, counters.tail: _*)
+      .select(expectationRows(expectations).as("r"))
+      .select("r.*")
+      .withColumn("success", success)
+  }
+
+  /** The one-pass counters: `n_rows`, then `_pass_i` per expectation. */
+  private[validation] def counterColumns(expectations: Seq[Expectation])
+      : Seq[Column] =
+    count(lit(1)).as("n_rows") +:
       expectations.zipWithIndex.map {
         case (u: Unique, i) => countDistinct(u.column).as(s"_pass_$i")
         case (e, i) => sum(when(e.passCond, 1L).otherwise(0L)).as(s"_pass_$i")
       }
-    val one = df.agg(counters.head, counters.tail: _*)
-    val rows = expectations.zipWithIndex.map { case (e, i) =>
+
+  /** One (expectation, n_rows, n_pass, mostly_pct) row per expectation,
+    * exploded from the counter row.
+    */
+  private[validation] def expectationRows(expectations: Seq[Expectation])
+      : Column =
+    explode(array(expectations.zipWithIndex.map { case (e, i) =>
       struct(
         lit(e.name).as("expectation"),
         col("n_rows"),
         col(s"_pass_$i").as("n_pass"),
         lit(e.mostlyPct).as("mostly_pct"))
-    }
-    one
-      .select(explode(array(rows: _*)).as("r"))
-      .select("r.*")
-      .withColumn("success",
-        col("n_pass") * 100 >= col("mostly_pct").cast("long") * col("n_rows"))
-  }
+    }: _*))
+
+  /** An expectation holds when ≥ mostly_pct% of its rows pass. */
+  private[validation] val success: Column =
+    col("n_pass") * 100 >= col("mostly_pct").cast("long") * col("n_rows")
 
   /** Render a validation result as a compact JSON report string (the
     * engine-side analog of the reference's HTML report email).
@@ -214,25 +227,14 @@ object StreamValidator {
     require(!expectations.exists(_.isInstanceOf[Unique]),
       "streaming validation supports row-predicate expectations only " +
         "(a DISTINCT counter cannot be maintained incrementally)")
-    val counters = count(lit(1)).as("n_rows") +:
-      expectations.zipWithIndex.map { case (e, i) =>
-        sum(when(e.passCond, 1L).otherwise(0L)).as(s"_pass_$i")
-      }
-    val rows = expectations.zipWithIndex.map { case (e, i) =>
-      struct(
-        lit(e.name).as("expectation"),
-        col("n_rows"),
-        col(s"_pass_$i").as("n_pass"),
-        lit(e.mostlyPct).as("mostly_pct"))
-    }
+    val counters = Validator.counterColumns(expectations)
     stream
       .withWatermark(tsCol, watermarkDelay)
       .groupBy(window(col(tsCol), windowDur).as("w"))
       .agg(counters.head, counters.tail: _*)
       .select(col("w.start").as("window_start"),
-        explode(array(rows: _*)).as("r"))
+        Validator.expectationRows(expectations).as("r"))
       .select(col("window_start"), col("r.*"))
-      .withColumn("success",
-        col("n_pass") * 100 >= col("mostly_pct").cast("long") * col("n_rows"))
+      .withColumn("success", Validator.success)
   }
 }

@@ -380,7 +380,7 @@ class EtlSpec extends SparkSpec {
     val out = df.select(TextClean.cleanChain(col("t")).as("c"))
       .as[String].head()
     assert(out == "Hi mail me at <EMAIL> now", s"got '$out'")
-    val nfc = df.select(TextClean.nfc(lit("é"))).as[String].head()
+    val nfc = df.select(F.nfc(lit("é"))).as[String].head()
     assert(nfc == "é", "combining acute must compose to é")
   }
 

@@ -58,8 +58,47 @@ class ExtensionsSpec extends SparkSpec {
   test("the session-extensions injector wires the same builder table") {
     val ext = new SparkSessionExtensions
     new GraftExtensions().apply(ext) // must inject all builders without throwing
-    assert(GraftFunctions.builders.map(_._1).distinct.size ==
+    assert(GraftFunctions.builders.map(_.name).distinct.size ==
       GraftFunctions.builders.size)
+  }
+
+  test("DESCRIBE FUNCTION reports a graft function's usage and kernel class") {
+    GraftFunctions.register(spark)
+    val lines = spark.sql("DESCRIBE FUNCTION graft_html_text")
+      .as[String].collect().toSeq
+    assert(lines.contains("Class: graft.functions.HtmlText$"), lines)
+    assert(lines.contains("Usage: visible text of an HTML string " +
+      "(tags/script/style/head stripped, entities decoded, one line per " +
+      "block)"), lines)
+  }
+
+  test("graft_html_text, graft_url_canon and graft_html_main equal their DataFrame functions") {
+    import graft.functions.{HtmlText, UrlNorm}
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.functions.{col, expr}
+    GraftFunctions.register(spark)
+    val rows = Seq(
+      Some("<html><head><title>T</title></head><body><p>Main paragraph " +
+        "text here.</p><p><a href='x'>nav</a></p>short</body></html>"),
+      Some("HTTP://Example.COM:80/a/./b/../c?q=1#frag"),
+      Some("https://example.com/%7euser/"),
+      Some("relative/path"),
+      None).toDF("s")
+    val cases: Seq[(String, String, Column)] = Seq(
+      ("graft_html_text", "graft_html_text(s)", HtmlText.extract(col("s"))),
+      ("graft_url_canon", "graft_url_canon(s)", UrlNorm.canonicalize(col("s"))),
+      ("graft_html_main", "graft_html_main(s, 50, 12)",
+        HtmlText.mainContent(col("s"), 50, 12)))
+    cases.foreach { case (name, sql, df) =>
+      val got = rows.select(col("s"), expr(sql).as("sql"), df.as("df"))
+        .as[(Option[String], Option[String], Option[String])].collect()
+      assert(got.length == 5, name)
+      got.foreach { case (s, viaSql, viaDf) =>
+        assert(viaSql == viaDf, s"$name($s)")
+        if (s.isEmpty) assert(viaSql.isEmpty, s"$name(NULL)")
+      }
+      assert(got.exists(_._2.isDefined), s"$name returned only NULLs")
+    }
   }
 
   test("roman round-trip elimination removes the codec calls and preserves semantics") {
