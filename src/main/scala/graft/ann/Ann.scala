@@ -1,9 +1,11 @@
 package graft.ann
 
+import graft.etl.Rounds
 import graft.functions.F
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DecimalType
 
 /** Approximate-nearest-neighbor search over an embedding column.
   * Baseline: brute-force cosine top-k with the query set broadcast (the
@@ -296,34 +298,37 @@ object PqAnn {
         struct(F.l2sq(col("n_sub"), col("c_sub")).as("d"),
           col("code").as("c"))).as("code"))
 
+  /** One exact-decimal Lloyd update (also [[graft.dedup.SemDedup.refine]]'s):
+    * each centroid of `cents` (keys…, centCol) moves to the per-dimension
+    * mean of its `members` (keys…, vecCol), accumulated in DECIMAL(27,9)
+    * and cast back to float — BYTE-IDENTICAL across partitionings (a
+    * double mean is merge-order-dependent). Memberless centroids stay.
+    */
+  private[graft] def lloydUpdate(cents: DataFrame, members: DataFrame,
+      keys: Seq[String], vecCol: String, centCol: String): DataFrame = {
+    val k = keys.map(col)
+    val means = members
+      .select(k :+ posexplode(col(vecCol)).as(Seq("di", "x")): _*)
+      .groupBy(k :+ col("di"): _*)
+      .agg((sum(col("x").cast(DecimalType(27, 9))) / count(lit(1)))
+        .cast("float").as("cx"))
+      .groupBy(k: _*)
+      .agg(transform(array_sort(collect_list(struct(col("di"), col("cx")))),
+        s => s.getField("cx")).as("_mean"))
+    cents.join(means, keys, "left")
+      .select(k :+ coalesce(col("_mean"), col(centCol)).as(centCol): _*)
+  }
+
   /** Deterministic Lloyd refinement: assign every subvector to its nearest
-    * centroid, recompute centroids as per-dimension means, repeat. Means
-    * accumulate in DECIMAL(27,9) — exact and associative — then divide and
-    * cast back to float, so the refined codebook is BYTE-IDENTICAL across
-    * partitionings/core counts (a plain double mean is merge-order-
-    * dependent, which would break the engine's reproducibility guarantee).
-    * Codes that lose all members keep their previous centroid.
+    * centroid and move each centroid to its members' mean
+    * ([[lloydUpdate]]), for `iters` [[graft.etl.Rounds]] rounds.
     */
   private def refineFromSubs(subs: DataFrame, cb0: DataFrame,
-      iters: Int): DataFrame = {
-    var cb = cb0
-    for (_ <- 1 to iters) {
-      val means = subs.join(assign(subs, cb), Seq("nid", "sub"))
-        .select(col("sub"), col("code"),
-          posexplode(col("n_sub")).as(Seq("di", "x")))
-        .groupBy(col("sub"), col("code"), col("di"))
-        .agg((sum(col("x").cast(org.apache.spark.sql.types.DecimalType(27, 9)))
-          / count(lit(1))).cast("float").as("cx"))
-        .groupBy(col("sub"), col("code"))
-        .agg(transform(array_sort(collect_list(struct(col("di"), col("cx")))),
-          s => s.getField("cx")).as("new_sub"))
-      cb = cb.join(means, Seq("sub", "code"), "left")
-        .select(col("sub"), col("code"),
-          coalesce(col("new_sub"), col("c_sub")).as("c_sub"))
-        .localCheckpoint(true) // truncate the per-iteration plan growth
-    }
-    cb
-  }
+      iters: Int): DataFrame =
+    Rounds.run(cb0, iters) { (cb, _) =>
+      lloydUpdate(cb, subs.join(assign(subs, cb), Seq("nid", "sub")),
+        Seq("sub", "code"), "n_sub", "c_sub")
+    }.last
 
   /** Public codebook surface (unpersisted one-shot build). */
   def codebook(corpus: DataFrame, m: Int, ksub: Int, dim: Int,
@@ -360,8 +365,8 @@ object PqAnn {
     val subs = subvectors(corpus, m, dim / m, "nid", idCol, vecCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val cb0 = codebookFromSubs(subs, ksub)
-    val cbLazy = if (lloydIters > 0) refineFromSubs(subs, cb0, lloydIters) else cb0
-    val cb = cbLazy.localCheckpoint(true)
+    val cb = if (lloydIters > 0) refineFromSubs(subs, cb0, lloydIters)
+      else cb0.localCheckpoint(true)
     val codes = assign(subs, cb).localCheckpoint(true)
     subs.unpersist(false)
     (cb, codes)

@@ -1,6 +1,7 @@
 package graft.ann
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.etl.Rounds
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.functions._
 
 /** Distributed PCA by exact power iteration — the embedding-prep step
@@ -103,21 +104,17 @@ object Pca {
   /** `iters` exact power steps from v₀ = 1 over the normalized Gram:
     * returns (k, v) with |v| < 10⁶.
     */
-  private def powerLoop(g: DataFrame, iters: Int): DataFrame = {
-    var v: DataFrame = g.select(col("k")).distinct()
-      .select(col("k"), lit(1L).as("v"))
-    var t = 0
-    while (t < iters) {
-      val w = g.join(broadcast(v), Seq("k"))
-        .groupBy(col("j")).agg(sum(col("g") * col("v")).as("w"))
-      val dv = w.agg(max(abs(col("w"))).as("mx"))
-        .select((fdiv(col("mx"), lit(LoadScale)) + 1L).as("d"))
-      v = w.crossJoin(broadcast(dv))
-        .select(col("j").as("k"), fdiv(col("w"), col("d")).as("v"))
-      t += 1
+  private def powerLoop(g: DataFrame, iters: Int): DataFrame =
+    (1 to iters).foldLeft(
+        g.select(col("k")).distinct().select(col("k"), lit(1L).as("v"))) {
+      (v, _) =>
+        val w = g.join(broadcast(v), Seq("k"))
+          .groupBy(col("j")).agg(sum(col("g") * col("v")).as("w"))
+        val dv = w.agg(max(abs(col("w"))).as("mx"))
+          .select((fdiv(col("mx"), lit(LoadScale)) + 1L).as("d"))
+        w.crossJoin(broadcast(dv))
+          .select(col("j").as("k"), fdiv(col("w"), col("d")).as("v"))
     }
-    v
-  }
 
   /** One-row (rayleigh) gauge of the component over the normalized
     * Gram — λ ≈ vᵀGv/vᵀv in the CURRENT Gram's cell units: num =
@@ -175,7 +172,9 @@ object Pca {
     * 1-based, loading_x1e6, rayleigh.
     *
     * The deflation loop is driver-side over nComponents (≤ d, tiny);
-    * each round touches only the d²-row Gram frame.
+    * each round touches only the d²-row Gram frame, and the deflated
+    * Grams are [[graft.etl.Rounds]] rounds. Only the loadings and
+    * gauges the result reads stay stored.
     */
   def topComponents(embeddings: DataFrame, idCol: String, vecCol: String,
       nComponents: Int = 2, iters: Int = 2): DataFrame = {
@@ -187,38 +186,39 @@ object Pca {
     require(nComponents <= 6,
       s"nComponents must be <= 6 (the 64^(c-1) gauge re-scale overflows " +
         s"and precision fades ~64x per round), got $nComponents")
-    var g = scaledGram(milliExploded(embeddings, idCol, vecCol))
-    var out: DataFrame = null
-    var c = 1
+    val g1 = scaledGram(milliExploded(embeddings, idCol, vecCol))
+    val comps = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var scaleBack = 1L // 64^(c-1): round-gauge → first-round units
-    while (c <= nComponents) {
-      val v = powerLoop(g, iters).localCheckpoint(true) // d rows
-      val ray = rayleighOf(g, v).localCheckpoint(true)  // 1 row
-      val comp = v.select(lit(c.toLong).as("comp"),
+    // the next component's stored loadings (d rows) and gauge (1 row)
+    def component(g: DataFrame): (DataFrame, DataFrame) = {
+      val v = powerLoop(g, iters).localCheckpoint(true)
+      val ray = rayleighOf(g, v).localCheckpoint(true)
+      comps += v.select(lit(comps.size + 1L).as("comp"),
         col("k").cast("long").as("dim"), col("v").as("loading_x1e6"))
         .crossJoin(broadcast(ray.select(
           (col("rayleigh") * scaleBack).as("rayleigh"))))
-      out = if (out == null) comp else out.union(comp)
-      if (c < nComponents) {
-        val pdiv = v.agg(sum(col("v") * col("v")).as("vv"))
-          .select((fdiv(col("vv"), lit(GramScale)) + 1L).as("pdiv"))
-        val proj = v.select(col("k").as("j"), col("v").as("va"))
-          .crossJoin(v.select(col("k"), col("v").as("vb")))
-          .crossJoin(broadcast(pdiv))
-          .select(col("j"), col("k"),
-            fdiv(col("va") * col("vb"), col("pdiv")).as("p"))
-        g = g.join(proj, Seq("j", "k"))
-          .crossJoin(broadcast(ray))
-          .select(col("j"), col("k"),
-            fdiv(col("g") - fdiv(col("rayleigh") *
-              fdiv(col("p"), lit(1000L)), lit(1000000L)),
-              lit(DeflateDiv)).as("g"))
-          .localCheckpoint(true) // d² rows
-        scaleBack *= DeflateDiv
-      }
-      c += 1
+      (v, ray)
     }
-    out
+    val last = Rounds.run(g1, nComponents - 1) { (g, _) =>
+      val (v, ray) = component(g)
+      val pdiv = v.agg(sum(col("v") * col("v")).as("vv"))
+        .select((fdiv(col("vv"), lit(GramScale)) + 1L).as("pdiv"))
+      val proj = v.select(col("k").as("j"), col("v").as("va"))
+        .crossJoin(v.select(col("k"), col("v").as("vb")))
+        .crossJoin(broadcast(pdiv))
+        .select(col("j"), col("k"),
+          fdiv(col("va") * col("vb"), col("pdiv")).as("p"))
+      scaleBack *= DeflateDiv
+      g.join(proj, Seq("j", "k"))
+        .crossJoin(broadcast(ray))
+        .select(col("j"), col("k"),
+          fdiv(col("g") - fdiv(col("rayleigh") *
+            fdiv(col("p"), lit(1000L)), lit(1000000L)),
+            lit(DeflateDiv)).as("g"))
+    }.last
+    component(last)
+    Seq(g1, last).foreach(GraftSqlBridge.unpersistCheckpoints)
+    comps.reduce(_ union _)
   }
 
   /** The "all-but-the-top" TRANSFORM itself (VERDICT r16 next-task 6 —

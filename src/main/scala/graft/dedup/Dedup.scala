@@ -1,8 +1,10 @@
 package graft.dedup
 
+import graft.etl.Rounds
 import graft.functions.F
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Deduplication operators for document corpora. Four families:
   * exact (hash groupBy), MinHash+LSH, SimHash, and embedding-cosine —
@@ -100,19 +102,26 @@ object MinHashDedup {
     val pairs = DedupInternals
       .distinctBucketPairs(bucketed, Seq("band", "bucket"), "id", maxBucket)
     val s = sigs.select(col("id"), col("sig"))
-    pairs
+    estimated(pairs
       .join(s.select(col("id").as("id_a"), col("sig").as("sig_a")), "id_a")
-      .join(s.select(col("id").as("id_b"), col("sig").as("sig_b")), "id_b")
+      .join(s.select(col("id").as("id_b"), col("sig").as("sig_b")), "id_b"),
+      "sig_a", "sig_b", numPerms, minJaccardPct)
+      .select("id_a", "id_b", "est_jaccard_pct")
+  }
+
+  /** `pairs` with `est_jaccard_pct` (the share of signature positions
+    * where `sigA` and `sigB` agree), kept at or above `minJaccardPct`. */
+  private def estimated(pairs: DataFrame, sigA: String, sigB: String,
+      numPerms: Int, minJaccardPct: Int): DataFrame =
+    pairs
       .withColumn("eq_positions",
         aggregate(
-          zip_with(col("sig_a"), col("sig_b"),
+          zip_with(col(sigA), col(sigB),
             (a, b) => when(a === b, 1L).otherwise(0L)),
           lit(0L), (acc, x) => acc + x))
       .withColumn("est_jaccard_pct",
         (col("eq_positions") * 100 / numPerms).cast("long"))
       .where(col("est_jaccard_pct") >= minJaccardPct)
-      .select("id_a", "id_b", "est_jaccard_pct")
-  }
 
   /** Incremental probe: candidate pairs between NEW documents and an
     * EXISTING signature index — the production shape at 100 TB, where
@@ -165,16 +174,8 @@ object MinHashDedup {
       .select("id_new", "id_idx").distinct()
     val nSig = newSigs.select(col("id").as("id_new"),
       col("sig").as("sig_new"))
-    cand
-      .join(nSig, "id_new").join(iSig, "id_idx")
-      .withColumn("eq_positions",
-        aggregate(
-          zip_with(col("sig_new"), col("sig_idx"),
-            (a, b) => when(a === b, 1L).otherwise(0L)),
-          lit(0L), (acc, x) => acc + x))
-      .withColumn("est_jaccard_pct",
-        (col("eq_positions") * 100 / numPerms).cast("long"))
-      .where(col("est_jaccard_pct") >= minJaccardPct)
+    estimated(cand.join(nSig, "id_new").join(iSig, "id_idx"),
+      "sig_new", "sig_idx", numPerms, minJaccardPct)
       .select("id_new", "id_idx", "est_jaccard_pct")
   }
 
@@ -232,15 +233,7 @@ object MinHashDedup {
     }
     reset(s"${tableBase}_buckets")
     reset(s"${tableBase}_sigs")
-    sigs.select(col("id"),
-        posexplode(col("buckets")).as(Seq("band", "bucket")))
-      .write.mode("overwrite")
-      .bucketBy(numBuckets, "band", "bucket").sortBy("band", "bucket")
-      .format("parquet").saveAsTable(s"${tableBase}_buckets")
-    sigs.select(col("id"), col("sig"))
-      .write.mode("overwrite")
-      .bucketBy(numBuckets, "id").sortBy("id")
-      .format("parquet").saveAsTable(s"${tableBase}_sigs")
+    writeIndexTables(sigs, tableBase, numBuckets, "overwrite")
     // an in-place rebuild reuses the same warehouse paths, and the
     // session's file-status cache can serve the OLD listing to the next
     // probe — refresh both tables so a rebuild is immediately visible
@@ -263,14 +256,19 @@ object MinHashDedup {
     * which is the behavior we want).
     */
   def absorbIndex(sigs: DataFrame, tableBase: String,
-      numBuckets: Int = 32): Unit = {
+      numBuckets: Int = 32): Unit =
+    writeIndexTables(sigs, tableBase, numBuckets, "append")
+
+  /** The two bucketed index tables of [[writeIndex]], written in `mode`. */
+  private def writeIndexTables(sigs: DataFrame, tableBase: String,
+      numBuckets: Int, mode: String): Unit = {
     sigs.select(col("id"),
         posexplode(col("buckets")).as(Seq("band", "bucket")))
-      .write.mode("append")
+      .write.mode(mode)
       .bucketBy(numBuckets, "band", "bucket").sortBy("band", "bucket")
       .format("parquet").saveAsTable(s"${tableBase}_buckets")
     sigs.select(col("id"), col("sig"))
-      .write.mode("append")
+      .write.mode(mode)
       .bucketBy(numBuckets, "id").sortBy("id")
       .format("parquet").saveAsTable(s"${tableBase}_sigs")
   }
@@ -542,10 +540,10 @@ object DedupClusters {
     * list is stored once as a plan leaf
     * ([[org.apache.spark.sql.GraftSqlBridge.persistAsLeaf]]), so each
     * round's queries plan and render one scan instead of the pair list's
-    * whole lineage (for the corpus funnel, every upstream stage). Each
-    * round's labels are an eager `localCheckpoint`; round k-1's blocks
-    * are released once round k's change count has run, and the edge
-    * leaf once the loop ends — only the final labels stay stored.
+    * whole lineage (for the corpus funnel, every upstream stage). The
+    * label rounds run through [[graft.etl.Rounds]], whose stop test is
+    * the changed-row count; the edge leaf is freed once the loop ends,
+    * so only the final labels stay stored.
     *
     * Output: (id, component) for every id in `docs`, where component is
     * the smallest doc id reachable through pairs (singletons map to
@@ -554,7 +552,6 @@ object DedupClusters {
     */
   def connectedComponents(docs: DataFrame, idCol: String, pairs: DataFrame,
       maxIter: Int = 10, failOnMaxIter: Boolean = true): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     val edges = GraftSqlBridge.persistAsLeaf(
       pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
         .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst"))),
@@ -562,40 +559,28 @@ object DedupClusters {
     // Propagation runs ONLY over nodes that appear in a pair — near-dup
     // edges are sparse, so the iterated frames hold the duplicate
     // subgraph, not the corpus; singletons attach in one outer join at
-    // the end. Lineage MUST be truncated every round: without it each
-    // iteration's plan embeds the previous one twice (join + convergence
-    // check), so the logical tree doubles per round and planning itself
-    // blows up long before the data does. localCheckpoint materializes
-    // the round and restarts the plan from the stored blocks; a
-    // production run with preemptible executors would use reliable
-    // checkpoint() instead.
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("component", col("id"))
-      .localCheckpoint(true)
-    var iter = 0
-    var converged = false
-    while (iter < maxIter && !converged) {
+    // the end.
+    val res = Rounds.run(
+      edges.select(col("src").as("id")).distinct()
+        .withColumn("component", col("id")),
+      maxIter, storeInit = true,
+      stop = (next, prev, _) =>
+        next.join(prev.withColumnRenamed("component", "prev"), "id")
+          .where(col("component") =!= col("prev"))
+          .limit(1).count() == 0) { (labels, _) =>
       val viaNeighbor = edges
         .join(labels.withColumnRenamed("id", "dst"), "dst")
         .select(col("src").as("id"), col("component"))
-      val next = labels.unionByName(viaNeighbor)
+      labels.unionByName(viaNeighbor)
         .groupBy("id")
         .agg(min(col("component")).as("component"))
-        .localCheckpoint(true)
-      val changed = next.join(labels.withColumnRenamed("component", "prev"), "id")
-        .where(col("component") =!= col("prev"))
-        .limit(1).count()
-      GraftSqlBridge.unpersistCheckpoints(labels) // round k-1: done with it
-      labels = next
-      converged = changed == 0
-      iter += 1
     }
     GraftSqlBridge.unpersistCheckpoints(edges)
     // A non-fixpoint exit would silently return PARTIALLY-merged components
     // (any chain with diameter > maxIter) — that is data corruption for a
     // dedup keep-one-per-cluster consumer, so the default is to fail loudly;
     // opt out only for diagnostics on a known-pathological graph.
-    if (!converged) {
+    if (!res.stopped) {
       val msg = s"connectedComponents did not reach a fixpoint in $maxIter " +
         "iterations — labels are partially merged (graph diameter exceeds " +
         "maxIter); raise maxIter"
@@ -603,7 +588,7 @@ object DedupClusters {
       else org.slf4j.LoggerFactory.getLogger(getClass).warn(msg)
     }
     docs.select(col(idCol).as("id"))
-      .join(labels.withColumnRenamed("component", "_c"), Seq("id"), "left")
+      .join(res.last.withColumnRenamed("component", "_c"), Seq("id"), "left")
       .withColumn("component", coalesce(col("_c"), col("id")))
       .drop("_c")
   }

@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.etl.Rounds
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -74,14 +75,6 @@ import org.apache.spark.storage.StorageLevel
   */
 object ExactSubstr {
 
-  /** Big-frame checkpoint: eager (flat lineage) + serialized on disk —
-    * these frames are corpus-characters-sized and re-read at most a
-    * handful of times; pinning them deserialized in memory is what
-    * killed the r18 10× run.
-    */
-  private def ckptDisk(df: DataFrame): DataFrame =
-    df.localCheckpoint(true, StorageLevel.DISK_ONLY)
-
   /** (doc_id, off 1-based, r = char code) + (doc_id, len) frames. */
   private[dedup] def charPositions(docs: DataFrame, idCol: String,
       textCol: String): (DataFrame, DataFrame) = {
@@ -136,10 +129,20 @@ object ExactSubstr {
     LensStats(base, r.getLong(3), r.getLong(4))
   }
 
+  /** Per-doc partition key off the packed position: `doc_id · posBase`
+    * — pure arithmetic, no unpacking division (g and posBase are
+    * non-negative, so pmod is one `%`).
+    */
+  private def docBase(posBase: Long) =
+    col("g") - pmod(col("g"), lit(posBase))
+
   /** One prefix-doubling round: the level-(k−1) table (windows of
     * length `half`) → the level-k table (windows of length 2·half),
-    * eagerly checkpointed DISK_ONLY; the INPUT table is the caller's
-    * to release.
+    * as a lazy plan: [[rankAndLens]] and [[repetitionProfileFrom]] run
+    * it as a [[graft.etl.Rounds]] step, which stores each level
+    * DISK_ONLY (corpus-characters-sized, re-read a handful of times:
+    * held deserialized in memory they killed the r18 10× run) and frees
+    * the level before it.
     *
     * Two r19 kernel facts (OPTIMIZATION_r19.md §q176) replace the r18
     * round shape (self-join at distance `half` + distinct pairs +
@@ -165,13 +168,6 @@ object ExactSubstr {
     *     and equal level-k windows ⇔ equal (r, r2) halves ⇔ same
     *     group ⇔ same min position.
     */
-  /** Per-doc partition key off the packed position: `doc_id · posBase`
-    * — pure arithmetic, no unpacking division (g and posBase are
-    * non-negative, so pmod is one `%`).
-    */
-  private def docBase(posBase: Long) =
-    col("g") - pmod(col("g"), lit(posBase))
-
   private def nextRank(cur: DataFrame, half: Long, posBase: Long)
       : DataFrame = {
     require(half <= Int.MaxValue, s"round shift $half overflows lead()")
@@ -188,8 +184,8 @@ object ExactSubstr {
     // exchange canonicalizes identically on both, so ReusedExchange
     // ships it once; the whole round is ONE job with exactly two
     // exchanges, and peak live frames drop to two (cur + out)
-    ckptDisk(paired.join(reps, Seq("r", "r2"))
-      .select(col("g"), col("nr").as("r")))
+    paired.join(reps, Seq("r", "r2"))
+      .select(col("g"), col("nr").as("r"))
   }
 
   /** The lazy (un-checkpointed) plan of one duplicated-window probe —
@@ -223,24 +219,17 @@ object ExactSubstr {
       textCol: String): DataFrame = {
     val (pos, _) = charPositions(docs, idCol, textCol)
     val posBase = 1000000L
-    val packed = pos.select(
-      (col("doc_id") * posBase + col("off")).as("g"), col("r"))
-    val w = Window.partitionBy(docBase(posBase)).orderBy(col("g"))
-    val paired = packed.select(col("g"), col("r"),
-      coalesce(lead(col("r"), 1).over(w), lit(-1L)).as("r2"))
-    val reps = paired.groupBy(col("r"), col("r2"))
-      .agg(min(col("g")).as("nr"))
-    paired.join(reps, Seq("r", "r2"))
-      .select(col("g"), col("nr").as("r"))
+    nextRank(pos.select(
+      (col("doc_id") * posBase + col("off")).as("g"), col("r")), 1L, posBase)
   }
 
   /** The level-`level` rank table (windows of length 2^level) plus the
-    * per-doc length frame, both persisted (rank table DISK_ONLY); every
-    * intermediate level is released as soon as the next is built. The
-    * returned pair is the caller's to release — or to MEMOIZE: the
-    * q175/q176/q178 family shares one level-⌊log₂ minLen⌋ build
-    * (VERDICT r18 task 4) instead of each query re-running the
-    * ⌈log₂ L⌉ shuffle rounds.
+    * per-doc length frame, both persisted (rank table DISK_ONLY). The
+    * levels are [[graft.etl.Rounds]] rounds, so each intermediate level
+    * is freed as soon as the next is stored. The returned pair is the
+    * caller's to release — or to MEMOIZE: the q175/q176/q178 family
+    * shares one level-⌊log₂ minLen⌋ build (VERDICT r18 task 4) instead
+    * of each query re-running the ⌈log₂ L⌉ shuffle rounds.
     */
   def rankAndLens(docs: DataFrame, idCol: String, textCol: String,
       level: Int): (DataFrame, DataFrame) = {
@@ -248,20 +237,14 @@ object ExactSubstr {
     val (pos, lens0) = charPositions(docs, idCol, textCol)
     val lens = lens0.localCheckpoint(true) // one row per doc — small
     val posBase = lensStatsOf(lens).posBase
-    // pack (doc_id, off) → g before the first checkpoint: every rank
-    // frame from here on is 16 B/row (see the scale-shape scaladoc)
-    var cur = ckptDisk(pos.select(
-      (col("doc_id") * posBase + col("off")).as("g"), col("r")))
-    var half = 1L
-    var k = 1
-    while (k <= level) {
-      val nxt = nextRank(cur, half, posBase)
-      GraftSqlBridge.unpersistCheckpoints(cur) // level k-1: done with it
-      cur = nxt
-      half *= 2
-      k += 1
+    // pack (doc_id, off) → g before the level-0 table is stored: every
+    // rank frame from here on is 16 B/row (see the scale-shape scaladoc)
+    val table = Rounds.run(pos.select(
+        (col("doc_id") * posBase + col("off")).as("g"), col("r")),
+      level, StorageLevel.DISK_ONLY, storeInit = true) { (cur, k) =>
+      nextRank(cur, 1L << k, posBase)
     }
-    (cur, lens)
+    (table.last, lens)
   }
 
   /** Starts of length-`win` windows that occur ≥ 2 times corpus-wide —
@@ -469,21 +452,15 @@ object ExactSubstr {
     }
 
     val rows = scala.collection.mutable.ArrayBuffer.empty[(Long, Row)]
-    if (levels.contains(baseLevel))
-      rows += ((1L << baseLevel, statsAt(baseLevel, base)))
-    val posBase = stats.posBase
-    var cur = base
-    var half = 1L << baseLevel
-    var k = baseLevel + 1
-    while (k <= levels.max) {
-      val nxt = nextRank(cur, half, posBase)
-      if (!(cur eq base)) GraftSqlBridge.unpersistCheckpoints(cur)
-      cur = nxt
-      half *= 2
-      if (levels.contains(k)) rows += ((half, statsAt(k, cur)))
-      k += 1
-    }
-    if (!(cur eq base)) GraftSqlBridge.unpersistCheckpoints(cur)
+    def record(level: Int, table: DataFrame): Unit =
+      if (levels.contains(level)) rows += ((1L << level, statsAt(level, table)))
+    val top = Rounds.run(base, levels.max - baseLevel,
+        StorageLevel.DISK_ONLY) { (cur, k) =>
+      record(baseLevel + k, cur)
+      nextRank(cur, 1L << (baseLevel + k), stats.posBase)
+    }.last
+    record(levels.max, top)
+    if (!(top eq base)) GraftSqlBridge.unpersistCheckpoints(top)
     if (releaseBase) {
       GraftSqlBridge.unpersistCheckpoints(base)
       GraftSqlBridge.unpersistCheckpoints(lens)

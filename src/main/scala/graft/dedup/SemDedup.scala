@@ -1,9 +1,10 @@
 package graft.dedup
 
+import graft.ann.PqAnn
+import graft.etl.Rounds
 import graft.functions.F
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** SemDeDup-style SEMANTIC deduplication (Abbas et al. 2023, arXiv
   * 2303.09540 — public): where q20's lexical near-dup finds byte-similar
@@ -42,7 +43,7 @@ import org.apache.spark.sql.types.DecimalType
   * mixed id hash (the IvfAnn.centroids rule — no RNG, no driver state);
   * Lloyd refinement accumulates per-dimension means in DECIMAL(27,9) —
   * exact, associative — then divides and casts back to float (the
-  * PqAnn.refineFromSubs rule on full vectors), so the trained centroids,
+  * PqAnn.lloydUpdate rule on full vectors), so the trained centroids,
   * the assignment, and therefore the kept set are BYTE-IDENTICAL across
   * partitionings and core counts (Round6Spec asserts it). Cells that lose
   * every member keep their previous centroid.
@@ -67,31 +68,21 @@ object SemDedup {
   /** `iters` exact-decimal Lloyd refinements of a CALLER-SUPPLIED
     * (cid, c_vec) codebook — the training loop factored out of
     * [[centroids]] so a fixed/external init is refinable in isolation
-    * (the q84c oracle replays one iteration of exactly this). Means
-    * accumulate in DECIMAL(27,9) then cast back to float — byte-
-    * identical across partitionings; cells that lose every member keep
-    * their previous centroid.
+    * (the q84c oracle replays one iteration of exactly this). Each
+    * iteration is one [[graft.etl.Rounds]] round of the exact-decimal
+    * update [[graft.ann.PqAnn.lloydUpdate]] — byte-identical across
+    * partitionings; cells that lose every member keep their previous
+    * centroid.
     */
   def refine(corpus: DataFrame, init: DataFrame, iters: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      probe: Int = 0): DataFrame = {
-    var cents = init
-    for (_ <- 1 to iters) {
-      val means = assignBest(corpus, cents, idCol, vecCol, probe)
-        .select(col("cell"), posexplode(col("n_vec")).as(Seq("di", "x")))
-        .groupBy(col("cell"), col("di"))
-        .agg((sum(col("x").cast(DecimalType(27, 9))) / count(lit(1)))
-          .cast("float").as("cx"))
-        .groupBy(col("cell"))
-        .agg(transform(array_sort(collect_list(struct(col("di"), col("cx")))),
-          s => s.getField("cx")).as("m_vec"))
-      cents = cents
-        .join(means, cents("cid") === means("cell"), "left")
-        .select(col("cid"), coalesce(col("m_vec"), col("c_vec")).as("c_vec"))
-        .localCheckpoint(true) // truncate the per-iteration plan growth
-    }
-    cents
-  }
+      probe: Int = 0): DataFrame =
+    Rounds.run(init, iters) { (cents, _) =>
+      PqAnn.lloydUpdate(cents,
+        assignBest(corpus, cents, idCol, vecCol, probe)
+          .select(col("cell").as("cid"), col("n_vec")),
+        Seq("cid"), "n_vec", "c_vec")
+    }.last
 
   /** Assignment dispatch: `probe == 0` → exact flat argmax ([[assign]]);
     * `probe > 0` → two-level coarse quantizer ([[assignProbed]]). Both

@@ -164,15 +164,21 @@ object CodeCorrection {
       prefixLen: Int, validPrefixes: Seq[String], outCode: String = "code",
       outStatus: String = "status"): DataFrame = {
     val rawEmpty = codeCol.isNull || length(trim(codeCol)) === 0
-    val filled = when(rawEmpty, fallback).otherwise(codeCol)
+    val (padded, invalid) = padAndCheck(
+      when(rawEmpty, fallback).otherwise(codeCol), width, prefixLen,
+      validPrefixes)
+    val status = invalid.when(rawEmpty, Matched).otherwise(Ok)
+    df.withColumn(outCode, padded).withColumn(outStatus, status)
+  }
+
+  /** Steps 2 and 3 of [[classify]]: the padded code, and its Unknown /
+    * Unknown2 status branches for the caller to chain onto. */
+  private def padAndCheck(filled: Column, width: Int, prefixLen: Int,
+      validPrefixes: Seq[String]): (Column, Column) = {
     val padded = when(length(filled) === width - 1, concat(lit("0"), filled))
       .otherwise(filled)
     val prefixOk = substring(padded, 1, prefixLen).isin(validPrefixes: _*)
-    val status = when(padded.isNull, Unknown)
-      .when(!prefixOk, Unknown2)
-      .when(rawEmpty, Matched)
-      .otherwise(Ok)
-    df.withColumn(outCode, padded).withColumn(outStatus, status)
+    (padded, when(padded.isNull, Unknown).when(!prefixOk, Unknown2))
   }
 
   val MatchedByName = "MatchedByName"
@@ -217,11 +223,9 @@ object CodeCorrection {
         when(!rawEmpty, col("_raw"))
           .when(!fbEmpty, col("_fb"))
           .otherwise(col("_byname")))
-    val padded = when(length(col("_filled")) === width - 1,
-      concat(lit("0"), col("_filled"))).otherwise(col("_filled"))
-    val prefixOk = substring(padded, 1, prefixLen).isin(validPrefixes: _*)
-    val status = when(padded.isNull, Unknown)
-      .when(!prefixOk, Unknown2)
+    val (padded, invalid) =
+      padAndCheck(col("_filled"), width, prefixLen, validPrefixes)
+    val status = invalid
       .when(!rawEmpty, Ok)
       .when(!fbEmpty, Matched)
       .otherwise(MatchedByName)

@@ -24,11 +24,12 @@ import org.apache.spark.sql.functions._
   * Algorithm: PATH DOUBLING — `k` self-joins resolve `2^k` hops
   * (`f ∘ f` each round on the partial function; a row whose target has
   * no outgoing edge carries forward unchanged), so the default 8-hop
-  * bound costs THREE joins, not eight iterations. A source is
-  * `resolved` iff its final target is not itself a redirect source —
-  * anything still redirecting after `≥ maxHops` hops is a loop or an
-  * over-limit chain, reported unresolved with a NULL hop count (a hop
-  * count along an unterminated walk is meaningless).
+  * bound costs THREE joins, not eight iterations, each a stored
+  * [[Rounds]] round (a lazy self-join plan would double per round). A
+  * source is `resolved` iff its final target is not itself a redirect
+  * source — anything still redirecting after `≥ maxHops` hops is a loop
+  * or an over-limit chain, reported unresolved with a NULL hop count (a
+  * hop count along an unterminated walk is meaningless).
   *
   * Scale shape: the winner selection is ONE narrow shuffle keyed by
   * source (a per-key top-1 window — map-side group-limit pushdown keeps
@@ -36,8 +37,8 @@ import org.apache.spark.sql.functions._
   * (url, url, hops) rows keyed by URL; log₂(maxHops) shuffle rounds
   * total, each a plain equi-join AQE can re-plan (a viral consent-page
   * target skews one key — narrow rows + AQE skew split keep it
-  * bounded). No iteration-to-fixpoint, no driver loop over data: the
-  * round count is fixed by `maxHops` alone.
+  * bounded). No iteration-to-fixpoint: the round count is fixed by
+  * `maxHops` alone.
   */
 object Redirects {
 
@@ -62,16 +63,15 @@ object Redirects {
       .withColumn("_rn", row_number().over(w))
       .where(col("_rn") === 1)
 
-    var f = functional.select(col(srcCol).as("src"),
-      col(dstCol).as("dst"), lit(1L).as("hops"))
-    for (_ <- 1 to rounds) {
+    val f = Rounds.run(functional.select(col(srcCol).as("src"),
+        col(dstCol).as("dst"), lit(1L).as("hops")), rounds) { (f, _) =>
       val g = f.select(col("src").as("g_src"), col("dst").as("g_dst"),
         col("hops").as("g_hops"))
-      f = f.join(g, f("dst") === g("g_src"), "left")
-        .select(f("src"),
-          coalesce(col("g_dst"), f("dst")).as("dst"),
-          (f("hops") + coalesce(col("g_hops"), lit(0L))).as("hops"))
-    }
+      f.join(g, col("dst") === col("g_src"), "left")
+        .select(col("src"),
+          coalesce(col("g_dst"), col("dst")).as("dst"),
+          (col("hops") + coalesce(col("g_hops"), lit(0L))).as("hops"))
+    }.last
     val stillRedirecting = edges
       .select(col(srcCol).as("dst")).distinct()
       .withColumn("still", lit(true))

@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.etl.Rounds
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -83,17 +84,18 @@ object Bpe {
     * applies distributed as a catalyst fold over the symbol arrays
     * (provably equivalent to the sequential left-to-right scan: the
     * merged token a+b can never equal a, so a fold never re-merges
-    * within a pass). Lineage truncates per iteration (localCheckpoint —
-    * the PqAnn.refine discipline), so cost is nMerges × (one narrow
-    * shuffle + a one-row collect). [[train]] (the bounded hash-sample)
-    * stays the fast default; this is the exact path. Tie-breaks compare
-    * Spark UTF-8 binary order, which equals Java's String order on the
-    * ASCII-ranged symbols BPE produces from lower-cased corpus text
-    * (parity spec-pinned in BpeSpec).
+    * within a pass). The rewritten word frames are [[graft.etl.Rounds]]
+    * rounds whose stop test is the next merge's collect, so cost is
+    * nMerges × (one narrow shuffle + a one-row collect), and nothing
+    * stays stored once the merges are returned. [[train]] (the bounded
+    * hash-sample) stays the fast default; this is the exact path.
+    * Tie-breaks compare Spark UTF-8 binary order, which equals Java's
+    * String order on the ASCII-ranged symbols BPE produces from
+    * lower-cased corpus text (parity spec-pinned in BpeSpec).
     */
   def trainDistributed(docs: DataFrame, idCol: String, textCol: String,
       nMerges: Int): Seq[(String, String)] = {
-    var wf = docs
+    val wf0 = docs
       .select(explode(split(lower(col(textCol)), "\\s+")).as("w"))
       .where(col("w") =!= "")
       .groupBy(col("w")).agg(count(lit(1)).as("n"))
@@ -102,10 +104,9 @@ object Bpe {
       .select(filter(split(col("w"), ""), s => s =!= "").as("syms"),
         col("n"))
       .localCheckpoint(true)
-    val merges = Seq.newBuilder[(String, String)]
-    var i = 0
-    var done = false
-    while (i < nMerges && !done) {
+    val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+    // records the next merge, if there is one
+    def nextMerge(wf: DataFrame): Boolean = {
       val zipped = transform(
         sequence(lit(1), size(col("syms")) - 1),
         i => struct(element_at(col("syms"), i).as("a"),
@@ -116,10 +117,14 @@ object Bpe {
         .agg(sum(col("n")).as("cnt"))
         .orderBy(col("cnt").desc, col("a"), col("b"))
         .limit(1).collect()
-      if (best.isEmpty) done = true
-      else {
-        val a = best(0).getString(0); val b = best(0).getString(1)
-        merges += ((a, b))
+      best.foreach(r => merges += ((r.getString(0), r.getString(1))))
+      best.nonEmpty
+    }
+    // a round applies the last merge found; its stop test finds the next
+    if (nMerges > 0 && nextMerge(wf0)) {
+      val last = Rounds.run(wf0, nMerges - 1,
+        stop = (next, _, _) => !nextMerge(next)) { (wf, _) =>
+        val (a, b) = merges.last
         // left-to-right non-overlapping merge as an array fold
         val rewritten = aggregate(col("syms"),
           array().cast("array<string>"),
@@ -127,11 +132,12 @@ object Bpe {
             size(acc) > 0 && element_at(acc, -1) === lit(a) && s === lit(b),
             concat(slice(acc, lit(1), size(acc) - 1), array(lit(a + b))))
             .otherwise(concat(acc, array(s))))
-        wf = wf.select(rewritten.as("syms"), col("n")).localCheckpoint(true)
-        i += 1
-      }
+        wf.select(rewritten.as("syms"), col("n"))
+      }.last
+      GraftSqlBridge.unpersistCheckpoints(last)
     }
-    merges.result()
+    GraftSqlBridge.unpersistCheckpoints(wf0)
+    merges.toList
   }
 
   /** Serialize merges for the kernel literal ("a b\nab c\n..."). */

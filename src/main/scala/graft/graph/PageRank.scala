@@ -1,7 +1,7 @@
 package graft.graph
 
-import graft.etl.Prefix
-import org.apache.spark.sql.DataFrame
+import graft.etl.{Prefix, Rounds}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.functions._
 
 /** Deterministic integer PageRank (Page/Brin/Motwani/Winograd 1999,
@@ -41,9 +41,10 @@ import org.apache.spark.sql.functions._
   * re-scans the raw edge source or re-runs the node-distinct shuffle;
   * each iteration is then exactly one src-keyed join (ranks are narrow
   * (node, long) rows) and one dst-keyed partial-aggregated shuffle —
-  * the canonical Pregel cadence expressed declaratively. Rank lineage
-  * truncates per iteration (the q37 CC-loop rule); nothing but counts
-  * ever reaches the driver.
+  * the canonical Pregel cadence expressed declaratively. The iterations
+  * are [[graft.etl.Rounds]] rounds, and the static frames are freed
+  * after the loop, so only the returned ranks stay stored; nothing but
+  * counts ever reaches the driver.
   *
   * Convergence: pass `tolMicro >= 0` to stop as soon as an iteration
   * moves no node by more than `tolMicro` micro-units (max |Δrank| —
@@ -97,31 +98,20 @@ object PageRank {
         ix.df.localCheckpoint(true), // static: no iteration re-sorts
         ix.totalCount))
     }
-    var r = nodes.select(col("node"), lit(1000000L).as("rank_micro"))
-    var it = 0
-    var converged = false
-    while (it < iters && !converged) {
-      val prev = r
-      r = iterate(nodes, eo, prev, dampMilli, redist)
-        .localCheckpoint(true) // truncate per-iteration lineage
-      if (tolMicro >= 0L && shouldProbe(it, iters)) {
-        // counts-only convergence probe: any node moved by > tolMicro?
-        // Probing is BATCHED past the early iterations (every iteration
-        // while it < ProbeDepth, then every ProbeEvery-th — VERDICT r7
-        // task 5): each probe is a driver action (~0.3 s at 32 shuffle
-        // partitions), so deep graphs shouldn't pay one per iteration.
-        // Skipped probes never change the RESULT at tolMicro = 0 — a
-        // fixed point stays fixed under further iterations, so any
-        // later probe observes the same convergence (Round7Spec's
-        // fixed-point equivalence gate covers this path) — they only
-        // trade a few extra cheap iterations for fewer driver actions.
-        val moved = r.join(prev.withColumnRenamed("rank_micro", "p"), "node")
-          .where(abs(col("rank_micro") - col("p")) > tolMicro)
-        converged = moved.isEmpty
-      }
-      it += 1
+    // counts-only convergence probe (any node moved by > tolMicro?) on
+    // the shouldProbe cadence: each probe is a driver action, and a
+    // skipped one never changes the result at tolMicro = 0 — a fixed
+    // point stays fixed, so a later probe sees the same convergence.
+    val res = Rounds.run(
+      nodes.select(col("node"), lit(1000000L).as("rank_micro")), iters,
+      stop = (r, prev, it) => tolMicro >= 0L && shouldProbe(it, iters) &&
+        r.join(prev.withColumnRenamed("rank_micro", "p"), "node")
+          .where(abs(col("rank_micro") - col("p")) > tolMicro).isEmpty) {
+      (r, _) => iterate(nodes, eo, r, dampMilli, redist)
     }
-    (r, it)
+    (Seq(nodes, eo) ++ redist.toSeq.flatMap(d => Seq(d.dangling, d.idx)))
+      .foreach(GraftSqlBridge.unpersistCheckpoints)
+    (res.last, res.rounds)
   }
 
   /** 1-based rank of each node id (`idx`, global ROW_NUMBER over id —

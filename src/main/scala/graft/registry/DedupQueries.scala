@@ -96,6 +96,15 @@ private[graft] object DedupQueries {
         .persist(StorageLevel.MEMORY_AND_DISK)
     }
 
+  /** The q19-verified pairs (Jaccard ≥ 50% over [[minhashCandidates]]),
+    * persisted and memoized per (session, sf): q37, q56 and q69 share them. */
+  private def verifiedPairs(s: SparkSession, dir: String): DataFrame =
+    memoized(s, s"vpairs|$dir") {
+      NgramJaccard.verify(Tables(s, dir).documents, minhashCandidates(s, dir),
+        "doc_id", "text", ShingleK, minJaccardPct = 50)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    }
+
   /** Word-2-shingle distinct sets in DuckDB, mirroring F.shingles(k=2). */
   private val duckShingleSets: String =
     """WITH t AS (SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS toks FROM documents),
@@ -866,12 +875,7 @@ private[graft] object DedupQueries {
     // pair list (hash-min propagation; oracle is a DuckDB recursive CTE)
     QueryDef("q37_dedup_clusters", (s, dir) => {
       val docs = Tables(s, dir).documents
-      val pairs = memoized(s, s"vpairs|$dir") {
-        NgramJaccard.verify(docs, minhashCandidates(s, dir),
-          "doc_id", "text", ShingleK, minJaccardPct = 50)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-      }
-      DedupClusters.connectedComponents(docs, "doc_id", pairs)
+      DedupClusters.connectedComponents(docs, "doc_id", verifiedPairs(s, dir))
     },
       oracle = Some(s"""WITH RECURSIVE t AS (
            |  SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS toks FROM documents
@@ -942,17 +946,13 @@ private[graft] object DedupQueries {
     // survivors → near-dup-cluster survivors
     QueryDef("q56_dedup_funnel", (s, dir) => {
       val docs = Tables(s, dir).documents
-      val pairs = memoized(s, s"vpairs|$dir") {
-        NgramJaccard.verify(docs, minhashCandidates(s, dir),
-          "doc_id", "text", ShingleK, minJaccardPct = 50)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-      }
       val raw = docs.agg(count(lit(1)).as("n_docs"))
         .withColumn("stage", lit("raw"))
       val exact = ExactDedup.groups(docs, "doc_id", "text")
         .agg(count(lit(1)).as("n_docs"))
         .withColumn("stage", lit("exact_dedup"))
-      val near = DedupClusters.connectedComponents(docs, "doc_id", pairs)
+      val near = DedupClusters.connectedComponents(docs, "doc_id",
+        verifiedPairs(s, dir))
         .agg(countDistinct(col("component")).as("n_docs"))
         .withColumn("stage", lit("near_dedup"))
       raw.unionByName(exact).unionByName(near).select("stage", "n_docs")
@@ -989,12 +989,8 @@ private[graft] object DedupQueries {
     // "which duplicate survives" policy; reuses the shared verified pairs
     QueryDef("q69_best_keeper", (s, dir) => {
       val docs = Tables(s, dir).documents
-      val pairs = memoized(s, s"vpairs|$dir") {
-        NgramJaccard.verify(docs, minhashCandidates(s, dir),
-          "doc_id", "text", ShingleK, minJaccardPct = 50)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-      }
-      val comps = DedupClusters.connectedComponents(docs, "doc_id", pairs)
+      val comps = DedupClusters.connectedComponents(docs, "doc_id",
+        verifiedPairs(s, dir))
       val q = docs.select(col("doc_id"),
         TextStats.qualityScore(col("text")).as("quality"))
       comps.join(q, col("id") === col("doc_id"))

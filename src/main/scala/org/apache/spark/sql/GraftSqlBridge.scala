@@ -9,7 +9,7 @@ import org.apache.spark.storage.StorageLevel
   * native expressions. The same pattern every Catalyst-extension library
   * uses. It also builds and frees [[execution.LogicalRDD]] leaves: the
   * stored stage frames of [[graft.Pipeline]] and the eagerly
-  * checkpointed rounds of graft's iterative builders.
+  * checkpointed rounds of [[graft.etl.Rounds]].
   */
 object GraftSqlBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
@@ -51,12 +51,9 @@ object GraftSqlBridge {
     * RDDs (non-blocking). An eager local checkpoint truncates lineage, so
     * its blocks are NOT recoverable — callers must only release a
     * checkpointed frame once every consumer that reads it has already
-    * materialized (graft's iterative builders: each prefix-doubling /
-    * Lloyd / label-propagation round is itself eagerly checkpointed
-    * before the previous round's table is released). Without this, a
-    * log-round builder pins one corpus-sized frame per round for the
-    * session's lifetime — the r18 q176 10× OOM. A released leaf frame
-    * stays readable: its rows recompute from lineage.
+    * materialized. [[graft.etl.Rounds]] is the round policy of graft's
+    * iterative builders built on this. A released leaf frame stays
+    * readable: its rows recompute from lineage.
     */
   def unpersistCheckpoints(df: Dataset[_]): Unit =
     df.asInstanceOf[classic.Dataset[_]].queryExecution.analyzed.foreach {

@@ -263,6 +263,40 @@ class DedupSpec extends SparkSpec {
     assert(comp.select("component").distinct().count() == 1L)
   }
 
+  test("iterative builders keep only their results stored") {
+    val sc = spark.sparkContext
+    val links = (1L until 12L).map(i => (i, i + 1)).toDF("src", "dst")
+    val text = (1L to 6L).map(i => (i, s"the cat sat on the mat $i the cat"))
+      .toDF("doc_id", "text")
+    val hops = (0 until 20).map(i => (s"u$i", s"u${i + 1}")).toDF("s", "d")
+    val vecs = Tables(spark, sf0001).embeddings
+    // builder → the stored RDDs its result needs: PageRank's ranks (its
+    // static frames are freed), none for BPE's driver-side merges, the
+    // k-means codebook, PQ's codebook and codes, the last redirect round,
+    // and the rank table plus per-doc lengths
+    val cases: Seq[(String, () => AnyRef, Int)] = Seq(
+      ("PageRank.ranks", () =>
+        graft.graph.PageRank.ranks(links, "src", "dst", iters = 20), 1),
+      ("Bpe.trainDistributed", () =>
+        graft.functions.Bpe.trainDistributed(text, "doc_id", "text", 10), 0),
+      ("SemDedup.centroids", () => SemDedup.centroids(vecs, k = 4, iters = 5),
+        1),
+      ("PqAnn.train", () => graft.ann.PqAnn.train(vecs, m = 8, ksub = 16,
+        dim = 64, lloydIters = 5), 2),
+      ("Redirects.resolve", () =>
+        graft.etl.Redirects.resolve(hops, "s", "d", maxHops = 32), 1),
+      ("ExactSubstr.rankAndLens", () =>
+        ExactSubstr.rankAndLens(text, "doc_id", "text", 3), 2))
+    val wrong = cases.flatMap { case (name, build, stored) =>
+      val before = sc.getPersistentRDDs.keySet
+      val result = build()
+      val added = (sc.getPersistentRDDs.keySet -- before).size
+      assert(result != null) // keeps the result's RDDs reachable until here
+      if (added == stored) None else Some(s"$name: $added, expected $stored")
+    }
+    assert(wrong.isEmpty, s"stored RDDs added: ${wrong.mkString("; ")}")
+  }
+
   test("connected components converge on a long chain within maxIter") {
     val n = 12L
     val nodes = (1L to n).map(i => (i, "")).toDF("doc_id", "text")

@@ -1,6 +1,7 @@
 package graft
 
 import graft.etl.Redirects
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Redirect-chain resolution (q142) — the oracle proves the planted
@@ -60,6 +61,20 @@ class RedirectsSpec extends SparkSpec {
       Seq(("a", "q"), ("a", "b"), ("b", "c")).toDF("s", "d"), "s", "d", 8)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(noPref("a") == "c", "smallest-target edge a->b wins the tie")
+  }
+
+  test("the plan does not grow with maxHops, and the rows do not change") {
+    // an 8-hop chain and a 2-cycle: resolved (or not) alike under both
+    // bounds, so only the number of doubling rounds differs
+    val edges = ((0 until 8).map(i => (s"u$i", s"u${i + 1}")) ++
+      Seq("p" -> "q", "q" -> "p")).toDF("s", "d")
+    def resolved(maxHops: Int) = Redirects.resolve(edges, "s", "d", maxHops)
+    def planNodes(df: DataFrame) =
+      df.queryExecution.analyzed.collect { case n => n }.size
+    val (short, long) = (resolved(8), resolved(1024))
+    assert(planNodes(long) <= planNodes(short),
+      s"plan nodes: ${planNodes(long)} at 1024 hops, ${planNodes(short)} at 8")
+    assert(long.collect().toSet == short.collect().toSet)
   }
 
   test("maxHops outside [1, 1024] is refused") {
