@@ -2,12 +2,13 @@ package graft
 
 import graft.dedup.{Contamination, DedupClusters, ExactDedup, MinHashDedup,
   NgramJaccard, Packing}
+import graft.etl.Store
 import graft.functions.{TextClean, TextStats}
 import graft.functions.HtmlText
 import graft.sources.{ContentRoute, GraftWarc, WarcTranscode}
-import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** End-to-end training-corpus preparation — the §2 operators composed the
   * way a real data pipeline chains them:
@@ -27,11 +28,11 @@ import org.apache.spark.storage.StorageLevel
   * Not one lazy program: building a prep runs work. The connected-
   * components loop ([[DedupClusters.connectedComponents]]) runs its
   * label rounds while the frame is built, and every stage frame is a
-  * stored plan leaf ([[org.apache.spark.sql.GraftSqlBridge.persistAsLeaf]])
-  * — under adaptive execution, building a leaf runs the shuffle stages
-  * beneath it. What stays lazy is each leaf's last stage and everything
-  * above the leaves: the funnel frame is six count aggregates, not six
-  * actions, and `packed` is a join over the leaves.
+  * stored plan leaf ([[graft.etl.Store.leaf]]) — under adaptive
+  * execution, building a leaf runs the shuffle stages beneath it. What
+  * stays lazy is each leaf's last stage and everything above the
+  * leaves: the funnel frame is six count aggregates, not six actions,
+  * and `packed` is a join over the leaves.
   *
   * Why stage frames are stored: each is consumed by its successor stage
   * AND the funnel count, and union branches do not share subplans —
@@ -39,10 +40,13 @@ import org.apache.spark.storage.StorageLevel
   * (~6× the work; the round-6 bench caught exactly that). They are
   * leaves, not `persist`ed frames, because a persisted stage keeps its
   * whole cached plan and every query over the chain rendered all of
-  * them nested stage by stage (see `persistAsLeaf`). The stored handles
-  * travel in [[CorpusPrep.handles]]; call [[CorpusPrep.release]] once
-  * done (or after materializing `packed`) so repeated invocations in one
-  * session don't accumulate stored blocks until executor eviction.
+  * them nested stage by stage (see `Store.leaf`). Everything the prep
+  * stores — the stage leaves, the MinHash signature cache and the
+  * connected-components labels — is held by one [[graft.etl.Store]]
+  * scope in [[CorpusPrep.store]]; call [[CorpusPrep.release]] once
+  * `packed` and `funnel` have been collected (they are invalid after
+  * it) so repeated invocations in one session don't accumulate stored
+  * blocks until executor eviction.
   *
   * Scale: inherits each operator's shape (narrow-key shuffles, bucket
   * caps, hash-reduced payloads).
@@ -60,11 +64,19 @@ import org.apache.spark.storage.StorageLevel
 object Pipeline {
 
   final case class CorpusPrep(packed: DataFrame, funnel: DataFrame,
-      handles: Seq[DataFrame] = Nil) {
-    /** Free every stage frame this prep stored. The handles are plan
-      * leaves, which `Dataset.unpersist` does not reach.
+      store: Store.Scope) {
+    /** The stored stage frames, one plan leaf each. */
+    def handles: Seq[DataFrame] = store.frames
+      .filter(_.queryExecution.analyzed.isInstanceOf[LogicalRDD])
+
+    /** Free every frame this prep stored. Collect what you need of
+      * `packed` and `funnel` first: frames built on the prep are invalid
+      * afterwards. A freed stage leaf recomputes from lineage, and that
+      * lineage reaches the final connected-components labels, a
+      * lineage-cut snapshot freed here too; only shuffle outputs Spark
+      * still holds keep such a read working, and nothing guarantees them.
       */
-    def release(): Unit = handles.foreach(GraftSqlBridge.unpersistCheckpoints)
+    def release(): Unit = store.close()
   }
 
   private def stage(name: String, df: DataFrame): DataFrame =
@@ -90,14 +102,8 @@ object Pipeline {
     val cleaned = docs.select(col(idCol).cast("long").as("doc_id"),
       TextClean.cleanChain(col(textCol)).as("text"))
 
-    val handles = Seq.newBuilder[DataFrame]
-    def shared(df: DataFrame) = {
-      val h = GraftSqlBridge.persistAsLeaf(df, StorageLevel.MEMORY_AND_DISK)
-      handles += h
-      h
-    }
-
-    val textGated = shared(cleaned
+    val st = new Store.Scope
+    val textGated = st.leaf(cleaned
       .where(TextStats.langId(col("text")).isin(langs: _*) &&
         TextStats.qualityScore(col("text")) >= minQuality))
 
@@ -109,7 +115,7 @@ object Pipeline {
     // funnel counts packedBare — a row multiplication the stage counts
     // would never show (ADVICE r7)
     val imageMeta = images.map { img =>
-      shared(img.select(col(imageId).cast("long").as("doc_id"),
+      st.leaf(img.select(col(imageId).cast("long").as("doc_id"),
           graft.functions.F.imageFormat(col(imageBlob)).as("img_format"),
           graft.functions.F.imageWidth(col(imageBlob)).as("img_w"),
           graft.functions.F.imageHeight(col(imageBlob)).as("img_h"))
@@ -123,31 +129,32 @@ object Pipeline {
     }
     val gated = imageMeta match {
       case Some(meta) =>
-        shared(textGated.join(meta.select(col("doc_id")), "doc_id"))
+        st.leaf(textGated.join(meta.select(col("doc_id")), "doc_id"))
       case None => textGated
     }
 
-    val exact = shared(ExactDedup.dedup(gated, "doc_id", "text"))
+    val exact = st.leaf(ExactDedup.dedup(gated, "doc_id", "text"))
 
     // candJaccardPct (default: = minJaccardPct) is the SIGNATURE-ESTIMATE
     // pre-filter on candidates; the exact-Jaccard verify below always
     // gates at minJaccardPct. Callers whose corpus has pairs NEAR the
     // threshold (the web funnel) pass a loose candidate bound so estimate
     // jitter can't drop a true >= minJaccardPct pair before verification.
-    val cands = MinHashDedup.candidatePairs(exact, "doc_id", "text",
+    // owned, so releasing the prep frees the signature cache under it
+    val cands = st.own(MinHashDedup.candidatePairs(exact, "doc_id", "text",
       shingleK = shingleK, numPerms = numPerms, bands = bands,
-      minJaccardPct = if (candJaccardPct >= 0) candJaccardPct else minJaccardPct)
+      minJaccardPct = if (candJaccardPct >= 0) candJaccardPct else minJaccardPct))
     // the verified pair list is stored too (the q37/q56 memoized-pairs
     // rule): the CC loop below consumes it once per label-propagation
     // ITERATION, and without the store each iteration re-runs the
     // whole shingle → minhash → band-join → Jaccard-verify subtree
-    val pairs = shared(NgramJaccard.verify(exact, cands, "doc_id", "text",
+    val pairs = st.leaf(NgramJaccard.verify(exact, cands, "doc_id", "text",
       shingleK, minJaccardPct).select("id_a", "id_b"))
-    val keepers = DedupClusters
-      .connectedComponents(exact, "doc_id", pairs)
+    val keepers = st.own(DedupClusters
+      .connectedComponents(exact, "doc_id", pairs))
       .where(col("id") === col("component"))
       .select(col("id").as("doc_id"))
-    val nearDeduped = shared(exact.join(keepers, Seq("doc_id"), "left_semi"))
+    val nearDeduped = st.leaf(exact.join(keepers, Seq("doc_id"), "left_semi"))
 
     val contaminated = Contamination
       .overlap(bench.select(col(benchId).as("bench_id"),
@@ -156,10 +163,10 @@ object Pipeline {
         nearDeduped, "doc_id", "text", contamShingleK)
       .where(col("contaminated_pct") >= maxContamPct)
       .select(col("bench_id").as("doc_id"))
-    val decontaminated = shared(nearDeduped
+    val decontaminated = st.leaf(nearDeduped
       .join(contaminated, Seq("doc_id"), "left_anti"))
 
-    val packedBare = shared(Packing.firstFit(
+    val packedBare = st.leaf(Packing.firstFit(
       decontaminated.select(col("doc_id"),
         TextStats.tokenCount(col("text")).as("n_tok")),
       "doc_id", col("n_tok"), maxTokens, packPartitions))
@@ -181,7 +188,7 @@ object Pipeline {
       .unionAll(stage("3_near_dedup", nearDeduped))
       .unionAll(stage("4_decontaminated", decontaminated))
       .unionAll(stage("5_packed", packedBare))
-    CorpusPrep(packed, funnel, handles.result())
+    CorpusPrep(packed, funnel, st)
   }
 
   /** The WEB-FED funnel: the same corpus-prep program with the three
@@ -225,8 +232,8 @@ object Pipeline {
       contamShingleK: Int = 5, minJaccardPct: Int = 50,
       numPerms: Int = 128, bands: Int = 64,
       maxTokens: Long = 512L, packPartitions: Int = 8): CorpusPrep = {
-    val records = GraftSqlBridge.persistAsLeaf(GraftWarc.records(warc),
-      StorageLevel.MEMORY_AND_DISK)
+    val st = new Store.Scope
+    val records = st.leaf(GraftWarc.records(warc))
     val responses = records.where(col("warc_type") === "response" &&
       col("body").isNotNull)
     // media-type dispatch (ContentRoute, q111): only html/plain/pdf
@@ -245,7 +252,7 @@ object Pipeline {
     // robots-meta noindex (q125's page directive): an html page whose
     // owner opted out of indexing never enters the corpus — NULL text,
     // dropping at the same gate as torn transcodes, counted w1b − w2
-    val transcoded = GraftSqlBridge.persistAsLeaf(textual
+    val transcoded = st.leaf(textual
       .select(docId.cast("long").as("doc_id"),
         when(routeCol === ContentRoute.RouteHtml,
           when(!graft.functions.RobotsMeta.noindex(decoded),
@@ -253,7 +260,7 @@ object Pipeline {
           .when(routeCol === ContentRoute.RoutePdf,
             element_at(graft.functions.F.pdfExtract(col("body")), 1))
           .otherwise(decoded).as("text"))
-      .where(col("text").isNotNull), StorageLevel.MEMORY_AND_DISK)
+      .where(col("text").isNotNull))
     val encodingClean = transcoded.where(
       TextStats.replacementCount(col("text")) +
         TextStats.mojibakeCount(col("text")) +
@@ -271,6 +278,7 @@ object Pipeline {
       .unionAll(stage("w1b_text_routed", textual))
       .unionAll(stage("w2_transcoded", transcoded))
       .unionAll(inner.funnel)
-    CorpusPrep(inner.packed, funnel, Seq(records, transcoded) ++ inner.handles)
+    inner.store.frames.foreach(st.own)
+    CorpusPrep(inner.packed, funnel, st)
   }
 }

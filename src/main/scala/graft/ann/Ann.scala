@@ -1,6 +1,6 @@
 package graft.ann
 
-import graft.etl.Rounds
+import graft.etl.{Rounds, Store}
 import graft.functions.F
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
@@ -350,8 +350,8 @@ object PqAnn {
     * |q| × rerank of them — the standard ADC + exact re-rank that buys
     * back quantization-error recall for one narrow id-keyed join.
     */
-  /** Train the PQ index: (codebook, codes), both eagerly materialized via
-    * localCheckpoint so repeated searches reuse them without replanning,
+  /** Train the PQ index: (codebook, codes), both eagerly stored as
+    * snapshots so repeated searches reuse them without replanning,
     * and the wide exploded subvector frame is RELEASED before returning —
     * without that every build leaked a persisted corpus-sized frame into
     * the block manager (measured as a whole-bench slowdown). Like
@@ -360,16 +360,14 @@ object PqAnn {
     */
   def train(corpus: DataFrame, m: Int = 8, ksub: Int = 16, dim: Int = 64,
       lloydIters: Int = 2, idCol: String = "vec_id",
-      vecCol: String = "embedding"): (DataFrame, DataFrame) = {
+      vecCol: String = "embedding"): (DataFrame, DataFrame) =
+      Store.scoped { st =>
     require(dim % m == 0, s"dim=$dim must divide into m=$m subspaces")
-    val subs = subvectors(corpus, m, dim / m, "nid", idCol, vecCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val subs = st.cache(subvectors(corpus, m, dim / m, "nid", idCol, vecCol))
     val cb0 = codebookFromSubs(subs, ksub)
     val cb = if (lloydIters > 0) refineFromSubs(subs, cb0, lloydIters)
-      else cb0.localCheckpoint(true)
-    val codes = assign(subs, cb).localCheckpoint(true)
-    subs.unpersist(false)
-    (cb, codes)
+      else Store.snapshot(cb0)
+    (cb, Store.snapshot(assign(subs, cb)))
   }
 
   /** ADC search over a trained index. `corpus` is only touched when

@@ -1,5 +1,6 @@
 package graft.ann
 
+import graft.etl.Store
 import graft.functions.F
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
@@ -32,7 +33,7 @@ import org.apache.spark.sql.functions._
   * and the BACKWARD neighborhood is computed only for the ≤ batch·k
   * candidate targets (semi-join prune, then a candidates×batch
   * re-score — bounded, never a second corpus pass). The forward top-k
-  * frame materializes once (localCheckpoint: batch·k rows) because
+  * frame materializes once (a snapshot: batch·k rows) because
   * three consumers read it. At 100 TB the forward pass composes with
   * any (qid, nid) shortlist provider (IvfSqAnn.searchIndex is the
   * pruned path); the exact pass here IS the oracle-checked reference
@@ -59,12 +60,13 @@ object BitextMining {
     // ONE distributed pass over the target corpus: per-source top-k
     val wf = Window.partitionBy(col("sid"))
       .orderBy(col("c9").desc, col("tid"))
-    val fwd = tgt.select(col(idCol).as("tid"), col(vecCol).as("t_vec"))
+    // batch·k rows; three consumers below
+    val fwd = Store.snapshot(tgt
+      .select(col(idCol).as("tid"), col(vecCol).as("t_vec"))
       .crossJoin(s)
       .select(col("sid"), col("tid"), cos9.as("c9"))
       .withColumn("rn", row_number().over(wf))
-      .where(col("rn") <= k)
-      .localCheckpoint(true) // batch·k rows; three consumers below
+      .where(col("rn") <= k))
     val dA = fwd.groupBy(col("sid")).agg(sum(col("c9")).as("d_a"))
     // backward neighborhoods for the candidate targets only: semi-join
     // prune, then a bounded candidates×batch re-score
@@ -123,13 +125,14 @@ object BitextMining {
       .orderBy(col("c9").desc, col("tid"))
     val wb = Window.partitionBy(col("tid"))
       .orderBy(col("c9").desc, col("sid"))
-    val ranked = tgt.select(col(idCol).as("tid"), col(vecCol).as("t_vec"))
+    // (|src|+|tgt|)·k candidate rows
+    val ranked = Store.snapshot(tgt
+      .select(col(idCol).as("tid"), col(vecCol).as("t_vec"))
       .crossJoin(s)
       .select(col("sid"), col("tid"), cos9.as("c9"))
       .withColumn("rf", row_number().over(wf))
       .withColumn("rb", row_number().over(wb))
-      .where(col("rf") <= k || col("rb") <= k)
-      .localCheckpoint(true) // (|src|+|tgt|)·k candidate rows
+      .where(col("rf") <= k || col("rb") <= k))
     val dA = ranked.where(col("rf") <= k)
       .groupBy(col("sid")).agg(sum(col("c9")).as("d_a"))
     val dB = ranked.where(col("rb") <= k)

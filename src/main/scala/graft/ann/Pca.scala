@@ -1,7 +1,7 @@
 package graft.ann
 
-import graft.etl.Rounds
-import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
+import graft.etl.{Rounds, Store}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Distributed PCA by exact power iteration — the embedding-prep step
@@ -96,9 +96,8 @@ object Pca {
   private def rescaleGram(graw: DataFrame): DataFrame = {
     val gmax = graw.agg(max(abs(col("g0"))).as("gm"))
       .select((fdiv(col("gm"), lit(GramScale)) + 1L).as("gdiv"))
-    graw.crossJoin(broadcast(gmax))
-      .select(col("j"), col("k"), fdiv(col("g0"), col("gdiv")).as("g"))
-      .localCheckpoint(true) // d² rows; every iteration reuses it
+    Store.snapshot(graw.crossJoin(broadcast(gmax)) // d² rows, reused
+      .select(col("j"), col("k"), fdiv(col("g0"), col("gdiv")).as("g")))
   }
 
   /** `iters` exact power steps from v₀ = 1 over the normalized Gram:
@@ -150,7 +149,7 @@ object Pca {
     // plus once more per consumer that collects the loadings
     // (removeTop/removeTopAudit) — and each appearance re-ran the full
     // iters×(join+agg+crossJoin) stage chain against the Gram
-    val v = powerLoop(g, iters).localCheckpoint(true)
+    val v = Store.snapshot(powerLoop(g, iters))
     v.select(col("k").cast("long").as("dim"), col("v").as("pc1_x1e6"))
       .crossJoin(broadcast(rayleighOf(g, v)))
   }
@@ -177,7 +176,7 @@ object Pca {
     * gauges the result reads stay stored.
     */
   def topComponents(embeddings: DataFrame, idCol: String, vecCol: String,
-      nComponents: Int = 2, iters: Int = 2): DataFrame = {
+      nComponents: Int = 2, iters: Int = 2): DataFrame = Store.scoped { st =>
     require(nComponents >= 1, s"nComponents must be >= 1, got $nComponents")
     // rayleigh (≲ 10¹¹) × 64^(c−1) overflows Long near c = 10 and the
     // per-round gauge has faded to noise well before that (ADVICE r17):
@@ -186,20 +185,20 @@ object Pca {
     require(nComponents <= 6,
       s"nComponents must be <= 6 (the 64^(c-1) gauge re-scale overflows " +
         s"and precision fades ~64x per round), got $nComponents")
-    val g1 = scaledGram(milliExploded(embeddings, idCol, vecCol))
+    val g1 = st.own(scaledGram(milliExploded(embeddings, idCol, vecCol)))
     val comps = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var scaleBack = 1L // 64^(c-1): round-gauge → first-round units
     // the next component's stored loadings (d rows) and gauge (1 row)
     def component(g: DataFrame): (DataFrame, DataFrame) = {
-      val v = powerLoop(g, iters).localCheckpoint(true)
-      val ray = rayleighOf(g, v).localCheckpoint(true)
+      val v = Store.snapshot(powerLoop(g, iters))
+      val ray = Store.snapshot(rayleighOf(g, v))
       comps += v.select(lit(comps.size + 1L).as("comp"),
         col("k").cast("long").as("dim"), col("v").as("loading_x1e6"))
         .crossJoin(broadcast(ray.select(
           (col("rayleigh") * scaleBack).as("rayleigh"))))
       (v, ray)
     }
-    val last = Rounds.run(g1, nComponents - 1) { (g, _) =>
+    val last = st.own(Rounds.run(g1, nComponents - 1) { (g, _) =>
       val (v, ray) = component(g)
       val pdiv = v.agg(sum(col("v") * col("v")).as("vv"))
         .select((fdiv(col("vv"), lit(GramScale)) + 1L).as("pdiv"))
@@ -215,9 +214,8 @@ object Pca {
           fdiv(col("g") - fdiv(col("rayleigh") *
             fdiv(col("p"), lit(1000L)), lit(1000000L)),
             lit(DeflateDiv)).as("g"))
-    }.last
+    }.last)
     component(last)
-    Seq(g1, last).foreach(GraftSqlBridge.unpersistCheckpoints)
     comps.reduce(_ union _)
   }
 

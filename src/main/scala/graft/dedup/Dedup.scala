@@ -1,10 +1,9 @@
 package graft.dedup
 
-import graft.etl.Rounds
+import graft.etl.{Rounds, Store}
 import graft.functions.F
-import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Deduplication operators for document corpora. Four families:
   * exact (hash groupBy), MinHash+LSH, SimHash, and embedding-cosine —
@@ -320,22 +319,21 @@ object MinHashDedup {
     * demand (the [[graft.etl.PartitionedSink.compact]] posture, applied
     * to the bucketed two-table layout): reassemble the logical (id,
     * sig, buckets) rows from the physical tables, snapshot them OFF the
-    * table locations (localCheckpoint — the rebuild is about to drop
+    * table locations (a snapshot — the rebuild is about to drop
     * those locations), then [[writeIndex]] fresh. Re-absorbed ids
     * collapse via the set/distinct fold, so compaction is also the
     * repair step for a violated absorb-once contract. Probe verdicts
     * are invariant across compaction (DedupSpec + the q149 oracle).
     */
   def compactIndex(spark: org.apache.spark.sql.SparkSession,
-      tableBase: String, numBuckets: Int = 32): Unit = {
+      tableBase: String, numBuckets: Int = 32): Unit = Store.scoped { st =>
     val b = spark.table(s"${tableBase}_buckets")
-    val sigs = b.groupBy(col("id"))
+    val sigs = st.snapshot(b.groupBy(col("id"))
       .agg(transform(
         array_sort(collect_set(struct(col("band"), col("bucket")))),
         x => x.getField("bucket")).as("buckets"))
       .join(spark.table(s"${tableBase}_sigs").distinct(), "id")
-      .select(col("id"), col("sig"), col("buckets"))
-      .localCheckpoint(true)
+      .select(col("id"), col("sig"), col("buckets")))
     writeIndex(sigs, tableBase, numBuckets)
   }
 
@@ -361,8 +359,8 @@ object MinHashDedup {
   def candidatePairs(docs: DataFrame, idCol: String, textCol: String,
       shingleK: Int = 3, numPerms: Int = 128, bands: Int = 16,
       minJaccardPct: Int = 50, maxBucket: Int = 256): DataFrame = {
-    val sigs = signatures(docs, idCol, textCol, shingleK, numPerms, bands)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sigs = Store.cache(
+      signatures(docs, idCol, textCol, shingleK, numPerms, bands))
     candidatePairsFromSigs(sigs, numPerms, minJaccardPct, maxBucket)
   }
 }
@@ -537,13 +535,12 @@ object DedupClusters {
     * the driver only ever sees a per-round changed-row COUNT, never data.
     *
     * Eager: the loop runs while the frame is built. The symmetric edge
-    * list is stored once as a plan leaf
-    * ([[org.apache.spark.sql.GraftSqlBridge.persistAsLeaf]]), so each
-    * round's queries plan and render one scan instead of the pair list's
-    * whole lineage (for the corpus funnel, every upstream stage). The
+    * list is stored once as a plan leaf ([[graft.etl.Store.leaf]]), so
+    * each round's queries plan and render one scan instead of the pair
+    * list's whole lineage (for the corpus funnel, every upstream stage). The
     * label rounds run through [[graft.etl.Rounds]], whose stop test is
-    * the changed-row count; the edge leaf is freed once the loop ends,
-    * so only the final labels stay stored.
+    * the changed-row count; the edge leaf is scoped to the call, so
+    * only the final labels stay stored.
     *
     * Output: (id, component) for every id in `docs`, where component is
     * the smallest doc id reachable through pairs (singletons map to
@@ -551,11 +548,11 @@ object DedupClusters {
     * pipeline groups on.
     */
   def connectedComponents(docs: DataFrame, idCol: String, pairs: DataFrame,
-      maxIter: Int = 10, failOnMaxIter: Boolean = true): DataFrame = {
-    val edges = GraftSqlBridge.persistAsLeaf(
+      maxIter: Int = 10, failOnMaxIter: Boolean = true): DataFrame =
+      Store.scoped { st =>
+    val edges = st.leaf(
       pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-        .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst"))),
-      StorageLevel.MEMORY_AND_DISK)
+        .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst"))))
     // Propagation runs ONLY over nodes that appear in a pair — near-dup
     // edges are sparse, so the iterated frames hold the duplicate
     // subgraph, not the corpus; singletons attach in one outer join at
@@ -575,7 +572,6 @@ object DedupClusters {
         .groupBy("id")
         .agg(min(col("component")).as("component"))
     }
-    GraftSqlBridge.unpersistCheckpoints(edges)
     // A non-fixpoint exit would silently return PARTIALLY-merged components
     // (any chain with diameter > maxIter) — that is data corruption for a
     // dedup keep-one-per-cluster consumer, so the default is to fail loudly;

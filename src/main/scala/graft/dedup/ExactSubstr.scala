@@ -1,7 +1,7 @@
 package graft.dedup
 
-import graft.etl.Rounds
-import org.apache.spark.sql.{DataFrame, GraftSqlBridge, Row, SparkSession}
+import graft.etl.{Rounds, Store}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -235,7 +235,7 @@ object ExactSubstr {
       level: Int): (DataFrame, DataFrame) = {
     require(level >= 0, s"level must be >= 0, got $level")
     val (pos, lens0) = charPositions(docs, idCol, textCol)
-    val lens = lens0.localCheckpoint(true) // one row per doc — small
+    val lens = Store.snapshot(lens0) // one row per doc — small
     val posBase = lensStatsOf(lens).posBase
     // pack (doc_id, off) → g before the level-0 table is stored: every
     // rank frame from here on is 16 B/row (see the scale-shape scaladoc)
@@ -379,26 +379,25 @@ object ExactSubstr {
     * action time — the 10× OOM.)
     */
   def repetitionProfile(docs: DataFrame, idCol: String, textCol: String,
-      probes: Seq[Long] = Seq(8L, 16L, 32L, 64L)): DataFrame = {
+      probes: Seq[Long] = Seq(8L, 16L, 32L, 64L)): DataFrame =
+      Store.scoped { st =>
     require(probes.nonEmpty &&
       probes.forall(p => p >= 1 && (p & (p - 1)) == 0L),
       s"probes must be powers of two, got $probes")
     val minLevel =
       (63 - java.lang.Long.numberOfLeadingZeros(probes.min)).toInt
     val (base, lens) = rankAndLens(docs, idCol, textCol, minLevel)
-    repetitionProfileFrom(docs.sparkSession, base, minLevel, lens,
-      probes, releaseBase = true)
+    repetitionProfileFrom(docs.sparkSession, st.own(base), minLevel,
+      st.own(lens), probes)
   }
 
   /** [[repetitionProfile]] continuing from an already-built level-
-    * `baseLevel` table (the shared q175/q176/q178 substrate). With
-    * `releaseBase = false` the base table and lens survive for the
-    * next caller; every HIGHER level this call builds is always
-    * released before returning.
+    * `baseLevel` table (the shared q175/q176/q178 substrate). The base
+    * table and lens are the caller's; every HIGHER level this call
+    * builds is released before returning.
     */
   def repetitionProfileFrom(spark: SparkSession, base: DataFrame,
-      baseLevel: Int, lens: DataFrame, probes: Seq[Long],
-      releaseBase: Boolean): DataFrame = {
+      baseLevel: Int, lens: DataFrame, probes: Seq[Long]): DataFrame = {
     require(probes.nonEmpty &&
       probes.forall(p => p >= 1 && (p & (p - 1)) == 0L),
       s"probes must be powers of two, got $probes")
@@ -460,11 +459,7 @@ object ExactSubstr {
       nextRank(cur, 1L << (baseLevel + k), stats.posBase)
     }.last
     record(levels.max, top)
-    if (!(top eq base)) GraftSqlBridge.unpersistCheckpoints(top)
-    if (releaseBase) {
-      GraftSqlBridge.unpersistCheckpoints(base)
-      GraftSqlBridge.unpersistCheckpoints(lens)
-    }
+    if (!(top eq base)) Store.free(top)
     val ordered = probes.map(p => rows.find(_._1 == p).get._2)
     val schema = StructType(Seq("probe_len", "n_dup_starts",
       "n_dup_substrings", "covered_chars", "total_chars",

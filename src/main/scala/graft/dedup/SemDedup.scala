@@ -1,7 +1,7 @@
 package graft.dedup
 
 import graft.ann.PqAnn
-import graft.etl.Rounds
+import graft.etl.{Rounds, Store}
 import graft.functions.F
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -250,14 +250,14 @@ object SemDedup {
       probe: Int = 0, maxCell: Int = 4096): DataFrame = {
     require(maxCell > 0, s"SemDedup: maxCell must be positive, got $maxCell")
     // the assignment frame feeds THREE consumers below (both sides of
-    // the within-cell self-join and the final flag join); checkpoint it
+    // the within-cell self-join and the final flag join); snapshot it
     // so the assignment sub-DAG — a shuffle over the full corpus —
-    // executes once, not three times (localCheckpoint, not persist:
+    // executes once, not three times (a snapshot, not a cache:
     // trained `cents` carry a fresh checkpoint identity per run, so a
     // plan-keyed cache entry could never be re-hit and would accumulate
     // a dead n-row copy per invocation)
-    val assigned = assignBest(corpus, cents, idCol, vecCol, probe)
-      .localCheckpoint(true)
+    val assigned = Store.snapshot(
+      assignBest(corpus, cents, idCol, vecCol, probe))
     // Occupancy guard (see the dedupWith scaladoc): cell sizes are one
     // map-side-combined count whose output is bounded by the codebook
     // (≤ k rows — broadcastable by the same bound the codebook literal

@@ -76,17 +76,11 @@ object Prefix {
     // samples its child to pick bounds, so an un-materialized input runs
     // its whole upstream pipeline an extra time just for the sample (the
     // r17 q160 regression's biggest constant). The snap is the grouped
-    // frame — far smaller than whatever produced it.
-    val snap = df.localCheckpoint(true)
-    val stamped = snap.repartitionByRange(oc: _*)
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint(true)
-    // snap existed only to keep the range sampler from re-running the
-    // upstream pipeline; once `stamped` is materialized (eager, line
-    // above) nothing reads snap again — release its blocks, or every
-    // Prefix call pins a grouped-frame copy for the session's lifetime
-    // (one of the r18 q175/q176 leak sites)
-    org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoints(snap)
+    // frame — far smaller than whatever produced it — and is freed once
+    // `stamped` is stored, or every Prefix call would pin a grouped-frame
+    // copy for the session's lifetime (one of the r18 q175/q176 leaks)
+    val stamped = Store.scoped(s => Store.snapshot(s.snapshot(df)
+      .repartitionByRange(oc: _*).withColumn("pid", spark_partition_id())))
     val aggs = (count(lit(1)).as("_cnt") +:
       valueCols.map { case (c, a) =>
         coalesce(sum(col(c)), lit(0L)).as(s"_t_$a") }).toList

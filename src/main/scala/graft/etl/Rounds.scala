@@ -1,13 +1,13 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
 /** The round loop of graft's iterative builders — the ONE place a
   * builder's rounds are stored, stopped and freed.
   *
-  * Round k+1 = `step(round k, k)`, stored eagerly at `level` by a local
-  * checkpoint, so the plan never grows with the round count. The stop
+  * Round k+1 = `step(round k, k)`, stored eagerly at `level` as a
+  * [[Store.snapshot]], so the plan never grows with the round count. The stop
   * test then runs while round k is still stored, and round k is freed
   * after it (safe: the checkpoint cut round k+1's lineage to it). The
   * caller's initial frame is never freed — it may be a lazy plan over the
@@ -29,14 +29,13 @@ object Rounds {
       stop: (DataFrame, DataFrame, Int) => Boolean = (_, _, _) => false)(
       step: (DataFrame, Int) => DataFrame): Result = {
     require(maxRounds >= 0, s"maxRounds must be >= 0, got $maxRounds")
-    def store(df: DataFrame): DataFrame = df.localCheckpoint(true, level)
-    var cur = if (storeInit) store(init) else init
+    var cur = if (storeInit) Store.snapshot(init, level) else init
     var k = 0
     var stopped = false
     while (k < maxRounds && !stopped) {
-      val next = store(step(cur, k))
+      val next = Store.snapshot(step(cur, k), level)
       stopped = stop(next, cur, k)
-      if (!(cur eq init)) GraftSqlBridge.unpersistCheckpoints(cur)
+      if (!(cur eq init)) Store.free(cur)
       cur = next
       k += 1
     }

@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.etl.Store
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -161,26 +162,24 @@ object Bm25 {
     * searches no longer pay.
     */
   def buildIndex(docs: DataFrame, idCol: String, textCol: String,
-      path: String, nBuckets: Int = 64): Unit = {
+      path: String, nBuckets: Int = 64): Unit = Store.scoped { st =>
     val (tf0, dl) = corpusStats(docs, idCol, textCol)
-    // dl/terms/totals all derive from tf: persisting it makes the
+    // dl/terms/totals all derive from tf: caching it makes the
     // postings write the ONE tokenize pass, with the other two writes
     // re-reading the cached frame instead of re-tokenizing the corpus
-    val tf = tf0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val bucket = pmod(xxhash64(col("term")), lit(nBuckets.toLong))
-      tf.join(dl, "doc_id")
-        .withColumn("bucket", bucket)
-        .write.mode("overwrite").partitionBy("bucket")
-        .parquet(s"$path/postings")
-      tf.groupBy("term").agg(count(lit(1)).as("df"))
-        .withColumn("bucket", bucket)
-        .write.mode("overwrite").partitionBy("bucket")
-        .parquet(s"$path/terms")
-      dl.agg(count(lit(1)).as("n_docs"), sum("dl").as("n_toks"),
-          lit(nBuckets.toLong).as("n_buckets"))
-        .write.mode("overwrite").parquet(s"$path/totals")
-    } finally tf.unpersist()
+    val tf = st.cache(tf0)
+    val bucket = pmod(xxhash64(col("term")), lit(nBuckets.toLong))
+    tf.join(dl, "doc_id")
+      .withColumn("bucket", bucket)
+      .write.mode("overwrite").partitionBy("bucket")
+      .parquet(s"$path/postings")
+    tf.groupBy("term").agg(count(lit(1)).as("df"))
+      .withColumn("bucket", bucket)
+      .write.mode("overwrite").partitionBy("bucket")
+      .parquet(s"$path/terms")
+    dl.agg(count(lit(1)).as("n_docs"), sum("dl").as("n_toks"),
+        lit(nBuckets.toLong).as("n_buckets"))
+      .write.mode("overwrite").parquet(s"$path/totals")
   }
 
   /** Score a query batch against a persisted index without touching the

@@ -1,7 +1,7 @@
 package graft.functions
 
-import graft.etl.Rounds
-import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
+import graft.etl.{Rounds, Store}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -94,16 +94,15 @@ object Bpe {
     * lower-cased corpus text (parity spec-pinned in BpeSpec).
     */
   def trainDistributed(docs: DataFrame, idCol: String, textCol: String,
-      nMerges: Int): Seq[(String, String)] = {
-    val wf0 = docs
+      nMerges: Int): Seq[(String, String)] = Store.scoped { st =>
+    val wf0 = st.snapshot(docs
       .select(explode(split(lower(col(textCol)), "\\s+")).as("w"))
       .where(col("w") =!= "")
       .groupBy(col("w")).agg(count(lit(1)).as("n"))
       // split-by-empty-regex can emit a trailing "" under limit -1 —
       // filter so symbols are exactly the characters
       .select(filter(split(col("w"), ""), s => s =!= "").as("syms"),
-        col("n"))
-      .localCheckpoint(true)
+        col("n")))
     val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     // records the next merge, if there is one
     def nextMerge(wf: DataFrame): Boolean = {
@@ -121,8 +120,8 @@ object Bpe {
       best.nonEmpty
     }
     // a round applies the last merge found; its stop test finds the next
-    if (nMerges > 0 && nextMerge(wf0)) {
-      val last = Rounds.run(wf0, nMerges - 1,
+    if (nMerges > 0 && nextMerge(wf0))
+      st.own(Rounds.run(wf0, nMerges - 1,
         stop = (next, _, _) => !nextMerge(next)) { (wf, _) =>
         val (a, b) = merges.last
         // left-to-right non-overlapping merge as an array fold
@@ -133,10 +132,7 @@ object Bpe {
             concat(slice(acc, lit(1), size(acc) - 1), array(lit(a + b))))
             .otherwise(concat(acc, array(s))))
         wf.select(rewritten.as("syms"), col("n"))
-      }.last
-      GraftSqlBridge.unpersistCheckpoints(last)
-    }
-    GraftSqlBridge.unpersistCheckpoints(wf0)
+      }.last)
     merges.toList
   }
 

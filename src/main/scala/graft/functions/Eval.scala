@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.etl.Store
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -77,19 +78,18 @@ object Eval {
     // scoring pipeline behind it (q160: full NB train + corpus score) is
     // the expensive part — a narrow 3-column persist beats re-running it
     // per consumer at every scale
-    val lbl = scored.select(col(idCol).as("eval_id"),
-      col(scoreCol).as("s"), col(labelCol).cast("long").as("y"))
-      .localCheckpoint(true)
+    val lbl = Store.snapshot(scored.select(col(idCol).as("eval_id"),
+      col(scoreCol).as("s"), col(labelCol).cast("long").as("y")))
     val bys = lbl.groupBy(col("s")).agg(
       sum(col("y")).as("np"), sum(lit(1L) - col("y")).as("nn"))
-    // LAZY lineage cut (the r17 eager localCheckpoint(true) here blocked
+    // a plan leaf, not a snapshot (the r17 eager snapshot here blocked
     // the pipeline for a full extra pass): both consumers — the AUC agg
-    // and the calibration join — share one RDD, materialized by
-    // whichever job runs first. The grand totals (P, N) come from the
-    // Prefix offset scan for free; 2PN can exceed 2⁶³ at corpus scale so
-    // it re-enters the plan as an exact DECIMAL(38,0) literal.
+    // and the calibration join — share one RDD, stored by whichever job
+    // runs first. The grand totals (P, N) come from the Prefix offset
+    // scan for free; 2PN can exceed 2⁶³ at corpus scale so it re-enters
+    // the plan as an exact DECIMAL(38,0) literal.
     val ranked = cumBelow(bys)
-    val cum = ranked.df.localCheckpoint(false)
+    val cum = Store.leaf(ranked.df)
     val totN = ranked.totals("below_n")
     val totAll = ranked.totals("below_all")
     val totP = totAll - totN

@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.etl.Store
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -35,7 +36,7 @@ import org.apache.spark.sql.types.DecimalType
   * cut is a TakeOrdered (per-partition top-k, no global exchange), and
   * all sketch algebra runs on ≤2k-row frames joined by one-row
   * broadcasts. The corpus-wide merged frame is persisted only for the
-  * duration of the sketch/exact materialization and unpersisted before
+  * duration of the sketch/exact materialization and freed before
   * the report is returned — repeated calls leave no corpus-sized
   * cache behind (only the ≤2k-row sketch frames stay cached, which the
   * returned plan reads). At production scale the exact columns are the
@@ -90,7 +91,7 @@ object Kmv {
   /** Sketch-vs-exact overlap report over two hash-valued corpora: rows
     * (scope ∈ a|b|union|overlap, kmv_estimate BIGINT,
     * exact_distinct BIGINT). Eager: the corpus-wide distinct shuffle
-    * runs inside this call (then unpersists); the returned ≤4-row
+    * runs inside this call, which frees its cache; the returned ≤4-row
     * frame composes the cached ≤2k-row sketches.
     */
   def overlapReport(a: DataFrame, b: DataFrame, hashCol: String,
@@ -98,24 +99,22 @@ object Kmv {
     require(k > 1 && k <= 2048,
       s"Kmv: k must be in (1, 2048] so the union estimator's " +
         s"numerator 2k*2^50 stays below 2^63, got $k")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val mg = mergedDistinct(a, b, hashCol).persist(lvl)
-    val exacts = mg.agg(
-      sum(col("ina")).as("ea"), sum(col("inb")).as("eb"),
-      count(lit(1)).as("eu"), sum(col("ina") * col("inb")).as("ei"))
-      .persist(lvl)
-
-    // TakeOrdered: per-partition top-k then a k-row merge — no global
-    // sort exchange; the persisted mg frame feeds every branch
-    def sketch(flag: String): DataFrame =
-      mg.where(col(flag) === 1L).select(col("u")).orderBy(col("u"))
-        .limit(k).persist(lvl)
-    val skA = sketch("ina")
-    val skB = sketch("inb")
     // materialize everything that reads mg, then drop the corpus-wide
-    // cache — only the bounded frames stay resident
-    skA.count(); skB.count(); exacts.count()
-    mg.unpersist(false)
+    // cache with the scope — only the bounded frames stay resident
+    val (skA, skB, exacts) = Store.scoped { st =>
+      val mg = st.cache(mergedDistinct(a, b, hashCol))
+      val exacts = Store.cache(mg.agg(
+        sum(col("ina")).as("ea"), sum(col("inb")).as("eb"),
+        count(lit(1)).as("eu"), sum(col("ina") * col("inb")).as("ei")))
+      // TakeOrdered: per-partition top-k then a k-row merge — no global
+      // sort exchange; the cached mg frame feeds every branch
+      def sketch(flag: String): DataFrame = Store.cache(mg
+        .where(col(flag) === 1L).select(col("u")).orderBy(col("u")).limit(k))
+      val skA = sketch("ina")
+      val skB = sketch("inb")
+      skA.count(); skB.count(); exacts.count()
+      (skA, skB, exacts)
+    }
     def thetaOf(sk: DataFrame, cnt: String, th: String): DataFrame =
       sk.agg(count(lit(1)).as(cnt), max(col("u")).as("mx"))
         .select(col(cnt),

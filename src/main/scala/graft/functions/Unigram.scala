@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.etl.Store
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
@@ -78,11 +79,10 @@ object Unigram {
     * uses are absent (cnt would be 0). Exactly the q173 oracle.
     */
   def emStep(words: DataFrame, pieces: Seq[(String, Long)]): DataFrame = {
-    val counts = words
+    val counts = Store.snapshot(words // ≤ |pieces| rows
       .withColumn("piece",
         explode(split(segment(col("word"), pieces), "\\|")))
-      .groupBy(col("piece")).agg(sum(col("f")).as("cnt"))
-      .localCheckpoint(true) // ≤ |pieces| rows
+      .groupBy(col("piece")).agg(sum(col("f")).as("cnt")))
     val tot = counts.agg(sum(col("cnt")).as("t"))
     counts.crossJoin(broadcast(tot))
       .select(col("piece"), col("cnt"),
@@ -104,11 +104,10 @@ object Unigram {
       iters: Int = 2): DataFrame = {
     require(vocabSize >= 27, s"vocabSize must cover chars + room, got $vocabSize")
     val spark = docs.sparkSession
-    val words = docs
+    val words = Store.snapshot(docs // word TYPES: vocabulary-bounded
       .select(explode(split(trim(lower(col(textCol))), "\\s+")).as("word"))
       .where(col("word").rlike("^[a-z]{1,16}$"))
-      .groupBy(col("word")).agg(count(lit(1)).as("f"))
-      .localCheckpoint(true) // word TYPES: vocabulary-bounded
+      .groupBy(col("word")).agg(count(lit(1)).as("f")))
     // seed: all substrings (occurrence-weighted), chars protected
     val cand = words
       .withColumn("L", explode(array((1 to MaxPieceLen).map(lit): _*)))

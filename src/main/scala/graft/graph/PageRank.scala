@@ -1,7 +1,7 @@
 package graft.graph
 
-import graft.etl.{Prefix, Rounds}
-import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
+import graft.etl.{Prefix, Rounds, Store}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic integer PageRank (Page/Brin/Motwani/Winograd 1999,
@@ -37,14 +37,15 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: the edge list joins its static out-degree ONCE, and BOTH
   * static frames — the (src, dst, out) edge frame and the distinct node
-  * set — are localCheckpoint'ed before the loop, so no iteration ever
+  * set — are snapshotted before the loop, so no iteration ever
   * re-scans the raw edge source or re-runs the node-distinct shuffle;
   * each iteration is then exactly one src-keyed join (ranks are narrow
   * (node, long) rows) and one dst-keyed partial-aggregated shuffle —
   * the canonical Pregel cadence expressed declaratively. The iterations
-  * are [[graft.etl.Rounds]] rounds, and the static frames are freed
-  * after the loop, so only the returned ranks stay stored; nothing but
-  * counts ever reaches the driver.
+  * are [[graft.etl.Rounds]] rounds, and the static frames are held by a
+  * [[graft.etl.Store]] scope that ends with the loop, so only the
+  * returned ranks stay stored; nothing but counts ever reaches the
+  * driver.
   *
   * Convergence: pass `tolMicro >= 0` to stop as soon as an iteration
   * moves no node by more than `tolMicro` micro-units (max |Δrank| —
@@ -80,22 +81,22 @@ object PageRank {
   def ranksConverged(edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int, dampMilli: Int = 850,
       tolMicro: Long = -1L,
-      redistributeDangling: Boolean = false): (DataFrame, Int) = {
+      redistributeDangling: Boolean = false): (DataFrame, Int) =
+      Store.scoped { st =>
     require(iters >= 1 && dampMilli >= 0 && dampMilli <= 1000)
     val e = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst"))
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .localCheckpoint(true) // static node set, built once
-    val eo = e.join(e.groupBy("src").agg(count(lit(1)).as("out")), "src")
-      .localCheckpoint(true) // static per-edge out-degree, built once
+    val nodes = st.snapshot(e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node"))).distinct()) // static node set
+    val eo = st.snapshot( // static per-edge out-degree, built once
+      e.join(e.groupBy("src").agg(count(lit(1)).as("out")), "src"))
     val redist = if (!redistributeDangling) None else {
-      val dangling = nodes
-        .join(eo.select(col("src").as("node")), Seq("node"), "left_anti")
-        .localCheckpoint(true) // static: nodes with no out-edges
+      val dangling = st.snapshot(nodes // static: nodes with no out-edges
+        .join(eo.select(col("src").as("node")), Seq("node"), "left_anti"))
       val ix = rankNodes(nodes)
-      Some(Redistribution(dangling,
-        ix.df.localCheckpoint(true), // static: no iteration re-sorts
+      // static: no iteration re-sorts; owning ix.df also frees the rank
+      // build under it when the scope ends
+      Some(Redistribution(dangling, st.snapshot(st.own(ix.df)),
         ix.totalCount))
     }
     // counts-only convergence probe (any node moved by > tolMicro?) on
@@ -109,8 +110,6 @@ object PageRank {
           .where(abs(col("rank_micro") - col("p")) > tolMicro).isEmpty) {
       (r, _) => iterate(nodes, eo, r, dampMilli, redist)
     }
-    (Seq(nodes, eo) ++ redist.toSeq.flatMap(d => Seq(d.dangling, d.idx)))
-      .foreach(GraftSqlBridge.unpersistCheckpoints)
     (res.last, res.rounds)
   }
 

@@ -3,6 +3,7 @@ package registry
 
 import graft.ann.{BruteForce, IvfAnn, LshAnn}
 import graft.dedup._
+import graft.etl.Store
 import graft.functions.F
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -457,11 +458,10 @@ private[graft] object AnnQueries {
       // the signature frame feeds BOTH the pair blocking and the final
       // join — checkpoint it (id + 8-byte sig per vector) or the whole
       // sharpen+project pipeline executes twice per consumer
-      val sig = sh.select(col("vec_id"),
+      val sig = Store.snapshot(sh.select(col("vec_id"),
         aggregate(zip_with(F.jlProject(col("sharp"), 64), pow2,
           (p, b) => when(p > lit(0L), b).otherwise(lit(0L))),
-          lit(0L), (a, x) => a + x).as("srp_sig"))
-        .localCheckpoint(true)
+          lit(0L), (a, x) => a + x).as("srp_sig")))
       val pairs = SimHashDedup.hammingPairs(sig, "vec_id", "srp_sig",
         maxHamming = 3, maxBucket = 1024)
       val sided = pairs.select(col("id_a").as("vec_id"),
@@ -528,7 +528,7 @@ private[graft] object AnnQueries {
     // + blocking + the planted-truth fold.
     QueryDef("q177_srp_ab", (s, dir) => {
       val e = Tables(s, dir).embeddings
-      val fixture = e.select(col("vec_id"),
+      val fixture = Store.snapshot(e.select(col("vec_id"),
           (col("vec_id") - pmod(col("vec_id"), lit(2))).as("src_id"))
         .join(e.select(col("vec_id").as("src_id"),
           col("embedding").as("src_emb")), Seq("src_id"))
@@ -536,19 +536,18 @@ private[graft] object AnnQueries {
           "transform(sequence(1, 64), j -> " +
             "cast(element_at(src_emb, j) as double) " +
             "+ (3.0 + cast(vec_id % 7 as double)) " +
-            "+ 0.001 * cast((vec_id + j) % 5 - 2 as double))").as("emb"))
-        .localCheckpoint(true)
+            "+ 0.001 * cast((vec_id + j) % 5 - 2 as double))").as("emb")))
       val comp = graft.ann.Pca.topComponent(fixture, "vec_id", "emb",
         iters = 2)
       val rawm = graft.ann.Pca.milliVectors(fixture, "vec_id", "emb")
       val shm = graft.ann.Pca.removeTop(fixture, "vec_id", "emb", comp)
         .select(col("vec_id"), col("sharp").as("m"))
-      val truth = fixture.where(pmod(col("vec_id"), lit(2)) === 0)
+      val truth = Store.snapshot(fixture
+        .where(pmod(col("vec_id"), lit(2)) === 0)
         .select(col("vec_id").as("id_a"),
           (col("vec_id") + 1).as("id_b"))
         .join(fixture.select(col("vec_id").as("id_b")),
-          Seq("id_b"), "left_semi")
-        .localCheckpoint(true)
+          Seq("id_b"), "left_semi"))
       def armRow(name: String, vecs: DataFrame): DataFrame = {
         val pow2 = array((0 until 64).map(i => lit(1L << i)): _*)
         // sig has ONE consumer (hammingPairs) — its r18 eager

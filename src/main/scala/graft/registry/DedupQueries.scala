@@ -2,6 +2,7 @@ package graft
 package registry
 
 import graft.dedup._
+import graft.etl.Store
 import graft.functions.{F, TextStats}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -20,6 +21,11 @@ private[graft] object DedupQueries {
   private def bestProbeMatch(inc: DataFrame, cand: DataFrame): DataFrame =
     MinHashDedup.bestMatch(inc, cand)
 
+  /** q137/q137b/q149's cached signatures of the `docs` rows `pred` keeps. */
+  private def probeSigs(docs: DataFrame, pred: Column): DataFrame =
+    Store.cache(MinHashDedup.signatures(docs.where(pred), "doc_id", "text",
+      ShingleK, NumPerms, Bands))
+
   /** The q175/q176/q178 shared ExactSubstr substrate (VERDICT r18 task
     * 4 — the three queries previously each re-ran the full
     * prefix-doubling build): ONE level-3 rank build (length-8 windows)
@@ -34,10 +40,8 @@ private[graft] object DedupQueries {
       val docs = Tables(s, dir).documents
       val (r3, lens) =
         graft.dedup.ExactSubstr.rankAndLens(docs, "doc_id", "text", 3)
-      val starts = graft.dedup.ExactSubstr
-        .dupWindowStartsFrom(r3, 3, lens, 12L)
-        .localCheckpoint(true,
-          org.apache.spark.storage.StorageLevel.DISK_ONLY)
+      val starts = Store.snapshot(graft.dedup.ExactSubstr
+        .dupWindowStartsFrom(r3, 3, lens, 12L), StorageLevel.DISK_ONLY)
       (r3, lens, starts)
     }
 
@@ -88,21 +92,17 @@ private[graft] object DedupQueries {
 
   private def minhashCandidates(s: SparkSession, dir: String): DataFrame =
     memoized(s, s"cands|$dir") {
-      val sigs = MinHashDedup
-        .signatures(Tables(s, dir).documents, "doc_id", "text", ShingleK,
-          NumPerms, Bands)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      MinHashDedup.candidatePairsFromSigs(sigs, NumPerms, minJaccardPct = 5)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      Store.cache(MinHashDedup.candidatePairs(Tables(s, dir).documents,
+        "doc_id", "text", ShingleK, NumPerms, Bands, minJaccardPct = 5))
     }
 
   /** The q19-verified pairs (Jaccard ≥ 50% over [[minhashCandidates]]),
     * persisted and memoized per (session, sf): q37, q56 and q69 share them. */
   private def verifiedPairs(s: SparkSession, dir: String): DataFrame =
     memoized(s, s"vpairs|$dir") {
-      NgramJaccard.verify(Tables(s, dir).documents, minhashCandidates(s, dir),
-        "doc_id", "text", ShingleK, minJaccardPct = 50)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      Store.cache(NgramJaccard.verify(Tables(s, dir).documents,
+        minhashCandidates(s, dir), "doc_id", "text", ShingleK,
+        minJaccardPct = 50))
     }
 
   /** Word-2-shingle distinct sets in DuckDB, mirroring F.shingles(k=2). */
@@ -377,7 +377,7 @@ private[graft] object DedupQueries {
     QueryDef("q176_repetition_profile", (s, dir) => {
       val (r3, lens, _) = exsubShared(s, dir)
       graft.dedup.ExactSubstr.repetitionProfileFrom(s, r3, 3, lens,
-        Seq(8L, 16L, 32L, 64L), releaseBase = false)
+        Seq(8L, 16L, 32L, 64L))
     },
       oracle = Some {
         val probes = Seq(8, 16, 32, 64)
@@ -700,10 +700,7 @@ private[graft] object DedupQueries {
     // full minhash in recursive SQL restricted to the probe direction.
     QueryDef("q137_dedup_probe", (s, dir) => {
       val docs = Tables(s, dir).documents.where(col("doc_id") < 32)
-      def sigs(parity: Int) = MinHashDedup.signatures(
-        docs.where(col("doc_id") % 2 === parity), "doc_id", "text",
-        ShingleK, NumPerms, Bands)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      def sigs(parity: Int) = probeSigs(docs, col("doc_id") % 2 === parity)
       val idx = sigs(0); val inc = sigs(1)
       val cand = MinHashDedup.probePairs(idx, inc, NumPerms,
         minJaccardPct = 5)
@@ -722,10 +719,7 @@ private[graft] object DedupQueries {
     // reproduce the in-session path row for row.
     QueryDef("q137b_dedup_probe_persisted", (s, dir) => {
       val docs = Tables(s, dir).documents.where(col("doc_id") < 32)
-      def sigs(parity: Int) = MinHashDedup.signatures(
-        docs.where(col("doc_id") % 2 === parity), "doc_id", "text",
-        ShingleK, NumPerms, Bands)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      def sigs(parity: Int) = probeSigs(docs, col("doc_id") % 2 === parity)
       val tableBase = memoized(s, s"minhash_idx|$dir") {
         MinHashDedup.writeIndex(sigs(0), "graft_q137b_idx",
           numBuckets = 8)
@@ -755,9 +749,7 @@ private[graft] object DedupQueries {
     // depend on write parallelism, verdicts don't.
     QueryDef("q149_index_lifecycle", (s, dir) => {
       val docs = Tables(s, dir).documents.where(col("doc_id") < 48)
-      def sigsOf(pred: Column) = MinHashDedup.signatures(
-        docs.where(pred), "doc_id", "text", ShingleK, NumPerms, Bands)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      def sigsOf(pred: Column) = probeSigs(docs, pred)
       val id = col("doc_id")
       val tableBase = memoized(s, s"minhash_idx_lifecycle|$dir") {
         val base = "graft_q149_idx"

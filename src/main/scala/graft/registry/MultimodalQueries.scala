@@ -2,6 +2,7 @@ package graft
 package registry
 
 import graft.dedup._
+import graft.etl.Store
 import graft.functions.F
 import graft.multimodal.BinaryPipeline
 import org.apache.spark.sql.functions._
@@ -251,14 +252,13 @@ private[graft] object MultimodalQueries {
       // decode+hash ONCE: the pair blocking and the final report both
       // read this frame, and at 100 TB of images the decode is the
       // dominant cost while the hash rows are 24 bytes/doc — so the
-      // narrow frame materializes (localCheckpoint) instead of running
+      // narrow frame materializes (a snapshot) instead of running
       // the decode twice
-      val hashed = Tables(s, dir).documents
+      val hashed = Store.snapshot(Tables(s, dir).documents
         .select(col("doc_id"), hp.as("_hp"))
         .select(col("doc_id"),
           element_at(col("_hp"), 1).as("dhash"),
-          element_at(col("_hp"), 2).as("ahash"))
-        .localCheckpoint(true)
+          element_at(col("_hp"), 2).as("ahash")))
       val pairs = SimHashDedup.hammingPairs(hashed, "doc_id", "dhash",
         maxHamming = 3)
       val sided = pairs.select(explode(array(
@@ -308,10 +308,9 @@ private[graft] object MultimodalQueries {
     // genuinely walks the RIFF containers and decodes 16-bit frames.
     // One map-side decode+hash pass, the narrow blocking shuffle.
     QueryDef("q154_audio_fingerprint", (s, dir) => {
-      val hashed = Tables(s, dir).documents
+      val hashed = Store.snapshot(Tables(s, dir).documents
         .select(col("doc_id"),
-          F.audioFingerprint(F.fpWavFixture(col("doc_id"))).as("afp"))
-        .localCheckpoint(true)
+          F.audioFingerprint(F.fpWavFixture(col("doc_id"))).as("afp")))
       val pairs = SimHashDedup.hammingPairs(hashed, "doc_id", "afp",
         maxHamming = 3)
       val sided = pairs.select(explode(array(
@@ -476,14 +475,13 @@ private[graft] object MultimodalQueries {
     // FULL oracle: every frame hash bit replays from doc_id arithmetic
     // (murmur64 parity == DuckDB hash()) while Spark genuinely decodes
     // the animation containers it assembled. Scale shape: one decode
-    // pass into a ~40-byte/doc hash frame (localCheckpoint), the
+    // pass into a ~40-byte/doc hash frame (a snapshot), the
     // narrow blocking shuffle, frame-aligned verify joins on candidate
     // pairs only.
     QueryDef("q155_clip_neardup", (s, dir) => {
       val docs = Tables(s, dir).documents
-      val fh = docs.select(col("doc_id"),
-          F.clipFrameHashes(F.clipFixture(col("doc_id"))).as("fhs"))
-        .localCheckpoint(true)
+      val fh = Store.snapshot(docs.select(col("doc_id"),
+          F.clipFrameHashes(F.clipFixture(col("doc_id"))).as("fhs")))
       val flat = fh.where(col("fhs").isNotNull)
         .select(col("doc_id"), size(col("fhs")).cast("long").as("nf"),
           posexplode(col("fhs")).as(Seq("frame_no", "dhash")))

@@ -99,7 +99,7 @@ object GraftCsv {
       .schema(withCorrupt))
     val parsed = raw.withColumns(ListMap(
       timestampCols.map(c => c -> coerceTimestamp(col(c))): _*))
-    if (cacheForAudit) parsed.cache() else parsed
+    if (cacheForAudit) graft.etl.Store.cache(parsed) else parsed
   }
 
   /** errors→null timestamp coercion (`pd.to_datetime(..., errors='coerce')`

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.etl.Store
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -405,22 +406,21 @@ object WebIngestStream {
 object StreamDedupProbe {
 
   /** The per-micro-batch body: signatures → persisted-index probe →
-    * verdicts. Also usable directly on any batch frame.
+    * verdicts. Also usable directly on any batch frame. The verdicts are
+    * a [[graft.etl.Store.snapshot]], the caller's to free.
     */
   def probeBatch(tableBase: String, docs: org.apache.spark.sql.DataFrame,
       idCol: String, textCol: String, shingleK: Int = 3,
       numPerms: Int = 128, bands: Int = 16, minJaccardPct: Int = 50,
-      maxBucket: Int = 256): org.apache.spark.sql.DataFrame = {
+      maxBucket: Int = 256): org.apache.spark.sql.DataFrame =
+      Store.scoped { st =>
     import graft.dedup.MinHashDedup
-    val sigs = MinHashDedup.signatures(docs, idCol, textCol, shingleK,
-      numPerms, bands)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val cand = MinHashDedup.probePersisted(docs.sparkSession, tableBase,
-        sigs, numPerms, minJaccardPct, maxBucket)
-      MinHashDedup.bestMatch(sigs, cand)
-        .localCheckpoint(true) // materialize before the cache drops
-    } finally sigs.unpersist(false)
+    val sigs = st.cache(MinHashDedup.signatures(docs, idCol, textCol,
+      shingleK, numPerms, bands))
+    val cand = MinHashDedup.probePersisted(docs.sparkSession, tableBase,
+      sigs, numPerms, minJaccardPct, maxBucket)
+    // materialized before the signature cache drops
+    Store.snapshot(MinHashDedup.bestMatch(sigs, cand))
   }
 
   /** Wire a document stream through [[probeBatch]] into a parquet
@@ -434,9 +434,10 @@ object StreamDedupProbe {
     stream.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        probeBatch(tableBase, batch, idCol, textCol, shingleK, numPerms,
-          bands, minJaccardPct, maxBucket)
-          .write.mode("append").parquet(outPath)
+        // the batch's verdicts are freed once written
+        Store.scoped(_.own(probeBatch(tableBase, batch, idCol, textCol,
+          shingleK, numPerms, bands, minJaccardPct, maxBucket))
+          .write.mode("append").parquet(outPath))
       }
       .start()
 
@@ -449,21 +450,20 @@ object StreamDedupProbe {
     * exactly-once even though the engine's contract is at-least-once.
     * The anti-join reads only the id column of the id-bucketed payload
     * table (the batch side, small, shuffles into its layout). The
-    * candidate frame snapshots via localCheckpoint BEFORE the append
-    * mutates the very tables it read.
+    * candidate frame is snapshotted BEFORE the append mutates the very
+    * tables it read, and freed once the append is done.
     */
   def absorbNovel(tableBase: String,
       sigs: org.apache.spark.sql.DataFrame,
       verdicts: org.apache.spark.sql.DataFrame,
-      numBuckets: Int = 32): Unit = {
+      numBuckets: Int = 32): Unit = Store.scoped { st =>
     import graft.dedup.MinHashDedup
     val novel = verdicts.where(col("is_novel"))
       .select(col("doc_id").as("id"))
     val existing = sigs.sparkSession
       .table(s"${tableBase}_sigs").select(col("id"))
-    val toAbsorb = sigs.join(novel, "id")
-      .join(existing, Seq("id"), "left_anti")
-      .localCheckpoint(true)
+    val toAbsorb = st.snapshot(sigs.join(novel, "id")
+      .join(existing, Seq("id"), "left_anti"))
     if (!toAbsorb.isEmpty)
       MinHashDedup.absorbIndex(toAbsorb, tableBase, numBuckets)
   }
@@ -489,21 +489,18 @@ object StreamDedupProbe {
       docs: org.apache.spark.sql.DataFrame, idCol: String,
       textCol: String, shingleK: Int = 3, numPerms: Int = 128,
       bands: Int = 16, minJaccardPct: Int = 50, maxBucket: Int = 256,
-      numBuckets: Int = 32): org.apache.spark.sql.DataFrame = {
+      numBuckets: Int = 32): org.apache.spark.sql.DataFrame =
+      Store.scoped { st =>
     import graft.dedup.MinHashDedup
-    val sigs = MinHashDedup.signatures(docs, idCol, textCol, shingleK,
-      numPerms, bands)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val cand = MinHashDedup.probePersisted(docs.sparkSession,
-        tableBase, sigs, numPerms, minJaccardPct, maxBucket)
-        .join(sigs.select(col("id").as("id_idx")), Seq("id_idx"),
-          "left_anti")
-      val verdicts = MinHashDedup.bestMatch(sigs, cand)
-        .localCheckpoint(true)
-      absorbNovel(tableBase, sigs, verdicts, numBuckets)
-      verdicts
-    } finally sigs.unpersist(false)
+    val sigs = st.cache(MinHashDedup.signatures(docs, idCol, textCol,
+      shingleK, numPerms, bands))
+    val cand = MinHashDedup.probePersisted(docs.sparkSession,
+      tableBase, sigs, numPerms, minJaccardPct, maxBucket)
+      .join(sigs.select(col("id").as("id_idx")), Seq("id_idx"),
+        "left_anti")
+    val verdicts = Store.snapshot(MinHashDedup.bestMatch(sigs, cand))
+    absorbNovel(tableBase, sigs, verdicts, numBuckets)
+    verdicts
   }
 
   /** Wire a document stream through [[probeAndAbsorbBatch]] — the
@@ -520,9 +517,9 @@ object StreamDedupProbe {
     stream.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        probeAndAbsorbBatch(tableBase, batch, idCol, textCol, shingleK,
-          numPerms, bands, minJaccardPct, maxBucket, numBuckets)
-          .write.mode("append").parquet(outPath)
+        Store.scoped(_.own(probeAndAbsorbBatch(tableBase, batch, idCol,
+          textCol, shingleK, numPerms, bands, minJaccardPct, maxBucket,
+          numBuckets)).write.mode("append").parquet(outPath))
       }
       .start()
 }

@@ -1,15 +1,17 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.storage.StorageLevel
 
 /** Bridge into the `private[sql]` Column↔Expression converters and plan
   * leaves. Spark 4 routes Column construction through ColumnNodes; this
   * is the classic (non-Connect) conversion path, exposed for graft's
   * native expressions. The same pattern every Catalyst-extension library
-  * uses. It also builds and frees [[execution.LogicalRDD]] leaves: the
-  * stored stage frames of [[graft.Pipeline]] and the eagerly
-  * checkpointed rounds of [[graft.etl.Rounds]].
+  * uses. It also builds [[execution.LogicalRDD]] leaves and frees stored
+  * frames for [[graft.etl.Store]], the one module that decides how graft
+  * holds a frame; nothing else in graft calls [[persistAsLeaf]] or
+  * [[free]].
   */
 object GraftSqlBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
@@ -35,8 +37,7 @@ object GraftSqlBridge {
     * execution that also RUNS its upstream shuffle stages, so the leaf is
     * partly eager. Its last stage runs, and stores, at the first action
     * that reads the leaf. `Dataset.unpersist` does not reach the stored
-    * RDD (the leaf is not in the cache manager): free it with
-    * [[unpersistCheckpoints]].
+    * RDD (the leaf is not in the cache manager): free it with [[free]].
     */
   def persistAsLeaf(df: Dataset[_], level: StorageLevel): DataFrame = {
     val ds = df.asInstanceOf[classic.Dataset[_]]
@@ -45,19 +46,28 @@ object GraftSqlBridge {
       ds.isStreaming))
   }
 
-  /** Release the block-manager storage behind [[execution.LogicalRDD]]
-    * leaves — a `localCheckpoint(true)`d frame or a [[persistAsLeaf]]
-    * frame: walk the analyzed plan for its leaves and unpersist their
-    * RDDs (non-blocking). An eager local checkpoint truncates lineage, so
-    * its blocks are NOT recoverable — callers must only release a
-    * checkpointed frame once every consumer that reads it has already
-    * materialized. [[graft.etl.Rounds]] is the round policy of graft's
-    * iterative builders built on this. A released leaf frame stays
-    * readable: its rows recompute from lineage.
+  /** Release the storage under `df`'s plan, top down: a plan that is
+    * cached is uncached (what `Dataset.unpersist` does) and not walked
+    * further; a stored [[execution.LogicalRDD]] leaf — a local checkpoint
+    * or a [[persistAsLeaf]] frame — has its RDD unpersisted. Non-blocking.
+    * A checkpointed RDD is released through the context: its `unpersist`
+    * would log, once per freed frame, that its lineage is cut — which for
+    * a checkpoint is the point. A released leaf or cache entry
+    * recomputes from lineage, which must not reach a freed checkpoint.
     */
-  def unpersistCheckpoints(df: Dataset[_]): Unit =
-    df.asInstanceOf[classic.Dataset[_]].queryExecution.analyzed.foreach {
-      case l: execution.LogicalRDD => l.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
+  def free(df: Dataset[_]): Unit = {
+    val ds = df.asInstanceOf[classic.Dataset[_]]
+    val spark = ds.sparkSession
+    val (cache, sc) = (spark.sharedState.cacheManager, spark.sparkContext)
+    def go(plan: LogicalPlan): Unit =
+      if (!cache.isEmpty && cache.lookupCachedData(spark, plan).nonEmpty)
+        cache.uncacheQuery(spark, plan, cascade = false, blocking = false)
+      else plan match {
+        case l: execution.LogicalRDD if sc.persistentRdds.contains(l.rdd.id) =>
+          if (l.rdd.isCheckpointed) sc.unpersistRDD(l.rdd.id, blocking = false)
+          else l.rdd.unpersist(blocking = false)
+        case _ => plan.children.foreach(go)
+      }
+    go(ds.queryExecution.analyzed)
+  }
 }

@@ -270,10 +270,16 @@ class DedupSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val hops = (0 until 20).map(i => (s"u$i", s"u${i + 1}")).toDF("s", "d")
     val vecs = Tables(spark, sf0001).embeddings
+    val hashes = (1L to 300L).toDF("w")
+      .select(graft.functions.F.hash64(col("w").cast("string")).as("h"))
+    val bm25Dir = java.nio.file.Files.createTempDirectory("bm25_store")
     // builder → the stored RDDs its result needs: PageRank's ranks (its
-    // static frames are freed), none for BPE's driver-side merges, the
-    // k-means codebook, PQ's codebook and codes, the last redirect round,
-    // and the rank table plus per-doc lengths
+    // static frames are freed — with the dangling redistribution too),
+    // none for BPE's driver-side merges, the k-means codebook, PQ's
+    // codebook and codes, the last redirect round, the rank table plus
+    // per-doc lengths, the range-stamped rows a rank reads, each PCA
+    // component's loadings and gauge, the KMV sketches and exact counts,
+    // and nothing for the builders whose result is written or collected
     val cases: Seq[(String, () => AnyRef, Int)] = Seq(
       ("PageRank.ranks", () =>
         graft.graph.PageRank.ranks(links, "src", "dst", iters = 20), 1),
@@ -286,7 +292,23 @@ class DedupSpec extends SparkSpec {
       ("Redirects.resolve", () =>
         graft.etl.Redirects.resolve(hops, "s", "d", maxHops = 32), 1),
       ("ExactSubstr.rankAndLens", () =>
-        ExactSubstr.rankAndLens(text, "doc_id", "text", 3), 2))
+        ExactSubstr.rankAndLens(text, "doc_id", "text", 3), 2),
+      ("PageRank.ranks dangling", () => graft.graph.PageRank.ranks(links,
+        "src", "dst", iters = 5, redistributeDangling = true), 1),
+      ("Prefix.withRankPrefixTotals", () => graft.etl.Prefix
+        .withRankPrefixTotals(text, Seq("doc_id"), Nil), 1),
+      ("Pca.topComponents", () => graft.ann.Pca.topComponents(vecs,
+        "vec_id", "embedding", nComponents = 2), 4),
+      ("Kmv.overlapReport", () => graft.functions.Kmv.overlapReport(
+        hashes, hashes.where(col("h") > 0L), "h", k = 16), 3),
+      ("ExactSubstr.repetitionProfile", () =>
+        ExactSubstr.repetitionProfile(text, "doc_id", "text", Seq(8L, 16L)),
+        0),
+      ("Bm25.buildIndex", () => {
+        graft.functions.Bm25.buildIndex(text, "doc_id", "text",
+          bm25Dir.resolve("idx").toString, 4)
+        bm25Dir
+      }, 0))
     val wrong = cases.flatMap { case (name, build, stored) =>
       val before = sc.getPersistentRDDs.keySet
       val result = build()

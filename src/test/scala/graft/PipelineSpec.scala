@@ -180,6 +180,35 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
+  test("release leaves nothing of the prep stored") {
+    val sc = spark.sparkContext
+    val cacheManager = spark
+      .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val cacheWasEmpty = cacheManager.isEmpty
+    val prep = Pipeline.prepareCorpus(docs, "doc_id", "text",
+      bench, "bench_id", "text", images = Some(images))
+    assert(prep.packed.count() == 1L)
+    assert(prep.funnel.collect().length == 7)
+    val held = prep.store.frames
+    // what release frees includes a lineage-cut snapshot (the labels),
+    // so frames built on the prep are not recoverable after it
+    assert(held.exists(_.queryExecution.analyzed.find {
+      case l: LogicalRDD => l.rdd.isCheckpointed
+      case _ => false
+    }.isDefined))
+    prep.release()
+    // the stage leaves, the MinHash signature cache and the final
+    // connected-components labels all go with the prep
+    val left = sc.getPersistentRDDs.keySet.toSet -- before
+    assert(left.isEmpty, s"still stored after release: $left")
+    assert(!cacheWasEmpty || cacheManager.isEmpty,
+      "release left a cache entry")
+    assert(held.forall(f => cacheManager.lookupCachedData(
+      f.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).isEmpty))
+  }
+
   test("a leaf frame keeps its lineage: dropped blocks recompute") {
     val src = docs.groupBy(length(col("text")) % 3).count()
     val leaf = GraftSqlBridge.persistAsLeaf(src, StorageLevel.MEMORY_AND_DISK)
