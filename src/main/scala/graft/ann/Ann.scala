@@ -1,9 +1,8 @@
 package graft.ann
 
-import graft.etl.{Rounds, Store}
+import graft.etl.{Ranking, Rounds, Store}
 import graft.functions.F
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -27,13 +26,7 @@ object BruteForce {
     val q = broadcast(
       queries.select(col(idCol).as("qid"), col(vecCol).as("q_vec")))
     val c = corpus.select(col(idCol).as("nid"), col(vecCol).as("n_vec"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("nid"))
-    c.crossJoin(q)
-      .where(col("qid") =!= col("nid"))
-      .withColumn("cos", F.cosine(col("q_vec"), col("n_vec")))
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .where(col("rnk") <= k)
-      .select("qid", "nid", "rnk")
+    SearchTail.exactTopK(c.crossJoin(q).where(col("qid") =!= col("nid")), k)
   }
 }
 
@@ -55,14 +48,12 @@ object LshAnn {
           .as(Seq("table", "code")))
     val q = broadcast(coded(queries, "qid", "q_vec"))
     val c = coded(corpus, "nid", "n_vec")
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("nid"))
-    c.join(q, Seq("table", "code"))
-      .where(col("qid") =!= col("nid"))
-      .withColumn("cos", F.cosine(col("q_vec"), col("n_vec")))
-      .groupBy(col("qid"), col("nid"))
-      .agg(max(col("cos")).as("cos"))
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .where(col("rnk") <= k)
+    Ranking.topKPerGroup(c.join(q, Seq("table", "code"))
+        .where(col("qid") =!= col("nid"))
+        .withColumn("cos", F.cosine(col("q_vec"), col("n_vec")))
+        .groupBy(col("qid"), col("nid"))
+        .agg(max(col("cos")).as("cos")),
+      "qid", col("cos").desc, col("nid"), k)
       .select("qid", "nid", "rnk")
   }
 
@@ -103,58 +94,61 @@ object IvfAnn {
       .withColumn("_r", F.hash64(col("cid").cast("string")))
       .orderBy(col("_r")).limit(nCentroids).drop("_r")
 
-  /** Nearest-centroid cell per corpus vector — map-side partial
-    * max(struct), only narrow (nid, cell) rows shuffle.
+  /** Nearest centroid per corpus vector: (nid, m = struct(cos, cid)) —
+    * map-side partial max(struct), only narrow rows shuffle.
     */
-  private[ann] def assign(corpus: DataFrame, cents: DataFrame, idCol: String,
-      vecCol: String): DataFrame = {
-    val assigned = corpus
-      .select(col(idCol).as("nid"), col(vecCol).as("n_vec"))
+  private def nearestCell(corpus: DataFrame, cents: DataFrame,
+      idCol: String, vecCol: String): DataFrame =
+    corpus.select(col(idCol).as("nid"), col(vecCol).as("n_vec"))
       .crossJoin(broadcast(cents))
       .groupBy(col("nid"))
-      .agg(max(struct(F.cosine(col("n_vec"), col("c_vec")).as("cos"),
-        col("cid").as("cid"))).as("m"))
-      .select(col("nid"), col("m.cid").as("cell"))
+      .agg(SearchTail.nearest("n_vec", "c_vec", "cid").as("m"))
+
+  /** Nearest-centroid cell per corpus vector: (nid, n_vec, cell). */
+  private[ann] def assign(corpus: DataFrame, cents: DataFrame, idCol: String,
+      vecCol: String): DataFrame =
     corpus
       .select(col(idCol).as("nid"), col(vecCol).as("n_vec"))
-      .join(assigned, "nid")
-  }
+      .join(nearestCell(corpus, cents, idCol, vecCol)
+        .select(col("nid"), col("m.cid").as("cell")), "nid")
 
   /** nProbe nearest cells per query — the query set is small by contract,
     * result broadcast.
     */
-  private[ann] def probes(queries: DataFrame, cents: DataFrame, nProbe: Int,
-      idCol: String, vecCol: String): DataFrame = {
-    val wProbe = Window.partitionBy(col("qid"))
-      .orderBy(col("p_cos").desc, col("cell"))
-    queries.select(col(idCol).as("qid"), col(vecCol).as("q_vec"))
-      .crossJoin(broadcast(cents))
-      .select(col("qid"), col("q_vec"), col("cid").as("cell"),
-        F.cosine(col("q_vec"), col("c_vec")).as("p_cos"))
-      .withColumn("_pr", row_number().over(wProbe))
-      .where(col("_pr") <= nProbe)
+  private def probes(queries: DataFrame, cents: DataFrame, nProbe: Int,
+      idCol: String, vecCol: String): DataFrame =
+    Ranking.topKPerGroup(
+      queries.select(col(idCol).as("qid"), col(vecCol).as("q_vec"))
+        .crossJoin(broadcast(cents))
+        .select(col("qid"), col("q_vec"), col("cid").as("cell"),
+          F.cosine(col("q_vec"), col("c_vec")).as("p_cos")),
+      "qid", col("p_cos").desc, col("cell"), nProbe, "_pr")
       .select(col("qid"), col("q_vec"), col("cell"))
-  }
 
-  private def rankWithin(candidates: DataFrame, k: Int): DataFrame = {
-    val wRank = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("nid"))
-    candidates
-      .where(col("qid") =!= col("nid"))
-      .withColumn("cos", F.cosine(col("q_vec"), col("n_vec")))
-      .withColumn("rnk", row_number().over(wRank).cast("long"))
-      .where(col("rnk") <= k)
-      .select("qid", "nid", "rnk")
+  /** A persisted index's probe set and the index rows it reaches. The
+    * probe cells collect to the driver (bounded: |queries| × nProbe
+    * ids) and become an `isin` partition filter, so the scan reads ONLY
+    * the probed cell directories. Returns (probes (qid, q_vec, cell),
+    * the pruned index).
+    */
+  private[ann] def probedIndex(spark: SparkSession, path: String,
+      queries: DataFrame, nProbe: Int, idCol: String,
+      vecCol: String): (DataFrame, DataFrame) = {
+    val pr = probes(queries, spark.read.parquet(s"$path/centroids"),
+      nProbe, idCol, vecCol)
+    val cells = pr.select("cell").distinct().collect().map(_.getLong(0))
+    (pr, spark.read.parquet(s"$path/index")
+      .where(col("cell").isin(cells.toIndexedSeq: _*)))
   }
 
   def topK(corpus: DataFrame, queries: DataFrame, k: Int,
       nCentroids: Int = 64, nProbe: Int = 8, idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
     val cents = centroids(corpus, nCentroids, idCol, vecCol)
-    rankWithin(
-      assign(corpus, cents, idCol, vecCol)
-        .join(broadcast(probes(queries, cents, nProbe, idCol, vecCol)),
-          Seq("cell")),
-      k)
+    SearchTail.exactTopK(assign(corpus, cents, idCol, vecCol)
+      .join(broadcast(probes(queries, cents, nProbe, idCol, vecCol)),
+        Seq("cell"))
+      .where(col("qid") =!= col("nid")), k)
   }
 
   /** Persist the IVF index: the assigned corpus lands `partitionBy(cell)`,
@@ -188,20 +182,15 @@ object IvfAnn {
     * (cell, cos9) shuffle. Output: (cell, n_members, mean_cos_x1e9,
     * is_stale) for EVERY build-time cell.
     */
-  def driftAudit(spark: org.apache.spark.sql.SparkSession, path: String,
+  def driftAudit(spark: SparkSession, path: String,
       corpus: DataFrame, idCol: String = "vec_id",
       vecCol: String = "embedding",
       staleBelowX1e9: Long = 700000000L): DataFrame = {
     val cents = spark.read.parquet(s"$path/centroids")
-    val assigned = corpus
-      .select(col(idCol).as("nid"), col(vecCol).as("n_vec"))
-      .crossJoin(broadcast(cents))
-      .groupBy(col("nid"))
-      .agg(max(struct(F.cosine(col("n_vec"), col("c_vec")).as("cos"),
-        col("cid").as("cid"))).as("m"))
+    val assigned = nearestCell(corpus, cents, idCol, vecCol)
       .select(col("m.cid").as("cell"),
-        (col("m.cos").cast(org.apache.spark.sql.types.DecimalType(18, 9))
-          * 1000000000L).cast("long").as("cos9"))
+        (col("m.cos").cast(DecimalType(18, 9)) * 1000000000L).cast("long")
+          .as("cos9"))
     val perCell = assigned.groupBy(col("cell"))
       .agg(count(lit(1)).as("n_members"), sum(col("cos9")).as("sum9"))
     cents.select(col("cid").as("cell"))
@@ -209,25 +198,21 @@ object IvfAnn {
       .select(col("cell"),
         coalesce(col("n_members"), lit(0L)).as("n_members"),
         when(col("n_members").isNull, lit(null).cast("long"))
-          .otherwise(VectorPrep.floorDiv(col("sum9"), col("n_members")))
+          .otherwise(F.floorDiv(col("sum9"), col("n_members")))
           .as("mean_cos_x1e9"))
       .withColumn("is_stale", col("mean_cos_x1e9").isNull ||
         col("mean_cos_x1e9") < staleBelowX1e9)
   }
 
-  /** Search a persisted index. The probe cells collect to the driver
-    * (bounded: |queries| × nProbe ids) and become an `isin` partition
-    * filter — the scan reads ONLY the probed cell directories.
+  /** Search a persisted index: exact cosine over the probed cells only
+    * ([[probedIndex]]'s partition-pruned scan).
     */
-  def searchIndex(spark: org.apache.spark.sql.SparkSession, path: String,
+  def searchIndex(spark: SparkSession, path: String,
       queries: DataFrame, k: Int, nProbe: Int = 8, idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
-    val cents = spark.read.parquet(s"$path/centroids")
-    val pr = probes(queries, cents, nProbe, idCol, vecCol)
-    val cells = pr.select("cell").distinct().collect().map(_.getLong(0))
-    val idx = spark.read.parquet(s"$path/index")
-      .where(col("cell").isin(cells.toIndexedSeq: _*))
-    rankWithin(idx.join(broadcast(pr), Seq("cell")), k)
+    val (pr, idx) = probedIndex(spark, path, queries, nProbe, idCol, vecCol)
+    SearchTail.exactTopK(idx.join(broadcast(pr), Seq("cell"))
+      .where(col("qid") =!= col("nid")), k)
   }
 }
 
@@ -278,12 +263,11 @@ object PqAnn {
     * m x ksub winners only.
     */
   private def codebookFromSubs(subs: DataFrame, ksub: Int): DataFrame = {
-    val w = Window.partitionBy(col("sub")).orderBy(col("_r"), col("nid"))
-    val winners = subs.select(col("nid"), col("sub"))
+    val hashed = subs.select(col("nid"), col("sub"))
       .withColumn("_r", F.murmur64(col("nid").cast("long") * 31 + col("sub")))
-      .withColumn("code", (row_number().over(w) - 1).cast("int"))
-      .where(col("code") < ksub)
-      .select("nid", "sub", "code")
+    val winners = Ranking.topKPerGroup(hashed, "sub", col("_r"), col("nid"),
+        ksub)
+      .select(col("nid"), col("sub"), (col("rnk") - 1).cast("int").as("code"))
     winners.join(subs, Seq("nid", "sub"))
       .select(col("sub"), col("code"), col("n_sub").as("c_sub"))
   }
@@ -342,14 +326,6 @@ object PqAnn {
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
     assign(subvectors(corpus, m, dim / m, "nid", idCol, vecCol), cb)
 
-  /** ADC top-k: corpus codes ⋈ broadcast per-query centroid-distance table
-    * on (sub, code); approximate distance = exact decimal sum of the m
-    * partial squared-L2s; rank ascending with nid tie-break. With
-    * `rerank` > 0, the compressed scan only SHORTLISTS (top `rerank` per
-    * query) and true vectors join back for the shortlist rows alone —
-    * |q| × rerank of them — the standard ADC + exact re-rank that buys
-    * back quantization-error recall for one narrow id-keyed join.
-    */
   /** Train the PQ index: (codebook, codes), both eagerly stored as
     * snapshots so repeated searches reuse them without replanning,
     * and the wide exploded subvector frame is RELEASED before returning —
@@ -370,42 +346,26 @@ object PqAnn {
     (cb, Store.snapshot(assign(subs, cb)))
   }
 
-  /** ADC search over a trained index. `corpus` is only touched when
-    * `rerank` > 0 (true vectors join back for the shortlist rows).
+  /** ADC top-k over a trained index: corpus codes ⋈ broadcast per-query
+    * centroid-distance table on (sub, code); approximate distance =
+    * exact decimal sum of the m partial squared-L2s; rank ascending with
+    * nid tie-break. With `rerank` > 0 the compressed scan only
+    * SHORTLISTS (top `rerank` per query) and re-ranks by exact cosine
+    * ([[SearchTail.shortlist]]); `corpus` is only touched then.
     */
   def search(cb: DataFrame, codes: DataFrame, corpus: DataFrame,
       queries: DataFrame, k: Int, m: Int = 8, dim: Int = 64,
       rerank: Int = 0, idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
-    val subDim = dim / m
-    val qd = subvectors(queries, m, subDim, "qid", idCol, vecCol)
+    val qd = subvectors(queries, m, dim / m, "qid", idCol, vecCol)
       .join(broadcast(cb), "sub")
       .select(col("qid"), col("sub"), col("code"),
-        F.l2sq(col("n_sub"), col("c_sub"))
-          .cast(org.apache.spark.sql.types.DecimalType(18, 9)).as("d"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("dist"), col("nid"))
-    val adc = codes.join(broadcast(qd), Seq("sub", "code"))
-      .groupBy(col("qid"), col("nid"))
-      .agg(sum(col("d")).as("dist"))
-      .where(col("qid") =!= col("nid"))
-      .withColumn("rnk", row_number().over(w).cast("long"))
-    if (rerank <= 0) adc.where(col("rnk") <= k).select("qid", "nid", "rnk")
-    else {
-      val short = adc.where(col("rnk") <= math.max(rerank, k))
-        .select("qid", "nid")
-      val qv = broadcast(queries
-        .select(col(idCol).as("qid"), col(vecCol).as("q_vec")))
-      val wx = Window.partitionBy(col("qid"))
-        .orderBy(col("cos").desc, col("nid"))
-      short
-        .join(corpus.select(col(idCol).as("nid"), col(vecCol).as("n_vec")),
-          "nid")
-        .join(qv, "qid")
-        .withColumn("cos", F.cosine(col("q_vec"), col("n_vec")))
-        .withColumn("rnk", row_number().over(wx).cast("long"))
-        .where(col("rnk") <= k)
-        .select("qid", "nid", "rnk")
-    }
+        F.l2sq(col("n_sub"), col("c_sub")).cast(DecimalType(18, 9)).as("d"))
+    SearchTail.shortlist(codes.join(broadcast(qd), Seq("sub", "code"))
+        .groupBy(col("qid"), col("nid"))
+        .agg(sum(col("d")).as("dist"))
+        .where(col("qid") =!= col("nid")),
+      col("dist"), k, rerank, corpus, queries, idCol, vecCol)
   }
 
   /** One-shot convenience: train + search. */
@@ -423,9 +383,9 @@ object PqAnn {
   * stored as int8 SQ8 codes (VectorPrep's exact quantization), so a
   * search touches only nProbe cell directories (partition pruning) and
   * reads 4×-smaller rows inside them — the two classical scale levers
-  * stacked. Scoring inside the probed cells is the integer ADC of
-  * [[VectorPrep.sq8TopK]]; the top-`rerank` shortlist re-ranks with
-  * true-vector cosine.
+  * stacked. Scoring inside the probed cells is [[VectorPrep.sq8TopK]]'s
+  * integer ADC ([[VectorPrep.sq8Rank]], the one SQ8 scorer); the
+  * top-`rerank` shortlist re-ranks with true-vector cosine.
   *
   * Scale shape: build is one assignment pass + one encode pass, landed
   * `partitionBy(cell)`; search collects |queries|·nProbe cell ids
@@ -464,7 +424,7 @@ object IvfSqAnn {
     * each id at most once (the index is a set keyed by nid — the
     * absorbIndex contract).
     */
-  def absorbVectors(spark: org.apache.spark.sql.SparkSession, path: String,
+  def absorbVectors(spark: SparkSession, path: String,
       newVectors: DataFrame, idCol: String = "vec_id",
       vecCol: String = "embedding"): Unit = {
     val cents = spark.read.parquet(s"$path/centroids")
@@ -484,7 +444,7 @@ object IvfSqAnn {
     * never touched, and a rebuilt index re-audits healthy (the spec
     * pins both). Absorb daily, maintain on the audit's cadence.
     */
-  def maintainIndex(spark: org.apache.spark.sql.SparkSession, path: String,
+  def maintainIndex(spark: SparkSession, path: String,
       corpus: DataFrame, nCentroids: Int = 64,
       staleBelowX1e9: Long = 700000000L, idCol: String = "vec_id",
       vecCol: String = "embedding"): Boolean = {
@@ -498,46 +458,16 @@ object IvfSqAnn {
     * the exact re-rank of the |queries|·rerank shortlist (rerank = 0
     * returns the raw integer-ADC ranking). Output: (qid, nid, rnk).
     */
-  def searchIndex(spark: org.apache.spark.sql.SparkSession, path: String,
+  def searchIndex(spark: SparkSession, path: String,
       corpus: DataFrame, queries: DataFrame, k: Int, nProbe: Int = 8,
       rerank: Int = 0, idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
-    val cents = spark.read.parquet(s"$path/centroids")
-    val pr = IvfAnn.probes(queries, cents, nProbe, idCol, vecCol)
-    val cells = pr.select("cell").distinct().collect().map(_.getLong(0))
-    val idx = spark.read.parquet(s"$path/index")
-      .where(col("cell").isin(cells.toIndexedSeq: _*))
-    val qm = broadcast(queries.select(col(idCol).as("qid"),
-      transform(col(vecCol), v => floor(v.cast("double") * 1000)
-        .cast("long")).as("q_m"),
-      col(vecCol).as("q_vec")))
+    val (pr, idx) = IvfAnn.probedIndex(spark, path, queries, nProbe, idCol,
+      vecCol)
     val prq = broadcast(pr.select("qid", "cell")
-      .join(qm.select("qid", "q_m"), "qid"))
-    val dot = aggregate(
-      zip_with(col("codes"), col("q_m"), (c, q) => c * q),
-      lit(0L), (a, x) => a + x)
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("score").desc, col("nid"))
-    val short = idx.join(prq, Seq("cell"))
-      .where(col("qid") =!= col("nid"))
-      .withColumn("score",
-        VectorPrep.floorDiv(dot * col("max_abs_q") * 10000L,
-          greatest(col("norm_x1e3"), lit(1L))))
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .where(col("rnk") <= math.max(rerank, k))
-    if (rerank <= 0) short.select("qid", "nid", "rnk")
-    else {
-      val wx = Window.partitionBy(col("qid"))
-        .orderBy(col("cos").desc, col("nid"))
-      short.select("qid", "nid")
-        .join(corpus.select(col(idCol).as("nid"),
-          col(vecCol).as("n_vec")), "nid")
-        .join(qm.select("qid", "q_vec"), "qid")
-        .withColumn("cos", F.cosine(col("q_vec"), col("n_vec")))
-        .withColumn("rnk", row_number().over(wx).cast("long"))
-        .where(col("rnk") <= k)
-        .select("qid", "nid", "rnk")
-    }
+      .join(VectorPrep.sq8Queries(queries, idCol, vecCol), "qid"))
+    VectorPrep.sq8Rank(idx.join(prq, Seq("cell")), corpus, queries, k,
+      rerank, idCol, vecCol)
   }
 }
 
@@ -568,27 +498,16 @@ object JlAnn {
   def topK(corpus: DataFrame, queries: DataFrame, k: Int, dims: Int = 16,
       shortlist: Int = 50, idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
-    def milli(vec: org.apache.spark.sql.Column) =
-      transform(vec, v => floor(v.cast("double") * 1000).cast("long"))
     val q = broadcast(queries.select(col(idCol).as("qid"),
       col(vecCol).as("q_vec"),
-      F.jlProject(milli(col(vecCol)), dims).as("q_p")))
+      F.jlProject(SearchTail.milli(col(vecCol)), dims).as("q_p")))
     val c = corpus.select(col(idCol).as("nid"), col(vecCol).as("n_vec"),
-      F.jlProject(milli(col(vecCol)), dims).as("n_p"))
-    val wS = Window.partitionBy(col("qid"))
-      .orderBy(col("pdot").desc, col("nid"))
-    val short = c.crossJoin(q)
-      .where(col("qid") =!= col("nid"))
-      .withColumn("pdot",
-        aggregate(zip_with(col("q_p"), col("n_p"), (a, b) => a * b),
-          lit(0L), (acc, x) => acc + x))
-      .withColumn("srnk", row_number().over(wS))
-      .where(col("srnk") <= shortlist)
-    val wC = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("nid"))
-    short.withColumn("cos", F.cosine(col("q_vec"), col("n_vec")))
-      .withColumn("rnk", row_number().over(wC).cast("long"))
-      .where(col("rnk") <= k)
-      .select("qid", "nid", "rnk")
+      F.jlProject(SearchTail.milli(col(vecCol)), dims).as("n_p"))
+    SearchTail.exactTopK(Ranking.topKPerGroup(c.crossJoin(q)
+        .where(col("qid") =!= col("nid"))
+        .withColumn("pdot",
+          aggregate(zip_with(col("q_p"), col("n_p"), (a, b) => a * b),
+            lit(0L), (acc, x) => acc + x)),
+      "qid", col("pdot").desc, col("nid"), shortlist, "srnk"), k)
   }
 }

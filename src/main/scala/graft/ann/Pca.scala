@@ -1,6 +1,7 @@
 package graft.ann
 
 import graft.etl.{Rounds, Store}
+import graft.functions.F.floorDiv
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -43,8 +44,8 @@ import org.apache.spark.sql.functions._
   *    ADVICE r16 zero-denominator guard is the greatest(…, 1)).
   *
   * Sign is determined (v₀ = 1 fixes the orientation); every floor is
-  * the subtract-pmod form, so loadings are byte-identical across
-  * partitionings and engines.
+  * [[graft.functions.F.floorDiv]]'s subtract-pmod form, so loadings are
+  * byte-identical across partitionings and engines.
   */
 object Pca {
 
@@ -57,20 +58,11 @@ object Pca {
     */
   private val DeflateDiv = 64L
 
-  /** Exact floor(a/b) for BIGINT columns, b > 0: subtract-pmod makes the
-    * numerator exactly divisible, so the integral `div` (truncating) and
-    * a true floor agree — and nothing routes through a double.
-    */
-  private[ann] def fdiv(a: Column, b: Column): Column =
-    call_function("div", a - pmod(a, b), b)
-
   /** Milli-quantized exploded component frame: (vid, j, x). */
   private def milliExploded(embeddings: DataFrame, idCol: String,
       vecCol: String): DataFrame =
     embeddings.select(col(idCol).as("vid"),
-      posexplode(transform(col(vecCol),
-        x => floor(x.cast("double") * 1000).cast("long")))
-        .as(Seq("j", "x")))
+      posexplode(SearchTail.milli(col(vecCol))).as(Seq("j", "x")))
 
   /** The normalized Gram (j, k, g) with |g| capped at ~[[GramScale]]:
     * center exactly (cross-multiplied, then one floor back to milli
@@ -81,7 +73,7 @@ object Pca {
       sum(col("x")).as("sj"), count(lit(1)).as("n"))
     val ce = el.join(broadcast(st), Seq("j"))
       .select(col("vid"), col("j"),
-        fdiv(col("x") * col("n") - col("sj"), col("n")).as("c"))
+        floorDiv(col("x") * col("n") - col("sj"), col("n")).as("c"))
     val cb = ce.select(col("vid"), col("j").as("k"), col("c").as("cb"))
     val graw = ce.join(cb, Seq("vid"))
       .groupBy(col("j"), col("k"))
@@ -95,9 +87,9 @@ object Pca {
     */
   private def rescaleGram(graw: DataFrame): DataFrame = {
     val gmax = graw.agg(max(abs(col("g0"))).as("gm"))
-      .select((fdiv(col("gm"), lit(GramScale)) + 1L).as("gdiv"))
+      .select((floorDiv(col("gm"), lit(GramScale)) + 1L).as("gdiv"))
     Store.snapshot(graw.crossJoin(broadcast(gmax)) // d² rows, reused
-      .select(col("j"), col("k"), fdiv(col("g0"), col("gdiv")).as("g")))
+      .select(col("j"), col("k"), floorDiv(col("g0"), col("gdiv")).as("g")))
   }
 
   /** `iters` exact power steps from v₀ = 1 over the normalized Gram:
@@ -110,9 +102,9 @@ object Pca {
         val w = g.join(broadcast(v), Seq("k"))
           .groupBy(col("j")).agg(sum(col("g") * col("v")).as("w"))
         val dv = w.agg(max(abs(col("w"))).as("mx"))
-          .select((fdiv(col("mx"), lit(LoadScale)) + 1L).as("d"))
+          .select((floorDiv(col("mx"), lit(LoadScale)) + 1L).as("d"))
         w.crossJoin(broadcast(dv))
-          .select(col("j").as("k"), fdiv(col("w"), col("d")).as("v"))
+          .select(col("j").as("k"), floorDiv(col("w"), col("d")).as("v"))
     }
 
   /** One-row (rayleigh) gauge of the component over the normalized
@@ -128,12 +120,12 @@ object Pca {
         Seq("k"))
       .groupBy(col("j")).agg(sum(col("g") * col("vb")).as("r"))
       .join(broadcast(va), Seq("j"))
-      .agg(sum(fdiv(col("r"), lit(LoadScale)) *
-        fdiv(col("va"), lit(1000L))).as("num"))
-    val den = v.agg(greatest(fdiv(sum(fdiv(col("v"), lit(1000L)) *
-      fdiv(col("v"), lit(1000L))), lit(1000L)), lit(1L)).as("den"))
+      .agg(sum(floorDiv(col("r"), lit(LoadScale)) *
+        floorDiv(col("va"), lit(1000L))).as("num"))
+    val den = v.agg(greatest(floorDiv(sum(floorDiv(col("v"), lit(1000L)) *
+      floorDiv(col("v"), lit(1000L))), lit(1000L)), lit(1L)).as("den"))
     num.crossJoin(den)
-      .select(fdiv(col("num"), col("den")).as("rayleigh"))
+      .select(floorDiv(col("num"), col("den")).as("rayleigh"))
   }
 
   /** One row per dimension: dim, pc1_x1e6 (L∞-normalized loading after
@@ -201,18 +193,18 @@ object Pca {
     val last = st.own(Rounds.run(g1, nComponents - 1) { (g, _) =>
       val (v, ray) = component(g)
       val pdiv = v.agg(sum(col("v") * col("v")).as("vv"))
-        .select((fdiv(col("vv"), lit(GramScale)) + 1L).as("pdiv"))
+        .select((floorDiv(col("vv"), lit(GramScale)) + 1L).as("pdiv"))
       val proj = v.select(col("k").as("j"), col("v").as("va"))
         .crossJoin(v.select(col("k"), col("v").as("vb")))
         .crossJoin(broadcast(pdiv))
         .select(col("j"), col("k"),
-          fdiv(col("va") * col("vb"), col("pdiv")).as("p"))
+          floorDiv(col("va") * col("vb"), col("pdiv")).as("p"))
       scaleBack *= DeflateDiv
       g.join(proj, Seq("j", "k"))
         .crossJoin(broadcast(ray))
         .select(col("j"), col("k"),
-          fdiv(col("g") - fdiv(col("rayleigh") *
-            fdiv(col("p"), lit(1000L)), lit(1000000L)),
+          floorDiv(col("g") - floorDiv(col("rayleigh") *
+            floorDiv(col("p"), lit(1000L)), lit(1000000L)),
             lit(DeflateDiv)).as("g"))
     }.last)
     component(last)
@@ -239,7 +231,7 @@ object Pca {
     */
   def removeTop(embeddings: DataFrame, idCol: String, vecCol: String,
       component: DataFrame, loadCol: String = "pc1_x1e6"): DataFrame =
-    sharpened(milli(embeddings, idCol, vecCol), idCol,
+    sharpened(milliVectors(embeddings, idCol, vecCol), idCol,
       loadings(component, loadCol))
       .select(col(idCol), col("sharp"), col("dot_v"))
 
@@ -257,7 +249,7 @@ object Pca {
       lit(0L), (acc, x) => acc + x)
     val dotV = (a: Column) => aggregate(zip_with(a, vLit, (x, b) => x * b),
       lit(0L), (acc, x) => acc + x)
-    sharpened(milli(embeddings, idCol, vecCol), idCol, vArr)
+    sharpened(milliVectors(embeddings, idCol, vecCol), idCol, vArr)
       .select(col(idCol), col("dot_v").as("dot_before"),
         dotV(col("sharp")).as("dot_after"),
         sq(col("m")).as("n2_before"), sq(col("sharp")).as("n2_after"))
@@ -273,17 +265,13 @@ object Pca {
     vArr
   }
 
-  private def milli(embeddings: DataFrame, idCol: String,
-      vecCol: String): DataFrame =
-    embeddings.select(col(idCol), transform(col(vecCol),
-      x => floor(x.cast("double") * 1000).cast("long")).as("m"))
-
   /** The milli-quantized vectors (idCol, m) — public so consumers that
     * A/B raw-vs-sharpened signatures (q177) project BOTH arms from the
     * same exact integer domain.
     */
   def milliVectors(embeddings: DataFrame, idCol: String,
-      vecCol: String): DataFrame = milli(embeddings, idCol, vecCol)
+      vecCol: String): DataFrame =
+    embeddings.select(col(idCol), SearchTail.milli(col(vecCol)).as("m"))
 
   /** (idCol, m milli array, sharp sharpened array, dot_v) — the shared
     * one-pass body of [[removeTop]]/[[removeTopAudit]].
@@ -298,7 +286,7 @@ object Pca {
         lit(0L), (acc, x) => acc + x))
       .select(col(idCol), col("m"),
         zip_with(col("m"), vLit,
-          (m, vj) => m - fdiv(col("dot_v") * vj, lit(vv))).as("sharp"),
+          (m, vj) => m - floorDiv(col("dot_v") * vj, lit(vv))).as("sharp"),
         col("dot_v"))
   }
 }

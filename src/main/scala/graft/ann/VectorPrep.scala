@@ -1,7 +1,7 @@
 package graft.ann
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
+import graft.functions.F
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Vector storage preparation — the leg between raw embeddings and the
@@ -19,9 +19,8 @@ import org.apache.spark.sql.functions._
   *    float→double widening is exact and IEEE multiply/floor agree
   *    across engines — so all later arithmetic is BIGINT;
   *  - the per-vector scale is max|qi| and codes are the exact
-  *    floor(qi·127/max|qi|) via the subtract-positive-mod-then-divide
-  *    pattern (the q126/q127 discipline — no division rounding can
-  *    move an integer quotient);
+  *    floor(qi·127/max|qi|) of [[graft.functions.F.floorDiv]] (no
+  *    division rounding can move an integer quotient);
   *  - the norm is floor(√Σqi²): the argument is an exact ≤2⁵³ integer
   *    and IEEE-754 sqrt is correctly rounded on every engine;
   *  - the audit is Σ|qi − dequant(code_i)| — exact BIGINT.
@@ -32,10 +31,23 @@ import org.apache.spark.sql.functions._
   */
 object VectorPrep {
 
-  /** Exact floor(a/b) for BIGINT columns, b > 0. */
-  private[ann] def floorDiv(a: org.apache.spark.sql.Column,
-      b: org.apache.spark.sql.Column) =
-    ((a - pmod(a, b)) / b).cast("long")
+  import SearchTail.milli
+
+  /** (id, _q milli components, max_abs_q) — the quantized vector and
+    * its SQ8 scale, bound once so every later lambda touches only its
+    * bound variables (the shingles O(n²) lesson).
+    */
+  private def quantized(df: DataFrame, id: Column,
+      vecCol: String): DataFrame = {
+    val q = milli(col(vecCol))
+    df.select(id, q.as("_q"),
+      aggregate(q, lit(0L), (a, x) => greatest(a, abs(x))).as("max_abs_q"))
+  }
+
+  /** floor(√Σqi²) of the bound `_q` — the milli-unit L2 norm. */
+  private def normX1e3: Column =
+    floor(sqrt(aggregate(col("_q"), lit(0L),
+      (a, x) => a + x * x).cast("double"))).cast("long").as("norm_x1e3")
 
   /** Per-vector SQ8 prep report. Output: idCol, n_dims, norm_x1e3
     * (floor of 1000·‖v‖₂), max_abs_q (the quantization scale in
@@ -44,19 +56,12 @@ object VectorPrep {
     * reconstruction audit), is_zero (a degenerate all-zero vector
     * quantizes to all-zero codes and is flagged, not divided by).
     */
-  def sq8Report(df: DataFrame, idCol: String, vecCol: String): DataFrame = {
-    val q = transform(col(vecCol),
-      v => floor(v.cast("double") * 1000).cast("long"))
-    val maxq = aggregate(q, lit(0L), (a, x) => greatest(a, abs(x)))
-    // bind the quantized array + scale once; every downstream lambda
-    // touches only its bound variables (the shingles O(n²) lesson)
-    df.select(col(idCol), q.as("_q"), maxq.as("max_abs_q"))
+  def sq8Report(df: DataFrame, idCol: String, vecCol: String): DataFrame =
+    quantized(df, col(idCol), vecCol)
       .select(
         col(idCol),
         size(col("_q")).cast("long").as("n_dims"),
-        floor(sqrt(aggregate(col("_q"), lit(0L),
-          (a, x) => a + x * x).cast("double"))).cast("long")
-          .as("norm_x1e3"),
+        normX1e3,
         col("max_abs_q"),
         // 1-based first position; Spark signals "absent" (only possible
         // for an EMPTY vector) as 0 where DuckDB's list_position yields
@@ -65,12 +70,11 @@ object VectorPrep {
           col("max_abs_q")), lit(0L)).cast("long").as("argmax_dim"),
         when(col("max_abs_q") === 0L, lit(0L))
           .otherwise(aggregate(col("_q"), lit(0L), (a, x) => {
-            val code = floorDiv(x * 127L, col("max_abs_q"))
-            val recon = floorDiv(code * col("max_abs_q"), lit(127L))
+            val code = F.floorDiv(x * 127L, col("max_abs_q"))
+            val recon = F.floorDiv(code * col("max_abs_q"), lit(127L))
             a + abs(x - recon)
           })).as("quant_mae_sum"),
         (col("max_abs_q") === 0L).as("is_zero"))
-  }
 
   /** SQ8-encoded serving rows — the layout a production vector store
     * scans instead of float32: idCol→nid, `codes` (the exact
@@ -81,20 +85,12 @@ object VectorPrep {
     * vector encodes to all-zero codes. One map-side pass, zero
     * shuffles.
     */
-  def sq8Encode(df: DataFrame, idCol: String, vecCol: String): DataFrame = {
-    val q = transform(col(vecCol),
-      v => floor(v.cast("double") * 1000).cast("long"))
-    df.select(col(idCol).as("nid"), q.as("_q"),
-        aggregate(q, lit(0L), (a, x) => greatest(a, abs(x)))
-          .as("max_abs_q"))
+  def sq8Encode(df: DataFrame, idCol: String, vecCol: String): DataFrame =
+    quantized(df, col(idCol).as("nid"), vecCol)
       .select(col("nid"),
         transform(col("_q"), x => when(col("max_abs_q") === 0L, lit(0L))
-          .otherwise(floorDiv(x * 127L, col("max_abs_q")))).as("codes"),
-        col("max_abs_q"),
-        floor(sqrt(aggregate(col("_q"), lit(0L),
-          (a, x) => a + x * x).cast("double"))).cast("long")
-          .as("norm_x1e3"))
-  }
+          .otherwise(F.floorDiv(x * 127L, col("max_abs_q")))).as("codes"),
+        col("max_abs_q"), normX1e3)
 
   /** SQ8 asymmetric search — the consumer of [[sq8Encode]]'s codes (the
     * q22/q32/q65 mold): the corpus side never touches a float — the
@@ -113,36 +109,33 @@ object VectorPrep {
     */
   def sq8TopK(corpus: DataFrame, queries: DataFrame, k: Int,
       rerank: Int = 0, idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame = {
-    val enc = sq8Encode(corpus, idCol, vecCol)
-    val qm = broadcast(queries.select(col(idCol).as("qid"),
-      transform(col(vecCol), v => floor(v.cast("double") * 1000)
-        .cast("long")).as("q_m"),
-      col(vecCol).as("q_vec")))
+      vecCol: String = "embedding"): DataFrame =
+    sq8Rank(sq8Encode(corpus, idCol, vecCol)
+      .crossJoin(sq8Queries(queries, idCol, vecCol)),
+      corpus, queries, k, rerank, idCol, vecCol)
+
+  /** The broadcast milli-unit query table (qid, q_m) SQ8 scoring reads. */
+  private[ann] def sq8Queries(queries: DataFrame, idCol: String,
+      vecCol: String): DataFrame =
+    broadcast(queries.select(col(idCol).as("qid"),
+      milli(col(vecCol)).as("q_m")))
+
+  /** The SQ8 integer-ADC scorer shared by [[sq8TopK]] (candidates = every
+    * code row × every query) and [[IvfSqAnn.searchIndex]] (candidates =
+    * the probed cells' code rows × their queries): score each
+    * ([[sq8Encode]] row, q_m) candidate, then shortlist and optionally
+    * re-rank ([[SearchTail.shortlist]]).
+    */
+  private[ann] def sq8Rank(cands: DataFrame, corpus: DataFrame,
+      queries: DataFrame, k: Int, rerank: Int, idCol: String,
+      vecCol: String): DataFrame = {
     val dot = aggregate(
       zip_with(col("codes"), col("q_m"), (c, q) => c * q),
       lit(0L), (a, x) => a + x)
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("score").desc, col("nid"))
-    val short = enc.crossJoin(qm.select("qid", "q_m"))
+    SearchTail.shortlist(cands
       .where(col("qid") =!= col("nid"))
-      .withColumn("score", floorDiv(dot * col("max_abs_q") * 10000L,
-        greatest(col("norm_x1e3"), lit(1L))))
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .where(col("rnk") <= math.max(rerank, k))
-    if (rerank <= 0) short.select("qid", "nid", "rnk")
-    else {
-      val wx = Window.partitionBy(col("qid"))
-        .orderBy(col("cos").desc, col("nid"))
-      short.select("qid", "nid")
-        .join(corpus.select(col(idCol).as("nid"),
-          col(vecCol).as("n_vec")), "nid")
-        .join(qm.select("qid", "q_vec"), "qid")
-        .withColumn("cos",
-          graft.functions.F.cosine(col("q_vec"), col("n_vec")))
-        .withColumn("rnk", row_number().over(wx).cast("long"))
-        .where(col("rnk") <= k)
-        .select("qid", "nid", "rnk")
-    }
+      .withColumn("score", F.floorDiv(dot * col("max_abs_q") * 10000L,
+        greatest(col("norm_x1e3"), lit(1L)))),
+      col("score").desc, k, rerank, corpus, queries, idCol, vecCol)
   }
 }

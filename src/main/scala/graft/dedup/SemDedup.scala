@@ -1,6 +1,6 @@
 package graft.dedup
 
-import graft.ann.PqAnn
+import graft.ann.{PqAnn, SearchTail}
 import graft.etl.{Rounds, Store}
 import graft.functions.F
 import org.apache.spark.sql.DataFrame
@@ -171,8 +171,7 @@ object SemDedup {
     // centroid → super-cell (exact flat argmax; both sides tiny)
     val cmap = cents.crossJoin(broadcast(sup))
       .groupBy(col("cid"))
-      .agg(max(struct(F.cosine(col("c_vec"), col("s_vec")).as("cos"),
-        col("scid").as("scid"))).as("m"))
+      .agg(SearchTail.nearest("c_vec", "s_vec", "scid").as("m"))
       .select(col("cid"), col("m.scid").as("scell"))
     val centsMapped = cents.join(cmap, "cid")
     // BOUNDED collect (⌈√k⌉ rows — no larger than the flat path's cents
@@ -206,8 +205,7 @@ object SemDedup {
       .join(broadcast(centsMapped), "scell")
       .groupBy(col("nid"))
       .agg(max(col("n_vec")).as("n_vec"),
-        max(struct(F.cosine(col("n_vec"), col("c_vec")).as("cos"),
-          col("cid").as("cid"))).as("m"))
+        SearchTail.nearest("n_vec", "c_vec", "cid").as("m"))
       .select(col("nid"), col("m.cid").as("cell"), col("n_vec"))
   }
 

@@ -89,16 +89,8 @@ object CorpusStats {
       sum(col("x")).over(wAll) * sum(col("x")).over(wAll)
     pts.select((col("dec") + 1L).as("bucket"), col("n_tokens"),
       col("n_vocab"),
-      // pmod-floor division: matches DuckDB's `//` for any sign of num
-      ((num - pmod(num, den)) / den).cast("long").as("heaps_beta_x1e6"))
+      F.floorDiv(num, den).as("heaps_beta_x1e6"))
   }
-
-  /** Exact floor(a/b) on BIGINT columns, b > 0 — subtract-pmod into the
-    * integral `div` so nothing routes through a double (the Pca r17
-    * discipline).
-    */
-  private def fdiv(a: Column, b: Column): Column =
-    call_function("div", a - pmod(a, b), b)
 
   /** Corpus-concentration (Lorenz) report — the mixing gauge a 100 TB
     * deployment reads before setting domain caps (q136) or mixture
@@ -126,12 +118,12 @@ object CorpusStats {
       .agg(sum(col(weightCol)).as("w"))
     val r = Prefix.withRankPrefixTotals(per,
       orderCols = Seq("w", "g"), valueCols = Seq("w" -> "cum_w"))
-    val sdiv = fdiv(lit(r.totals("cum_w")), lit(1000000L)) + 1L
+    val sdiv = F.floorDiv(lit(r.totals("cum_w")), lit(1000000L)) + 1L
     r.df.groupBy(Prefix.ntileBin(col("idx"), r.totalCount, bins).as("bin"))
       .agg(count(lit(1)).as("n_groups"), sum(col("w")).as("tokens"),
         max(col("cum_w") + col("w")).as("cum_end"))
       .select(col("bin"), col("n_groups"), col("tokens"),
-        fdiv(col("tokens"), sdiv).as("share_x1e6"),
-        fdiv(col("cum_end"), sdiv).as("cum_share_x1e6"))
+        F.floorDiv(col("tokens"), sdiv).as("share_x1e6"),
+        F.floorDiv(col("cum_end"), sdiv).as("cum_share_x1e6"))
   }
 }

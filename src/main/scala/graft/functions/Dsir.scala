@@ -116,13 +116,10 @@ object Dsir {
       .select(col("doc_id"), col("n_feats"),
         floor(col("sum_w") * 1000).cast("long").as("logratio_x1000"))
       // floor(1000·Σw/n) = floor(floor(1000·Σw)/n) for integer n>0, so
-      // the normalization is exact BIGINT floor division (pmod
-      // subtracted before the divide — the Kmv/CorpusStats discipline;
-      // a rounded decimal quotient near an integer can floor
-      // differently across engines)
+      // the normalization is exact BIGINT floor division (a rounded
+      // decimal quotient near an integer can floor differently across
+      // engines)
       .withColumn("avg_x1000",
-        ((col("logratio_x1000")
-            - pmod(col("logratio_x1000"), col("n_feats")))
-          / col("n_feats")).cast("long"))
+        F.floorDiv(col("logratio_x1000"), col("n_feats")))
   }
 }

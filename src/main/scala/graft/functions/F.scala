@@ -375,7 +375,10 @@ object F {
   def exactSum2(c: Column): Column =
     sum(c.cast(DecimalType(18, 2))).cast(DoubleType)
 
-  /** Order-independent average built from [[exactSum2]] / count. */
-  def exactAvg2(c: Column): Column =
-    sum(c.cast(DecimalType(18, 2))).cast(DoubleType) / count(c)
+  /** Exact floor(a/b) for BIGINT columns, b > 0: subtracting pmod makes
+    * the numerator exactly divisible, so the integral `div` (truncating)
+    * and a true floor agree, and nothing routes through a double.
+    */
+  def floorDiv(a: Column, b: Column): Column =
+    call_function("div", a - pmod(a, b), b)
 }

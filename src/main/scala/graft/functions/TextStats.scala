@@ -524,9 +524,7 @@ object Perplexity {
           .as("n_uni_backoffs"),
         floor(sum(col("nll")) * 1000).cast("long").as("sum_nll_x1000"))
     scored.withColumn("avg_nll_x1000",
-      ((col("sum_nll_x1000")
-          - pmod(col("sum_nll_x1000"), col("n_trigrams")))
-        / col("n_trigrams")).cast("long"))
+      F.floorDiv(col("sum_nll_x1000"), col("n_trigrams")))
   }
 
   /** CCNet-style trained-LM perplexity filter: fit an add-one-smoothed

@@ -560,12 +560,16 @@ private[graft] object AnnQueries {
         // ONE aggregate reads off both counts (r20, guide §5): pairs is
         // unique on (id_a, id_b) — hammingPairs ends in a groupBy on
         // exactly that key — and truth is unique by construction, so a
-        // broadcast left join + count(_t) ≡ the truth∩pairs semi-join
-        // count, and the pairs pipeline now has ONE consumer: its r19
-        // eager checkpoint (a blocking job per arm) is gone
+        // left join + count(_t) ≡ the truth∩pairs semi-join count, and
+        // the pairs pipeline now has ONE consumer: its r19 eager
+        // checkpoint (a blocking job per arm) is gone. No broadcast
+        // hint: truth is half the embeddings, so a forced broadcast grows
+        // with the corpus. AQE broadcasts truth from its measured shuffle
+        // size while it fits (at sf0.01 the sort-merge join it plans
+        // runs as a broadcast hash join)
         val pairs = SimHashDedup.hammingPairs(sig, "vec_id", "srp_sig",
           maxHamming = 3, maxBucket = 1024)
-        val nc = pairs.join(broadcast(truth.withColumn("_t", lit(1))),
+        val nc = pairs.join(truth.withColumn("_t", lit(1)),
             Seq("id_a", "id_b"), "left")
           .agg(count(lit(1)).as("n_candidates"),
             count(col("_t")).as("n_hits"))

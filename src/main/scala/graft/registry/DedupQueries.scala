@@ -21,10 +21,13 @@ private[graft] object DedupQueries {
   private def bestProbeMatch(inc: DataFrame, cand: DataFrame): DataFrame =
     MinHashDedup.bestMatch(inc, cand)
 
-  /** q137/q137b/q149's cached signatures of the `docs` rows `pred` keeps. */
+  /** q137/q137b/q149's signatures of the `docs` rows `pred` keeps. Not
+    * stored: a few dozen deterministic signatures recompute for free,
+    * and a builder has no scope that could free them.
+    */
   private def probeSigs(docs: DataFrame, pred: Column): DataFrame =
-    Store.cache(MinHashDedup.signatures(docs.where(pred), "doc_id", "text",
-      ShingleK, NumPerms, Bands))
+    MinHashDedup.signatures(docs.where(pred), "doc_id", "text",
+      ShingleK, NumPerms, Bands)
 
   /** The q175/q176/q178 shared ExactSubstr substrate (VERDICT r18 task
     * 4 — the three queries previously each re-ran the full

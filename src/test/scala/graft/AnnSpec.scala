@@ -406,4 +406,53 @@ class AnnSpec extends SparkSpec {
     // 100-row shortlist measured ~80 here — 60 is the regression floor
     assert(rec >= 60.0, s"JL avg recall $rec < 60")
   }
+
+  test("IVF+SQ8 probing every cell equals flat SQ8 row for row, with and without re-rank") {
+    import graft.ann.{IvfSqAnn, VectorPrep}
+    val e = Tables(spark, sf0001).embeddings
+    val queries = e.where(col("vec_id") < 50)
+    val path = java.nio.file.Files
+      .createTempDirectory("ivfsq_full").toString + "/ix"
+    IvfSqAnn.buildIndex(e, path, nCentroids = 16)
+    for (rerank <- Seq(0, 50)) {
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.as[(Long, Long, Long)].collect().sorted.toSeq
+      val ivf = rows(IvfSqAnn.searchIndex(spark, path, e, queries, k = 5,
+        nProbe = 16, rerank = rerank))
+      assert(ivf.size == 250, s"rerank=$rerank: ${ivf.size} rows")
+      assert(ivf == rows(VectorPrep.sq8TopK(e, queries, k = 5,
+        rerank = rerank)), s"rerank=$rerank")
+    }
+  }
+
+  test("each vector-search tail decision has one home in ann/ and SemDedup") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala/graft")
+    assert(Files.isDirectory(root), s"run from the repo root: $root")
+    val files = Files.list(root.resolve("ann")).iterator().asScala.toList
+      .filter(_.toString.endsWith(".scala")) :+
+      root.resolve("dedup/SemDedup.scala")
+    val names = files.map(_.getFileName.toString).toSet
+    assert(Set("Ann.scala", "BitextMining.scala", "SearchTail.scala",
+      "SemDedup.scala").subsetOf(names), s"scanned $names")
+    // pattern -> its home: (file, occurrences); zero everywhere else.
+    // The scanner cuts string literals out, so cast("double") reads cast()
+    val homes = Seq(
+      // only mineGlobalPairs' rf/rb pair, which must share one row
+      """row_number\(\)""" -> Map("BitextMining.scala" -> 2),
+      """floor\(\s*\w+\.cast\(\)\s*\*\s*1000L?\s*\)""" ->
+        Map("SearchTail.scala" -> 1),
+      """max\(\s*struct\(\s*F\.cosine""" -> Map("SearchTail.scala" -> 1),
+      // F.floorDiv is the one floor division
+      """-\s*pmod\(""" -> Map.empty[String, Int])
+    val code = files.map(f =>
+      f.getFileName.toString -> CodeScan.codeLines(f).mkString("\n"))
+    val wrong = for {
+      (pattern, home) <- homes
+      (name, text) <- code
+      n = pattern.r.findAllIn(text).size if n != home.getOrElse(name, 0)
+    } yield s"$name: $n x /$pattern/, want ${home.getOrElse(name, 0)}"
+    assert(wrong.isEmpty, wrong.mkString("\n"))
+  }
 }

@@ -1,12 +1,12 @@
 package graft
 
 import graft.registry.QueryDef
-import org.scalatest.funsuite.AnyFunSuite
 
 /** The query registry's invariants: each name declared once, every oracle
-  * keyed to a declared query, and the rows-only set explicit.
+  * keyed to a declared query, the rows-only set explicit, and builders
+  * that leave nothing stored behind.
   */
-class RegistrySpec extends AnyFunSuite {
+class RegistrySpec extends SparkSpec {
 
   test("a registry with a duplicated name fails to build") {
     val q = QueryDef("q_dup", (s, dir) => Tables(s, dir).orders, None)
@@ -29,5 +29,20 @@ class RegistrySpec extends AnyFunSuite {
       Set("q47_bpe_tokens", "q84_semdedup", "q94_compress_ratio"))
     assert(SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet ===
       Set("q47_bpe_tokens", "q84_semdedup", "q94_compress_ratio"))
+  }
+
+  test("building and collecting q137, q137b and q149 leaves nothing stored") {
+    val cacheManager = spark
+      .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    // `numCachedEntries` is private[sql] to Scala, public in bytecode
+    val entries = cacheManager.getClass.getMethod("numCachedEntries")
+    def stored = (spark.sparkContext.getPersistentRDDs.keySet.toSet,
+      entries.invoke(cacheManager))
+    val before = stored
+    for (q <- Seq("q137_dedup_probe", "q137b_dedup_probe_persisted",
+        "q149_index_lifecycle"))
+      assert(SparkEntry.queries(q)(spark, sf0001).collect().nonEmpty, q)
+    assert(stored === before)
   }
 }
