@@ -19,11 +19,12 @@ import org.apache.spark.sql.functions._
   * orchestration.
   *
   * Parsing posture (mirrors [[HtmlText]]'s bounded-subset honesty): the
-  * kernel genuinely scans `<meta>`/`<a>` opening tags with
-  * attribute-order-robust, case-insensitive matching over double-quoted
-  * attribute values — the shape every template engine emits — rather than
-  * a full HTML5 tokenizer; exotic unquoted/single-quoted attributes are
-  * out of subset and read as absent (fail-open to "no directive", the
+  * kernel genuinely scans `<meta>`/`<a>` opening tags through
+  * [[HtmlTags]] — attribute-order-robust, case-insensitive, over
+  * double-quoted attribute values, the shape every template engine
+  * emits — rather than a full HTML5 tokenizer; exotic
+  * unquoted/single-quoted attributes are out of subset and read as
+  * absent (fail-open to "no directive", the
   * conservative crawl default for MISSING metadata, while planted
   * fixtures prove every in-subset corner). All pure column expressions —
   * one map-side whole-stage-codegen pass, zero shuffles, zero UDFs.
@@ -34,10 +35,6 @@ import org.apache.spark.sql.functions._
   */
 object RobotsMeta {
 
-  /** Every `<meta ...>` opening tag in the page, verbatim. */
-  private def metaTags(html: Column): Column =
-    regexp_extract_all(html, lit("(?i)<meta\\b[^>]*>"), lit(0))
-
   /** Lowercased, trimmed directive tokens aggregated over every
     * `<meta name="robots">` tag (multiple tags compose by union, the
     * documented crawler behavior: the most restrictive directive wins,
@@ -46,11 +43,11 @@ object RobotsMeta {
     * description) contributes nothing.
     */
   def directives(html: Column): Column = {
-    val robots = filter(metaTags(html), m =>
+    val robots = filter(HtmlTags.openTags(html, "meta"), m =>
       regexp_extract(m,
         "(?i)\\bname\\s*=\\s*\"\\s*robots\\s*\"", 0) =!= "")
-    val contents = transform(robots, m =>
-      lower(regexp_extract(m, "(?i)\\bcontent\\s*=\\s*\"([^\"]*)\"", 1)))
+    // content="" stays "" (not NULL), so flatten below never goes NULL
+    val contents = transform(robots, m => lower(HtmlTags.attr(m, "content")))
     filter(
       flatten(transform(contents, c =>
         transform(split(c, ","), t => trim(t)))),
@@ -71,8 +68,7 @@ object RobotsMeta {
   /** Every `<a ...>` opening tag in the page, verbatim (tag-level: the
     * href/rel attributes are read off these with the extractors below).
     */
-  def anchorTags(html: Column): Column =
-    regexp_extract_all(html, lit("(?i)<a\\b[^>]*>"), lit(0))
+  def anchorTags(html: Column): Column = HtmlTags.openTags(html, "a")
 
   /** Whether one anchor opening tag carries `nofollow` as a
     * whitespace-delimited token of its `rel` attribute (the registry

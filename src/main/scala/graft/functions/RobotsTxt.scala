@@ -54,49 +54,56 @@ object RobotsTxt {
     else true
   }
 
-  private final case class Rule(allow: Boolean, pattern: String)
-
-  /** Parse groups, return the rules that apply to `agent` (see doc).
-    * Group MEMBERSHIP is tracked independently of whether any usable
-    * rule was collected: a group that names the agent but carries only
-    * empty-valued rules (the "this bot may crawl everything" idiom) is
-    * still THE applicable group — it must not fall through to `*`
-    * (RFC 9309 group selection; caught by the r11 review).
+  /** One `name: value` line of a robots.txt body: the field name
+    * lower-cased, the value trimmed.
     */
-  private def applicableRules(robots: String, agent: String): java.util.ArrayList[Rule] = {
+  private final case class Record(key: String, value: String)
+
+  /** The record tokenizer every kernel reads through (RFC 9309 §2.2):
+    * lines end at CR, LF or CRLF, `#` starts a comment, and a line
+    * without a colon after a non-empty name carries no record.
+    */
+  private def records(robots: String): Iterator[Record] =
+    robots.split("\r\n|\r|\n", -1).iterator.flatMap { line0 =>
+      val hash = line0.indexOf('#')
+      val line = (if (hash >= 0) line0.substring(0, hash) else line0).trim
+      val colon = line.indexOf(':')
+      if (colon <= 0) None
+      else Some(Record(line.substring(0, colon).trim
+        .toLowerCase(java.util.Locale.ROOT), line.substring(colon + 1).trim))
+    }
+
+  /** The group-scoped records (everything but `User-agent`) that apply
+    * to `agent`, in file order. A group is a run of `User-agent` lines
+    * and the records after it; records before any `User-agent` line
+    * belong to no group. Every group naming the agent exactly
+    * (case-insensitive) applies; if none does, the `*` groups apply.
+    * Group MEMBERSHIP is tracked independently of what the group holds:
+    * a group that names the agent but carries only empty-valued rules
+    * (the "this bot may crawl everything" idiom) is still THE applicable
+    * group — it must not fall through to `*` (RFC 9309 group selection;
+    * caught by the r11 review).
+    */
+  private def applicable(robots: String, agent: String): Seq[Record] = {
     val agentLc = agent.toLowerCase(java.util.Locale.ROOT)
-    val exact = new java.util.ArrayList[Rule]()
-    val wild = new java.util.ArrayList[Rule]()
+    val exact = Seq.newBuilder[Record]
+    val wild = Seq.newBuilder[Record]
     var exactGroupExists = false
     var groupAgents: List[String] = Nil
     var inAgentRun = false // consecutive User-agent lines share a group
-    for (line0 <- robots.split("\n", -1)) {
-      var line = line0
-      val hash = line.indexOf('#')
-      if (hash >= 0) line = line.substring(0, hash)
-      line = line.trim
-      val colon = line.indexOf(':')
-      if (colon > 0) {
-        val key = line.substring(0, colon).trim.toLowerCase(java.util.Locale.ROOT)
-        val value = line.substring(colon + 1).trim
-        key match {
-          case "user-agent" =>
-            val v = value.toLowerCase(java.util.Locale.ROOT)
-            if (inAgentRun) groupAgents ::= v
-            else { groupAgents = List(v); inAgentRun = true }
-            if (v == agentLc) exactGroupExists = true
-          case "allow" | "disallow" =>
-            inAgentRun = false
-            if (value.nonEmpty) { // empty Disallow matches nothing
-              val r = Rule(key == "allow", value)
-              if (groupAgents.contains(agentLc)) exact.add(r)
-              else if (groupAgents.contains("*")) wild.add(r)
-            }
-          case _ => inAgentRun = false // sitemap/crawl-delay etc. end the run
-        }
+    for (r <- records(robots)) {
+      if (r.key == "user-agent") {
+        val v = r.value.toLowerCase(java.util.Locale.ROOT)
+        if (inAgentRun) groupAgents ::= v
+        else { groupAgents = List(v); inAgentRun = true }
+        if (v == agentLc) exactGroupExists = true
+      } else {
+        inAgentRun = false
+        if (groupAgents.contains(agentLc)) exact += r
+        else if (groupAgents.contains("*")) wild += r
       }
     }
-    if (exactGroupExists) exact else wild
+    (if (exactGroupExists) exact else wild).result()
   }
 
   // ---- static kernel (Catalyst-facing) ------------------------------------
@@ -105,98 +112,48 @@ object RobotsTxt {
     * link from the politeness dim (q105) to sitemap ingest (q110).
     * Per the sitemaps.org protocol the record is GROUP-INDEPENDENT
     * (valid anywhere in the file, regardless of User-agent runs), so
-    * this is a flat scan: comments strip, the field name is
-    * case-insensitive, values trim, empty values drop. NULL/absent
-    * robots → empty array (no advertised sitemaps).
+    * this reads every record; empty values drop. NULL/absent robots →
+    * empty array (no advertised sitemaps).
     */
   def sitemapsKernel(robots: UTF8String): org.apache.spark.sql.catalyst.util.ArrayData = {
-    val out = new java.util.ArrayList[UTF8String]()
-    if (robots != null) {
-      for (line0 <- robots.toString.split("\n", -1)) {
-        var line = line0
-        val hash = line.indexOf('#')
-        if (hash >= 0) line = line.substring(0, hash)
-        line = line.trim
-        val colon = line.indexOf(':')
-        if (colon > 0 &&
-            line.substring(0, colon).trim
-              .equalsIgnoreCase("sitemap")) {
-          val value = line.substring(colon + 1).trim
-          if (value.nonEmpty) out.add(UTF8String.fromString(value))
-        }
-      }
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      out.toArray(new Array[UTF8String](out.size())))
+    val urls: Array[Any] = if (robots == null) Array.empty
+      else records(robots.toString).collect {
+        case Record("sitemap", v) if v.nonEmpty => UTF8String.fromString(v)
+      }.toArray
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(urls)
   }
 
   /** De-facto `Crawl-delay` record (not in RFC 9309, but the public
     * industry convention Bing/Yandex document — group-scoped like
     * Allow/Disallow): seconds the named agent should wait between
-    * fetches. Group selection mirrors [[allowedKernel]]: groups naming
-    * the agent exactly take precedence over `*` groups; the FIRST
-    * parseable non-negative value among the applicable groups wins;
-    * absent/unparseable → -1 (the column surface maps it to NULL).
+    * fetches, the FIRST parseable non-negative value among the
+    * [[applicable]] records; absent/unparseable → -1 (the column
+    * surface maps it to NULL).
     */
   def crawlDelayKernel(robots: UTF8String, agent: UTF8String): Double = {
     if (robots == null || agent == null) return -1.0
-    val agentLc = agent.toString.toLowerCase(java.util.Locale.ROOT)
-    var exactDelay = -1.0
-    var wildDelay = -1.0
-    var exactGroupExists = false
-    var groupAgents: List[String] = Nil
-    var inAgentRun = false
-    for (line0 <- robots.toString.split("\n", -1)) {
-      var line = line0
-      val hash = line.indexOf('#')
-      if (hash >= 0) line = line.substring(0, hash)
-      line = line.trim
-      val colon = line.indexOf(':')
-      if (colon > 0) {
-        val key = line.substring(0, colon).trim
-          .toLowerCase(java.util.Locale.ROOT)
-        val value = line.substring(colon + 1).trim
-        key match {
-          case "user-agent" =>
-            val v = value.toLowerCase(java.util.Locale.ROOT)
-            if (inAgentRun) groupAgents ::= v
-            else { groupAgents = List(v); inAgentRun = true }
-            if (v == agentLc) exactGroupExists = true
-          case "crawl-delay" =>
-            inAgentRun = false
-            val d = try value.toDouble
-              catch { case _: NumberFormatException => -1.0 }
-            if (d >= 0) {
-              if (groupAgents.contains(agentLc)) {
-                if (exactDelay < 0) exactDelay = d
-              } else if (groupAgents.contains("*") && wildDelay < 0)
-                wildDelay = d
-            }
-          case _ => inAgentRun = false
-        }
-      }
-    }
-    if (exactGroupExists) exactDelay else wildDelay
+    applicable(robots.toString, agent.toString).iterator
+      .collect { case Record("crawl-delay", v) =>
+        try v.toDouble catch { case _: NumberFormatException => -1.0 } }
+      .find(_ >= 0).getOrElse(-1.0)
   }
 
   /** Would `agent` be allowed to fetch `path` under `robots`? */
   def allowedKernel(robots: UTF8String, agent: UTF8String,
       path: UTF8String): Boolean = {
     if (robots == null || agent == null || path == null) return true
-    val rules = applicableRules(robots.toString, agent.toString)
     val p = path.toString
     var bestLen = -1
     var bestAllow = true
-    var i = 0
-    while (i < rules.size()) {
-      val r = rules.get(i)
-      if (patternMatches(r.pattern, p)) {
-        val len = r.pattern.length
-        if (len > bestLen || (len == bestLen && r.allow && !bestAllow)) {
-          bestLen = len; bestAllow = r.allow
-        }
+    for (Record(key, pattern) <- applicable(robots.toString, agent.toString)
+      // an empty Disallow matches nothing (the allow-all idiom)
+      if (key == "allow" || key == "disallow") && pattern.nonEmpty &&
+        patternMatches(pattern, p)) {
+      val allow = key == "allow"
+      val len = pattern.length
+      if (len > bestLen || (len == bestLen && allow && !bestAllow)) {
+        bestLen = len; bestAllow = allow
       }
-      i += 1
     }
     if (bestLen < 0) true else bestAllow
   }

@@ -49,26 +49,22 @@ object StructuredData {
   // standard metadata names), and `<link rel="...">` types including feed
   // autodiscovery (`rel="alternate" type="application/rss+xml|atom+xml"`,
   // the RSS-Board / WHATWG convention). Same parsing posture as the
-  // JSON-LD scan: attribute order is free, names case-fold, the
-  // double-quoted attribute subset is the documented contract, and a
-  // malformed tag (missing content/href) degrades to NULL, never a throw.
-  // Scanning goes tag-list-first — extract every `<meta …>`/`<link …>`
-  // open tag, filter by the key attribute, then read the value attribute
-  // from the FIRST hit — so a decoy mention of the key inside another
-  // tag's VALUE (e.g. content="og:title decoy") can never match, which a
-  // single cross-attribute regex could not guarantee. Map-side, zero
-  // shuffles; only the lambda variable enters the filter lambdas (the
-  // O(tokens²) rebind discipline — F.scala:56).
-
-  private def openTags(html: Column, tag: String): Column =
-    regexp_extract_all(html, lit(s"(?i)<$tag\\b[^>]*>"), lit(0))
+  // JSON-LD scan, read through [[HtmlTags]]: attribute order is free,
+  // names case-fold, the double-quoted attribute subset is the documented
+  // contract, and a malformed tag (missing content/href) degrades to
+  // NULL, never a throw. Scanning goes tag-list-first — every
+  // `<meta …>`/`<link …>` open tag, filtered by the key attribute, then
+  // the value attribute of the FIRST hit — so a decoy mention of the key
+  // inside another tag's VALUE (e.g. content="og:title decoy") can never
+  // match, which a single cross-attribute regex could not guarantee.
+  // Map-side, zero shuffles; only the lambda variable enters the filter
+  // lambdas (the O(tokens²) rebind discipline — F.scala:56).
 
   /** A double-quoted attribute value from one open tag; NULL when the
     * attribute is absent or empty (the malformed-tag soft contract).
     */
   private def attrValue(tag: Column, name: String): Column =
-    nullif(regexp_extract(tag,
-      s"""(?i)\\b$name\\s*=\\s*"([^"]*)"""", 1), lit(""))
+    nullif(HtmlTags.attr(tag, name), lit(""))
 
   /** content= of the first `<meta>` whose property= or name= equals
     * `key` (case-insensitive; Open Graph uses property=, standard
@@ -76,14 +72,14 @@ object StructuredData {
     * consume-what-publishers-emit posture of real crawlers).
     */
   def metaContent(html: Column, key: String): Column = {
-    val hits = filter(openTags(html, "meta"), t =>
+    val hits = filter(HtmlTags.openTags(html, "meta"), t =>
       t.rlike("(?i)\\b(?:property|name)\\s*=\\s*\"\\Q" + key + "\\E\""))
     attrValue(get(hits, lit(0)), "content")
   }
 
   /** href= of the first `<link>` whose rel= equals `rel`. */
   def linkHref(html: Column, rel: String): Column = {
-    val hits = filter(openTags(html, "link"), t =>
+    val hits = filter(HtmlTags.openTags(html, "link"), t =>
       t.rlike("(?i)\\brel\\s*=\\s*\"\\Q" + rel + "\\E\""))
     attrValue(get(hits, lit(0)), "href")
   }
@@ -93,7 +89,7 @@ object StructuredData {
     * {'rss','atom'} — NULL fields when the page advertises no feed.
     */
   def feedLink(html: Column): Column = {
-    val hits = filter(openTags(html, "link"), t =>
+    val hits = filter(HtmlTags.openTags(html, "link"), t =>
       t.rlike("(?i)\\brel\\s*=\\s*\"alternate\"") &&
         t.rlike("(?i)\\btype\\s*=\\s*\"application/(?:rss|atom)\\+xml\""))
     val first = get(hits, lit(0))

@@ -39,9 +39,6 @@ package graft.multimodal
   */
 object AudioFingerprint {
 
-  private def s16le(b: Array[Byte], i: Int): Int =
-    ((b(i) & 0xff) | (b(i + 1) << 8)).toShort.toInt
-
   /** Per-frame amplitudes |Σ channels| of an integer-PCM WAV (the
     * [[AudioHeader.walk]] chunk walk), or null on corrupt/torn/non-PCM
     * bytes — shared by [[fingerprint]] and [[vadStats]].
@@ -64,7 +61,8 @@ object AudioFingerprint {
       var c = 0
       while (c < ch) {
         s += (if (bits == 8) (b(dataOff + f * stride + c) & 0xff) - 128
-              else s16le(b, dataOff + f * stride + c * 2))
+              else graft.functions.Bytes.le16(b, dataOff + f * stride + c * 2)
+                .toShort.toInt)
         c += 1
       }
       amp(f) = math.abs(s)

@@ -1,5 +1,6 @@
 package graft.multimodal
 
+import graft.functions.Bytes.{fourCC, le16, le32}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 
 /** WAV/RIFF audio-container header decode — the audio leg of the
@@ -22,14 +23,6 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
   */
 object AudioHeader {
 
-  private def u16le(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-  private def u32le(b: Array[Byte], i: Int): Long =
-    (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) |
-      ((b(i + 2) & 0xffL) << 16) | ((b(i + 3) & 0xffL) << 24)
-  private def tag(b: Array[Byte], i: Int): String =
-    new String(Array(b(i), b(i + 1), b(i + 2), b(i + 3)), "US-ASCII")
-
   /** The `fmt ` fields and the `data` chunk's place in a WAV. */
   private[multimodal] final case class WavLayout(format: Int, channels: Int,
       sampleRate: Long, bits: Int, dataOff: Int, dataSize: Long)
@@ -41,21 +34,21 @@ object AudioHeader {
     */
   private[multimodal] def walk(b: Array[Byte]): WavLayout = {
     if (b == null || b.length < 12) return null
-    if (tag(b, 0) != "RIFF" || tag(b, 8) != "WAVE") return null
+    if (fourCC(b, 0) != "RIFF" || fourCC(b, 8) != "WAVE") return null
     var off = 12
     var fmtCode = -1; var ch = -1; var sr = -1L; var bits = -1
     var dataOff = -1; var dataSize = -1L
     while (off + 8 <= b.length && (fmtCode < 0 || dataOff < 0)) {
-      val id = tag(b, off)
-      val sz = u32le(b, off + 4)
+      val id = fourCC(b, off)
+      val sz = le32(b, off + 4)
       val body = off + 8
       if (body + sz > b.length) return null // declared size overruns: torn
       if (id == "fmt ") {
         if (sz < 16) return null
-        fmtCode = u16le(b, body)
-        ch = u16le(b, body + 2)
-        sr = u32le(b, body + 4)
-        bits = u16le(b, body + 14)
+        fmtCode = le16(b, body)
+        ch = le16(b, body + 2)
+        sr = le32(b, body + 4)
+        bits = le16(b, body + 14)
       } else if (id == "data") {
         dataOff = body; dataSize = sz
       }

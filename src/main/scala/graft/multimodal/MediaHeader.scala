@@ -1,5 +1,6 @@
 package graft.multimodal
 
+import graft.functions.Bytes.{be16, be32, le16, le32, u8}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Real image-container header kernels — the first non-stub slice of the
@@ -36,36 +37,14 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object MediaHeader {
 
-  private val PngSig =
-    Array(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a)
-
-  private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xff
-
-  private def be32(b: Array[Byte], i: Int): Long =
-    (u8(b, i).toLong << 24) | (u8(b, i + 1).toLong << 16) |
-      (u8(b, i + 2).toLong << 8) | u8(b, i + 3).toLong
-
-  private def be16(b: Array[Byte], i: Int): Int =
-    (u8(b, i) << 8) | u8(b, i + 1)
-
-  private def isPng(b: Array[Byte]): Boolean = {
-    if (b == null || b.length < 24) return false
-    var i = 0
-    while (i < 8) { if (u8(b, i) != PngSig(i)) return false; i += 1 }
+  private def isPng(b: Array[Byte]): Boolean =
     // IHDR must be the first chunk (RFC 2083 §3.2) and carries 13 bytes
-    be32(b, 8) == 13L && u8(b, 12) == 'I' && u8(b, 13) == 'H' &&
+    b != null && b.length >= 24 && Png.hasSignature(b) &&
+      be32(b, 8) == 13L && u8(b, 12) == 'I' && u8(b, 13) == 'H' &&
       u8(b, 14) == 'D' && u8(b, 15) == 'R'
-  }
 
   private def isJpeg(b: Array[Byte]): Boolean =
     b != null && b.length >= 4 && u8(b, 0) == 0xff && u8(b, 1) == 0xd8
-
-  private def le16(b: Array[Byte], i: Int): Int =
-    u8(b, i) | (u8(b, i + 1) << 8)
-
-  private def le32(b: Array[Byte], i: Int): Int =
-    u8(b, i) | (u8(b, i + 1) << 8) | (u8(b, i + 2) << 16) |
-      (u8(b, i + 3) << 24)
 
   private def isGif(b: Array[Byte]): Boolean =
     b != null && b.length >= 10 &&
@@ -78,16 +57,16 @@ object MediaHeader {
     // at 22 bytes (u16 dims end at offset 22); the info-header family
     // needs 26 (i32 height ends at 26) — ADVICE r7
     b != null && b.length >= 22 && u8(b, 0) == 'B' && u8(b, 1) == 'M' && {
-      val dib = le32(b, 14)
+      val dib = le32(b, 14).toInt
       dib == 12 || (dib >= 40 && b.length >= 26)
     }
 
   private def bmpDim(b: Array[Byte], coreOff: Int, infoOff: Int): Int =
-    if (le32(b, 14) == 12) {
+    if (le32(b, 14) == 12L) {
       val v = le16(b, coreOff)
       if (v > 0) v else -1
     } else {
-      val v = le32(b, infoOff)
+      val v = le32(b, infoOff).toInt
       // height < 0 is legal top-down orientation; width must be positive
       val mag = if (infoOff == 22 && v != Int.MinValue) math.abs(v) else v
       if (mag > 0) mag else -1

@@ -178,8 +178,7 @@ object PHash {
     */
   def makePatternImage(docId: Long): Array[Byte] =
     if (docId % 8 == 1)
-      Array(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a, 0, 0)
-        .map(_.toByte)
+      PixelCodec.truncatedPng
     else {
       val f = (x: Int, y: Int, _: Int) => gray(docId, x, y)
       if (docId % 2 == 0) PixelCodec.encodeBmp(W, H, docId % 4 == 0, f)
@@ -219,8 +218,7 @@ object PHash {
     */
   def makeClip(docId: Long): Array[Byte] =
     if (docId % 8 == 1)
-      Array(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a, 0, 0)
-        .map(_.toByte)
+      PixelCodec.truncatedPng
     else
       PixelCodec.encodeApng(W, H, clipFrames(docId / 4),
         (fr, y) => ((docId + fr + y) % 5).toInt,
@@ -273,8 +271,7 @@ object PHash {
     */
   def makeSceneClip(docId: Long): Array[Byte] =
     if (docId % 8 == 1)
-      Array(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a, 0, 0)
-        .map(_.toByte)
+      PixelCodec.truncatedPng
     else
       PixelCodec.encodeApng(W, H, sceneFrames(docId),
         (fr, y) => ((docId + fr + y) % 5).toInt,

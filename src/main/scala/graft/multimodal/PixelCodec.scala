@@ -1,8 +1,9 @@
 package graft.multimodal
 
 import java.nio.{ByteBuffer, ByteOrder}
-import java.util.zip.{CRC32, Deflater, Inflater}
+import java.util.zip.{Deflater, Inflater}
 
+import graft.functions.Bytes.{be32, le16, le32, u8}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 
 /** REAL pixel decode for the two container formats that need no external
@@ -45,10 +46,15 @@ object PixelCodec {
   def makeImage(docId: Long): Array[Byte] = (docId % 3) match {
     case 0 => makeBmp(docId)
     case 1 => makePng(docId)
-    case _ => // PNG signature then nothing — every parse column NULL
-      Array(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a, 0, 0)
-        .map(_.toByte)
+    case _ => truncatedPng // every parse column NULL
   }
+
+  /** The PNG signature then two zero bytes — the damaged-blob fixture
+    * every image generator plants (no chunk follows, so every decode is
+    * NULL).
+    */
+  private[multimodal] def truncatedPng: Array[Byte] =
+    Png.Signature ++ Array[Byte](0, 0)
 
   /** 24 bpp BI_RGB; odd docIds use the negative-height top-down layout so
     * both row orders are exercised (decoded stats are identical — the
@@ -94,18 +100,6 @@ object PixelCodec {
     val p = a + b - c
     val pa = math.abs(p - a); val pb = math.abs(p - b); val pc = math.abs(p - c)
     if (pa <= pb && pa <= pc) a else if (pb <= pc) b else c
-  }
-
-  private def chunk(typ: String, data: Array[Byte]): Array[Byte] = {
-    val out = new Array[Byte](12 + data.length)
-    val bb = ByteBuffer.wrap(out) // PNG is big-endian throughout
-    bb.putInt(data.length)
-    val tb = typ.getBytes("US-ASCII")
-    bb.put(tb).put(data)
-    val crc = new CRC32
-    crc.update(tb); crc.update(data)
-    bb.putInt(crc.getValue.toInt)
-    out
   }
 
   /** 8-bit RGB, row filter (docId + y) mod 5 — every one of the five
@@ -177,9 +171,6 @@ object PixelCodec {
     ihdr
   }
 
-  private val pngSig = Array(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a)
-    .map(_.toByte)
-
   /** Generalized PNG encoder — `filterOf(y)` picks the scanline filter,
     * `f(x, y, c)` the pixel channels (see [[encodeBmp]]).
     */
@@ -188,10 +179,10 @@ object PixelCodec {
     val z = zlib(filteredRows(w, h, filterOf, f))
     val zn = z.length
     val mid = zn / 2
-    pngSig ++ chunk("IHDR", ihdrBytes(w, h)) ++
-      chunk("IDAT", java.util.Arrays.copyOfRange(z, 0, mid)) ++
-      chunk("IDAT", java.util.Arrays.copyOfRange(z, mid, zn)) ++
-      chunk("IEND", Array.emptyByteArray)
+    Png.Signature ++ Png.chunk("IHDR", ihdrBytes(w, h)) ++
+      Png.chunk("IDAT", java.util.Arrays.copyOfRange(z, 0, mid)) ++
+      Png.chunk("IDAT", java.util.Arrays.copyOfRange(z, mid, zn)) ++
+      Png.chunk("IEND", Array.emptyByteArray)
   }
 
   /** APNG encoder (the animated-PNG extension, public Mozilla spec, now
@@ -216,32 +207,26 @@ object PixelCodec {
         .put(0.toByte).put(0.toByte) // dispose NONE, blend SOURCE
       d
     }
-    var out = pngSig ++ chunk("IHDR", ihdrBytes(w, h)) ++ chunk("acTL", actl)
+    var out = Png.Signature ++ Png.chunk("IHDR", ihdrBytes(w, h)) ++
+      Png.chunk("acTL", actl)
     var seq = 0
     var fr = 0
     while (fr < nFrames) {
-      out = out ++ chunk("fcTL", fctl(seq)); seq += 1
+      out = out ++ Png.chunk("fcTL", fctl(seq)); seq += 1
       val z = zlib(filteredRows(w, h, y => filterOf(fr, y), f(fr, _, _, _)))
-      if (fr == 0) out = out ++ chunk("IDAT", z)
+      if (fr == 0) out = out ++ Png.chunk("IDAT", z)
       else {
         val d = new Array[Byte](4 + z.length)
         ByteBuffer.wrap(d).putInt(seq)
         System.arraycopy(z, 0, d, 4, z.length)
-        out = out ++ chunk("fdAT", d); seq += 1
+        out = out ++ Png.chunk("fdAT", d); seq += 1
       }
       fr += 1
     }
-    out ++ chunk("IEND", Array.emptyByteArray)
+    out ++ Png.chunk("IEND", Array.emptyByteArray)
   }
 
   // ---- decode --------------------------------------------------------------
-
-  private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xff
-  private def le16(b: Array[Byte], i: Int): Int = u8(b, i) | (u8(b, i + 1) << 8)
-  private def le32(b: Array[Byte], i: Int): Int =
-    u8(b, i) | (u8(b, i + 1) << 8) | (u8(b, i + 2) << 16) | (u8(b, i + 3) << 24)
-  private def be32(b: Array[Byte], i: Int): Long =
-    (u8(b, i).toLong << 24) | (u8(b, i + 1) << 16) | (u8(b, i + 2) << 8) | u8(b, i + 3)
 
   /** Flat R,G,B triples in image order, or null on any malformation. Only
     * the uncompressed 24 bpp BI_RGB variants are in scope — RLE / 1-16-32
@@ -261,16 +246,16 @@ object PixelCodec {
 
   private def decodeBmp(b: Array[Byte]): Img = {
     if (b.length < 26 || b(0) != 'B' || b(1) != 'M') return null
-    val off = le32(b, 10)
-    val dib = le32(b, 14)
+    val off = le32(b, 10).toInt
+    val dib = le32(b, 14).toInt
     var w = 0; var hRaw = 0; var bpp = 0; var comp = 0
     if (dib == 12) { // BITMAPCOREHEADER: u16 dims, always bottom-up
       if (b.length < 26) return null
       w = le16(b, 18); hRaw = le16(b, 20); bpp = le16(b, 24)
     } else if (dib >= 40) {
       if (b.length < 34) return null
-      w = le32(b, 18); hRaw = le32(b, 22)
-      bpp = le16(b, 28); comp = le32(b, 30)
+      w = le32(b, 18).toInt; hRaw = le32(b, 22).toInt
+      bpp = le16(b, 28); comp = le32(b, 30).toInt
     } else return null
     if (bpp != 24 || comp != 0 || w <= 0 || hRaw == 0 || hRaw == Int.MinValue)
       return null
@@ -297,50 +282,20 @@ object PixelCodec {
   }
 
   /** Flat R,G,B triples, or null. In scope: 8-bit truecolor (color type
-    * 2), no interlace — the dominant training-corpus shape; every IDAT
-    * chunk CRC is verified before the bytes reach the inflater.
+    * 2), no interlace — the dominant training-corpus shape; every
+    * chunk's CRC is verified ([[Png.walk]]) before its bytes are used.
     */
   private def decodePng(b: Array[Byte]): Img = {
-    if (b.length < 8) return null
-    val sig = Array(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a)
-    var i = 0
-    while (i < 8) { if (u8(b, i) != sig(i)) return null; i += 1 }
-    var pos = 8
-    var w = -1; var h = -1
     var idat = Array.emptyByteArray
-    var done = false
-    while (!done) {
-      if (pos + 12 > b.length) return null
-      val len = be32(b, pos)
-      if (len < 0 || len > Int.MaxValue - 12 || pos + 12 + len > b.length)
-        return null
-      val typ = new String(b, pos + 4, 4, "US-ASCII")
-      val crc = new CRC32
-      crc.update(b, pos + 4, 4 + len.toInt)
-      if (crc.getValue != (be32(b, pos + 8 + len.toInt) & 0xffffffffL))
-        return null
-      typ match {
-        case "IHDR" =>
-          if (len != 13) return null
-          w = be32(b, pos + 8).toInt; h = be32(b, pos + 12).toInt
-          val depth = u8(b, pos + 16); val color = u8(b, pos + 17)
-          val interlace = u8(b, pos + 20)
-          if (depth != 8 || color != 2 || interlace != 0) return null
-          if (w <= 0 || h <= 0 || w > (1 << 20) || h > (1 << 20) ||
-            3L * w * h > (1L << 26)) return null
-        case "IDAT" =>
-          if (w < 0) return null // IDAT before IHDR
-          val merged = new Array[Byte](idat.length + len.toInt)
-          System.arraycopy(idat, 0, merged, 0, idat.length)
-          System.arraycopy(b, pos + 8, merged, idat.length, len.toInt)
-          idat = merged
-        case "IEND" => done = true
-        case _ => () // ancillary chunks skipped
+    val hdr = Png.walk(b) { (typ, off, len, seen) =>
+      if (typ != "IDAT") true // ancillary chunks skipped
+      else if (seen == null) false // IDAT before IHDR
+      else {
+        idat = idat ++ java.util.Arrays.copyOfRange(b, off, off + len)
+        true
       }
-      pos += 12 + len.toInt
     }
-    if (w < 0 || idat.isEmpty) return null
-    inflateFrame(w, h, idat)
+    if (hdr == null || idat.isEmpty) null else inflateFrame(hdr.w, hdr.h, idat)
   }
 
   /** Inflate one complete zlib stream into a w×h frame and unfilter it
@@ -392,86 +347,56 @@ object PixelCodec {
 
   /** REAL APNG frame walk — the decoder [[encodeApng]] round-trips (and
     * the retirement of BinaryPipeline's byte-slicing frame stub): walk
-    * the chunk stream with per-chunk CRC-32 verification, collect the
-    * acTL frame count, one zlib stream per frame (frame 0 from the
-    * IDAT run, later frames from their fdAT runs), audit APNG sequence
-    * numbers for gaps, then inflate + unfilter every frame. In scope:
-    * full-frame frames only (fcTL at (0,0) with the canvas dims,
-    * dispose NONE, blend SOURCE) — offset/blended sub-frames, like
-    * palette BMPs, are an unsupported variant that returns null, never
-    * a throw (the q95 damage posture). Null also on: missing acTL, a
-    * frame-count mismatch, torn chunks, CRC damage, or any broken
-    * frame stream.
+    * the verified chunk stream ([[Png.walk]]), collect the acTL frame
+    * count, one zlib stream per frame (frame 0 from the IDAT run, later
+    * frames from their fdAT runs), audit APNG sequence numbers for gaps,
+    * then inflate + unfilter every frame. In scope: full-frame frames
+    * only (fcTL at (0,0) with the canvas dims, dispose NONE, blend
+    * SOURCE) — offset/blended sub-frames, like palette BMPs, are an
+    * unsupported variant that returns null, never a throw (the q95
+    * damage posture). Null also on: missing acTL, a frame-count
+    * mismatch, torn chunks, CRC damage, or any broken frame stream.
     */
   private[multimodal] def decodeApngFrames(b: Array[Byte]): Array[Img] = {
-    if (b == null || b.length < 8) return null
-    var i = 0
-    while (i < 8) { if (u8(b, i) != (pngSig(i) & 0xff)) return null; i += 1 }
-    var pos = 8
-    var w = -1; var h = -1
     var nFrames = -1
     var expectSeq = 0
     val streams = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
     var curStream = Array.emptyByteArray
     var inFrame = false
-    var done = false
-    while (!done) {
-      if (pos + 12 > b.length) return null
-      val len = be32(b, pos)
-      if (len < 0 || len > Int.MaxValue - 12 || pos + 12 + len > b.length)
-        return null
-      val typ = new String(b, pos + 4, 4, "US-ASCII")
-      val crc = new CRC32
-      crc.update(b, pos + 4, 4 + len.toInt)
-      if (crc.getValue != (be32(b, pos + 8 + len.toInt) & 0xffffffffL))
-        return null
-      val body = pos + 8
+    def sequenced(off: Int): Boolean = // no gap in the APNG sequence
+      be32(b, off) == expectSeq && { expectSeq += 1; true }
+    // bytes [from, end) join the current frame's zlib stream
+    def append(from: Int, end: Int): Unit =
+      curStream = curStream ++ java.util.Arrays.copyOfRange(b, from, end)
+    val hdr = Png.walk(b) { (typ, off, len, seen) =>
       typ match {
-        case "IHDR" =>
-          if (len != 13) return null
-          w = be32(b, body).toInt; h = be32(b, body + 4).toInt
-          val depth = u8(b, body + 8); val color = u8(b, body + 9)
-          val interlace = u8(b, body + 12)
-          if (depth != 8 || color != 2 || interlace != 0) return null
-          if (w <= 0 || h <= 0 || w > (1 << 20) || h > (1 << 20) ||
-            3L * w * h > (1L << 26)) return null
         case "acTL" =>
-          if (len != 8) return null
-          nFrames = be32(b, body).toInt
-          if (nFrames <= 0 || nFrames > (1 << 16)) return null
+          nFrames = be32(b, off).toInt
+          len == 8 && nFrames > 0 && nFrames <= (1 << 16)
         case "fcTL" =>
-          if (len != 26 || w < 0) return null
-          if (be32(b, body).toInt != expectSeq) return null // seq gap
-          expectSeq += 1
-          // full-frame geometry only
-          if (be32(b, body + 4).toInt != w || be32(b, body + 8).toInt != h ||
-            be32(b, body + 12) != 0 || be32(b, body + 16) != 0 ||
-            u8(b, body + 24) != 0 || u8(b, body + 25) != 0) return null
           if (inFrame) { streams += curStream; curStream = Array.emptyByteArray }
           inFrame = true
-        case "IDAT" =>
-          if (!inFrame) return null // a default image outside the animation
-          curStream = curStream ++
-            java.util.Arrays.copyOfRange(b, body, body + len.toInt)
+          len == 26 && seen != null && sequenced(off) &&
+            // full-frame geometry only
+            be32(b, off + 4) == seen.w && be32(b, off + 8) == seen.h &&
+            be32(b, off + 12) == 0 && be32(b, off + 16) == 0 &&
+            u8(b, off + 24) == 0 && u8(b, off + 25) == 0
+        case "IDAT" => // a default image outside the animation: unsupported
+          append(off, off + len); inFrame
         case "fdAT" =>
-          if (!inFrame || len < 4) return null
-          if (be32(b, body).toInt != expectSeq) return null // seq gap
-          expectSeq += 1
-          curStream = curStream ++
-            java.util.Arrays.copyOfRange(b, body + 4, body + len.toInt)
-        case "IEND" => done = true
-        case _ => () // ancillary chunks skipped
+          inFrame && len >= 4 && sequenced(off) &&
+            { append(off + 4, off + len); true }
+        case _ => true // ancillary chunks skipped
       }
-      pos += 12 + len.toInt
     }
-    if (w < 0 || nFrames < 0) return null
+    if (hdr == null || nFrames < 0) return null
     if (inFrame) streams += curStream
     if (streams.length != nFrames) return null
     val out = new Array[Img](nFrames)
     var k = 0
     while (k < nFrames) {
       if (streams(k).isEmpty) return null
-      val img = inflateFrame(w, h, streams(k))
+      val img = inflateFrame(hdr.w, hdr.h, streams(k))
       if (img == null) return null
       out(k) = img
       k += 1

@@ -49,8 +49,7 @@ private[graft] object EtlQueries {
 
   private def sinkFixture(s: SparkSession, dir: String): String =
     memoized(s, s"sink|$dir") {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_sink_orders_" +
-        Integer.toHexString(dir.hashCode)
+      val path = tempDirCleanedAtExit("graft_sink_orders")
       PartitionedSink.writeMonthly(Tables(s, dir).orders, "o_orderdate",
         "o_custkey", path)
       path
@@ -62,8 +61,7 @@ private[graft] object EtlQueries {
     */
   private def csvFixture(s: SparkSession, dir: String): String =
     memoized(s, s"csv|$dir") {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_csv_orders_" +
-        Integer.toHexString(dir.hashCode)
+      val path = tempDirCleanedAtExit("graft_csv_orders")
       Tables(s, dir).orders
         .select(col("o_orderkey"), col("o_orderstatus"),
           when(col("o_orderkey") % 97 === 0, lit("not-a-date"))
@@ -87,12 +85,9 @@ private[graft] object EtlQueries {
   private def zipFixture(s: SparkSession, dir: String): String =
     memoized(s, s"zip|$dir") {
       val csvDir = new java.io.File(csvFixture(s, dir))
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_zip_orders_" +
-        Integer.toHexString(dir.hashCode)
-      val outDir = new java.io.File(path)
-      outDir.mkdirs()
+      val path = tempDirCleanedAtExit("graft_zip_orders")
       val zip = new java.util.zip.ZipOutputStream(
-        new java.io.FileOutputStream(new java.io.File(outDir, "orders.zip")))
+        new java.io.FileOutputStream(new java.io.File(path, "orders.zip")))
       csvDir.listFiles().filter(_.getName.endsWith(".csv")).sortBy(_.getName)
         .foreach { f =>
           zip.putNextEntry(new java.util.zip.ZipEntry(f.getName))

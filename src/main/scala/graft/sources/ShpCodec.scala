@@ -2,6 +2,7 @@ package graft.sources
 
 import java.nio.{ByteBuffer, ByteOrder}
 
+import graft.functions.Bytes.{be32, le32, leDouble}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -135,21 +136,6 @@ object ShpCodec {
 
   // ---- decoder -------------------------------------------------------------
 
-  private def beInt(b: Array[Byte], i: Int): Int =
-    ((b(i) & 0xff) << 24) | ((b(i + 1) & 0xff) << 16) |
-      ((b(i + 2) & 0xff) << 8) | (b(i + 3) & 0xff)
-
-  private def leInt(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8) |
-      ((b(i + 2) & 0xff) << 16) | ((b(i + 3) & 0xff) << 24)
-
-  private def leDouble(b: Array[Byte], i: Int): Double = {
-    var bits = 0L
-    var k = 7
-    while (k >= 0) { bits = (bits << 8) | (b(i + k) & 0xffL); k -= 1 }
-    java.lang.Double.longBitsToDouble(bits)
-  }
-
   /** All polygon rings of a `.shp` file as Catalyst
     * array<struct<recno, part, ring:array<array<double>>>>, or null on any
     * malformation. Null-shape records (type 0 — the spec's deleted-row
@@ -171,29 +157,30 @@ object ShpCodec {
   def ringsRaw(b: Array[Byte]): Array[(Int, Int, Array[(Double, Double)])] =
     try {
       if (b == null || b.length < 100) return null
-      if (beInt(b, 0) != 9994 || leInt(b, 28) != 1000) return null
-      val fileWords = beInt(b, 24)
+      if (be32(b, 0) != 9994 || le32(b, 28) != 1000) return null
+      val fileWords = be32(b, 24).toInt
       if (fileWords.toLong * 2 > b.length) return null
       val end = fileWords * 2
       val out = Array.newBuilder[(Int, Int, Array[(Double, Double)])]
       var pos = 100
       while (pos < end) {
         if (pos + 8 > end) return null
-        val recno = beInt(b, pos)
-        val clen = beInt(b, pos + 4).toLong * 2
+        val recno = be32(b, pos).toInt
+        val clen = be32(b, pos + 4) * 2
         val cpos = pos + 8
         if (recno <= 0 || clen < 4 || cpos + clen > end) return null
-        leInt(b, cpos) match {
+        le32(b, cpos).toInt match {
           case NullShape => () // deleted-record placeholder
           case PolygonShape =>
             if (clen < 48) return null
-            val nParts = leInt(b, cpos + 36)
-            val nPoints = leInt(b, cpos + 40)
+            val nParts = le32(b, cpos + 36).toInt
+            val nPoints = le32(b, cpos + 40).toInt
             if (nParts <= 0 || nPoints <= 0 || nParts > nPoints ||
               clen != 44L + 4L * nParts + 16L * nPoints) return null
             val partsOff = cpos + 44
             val ptsOff = partsOff + 4 * nParts
-            val starts = Array.tabulate(nParts)(i => leInt(b, partsOff + 4 * i))
+            val starts =
+              Array.tabulate(nParts)(i => le32(b, partsOff + 4 * i).toInt)
             var p = 0
             var bxmin = Double.MaxValue; var bymin = Double.MaxValue
             var bxmax = Double.MinValue; var bymax = Double.MinValue

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.functions.Kernel
+import graft.functions.{Bytes, Kernel}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.types.{BinaryType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -26,17 +26,14 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object Sitemap {
 
-  private def isGzip(b: Array[Byte]): Boolean =
-    b.length > 2 && b(0) == 0x1f.toByte && b(1) == 0x8b.toByte
-
   /** Body bytes → XML text: gzip inflates (magic-sniffed), plain bytes
     * decode as strict UTF-8; torn/garbage → null.
     */
   def bodyTextKernel(body: Array[Byte]): UTF8String = {
     if (body == null) return null
     val bytes =
-      if (!isGzip(body)) body
-      else {
+      if (!Bytes.isGzip(body)) body
+      else try { // a torn member header throws from the constructor
         val in = new java.util.zip.GZIPInputStream(
           new java.io.ByteArrayInputStream(body))
         try {
@@ -45,9 +42,8 @@ object Sitemap {
           var n = in.read(buf)
           while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
           out.toByteArray
-        } catch { case _: java.io.IOException => return null }
-        finally in.close()
-      }
+        } finally in.close()
+      } catch { case _: java.io.IOException => return null }
     try {
       val dec = java.nio.charset.StandardCharsets.UTF_8.newDecoder()
         .onMalformedInput(java.nio.charset.CodingErrorAction.REPORT)

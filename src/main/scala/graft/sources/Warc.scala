@@ -71,10 +71,10 @@ object GraftWarc {
         case Right(r) =>
           val http = if (r.warcType == "response") WarcCodec.parseHttp(r.payload)
             else None
-          val ctype = if (http.isDefined) WarcCodec.contentTypeOf(r.payload)
-            else None
+          val ctype = if (http.isDefined)
+            WarcCodec.httpHeader(r.payload, "Content-Type") else None
           val loc = if (http.exists(h => h._1 >= 300 && h._1 < 400))
-            WarcCodec.locationOf(r.payload) else None
+            WarcCodec.httpHeader(r.payload, "Location") else None
           WarcRow(file, r.warcType, r.recordId, r.targetUri,
             java.sql.Timestamp.from(java.time.Instant.parse(r.warcDate)),
             r.payload.length.toLong,
@@ -166,26 +166,26 @@ object WarcCodec {
     Some((status, java.util.Arrays.copyOfRange(payload, headEnd + 4, payload.length)))
   }
 
-  private val ContentTypeRe =
-    "(?im)^content-type:[ \\t]*([^\\r\\n]+?)[ \\t]*$".r
-
-  /** The `Content-Type` header value of an HTTP response payload, or None
-    * when the payload has no header block or no such header — feeds
-    * [[WarcTranscode.charsetOf]].
+  /** The value of the first `name` field in the header block of an HTTP
+    * response payload (the bytes before the blank line, decoded as
+    * Latin-1 — byte-transparent, so [[WarcTranscode.charsetOf]] sees the
+    * raw octets): the name matches case-insensitively (RFC 9110 §5.1),
+    * the value is trimmed of spaces and tabs, and a field with a blank
+    * value is skipped. None when the payload has no header block or no
+    * such field; a `name:` line in the body is never read.
+    * `Content-Type` feeds the charset transcode, `Location` (§10.2.2,
+    * where a 3xx points) the redirect edges of [[graft.etl.Redirects]].
     */
-  def contentTypeOf(payload: Array[Byte]): Option[String] =
-    httpHeaderBlock(payload).flatMap(b =>
-      ContentTypeRe.findFirstMatchIn(b).map(_.group(1)))
-
-  private val LocationRe =
-    "(?im)^location:[ \\t]*([^\\r\\n]+?)[ \\t]*$".r
-
-  /** The `Location` header value (RFC 9110 §10.2.2 — where a 3xx points),
-    * or None — the redirect-edge source for [[graft.etl.Redirects]].
-    */
-  def locationOf(payload: Array[Byte]): Option[String] =
-    httpHeaderBlock(payload).flatMap(b =>
-      LocationRe.findFirstMatchIn(b).map(_.group(1)))
+  def httpHeader(payload: Array[Byte], name: String): Option[String] = {
+    val headEnd = indexOfDoubleCrlf(payload)
+    if (headEnd < 0) return None
+    val key = name + ":"
+    new String(payload, 0, headEnd,
+      java.nio.charset.StandardCharsets.ISO_8859_1).split("\r\n|\r|\n").iterator
+      .filter(_.regionMatches(true, 0, key, 0, key.length))
+      .map(_.substring(key.length).replaceAll("^[ \t]+|[ \t]+$", ""))
+      .find(_.nonEmpty)
+  }
 
   /** A 3xx response payload with a Location header and an empty body —
     * the redirect-record fixture encoder.
@@ -193,19 +193,6 @@ object WarcCodec {
   def httpRedirect(status: Int, location: String): Array[Byte] =
     (s"HTTP/1.1 $status Moved\r\nLocation: $location\r\n\r\n")
       .getBytes("US-ASCII")
-
-  /** The HTTP header block of a response payload (bytes before the blank
-    * line) as a Latin-1-decoded string, or None when the payload has no
-    * header terminator. Header FIELD values are ASCII-superset; Latin-1
-    * decode is byte-transparent, so charset parameter extraction
-    * ([[WarcTranscode]]) sees the raw octets.
-    */
-  def httpHeaderBlock(payload: Array[Byte]): Option[String] = {
-    val headEnd = indexOfDoubleCrlf(payload)
-    if (headEnd < 0) None
-    else Some(new String(payload, 0, headEnd,
-      java.nio.charset.StandardCharsets.ISO_8859_1))
-  }
 
   private def indexOfDoubleCrlf(b: Array[Byte]): Int = {
     var i = 0
@@ -257,7 +244,7 @@ object WarcCodec {
     if (b1 >= 0) pb.unread(b1)
     if (b0 >= 0) pb.unread(b0)
     val in: java.io.InputStream =
-      if (b0 == 0x1f && b1 == 0x8b)
+      if (graft.functions.Bytes.isGzip(Array(b0.toByte, b1.toByte)))
         new java.io.BufferedInputStream(
           new java.util.zip.GZIPInputStream(pb, 1 << 16), 1 << 16)
       else pb

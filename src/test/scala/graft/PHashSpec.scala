@@ -95,6 +95,36 @@ class PHashSpec extends SparkSpec {
   private def fhs(b: Array[Byte]): Option[Seq[Long]] =
     Option(PHash.frameHashes(b)).map(_.toLongArray().toSeq)
 
+  /** Byte offset of the `nth` (1-based) chunk of type `typ`, or -1. */
+  private def chunkAt(png: Array[Byte], typ: String, nth: Int): Int = {
+    val bb = java.nio.ByteBuffer.wrap(png)
+    var p = 8
+    var seen = 0
+    while (p + 12 <= png.length) {
+      if (new String(png, p + 4, 4, "US-ASCII") == typ) {
+        seen += 1
+        if (seen == nth) return p
+      }
+      p += 12 + bb.getInt(p)
+    }
+    -1
+  }
+
+  /** `png` with the chunk at `idx` edited by `f`, its CRC recomputed so
+    * only the decoders' content checks can reject it.
+    */
+  private def patched(png: Array[Byte], idx: Int,
+      f: Array[Byte] => Unit): Array[Byte] = {
+    val p = png.clone
+    f(p)
+    val bb = java.nio.ByteBuffer.wrap(p)
+    val len = bb.getInt(idx)
+    val crc = new java.util.zip.CRC32
+    crc.update(p, idx + 4, 4 + len)
+    bb.putInt(idx + 8 + len, crc.getValue.toInt)
+    p
+  }
+
   test("APNG round trip: frame hashes equal the per-frame still hashes") {
     // encode each frame standalone as a PNG too — the clip walk must
     // reproduce exactly the still-image dHash per frame
@@ -121,40 +151,34 @@ class PHashSpec extends SparkSpec {
       "a torn tail must not half-decode")
     // an offset (non-full-frame) fcTL is an unsupported variant → null:
     // patch frame 1's fcTL x_offset and re-CRC the chunk so ONLY the
-    // geometry check can reject it
-    val idx = {
-      // find the second fcTL (the first follows acTL)
-      def find(): Int = {
-        var p = 8
-        var seen = 0
-        while (p + 12 <= clip.length) {
-          val len = ((clip(p) & 0xff) << 24) | ((clip(p + 1) & 0xff) << 16) |
-            ((clip(p + 2) & 0xff) << 8) | (clip(p + 3) & 0xff)
-          val typ = new String(clip, p + 4, 4, "US-ASCII")
-          if (typ == "fcTL") { seen += 1; if (seen == 2) return p }
-          p += 12 + len
-        }
-        -1
-      }
-      find()
-    }
+    // geometry check can reject it (the first fcTL follows acTL)
+    val idx = chunkAt(clip, "fcTL", 2)
     assert(idx > 0)
-    def patched(f: Array[Byte] => Unit): Array[Byte] = {
-      val p = clip.clone
-      f(p)
-      val crc = new java.util.zip.CRC32
-      crc.update(p, idx + 4, 4 + 26)
-      val cv = crc.getValue
-      var i = 0
-      while (i < 4) {
-        p(idx + 8 + 26 + i) = ((cv >> (8 * (3 - i))) & 0xff).toByte; i += 1
-      }
-      p
-    }
-    assert(fhs(patched(p => p(idx + 8 + 15) = 1)).isEmpty,
+    assert(fhs(patched(clip, idx, p => p(idx + 8 + 15) = 1)).isEmpty,
       "offset sub-frames are out of scope → null")
-    assert(fhs(patched(p => p(idx + 8 + 3) = 9)).isEmpty,
+    assert(fhs(patched(clip, idx, p => p(idx + 8 + 3) = 9)).isEmpty,
       "an APNG sequence-number gap must desync to null")
+  }
+
+  test("damaged fdAT: a CRC flip nulls both decoders; a sequence gap nulls only the frames") {
+    val clip = PixelCodec.encodeApng(4, 3, 3, (fr, y) => (fr + y) % 5,
+      (fr, x, y, c) => (fr * 50 + 7 * x + 3 * y + c) % 256)
+    val frames = fhs(clip).get
+    val still = PHash.hashesRaw(clip).toSeq
+    assert(still.head == frames.head, "the still decode is the default image")
+    val fdat = chunkAt(clip, "fdAT", 1)
+    assert(fdat > 0)
+    // one data byte past the sequence number flipped, CRC left stale
+    val crcBad = clip.clone
+    crcBad(fdat + 8 + 5) = (crcBad(fdat + 8 + 5) ^ 0x10).toByte
+    assert(fhs(crcBad).isEmpty)
+    assert(PHash.hashesRaw(crcBad) == null,
+      "every chunk's CRC is checked, even one the still decoder skips")
+    // sequence number 2 → 3 with a valid CRC: only the APNG audit sees it
+    val gap = patched(clip, fdat, p => p(fdat + 8 + 3) = 3)
+    assert(fhs(gap).isEmpty, "an fdAT sequence gap must desync to null")
+    assert(PHash.hashesRaw(gap).toSeq == still,
+      "the still decoder reads the default image past an fdAT it skips")
   }
 
   test("clip fixture laws: twin identical, bump flips ONE frame, far far, corrupt null") {

@@ -68,4 +68,14 @@ class RobotsMetaSpec extends SparkSpec {
     // a robots meta with no content attribute reads as empty
     assert(eval("""<meta name="robots">""") == ((false, false, 0, 0L)))
   }
+
+  test("an empty content attribute is no directive: false, not NULL") {
+    val h = lit("<meta name=\"robots\" content=\"\"><a href=\"/x\">x</a>")
+    val r = spark.range(1).select(RobotsMeta.noindex(h),
+      RobotsMeta.nofollow(h), size(RobotsMeta.directives(h)),
+      RobotsMeta.followableLinks(h)).head()
+    assert(!r.isNullAt(0) && !r.getBoolean(0), s"noindex: $r")
+    assert(!r.isNullAt(1) && !r.getBoolean(1), s"nofollow: $r")
+    assert(r.getInt(2) == 0 && r.getLong(3) == 1L, s"$r")
+  }
 }

@@ -26,6 +26,20 @@ class RobotsTxtSpec extends SparkSpec {
       org.apache.spark.unsafe.types.UTF8String.fromString(agent),
       org.apache.spark.unsafe.types.UTF8String.fromString(path))
 
+  private def sitemaps(robots: String): Seq[String] = {
+    val a = RobotsTxt.sitemapsKernel(
+      if (robots == null) null
+      else org.apache.spark.unsafe.types.UTF8String.fromString(robots))
+    (0 until a.numElements()).map(i =>
+      a.getUTF8String(i).toString)
+  }
+
+  private def delay(robots: String, agent: String): Double =
+    RobotsTxt.crawlDelayKernel(
+      if (robots == null) null
+      else org.apache.spark.unsafe.types.UTF8String.fromString(robots),
+      org.apache.spark.unsafe.types.UTF8String.fromString(agent))
+
   test("longest match wins; Allow beats a shorter Disallow") {
     assert(ok("graftbot", "/a/1"))
     assert(!ok("graftbot", "/private/x"))
@@ -78,13 +92,6 @@ class RobotsTxtSpec extends SparkSpec {
   }
 
   test("Sitemap: discovery lines are group-independent, in file order") {
-    def sitemaps(robots: String): Seq[String] = {
-      val a = RobotsTxt.sitemapsKernel(
-        if (robots == null) null
-        else org.apache.spark.unsafe.types.UTF8String.fromString(robots))
-      (0 until a.numElements()).map(i =>
-        a.getUTF8String(i).toString)
-    }
     // valid anywhere: before, inside, and after groups; case-insensitive
     // field name; comments strip; empty values drop
     val r = "Sitemap: http://h.example/a.xml\n" +
@@ -104,11 +111,6 @@ class RobotsTxtSpec extends SparkSpec {
   }
 
   test("Crawl-delay: group-scoped, exact-agent precedence, first value wins") {
-    def delay(robots: String, agent: String): Double =
-      RobotsTxt.crawlDelayKernel(
-        if (robots == null) null
-        else org.apache.spark.unsafe.types.UTF8String.fromString(robots),
-        org.apache.spark.unsafe.types.UTF8String.fromString(agent))
     val r = "User-agent: b\nDisallow: /p\nCrawl-delay: 2.5\n\n" +
       "User-agent: *\nCrawl-delay: 10\nDisallow: /\n"
     assert(delay(r, "b") == 2.5)
@@ -133,5 +135,20 @@ class RobotsTxtSpec extends SparkSpec {
       .collect()(0)
     assert(!row.isNullAt(0) && row.getBoolean(0),
       "NULL robots must evaluate to TRUE, not NULL")
+  }
+
+  test("CR, LF and CRLF line endings read the same (RFC 9309 §2.2)") {
+    val lines = Seq("User-agent: b", "Disallow: /x # no", "Crawl-delay: 4",
+      "Sitemap: http://h.example/s.xml", "User-agent: *", "Disallow: /")
+    for (eol <- Seq("\n", "\r", "\r\n")) {
+      val r = lines.mkString(eol)
+      val name = eol.map(c => f"${c.toInt}%02x").mkString
+      assert(!ok("b", "/x", r) && ok("b", "/y", r), name)
+      assert(!ok("other", "/y", r), name)
+      assert(delay(r, "b") == 4.0, name)
+      assert(delay(r, "other") == -1.0, name)
+      assert(sitemaps(r) == Seq("http://h.example/s.xml"), name)
+    }
+    assert(!ok("bot", "/x", "User-agent: *\rDisallow: /x"))
   }
 }

@@ -33,6 +33,9 @@ class SitemapSpec extends SparkSpec {
     assert(kernel(good).toString == "<urlset/>")
     // torn member: drop the tail past the gzip header
     assert(kernel(good.dropRight(6)) == null)
+    // torn member header: the magic alone, then magic and method
+    assert(kernel(good.take(2)) == null)
+    assert(kernel(good.take(3)) == null)
     // plain bytes that are not valid UTF-8
     assert(kernel(Array[Byte](0x3c, -1, -2, 0x3e)) == null)
     assert(kernel(null) == null)

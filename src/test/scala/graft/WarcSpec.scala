@@ -161,6 +161,26 @@ class WarcSpec extends SparkSpec {
     assert(ct == "text/html; charset=windows-1250")
   }
 
+  test("HTTP header lookup: case-insensitive name, trimmed value, header block only") {
+    def header(payload: String, name: String) =
+      WarcCodec.httpHeader(payload.getBytes("ISO-8859-1"), name)
+    val redirect = "HTTP/1.1 301 Moved\r\ncontent-TYPE:  text/html; charset=utf-8 \t\r\n" +
+      "LOCATION:\thttp://x.example/next\r\n\r\nLocation: http://body.example/\r\n"
+    assert(header(redirect, "Content-Type") == Some("text/html; charset=utf-8"))
+    assert(header(redirect, "location") == Some("http://x.example/next"))
+    // a Location line in the body is not a header
+    assert(header("HTTP/1.1 200 OK\r\nContent-Type: text/plain\r\n\r\n" +
+      "Location: http://body.example/\r\n", "Location").isEmpty)
+    // a field name that only starts with the wanted one does not match
+    assert(header("HTTP/1.1 200 OK\r\nContent-Type-Options: x\r\n\r\n",
+      "Content-Type").isEmpty)
+    // no header block at all
+    assert(header("Location: http://x.example/", "Location").isEmpty)
+    assert(header("", "Content-Type").isEmpty)
+    assert(WarcCodec.httpHeader(WarcCodec.httpRedirect(302, "http://x.example/r"),
+      "Location") == Some("http://x.example/r"))
+  }
+
   test("href/host extraction: absolute https, relative drop, count merge") {
     import org.apache.spark.sql.functions.col
     import spark.implicits._
