@@ -83,6 +83,24 @@ object Pipeline {
     df.agg(count(lit(1)).as("n_docs")).select(lit(name).as("stage"),
       col("n_docs"))
 
+  /** The clean → language/quality gate stage: (doc_id, text) for every
+    * doc, `text` cleaned where the doc passes the gate and NULL where it
+    * does not or has no text; [[prepareCorpus]] stores it and drops the
+    * NULLs above the leaf. Not a filter on `text`: the optimizer pushes a
+    * filter below the cleaning projection and inlines the whole cleaning
+    * chain at every reference to `text`, into one generated method too
+    * large for the JIT to compile. Under `when` the chain runs once per
+    * doc.
+    */
+  private[graft] def textGate(docs: DataFrame, idCol: String,
+      textCol: String, langs: Seq[String], minQuality: Long): DataFrame = {
+    val text = col("text")
+    docs.select(col(idCol).cast("long").as("doc_id"),
+        TextClean.cleanChain(col(textCol)).as("text"))
+      .select(col("doc_id"), when(TextStats.langId(text).isin(langs: _*) &&
+        TextStats.qualityScore(text) >= minQuality, text).as("text"))
+  }
+
   /** Run the funnel over `docs` (idCol, textCol). `bench` guards against
     * benchmark contamination (pass an empty frame to skip). Returns the
     * packed sequences (doc_id, n_tokens, seq_id, seq_pos — plus image
@@ -99,13 +117,9 @@ object Pipeline {
       images: Option[DataFrame] = None, imageId: String = "doc_id",
       imageBlob: String = "blob", minImageW: Int = 1,
       minImageH: Int = 1): CorpusPrep = {
-    val cleaned = docs.select(col(idCol).cast("long").as("doc_id"),
-      TextClean.cleanChain(col(textCol)).as("text"))
-
     val st = new Store.Scope
-    val textGated = st.leaf(cleaned
-      .where(TextStats.langId(col("text")).isin(langs: _*) &&
-        TextStats.qualityScore(col("text")) >= minQuality))
+    val textGated = st.leaf(textGate(docs, idCol, textCol, langs, minQuality))
+      .where(col("text").isNotNull)
 
     // optional image gate: header-parse the blobs (q83 kernel), drop
     // corrupt/undersized, carry the metadata forward. The meta frame is

@@ -532,15 +532,16 @@ object DedupClusters {
     * clusters (dup groups), so 2-3 rounds in practice; `maxIter` bounds
     * pathological chains and the loop exits early at the first fixpoint.
     * Each round costs two narrow shuffles (edge⋈label join + min-agg);
-    * the driver only ever sees a per-round changed-row COUNT, never data.
+    * the driver only ever sees whether a stored round changed any label,
+    * never data.
     *
     * Eager: the loop runs while the frame is built. The symmetric edge
     * list is stored once as a plan leaf ([[graft.etl.Store.leaf]]), so
     * each round's queries plan and render one scan instead of the pair
     * list's whole lineage (for the corpus funnel, every upstream stage). The
-    * label rounds run through [[graft.etl.Rounds]], whose stop test is
-    * the changed-row count; the edge leaf is scoped to the call, so
-    * only the final labels stay stored.
+    * label rounds run through [[graft.etl.Rounds]], whose stop test reads
+    * the round's stored `changed` flag; the edge leaf is scoped to the
+    * call, so only the final labels stay stored.
     *
     * Output: (id, component) for every id in `docs`, where component is
     * the smallest doc id reachable through pairs (singletons map to
@@ -557,20 +558,28 @@ object DedupClusters {
     // edges are sparse, so the iterated frames hold the duplicate
     // subgraph, not the corpus; singletons attach in one outer join at
     // the end.
+    //
+    // Each round carries a node's own label as `prev` into the min
+    // aggregate (neighbor rows carry NULL, which min skips) and stores
+    // `changed` with the labels: the stop test then reads one stored
+    // round, with no join that shuffles two rounds of labels.
     val res = Rounds.run(
       edges.select(col("src").as("id")).distinct()
         .withColumn("component", col("id")),
       maxIter, storeInit = true,
-      stop = (next, prev, _) =>
-        next.join(prev.withColumnRenamed("component", "prev"), "id")
-          .where(col("component") =!= col("prev"))
-          .limit(1).count() == 0) { (labels, _) =>
+      stop = (next, _, _) =>
+        next.where(col("changed")).limit(1).count() == 0) { (labels, _) =>
+      val own = labels.select(col("id"), col("component"),
+        col("component").as("prev"))
       val viaNeighbor = edges
-        .join(labels.withColumnRenamed("id", "dst"), "dst")
-        .select(col("src").as("id"), col("component"))
-      labels.unionByName(viaNeighbor)
+        .join(labels.select(col("id").as("dst"), col("component")), "dst")
+        .select(col("src").as("id"), col("component"),
+          lit(null).cast(labels.schema("component").dataType).as("prev"))
+      own.unionByName(viaNeighbor)
         .groupBy("id")
-        .agg(min(col("component")).as("component"))
+        .agg(min(col("component")).as("component"), min(col("prev")).as("prev"))
+        .select(col("id"), col("component"),
+          (col("component") =!= col("prev")).as("changed"))
     }
     // A non-fixpoint exit would silently return PARTIALLY-merged components
     // (any chain with diameter > maxIter) — that is data corruption for a
@@ -584,7 +593,8 @@ object DedupClusters {
       else org.slf4j.LoggerFactory.getLogger(getClass).warn(msg)
     }
     docs.select(col(idCol).as("id"))
-      .join(res.last.withColumnRenamed("component", "_c"), Seq("id"), "left")
+      .join(res.last.select(col("id"), col("component").as("_c")), Seq("id"),
+        "left")
       .withColumn("component", coalesce(col("_c"), col("id")))
       .drop("_c")
   }

@@ -1,5 +1,6 @@
 package graft.multimodal
 
+import java.io.ByteArrayOutputStream
 import java.nio.{ByteBuffer, ByteOrder}
 import java.util.zip.{Deflater, Inflater}
 
@@ -153,15 +154,18 @@ object PixelCodec {
     raw
   }
 
-  /** One complete zlib stream (header + Adler-32) over `raw`. */
+  /** One complete zlib stream (header + Adler-32) over `raw`. The output
+    * may be longer than `raw` (incompressible pixels), so it is drained
+    * into a growing buffer.
+    */
   private def zlib(raw: Array[Byte]): Array[Byte] = {
     val defl = new Deflater(6, false)
     defl.setInput(raw); defl.finish()
-    val buf = new Array[Byte](raw.length + 64)
-    var zn = 0
-    while (!defl.finished()) zn += defl.deflate(buf, zn, buf.length - zn)
+    val out = new ByteArrayOutputStream
+    val buf = new Array[Byte](1 << 16)
+    while (!defl.finished()) out.write(buf, 0, defl.deflate(buf))
     defl.end()
-    java.util.Arrays.copyOf(buf, zn)
+    out.toByteArray
   }
 
   private def ihdrBytes(w: Int, h: Int): Array[Byte] = {
@@ -233,13 +237,13 @@ object PixelCodec {
     * bpp / palette BMPs return null (unsupported, not an error path the
     * fixture exercises).
     */
-  private[multimodal] final case class Img(w: Int, h: Int, px: Array[Int])
+  private[graft] final case class Img(w: Int, h: Int, px: Array[Int])
 
   /** Decoded RGB image (dims + flat R,G,B triples in image order), or
     * null on any malformation — the shared decode entry [[statsRaw]] and
     * [[PHash]] both consume.
     */
-  private[multimodal] def decodeRgb(b: Array[Byte]): Img =
+  private[graft] def decodeRgb(b: Array[Byte]): Img =
     if (b == null) null
     else if (b.length >= 2 && b(0) == 'B' && b(1) == 'M') decodeBmp(b)
     else decodePng(b)
@@ -284,18 +288,19 @@ object PixelCodec {
   /** Flat R,G,B triples, or null. In scope: 8-bit truecolor (color type
     * 2), no interlace — the dominant training-corpus shape; every
     * chunk's CRC is verified ([[Png.walk]]) before its bytes are used.
+    * The IDAT runs gather in one growing buffer, so decode stays linear
+    * in the chunk count (encoders commonly cut the stream into 8 KB
+    * chunks).
     */
   private def decodePng(b: Array[Byte]): Img = {
-    var idat = Array.emptyByteArray
+    val idat = new ByteArrayOutputStream
     val hdr = Png.walk(b) { (typ, off, len, seen) =>
       if (typ != "IDAT") true // ancillary chunks skipped
       else if (seen == null) false // IDAT before IHDR
-      else {
-        idat = idat ++ java.util.Arrays.copyOfRange(b, off, off + len)
-        true
-      }
+      else { idat.write(b, off, len); true }
     }
-    if (hdr == null || idat.isEmpty) null else inflateFrame(hdr.w, hdr.h, idat)
+    if (hdr == null || idat.size == 0) null
+    else inflateFrame(hdr.w, hdr.h, idat.toByteArray)
   }
 
   /** Inflate one complete zlib stream into a w×h frame and unfilter it
@@ -357,24 +362,24 @@ object PixelCodec {
     * damage posture). Null also on: missing acTL, a frame-count
     * mismatch, torn chunks, CRC damage, or any broken frame stream.
     */
-  private[multimodal] def decodeApngFrames(b: Array[Byte]): Array[Img] = {
+  private[graft] def decodeApngFrames(b: Array[Byte]): Array[Img] = {
     var nFrames = -1
     var expectSeq = 0
     val streams = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
-    var curStream = Array.emptyByteArray
+    val curStream = new ByteArrayOutputStream
     var inFrame = false
     def sequenced(off: Int): Boolean = // no gap in the APNG sequence
       be32(b, off) == expectSeq && { expectSeq += 1; true }
     // bytes [from, end) join the current frame's zlib stream
-    def append(from: Int, end: Int): Unit =
-      curStream = curStream ++ java.util.Arrays.copyOfRange(b, from, end)
+    def append(from: Int, end: Int): Unit = curStream.write(b, from, end - from)
+    def endFrame(): Unit = { streams += curStream.toByteArray; curStream.reset() }
     val hdr = Png.walk(b) { (typ, off, len, seen) =>
       typ match {
         case "acTL" =>
           nFrames = be32(b, off).toInt
           len == 8 && nFrames > 0 && nFrames <= (1 << 16)
         case "fcTL" =>
-          if (inFrame) { streams += curStream; curStream = Array.emptyByteArray }
+          if (inFrame) endFrame()
           inFrame = true
           len == 26 && seen != null && sequenced(off) &&
             // full-frame geometry only
@@ -390,7 +395,7 @@ object PixelCodec {
       }
     }
     if (hdr == null || nFrames < 0) return null
-    if (inFrame) streams += curStream
+    if (inFrame) endFrame()
     if (streams.length != nFrames) return null
     val out = new Array[Img](nFrames)
     var k = 0

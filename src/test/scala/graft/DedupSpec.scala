@@ -248,6 +248,23 @@ class DedupSpec extends SparkSpec {
       6L -> 6L, 7L -> 7L))
   }
 
+  test("connected components stop at the first round that changes no label") {
+    // a 12-node chain has diameter 11: round 11 brings label 1 to node 12
+    // and round 12 is the first unchanged one, so 12 rounds reach the
+    // fixpoint and 11 do not
+    val n = 12L
+    val nodes = (1L to n).map(i => (i, "")).toDF("doc_id", "text")
+    val chain = (1L until n).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    intercept[IllegalStateException] {
+      DedupClusters.connectedComponents(nodes, "doc_id", chain, maxIter = 11)
+    }
+    val comp = DedupClusters.connectedComponents(nodes, "doc_id", chain,
+      maxIter = 12)
+    assert(comp.columns.toSeq == Seq("id", "component"))
+    assert(comp.as[(Long, Long)].collect().toMap ==
+      (1L to n).map(_ -> 1L).toMap)
+  }
+
   test("connected components keeps only the final labels stored") {
     val n = 12L
     val nodes = (1L to n).map(i => (i, "")).toDF("doc_id", "text")

@@ -1,6 +1,6 @@
 package graft
 
-import graft.multimodal.{PHash, PixelCodec}
+import graft.multimodal.{PHash, PixelCodec, Png}
 
 /** Perceptual-hash kernel invariants the q148 fixture can't isolate:
   * the REAL box downscale (the fixture's 9×8 images hit the identity
@@ -179,6 +179,66 @@ class PHashSpec extends SparkSpec {
     assert(fhs(gap).isEmpty, "an fdAT sequence gap must desync to null")
     assert(PHash.hashesRaw(gap).toSeq == still,
       "the still decoder reads the default image past an fdAT it skips")
+  }
+
+  /** `png` with every IDAT and fdAT cut into chunks of at most `max`
+    * data bytes (the chunking common encoders write), the APNG sequence
+    * numbers of fcTL and fdAT renumbered so the cut leaves no gap.
+    */
+  private def rechunked(png: Array[Byte], max: Int): Array[Byte] = {
+    val bb = java.nio.ByteBuffer.wrap(png)
+    val out = new java.io.ByteArrayOutputStream
+    out.write(png, 0, 8)
+    var seq = 0
+    def sequenced(d: Array[Byte]): Array[Byte] = {
+      val s = java.nio.ByteBuffer.allocate(4 + d.length).putInt(seq).put(d)
+      seq += 1
+      s.array
+    }
+    var p = 8
+    while (p < png.length) {
+      val len = bb.getInt(p)
+      val typ = new String(png, p + 4, 4, "US-ASCII")
+      val data = java.util.Arrays.copyOfRange(png, p + 8, p + 8 + len)
+      val pieces = typ match {
+        case "IDAT" => data.grouped(max).toSeq
+        case "fdAT" => data.drop(4).grouped(max).map(sequenced).toSeq
+        case "fcTL" => Seq(sequenced(data.drop(4)))
+        case _ => Seq(data)
+      }
+      pieces.foreach(d => out.write(Png.chunk(typ, d)))
+      p += 12 + len
+    }
+    out.toByteArray
+  }
+
+  private def chunks(png: Array[Byte], typ: String): Int =
+    Iterator.from(1).takeWhile(chunkAt(png, typ, _) > 0).size
+
+  /** Noise: deflate barely shrinks it, so the zlib streams span many chunks. */
+  private def noise(fr: Int, x: Int, y: Int, c: Int): Int =
+    scala.util.hashing.MurmurHash3.productHash((fr, x, y, c)) & 0xff
+
+  test("8 KB IDAT and fdAT chunks decode to the same pixels as one stream") {
+    val still = PixelCodec.encodePng(256, 256, y => y % 5, noise(0, _, _, _))
+    val cut = rechunked(still, 8192)
+    assert(chunks(still, "IDAT") == 2 && chunks(cut, "IDAT") > 20)
+    val want = PixelCodec.decodeRgb(still)
+    assert(want != null && want.px.length == 3 * 256 * 256)
+    assert(PixelCodec.decodeRgb(cut).px.sameElements(want.px))
+
+    val clip = PixelCodec.encodeApng(128, 128, 3, (fr, y) => (fr + y) % 5,
+      noise)
+    val clipCut = rechunked(clip, 8192)
+    assert(chunks(clip, "IDAT") == 1 && chunks(clipCut, "IDAT") > 4)
+    assert(chunks(clip, "fdAT") == 2 && chunks(clipCut, "fdAT") > 8)
+    val frames = PixelCodec.decodeApngFrames(clip)
+    val framesCut = PixelCodec.decodeApngFrames(clipCut)
+    assert(frames != null && framesCut != null)
+    assert(frames.length == 3 && framesCut.length == 3)
+    for (k <- 0 until 3) assert(framesCut(k).px.sameElements(frames(k).px))
+    // frame 0 is also the default image the still decoder reads
+    assert(PixelCodec.decodeRgb(clipCut).px.sameElements(frames(0).px))
   }
 
   test("clip fixture laws: twin identical, bump flips ONE frame, far far, corrupt null") {

@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.spark.sql.GraftSqlBridge
-import org.apache.spark.sql.execution.{ExplainMode, LogicalRDD}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+import org.apache.spark.sql.execution.{ExplainMode, LogicalRDD,
+  WholeStageCodegenExec}
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -153,6 +155,41 @@ class PipelineSpec extends SparkSpec {
     assert(funnel("2_exact_dedup") == 3L && funnel("3_near_dedup") == 1L &&
       funnel("5_packed") == 1L, s"$funnel")
     // the transcoded ISO body decodes to real é, never mojibake
+    prep.release()
+  }
+
+  test("the text gate stage cleans each doc once, in JIT-compilable methods") {
+    // a parquet scan, as the funnel reads: a local relation would be
+    // evaluated by the optimizer and leave no generated stage to inspect
+    val dir = graft.registry.Shared.tempDirCleanedAtExit("gate_docs") + "/docs"
+    docs.write.parquet(dir)
+    val gate = Pipeline.textGate(spark.read.parquet(dir), "doc_id", "text",
+      Seq("en"), 10L)
+    val stages = gate.queryExecution.executedPlan
+      .collect { case w: WholeStageCodegenExec => w }
+    assert(stages.size == 1, gate.queryExecution.executedPlan.toString)
+    val (_, code) = stages.head.doCodeGen()
+    val (_, stats) = CodeGenerator.compile(code)
+    val nfcCalls = "UnicodeNorm\\.nfc\\(".r.findAllIn(code.body).size
+    assert(nfcCalls == 1, code.body)
+    // HotSpot never compiles a method over 8,000 bytecode bytes
+    // (-XX:HugeMethodLimit), so a larger one runs interpreted
+    assert(stats.maxMethodCodeSize <= 8000)
+    assert(gate.where(col("text").isNotNull).select("doc_id").as[Long]
+      .collect().sorted.toSeq == Seq(1L, 2L, 3L, 5L, 6L))
+  }
+
+  test("a doc with NULL text drops at the gate") {
+    // NULL text reads as language "en" with quality 100 (`least` skips
+    // the NULL score), so a gate that filtered on those let it through
+    // and packing then failed on its NULL token count
+    val withNull = docs.union(Seq((7L, null: String)).toDF("doc_id", "text"))
+    val prep = Pipeline.prepareCorpus(withNull, "doc_id", "text",
+      bench, "bench_id", "text")
+    val funnel = prep.funnel.as[(String, Long)].collect().toMap
+    assert(funnel("0_raw") == 7L && funnel("1_gated") == 5L)
+    assert(prep.packed.select("doc_id").as[Long].collect().sorted.toSeq ==
+      Seq(1L, 6L))
     prep.release()
   }
 
